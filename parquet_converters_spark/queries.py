@@ -4881,7 +4881,10 @@ def _touch_scan_v2_oracle() -> str | None:
     )
 
 
-TOUCH_SCAN_V2_SQL = _touch_scan_v2_oracle()
+try:
+    TOUCH_SCAN_V2_SQL = _touch_scan_v2_oracle()
+except FileNotFoundError:
+    TOUCH_SCAN_V2_SQL = None  # v2 fixture absent -> rows-only check
 
 
 def multimodal_decode(spark, sf_dir):

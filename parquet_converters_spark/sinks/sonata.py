@@ -37,9 +37,10 @@ Semantics mirrored from the reference:
 ``export_hdf5`` converts a bundle to a real SONATA HDF5 file (h5py when
 available, else the built-in classic-format writer).
 ``export_hdf5_parallel`` is the scale path: driver writes the metadata
-skeleton, every Spark partition seek+writes its rows at the dataset's
-precomputed offset — the analogue of the reference's per-rank MPI-IO
-independent hyperslab writes (``src/circuit/sonata_file.cpp:98-143``).
+skeleton, then one Spark job with one task per bundle file seek+writes
+each file's sorted key run at the dataset's precomputed offset — the
+analogue of the reference's per-rank MPI-IO independent hyperslab
+writes (``src/circuit/sonata_file.cpp:98-143``).
 ``export_hdf5_parallel_compressed`` extends that to the
 chunked+shuffle+deflate layout (which the reference cannot write in
 parallel at all): a compress pass resolves the data-dependent chunk
@@ -57,8 +58,9 @@ from pyspark.sql import DataFrame, functions as F
 
 from parquet_converters_spark import __version__
 from parquet_converters_spark.operators.indexing import (
+    SONATA_KEYS,
     build_sonata_indices,
-    infer_node_count,
+    count_rows_and_nodes,
 )
 
 COLUMNS_TO_SKIP = {"synapse_id", "__index_level_0__"}
@@ -119,6 +121,24 @@ def _range_partitions(
     # (65537 rows would become 2 x ~32Ki files)
     by_cores = min(max(parallelism, 1), max(1, n_rows // _MIN_ROWS_PER_FILE))
     return max(1, by_size, by_cores)
+
+
+def _drop_empty_files(path: str) -> None:
+    """Remove the zero-row file Spark writes for partition 0 when that
+    partition holds none of a direction's rows (both directions share
+    one numbering exchange, so the second starts past partition 0).
+    Keeps one file when all are empty, for the schema."""
+    import glob as _glob
+
+    import pyarrow.parquet as pq
+
+    files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
+    empty = [f for f in files if pq.ParquetFile(f).metadata.num_rows == 0]
+    for f in empty[: len(files) - 1]:
+        os.remove(f)
+        crc = os.path.join(path, f".{os.path.basename(f)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
 
 
 def collect_kv_metadata(path: str) -> dict[str, str]:
@@ -208,20 +228,9 @@ class SonataBundleWriter:
 
         enums = _enumerations_from_metadata(kv, df)
 
-        # cache: the table feeds the main write, both index directions and
-        # the count — one scan, many consumers
-        table = table.persist()
-        n_records = table.count()
-
         par = max(1, spark.sparkContext.defaultParallelism)
-        (
-            table.repartitionByRange(
-                _range_partitions(n_records, par, rows_per_file), row_col
-            )
-            .sortWithinPartitions(row_col)
-            .write.mode("overwrite")
-            .parquet(os.path.join(self.pop_dir, "table.parquet"))
-        )
+        keys = list(SONATA_KEYS.values()) if with_index else []
+        n_records, max_plus_one = count_rows_and_nodes(table, keys)
 
         for name, values in enums.items():
             spark.createDataFrame(
@@ -230,45 +239,45 @@ class SonataBundleWriter:
                 os.path.join(self.pop_dir, "library", f"{name}.parquet")
             )
 
+        # every file holds one contiguous, sorted row_index slice; the
+        # index build RLEs these same partitions, so they are persisted
+        # for it (released in the finally below)
+        ordered = table.repartitionByRange(
+            _range_partitions(n_records, par, rows_per_file), row_col
+        ).sortWithinPartitions(row_col)
         if with_index:
-            node_counts = {
-                "source_to_target": source_size
-                or infer_node_count(table, "source_node_id"),
-                "target_to_source": target_size
-                or infer_node_count(table, "target_node_id"),
-            }
-            indices = build_sonata_indices(
-                table,
-                source_node_count=node_counts["source_to_target"],
-                target_node_count=node_counts["target_to_source"],
-                row_col=row_col,
+            ordered = ordered.persist()
+        try:
+            ordered.write.mode("overwrite").parquet(
+                os.path.join(self.pop_dir, "table.parquet")
             )
-            for direction, (node_ranges, range_edges) in indices.items():
-                d = os.path.join(self.pop_dir, "indices", direction)
-                # node_ranges has exactly node_count rows (known for
-                # free).  range_edges' row count is data-dependent and
-                # "at most n_records" is a uselessly loose bound (1e9
-                # edges can collapse to 1e6 ranges — sizing from edges
-                # would write hundreds of near-empty files); one count
-                # job is cheap here because it runs over the already-
-                # persisted intermediates of the index build, which the
-                # write then reuses.
-                node_ranges.repartitionByRange(
-                    _range_partitions(
-                        node_counts[direction], par, rows_per_file
-                    ),
-                    "node_id",
-                ).sortWithinPartitions("node_id").write.mode("overwrite").parquet(
-                    os.path.join(d, "node_id_to_ranges.parquet")
-                )
-                range_edges.repartitionByRange(
-                    _range_partitions(
-                        range_edges.count(), par, rows_per_file
-                    ),
-                    "range_id",
-                ).sortWithinPartitions("range_id").write.mode("overwrite").parquet(
-                    os.path.join(d, "range_to_edge_id.parquet")
-                )
+
+            if with_index:
+                node_counts = {
+                    "source_to_target": source_size or max_plus_one[0],
+                    "target_to_source": target_size or max_plus_one[1],
+                }
+                with build_sonata_indices(
+                    ordered,
+                    node_counts,
+                    lambda n: _range_partitions(n, par, rows_per_file),
+                    row_col=row_col,
+                ) as indices:
+                    for direction, (node_ranges, range_edges) in (
+                        indices.items()
+                    ):
+                        # already in key order, one contiguous run per
+                        # partition: written as built
+                        d = os.path.join(self.pop_dir, "indices", direction)
+                        for name, frame in (
+                            ("node_id_to_ranges", node_ranges),
+                            ("range_to_edge_id", range_edges),
+                        ):
+                            path = os.path.join(d, f"{name}.parquet")
+                            frame.write.mode("overwrite").parquet(path)
+                            _drop_empty_files(path)
+        finally:
+            ordered.unpersist()
 
         manifest = {
             "population": self.population,
@@ -288,7 +297,6 @@ class SonataBundleWriter:
         }
         with open(os.path.join(self.pop_dir, "attributes.json"), "w") as f:
             json.dump(manifest, f, indent=2, sort_keys=True)
-        table.unpersist()
 
 
 def write_sonata_bundle(
@@ -489,10 +497,14 @@ def export_hdf5(
 def _edge_column_dtypes(spark, table_path: str, schema, manifest) -> list:
     """(name, numpy dtype) for every edge column, in SONATA dataset
     order.  Strings have a data-dependent fixed width in HDF5: ONE Spark
-    aggregate computes every string column's max byte length (matching
-    the single-writer's astype("S") widths), so the columns can then go
-    through the same distributed fill as the numeric ones."""
+    job, one task per table file, takes every string column's max UTF-8
+    byte length (matching the single-writer's astype("S") widths), so
+    the columns can then go through the same distributed fill as the
+    numeric ones.  It encodes exactly as the fill does, so a NULL or
+    non-string value fails here, before the skeleton is written."""
     import numpy as np
+
+    from parquet_converters_spark.sources.ordering import _sorted_files
 
     edge_cols = manifest["top_level_datasets"] + [
         p
@@ -507,21 +519,99 @@ def _edge_column_dtypes(spark, table_path: str, schema, manifest) -> list:
         else:
             str_cols.append(name)
     if str_cols:
-        widths = (
-            spark.read.parquet(table_path)
-            .agg(
-                *[
-                    F.max(F.octet_length(F.col(c))).alias(c)
-                    for c in str_cols
-                ]
-            )
-            .collect()[0]
+
+        def widths(path):
+            import pyarrow.parquet as pq
+
+            t = pq.read_table(path, columns=str_cols)
+            return [
+                max(map(len, _encode_str_values(t.column(c).to_pylist(), c)),
+                    default=0)
+                for c in str_cols
+            ]
+
+        files = _sorted_files(table_path)
+        per_file = (
+            spark.sparkContext.parallelize(files, len(files))
+            .map(widths)
+            .collect()
         )
         big += [
-            (c, np.dtype(f"S{max(int(widths[c] or 0), 1)}"))
-            for c in str_cols
+            (c, np.dtype(f"S{max([w[i] for w in per_file] + [1])}"))
+            for i, c in enumerate(str_cols)
         ]
     return big
+
+
+def _fill_file(target: str, task) -> tuple[int, int]:
+    """Write one bundle file's rows into their datasets of the ``.h5``
+    at ``target``: ``task`` is (source index, parquet file, key column,
+    [(value columns, dataset offset, dtype str)], dataset rows).
+    Returns (source index, rows written)."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    source, path, key_col, specs, n_expected = task
+    need = list(
+        dict.fromkeys([key_col] + [c for cols, _, _ in specs for c in cols])
+    )
+    written = 0
+    with open(target, "r+b") as fh:
+        for batch in pq.ParquetFile(path).iter_batches(
+            batch_size=1 << 16, columns=need
+        ):
+            idx = batch.column(key_col).to_numpy(zero_copy_only=False)
+            idx = idx.astype(np.int64, copy=False)
+            # a bundle file holds one sorted run, so this is a no-op
+            # permutation; a foreign file in any order still fills
+            # correctly, with one seek per run
+            order = np.argsort(idx, kind="stable")
+            idx = idx[order]
+            # bounds gate BEFORE any seek: an out-of-range key in a
+            # malformed bundle would otherwise write past the dataset
+            # extent into a neighboring dataset — silent corruption the
+            # rows-written total cannot catch
+            if len(idx) and (idx[0] < 0 or idx[-1] >= n_expected):
+                raise ValueError(
+                    f"{path}: {key_col} out of range "
+                    f"[{int(idx[0])}, {int(idx[-1])}] for a "
+                    f"{n_expected}-row dataset"
+                )
+            # consecutive key runs -> one seek+write per run
+            breaks = np.nonzero(np.diff(idx) != 1)[0] + 1
+            starts = np.concatenate(([0], breaks)).astype(np.int64)
+            ends = np.concatenate((breaks, [len(idx)])).astype(np.int64)
+            for cols, offset, dt_str in specs:
+                dt = np.dtype(dt_str)
+                mats = [
+                    (
+                        # per-value UTF-8 encode, exactly like the
+                        # single-writer path (np.asarray would ASCII-
+                        # encode and raise on non-ASCII)
+                        np.array(
+                            _encode_str_values(batch.column(c).to_pylist(), c),
+                            dtype=dt,
+                        )
+                        if dt.kind == "S"
+                        else batch.column(c)
+                        .to_numpy(zero_copy_only=False)
+                        .astype(dt, copy=False)
+                    )[order]
+                    for c in cols
+                ]
+                mat = (
+                    mats[0]
+                    if len(mats) == 1
+                    else np.ascontiguousarray(np.stack(mats, axis=1))
+                )
+                width = len(cols) * dt.itemsize
+                for s, e in zip(starts, ends):
+                    fh.seek(offset + int(idx[s]) * width)
+                    fh.write(mat[s:e].tobytes())
+            written += len(idx)
+        fh.flush()
+        os.fsync(fh.fileno())
+    return source, written
 
 
 def export_hdf5_parallel(
@@ -533,31 +623,38 @@ def export_hdf5_parallel(
     """Parallel SONATA ``.h5`` export: the driver writes ONLY the file
     skeleton (superblock, group structures, dataset object headers,
     ``@library`` enumerations — the rank-0 metadata of the reference,
-    ``src/circuit/sonata_file.cpp:45-97``), then every Spark partition
-    seek+writes its own rows of each distributed dataset directly at
-    ``dataset_offset + key * row_width`` — the exact analogue of the
+    ``src/circuit/sonata_file.cpp:45-97``), then ONE Spark job with one
+    task per bundle file writes every distributed dataset: each task
+    reads its parquet file with pyarrow and seek+writes its rows at
+    ``dataset_offset + key * row_width`` — the analogue of the
     reference's per-rank MPI-IO independent hyperslab writes
     (``src/circuit/sonata_file.cpp:98-101,123-143``), with the bundle's
-    precomputed global keys (``row_index`` for the edge table,
-    ``node_id``/``range_id`` for the adjacency indices) standing in
-    for the MPI rank offsets.
+    global keys (``row_index`` for the edge table, ``node_id`` /
+    ``range_id`` for the adjacency indices) standing in for the rank
+    offsets.
 
-    Driver memory is O(libraries + attributes) only: the edge table AND
-    both adjacency index tables are streamed through Arrow batches on
-    the executors (the indices are O(nodes) — themselves tens of GB at
-    the 100 TB edge scale, so they must not be collected either).
+    No exchange and no sort: the bundle writer leaves every file of the
+    table and of the four index tables holding one contiguous, sorted
+    key run, so a task's write is one run per batch.  Each batch is
+    still argsorted on its key, so a bundle whose files are in any
+    order fills the same bytes, only with more seeks.
+
+    Driver memory is O(libraries + attributes + files): the edge table
+    and both adjacency indices (O(nodes), tens of GB at the 100 TB edge
+    scale) only ever pass through the executors.
 
     The contiguous classic-format layout (``hdf5_minimal``) makes every
     row's file position computable up front, which is what makes
     lock-free parallel writes safe — each row lands in a disjoint byte
-    range, exactly like an MPI-IO independent write.
+    range, exactly like an MPI-IO independent write.  Every key is
+    bounds-checked before any seek, every task fsyncs, and the rows
+    written per source must add up to its dataset length.
 
     Requires all executors to share the target filesystem with the
     driver (local mode, or a cluster on GPFS/Lustre/NFS) — the same
     deployment requirement as the reference's MPI-IO writer.  String
     property columns (fixed width in HDF5) get their width from one
-    Spark max-octet-length aggregate, then fill distributively like
-    the numeric columns.
+    more job over the table files; a NULL or non-string value raises.
 
     Returns the number of edge rows written.  The result is
     byte-identical to the single-writer :func:`export_hdf5` output
@@ -576,161 +673,90 @@ def export_hdf5_parallel(
     with open(os.path.join(pop_dir, "attributes.json")) as f:
         manifest = json.load(f)
     base = f"/edges/{population}"
-    row_col = manifest["row_index_column"]
 
-    def table_meta(path):
+    # sources: ((files, rows per file, key col), [(value cols, dataset
+    # path, numpy dtype)]).  Edge columns are 1-wide; the adjacency
+    # indices are (n, 2) with the dense key AS the row number.
+    def source(path, key_col):
         files = _sorted_files(path)
-        return sum(file_row_counts(files)), pq.ParquetFile(files[0]).schema_arrow
+        return files, file_row_counts(files), key_col
 
     table_path = os.path.join(pop_dir, "table.parquet")
-    n_rows, schema = table_meta(table_path)
-
-    big = _edge_column_dtypes(spark, table_path, schema, manifest)
-
-    datasets, attrs = _gather_small_datasets(
-        pop_dir, base, manifest, include_indices=False
-    )
-
-    # distributed-fill jobs: (parquet path, key col, value cols,
-    # dataset path, rows, numpy dtype).  Edge columns are 1-wide; the
-    # adjacency indices are (n, 2) with the dense key AS the row number.
-    jobs = []
-    for name, np_dtype in big:
-        jobs.append(
-            (table_path, row_col, [name],
-             _dataset_path(base, name, manifest), n_rows, np_dtype)
+    table = source(table_path, manifest["row_index_column"])
+    schema = pq.ParquetFile(table[0][0]).schema_arrow
+    sources = [
+        (
+            table,
+            [
+                ((name,), _dataset_path(base, name, manifest), np_dtype)
+                for name, np_dtype in _edge_column_dtypes(
+                    spark, table_path, schema, manifest
+                )
+            ],
         )
+    ]
     for direction in ("source_to_target", "target_to_source"):
         d = os.path.join(pop_dir, "indices", direction)
         if not os.path.isdir(d):
             continue
         for fname, (key, cols) in _INDEX_COLS.items():
-            p = os.path.join(d, f"{fname}.parquet")
-            n_i, sch_i = table_meta(p)
-            dt_i = np.dtype(sch_i.field(cols[0]).type.to_pandas_dtype())
-            jobs.append(
-                (p, key, list(cols),
-                 f"{base}/indices/{direction}/{fname}", n_i, dt_i)
+            src = source(os.path.join(d, f"{fname}.parquet"), key)
+            dt = np.dtype(
+                pq.ParquetFile(src[0][0])
+                .schema_arrow.field(cols[0])
+                .type.to_pandas_dtype()
+            )
+            sources.append(
+                (src, [(cols, f"{base}/indices/{direction}/{fname}", dt)])
             )
 
+    datasets, attrs = _gather_small_datasets(
+        pop_dir, base, manifest, include_indices=False
+    )
     w = MiniH5Writer()
     w.create_group(base)
     for path, arr in datasets.items():
         w.create_dataset(path, arr)
-    for _, _, cols, ds_path, n_i, dt_i in jobs:
-        shape = (n_i,) if len(cols) == 1 else (n_i, len(cols))
-        w.create_placeholder(ds_path, shape, dt_i)
+    for (_, counts, _), specs in sources:
+        for cols, ds_path, dt in specs:
+            n = sum(counts)
+            w.create_placeholder(
+                ds_path, (n,) if len(cols) == 1 else (n, len(cols)), dt
+            )
     for path, a in attrs.items():
         for k, v in a.items():
             w.set_attr(path, k, v)
     w.write(h5_path)
 
+    tasks = [
+        (
+            i,
+            f,
+            key_col,
+            [
+                (cols, w.data_offsets[ds]["offset"], w.data_offsets[ds]["dtype"])
+                for cols, ds, _ in specs
+            ],
+            sum(counts),
+        )
+        for i, ((files, counts, key_col), specs) in enumerate(sources)
+        for f in files
+    ]
     target = os.path.abspath(h5_path)
-
-    def run_fill(parquet_path, key_col, col_specs, n_expected):
-        """col_specs: list of (cols tuple, offset, dtype str) — one scan
-        of parquet_path fills every listed dataset."""
-
-        def fill(batches):
-            import pandas as pd
-
-            written = 0
-            with open(target, "r+b") as fh:
-                for pdf in batches:
-                    idx = pdf[key_col].to_numpy(np.int64)
-                    order = np.argsort(idx)
-                    idx = idx[order]
-                    # bounds gate BEFORE any seek: an out-of-range key in
-                    # a malformed bundle would otherwise write past the
-                    # dataset extent into a neighboring dataset — silent
-                    # corruption the rows-written total cannot catch
-                    if len(idx) and (idx[0] < 0 or idx[-1] >= n_expected):
-                        raise ValueError(
-                            f"{parquet_path}: {key_col} out of range "
-                            f"[{int(idx[0])}, {int(idx[-1])}] for a "
-                            f"{n_expected}-row dataset"
-                        )
-                    # consecutive key runs -> one seek+write per run
-                    breaks = np.nonzero(np.diff(idx) != 1)[0] + 1
-                    starts = np.concatenate(([0], breaks)).astype(np.int64)
-                    ends = np.concatenate((breaks, [len(idx)])).astype(np.int64)
-                    for cols, offset, dt_str in col_specs:
-                        dt = np.dtype(dt_str)
-                        mats = [
-                            (
-                                # per-value UTF-8 encode, exactly like the
-                                # single-writer path (np.asarray would
-                                # ASCII-encode and raise on non-ASCII);
-                                # widths come from octet_length = UTF-8 bytes
-                                np.array(
-                                    _encode_str_values(pdf[c], c), dtype=dt
-                                )
-                                if dt.kind == "S"
-                                else pdf[c].to_numpy(dt)
-                            )[order]
-                            for c in cols
-                        ]
-                        mat = (
-                            mats[0]
-                            if len(mats) == 1
-                            else np.ascontiguousarray(np.stack(mats, axis=1))
-                        )
-                        width = len(cols) * dt.itemsize
-                        for s, e in zip(starts, ends):
-                            fh.seek(offset + int(idx[s]) * width)
-                            fh.write(mat[s:e].tobytes())
-                    written += len(idx)
-                fh.flush()
-                os.fsync(fh.fileno())
-            yield pd.DataFrame({"rows_written": [written]})
-
-        need = sorted({key_col} | {c for cols, _, _ in col_specs for c in cols})
-        # Range-partition + sort on the key BEFORE filling: the bundle's
-        # keys are dense 0..n-1, so each sorted Arrow batch becomes ONE
-        # contiguous run -> one seek+write per column per batch.  Without
-        # this, scattered input degrades to a syscall per row (measured
-        # 200 s vs 8 s for 5M rows).  One range exchange is the honest
-        # cost — the same sort the reference performs to compute its
-        # hyperslab offsets (src/parquet2hdf5.cpp:97-110).
-        par = max(1, spark.sparkContext.defaultParallelism)
-        df = (
-            spark.read.parquet(parquet_path)
-            .select(*need)
-            .repartitionByRange(par, key_col)
-            .sortWithinPartitions(key_col)
-        )
-        total = (
-            df.mapInPandas(fill, "rows_written long")
-            .agg(F.sum("rows_written").alias("n"))
-            .collect()[0]["n"]
-        ) or 0
-        return int(total)
-
-    # group jobs by source table so each parquet is scanned once
-    by_source: dict[tuple[str, str], list] = {}
-    expected: dict[tuple[str, str], int] = {}
-    for parquet_path, key_col, cols, ds_path, n_i, _ in jobs:
-        meta = w.data_offsets[ds_path]
-        by_source.setdefault((parquet_path, key_col), []).append(
-            (tuple(cols), meta["offset"], meta["dtype"])
-        )
-        expected[(parquet_path, key_col)] = n_i
-
-    total_edges = 0
-    for (parquet_path, key_col), col_specs in by_source.items():
-        got = run_fill(
-            parquet_path, key_col, col_specs,
-            expected[(parquet_path, key_col)],
-        )
-        want = expected[(parquet_path, key_col)]
-        if got != want:
+    got = [0] * len(sources)
+    for i, n in (
+        spark.sparkContext.parallelize(tasks, len(tasks))
+        .map(lambda task: _fill_file(target, task))
+        .collect()
+    ):
+        got[i] += n
+    for ((files, counts, _), _), n in zip(sources, got):
+        if n != sum(counts):
             raise RuntimeError(
-                f"parallel HDF5 export wrote {got} rows of "
-                f"{parquet_path}, expected {want}"
+                f"parallel HDF5 export wrote {n} rows of "
+                f"{os.path.dirname(files[0])}, expected {sum(counts)}"
             )
-        if parquet_path == table_path:
-            total_edges = got
-    return total_edges
+    return got[0]
 
 
 def export_hdf5_parallel_compressed(

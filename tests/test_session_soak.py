@@ -20,9 +20,7 @@ from parquet_converters_spark.session import free_local_checkpoints
 
 
 @pytest.fixture(scope="module")
-def soak_bundle(spark, tmp_path_factory):
-    from parquet_converters_spark.pipelines import parquet_to_sonata
-
+def soak_edges(spark, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("soak")
     edges = spark.range(200).select(
         (F.col("id") % 13).cast("int").alias("source_node_id"),
@@ -31,13 +29,11 @@ def soak_bundle(spark, tmp_path_factory):
     )
     in_dir = str(tmp / "edges_in")
     edges.coalesce(1).write.parquet(in_dir)
-    out = str(tmp / "bundle")
-    parquet_to_sonata(spark, in_dir, out, population="p")
-    return out
+    return in_dir
 
 
 def test_three_cycle_soak_leaves_no_residue(
-    spark, sf_dir, soak_bundle, tmp_path
+    spark, sf_dir, soak_edges, tmp_path
 ):
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     pairs = spark.createDataFrame(
@@ -69,12 +65,14 @@ def test_three_cycle_soak_leaves_no_residue(
         total_rank = round(sum(r["rank"] for r in ranks.collect()), 9)
         assert free_local_checkpoints(ranks) == 1
 
-        from parquet_converters_spark.sinks.sonata import (
-            export_hdf5_parallel,
-        )
+        from parquet_converters_spark.pipelines import parquet_to_sonata
 
+        # the whole converter, bundle writer and index build included
         h5 = str(tmp_path / f"soak_{cycle}.h5")
-        export_hdf5_parallel(spark, soak_bundle, "p", h5)
+        parquet_to_sonata(
+            spark, soak_edges, str(tmp_path / f"bundle_{cycle}"),
+            population="p", h5_path=h5,
+        )
         size = os.path.getsize(h5)
 
         # no-residue: the persisted set is EXACTLY the baseline again
