@@ -7,8 +7,8 @@
 - ``parquet2sonata INPUT_DIR OUTPUT POPULATION [--no-index] [--hdf5
   PATH]`` — the reference's ``src/parquet2hdf5.cpp:184-193`` surface
   (the output is a SONATA-layout parquet bundle; ``--hdf5`` also
-  exports the real ``.h5`` container — via h5py when installed, else
-  the built-in classic-format writer, see sinks/hdf5_minimal.py).
+  exports the real ``.h5`` container with the parallel export of
+  sinks/sonata.py, ``--gzip-h5`` in its compressed layout).
 
 Parallelism flags the reference gets from ``mpirun`` come from the
 Spark session here (``local[$SPARK_GRAFT_CPUS]`` by default, any
@@ -97,15 +97,9 @@ def main(argv: list[str] | None = None) -> int:
         help="Also export the real SONATA .h5 file to this path",
     )
     p2s.add_argument(
-        "--parallel-h5", action="store_true", default=False,
-        help="Write the .h5 with per-partition offset writes (the "
-        "MPI-IO analogue; requires a shared filesystem)",
-    )
-    p2s.add_argument(
         "--gzip-h5", action="store_true", default=False,
-        help="Chunk + shuffle + deflate the .h5 edge datasets; combined "
-        "with --parallel-h5 this uses the two-pass parallel compressed "
-        "export (byte-identical to the driver-side gzip writer)",
+        help="Chunk + shuffle + deflate the .h5 edge datasets (the "
+        "parallel export's two-pass compressed mode)",
     )
 
     s2p = sub.add_parser(
@@ -452,24 +446,13 @@ def main(argv: list[str] | None = None) -> int:
         print(f"parquet2sonata: wrote bundle {args.output} (population={args.population})")
         if args.hdf5:
             from parquet_converters_spark.sinks.sonata import (
-                export_hdf5,
                 export_hdf5_parallel,
-                export_hdf5_parallel_compressed,
             )
 
-            if args.parallel_h5 and args.gzip_h5:
-                export_hdf5_parallel_compressed(
-                    spark, args.output, args.population, args.hdf5
-                )
-            elif args.parallel_h5:
-                export_hdf5_parallel(
-                    spark, args.output, args.population, args.hdf5
-                )
-            else:
-                export_hdf5(
-                    args.output, args.population, args.hdf5,
-                    compression="gzip" if args.gzip_h5 else None,
-                )
+            export_hdf5_parallel(
+                spark, args.output, args.population, args.hdf5,
+                compression="gzip" if args.gzip_h5 else None,
+            )
             print(f"parquet2sonata: exported HDF5 {args.hdf5}")
     return 0
 

@@ -62,7 +62,6 @@ def parquet_to_sonata(
     population: str = "default",
     with_index: bool = True,
     h5_path: str | None = None,
-    parallel_h5: bool = True,
 ) -> None:
     """Convert a directory of parquet edge files into a SONATA bundle
     (+ adjacency indices), preserving the reference's global row order
@@ -70,9 +69,9 @@ def parquet_to_sonata(
 
     ``h5_path`` additionally exports the real SONATA ``.h5`` — the
     one-call parquet -> ``.h5`` shape of the reference's ``parquet2hdf5``
-    binary (``src/parquet2hdf5.cpp``).  ``parallel_h5=True`` uses the
-    per-partition offset-write path (the MPI-IO analogue); False forces
-    the driver-side single writer (byte-identical output)."""
+    binary (``src/parquet2hdf5.cpp``), written by
+    :func:`~parquet_converters_spark.sinks.sonata.export_hdf5_parallel`
+    (per-file offset writes, the MPI-IO analogue)."""
     df = read_parquet_ordered(spark, parquet_path)
     kv = collect_kv_metadata(parquet_path)
     write_sonata_bundle(
@@ -83,15 +82,9 @@ def parquet_to_sonata(
         with_index=with_index,
     )
     if h5_path is not None:
-        from parquet_converters_spark.sinks.sonata import (
-            export_hdf5,
-            export_hdf5_parallel,
-        )
+        from parquet_converters_spark.sinks.sonata import export_hdf5_parallel
 
-        if parallel_h5:
-            export_hdf5_parallel(spark, out_dir, population, h5_path)
-        else:
-            export_hdf5(out_dir, population, h5_path)
+        export_hdf5_parallel(spark, out_dir, population, h5_path)
 
 
 def scrub_ids(

@@ -1536,7 +1536,7 @@ SIM_IVF_ANN_SQL = _sql_ivf()
 _PQ_SUB, _PQ_CODES, _PQ_NPROBE = 32, 256, 4
 
 
-def sim_ivfpq_ann(spark, sf_dir):
+def sim_ivfpq_ann(spark, sf_dir, emb=None):
     """IVF-PQ approximate nearest neighbors (functions/similarity.py
     ivf_pq_topk): corpus encoded once into 32 product-quantization
     codes against DATA-SAMPLED codebooks (codeword c of subspace s =
@@ -1554,7 +1554,8 @@ def sim_ivfpq_ann(spark, sf_dir):
     # r18: the corpus + query + codebook-sample branches share ONE
     # materialized scan at bench layout (see _emb_shared) — plan was
     # 2 spread exchanges on vec_id, now 1 scan feeding all branches.
-    emb = _emb_shared(spark, sf_dir)
+    if emb is None:
+        emb = _emb_shared(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 5)
     return ivf_pq_topk(
         emb, queries, k=5, num_cells=8, nprobe=_PQ_NPROBE,
@@ -6514,14 +6515,10 @@ def ann_recall_pq(spark, sf_dir):
     broadcast brute-force scan (5 query rows against the corpus); the
     approximate side is the registered sim_ivfpq_ann.  "Measure,
     don't guess" for the memory-bound ANN path."""
-    from parquet_converters_spark.functions.similarity import ivf_pq_topk
-
     # r18: exact side, PQ corpus/query sides and the codebook sample
     # all branch from ONE materialized scan at bench layout (was 4
     # spread exchanges on vec_id — _emb_shared); the approximate side
-    # is ivf_pq_topk with the registered sim_ivfpq_ann's exact
-    # parameters, fed the shared frame (identical rows, asserted in
-    # tests and the A/B that motivated this change).
+    # is the registered sim_ivfpq_ann, fed the shared frame.
     emb = _emb_shared(spark, sf_dir)
     qs = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"),
@@ -6551,11 +6548,7 @@ def ann_recall_pq(spark, sf_dir):
         .select("query_id", "neighbor_id")
     )
     a = (
-        ivf_pq_topk(
-            emb, emb.filter(F.col("vec_id") < 5), k=5, num_cells=8,
-            nprobe=_PQ_NPROBE, n_sub=_PQ_SUB, n_codes=_PQ_CODES,
-            dim=_EMB_DIM,
-        )
+        sim_ivfpq_ann(spark, sf_dir, emb=emb)
         .select("query_id", "neighbor_id")
         .withColumn("_hit", F.lit(1))
     )
@@ -11404,800 +11397,13 @@ QUERIES.update({
 })
 
 
-# --- r03 grading rotation --------------------------------------------------
-# The driver's correctness gate checks the FIRST 50 registry entries per
-# round.  Window policy for r03, per VERDICT.md r02 items 1/2/6: lead
-# with the four algorithmically-riskiest never-checked paths (star CC,
-# both broadcast-matrix ANN modes, measured recall), then
-# stream_sessionize (this round's BIGINT-cast fix needs a fresh row to
-# clear the last red), then 48 more of the 63 never-driver-checked
-# oracled queries.  14 simple text/aggregation entries are deferred to
-# the r04 window (listed below) so every one of the 158 oracled queries
-# has a driver row by round 4.
-_R03_WINDOW = [
-    # (a) riskiest unchecked algorithms (VERDICT item 6)
-    "dedup_components_star",
-    "sim_lsh_ann_bcast",
-    "sim_ivf_ann_bcast",
-    "ann_recall_at5",
-    # (b) repaired this round — needs a fresh row to clear the red
-    "stream_sessionize",
-    # (c) never-checked: retrieval / dedup / graph / SCD2
-    "inverted_index_stats",
-    "tfidf_top_terms",
-    "bloom_pruned_revenue",
-    "scd2_event_history",
-    "upsert_latest_state",
-    "dedup_simhash_pairs",
-    "dedup_survivors",
-    "dedup_fuzzy_pairs",
-    "dedup_incremental_bloom",
-    "contamination_matrix",
-    "containment_pairs",
-    "dup_shingle_fraction",
-    "graph_degree_distribution",
-    # (d) never-checked: embeddings / sampling / outliers
-    "sparse_cosine_topk",
-    "embedding_quantize_error",
-    "embedding_standardize_stats",
-    "weighted_sample_docs",
-    "stratified_sample_counts",
-    "zscore_outlier_events",
-    "mad_outlier_events",
-    "cluster_quality_by_label",
-    # (e) never-checked: temporal / relational / multimodal
-    "multimodal_audio",
-    "interval_overlap_sessions",
-    "range_join_error_views",
-    "cohort_retention",
-    "event_funnel",
-    "event_transition_matrix",
-    "event_path_topk",
-    "skew_key_profile",
-    "order_backlog_concurrency",
-    "gap_fill_daily",
-    "equi_depth_histogram",
-    "mixture_plan",
-    "compaction_plan",
-    "full_outer_reconcile",
-    "time_rollup_hierarchy",
-    "rolling_7d_distinct_users",
-    "revenue_share_by_nation",
-    "market_basket_lift",
-    "monthly_revenue_mom",
-    "text_normalize_report",
-    "acctbal_rank_profile",
-    "multiset_customer_activity",
-    "nation_supplier_roster",
-    "scd2_temporal_enrich",
-]
-assert len(_R03_WINDOW) == 50, len(_R03_WINDOW)
-assert set(_R03_WINDOW) <= set(QUERIES), sorted(set(_R03_WINDOW) - set(QUERIES))
-QUERIES = {
-    **{name: QUERIES[name] for name in _R03_WINDOW},
-    **{name: v for name, v in QUERIES.items() if name not in _R03_WINDOW},
-}
-
-# --- r04 grading rotation --------------------------------------------------
-# Window policy for r04, per VERDICT.md r03 item 1: lead with the 31
-# oracled queries that have NO driver row across r01-r03 (the 14
-# deferred from r03's window plus the round-3 additions that landed
-# after the window was frozen), so that after this round every oracled
-# query in the registry has at least one driver correctness row.  The
-# remaining 19 slots re-verify oldest-green queries (r01-only rows),
-# prioritising decile_counts (rewritten in r03 — the distributed
-# _global_rank form has never been driver-graded) and the reference's
-# core touch/indexing/dedup/ANN operators.
-_R04_WINDOW = [
-    # (a) never driver-checked: text analysis / quality
-    "doc_logprob_quality",
-    "pmi_top_pairs",
-    "value_histogram",
-    "text_top_bigrams",
-    "text_quality_funnel",
-    "sample_split_counts",
-    "text_chunking",
-    "text_repetition",
-    "text_pii_scan",
-    "char_entropy_buckets",
-    "expectations_report",
-    "bpe_merge_candidates",
-    "text_pii_redact",
-    "unpivot_metrics",
-    "quality_vs_dup_calibration",
-    "top_ngram_coverage",
-    "lang_confusion_matrix",
-    # (b) never driver-checked: events / relational / stats
-    "event_lateness_profile",
-    "revenue_share_in_region",
-    "session_bounce_stats",
-    "chi2_type_by_weekday",
-    "value_trend_by_type",
-    "numeric_profile_corr",
-    "snapshot_diff_orders",
-    "psi_value_drift",
-    # (c) never driver-checked: dedup / embeddings / graph (r03 additions)
-    "dedup_spans",
-    "dedup_spans_intra",
-    "source_terms_ctfidf",
-    "embedding_diversity",
-    "graph_pagerank",
-    "semantic_dedup_census",
-    # (d) oldest-green re-verification (r01-only rows; decile_counts was
-    # rewritten in r03 and its new form has never been driver-graded)
-    "decile_counts",
-    "q1_pricing_summary",
-    "moving_avg_7d",
-    "prefix_sum",
-    "run_length",
-    "run_length_scan",
-    "interval_merge",
-    "dense_left_join",
-    "adjacency_node_ranges",
-    "adjacency_range_to_edge",
-    "derived_key",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_pipeline",
-    "dedup_components",
-    "dedup_simhash",
-    "sim_cosine_topk",
-    "sim_lsh_ann",
-    "sim_ivf_ann",
-]
-assert len(_R04_WINDOW) == 50, len(_R04_WINDOW)
-assert set(_R04_WINDOW) <= set(QUERIES), sorted(set(_R04_WINDOW) - set(QUERIES))
-QUERIES = {
-    **{name: QUERIES[name] for name in _R04_WINDOW},
-    **{name: v for name, v in QUERIES.items() if name not in _R04_WINDOW},
-}
-
-# --- r05 grading rotation --------------------------------------------------
-# Window policy for r05, per VERDICT.md r04 item 1: lead with
-# corpus_prep_funnel (the only oracled query without a driver row —
-# added after the r04 freeze), then re-verify the 26 queries whose only
-# driver row is from r01 (the oldest-green cohort the r04 plan comment
-# named), then fill the remaining 23 slots from the r02-latest cohort,
-# leading with the three queries that were ever red before their fix
-# (json_extract_agg, validation_filter, inter_event_gaps — green since
-# r02 but the fixed form deserves a fresh row) plus touch_scan_v2 (the
-# reference's core scan) and the TPC-H spine.
-_R05_WINDOW = [
-    # (a) first-ever driver row
-    "corpus_prep_funnel",
-    # (b) r01-only rows, oldest-green re-verification
-    "q3_shipping_priority",
-    "q5_nation_volume",
-    "q6_selective_agg",
-    "q14_brand_revenue",
-    "q18_large_orders",
-    "semi_join_exists",
-    "anti_join",
-    "set_intersect",
-    "rollup_pricing",
-    "topk_per_group",
-    "pivot_event_counts",
-    "above_nation_avg",
-    "proj_rename",
-    "array_flatten",
-    "bitfield_unpack",
-    "limit_n",
-    "count_sum",
-    "global_max",
-    "dedup_ngram_jaccard",
-    "text_fingerprint",
-    "text_language_id",
-    "text_quality",
-    "text_rolling_hash",
-    "text_token_count",
-    "text_top_tokens",
-    "multimodal_meta",
-    # (c) r02-latest rotation: ever-red-then-fixed first, then the
-    # reference's core scan and the TPC-H spine
-    "json_extract_agg",
-    "validation_filter",
-    "inter_event_gaps",
-    "touch_scan_v2",
-    "q2_min_cost_supplier",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q12_priority_shipping",
-    "q13_order_distribution",
-    "q15_top_supplier",
-    "q16_supplier_part_count",
-    "q17_small_qty_revenue",
-    "q19_disjunctive_pred",
-    "q20_qualified_suppliers",
-    "q21_dominant_supplier",
-    "q22_idle_customers",
-    "asof_join_last_view",
-    "band_join_conversions",
-    "bm25_search",
-    "decontaminate_train",
-]
-def _check_window(window, name, prior=None):
-    """Validate a grading-window list at import time.
-
-    Explicit raises (not ``assert``) so the checks survive ``python -O``
-    — the rotation workflow relies on them firing every import.
-    """
-    if len(window) != 50:
-        raise ValueError(f"{name}: expected 50 entries, got {len(window)}")
-    missing = sorted(set(window) - set(QUERIES))
-    if missing:
-        raise ValueError(f"{name}: not in registry: {missing}")
-    if len(set(window)) != len(window):
-        raise ValueError(f"{name}: duplicate entries")
-    if prior is not None:
-        overlap = sorted(set(window) & set(prior))
-        if overlap:
-            raise ValueError(f"{name}: overlaps prior window: {overlap}")
-
-
-_check_window(_R05_WINDOW, "_R05_WINDOW")
-
-# --- r06 grading rotation (PRE-WIRED, activate at round-6 start) -----------
-# After r05 every oracled query has a driver row and the r01-only cohort
-# is re-verified.  The r06 window below is the next-oldest cohort: the
-# 26 remaining rows whose latest grade is r02 (streams, multimodal trio,
-# cube/grouping_sets, percentile/distinct stats, table_profile, ...)
-# plus 24 of the r03-latest rows, leading with the custom-machinery
-# queries (star CC, survivor funnel, bloom, ANN broadcast modes, the
-# fixed equi-depth gate).  The list is VALIDATED on every import; round
-# 6's builder only uncomments the reorder (and promotes any red rows
-# from CORRECTNESS_r05 to the front first).
-_R06_WINDOW = [
-    # (a) r02-latest remainder
-    "asof_join_next_purchase",
-    "cube_pricing",
-    "dedup_minhash_sig",
-    "distinct_nation_stats",
-    "gopher_quality_report",
-    "graph_triangle_stats",
-    "grouping_sets_pricing",
-    "multimodal_decode",
-    "multimodal_frames",
-    "multimodal_resize",
-    "per_source_doc_cap",
-    "percentile_acctbal",
-    "range_window_1h",
-    "salted_join_brand_revenue",
-    "sequence_packing",
-    "sim_neardup_pairs",
-    "stream_dedup",
-    "stream_enrich",
-    "stream_join_pairs",
-    "stream_running_totals",
-    "stream_session_window",
-    "stream_sessionize_stateful",
-    "stream_windowed_agg",
-    "table_profile",
-    "vector_norm_stats",
-    "winsorized_value_stats",
-    # (b) r03-latest, custom machinery first — plus the two iteratives
-    # that gained value oracles in r06 (kmeans_doc_clusters,
-    # embedding_pc1: first-ever driver rows; they displace
-    # dedup_survivors and graph_degree_distribution, which the r05
-    # judge's independent sf0.01 sweep re-verified PASS this cycle —
-    # both lead _R07_WINDOW instead)
-    "kmeans_doc_clusters",
-    "embedding_pc1",
-    "dedup_components_star",
-    "dedup_simhash_pairs",
-    "dedup_fuzzy_pairs",
-    "dedup_incremental_bloom",
-    "equi_depth_histogram",
-    "stream_sessionize",
-    "ann_recall_at5",
-    "sim_lsh_ann_bcast",
-    "sim_ivf_ann_bcast",
-    "sparse_cosine_topk",
-    "tfidf_top_terms",
-    "inverted_index_stats",
-    "containment_pairs",
-    "contamination_matrix",
-    "dup_shingle_fraction",
-    "embedding_quantize_error",
-    "embedding_standardize_stats",
-    "range_join_error_views",
-    "skew_key_profile",
-    "weighted_sample_docs",
-    "scd2_event_history",
-    "upsert_latest_state",
-]
-_check_window(_R06_WINDOW, "_R06_WINDOW", prior=_R05_WINDOW)
-# (r06 reorder retired at round-7 start; the active reorder now lives
-# below _R07_WINDOW.  CORRECTNESS_r06 was 50/50 green on exactly this
-# list, so nothing needed promotion.)
-
-# --- r07 grading rotation (PRE-WIRED, activate at round-7 start) -----------
-# Next-oldest cohort after the r06 re-grade: the two rows the r06
-# swap displaced (dedup_survivors, graph_degree_distribution — judge
-# re-verified r05, but their last DRIVER row is r03), then the 26
-# remaining r03-latest rows, then the 22 alphabetically-first
-# r04-latest rows (the other 28 r04-latest rows are round 8's
-# cohort).  VALIDATED on every import; round 7's builder promotes any
-# red rows from CORRECTNESS_r06 to the front, then replaces the
-# _R06_WINDOW reorder above with the same two lines over _R07_WINDOW.
-# Mid-round-7 amendment (the r06 precedent: new queries lead their
-# birth round's window): the four queries ADDED in round 7 lead, and
-# the four tail rows they displace (expectations_report,
-# graph_pagerank, interval_merge, lang_confusion_matrix) move to the
-# front of _R08_WINDOW.
-_R07_WINDOW = [
-    # (z) new in round 7, never driver-graded — lead the window
-    "sim_ivfpq_ann",
-    "ann_recall_pq",
-    "hybrid_rrf_search",
-    "hard_negative_mining",
-    # (a) displaced from the r06 window (last driver row r03)
-    "dedup_survivors",
-    "graph_degree_distribution",
-    # (b) r03-latest remainder
-    "acctbal_rank_profile",
-    "bloom_pruned_revenue",
-    "cluster_quality_by_label",
-    "cohort_retention",
-    "compaction_plan",
-    "event_funnel",
-    "event_path_topk",
-    "event_transition_matrix",
-    "full_outer_reconcile",
-    "gap_fill_daily",
-    "interval_overlap_sessions",
-    "mad_outlier_events",
-    "market_basket_lift",
-    "mixture_plan",
-    "monthly_revenue_mom",
-    "multimodal_audio",
-    "multiset_customer_activity",
-    "nation_supplier_roster",
-    "order_backlog_concurrency",
-    "revenue_share_by_nation",
-    "rolling_7d_distinct_users",
-    "scd2_temporal_enrich",
-    "stratified_sample_counts",
-    "text_normalize_report",
-    "time_rollup_hierarchy",
-    "zscore_outlier_events",
-    # (c) r04-latest, alphabetical head
-    "adjacency_node_ranges",
-    "adjacency_range_to_edge",
-    "bpe_merge_candidates",
-    "char_entropy_buckets",
-    "chi2_type_by_weekday",
-    "decile_counts",
-    "dedup_components",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_pipeline",
-    "dedup_simhash",
-    "dedup_spans",
-    "dedup_spans_intra",
-    "dense_left_join",
-    "derived_key",
-    "doc_logprob_quality",
-    "embedding_diversity",
-    "event_lateness_profile",
-]
-_check_window(_R07_WINDOW, "_R07_WINDOW", prior=_R06_WINDOW)
-# ACTIVE for round 7 (CORRECTNESS_r06 had zero reds, so nothing to
-# promote ahead of the planned cohort):
-QUERIES = {
-    **{name: QUERIES[name] for name in _R07_WINDOW},
-    **{name: v for name, v in QUERIES.items() if name not in _R07_WINDOW},
-}
-
-# --- r08 grading rotation (PRE-WIRED, activate at round-8 start) -----------
-# Next-oldest cohort after the r07 re-grade: the seven queries added
-# late in round 7 (never driver-graded — sweep-verified at sf0.001
-# AND sf0.01 in round 7), the four r03/r04 rows the mid-r07
-# amendment displaced, then the 28 remaining r04-latest rows
-# (computed from the CORRECTNESS_r01-r06 union: latest driver row
-# per query, minus everything in _R07_WINDOW), then the 11
-# alphabetically-first r05-latest rows (global_max..proj_rename and
-# q10-q13 defer to round 9's cohort).  VALIDATED on every import;
-# round 8's builder promotes any
-# red rows from CORRECTNESS_r07 to the front, then replaces the
-# _R07_WINDOW reorder above with the same two lines over _R08_WINDOW.
-_R08_WINDOW = [
-    # (y) new in late round 7, never driver-graded — lead the window
-    "mmr_diverse_topk",
-    "ks_drift_test",
-    "zorder_layout_plan",
-    "vocab_growth_by_source",
-    "cms_heavy_hitters",
-    "hll_distinct_registers",
-    "lsh_pair_eval",
-    # (z) displaced from the r07 window by the mid-r07 amendment
-    "expectations_report",
-    "graph_pagerank",
-    "interval_merge",
-    "lang_confusion_matrix",
-    # (a) r04-latest remainder (28)
-    "moving_avg_7d",
-    "numeric_profile_corr",
-    "pmi_top_pairs",
-    "prefix_sum",
-    "psi_value_drift",
-    "q1_pricing_summary",
-    "quality_vs_dup_calibration",
-    "revenue_share_in_region",
-    "run_length",
-    "run_length_scan",
-    "sample_split_counts",
-    "semantic_dedup_census",
-    "session_bounce_stats",
-    "sim_cosine_topk",
-    "sim_ivf_ann",
-    "sim_lsh_ann",
-    "snapshot_diff_orders",
-    "source_terms_ctfidf",
-    "text_chunking",
-    "text_pii_redact",
-    "text_pii_scan",
-    "text_quality_funnel",
-    "text_repetition",
-    "text_top_bigrams",
-    "top_ngram_coverage",
-    "unpivot_metrics",
-    "value_histogram",
-    "value_trend_by_type",
-    # (b) r05-latest, alphabetical head (11; global_max..proj_rename
-    # defer to round 9's cohort with q10-q13)
-    "above_nation_avg",
-    "anti_join",
-    "array_flatten",
-    "asof_join_last_view",
-    "band_join_conversions",
-    "bitfield_unpack",
-    "bm25_search",
-    "corpus_prep_funnel",
-    "count_sum",
-    "decontaminate_train",
-    "dedup_ngram_jaccard",
-]
-_check_window(_R08_WINDOW, "_R08_WINDOW", prior=_R07_WINDOW)
-# ACTIVE for round 8 (CORRECTNESS_r07 was 50/50 green, zero reds to
-# promote ahead of the planned cohort):
-QUERIES = {
-    **{name: QUERIES[name] for name in _R08_WINDOW},
-    **{name: v for name, v in QUERIES.items() if name not in _R08_WINDOW},
-}
-
-# --- r09 grading rotation (PRE-WIRED, activate at round-9 start) -----------
-# After r08 every registry query has a driver row and no green is
-# older than r05.  The r09 window is the next-oldest cohort: the 39
-# remaining r05-latest rows (computed from the CORRECTNESS_r01-r07
-# union assuming r08 grades _R08_WINDOW — the q10-q22 TPC-H block,
-# the text_* quintet, touch_scan_v2, ...) then the 11
-# alphabetically-first r06-latest rows (ann_recall_at5..
-# distinct_nation_stats; the r06 remainder defers to round 10).
-# Round 9's builder promotes any red rows from CORRECTNESS_r08 to the
-# front, then replaces the _R08_WINDOW reorder above with the same
-# two lines over _R09_WINDOW.
-#
-# AMENDED at round-9 start (the r07 mid-round-amendment precedent):
-# CORRECTNESS_r08 red-flagged ks_drift_test / vocab_growth_by_source /
-# lsh_pair_eval — all three hash-only fails from uncast DuckDB sum()
-# typing the output column HUGEINT (Spark values verified bit-identical
-# at sf0.01; same class as the round-1 b583a26 fix).  Their oracle SQLs
-# now carry CAST(... AS BIGINT) wraps; they lead the window so the fix
-# is driver-re-graded this round.  The three displaced tail entries
-# (dedup_minhash_sig, dedup_simhash_pairs, distinct_nation_stats)
-# defer to the r10 cohort.
-_R09_PROMOTED_REDS = [
-    "ks_drift_test",
-    "lsh_pair_eval",
-    "vocab_growth_by_source",
-]
-_R09_WINDOW = _R09_PROMOTED_REDS + [
-    # (a) r05-latest remainder (39)
-    "global_max",
-    "inter_event_gaps",
-    "json_extract_agg",
-    "limit_n",
-    "multimodal_meta",
-    "pivot_event_counts",
-    "proj_rename",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q12_priority_shipping",
-    "q13_order_distribution",
-    "q14_brand_revenue",
-    "q15_top_supplier",
-    "q16_supplier_part_count",
-    "q17_small_qty_revenue",
-    "q18_large_orders",
-    "q19_disjunctive_pred",
-    "q20_qualified_suppliers",
-    "q21_dominant_supplier",
-    "q22_idle_customers",
-    "q2_min_cost_supplier",
-    "q3_shipping_priority",
-    "q5_nation_volume",
-    "q6_selective_agg",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "rollup_pricing",
-    "semi_join_exists",
-    "set_intersect",
-    "text_fingerprint",
-    "text_language_id",
-    "text_quality",
-    "text_rolling_hash",
-    "text_token_count",
-    "text_top_tokens",
-    "topk_per_group",
-    "touch_scan_v2",
-    "validation_filter",
-    # (b) r06-latest, alphabetical head (11)
-    "ann_recall_at5",
-    "asof_join_next_purchase",
-    "containment_pairs",
-    "contamination_matrix",
-    "cube_pricing",
-    "dedup_components_star",
-    "dedup_fuzzy_pairs",
-    "dedup_incremental_bloom",
-]
-# Promoted reds are exempt from the no-overlap-with-prior rule: they
-# WERE graded (red) in r08 and must be re-graded after the oracle fix.
-_check_window(
-    _R09_WINDOW,
-    "_R09_WINDOW",
-    prior=[n for n in _R08_WINDOW if n not in _R09_PROMOTED_REDS],
-)
-# Was ACTIVE for round 9; r10 activation below supersedes it
-# (CORRECTNESS_r09 came back 50/50 green, including the three
-# re-graded HUGEINT promotions).
-
-# --- r10 grading rotation (PRE-WIRED, activate at round-10 start) ----------
-# Computed from the CORRECTNESS_r01-r08 union assuming r09 grades
-# _R09_WINDOW: the next-oldest cohort is the 42 remaining r06-latest
-# rows (the three entries the r09 red-promotion displaced, the
-# embedding/stream/multimodal blocks, ...) then the 8
-# alphabetically-first r07-latest rows (acctbal_rank_profile..
-# chi2_type_by_weekday; the r07 remainder defers to round 11).
-# Round 10's builder promotes any red rows from CORRECTNESS_r09 to the
-# front (dropping tail entries to keep 50), then replaces the
-# _R09_WINDOW reorder above with the same two lines over _R10_WINDOW.
-_R10_WINDOW = [
-    # (a) r06-latest remainder (42)
-    "dedup_minhash_sig",
-    "dedup_simhash_pairs",
-    "distinct_nation_stats",
-    "dup_shingle_fraction",
-    "embedding_pc1",
-    "embedding_quantize_error",
-    "embedding_standardize_stats",
-    "equi_depth_histogram",
-    "gopher_quality_report",
-    "graph_triangle_stats",
-    "grouping_sets_pricing",
-    "inverted_index_stats",
-    "kmeans_doc_clusters",
-    "multimodal_decode",
-    "multimodal_frames",
-    "multimodal_resize",
-    "per_source_doc_cap",
-    "percentile_acctbal",
-    "range_join_error_views",
-    "range_window_1h",
-    "salted_join_brand_revenue",
-    "scd2_event_history",
-    "sequence_packing",
-    "sim_ivf_ann_bcast",
-    "sim_lsh_ann_bcast",
-    "sim_neardup_pairs",
-    "skew_key_profile",
-    "sparse_cosine_topk",
-    "stream_dedup",
-    "stream_enrich",
-    "stream_join_pairs",
-    "stream_running_totals",
-    "stream_session_window",
-    "stream_sessionize",
-    "stream_sessionize_stateful",
-    "stream_windowed_agg",
-    "table_profile",
-    "tfidf_top_terms",
-    "upsert_latest_state",
-    "vector_norm_stats",
-    "weighted_sample_docs",
-    "winsorized_value_stats",
-    # (b) r07-latest, alphabetical head (8)
-    "acctbal_rank_profile",
-    "adjacency_node_ranges",
-    "adjacency_range_to_edge",
-    "ann_recall_pq",
-    "bloom_pruned_revenue",
-    "bpe_merge_candidates",
-    "char_entropy_buckets",
-    "chi2_type_by_weekday",
-]
-_check_window(_R10_WINDOW, "_R10_WINDOW", prior=_R09_WINDOW)
-# (graded round 10: CORRECTNESS_r10 came back 50/50 green)
-
-# --- r11 grading rotation (PRE-WIRED, activate at round-11 start) ----------
-# Computed from the CORRECTNESS_r01-r09 union assuming r10 grades
-# _R10_WINDOW: the next-oldest cohort is the 42 remaining r07-latest
-# rows, then the 8 alphabetically-first r08-latest rows
-# (above_nation_avg..cms_heavy_hitters; the r08 remainder — 39 rows —
-# defers to round 12).  Round 11's builder promotes any red rows from
-# CORRECTNESS_r10 to the front (dropping tail entries to keep 50),
-# then replaces the _R10_WINDOW reorder above with the same two lines
-# over _R11_WINDOW.
-_R11_WINDOW = [
-    # (a) r07-latest remainder (42)
-    "cluster_quality_by_label",
-    "cohort_retention",
-    "compaction_plan",
-    "decile_counts",
-    "dedup_components",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_pipeline",
-    "dedup_simhash",
-    "dedup_spans",
-    "dedup_spans_intra",
-    "dedup_survivors",
-    "dense_left_join",
-    "derived_key",
-    "doc_logprob_quality",
-    "embedding_diversity",
-    "event_funnel",
-    "event_lateness_profile",
-    "event_path_topk",
-    "event_transition_matrix",
-    "full_outer_reconcile",
-    "gap_fill_daily",
-    "graph_degree_distribution",
-    "hard_negative_mining",
-    "hybrid_rrf_search",
-    "interval_overlap_sessions",
-    "mad_outlier_events",
-    "market_basket_lift",
-    "mixture_plan",
-    "monthly_revenue_mom",
-    "multimodal_audio",
-    "multiset_customer_activity",
-    "nation_supplier_roster",
-    "order_backlog_concurrency",
-    "revenue_share_by_nation",
-    "rolling_7d_distinct_users",
-    "scd2_temporal_enrich",
-    "sim_ivfpq_ann",
-    "stratified_sample_counts",
-    "text_normalize_report",
-    "time_rollup_hierarchy",
-    "zscore_outlier_events",
-    # (b) r08-latest, alphabetical head (8)
-    "above_nation_avg",
-    "anti_join",
-    "array_flatten",
-    "asof_join_last_view",
-    "band_join_conversions",
-    "bitfield_unpack",
-    "bm25_search",
-    "cms_heavy_hitters",
-]
-_check_window(_R11_WINDOW, "_R11_WINDOW", prior=_R10_WINDOW)
-# (graded round 11: CORRECTNESS_r11 came back 50/50 green)
-
-# --- r12 grading rotation (PRE-WIRED, activate at round-12 start) ----------
-# Computed from the CORRECTNESS_r01-r10 union assuming r11 grades
-# _R11_WINDOW: the next-oldest cohort is the 39 remaining r08-latest
-# rows, then the 11 alphabetically-first r09-latest rows
-# (ann_recall_at5..json_extract_agg).  Round 12's builder promotes any
-# red rows from CORRECTNESS_r11 to the front (dropping tail entries to
-# keep 50), then replaces the _R11_WINDOW reorder above with the same
-# two lines over _R12_WINDOW.
-_R12_WINDOW = [
-    # (a) r08-latest remainder (39)
-    "corpus_prep_funnel",
-    "count_sum",
-    "decontaminate_train",
-    "dedup_ngram_jaccard",
-    "expectations_report",
-    "graph_pagerank",
-    "hll_distinct_registers",
-    "interval_merge",
-    "lang_confusion_matrix",
-    "mmr_diverse_topk",
-    "moving_avg_7d",
-    "numeric_profile_corr",
-    "pmi_top_pairs",
-    "prefix_sum",
-    "psi_value_drift",
-    "q1_pricing_summary",
-    "quality_vs_dup_calibration",
-    "revenue_share_in_region",
-    "run_length",
-    "run_length_scan",
-    "sample_split_counts",
-    "semantic_dedup_census",
-    "session_bounce_stats",
-    "sim_cosine_topk",
-    "sim_ivf_ann",
-    "sim_lsh_ann",
-    "snapshot_diff_orders",
-    "source_terms_ctfidf",
-    "text_chunking",
-    "text_pii_redact",
-    "text_pii_scan",
-    "text_quality_funnel",
-    "text_repetition",
-    "text_top_bigrams",
-    "top_ngram_coverage",
-    "unpivot_metrics",
-    "value_histogram",
-    "value_trend_by_type",
-    "zorder_layout_plan",
-    # (b) r09-latest, alphabetical head (11)
-    "ann_recall_at5",
-    "asof_join_next_purchase",
-    "containment_pairs",
-    "contamination_matrix",
-    "cube_pricing",
-    "dedup_components_star",
-    "dedup_fuzzy_pairs",
-    "dedup_incremental_bloom",
-    "global_max",
-    "inter_event_gaps",
-    "json_extract_agg",
-]
-_check_window(_R12_WINDOW, "_R12_WINDOW", prior=_R11_WINDOW)
-# (graded round 12: CORRECTNESS_r12 came back 50/50 green)
-
-# --- r13 grading rotation (PRE-WIRED, activate at round-13 start) ----------
-# Computed from the CORRECTNESS_r01-r11 union assuming r12 grades
-# _R12_WINDOW: the next-oldest cohort is the 39 remaining r09-latest
-# rows, then the 11 alphabetically-first r10-latest rows
-# (acctbal_rank_profile..distinct_nation_stats).  Round 13's builder
-# promotes any red rows from CORRECTNESS_r12 to the front (dropping
-# tail entries to keep 50), then replaces the _R12_WINDOW reorder
-# above with the same two lines over _R13_WINDOW.
-_R13_WINDOW = [
-    # (0) new in r13, never graded — promoted to the front (the same
-    # slot red rows would take); the tail entry it displaces
-    # (distinct_nation_stats) re-grades in a later rotation
-    "multimodal_probe",
-    # (a) r09-latest remainder (39)
-    "ks_drift_test",
-    "limit_n",
-    "lsh_pair_eval",
-    "multimodal_meta",
-    "pivot_event_counts",
-    "proj_rename",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q12_priority_shipping",
-    "q13_order_distribution",
-    "q14_brand_revenue",
-    "q15_top_supplier",
-    "q16_supplier_part_count",
-    "q17_small_qty_revenue",
-    "q18_large_orders",
-    "q19_disjunctive_pred",
-    "q20_qualified_suppliers",
-    "q21_dominant_supplier",
-    "q22_idle_customers",
-    "q2_min_cost_supplier",
-    "q3_shipping_priority",
-    "q5_nation_volume",
-    "q6_selective_agg",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "rollup_pricing",
-    "semi_join_exists",
-    "set_intersect",
-    "text_fingerprint",
+# Registry order (``list(QUERIES)``), the order __spark_entry__ hands the
+# queries and their oracles out in; a query missing here comes last.
+_ORDER = [
+    "crawl_prep_funnel_full",
+    "warc_revisit_census",
+    "cdx_index_census",
+    "stream_crawl_ingest",
     "text_language_id",
     "text_quality",
     "text_rolling_hash",
@@ -12207,46 +11413,14 @@ _R13_WINDOW = [
     "touch_scan_v2",
     "validation_filter",
     "vocab_growth_by_source",
-    # (b) r10-latest, alphabetical head (11)
-    "acctbal_rank_profile",
-    "adjacency_node_ranges",
-    "adjacency_range_to_edge",
-    "ann_recall_pq",
-    "bloom_pruned_revenue",
-    "bpe_merge_candidates",
-    "char_entropy_buckets",
-    "chi2_type_by_weekday",
-    "dedup_minhash_sig",
-    "dedup_simhash_pairs",
-]
-_check_window(_R13_WINDOW, "_R13_WINDOW", prior=_R12_WINDOW)
-# ACTIVE for round 13 (CORRECTNESS_r12 was 50/50 — no reds to promote;
-# the window is exactly the pre-wired rotation: the r09-latest
-# remainder — the oldest cohort in the driver record — plus the r10
-# alphabetical head):
-QUERIES = {
-    **{name: QUERIES[name] for name in _R13_WINDOW},
-    **{name: v for name, v in QUERIES.items() if name not in _R13_WINDOW},
-}
-
-# --- r14 grading rotation (PRE-WIRED, activate at round-14 start) ----------
-# Computed from the CORRECTNESS_r01-r12 union assuming r13 grades
-# _R13_WINDOW: the next-oldest cohort is the 40 remaining r10-latest
-# rows (including distinct_nation_stats, displaced from the r13 head
-# by the new multimodal_probe), then the 10 alphabetically-first
-# r11-latest rows.  Round 14's builder promotes any red rows from
-# CORRECTNESS_r13 to the front (dropping tail entries to keep 50),
-# then replaces the _R13_WINDOW reorder above with the same two lines
-# over _R14_WINDOW.
-_R14_WINDOW = [
-    # (0) new in r13 (registered after the r13 window froze), never
-    # graded — promoted to the front; the tail entries they displace
-    # (cohort_retention, cms_heavy_hitters, cluster_quality_by_label)
-    # re-grade in a later rotation
-    "multimodal_transcode",
-    "url_canonical_dedup",
+    "above_nation_avg",
+    "anti_join",
+    "array_flatten",
+    "asof_join_last_view",
     "audio_resample_check",
-    # (a) r10-latest remainder (40)
+    "band_join_conversions",
+    "bitfield_unpack",
+    "bm25_search",
     "distinct_nation_stats",
     "dup_shingle_fraction",
     "embedding_pc1",
@@ -12261,6 +11435,7 @@ _R14_WINDOW = [
     "multimodal_decode",
     "multimodal_frames",
     "multimodal_resize",
+    "multimodal_transcode",
     "per_source_doc_cap",
     "percentile_acctbal",
     "range_join_error_views",
@@ -12275,130 +11450,56 @@ _R14_WINDOW = [
     "sparse_cosine_topk",
     "stream_dedup",
     "stream_enrich",
-    "stream_join_pairs",
-    "stream_running_totals",
-    "stream_session_window",
-    "stream_sessionize",
-    "stream_sessionize_stateful",
-    "stream_windowed_agg",
-    "table_profile",
-    "tfidf_top_terms",
-    "upsert_latest_state",
-    "vector_norm_stats",
-    "weighted_sample_docs",
-    "winsorized_value_stats",
-    # (b) r11-latest, alphabetical head (7 — the three new r13
-    # queries at the front displaced cohort_retention,
-    # cms_heavy_hitters, and cluster_quality_by_label)
-    "above_nation_avg",
-    "anti_join",
-    "array_flatten",
-    "asof_join_last_view",
-    "band_join_conversions",
-    "bitfield_unpack",
-    "bm25_search",
-]
-_check_window(_R14_WINDOW, "_R14_WINDOW", prior=_R13_WINDOW)
-# ACTIVE for round 14 (CORRECTNESS_r13 was 50/50 — no reds to promote;
-# the window is exactly the pre-wired rotation: the three r13-new
-# never-graded queries at the front, the r10-latest remainder, then
-# the r11 alphabetical head):
-QUERIES = {
-    **{name: QUERIES[name] for name in _R14_WINDOW},
-    **{name: v for name, v in QUERIES.items() if name not in _R14_WINDOW},
-}
-
-# --- r15 grading rotation (PRE-WIRED, activate at round-15 start) ----------
-# Computed from the CORRECTNESS_r01-r13 union assuming r14 grades
-# _R14_WINDOW: the never-graded r14 registration (media_triage_census,
-# added after the r14 window froze) leads, then the oldest cohort —
-# the 43 remaining r11-latest rows — topped up with the 6
-# alphabetically-first r12-latest rows.  Round 15's builder promotes
-# any red rows from CORRECTNESS_r14 to the front (dropping tail
-# entries to keep 50), then adds the same two reorder lines over
-# _R15_WINDOW.
-_R15_WINDOW = [
-    # (0) new in r14, never graded
-    "media_triage_census",
-    # (a) r11-latest remainder (43)
-    "cluster_quality_by_label",
-    "cms_heavy_hitters",
-    "cohort_retention",
-    "compaction_plan",
-    "decile_counts",
-    "dedup_components",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_pipeline",
-    "dedup_simhash",
-    "dedup_spans",
-    "dedup_spans_intra",
-    "dedup_survivors",
-    "dense_left_join",
-    "derived_key",
-    "doc_logprob_quality",
-    "embedding_diversity",
-    "event_funnel",
-    "event_lateness_profile",
-    "event_path_topk",
-    "event_transition_matrix",
-    "full_outer_reconcile",
-    "gap_fill_daily",
-    "graph_degree_distribution",
-    "hard_negative_mining",
-    "hybrid_rrf_search",
-    "interval_overlap_sessions",
-    "mad_outlier_events",
-    "market_basket_lift",
-    "mixture_plan",
-    "monthly_revenue_mom",
-    "multimodal_audio",
-    "multiset_customer_activity",
-    "nation_supplier_roster",
-    "order_backlog_concurrency",
-    "revenue_share_by_nation",
-    "rolling_7d_distinct_users",
-    "scd2_temporal_enrich",
-    "sim_ivfpq_ann",
-    "stratified_sample_counts",
-    "text_normalize_report",
-    "time_rollup_hierarchy",
-    "zscore_outlier_events",
-    # (b) r12-latest, alphabetical head (6 — the r14-new entry at the
-    # front displaced cube_pricing)
-    "ann_recall_at5",
-    "asof_join_next_purchase",
-    "containment_pairs",
-    "contamination_matrix",
-    "corpus_prep_funnel",
-    "count_sum",
-]
-_check_window(_R15_WINDOW, "_R15_WINDOW", prior=_R14_WINDOW)
-# ACTIVE for round 15 (CORRECTNESS_r14 was 50/50 — no reds to promote;
-# the window is exactly the pre-wired rotation: the never-graded r14
-# registration media_triage_census at the front, the r11-latest
-# remainder, then the r12 alphabetical head):
-QUERIES = {
-    **{name: QUERIES[name] for name in _R15_WINDOW},
-    **{name: v for name, v in QUERIES.items() if name not in _R15_WINDOW},
-}
-
-# --- r16 grading rotation (PRE-WIRED, activate at round-16 start) ----------
-# Computed from the CORRECTNESS_r01-r14 union assuming r15 grades
-# _R15_WINDOW: the never-graded r15 registration (transcode_census,
-# the corpus-grain audio-sink census) leads, then the oldest cohort —
-# the 44 remaining r12-latest rows — topped up with the 5
-# alphabetically-first r13-latest rows.  Round 16's builder promotes
-# any red rows from CORRECTNESS_r15 to the front (dropping tail
-# entries to keep 50), then adds the same two reorder lines over
-# _R16_WINDOW.
-_R16_WINDOW = [
-    # (0) new in r15, never graded (the two census rows registered
-    # before the r15 window froze, then the eight late-r15
-    # registrations: perceptual-hash image dedup x2, spectral audio
-    # fingerprint census + cross-container dedup, video frame-hash
-    # census, iterative BPE merge learning + the apply-half token
-    # census, streaming perceptual dedup gate)
+    "image_phash_census",
+    "image_phash_neardup",
+    "warc_text_census",
+    "robots_gate_census",
+    "crawl_prep_funnel",
+    "unpivot_metrics",
+    "value_histogram",
+    "value_trend_by_type",
+    "zorder_layout_plan",
+    "acctbal_rank_profile",
+    "adjacency_node_ranges",
+    "adjacency_range_to_edge",
+    "ann_recall_pq",
+    "bloom_pruned_revenue",
+    "bpe_merge_candidates",
+    "char_entropy_buckets",
+    "chi2_type_by_weekday",
+    "dedup_minhash_sig",
+    "dedup_simhash_pairs",
+    "ks_drift_test",
+    "limit_n",
+    "lsh_pair_eval",
+    "multimodal_meta",
+    "multimodal_probe",
+    "pivot_event_counts",
+    "proj_rename",
+    "q10_returned_items",
+    "q11_important_parts",
+    "q12_priority_shipping",
+    "q13_order_distribution",
+    "q14_brand_revenue",
+    "q15_top_supplier",
+    "q16_supplier_part_count",
+    "q17_small_qty_revenue",
+    "q18_large_orders",
+    "q19_disjunctive_pred",
+    "q20_qualified_suppliers",
+    "q21_dominant_supplier",
+    "q22_idle_customers",
+    "q2_min_cost_supplier",
+    "q3_shipping_priority",
+    "q5_nation_volume",
+    "q6_selective_agg",
+    "q7_volume_shipping",
+    "q8_market_share",
+    "q9_product_profit",
+    "rollup_pricing",
+    "semi_join_exists",
+    "set_intersect",
+    "text_fingerprint",
     "transcode_census",
     "video_track_census",
     "image_dhash_census",
@@ -12409,7 +11510,6 @@ _R16_WINDOW = [
     "bpe_learned_merges",
     "bpe_token_census",
     "stream_image_dedup",
-    # (a) r12-latest remainder (40)
     "cube_pricing",
     "decontaminate_train",
     "dedup_components_star",
@@ -12450,177 +11550,68 @@ _R16_WINDOW = [
     "text_repetition",
     "text_top_bigrams",
     "top_ngram_coverage",
-    # (b) the ten never-graded entries at the front displaced the six
-    # alphabetically-first r13-latest rows (acctbal_rank_profile,
-    # adjacency_node_ranges, adjacency_range_to_edge, ann_recall_pq,
-    # bloom_pruned_revenue, bpe_merge_candidates) and the three
-    # alphabetically-last r12-latest rows (unpivot_metrics,
-    # value_histogram, value_trend_by_type, zorder_layout_plan) back
-    # into the r17 rotation pool
+    "media_triage_census",
+    "cluster_quality_by_label",
+    "cms_heavy_hitters",
+    "cohort_retention",
+    "compaction_plan",
+    "decile_counts",
+    "dedup_components",
+    "dedup_exact",
+    "dedup_minhash_lsh",
+    "dedup_pipeline",
+    "dedup_simhash",
+    "dedup_spans",
+    "dedup_spans_intra",
+    "dedup_survivors",
+    "dense_left_join",
+    "derived_key",
+    "doc_logprob_quality",
+    "embedding_diversity",
+    "event_funnel",
+    "event_lateness_profile",
+    "event_path_topk",
+    "event_transition_matrix",
+    "full_outer_reconcile",
+    "gap_fill_daily",
+    "graph_degree_distribution",
+    "hard_negative_mining",
+    "hybrid_rrf_search",
+    "interval_overlap_sessions",
+    "mad_outlier_events",
+    "market_basket_lift",
+    "mixture_plan",
+    "monthly_revenue_mom",
+    "multimodal_audio",
+    "multiset_customer_activity",
+    "nation_supplier_roster",
+    "order_backlog_concurrency",
+    "revenue_share_by_nation",
+    "rolling_7d_distinct_users",
+    "scd2_temporal_enrich",
+    "sim_ivfpq_ann",
+    "stratified_sample_counts",
+    "text_normalize_report",
+    "time_rollup_hierarchy",
+    "zscore_outlier_events",
+    "ann_recall_at5",
+    "asof_join_next_purchase",
+    "containment_pairs",
+    "contamination_matrix",
+    "corpus_prep_funnel",
+    "count_sum",
+    "url_canonical_dedup",
+    "stream_join_pairs",
+    "stream_running_totals",
+    "stream_session_window",
+    "stream_sessionize",
+    "stream_sessionize_stateful",
+    "stream_windowed_agg",
+    "table_profile",
+    "tfidf_top_terms",
+    "upsert_latest_state",
+    "vector_norm_stats",
+    "weighted_sample_docs",
+    "winsorized_value_stats",
 ]
-_check_window(_R16_WINDOW, "_R16_WINDOW", prior=_R15_WINDOW)
-# ACTIVE for round 16 (CORRECTNESS_r15 was 50/50 — no reds to promote;
-# the window is exactly the pre-wired rotation: the ten never-graded
-# r15 registrations at the front, then the r12-latest remainder):
-QUERIES = {
-    **{name: QUERIES[name] for name in _R16_WINDOW},
-    **{name: v for name, v in QUERIES.items() if name not in _R16_WINDOW},
-}
-
-# --- r17 grading rotation (PRE-WIRED, activate at round-17 start) ----------
-# Computed from the CORRECTNESS_r01-r15 union assuming r16 grades
-# _R16_WINDOW: the five never-graded r16 registrations (the two
-# synthesis-oracled pHash rows, the WARC crawl-ingest census, the
-# RFC 9309 robots gate census, and the composed crawl-prep funnel)
-# lead, then the oldest cohort — the 4
-# remaining r12-latest rows — topped up with the 41
-# alphabetically-first r13-latest rows (the TPC-H block rotates back
-# in, plus the multimodal_probe census row the walker-drift rule wants
-# re-graded periodically).  Round 17's builder promotes any red rows
-# from CORRECTNESS_r16 to the front (dropping tail entries to keep
-# 50), then adds the same two reorder lines over _R17_WINDOW.
-_R17_WINDOW = [
-    # (0) new in r16, never graded (the synthesis-oracled DCT-pHash
-    # census + its banded near-dup companion, and the WARC crawl-
-    # ingest census)
-    "image_phash_census",
-    "image_phash_neardup",
-    "warc_text_census",
-    "robots_gate_census",
-    "crawl_prep_funnel",
-    # (a) r12-latest remainder (4)
-    "unpivot_metrics",
-    "value_histogram",
-    "value_trend_by_type",
-    "zorder_layout_plan",
-    # (b) r13-latest, alphabetical head (41)
-    "acctbal_rank_profile",
-    "adjacency_node_ranges",
-    "adjacency_range_to_edge",
-    "ann_recall_pq",
-    "bloom_pruned_revenue",
-    "bpe_merge_candidates",
-    "char_entropy_buckets",
-    "chi2_type_by_weekday",
-    "dedup_minhash_sig",
-    "dedup_simhash_pairs",
-    "ks_drift_test",
-    "limit_n",
-    "lsh_pair_eval",
-    "multimodal_meta",
-    "multimodal_probe",
-    "pivot_event_counts",
-    "proj_rename",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q12_priority_shipping",
-    "q13_order_distribution",
-    "q14_brand_revenue",
-    "q15_top_supplier",
-    "q16_supplier_part_count",
-    "q17_small_qty_revenue",
-    "q18_large_orders",
-    "q19_disjunctive_pred",
-    "q20_qualified_suppliers",
-    "q21_dominant_supplier",
-    "q22_idle_customers",
-    "q2_min_cost_supplier",
-    "q3_shipping_priority",
-    "q5_nation_volume",
-    "q6_selective_agg",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "rollup_pricing",
-    "semi_join_exists",
-    "set_intersect",
-    "text_fingerprint",
-    # (b) the five never-graded entries displaced text_language_id,
-    # text_quality, text_rolling_hash and text_token_count
-    # (alphabetically last of the r13 head) back into the r18 pool
-]
-_check_window(_R17_WINDOW, "_R17_WINDOW", prior=_R16_WINDOW)
-# ACTIVE for round 17 (CORRECTNESS_r16 was 50/50 — no reds to promote;
-# the window is exactly the pre-wired rotation: the five never-graded
-# r16 registrations at the front, then the r12-latest remainder and
-# the alphabetical head of the r13-latest cohort):
-QUERIES = {
-    **{name: QUERIES[name] for name in _R17_WINDOW},
-    **{name: v for name, v in QUERIES.items() if name not in _R17_WINDOW},
-}
-
-# --- r18 grading rotation (PRE-WIRED, activate at round-18 start) ----------
-# Computed from the CORRECTNESS_r01-r16 union assuming r17 grades
-# _R17_WINDOW: the two never-graded r17 registrations (the 7-stage
-# production crawl funnel and the revisit/pairing census) lead, then
-# the oldest cohort — the 9 remaining r13-latest rows — topped up
-# with the 39 alphabetically-first r14-latest rows.  Round 18's
-# builder promotes any red rows from CORRECTNESS_r17 to the front
-# (dropping tail entries to keep 50), then adds the same two reorder
-# lines over _R18_WINDOW.
-_R18_WINDOW = [
-    # (0) new in r17, never graded
-    "crawl_prep_funnel_full",
-    "warc_revisit_census",
-    "cdx_index_census",
-    "stream_crawl_ingest",
-    # (a) r13-latest remainder (9)
-    "text_language_id",
-    "text_quality",
-    "text_rolling_hash",
-    "text_token_count",
-    "text_top_tokens",
-    "topk_per_group",
-    "touch_scan_v2",
-    "validation_filter",
-    "vocab_growth_by_source",
-    # (b) r14-latest, alphabetical head (39)
-    "above_nation_avg",
-    "anti_join",
-    "array_flatten",
-    "asof_join_last_view",
-    "audio_resample_check",
-    "band_join_conversions",
-    "bitfield_unpack",
-    "bm25_search",
-    "distinct_nation_stats",
-    "dup_shingle_fraction",
-    "embedding_pc1",
-    "embedding_quantize_error",
-    "embedding_standardize_stats",
-    "equi_depth_histogram",
-    "gopher_quality_report",
-    "graph_triangle_stats",
-    "grouping_sets_pricing",
-    "inverted_index_stats",
-    "kmeans_doc_clusters",
-    "multimodal_decode",
-    "multimodal_frames",
-    "multimodal_resize",
-    "multimodal_transcode",
-    "per_source_doc_cap",
-    "percentile_acctbal",
-    "range_join_error_views",
-    "range_window_1h",
-    "salted_join_brand_revenue",
-    "scd2_event_history",
-    "sequence_packing",
-    "sim_ivf_ann_bcast",
-    "sim_lsh_ann_bcast",
-    "sim_neardup_pairs",
-    "skew_key_profile",
-    "sparse_cosine_topk",
-    "stream_dedup",
-    "stream_enrich",
-    # the remaining r14-latest rows (stream_join_pairs onward,
-    # alphabetically) fall to the r19 pool
-]
-_check_window(_R18_WINDOW, "_R18_WINDOW", prior=_R17_WINDOW)
-# ACTIVE for round 18 (CORRECTNESS_r17 was 50/50 — no reds to promote;
-# the window is exactly the pre-wired rotation: the four never-graded
-# r17 registrations at the front, then the r13-latest remainder and
-# the alphabetical head of the r14-latest cohort):
-QUERIES = {
-    **{name: QUERIES[name] for name in _R18_WINDOW},
-    **{name: v for name, v in QUERIES.items() if name not in _R18_WINDOW},
-}
+QUERIES = {**{name: QUERIES[name] for name in _ORDER}, **QUERIES}

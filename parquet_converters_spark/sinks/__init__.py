@@ -6,6 +6,5 @@ from parquet_converters_spark.sinks.sonata import (  # noqa: F401
     SonataBundleWriter,
     export_hdf5,
     export_hdf5_parallel,
-    export_hdf5_parallel_compressed,
     write_sonata_bundle,
 )

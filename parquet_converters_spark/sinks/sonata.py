@@ -3,8 +3,8 @@
 The reference writes a single SONATA HDF5 edge file via parallel MPI-IO
 hyperslab writes at precomputed global offsets
 (``src/circuit/sonata_writer.cpp``, ``src/circuit/sonata_file.cpp``).
-There is no Spark-native parallel-HDF5 sink (and no h5py in this
-environment), so the engine's native representation is a **SONATA bundle**:
+There is no Spark-native parallel-HDF5 sink, so the engine's native
+representation is a **SONATA bundle**:
 the same logical tree laid out as parquet datasets + a JSON attribute
 file.  Every piece of information the HDF5 file carries is present:
 
@@ -34,19 +34,19 @@ Semantics mirrored from the reference:
 - the adjacency index is built with
   :func:`parquet_converters_spark.operators.indexing.build_sonata_indices`.
 
-``export_hdf5`` converts a bundle to a real SONATA HDF5 file (h5py when
-available, else the built-in classic-format writer).
-``export_hdf5_parallel`` is the scale path: driver writes the metadata
-skeleton, then one Spark job with one task per bundle file seek+writes
-each file's sorted key run at the dataset's precomputed offset — the
-analogue of the reference's per-rank MPI-IO independent hyperslab
-writes (``src/circuit/sonata_file.cpp:98-143``).
-``export_hdf5_parallel_compressed`` extends that to the
-chunked+shuffle+deflate layout (which the reference cannot write in
-parallel at all): a compress pass resolves the data-dependent chunk
-sizes, the driver lays out the B-tree from sizes alone, and a fill pass
-pwrites each blob at its published address — byte-identical to the
-single-writer gzip export.
+``export_hdf5_parallel`` converts a bundle to a real SONATA HDF5 file:
+the driver writes the metadata skeleton, then one Spark job with one
+task per bundle file seek+writes each file's sorted key run at the
+dataset's precomputed offset — the analogue of the reference's
+per-rank MPI-IO independent hyperslab writes
+(``src/circuit/sonata_file.cpp:98-143``).
+With ``compression="gzip"`` it also writes the chunked+shuffle+deflate
+layout (which the reference cannot write in parallel at all): a
+compress pass resolves the data-dependent chunk sizes, the driver lays
+out the B-trees from sizes alone, and the fill job pwrites each blob at
+its published address.  ``export_hdf5`` is the driver-side single
+writer both modes are byte-identical to; it is kept as the tests'
+reference.
 """
 
 from __future__ import annotations
@@ -382,7 +382,7 @@ def _auto_chunk_rows(n_rows: int) -> int:
     the chunk length in powers of two past ``64Ki * 1M`` rows; the
     driver's layout lists and the fill pass's address broadcast then
     stay O(1M) regardless of table size.  Both the single writer and
-    the parallel compressed export derive the SAME value from the same
+    the parallel export in gzip mode derive the SAME value from the same
     row count, preserving their byte-identity under default arguments.
     """
     rows = _CHUNK_ROWS_BASE
@@ -411,34 +411,29 @@ def export_hdf5(
     per-edge properties under ``0/``, enumerations under
     ``0/@library/``, adjacency under ``indices/``.
 
-    Single-writer (driver-side) export.  Uses h5py/libhdf5 when
-    installed; in environments without it (like this container) it
-    falls back to the built-in classic-format writer
-    (:mod:`parquet_converters_spark.sinks.hdf5_minimal`), which covers
-    exactly the structures this layout needs and is round-trip-tested
-    against its independent reader.
+    Single-writer (driver-side) export, always encoded with the
+    built-in classic-format writer
+    (:mod:`parquet_converters_spark.sinks.hdf5_minimal`).  The engine's
+    production writer is :func:`export_hdf5_parallel`; this one holds
+    the whole table in driver memory and stays as the reference its
+    byte-identity tests compare against.
 
-    ``compression="gzip"`` writes the edge-scale datasets chunked
-    (``chunk_rows`` rows per chunk) with shuffle+deflate — the layout
-    libhdf5 pipelines produce — on either backend.  The default stays
-    contiguous because that is what makes the parallel export's
-    offset-computed writes possible.
+    ``compression="gzip"`` writes every dataset longer than
+    ``chunk_rows`` rows chunked with shuffle+deflate — the layout
+    libhdf5 pipelines produce.  The default stays contiguous because
+    that is what makes the parallel export's offset-computed writes
+    possible.
     """
     import numpy as np
     import pyarrow.parquet as pq
 
-    try:
-        import h5py
-    except ImportError:
-        h5py = None
+    from parquet_converters_spark.sinks.hdf5_minimal import MiniH5Writer
 
     pop_dir = os.path.join(bundle_dir, "edges", population)
     with open(os.path.join(pop_dir, "attributes.json")) as f:
         manifest = json.load(f)
     base = f"/edges/{population}"
 
-    # gather the whole file as (path -> array) + (path -> attrs) first;
-    # both backends then apply the same plan
     table = pq.read_table(os.path.join(pop_dir, "table.parquet"))
     if chunk_rows is None:
         chunk_rows = _auto_chunk_rows(table.num_rows)
@@ -453,45 +448,20 @@ def export_hdf5(
             continue
         datasets[f"{base}/0/{name}"] = table.column(name).to_numpy()[perm]
 
-    def _chunks_for(arr) -> tuple[int, ...] | None:
+    w = MiniH5Writer()
+    w.create_group(base)
+    for path, arr in datasets.items():
         if compression is None or arr.size == 0 or len(arr) <= chunk_rows:
-            return None
-        return (chunk_rows,) + arr.shape[1:]
-
-    if h5py is not None:  # pragma: no cover - h5py absent in CI image
-        with h5py.File(h5_path, "w") as h5:
-            for path, arr in datasets.items():
-                ck = _chunks_for(arr)
-                if ck is None:
-                    h5.create_dataset(path, data=arr)
-                else:
-                    h5.create_dataset(
-                        path, data=arr, chunks=ck,
-                        compression="gzip", shuffle=True,
-                    )
-            for path, a in attrs.items():
-                target = h5.require_group(path) if path not in h5 else h5[path]
-                for k, v in a.items():
-                    target.attrs[k] = v
-    else:
-        from parquet_converters_spark.sinks.hdf5_minimal import MiniH5Writer
-
-        w = MiniH5Writer()
-        w.create_group(base)
-        for path, arr in datasets.items():
-            ck = _chunks_for(arr)
-            if ck is None:
-                w.create_dataset(path, arr)
-            else:
-                w.create_dataset(
-                    path, arr, chunks=ck, compression="gzip", shuffle=True
-                )
-        for path, a in attrs.items():
-            for k, v in a.items():
-                w.set_attr(path, k, v)
-        w.write(h5_path)
-
-
+            w.create_dataset(path, arr)
+        else:
+            w.create_dataset(
+                path, arr, chunks=(chunk_rows,) + arr.shape[1:],
+                compression=compression, shuffle=True,
+            )
+    for path, a in attrs.items():
+        for k, v in a.items():
+            w.set_attr(path, k, v)
+    w.write(h5_path)
 
 
 def _edge_column_dtypes(spark, table_path: str, schema, manifest) -> list:
@@ -614,11 +584,111 @@ def _fill_file(target: str, task) -> tuple[int, int]:
     return source, written
 
 
+
+
+def _fill_chunks(target: str, task, addrs: dict) -> tuple[int, int]:
+    """Write one spill file's compressed chunks into the ``.h5`` at
+    ``target``, each at the chunk address the skeleton published in
+    ``addrs[dataset][chunk index]``: ``task`` is (source index, spill
+    file).  Returns (source index, chunks written)."""
+    import pyarrow.parquet as pq
+
+    source, path = task
+    written = 0
+    with open(target, "r+b") as fh:
+        for batch in pq.ParquetFile(path).iter_batches(
+            batch_size=64, columns=["ds", "chunk_idx", "blob"]
+        ):
+            for ds, ci, blob in zip(
+                *(batch.column(c).to_pylist() for c in batch.schema.names)
+            ):
+                fh.seek(addrs[ds][ci])
+                fh.write(blob)
+                written += 1
+        fh.flush()
+        os.fsync(fh.fileno())
+    return source, written
+
+
+def _compress_source(
+    spark, path: str, key_col: str, specs, n_rows: int, c: int, out: str
+) -> None:
+    """Compress pass for one source table: one shuffle on ``key DIV c``
+    groups its rows into ``c``-row chunks, and one output row per
+    (dataset, chunk) goes to the parquet spill at ``out``."""
+    import numpy as np
+
+    specs_ser = [(ds, list(cols), dt.str) for cols, ds, dt in specs]
+
+    def compress(pdf):
+        import zlib
+
+        import pandas as pd
+
+        chunk_id = int(pdf["_chunk"].iloc[0])
+        lo, hi = chunk_id * c, min(chunk_id * c + c, n_rows)
+        idx = pdf[key_col].to_numpy(np.int64)
+        if idx.min() < lo or idx.max() >= hi:
+            raise ValueError(
+                f"{path}: {key_col} outside chunk [{lo}, {hi}) or "
+                "dataset extent"
+            )
+        # bounds + count alone can't catch a duplicate paired with an
+        # interior hole (e.g. [0,1,1,3]): the dup position would be
+        # written twice and the hole silently stay zero
+        if not np.array_equal(np.sort(idx), np.arange(lo, hi)):
+            raise ValueError(
+                f"{path}: chunk {chunk_id} keys are not dense/unique "
+                f"over [{lo}, {hi})"
+            )
+        pos = idx - lo
+        rows = []
+        for ds, cols, dt_str in specs_ser:
+            dt = np.dtype(dt_str)
+            full = np.zeros((c,) if len(cols) == 1 else (c, len(cols)), dt)
+            for j, col in enumerate(cols):
+                vals = (
+                    np.array(_encode_str_values(pdf[col], col), dtype=dt)
+                    if dt.kind == "S"
+                    else pdf[col].to_numpy(dt)
+                )
+                full.reshape(c, -1)[pos, j] = vals
+            # shuffle then deflate: the exact filter order and
+            # parameters of hdf5_minimal's _Dataset.chunk_blobs
+            blob = (
+                np.frombuffer(full.tobytes(), np.uint8)
+                .reshape(-1, dt.itemsize)
+                .T.tobytes()
+            )
+            blob = zlib.compress(blob, 6)
+            # the explicit size column is what keeps the driver's layout
+            # read metadata-cheap: parquet cannot serve value lengths
+            # without decoding the values
+            rows.append((ds, chunk_id, len(blob), blob))
+        return pd.DataFrame(rows, columns=["ds", "chunk_idx", "size", "blob"])
+
+    need = sorted({key_col} | {col for cols, _, _ in specs for col in cols})
+    (
+        spark.read.parquet(path)
+        .select(*need)
+        .withColumn("_chunk", F.expr(f"CAST(`{key_col}` DIV {c} AS LONG)"))
+        .groupBy("_chunk")
+        .applyInPandas(
+            compress, "ds string, chunk_idx long, size long, blob binary"
+        )
+        .write.mode("overwrite")
+        .parquet(out)
+    )
+
+
 def export_hdf5_parallel(
     spark,
     bundle_dir: str,
     population: str,
     h5_path: str,
+    compression: str | None = None,
+    chunk_rows: int | None = None,
+    spill_dir: str | None = None,
 ) -> int:
     """Parallel SONATA ``.h5`` export: the driver writes ONLY the file
     skeleton (superblock, group structures, dataset object headers,
@@ -650,6 +720,25 @@ def export_hdf5_parallel(
     bounds-checked before any seek, every task fsyncs, and the rows
     written per source must add up to its dataset length.
 
+    ``compression="gzip"`` writes every dataset longer than
+    ``chunk_rows`` chunked with shuffle+deflate — a layout the reference
+    cannot write in parallel at all, since compression makes the
+    per-rank offsets data-dependent.  Shorter datasets stay contiguous
+    and go through the same fill.  The chunk sizes are resolved in two
+    passes: a compress pass groups each long source's rows into
+    ``chunk_rows``-row chunks (one shuffle on ``key DIV chunk_rows``;
+    chunks straddle bundle files), zero-pads edge chunks, applies
+    shuffle+deflate and spills ``(dataset, chunk_idx, size, blob)`` to
+    parquet; the driver reads only the size column, lays out the
+    B-trees from the sizes alone, and the fill job's tasks then pwrite
+    each spilled blob at its published chunk address.  Each chunk's
+    keys must be dense and unique.  ``chunk_rows`` defaults to
+    :func:`_auto_chunk_rows`, which caps the driver's O(chunks) lists at
+    ~1M entries per dataset.  ``spill_dir`` must be on storage all
+    executors share (default: next to the output); the spill is a fresh
+    subdirectory of it, removed on success and kept on failure for
+    debugging.
+
     Requires all executors to share the target filesystem with the
     driver (local mode, or a cluster on GPFS/Lustre/NFS) — the same
     deployment requirement as the reference's MPI-IO writer.  String
@@ -657,9 +746,13 @@ def export_hdf5_parallel(
     more job over the table files; a NULL or non-string value raises.
 
     Returns the number of edge rows written.  The result is
-    byte-identical to the single-writer :func:`export_hdf5` output
-    (``tests/test_hdf5_export.py``).
+    byte-identical to :func:`export_hdf5` with the same ``compression``
+    and ``chunk_rows`` (``tests/test_hdf5_export.py``).
     """
+    import logging
+    import shutil
+    import uuid
+
     import numpy as np
     import pyarrow.parquet as pq
 
@@ -669,24 +762,24 @@ def export_hdf5_parallel(
         file_row_counts,
     )
 
+    if compression not in (None, "gzip"):
+        raise ValueError(f"unsupported compression {compression!r}")
     pop_dir = os.path.join(bundle_dir, "edges", population)
     with open(os.path.join(pop_dir, "attributes.json")) as f:
         manifest = json.load(f)
     base = f"/edges/{population}"
 
-    # sources: ((files, rows per file, key col), [(value cols, dataset
-    # path, numpy dtype)]).  Edge columns are 1-wide; the adjacency
-    # indices are (n, 2) with the dense key AS the row number.
-    def source(path, key_col):
-        files = _sorted_files(path)
-        return files, file_row_counts(files), key_col
-
+    # sources: (parquet dir, files, key col, [(value cols, dataset path,
+    # numpy dtype)]).  Edge columns are 1-wide; the adjacency indices are
+    # (n, 2) with the dense key AS the row number.
     table_path = os.path.join(pop_dir, "table.parquet")
-    table = source(table_path, manifest["row_index_column"])
-    schema = pq.ParquetFile(table[0][0]).schema_arrow
+    table_files = _sorted_files(table_path)
+    schema = pq.ParquetFile(table_files[0]).schema_arrow
     sources = [
         (
-            table,
+            table_path,
+            table_files,
+            manifest["row_index_column"],
             [
                 ((name,), _dataset_path(base, name, manifest), np_dtype)
                 for name, np_dtype in _edge_column_dtypes(
@@ -700,394 +793,132 @@ def export_hdf5_parallel(
         if not os.path.isdir(d):
             continue
         for fname, (key, cols) in _INDEX_COLS.items():
-            src = source(os.path.join(d, f"{fname}.parquet"), key)
+            path = os.path.join(d, f"{fname}.parquet")
+            files = _sorted_files(path)
             dt = np.dtype(
-                pq.ParquetFile(src[0][0])
+                pq.ParquetFile(files[0])
                 .schema_arrow.field(cols[0])
                 .type.to_pandas_dtype()
             )
-            sources.append(
-                (src, [(cols, f"{base}/indices/{direction}/{fname}", dt)])
-            )
+            ds = f"{base}/indices/{direction}/{fname}"
+            sources.append((path, files, key, [(cols, ds, dt)]))
+    rows = [sum(file_row_counts(files)) for _, files, _, _ in sources]
 
-    datasets, attrs = _gather_small_datasets(
-        pop_dir, base, manifest, include_indices=False
-    )
-    w = MiniH5Writer()
-    w.create_group(base)
-    for path, arr in datasets.items():
-        w.create_dataset(path, arr)
-    for (_, counts, _), specs in sources:
-        for cols, ds_path, dt in specs:
-            n = sum(counts)
-            w.create_placeholder(
-                ds_path, (n,) if len(cols) == 1 else (n, len(cols)), dt
-            )
-    for path, a in attrs.items():
-        for k, v in a.items():
-            w.set_attr(path, k, v)
-    w.write(h5_path)
-
-    tasks = [
-        (
-            i,
-            f,
-            key_col,
-            [
-                (cols, w.data_offsets[ds]["offset"], w.data_offsets[ds]["dtype"])
-                for cols, ds, _ in specs
-            ],
-            sum(counts),
-        )
-        for i, ((files, counts, key_col), specs) in enumerate(sources)
-        for f in files
-    ]
-    target = os.path.abspath(h5_path)
-    got = [0] * len(sources)
-    for i, n in (
-        spark.sparkContext.parallelize(tasks, len(tasks))
-        .map(lambda task: _fill_file(target, task))
-        .collect()
-    ):
-        got[i] += n
-    for ((files, counts, _), _), n in zip(sources, got):
-        if n != sum(counts):
-            raise RuntimeError(
-                f"parallel HDF5 export wrote {n} rows of "
-                f"{os.path.dirname(files[0])}, expected {sum(counts)}"
-            )
-    return got[0]
-
-
-def export_hdf5_parallel_compressed(
-    spark,
-    bundle_dir: str,
-    population: str,
-    h5_path: str,
-    chunk_rows: int | None = None,
-    spill_dir: str | None = None,
-) -> int:
-    """Parallel COMPRESSED SONATA ``.h5`` export — the two-pass variant
-    of :func:`export_hdf5_parallel` for the chunked+shuffle+deflate
-    layout, a capability the reference does NOT have (its MPI-IO
-    hyperslab writes require the uncompressed contiguous layout,
-    ``src/circuit/sonata_file.cpp:98-143`` — compression would make the
-    per-rank offsets data-dependent).
-
-    The data-dependent chunk sizes are resolved with the same two-pass
-    offsets pattern the engine already uses for its prefix sums
-    (operators A3):
-
-    1. **compress pass** — executors group each dataset's rows into
-       ``chunk_rows``-row chunks (one shuffle on ``key DIV chunk_rows``
-       per source table), zero-pad edge chunks, apply shuffle+deflate,
-       and spill ``(dataset, chunk_idx, blob)`` to parquet;
-    2. the driver reads ONLY the ``(dataset, chunk_idx, size)`` columns
-       of the spill (O(total chunks) rows — at 1e9 edge rows and 64Ki
-       chunks that is ~15k rows per column), lays out the whole file
-       skeleton with :meth:`MiniH5Writer.create_chunked_placeholder`
-       (B-tree built from the sizes alone), and writes it;
-    3. **fill pass** — executors re-read the spill and pwrite every blob
-       at its published chunk address; disjoint byte ranges, lock-free,
-       exactly like the uncompressed fill.
-
-    Output is **byte-identical** to the single-writer
-    ``export_hdf5(compression="gzip", chunk_rows=...)`` (same zlib level,
-    same shuffle transpose, same grid, same tree-sorted address
-    assignment).  Datasets of at most ``chunk_rows`` rows stay
-    contiguous (the single writer's rule) and are written driver-side —
-    by definition they are metadata-scale.
-
-    ``spill_dir`` must be on storage all executors share (default: next
-    to the output, which already has that requirement).  The spill is
-    always a fresh unique SUBDIRECTORY created under ``spill_dir`` — a
-    caller-supplied directory is never overwritten or deleted, only the
-    subdirectory this call created is, and only on SUCCESS (a failed
-    export keeps its partial spill for debugging).  ``chunk_rows``
-    defaults to :func:`_auto_chunk_rows` (64Ki, doubling past 64Ki·1M
-    rows), which caps the O(chunks) driver lists and the pass-3 address
-    broadcast at ~1M entries per dataset regardless of table size; pass
-    an explicit value only to match a foreign file's layout.
-
-    Returns the number of edge rows written.
-    """
-    import shutil
-
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    from parquet_converters_spark.sinks.hdf5_minimal import MiniH5Writer
-    from parquet_converters_spark.sources.ordering import (
-        _sorted_files,
-        file_row_counts,
-    )
-
-    pop_dir = os.path.join(bundle_dir, "edges", population)
-    with open(os.path.join(pop_dir, "attributes.json")) as f:
-        manifest = json.load(f)
-    base = f"/edges/{population}"
-    row_col = manifest["row_index_column"]
-
-    def table_meta(path):
-        files = _sorted_files(path)
-        return sum(file_row_counts(files)), pq.ParquetFile(files[0]).schema_arrow
-
-    table_path = os.path.join(pop_dir, "table.parquet")
-    n_rows, schema = table_meta(table_path)
-    if chunk_rows is None:
-        chunk_rows = _auto_chunk_rows(n_rows)
-    big = _edge_column_dtypes(spark, table_path, schema, manifest)
-
-    # jobs: (parquet path, key col, [(ds_path, cols, dtype)], n_rows)
-    jobs = []
-    edge_specs = [
-        (_dataset_path(base, name, manifest), (name,), dt)
-        for name, dt in big
-    ]
-    jobs.append((table_path, row_col, edge_specs, n_rows))
-    for direction in ("source_to_target", "target_to_source"):
-        d = os.path.join(pop_dir, "indices", direction)
-        if not os.path.isdir(d):
-            continue
-        for fname, (key, cols) in _INDEX_COLS.items():
-            p = os.path.join(d, f"{fname}.parquet")
-            n_i, sch_i = table_meta(p)
-            dt_i = np.dtype(sch_i.field(cols[0]).type.to_pandas_dtype())
-            jobs.append(
-                (p, key,
-                 [(f"{base}/indices/{direction}/{fname}", tuple(cols), dt_i)],
-                 n_i)
-            )
-
-    # split: datasets above one chunk go two-pass; the rest (metadata-
-    # scale by definition) are read driver-side, matching the single
-    # writer's contiguous rule exactly
-    chunked_jobs = [j for j in jobs if j[3] > chunk_rows]
-    small_jobs = [j for j in jobs if j[3] <= chunk_rows]
-
-    import uuid
-
+    # gzip: the sources longer than one chunk go through the compress
+    # pass (the single writer's chunking rule); everything else is a
+    # contiguous dataset filled straight from the bundle files
+    c = None
+    if compression is not None:
+        c = int(chunk_rows or _auto_chunk_rows(rows[0]))
+    chunked = {i for i, n in enumerate(rows) if c is not None and n > c}
     # a fresh unique subdirectory: never clobber (or later delete)
     # anything the caller owns, and never collide with a concurrent
     # export to a sibling file
     spill = os.path.join(
         spill_dir or (h5_path + ".spill"), f"run-{uuid.uuid4().hex}"
     )
-    c = int(chunk_rows)
-
-    def run_compress(parquet_path, key_col, specs, n_i, mode):
-        """Pass 1 for one source table: one shuffle on key DIV c, one
-        output row per (dataset, chunk)."""
-        specs_ser = [
-            (ds, list(cols), dt.str) for ds, cols, dt in specs
-        ]
-
-        def compress(pdf):
-            import zlib
-
-            import pandas as pd
-
-            chunk_id = int(pdf["_chunk"].iloc[0])
-            lo = chunk_id * c
-            idx = pdf[key_col].to_numpy(np.int64)
-            if idx.min() < lo or idx.max() >= min(lo + c, n_i):
-                raise ValueError(
-                    f"{parquet_path}: {key_col} outside chunk "
-                    f"[{lo}, {min(lo + c, n_i)}) or dataset extent"
-                )
-            if len(idx) != min(lo + c, n_i) - lo:
-                raise ValueError(
-                    f"{parquet_path}: chunk {chunk_id} has {len(idx)} "
-                    f"rows, expected {min(lo + c, n_i) - lo} — keys are "
-                    "not dense/unique"
-                )
-            # bounds + count alone can't catch a duplicate paired with
-            # an interior hole (e.g. [0,1,1,3]): the dup position would
-            # be written twice and the hole silently stay zero.  Check
-            # density explicitly.
-            if not np.array_equal(
-                np.sort(idx), np.arange(lo, min(lo + c, n_i))
-            ):
-                raise ValueError(
-                    f"{parquet_path}: chunk {chunk_id} keys are not "
-                    f"dense/unique over [{lo}, {min(lo + c, n_i)})"
-                )
-            pos = idx - lo
-            rows = []
-            for ds, cols, dt_str in specs_ser:
-                dt = np.dtype(dt_str)
-                full = np.zeros(
-                    (c,) if len(cols) == 1 else (c, len(cols)), dtype=dt
-                )
-                for j, col in enumerate(cols):
-                    vals = (
-                        np.array(_encode_str_values(pdf[col], col), dtype=dt)
-                        if dt.kind == "S"
-                        else pdf[col].to_numpy(dt)
-                    )
-                    if len(cols) == 1:
-                        full[pos] = vals
-                    else:
-                        full[pos, j] = vals
-                blob = full.tobytes()
-                # shuffle then deflate: the exact filter order and
-                # parameters of _Dataset.chunk_blobs
-                blob = (
-                    np.frombuffer(blob, np.uint8)
-                    .reshape(-1, dt.itemsize)
-                    .T.tobytes()
-                )
-                blob = zlib.compress(blob, 6)
-                # the explicit size column is what keeps the driver's
-                # layout pass metadata-cheap: parquet cannot serve value
-                # lengths without decoding the values, so selecting
-                # octet_length(blob) would re-scan every compressed byte
-                rows.append((ds, chunk_id, len(blob), blob))
-            return pd.DataFrame(
-                rows, columns=["ds", "chunk_idx", "size", "blob"]
-            )
-
-        need = sorted(
-            {key_col} | {col for _, cols, _ in specs for col in cols}
-        )
-        (
-            spark.read.parquet(parquet_path)
-            .select(*need)
-            .withColumn(
-                "_chunk", F.expr(f"CAST(`{key_col}` DIV {c} AS LONG)")
-            )
-            .groupBy("_chunk")
-            .applyInPandas(
-                compress,
-                "ds string, chunk_idx long, size long, blob binary",
-            )
-            .write.mode(mode)
-            .parquet(spill)
-        )
-
     try:
-        mode = "overwrite"
-        for parquet_path, key_col, specs, n_i in chunked_jobs:
-            run_compress(parquet_path, key_col, specs, n_i, mode)
-            mode = "append"
+        sizes: dict[str, dict[int, int]] = {}
+        for i in sorted(chunked):
+            path, _, key_col, specs = sources[i]
+            out = os.path.join(spill, str(i))
+            _compress_source(spark, path, key_col, specs, rows[i], c, out)
+            # driver: sizes only (never the blobs)
+            t = pq.read_table(out, columns=["ds", "chunk_idx", "size"])
+            for ds, ci, size in zip(*t.to_pydict().values()):
+                sizes.setdefault(ds, {})[ci] = size
 
-        # driver: sizes only (never the blobs)
-        sizes_by_ds: dict[str, dict[int, int]] = {}
-        if chunked_jobs:
-            for r in (
-                spark.read.parquet(spill)
-                .select("ds", "chunk_idx", "size")
-                .collect()
-            ):
-                sizes_by_ds.setdefault(r["ds"], {})[int(r["chunk_idx"])] = int(
-                    r["size"]
-                )
-
-        # skeleton: small datasets + attrs driver-side, chunked
-        # placeholders for the rest
         datasets, attrs = _gather_small_datasets(
             pop_dir, base, manifest, include_indices=False
         )
         w = MiniH5Writer()
         w.create_group(base)
         for path, arr in datasets.items():
-            # single-writer chunking rule applies to gathered datasets
-            # too (an @library beyond one chunk gets chunked+gzip there;
-            # byte-parity requires the same here)
-            if arr.size > 0 and len(arr) > c:
+            # the single writer's chunking rule applies to the gathered
+            # datasets too (an @library beyond one chunk)
+            if c is not None and arr.size > 0 and len(arr) > c:
                 w.create_dataset(
                     path, arr, chunks=(c,) + arr.shape[1:],
-                    compression="gzip", shuffle=True,
+                    compression=compression, shuffle=True,
                 )
             else:
                 w.create_dataset(path, arr)
-        for parquet_path, key_col, specs, n_i in small_jobs:
-            t = pq.read_table(parquet_path).sort_by(key_col)
-            for ds, cols, dt in specs:
-                mats = [
-                    np.asarray(
-                        _encode_str_values(t.column(col).to_pylist(), col),
-                        dtype=dt,
-                    )
-                    if dt.kind == "S"
-                    else t.column(col).to_numpy().astype(dt, copy=False)
-                    for col in cols
-                ]
-                arr = (
-                    mats[0]
-                    if len(mats) == 1
-                    else np.ascontiguousarray(np.stack(mats, axis=1))
-                )
-                w.create_dataset(ds, arr)
-        for parquet_path, key_col, specs, n_i in chunked_jobs:
-            for ds, cols, dt in specs:
-                n_chunks = -(-n_i // c)
-                got = sizes_by_ds.get(ds, {})
+        for i, (_, _, _, specs) in enumerate(sources):
+            for cols, ds, dt in specs:
+                shape = (rows[i],) if len(cols) == 1 else (rows[i], len(cols))
+                if i not in chunked:
+                    w.create_placeholder(ds, shape, dt)
+                    continue
+                n_chunks = -(-rows[i] // c)
+                got = sizes.get(ds, {})
                 if sorted(got) != list(range(n_chunks)):
                     raise RuntimeError(
                         f"compress pass produced {len(got)} chunks for "
                         f"{ds}, expected {n_chunks} dense chunk ids"
                     )
-                shape = (n_i,) if len(cols) == 1 else (n_i, len(cols))
-                chunks = (c,) if len(cols) == 1 else (c, len(cols))
                 w.create_chunked_placeholder(
-                    ds, shape, dt, chunks,
-                    [got[i] for i in range(n_chunks)],
-                    compression="gzip", shuffle=True,
+                    ds, shape, dt, (c,) + shape[1:],
+                    [got[k] for k in range(n_chunks)],
+                    compression=compression, shuffle=True,
                 )
         for path, a in attrs.items():
             for k, v in a.items():
                 w.set_attr(path, k, v)
         w.write(h5_path)
 
-        if chunked_jobs:
-            addr_map = {
-                ds: w.data_offsets[ds]["chunk_addrs"]
-                for _, _, specs, _ in chunked_jobs
-                for ds, _, _ in specs
-            }
-            b_addr = spark.sparkContext.broadcast(addr_map)
-            target = os.path.abspath(h5_path)
-
-            def fill(batches):
-                import pandas as pd
-
-                written = 0
-                with open(target, "r+b") as fh:
-                    for pdf in batches:
-                        for ds, ci, blob in zip(
-                            pdf["ds"], pdf["chunk_idx"], pdf["blob"]
-                        ):
-                            fh.seek(b_addr.value[ds][int(ci)])
-                            fh.write(bytes(blob))
-                            written += 1
-                    fh.flush()
-                    os.fsync(fh.fileno())
-                yield pd.DataFrame({"chunks_written": [written]})
-
-            total = (
-                spark.read.parquet(spill)
-                .mapInPandas(fill, "chunks_written long")
-                .agg(F.sum("chunks_written").alias("n"))
-                .collect()[0]["n"]
-            ) or 0
-            want = sum(len(v) for v in sizes_by_ds.values())
-            if total != want:
+        # one fill job: a task per bundle file of the contiguous sources
+        # and per spill file of the chunked ones
+        tasks, offsets = [], w.data_offsets
+        for i, (_, files, key_col, specs) in enumerate(sources):
+            if i in chunked:
+                spilled = _sorted_files(os.path.join(spill, str(i)))
+                tasks += [(True, (i, f)) for f in spilled]
+                continue
+            layout = [
+                (cols, offsets[ds]["offset"], offsets[ds]["dtype"])
+                for cols, ds, _ in specs
+            ]
+            tasks += [(False, (i, f, key_col, layout, rows[i])) for f in files]
+        addrs = None
+        if chunked:
+            addrs = spark.sparkContext.broadcast(
+                {
+                    ds: offsets[ds]["chunk_addrs"]
+                    for i in chunked
+                    for _, ds, _ in sources[i][3]
+                }
+            )
+        target = os.path.abspath(h5_path)
+        got = [0] * len(sources)
+        for i, n in (
+            spark.sparkContext.parallelize(tasks, len(tasks))
+            .map(
+                lambda task: _fill_chunks(target, task[1], addrs.value)
+                if task[0]
+                else _fill_file(target, task[1])
+            )
+            .collect()
+        ):
+            got[i] += n
+        for i, (path, _, _, specs) in enumerate(sources):
+            want, unit = rows[i], "rows"
+            if i in chunked:
+                want, unit = len(specs) * -(-rows[i] // c), "chunks"
+            if got[i] != want:
                 raise RuntimeError(
-                    f"parallel compressed export wrote {total} chunks, "
+                    f"parallel HDF5 export wrote {got[i]} {unit} of {path}, "
                     f"expected {want}"
                 )
     except BaseException:
-        # keep the partial spill for debugging; tell the user where
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "parallel compressed export failed; partial spill kept at %s",
-            spill,
-        )
+        if chunked:
+            logging.getLogger(__name__).warning(
+                "parallel HDF5 export failed; partial spill kept at %s",
+                spill,
+            )
         raise
-    shutil.rmtree(spill, ignore_errors=True)
-    parent = h5_path + ".spill"
-    if spill_dir is None and os.path.isdir(parent) and not os.listdir(parent):
-        os.rmdir(parent)
-    return n_rows
+    if chunked:
+        shutil.rmtree(spill, ignore_errors=True)
+        parent = h5_path + ".spill"
+        if spill_dir is None and not os.listdir(parent):
+            os.rmdir(parent)
+    return rows[0]

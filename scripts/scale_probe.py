@@ -47,7 +47,6 @@ def hdf5_benches(spark, sf_dir: str, wanted: list[str]) -> dict[str, float]:
     from parquet_converters_spark.sinks.sonata import (
         SonataBundleWriter,
         export_hdf5_parallel,
-        export_hdf5_parallel_compressed,
     )
     from parquet_converters_spark.sources.ordering import with_global_row_index
     from parquet_converters_spark.sources.sonata_h5 import (
@@ -75,8 +74,8 @@ def hdf5_benches(spark, sf_dir: str, wanted: list[str]) -> dict[str, float]:
             )
         if "hdf5_compressed_export" in wanted:
             out["hdf5_compressed_export"] = timed(
-                lambda: export_hdf5_parallel_compressed(
-                    spark, bundle, "bench", gz
+                lambda: export_hdf5_parallel(
+                    spark, bundle, "bench", gz, compression="gzip"
                 )
             )
         if "hdf5_distributed_read" in wanted:

@@ -53,6 +53,9 @@ export_hdf5(bundle, "p", single)
 export_hdf5_parallel(spark, bundle, "p", par)
 check("parallel h5 byte-identical", open(single, "rb").read() == open(par, "rb").read())
 export_hdf5(bundle, "p", gz, compression="gzip")
+pgz = os.path.join(tmp, "pgz.h5")
+export_hdf5_parallel(spark, bundle, "p", pgz, compression="gzip")
+check("parallel gzip h5 byte-identical", open(gz, "rb").read() == open(pgz, "rb").read())
 from parquet_converters_spark.sources.sonata_h5 import read_sonata_edges
 def _norm_rows(df):
     out = []

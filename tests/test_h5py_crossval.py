@@ -51,7 +51,6 @@ def _export_all_paths(spark, bundle, population, tmp_path, tag):
     from parquet_converters_spark.sinks.sonata import (
         export_hdf5,
         export_hdf5_parallel,
-        export_hdf5_parallel_compressed,
     )
 
     paths = {}
@@ -65,8 +64,8 @@ def _export_all_paths(spark, bundle, population, tmp_path, tag):
     export_hdf5_parallel(spark, bundle, population, p)
     paths["parallel"] = p
     p = str(tmp_path / f"{tag}_pargz.h5")
-    export_hdf5_parallel_compressed(
-        spark, bundle, population, p, chunk_rows=64
+    export_hdf5_parallel(
+        spark, bundle, population, p, compression="gzip", chunk_rows=64
     )
     paths["parallel_compressed"] = p
     return paths

@@ -929,9 +929,7 @@ def test_parallel_compressed_export_byte_identical(spark, bundle, tmp_path):  # 
     layout -> pwrite at published addresses) must be byte-identical to
     the single-writer gzip export — a capability the reference does not
     have (its MPI-IO hyperslabs require the uncompressed layout)."""
-    from parquet_converters_spark.sinks.sonata import (
-        export_hdf5_parallel_compressed,
-    )
+    from parquet_converters_spark.sinks.sonata import export_hdf5_parallel
     from parquet_converters_spark.sources.sonata_h5 import (
         read_sonata_edges,
         read_sonata_edges_distributed,
@@ -941,8 +939,8 @@ def test_parallel_compressed_export_byte_identical(spark, bundle, tmp_path):  # 
     single = str(tmp_path / "s.h5")
     par = str(tmp_path / "p.h5")
     export_hdf5(out, "edges_test", single, compression="gzip", chunk_rows=64)
-    n = export_hdf5_parallel_compressed(
-        spark, out, "edges_test", par, chunk_rows=64
+    n = export_hdf5_parallel(
+        spark, out, "edges_test", par, compression="gzip", chunk_rows=64
     )
     assert n == table.num_rows
     with open(single, "rb") as a, open(par, "rb") as b:
@@ -969,7 +967,7 @@ def test_parallel_compressed_export_strings_and_small(spark, tmp_path):
 
     from parquet_converters_spark.sinks.sonata import (
         export_hdf5,
-        export_hdf5_parallel_compressed,
+        export_hdf5_parallel,
     )
 
     n = 1_000
@@ -1007,8 +1005,9 @@ def test_parallel_compressed_export_strings_and_small(spark, tmp_path):
     par = str(tmp_path / "p.h5")
     export_hdf5(str(tmp_path / "bundle"), "p", single,
                 compression="gzip", chunk_rows=128)
-    assert export_hdf5_parallel_compressed(
-        spark, str(tmp_path / "bundle"), "p", par, chunk_rows=128
+    assert export_hdf5_parallel(
+        spark, str(tmp_path / "bundle"), "p", par,
+        compression="gzip", chunk_rows=128,
     ) == n
     with open(single, "rb") as a, open(par, "rb") as b:
         assert a.read() == b.read()
@@ -1023,9 +1022,7 @@ def test_parallel_compressed_export_rejects_sparse_keys(spark, tmp_path):
 
     import pandas as pd
 
-    from parquet_converters_spark.sinks.sonata import (
-        export_hdf5_parallel_compressed,
-    )
+    from parquet_converters_spark.sinks.sonata import export_hdf5_parallel
 
     n = 300
     idx = np.arange(n, dtype="int64")
@@ -1055,9 +1052,9 @@ def test_parallel_compressed_export_rejects_sparse_keys(spark, tmp_path):
     }
     (pop_dir / "attributes.json").write_text(_json.dumps(manifest))
     with pytest.raises(Exception, match="outside chunk|dense"):
-        export_hdf5_parallel_compressed(
+        export_hdf5_parallel(
             spark, str(tmp_path / "bundle"), "p", str(tmp_path / "x.h5"),
-            chunk_rows=64,
+            compression="gzip", chunk_rows=64,
         )
 
 
@@ -1115,7 +1112,7 @@ def test_parallel_compressed_export_small_table_matches_single(
 
     from parquet_converters_spark.sinks.sonata import (
         export_hdf5,
-        export_hdf5_parallel_compressed,
+        export_hdf5_parallel,
     )
 
     n = 50
@@ -1148,8 +1145,9 @@ def test_parallel_compressed_export_small_table_matches_single(
     par = str(tmp_path / "p.h5")
     export_hdf5(str(tmp_path / "bundle"), "p", single,
                 compression="gzip", chunk_rows=128)
-    assert export_hdf5_parallel_compressed(
-        spark, str(tmp_path / "bundle"), "p", par, chunk_rows=128
+    assert export_hdf5_parallel(
+        spark, str(tmp_path / "bundle"), "p", par,
+        compression="gzip", chunk_rows=128,
     ) == n
     with open(single, "rb") as a, open(par, "rb") as b:
         assert a.read() == b.read()
@@ -1275,7 +1273,7 @@ def test_parallel_compressed_export_large_library(spark, tmp_path):
 
     from parquet_converters_spark.sinks.sonata import (
         export_hdf5,
-        export_hdf5_parallel_compressed,
+        export_hdf5_parallel,
     )
 
     n = 500
@@ -1318,8 +1316,9 @@ def test_parallel_compressed_export_large_library(spark, tmp_path):
     par = str(tmp_path / "p.h5")
     export_hdf5(str(tmp_path / "bundle"), "p", single,
                 compression="gzip", chunk_rows=64)
-    assert export_hdf5_parallel_compressed(
-        spark, str(tmp_path / "bundle"), "p", par, chunk_rows=64
+    assert export_hdf5_parallel(
+        spark, str(tmp_path / "bundle"), "p", par,
+        compression="gzip", chunk_rows=64,
     ) == n
     with open(single, "rb") as a, open(par, "rb") as b:
         assert a.read() == b.read()
@@ -1570,9 +1569,7 @@ def test_compressed_export_rejects_duplicate_key_with_hole(spark, tmp_path):
     hole silently stay zero)."""
     import pandas as pd
 
-    from parquet_converters_spark.sinks.sonata import (
-        export_hdf5_parallel_compressed,
-    )
+    from parquet_converters_spark.sinks.sonata import export_hdf5_parallel
 
     n = 300
     idx = np.arange(n, dtype="int64")
@@ -1587,8 +1584,9 @@ def test_compressed_export_rejects_duplicate_key_with_hole(spark, tmp_path):
     )
     bundle_dir = _tiny_bundle(spark, tmp_path, tbl)
     with pytest.raises(Exception, match="dense/unique"):
-        export_hdf5_parallel_compressed(
-            spark, bundle_dir, "p", str(tmp_path / "x.h5"), chunk_rows=64
+        export_hdf5_parallel(
+            spark, bundle_dir, "p", str(tmp_path / "x.h5"),
+            compression="gzip", chunk_rows=64,
         )
 
 
@@ -1601,7 +1599,6 @@ def test_null_string_rejected_every_export_path(spark, tmp_path):
     from parquet_converters_spark.sinks.sonata import (
         export_hdf5,
         export_hdf5_parallel,
-        export_hdf5_parallel_compressed,
     )
 
     n = 300
@@ -1621,8 +1618,9 @@ def test_null_string_rejected_every_export_path(spark, tmp_path):
     with pytest.raises(Exception, match="NULL|non-string"):
         export_hdf5_parallel(spark, bundle_dir, "p", str(tmp_path / "p.h5"))
     with pytest.raises(Exception, match="NULL|non-string"):
-        export_hdf5_parallel_compressed(
-            spark, bundle_dir, "p", str(tmp_path / "c.h5"), chunk_rows=64
+        export_hdf5_parallel(
+            spark, bundle_dir, "p", str(tmp_path / "c.h5"),
+            compression="gzip", chunk_rows=64,
         )
 
 

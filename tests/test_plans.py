@@ -446,3 +446,17 @@ def test_multi_branch_consumers_spread_once(spark, sf_dir):
     finally:
         Q._SPREAD_OVERRIDE.clear()
         Q._SPREAD_OVERRIDE.update(saved)
+
+
+def test_registry_order_pinned():
+    """The registry's order is one literal list in queries.py: 213
+    queries in exactly the order they had when the per-round reorder
+    blocks it replaced were deleted."""
+    import hashlib
+
+    from parquet_converters_spark.queries import QUERIES
+
+    assert len(QUERIES) == 213
+    assert hashlib.sha256("\n".join(QUERIES).encode()).hexdigest() == (
+        "2af40dfb4312bd238afd90790269dec0e99fa9a638e7dead6b168a3281cc01d9"
+    )

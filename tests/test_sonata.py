@@ -482,11 +482,16 @@ def test_parquet_to_sonata_job_budget(spark, tmp_path):
     ) == 2
 
 
+# jobs the two-pass compressed export ran on the multi-file bundle below
+# when it was still a separate function from export_hdf5_parallel
+_GZIP_EXPORT_JOBS_BEFORE = 20
+
+
 def test_multi_file_bundle_matches_oracles(spark, tmp_path):
     """With small files the table and both index directions each span
     several files, every file one contiguous sorted key run; the indices
     equal the window-method oracle row for row, and the one-job .h5 fill
-    is byte-identical to the single writer."""
+    is byte-identical to the single writer, contiguous and gzip."""
     import glob as _glob
 
     from parquet_converters_spark.operators import build_adjacency_index
@@ -569,6 +574,44 @@ def test_multi_file_bundle_matches_oracles(spark, tmp_path):
     assert export_hdf5_parallel(spark, out, "p", par) == n
     with open(single, "rb") as a, open(par, "rb") as b:
         assert a.read() == b.read()
+
+    # gzip: 64-row chunks over 100-row files straddle file boundaries
+    single, par = str(tmp_path / "s_gz.h5"), str(tmp_path / "p_gz.h5")
+    export_hdf5(out, "p", single, compression="gzip", chunk_rows=64)
+    n_jobs = _job_count(
+        spark,
+        lambda: export_hdf5_parallel(
+            spark, out, "p", par, compression="gzip", chunk_rows=64
+        ),
+    )
+    with open(single, "rb") as a, open(par, "rb") as b:
+        assert a.read() == b.read()
+    assert n_jobs <= _GZIP_EXPORT_JOBS_BEFORE, n_jobs
+
+
+def test_cli_parquet2sonata_hdf5_matches_single_writer(spark, tmp_path):
+    """``parquet2sonata IN OUT p --hdf5 X`` writes the same bytes as the
+    single writer on the bundle it produced, with and without
+    ``--gzip-h5`` (enough edges that the default 64Ki-row chunking
+    splits the table)."""
+    from parquet_converters_spark.cli import main
+    from parquet_converters_spark.sinks.sonata import export_hdf5
+
+    in_dir, table = _make_edges(
+        tmp_path, n_files=3, n_nodes=1200, avg_connections=140, seed=11
+    )
+    assert table.num_rows > 1 << 16
+    for flags, compression in (([], None), (["--gzip-h5"], "gzip")):
+        tag = compression or "plain"
+        out = str(tmp_path / f"bundle_{tag}")
+        h5 = str(tmp_path / f"cli_{tag}.h5")
+        ref = str(tmp_path / f"ref_{tag}.h5")
+        assert main(
+            ["parquet2sonata", in_dir, out, "p", "--hdf5", h5, *flags]
+        ) == 0
+        export_hdf5(out, "p", ref, compression=compression)
+        with open(h5, "rb") as a, open(ref, "rb") as b:
+            assert a.read() == b.read(), tag
 
 
 def test_empty_edge_table_converts(spark, tmp_path):

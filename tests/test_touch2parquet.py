@@ -168,11 +168,10 @@ def test_cli_end_to_end(spark, tmp_path):
           "-o", out_lim, "-n", "100"])
     assert spark.read.parquet(out_lim).count() == 100
 
-    # --hdf5 --parallel-h5 writes the real .h5 via partition offsets
+    # --hdf5 writes the real .h5 via per-file offset writes
     out_b2 = str(tmp_path / "cli_bundle_h5")
     h5 = str(tmp_path / "cli.h5")
-    rc = main(["parquet2sonata", out_pq, out_b2, "pop",
-               "--hdf5", h5, "--parallel-h5"])
+    rc = main(["parquet2sonata", out_pq, out_b2, "pop", "--hdf5", h5])
     assert rc == 0
     from parquet_converters_spark.sinks.hdf5_minimal import MiniH5Reader
 
