@@ -483,7 +483,7 @@ def bench_audio_seam(spark, timed_runs: int) -> dict[str, float]:
 def bench_hdf5_parallel(spark, sf_dir: str, timed_runs: int) -> dict[str, float]:
     """Time the one genuinely custom physical component — the parallel
     SONATA HDF5 export (per-partition pwrite at precomputed offsets) and
-    the distributed `.h5` ingest — on an sf-proportional synthetic edge
+    the row-slice `.h5` ingest — on an sf-proportional synthetic edge
     bundle derived from lineitem, so regressions in the seek/decode path
     are caught by the same min-of-N harness that protects the queries
     (VERDICT r04 item 5).  Fixture build (bundle write) is untimed."""
@@ -497,9 +497,7 @@ def bench_hdf5_parallel(spark, sf_dir: str, timed_runs: int) -> dict[str, float]
         export_hdf5_parallel,
     )
     from parquet_converters_spark.sources.ordering import with_global_row_index
-    from parquet_converters_spark.sources.sonata_h5 import (
-        read_sonata_edges_distributed,
-    )
+    from parquet_converters_spark.sources.sonata_h5 import read_sonata_edges
 
     tmp = tempfile.mkdtemp(prefix="bench_hdf5_")
     out: dict[str, float] = {}
@@ -529,7 +527,7 @@ def bench_hdf5_parallel(spark, sf_dir: str, timed_runs: int) -> dict[str, float]
             lambda: export_hdf5_parallel(spark, bundle, "bench", h5)
         )
         out["hdf5_distributed_read"] = timed(
-            lambda: read_sonata_edges_distributed(spark, h5, "bench")
+            lambda: read_sonata_edges(spark, h5, "bench")
             .write.format("noop")
             .mode("overwrite")
             .save()

@@ -105,17 +105,13 @@ def main(argv: list[str] | None = None) -> int:
     s2p = sub.add_parser(
         "sonata2parquet",
         help="Convert a SONATA .h5 edge population back to parquet "
-        "(the scale representation)",
+        "(the scale representation): row_index first, then the edge "
+        "columns, one Spark task per row slice (executors must share "
+        "the driver's filesystem)",
     )
     s2p.add_argument("h5_file", help="SONATA HDF5 edge file")
     s2p.add_argument("population", help="Edge population name")
     s2p.add_argument("output", help="Output parquet directory")
-    s2p.add_argument(
-        "--distributed", action="store_true", default=False,
-        help="Read the .h5 with per-partition range reads (driver parses "
-        "metadata only; requires executors to share the filesystem — the "
-        "scale path for big edge files)",
-    )
 
     dd = sub.add_parser(
         "dedup",
@@ -250,20 +246,12 @@ def main(argv: list[str] | None = None) -> int:
         df = touch2parquet(spark, ",".join(args.files), out, limit=args.limit)
         print(f"touch2parquet: wrote {df.count()} records to {out}")
     elif args.cmd == "sonata2parquet":
-        from parquet_converters_spark.sources.sonata_h5 import (
-            read_sonata_edges,
-            read_sonata_edges_distributed,
-        )
+        from parquet_converters_spark.sources.sonata_h5 import read_sonata_edges
 
-        reader = (
-            read_sonata_edges_distributed
-            if args.distributed
-            else read_sonata_edges
-        )
-        df = reader(spark, args.h5_file, args.population)
+        df = read_sonata_edges(spark, args.h5_file, args.population)
         df.write.mode("overwrite").parquet(args.output)
         # count from the written footers (O(files) metadata) — a
-        # df.count() here would re-run the whole distributed decode
+        # df.count() here would re-run the whole row-slice decode
         from parquet_converters_spark.sources.ordering import (
             file_row_counts,
             sorted_parquet_files,

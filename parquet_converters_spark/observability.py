@@ -18,14 +18,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, functions as F
 
+from parquet_converters_spark.operators.touch_transform import (
+    invalid_sections,
+)
+
 
 def observe_conversion(
     df: DataFrame, name: str = "conversion"
 ) -> tuple[Observation | None, DataFrame]:
     """Attach the conversion counters the reference's progress monitor
-    tracks: records seen, validation violations (negative/overflow
-    section ids — ``parquet_writer.cpp:207-219``'s diagnostic), and
-    distinct-ish source breadth (max pre id as a cheap proxy).
+    tracks: records seen, validation violations (the rows
+    ``validate_sections`` rejects — ``parquet_writer.cpp:207-219``'s
+    diagnostic), and distinct-ish source breadth (max pre id as a cheap
+    proxy).
 
     Returns ``(observation, df)``; read ``observation.get`` after the
     first action on ``df``.  On a streaming DataFrame an Observation
@@ -34,10 +39,9 @@ def observe_conversion(
     """
     metrics = [
         F.count(F.lit(1)).alias("n_records"),
-        F.sum(
-            F.when((F.col("pre_section") < 0) | (F.col("post_section") < 0), 1)
-            .otherwise(0)
-        ).alias("n_bad_sections"),
+        F.sum(F.when(invalid_sections(), 1).otherwise(0)).alias(
+            "n_bad_sections"
+        ),
         F.max("pre_neuron_id").alias("max_pre_gid"),
     ]
     if df.isStreaming:

@@ -39,17 +39,23 @@ def unpack_branch_type(branch_type: Column | str) -> tuple[Column, Column]:
     return eff.cast("byte"), aff.cast("byte")
 
 
-def validate_sections(df: DataFrame, strict: bool = True) -> DataFrame:
-    """Validation predicates (P6): section/segment ids must fit int16
-    (``parquet_writer.cpp:207-219`` — the reference hard-errors on
-    ``pre_section`` and warns on the rest; we treat all four uniformly as
-    errors when ``strict``)."""
-    cond = (
+def invalid_sections() -> Column:
+    """The validation predicate (P6): true on a row with a section or
+    segment id above 0x7FFF, the int16 maximum
+    (``parquet_writer.cpp:207-219``)."""
+    return (
         (F.col("pre_section") > SECTION_LIMIT)
         | (F.col("pre_segment") > SECTION_LIMIT)
         | (F.col("post_section") > SECTION_LIMIT)
         | (F.col("post_segment") > SECTION_LIMIT)
     )
+
+
+def validate_sections(df: DataFrame, strict: bool = True) -> DataFrame:
+    """Apply :func:`invalid_sections` — the reference hard-errors on
+    ``pre_section`` and warns on the rest; we treat all four uniformly as
+    errors when ``strict``, and drop the offending rows otherwise."""
+    cond = invalid_sections()
     if strict:
         bad = df.filter(cond).limit(1).collect()
         if bad:

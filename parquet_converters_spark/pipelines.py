@@ -339,8 +339,7 @@ def compare_parquet_h5(
     CI tool ``tests/compare_columns.py``, upgraded from its
     first-10-rows spot check to the FULL table, distributed: both sides
     stream through their scale readers (ordered parquet scan, and the
-    per-partition ``.h5`` range reader — nothing edge-scale touches the
-    driver) and meet in one join on the global row position.
+    row-slice ``.h5`` reader — nothing edge-scale touches the driver) and meet in one join on the global row position.
 
     Compares the columns present on BOTH sides (the reference likewise
     skips columns the parquet lacks), excluding ``row_index``; floats
@@ -356,12 +355,10 @@ def compare_parquet_h5(
     from parquet_converters_spark.sources.ordering import (
         read_parquet_ordered,
     )
-    from parquet_converters_spark.sources.sonata_h5 import (
-        read_sonata_edges_distributed,
-    )
+    from parquet_converters_spark.sources.sonata_h5 import read_sonata_edges
 
     pq_df = read_parquet_ordered(spark, parquet_path)
-    h5_df = read_sonata_edges_distributed(spark, h5_path, population)
+    h5_df = read_sonata_edges(spark, h5_path, population)
     shared = [
         c for c in h5_df.columns
         if c != "row_index" and c in pq_df.columns
@@ -449,8 +446,8 @@ def compare_indices_h5(
     catch a corrupted ``node_id_to_ranges``/``range_to_edge_id``.
 
     Both sides stream through their scale paths — the bundle parquet
-    via a plain Spark scan, the ``.h5`` via the rank-parallel
-    :func:`read_sonata_index_distributed` — and meet in one join on
+    via a plain Spark scan, the ``.h5`` via the row-slice
+    :func:`read_sonata_index` — and meet in one join on
     the index key.  Integer datasets, so matching is exact.
 
     Returns one row per dataset:
@@ -463,7 +460,7 @@ def compare_indices_h5(
 
     from parquet_converters_spark.sources.sonata_h5 import (
         _INDEX_SCHEMAS,
-        read_sonata_index_distributed,
+        read_sonata_index,
     )
 
     report = []
@@ -476,7 +473,7 @@ def compare_indices_h5(
             a = spark.read.parquet(pq_path).select(
                 key, *[F.col(c).alias(f"_a_{c}") for c in vals]
             )
-            b = read_sonata_index_distributed(
+            b = read_sonata_index(
                 spark, h5_path, population, direction, dataset
             ).select(key, *[F.col(c).alias(f"_b_{c}") for c in vals])
             j = a.join(b, key, "full_outer")

@@ -771,9 +771,9 @@ class MiniH5Reader:
         import mmap
 
         # mmap, not read(): metadata walks touch a few KB even on a
-        # multi-GB file, and the distributed reader
-        # (sources.sonata_h5.read_sonata_edges_distributed) opens the
-        # file per executor purely for structure
+        # multi-GB file, and the row-slice readers
+        # (sources.sonata_h5.read_sonata_edges / read_sonata_index) open
+        # the file per executor task purely for structure
         self._f = open(path, "rb")
         try:
             self.buf = mmap.mmap(self._f.fileno(), 0, access=mmap.ACCESS_READ)
@@ -915,7 +915,7 @@ class MiniH5Reader:
     def dataset_layout(self, path: str) -> dict:
         """Structural description of a dataset for external readers —
         everything needed to fetch+decode its bytes WITHOUT this
-        reader instance (the distributed .h5 source ships this to
+        reader instance (the row-slice .h5 source ships this to
         executors): dtype/shape, and either the contiguous extent or
         the full chunk map + filter pipeline."""
         dt = shape = layout = None

@@ -15,7 +15,6 @@ from parquet_converters_spark.sources.textfiles import (  # noqa: F401
 )
 from parquet_converters_spark.sources.sonata_h5 import (  # noqa: F401
     read_sonata_edges,
-    read_sonata_edges_distributed,
-    read_sonata_index_distributed,
+    read_sonata_index,
     read_sonata_library,
 )

@@ -1,24 +1,26 @@
 """SONATA HDF5 source: read a `.h5` edge file back into a DataFrame.
 
 Spark has no native HDF5 reader, so this is the inverse of
-``sinks.sonata.export_hdf5``: parse the edge population with h5py when
-installed, else with the built-in classic-format reader
-(``sinks/hdf5_minimal.MiniH5Reader``), and hand the columns to Spark
-through one Arrow batch.  The built-in reader covers contiguous AND
-chunked datasets with deflate/shuffle filters — the layouts libhdf5
-pipelines typically write — so real-world SONATA files usually read
-back without h5py; exotic layouts/filters raise a targeted
-``NotImplementedError`` naming the dataset and the h5py remedy.
-
-Scale note (honest): HDF5 is a single-file driver-side format here —
-this source decodes on the driver and parallelizes afterwards, which
-is right for interchange-sized edge files (the reference's own output)
-and wrong for 100 TB.  At scale the parquet SONATA bundle IS the
-distributed representation; convert once with this source and never
-read the `.h5` twice:
+``sinks.sonata.export_hdf5_parallel`` and, like the reference's
+rank-parallel re-read (``src/parquet2hdf5.cpp:44-55``,
+``index.cpp:158-179``), it splits the file by rows: the driver parses
+only the metadata (dataset layouts, via the built-in classic-format
+reader ``sinks/hdf5_minimal.MiniH5Reader``) and every Spark task opens
+the file itself and reads just its row slice — one seek+read per
+contiguous column, only the overlapping chunks of a chunked one
+(deflate/shuffle reversed executor-side).  Nothing edge-scale
+materializes on the driver, so a big `.h5` converts straight to the
+scale representation:
 
     df = read_sonata_edges(spark, "edges.h5", "default")
-    df.write.parquet("edges_parquet/")       # now it scales
+    df.write.parquet("edges_parquet/")
+
+Executors must share the driver's filesystem (local mode / GPFS /
+Lustre / NFS), as for the touch source and the `.h5` writer.  Files the
+built-in reader cannot parse (newer superblocks, v1/v2 layout messages,
+filters beyond deflate/shuffle) are decoded on the driver through h5py
+where installed; without h5py they raise ``NotImplementedError`` naming
+the dataset and the h5py remedy.
 """
 
 from __future__ import annotations
@@ -29,16 +31,15 @@ from struct import error as struct_error
 from pyspark.sql import DataFrame, SparkSession
 
 
-def _edge_dataset_names(r, base: str) -> list[str]:
-    """Edge-column dataset names: top-level node ids/edge_type first,
-    then ``0/`` properties, both in link order."""
-    names: list[str] = []
-    for name in r.list_links(base):
-        if name not in ("0", "indices"):
-            names.append(name)
-    for name in r.list_links(f"{base}/0"):
-        if name != "@library":
-            names.append(name)
+def _edge_dataset_names(r, base: str) -> dict[str, str]:
+    """Edge-column dataset paths by name: top-level node ids/edge_type
+    first, then ``0/`` properties (a population without properties has
+    no ``0`` group), both in link order."""
+    top = r.list_links(base)
+    names = {n: f"{base}/{n}" for n in top if n not in ("0", "indices")}
+    for n in r.list_links(f"{base}/0") if "0" in top else ():
+        if n != "@library":
+            names[n] = f"{base}/0/{n}"
     return names
 
 
@@ -65,13 +66,13 @@ def _check_decodable(name: str, lay: dict) -> None:
         raise NotImplementedError(
             f"dataset {name!r} chunk shape {tuple(lay['chunk_shape'])} "
             f"splits non-row dimensions of {tuple(lay['shape'])}; the "
-            "distributed reader slices the row axis only — install h5py"
+            "row-slice reader slices the row axis only — install h5py"
         )
 
 
-def _prune(names: list[str], columns: list[str] | None, population: str):
+def _prune(names, columns: list[str] | None, population: str) -> list[str]:
     if columns is None:
-        return names
+        return list(names)
     missing = sorted(set(columns) - set(names))
     if missing:
         raise KeyError(
@@ -104,16 +105,16 @@ def _open(h5_path: str):
         return MiniH5Reader(h5_path)
 
 
-def read_sonata_edges(
+def _read_on_driver(
     spark: SparkSession,
     h5_path: str,
     population: str,
-    with_row_index: bool = True,
+    columns: list[str] | None,
 ) -> DataFrame:
-    """Load ``/edges/<population>`` (top-level node ids + ``0/``
-    properties; ``@library`` codes stay integer codes) as a DataFrame.
-    ``with_row_index`` adds the global position column so the ordered
-    round-trip ``export_hdf5 -> read_sonata_edges`` is loss-free.
+    """Fallback of :func:`read_sonata_edges` for files the row-slice
+    path cannot parse: decode on the driver (h5py where installed) and
+    hand Spark one Arrow table with the same contract — ``row_index``
+    first, then the requested columns in link order.
 
     Columns go to Spark through a pyarrow table built straight from the
     numpy arrays — NOT through pandas, whose Arrow conversion treats
@@ -124,19 +125,11 @@ def read_sonata_edges(
     import pyarrow as pa
 
     r = _open(h5_path)
-    base = f"/edges/{population}"
-    cols: dict[str, object] = {}
-    n = 0
-    for name in r.list_links(base):
-        if name in ("0", "indices"):
-            continue
-        cols[name] = r.read_dataset(f"{base}/{name}")
-    for name in r.list_links(f"{base}/0"):
-        if name == "@library":
-            continue
-        cols[name] = r.read_dataset(f"{base}/0/{name}")
+    paths = _edge_dataset_names(r, f"/edges/{population}")
     arrays = {}
-    for name, values in cols.items():
+    n = 0
+    for name in _prune(paths, columns, population):
+        values = r.read_dataset(paths[name])
         n = len(values)
         kind = getattr(getattr(values, "dtype", None), "kind", None)
         if kind in ("S", "O"):
@@ -151,9 +144,8 @@ def read_sonata_edges(
             )
         else:
             arrays[name] = pa.array(np.asarray(values))
-    if with_row_index:
-        arrays["row_index"] = pa.array(np.arange(n, dtype=np.int64))
-    return spark.createDataFrame(pa.table(arrays))
+    row_index = pa.array(np.arange(n, dtype=np.int64))
+    return spark.createDataFrame(pa.table({"row_index": row_index, **arrays}))
 
 
 def read_sonata_library(
@@ -231,7 +223,7 @@ def _slice_rows(fh, lay, chunks, dt, start, end, name):
 
 
 def _auto_rows_per_partition(n_rows: int, parallelism: int) -> int:
-    """Default slice size for the distributed readers: ~3 waves of
+    """Default slice size of the row-slice readers: ~3 waves of
     tasks per core (measured at 20M rows on local[32]: 256Ki-row slices
     read in 1.3-1.6 s where the old fixed 1M default took 2.1-2.2 s and
     4M took up to 6.4 s gzip — small slices win until task overhead
@@ -242,114 +234,46 @@ def _auto_rows_per_partition(n_rows: int, parallelism: int) -> int:
     return max(1 << 16, min(want, 1 << 22))
 
 
-def read_sonata_edges_distributed(
+def _read_row_slices(
     spark: SparkSession,
     h5_path: str,
-    population: str,
-    rows_per_partition: int | None = None,
-    columns: list[str] | None = None,
+    key: str,
+    datasets: list[tuple[str, dict, tuple[str, ...]]],
+    rows_per_partition: int | None,
 ) -> DataFrame:
-    """Parallel ``.h5`` ingest — the read-side mirror of
-    ``sinks.sonata.export_hdf5_parallel`` and the S6 "partitioned
-    parallel scan" shape applied to SONATA HDF5.
+    """One Spark task per row slice of ``datasets`` — ``(path, layout,
+    column names)`` triples of equal row count, whose layouts the driver
+    has already checked with :func:`_check_decodable`.  The result is
+    ``key`` (the row number, bigint) followed by each dataset's columns:
+    a 1-D dataset yields one, an (n, 2) dataset two.
 
-    The driver parses ONLY the file metadata (dataset layouts + chunk
-    maps, via :meth:`MiniH5Reader.dataset_layout` over mmap — a few KB
-    of reads regardless of file size), splits the edge range into
-    ``rows_per_partition`` row slices, and every Spark partition opens
-    the file itself and reads/decodes just its slice's byte ranges:
-    a contiguous dataset is one seek+read per column, a chunked one
-    reads only the overlapping chunks (deflate/shuffle reversed
-    executor-side with the standalone ``decode_chunk``).
-
-    Requires executors to share the filesystem with the driver (local
-    mode / GPFS / Lustre / NFS) — the same requirement as the parallel
-    writer, and as the reference's MPI-IO reader
-    (``src/parquet2hdf5.cpp:44-55`` splits files across ranks the same
-    way).  Unlike :func:`read_sonata_edges` nothing edge-scale ever
-    materializes on the driver.
-
-    Returns the same columns as :func:`read_sonata_edges` plus
-    ``row_index`` (the global position, so ordering survives the
-    parallel read).  ``columns`` restricts the read to the named
-    datasets — the column-pruning analogue of a parquet scan's
-    ReadSchema: unrequested datasets cost zero I/O (each column is a
-    separate contiguous extent / chunk set in the file).
-    """
+    Each task opens the file itself and walks a chunked dataset's
+    B-tree once (over mmap, metadata-only reads): the chunk maps are
+    dropped from the layouts here so a multi-TB file's millions of chunk
+    entries never ride along in the task closure."""
     import numpy as np
 
-    # the distributed path needs the raw dataset layouts, which only the
-    # from-spec reader exposes — use it DIRECTLY, h5py or not, so the
-    # result (schema, column order, pruning, partitioning) never depends
-    # on what happens to be installed.  Only when the file uses a format
-    # the from-spec reader cannot parse (newer superblocks / v2 layout
-    # messages from some libhdf5 pipelines) do we fall back to the
-    # driver-side h5py read — and then apply the SAME column pruning and
-    # ordering contract (row_index first, then requested columns).
-    from parquet_converters_spark.sinks.hdf5_minimal import MiniH5Reader
-
-    base = f"/edges/{population}"
-    try:
-        r = MiniH5Reader(h5_path)
-        names = _edge_dataset_names(r, base)
-        names = _prune(names, columns, population)
-        paths = {
-            n: (f"{base}/{n}" if n in r.list_links(base) else f"{base}/0/{n}")
-            for n in names
-        }
-        layouts = {n: r.dataset_layout(p) for n, p in paths.items()}
-        for n, lay in layouts.items():
-            # anything the executor-side decode cannot handle must be
-            # detected HERE, inside the try, so h5py-installed
-            # environments fall back to the driver-side read instead of
-            # aborting the Spark job mid-task (or failing after the
-            # fallback window has closed)
-            _check_decodable(n, lay)
-            if len(lay["shape"]) != 1:
-                raise NotImplementedError(
-                    f"dataset {n!r} is {len(lay['shape'])}-D; edge "
-                    "columns are 1-D — for the (n, 2) adjacency index "
-                    "datasets use read_sonata_index_distributed"
-                )
-    except (ValueError, NotImplementedError, AssertionError, struct_error):
-        df = read_sonata_edges(spark, h5_path, population)
-        names = _prune(
-            [c for c in df.columns if c != "row_index"], columns, population
-        )
-        # rows_per_partition cannot apply (the decode happened on the
-        # driver); schema contract — row_index first, pruned columns —
-        # is preserved
-        return df.select("row_index", *names)
-    # the closure ships only scalars per column — a multi-TB file's
-    # chunk map (millions of entries) must NOT ride along in the
-    # task binary; executors re-walk the B-tree themselves over
-    # mmap (metadata-only reads, O(chunk keys) per partition)
-    for n, lay in layouts.items():
-        lay.pop("chunks", None)
-
     n_rows = None
-    for n, lay in layouts.items():
+    fields = [f"`{key}` bigint"]
+    out_names = [key]
+    for path, lay, names in datasets:
+        lay.pop("chunks", None)
         if n_rows is None:
             n_rows = lay["shape"][0]
         elif lay["shape"][0] != n_rows:
             raise ValueError(
-                f"dataset {n!r} has {lay['shape'][0]} rows, expected {n_rows}"
+                f"dataset {path!r} has {lay['shape'][0]} rows, "
+                f"expected {n_rows}"
             )
+        dt = np.dtype(lay["dtype"])
+        spark_t = "string" if dt.kind == "S" else _NP_TO_SPARK[dt.str[1:]]
+        fields += [f"`{n}` {spark_t}" for n in names]
+        out_names += names
     n_rows = int(n_rows or 0)
     if rows_per_partition is None:
         rows_per_partition = _auto_rows_per_partition(
             n_rows, spark.sparkContext.defaultParallelism
         )
-
-    fields = ["row_index bigint"]
-    for n in names:
-        dt = np.dtype(layouts[n]["dtype"])
-        fields.append(
-            f"`{n}` "
-            + ("string" if dt.kind == "S" else _NP_TO_SPARK[dt.str[1:]])
-        )
-    schema = ", ".join(fields)
-
     ranges = [
         (s, min(s + rows_per_partition, n_rows))
         for s in range(0, max(n_rows, 1), rows_per_partition)
@@ -371,51 +295,100 @@ def read_sonata_edges_distributed(
             for start, end in zip(
                 spec.column(0).to_pylist(), spec.column(1).to_pylist()
             ):
-                start, end = int(start), int(end)
                 arrays = [pa.array(np.arange(start, end, dtype=np.int64))]
                 with open(target, "rb") as fh:
-                    for n in names:
-                        lay = layouts[n]
+                    for path, lay, names in datasets:
                         dt = np.dtype(lay["dtype"])
                         chunks = ()
                         if lay["layout"] != "contig":
-                            if rdr is None:
-                                rdr = MiniH5Reader(target)
-                            if n not in chunk_maps:
-                                chunk_maps[n] = rdr.dataset_layout(
-                                    paths[n]
+                            if path not in chunk_maps:
+                                if rdr is None:
+                                    rdr = MiniH5Reader(target)
+                                chunk_maps[path] = rdr.dataset_layout(
+                                    path
                                 )["chunks"]
-                            chunks = chunk_maps[n]
-                        arr = _slice_rows(fh, lay, chunks, dt, start, end, n)
-                        if dt.kind == "S":
+                            chunks = chunk_maps[path]
+                        arr = _slice_rows(fh, lay, chunks, dt, start, end, path)
+                        cols = [arr] if arr.ndim == 1 else arr.T
+                        for col in cols:
                             arrays.append(
-                                pa.array(
-                                    [v.decode() for v in arr],
-                                    type=pa.string(),
-                                )
+                                pa.array([v.decode() for v in col],
+                                         type=pa.string())
+                                if dt.kind == "S"
+                                else pa.array(np.ascontiguousarray(col))
                             )
-                        else:
-                            arrays.append(pa.array(arr))
-                yield pa.RecordBatch.from_arrays(
-                    arrays, names=["row_index"] + list(names)
-                )
+                yield pa.RecordBatch.from_arrays(arrays, names=out_names)
 
     spec = spark.createDataFrame(ranges, "start long, end long").repartition(
         max(len(ranges), 1), "start"
     )
-    return spec.mapInArrow(read_slice, schema)
+    return spec.mapInArrow(read_slice, ", ".join(fields))
+
+
+def read_sonata_edges(
+    spark: SparkSession,
+    h5_path: str,
+    population: str,
+    columns: list[str] | None = None,
+    rows_per_partition: int | None = None,
+) -> DataFrame:
+    """Load ``/edges/<population>`` — top-level node ids + ``0/``
+    properties (``@library`` codes stay integer codes) — as
+    ``row_index`` (the global position, so the ordered round-trip
+    ``export_hdf5 -> read_sonata_edges`` is loss-free) followed by the
+    edge columns, one Spark task per ``rows_per_partition`` row slice
+    (default :func:`_auto_rows_per_partition`).
+
+    ``columns`` restricts the read to the named datasets — the
+    column-pruning analogue of a parquet scan's ReadSchema: unrequested
+    datasets cost zero I/O (each column is a separate contiguous extent
+    / chunk set in the file); an unknown name raises ``KeyError``.
+
+    A file the built-in reader cannot parse, or whose layout the
+    executors cannot decode, is read on the driver instead (h5py where
+    installed) with the same columns in the same order.
+    """
+    from parquet_converters_spark.sinks.hdf5_minimal import MiniH5Reader
+
+    # the built-in reader parses the metadata whether or not h5py is
+    # installed, so schema, order, pruning and partitioning never depend
+    # on what happens to be installed
+    base = f"/edges/{population}"
+    try:
+        r = MiniH5Reader(h5_path)
+        paths = _edge_dataset_names(r, base)
+        names = _prune(paths, columns, population)
+        layouts = {n: r.dataset_layout(paths[n]) for n in names}
+        for n, lay in layouts.items():
+            # anything the executor-side decode cannot handle is
+            # detected HERE, on the driver, so the fallback takes over
+            # instead of a Spark task failing mid-read
+            _check_decodable(n, lay)
+            if len(lay["shape"]) != 1:
+                raise NotImplementedError(
+                    f"dataset {n!r} is {len(lay['shape'])}-D; edge "
+                    "columns are 1-D — for the (n, 2) adjacency index "
+                    "datasets use read_sonata_index"
+                )
+    except (ValueError, NotImplementedError, AssertionError, struct_error):
+        return _read_on_driver(spark, h5_path, population, columns)
+    return _read_row_slices(
+        spark, h5_path, "row_index",
+        [(paths[n], layouts[n], (n,)) for n in names],
+        rows_per_partition,
+    )
 
 
 # (key column, value columns) per adjacency index dataset — the same
 # names the bundle parquet uses (sinks.sonata._INDEX_COLS), so the
-# distributed readback compares 1:1 against the bundle
+# readback compares 1:1 against the bundle
 _INDEX_SCHEMAS = {
     "node_id_to_ranges": ("node_id", ("range_lo", "range_hi")),
     "range_to_edge_id": ("range_id", ("edge_start", "edge_end")),
 }
 
 
-def read_sonata_index_distributed(
+def read_sonata_index(
     spark: SparkSession,
     h5_path: str,
     population: str,
@@ -423,23 +396,17 @@ def read_sonata_index_distributed(
     dataset: str,
     rows_per_partition: int | None = None,
 ) -> DataFrame:
-    """Parallel read of one adjacency index dataset —
+    """Row-slice read of one adjacency index dataset —
     ``/edges/<population>/indices/<direction>/<dataset>`` — the (n, 2)
     arrays the reference writes (``src/circuit/index.cpp:27-31,184-191``)
-    and re-reads rank-parallel (``index.cpp:158-179``).  This is the 2-D
-    counterpart of :func:`read_sonata_edges_distributed` (VERDICT r04
-    item 4): the driver parses only the layout, each partition reads its
-    own row slice (a contiguous slice is one seek+read of
-    ``rows * 2 * itemsize`` bytes; a chunked one decodes only the
-    overlapping chunks executor-side).
+    and re-reads rank-parallel (``index.cpp:158-179``), sliced exactly
+    like :func:`read_sonata_edges`.
 
     Returns ``(node_id, range_lo, range_hi)`` or
     ``(range_id, edge_start, edge_end)`` — the row number is the key,
-    exactly like the bundle's parquet form, so
-    ``read_sonata_index_distributed(...)`` equals the bundle's
-    ``indices/<direction>/<dataset>.parquet`` row for row."""
-    import numpy as np
-
+    exactly like the bundle's parquet form, so ``read_sonata_index(...)``
+    equals the bundle's ``indices/<direction>/<dataset>.parquet`` row
+    for row."""
     from parquet_converters_spark.sinks.hdf5_minimal import MiniH5Reader
 
     if dataset not in _INDEX_SCHEMAS:
@@ -449,59 +416,11 @@ def read_sonata_index_distributed(
         )
     key_col, val_cols = _INDEX_SCHEMAS[dataset]
     path = f"/edges/{population}/indices/{direction}/{dataset}"
-    r = MiniH5Reader(h5_path)
-    lay = r.dataset_layout(path)
-    lay.pop("chunks", None)  # executors re-walk the B-tree themselves
+    lay = MiniH5Reader(h5_path).dataset_layout(path)
     shape = lay["shape"]
     if len(shape) != 2 or shape[1] != 2:
         raise ValueError(f"{path} has shape {shape}, expected (n, 2)")
-    _check_decodable(dataset, lay)  # driver-side, never inside a task
-    n_rows = int(shape[0])
-    if rows_per_partition is None:
-        rows_per_partition = _auto_rows_per_partition(
-            n_rows, spark.sparkContext.defaultParallelism
-        )
-    dt = np.dtype(lay["dtype"])
-    spark_t = _NP_TO_SPARK[dt.str[1:]]
-    schema = (
-        f"`{key_col}` bigint, `{val_cols[0]}` {spark_t}, "
-        f"`{val_cols[1]}` {spark_t}"
+    _check_decodable(dataset, lay)
+    return _read_row_slices(
+        spark, h5_path, key_col, [(path, lay, val_cols)], rows_per_partition
     )
-    target = os.path.abspath(h5_path)
-
-    def read_slice(batches):
-        # Arrow end-to-end, like the edge reader (no pandas hop — the
-        # columns are integral today, but the fidelity rule is uniform)
-        import pyarrow as pa
-
-        chunks_cache: list | None = None
-        for spec in batches:
-            for start, end in zip(
-                spec.column(0).to_pylist(), spec.column(1).to_pylist()
-            ):
-                start, end = int(start), int(end)
-                with open(target, "rb") as fh:
-                    if lay["layout"] != "contig" and chunks_cache is None:
-                        chunks_cache = MiniH5Reader(target).dataset_layout(
-                            path
-                        )["chunks"]
-                    mat = _slice_rows(
-                        fh, lay, chunks_cache or (), dt, start, end, path
-                    )
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.arange(start, end, dtype=np.int64)),
-                        pa.array(np.ascontiguousarray(mat[:, 0])),
-                        pa.array(np.ascontiguousarray(mat[:, 1])),
-                    ],
-                    names=[key_col, val_cols[0], val_cols[1]],
-                )
-
-    ranges = [
-        (s, min(s + rows_per_partition, n_rows))
-        for s in range(0, max(n_rows, 1), rows_per_partition)
-    ]
-    spec = spark.createDataFrame(ranges, "start long, end long").repartition(
-        max(len(ranges), 1), "start"
-    )
-    return spec.mapInArrow(read_slice, schema)

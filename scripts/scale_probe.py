@@ -49,9 +49,7 @@ def hdf5_benches(spark, sf_dir: str, wanted: list[str]) -> dict[str, float]:
         export_hdf5_parallel,
     )
     from parquet_converters_spark.sources.ordering import with_global_row_index
-    from parquet_converters_spark.sources.sonata_h5 import (
-        read_sonata_edges_distributed,
-    )
+    from parquet_converters_spark.sources.sonata_h5 import read_sonata_edges
 
     tmp = tempfile.mkdtemp(prefix="scale_probe_hdf5_")
     out: dict[str, float] = {}
@@ -82,7 +80,7 @@ def hdf5_benches(spark, sf_dir: str, wanted: list[str]) -> dict[str, float]:
             if not os.path.exists(h5):
                 export_hdf5_parallel(spark, bundle, "bench", h5)
             out["hdf5_distributed_read"] = timed(
-                lambda: read_sonata_edges_distributed(spark, h5, "bench")
+                lambda: read_sonata_edges(spark, h5, "bench")
                 .write.format("noop")
                 .mode("overwrite")
                 .save()

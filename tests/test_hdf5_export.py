@@ -21,6 +21,33 @@ from parquet_converters_spark.sinks.sonata import export_hdf5
 from tests.test_sonata import _make_edges, bundle  # noqa: F401
 
 
+def assert_reads_like_minih5(df, h5_path, population):
+    """Column by column, a ``read_sonata_edges`` frame must equal the
+    independent whole-dataset decode ``MiniH5Reader.read_dataset``:
+    ``row_index`` first and dense 0..n-1, no NULLs, floats compared
+    NaN-equal (a stored NaN is a value and must read back as one)."""
+    r = MiniH5Reader(h5_path)
+    base = f"/edges/{population}"
+    top = set(r.list_links(base))
+    assert df.columns[0] == "row_index"
+    rows = df.orderBy("row_index").collect()
+    assert [row["row_index"] for row in rows] == list(range(len(rows)))
+    for name in df.columns[1:]:
+        want = r.read_dataset(
+            f"{base}/{name}" if name in top else f"{base}/0/{name}"
+        )
+        got = [row[name] for row in rows]
+        assert len(got) == len(want) and None not in got, name
+        if want.dtype.kind == "S":
+            assert got == [v.decode() for v in want], name
+        else:
+            assert np.array_equal(
+                np.asarray(got, dtype=want.dtype), want,
+                equal_nan=want.dtype.kind == "f",
+            ), name
+    return rows
+
+
 def test_minih5_roundtrip_all_types(tmp_path):
     w = MiniH5Writer()
     cases = {
@@ -662,37 +689,26 @@ def test_parallel_export_string_property(spark, tmp_path):
 
 
 def test_distributed_read_matches_driver_read(spark, bundle, tmp_path):  # noqa: F811
-    """read_sonata_edges_distributed (driver parses metadata only, each
-    partition seek+reads its row slice) must equal the driver-side
-    reader on both the contiguous and the chunked+gzip export, across
+    """read_sonata_edges (driver parses metadata only, each partition
+    seek+reads its row slice) must equal the independent driver-side
+    decode on both the contiguous and the chunked+gzip export, across
     multiple partitions."""
-    from parquet_converters_spark.sources.sonata_h5 import (
-        read_sonata_edges,
-        read_sonata_edges_distributed,
-    )
+    from parquet_converters_spark.sources.sonata_h5 import read_sonata_edges
 
     out, table = bundle
     for comp, fname in ((None, "plain.h5"), ("gzip", "gz.h5")):
         h5 = str(tmp_path / fname)
         export_hdf5(out, "edges_test", h5, compression=comp, chunk_rows=64)
-        dist = read_sonata_edges_distributed(
-            spark, h5, "edges_test", rows_per_partition=100
-        )
-        assert dist.rdd.getNumPartitions() > 1
-        a = read_sonata_edges(spark, h5, "edges_test").orderBy("row_index")
-        b = dist.orderBy("row_index")
-        rows_a = [tuple(r) for r in a.select(*sorted(a.columns)).collect()]
-        rows_b = [tuple(r) for r in b.select(*sorted(a.columns)).collect()]
-        assert rows_a == rows_b, comp
-        assert len(rows_b) == table.num_rows
+        df = read_sonata_edges(spark, h5, "edges_test", rows_per_partition=100)
+        assert df.rdd.getNumPartitions() > 1
+        rows = assert_reads_like_minih5(df, h5, "edges_test")
+        assert len(rows) == table.num_rows
 
 
 def test_distributed_read_string_column(spark, tmp_path):
-    """Distributed read of a fixed-width string dataset (S decode path),
+    """Row-slice read of a fixed-width string dataset (S decode path),
     chunked+gzip, across partitions."""
-    from parquet_converters_spark.sources.sonata_h5 import (
-        read_sonata_edges_distributed,
-    )
+    from parquet_converters_spark.sources.sonata_h5 import read_sonata_edges
 
     n = 500
     kinds = np.asarray([f"kind_{i % 7}" for i in range(n)], dtype="S")
@@ -709,7 +725,7 @@ def test_distributed_read_string_column(spark, tmp_path):
     p = str(tmp_path / "strs.h5")
     w.write(p)
 
-    df = read_sonata_edges_distributed(
+    df = read_sonata_edges(
         spark, p, "p", rows_per_partition=100
     ).orderBy("row_index")
     rows = df.collect()
@@ -719,35 +735,30 @@ def test_distributed_read_string_column(spark, tmp_path):
 
 
 def test_distributed_read_column_pruning(spark, bundle, tmp_path):  # noqa: F811
-    """columns= restricts the distributed read to the named datasets
-    (zero I/O for the rest) and unknown names raise."""
+    """columns= restricts the read to the named datasets (zero I/O for
+    the rest) and unknown names raise."""
     import pytest as _pytest
 
-    from parquet_converters_spark.sources.sonata_h5 import (
-        read_sonata_edges_distributed,
-    )
+    from parquet_converters_spark.sources.sonata_h5 import read_sonata_edges
 
     out, table = bundle
     h5 = str(tmp_path / "prune.h5")
     export_hdf5(out, "edges_test", h5)
-    df = read_sonata_edges_distributed(
-        spark, h5, "edges_test", columns=["source_node_id"]
-    )
+    df = read_sonata_edges(spark, h5, "edges_test", columns=["source_node_id"])
     assert df.columns == ["row_index", "source_node_id"]
     assert df.count() == table.num_rows
     with _pytest.raises(KeyError):
-        read_sonata_edges_distributed(spark, h5, "edges_test",
-                                      columns=["nope"])
+        read_sonata_edges(spark, h5, "edges_test", columns=["nope"])
 
 
 def test_distributed_index_read_matches_bundle(spark, bundle, tmp_path):  # noqa: F811
     """The (n, 2) adjacency index datasets round-trip through the
-    2-D distributed reader (VERDICT r04 item 4 — the reference re-reads
+    2-D row-slice reader (VERDICT r04 item 4 — the reference re-reads
     its own index datasets rank-parallel, index.cpp:158-179): row for
     row equal to the bundle's parquet form, on both the contiguous and
     the chunked+gzip layout."""
     from parquet_converters_spark.sources.sonata_h5 import (
-        read_sonata_index_distributed,
+        read_sonata_index,
     )
 
     out, _ = bundle
@@ -770,7 +781,7 @@ def test_distributed_index_read_matches_bundle(spark, bundle, tmp_path):  # noqa
                     .to_pydict()
                 )
                 got = (
-                    read_sonata_index_distributed(
+                    read_sonata_index(
                         spark, h5, "edges_test", direction, dataset,
                         rows_per_partition=37,
                     )
@@ -786,14 +797,14 @@ def test_distributed_index_read_matches_bundle(spark, bundle, tmp_path):  # noqa
 
 def test_distributed_index_read_rejects_unknown(spark, bundle, tmp_path):  # noqa: F811
     from parquet_converters_spark.sources.sonata_h5 import (
-        read_sonata_index_distributed,
+        read_sonata_index,
     )
 
     out, _ = bundle
     h5 = str(tmp_path / "idx.h5")
     export_hdf5(out, "edges_test", h5)
     with pytest.raises(KeyError):
-        read_sonata_index_distributed(
+        read_sonata_index(
             spark, h5, "edges_test", "source_to_target", "nope"
         )
 
@@ -899,29 +910,72 @@ def test_parallel_export_non_ascii_strings(spark, tmp_path):
 def test_distributed_read_fallback_keeps_schema_contract(
     spark, bundle, tmp_path, monkeypatch
 ):  # noqa: F811
-    """When the from-spec reader cannot parse a file (newer-format
-    layouts), the h5py-era fallback must honor the SAME contract as the
-    distributed path — row_index first, columns= pruned and ordered —
-    instead of silently returning a different schema (ADVICE r04)."""
+    """When the row-slice path cannot decode a file (newer-format
+    layouts), the driver-side fallback must honor the SAME contract as
+    the row-slice path — row_index first, columns= pruned and ordered,
+    unknown names a KeyError — instead of silently returning a
+    different schema (ADVICE r04)."""
     from parquet_converters_spark.sources import sonata_h5
 
     out, table = bundle
     h5 = str(tmp_path / "fb.h5")
     export_hdf5(out, "edges_test", h5)
 
-    def boom(r, base):
-        raise ValueError("simulated unparseable layout")
+    def boom(name, lay):
+        raise NotImplementedError("simulated undecodable layout")
 
-    monkeypatch.setattr(sonata_h5, "_edge_dataset_names", boom)
-    df = sonata_h5.read_sonata_edges_distributed(
+    monkeypatch.setattr(sonata_h5, "_check_decodable", boom)
+    df = sonata_h5.read_sonata_edges(
         spark, h5, "edges_test", columns=["target_node_id", "source_node_id"]
     )
     assert df.columns == ["row_index", "source_node_id", "target_node_id"]
-    assert df.count() == table.num_rows
+    rows = assert_reads_like_minih5(df, h5, "edges_test")
+    assert len(rows) == table.num_rows
     with pytest.raises(KeyError):
-        sonata_h5.read_sonata_edges_distributed(
-            spark, h5, "edges_test", columns=["nope"]
-        )
+        sonata_h5._read_on_driver(spark, h5, "edges_test", ["nope"])
+
+
+def test_undecodable_filter_raises_on_driver_without_h5py(
+    spark, tmp_path, monkeypatch
+):
+    """An edge file whose chunked column uses a filter outside
+    deflate/shuffle (id 307, bzip2) cannot be sliced on the executors;
+    without h5py the fallback cannot decode it either, so
+    read_sonata_edges must raise NotImplementedError naming h5py on the
+    driver — before any Spark job starts."""
+    import struct
+    import sys
+
+    from parquet_converters_spark.sources.sonata_h5 import read_sonata_edges
+
+    monkeypatch.setitem(sys.modules, "h5py", None)  # import h5py fails
+    n = 300
+    w = MiniH5Writer()
+    w.create_dataset(
+        "/edges/p/source_node_id", np.arange(n, dtype=np.int64),
+        chunks=(64,), compression="gzip",
+    )
+    w.create_dataset("/edges/p/target_node_id", np.arange(n, dtype=np.int64))
+    w.create_dataset("/edges/p/0/w", np.ones(n, dtype=np.float32))
+    p = str(tmp_path / "bz.h5")
+    w.write(p)
+    blob = bytearray(open(p, "rb").read())
+    pipe = struct.pack("<BB6x", 1, 1) + struct.pack("<HHHH", 1, 0, 0, 1)
+    pat = blob.find(pipe)
+    assert pat > 0
+    struct.pack_into("<H", blob, pat + 8, 307)  # deflate -> bzip2
+    open(p, "wb").write(bytes(blob))
+
+    sc = spark.sparkContext
+    group = "undecodable_filter_no_jobs"
+    sc.setJobGroup(group, "read_sonata_edges on a filter-307 file")
+    try:
+        with pytest.raises(NotImplementedError) as exc:
+            read_sonata_edges(spark, p, "p")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert "307" in str(exc.value) and "h5py" in str(exc.value)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_parallel_compressed_export_byte_identical(spark, bundle, tmp_path):  # noqa: F811
@@ -930,10 +984,7 @@ def test_parallel_compressed_export_byte_identical(spark, bundle, tmp_path):  # 
     the single-writer gzip export — a capability the reference does not
     have (its MPI-IO hyperslabs require the uncompressed layout)."""
     from parquet_converters_spark.sinks.sonata import export_hdf5_parallel
-    from parquet_converters_spark.sources.sonata_h5 import (
-        read_sonata_edges,
-        read_sonata_edges_distributed,
-    )
+    from parquet_converters_spark.sources.sonata_h5 import read_sonata_edges
 
     out, table = bundle
     single = str(tmp_path / "s.h5")
@@ -946,15 +997,9 @@ def test_parallel_compressed_export_byte_identical(spark, bundle, tmp_path):  # 
     with open(single, "rb") as a, open(par, "rb") as b:
         assert a.read() == b.read()
     assert not os.path.exists(par + ".spill")
-    # readable through both the driver-side and the distributed source
-    a = read_sonata_edges(spark, par, "edges_test").orderBy("row_index")
-    b = read_sonata_edges_distributed(
-        spark, par, "edges_test", rows_per_partition=100
-    ).orderBy("row_index")
-    cols = sorted(a.columns)
-    assert [tuple(r) for r in a.select(*cols).collect()] == [
-        tuple(r) for r in b.select(*cols).collect()
-    ]
+    # the row-slice source reads it like the independent decode
+    df = read_sonata_edges(spark, par, "edges_test", rows_per_partition=100)
+    assert len(assert_reads_like_minih5(df, par, "edges_test")) == n
 
 
 def test_parallel_compressed_export_strings_and_small(spark, tmp_path):
@@ -1232,7 +1277,7 @@ def test_check_decodable_guards(spark, tmp_path):
     silently broadcast one column across both."""
     from parquet_converters_spark.sources.sonata_h5 import (
         _check_decodable,
-        read_sonata_index_distributed,
+        read_sonata_index,
     )
 
     # unit: filter id outside {deflate, shuffle}
@@ -1258,7 +1303,7 @@ def test_check_decodable_guards(spark, tmp_path):
     p = str(tmp_path / "split.h5")
     w.write(p)
     with pytest.raises(NotImplementedError, match="non-row"):
-        read_sonata_index_distributed(
+        read_sonata_index(
             spark, p, "p", "source_to_target", "node_id_to_ranges"
         )
 
@@ -1356,16 +1401,14 @@ def test_reader_rejects_truncated_files(tmp_path):
 
 def test_nan_inf_roundtrip_distributed(spark, tmp_path):
     """Float NaN and inf stored in the .h5 are VALUES and must read
-    back as values through BOTH readers — the pandas path would conflate
+    back as values through the row-slice reader, equal to the
+    independent decode — the pandas path would conflate
     NaN with null (this is how compare_parquet_h5 found the bug: 61
     false mismatches on the reference's own v2 fixture, which carries
     NaN in afferent_section_pos)."""
     from pyspark.sql import functions as F
 
-    from parquet_converters_spark.sources.sonata_h5 import (
-        read_sonata_edges,
-        read_sonata_edges_distributed,
-    )
+    from parquet_converters_spark.sources.sonata_h5 import read_sonata_edges
 
     n = 300
     vals = np.linspace(0, 1, n).astype("float32")
@@ -1377,19 +1420,17 @@ def test_nan_inf_roundtrip_distributed(spark, tmp_path):
     w.create_dataset("/edges/p/0/pos", vals)
     p = str(tmp_path / "nan.h5")
     w.write(p)
-    for reader, kw in (
-        (read_sonata_edges, {}),
-        (read_sonata_edges_distributed, {"rows_per_partition": 64}),
-    ):
-        df = reader(spark, p, "p", **kw)
-        stats = df.select(
-            F.sum(F.col("pos").isNull().cast("long")).alias("nulls"),
-            F.sum(F.isnan("pos").cast("long")).alias("nans"),
-            F.sum((F.col("pos") == float("inf")).cast("long")).alias("pinf"),
-            F.sum((F.col("pos") == float("-inf")).cast("long")).alias("ninf"),
-        ).collect()[0]
-        assert stats["nulls"] == 0, reader.__name__
-        assert stats["nans"] == 1 and stats["pinf"] == 1 and stats["ninf"] == 1
+    df = read_sonata_edges(spark, p, "p", rows_per_partition=100)
+    assert df.rdd.getNumPartitions() > 1
+    assert_reads_like_minih5(df, p, "p")
+    stats = df.select(
+        F.sum(F.col("pos").isNull().cast("long")).alias("nulls"),
+        F.sum(F.isnan("pos").cast("long")).alias("nans"),
+        F.sum((F.col("pos") == float("inf")).cast("long")).alias("pinf"),
+        F.sum((F.col("pos") == float("-inf")).cast("long")).alias("ninf"),
+    ).collect()[0]
+    assert stats["nulls"] == 0
+    assert stats["nans"] == 1 and stats["pinf"] == 1 and stats["ninf"] == 1
 
 
 def test_compare_parquet_h5_nan_inf_identical(spark, tmp_path):
@@ -1645,7 +1686,7 @@ def test_auto_chunk_rows_scales_with_table():
 
 
 def test_distributed_read_truncated_file_clear_error(spark, tmp_path):
-    """A truncated contiguous .h5 must fail the distributed read with an
+    """A truncated contiguous .h5 must fail the row-slice read with an
     explicit 'truncated file' error, not an opaque reshape/Arrow
     length mismatch."""
     import pandas as pd

@@ -116,23 +116,24 @@ def test_production_sonata_reader_on_external_bytes(spark, fixture_path):
     the function that grades the reference's SONATA surface — decodes
     the independently-authored /edges/extpop tree exactly: top-level
     ids, a shuffle+deflate chunked property with a partial edge chunk,
-    and an f4 property, through Spark."""
-    from parquet_converters_spark.sources.sonata_h5 import (
-        read_sonata_edges,
-        read_sonata_edges_distributed,
-    )
+    and an f4 property, through Spark — equal to the fixture's expected
+    values and, column by column, to MiniH5Reader's whole-dataset
+    decode."""
+    from parquet_converters_spark.sources.sonata_h5 import read_sonata_edges
+    from tests.test_hdf5_export import assert_reads_like_minih5
 
     exp = EXPECTED["sonata"]
-    for reader_fn in (read_sonata_edges, read_sonata_edges_distributed):
-        df = reader_fn(spark, fixture_path, exp["population"])
-        rows = df.orderBy("row_index").collect()
-        assert len(rows) == 7
-        for name, (dt, vals) in exp["columns"].items():
-            got = [r[name] for r in rows]
-            if dt == "<f4":
-                assert got == pytest.approx(vals, abs=0)  # exact f4
-            else:
-                assert got == vals, name
+    df = read_sonata_edges(
+        spark, fixture_path, exp["population"], rows_per_partition=100
+    )
+    rows = assert_reads_like_minih5(df, fixture_path, exp["population"])
+    assert len(rows) == 7
+    for name, (dt, vals) in exp["columns"].items():
+        got = [r[name] for r in rows]
+        if dt == "<f4":
+            assert got == pytest.approx(vals, abs=0)  # exact f4
+        else:
+            assert got == vals, name
 
 
 def test_h5py_crossval(fixture_path):

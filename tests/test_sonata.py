@@ -593,7 +593,12 @@ def test_cli_parquet2sonata_hdf5_matches_single_writer(spark, tmp_path):
     """``parquet2sonata IN OUT p --hdf5 X`` writes the same bytes as the
     single writer on the bundle it produced, with and without
     ``--gzip-h5`` (enough edges that the default 64Ki-row chunking
-    splits the table)."""
+    splits the table).  On each file, ``sonata2parquet`` writes the
+    bundle's table back row for row with ``row_index`` first, and
+    ``compare --indices`` passes against the bundle but fails once one
+    row of a copied bundle's ``range_to_edge_id`` is changed."""
+    import shutil
+
     from parquet_converters_spark.cli import main
     from parquet_converters_spark.sinks.sonata import export_hdf5
 
@@ -612,6 +617,35 @@ def test_cli_parquet2sonata_hdf5_matches_single_writer(spark, tmp_path):
         export_hdf5(out, "p", ref, compression=compression)
         with open(h5, "rb") as a, open(ref, "rb") as b:
             assert a.read() == b.read(), tag
+
+        back = str(tmp_path / f"back_{tag}")
+        assert main(["sonata2parquet", h5, "p", back]) == 0
+        got = pq.read_table(back).sort_by("row_index")
+        want = pq.read_table(
+            os.path.join(out, "edges", "p", "table.parquet")
+        ).sort_by("row_index")
+        assert got.column_names[0] == "row_index", tag
+        assert sorted(got.column_names) == sorted(want.column_names), tag
+        assert got.to_pydict() == want.select(got.column_names).to_pydict()
+
+        assert main(["compare", out, h5, "p", "--indices"]) == 0
+        bad = str(tmp_path / f"bad_bundle_{tag}")
+        shutil.copytree(out, bad)
+        r2e = os.path.join(
+            bad, "edges", "p", "indices", "source_to_target",
+            "range_to_edge_id.parquet",
+        )
+        t = pq.read_table(r2e).sort_by("range_id")
+        ends = t.column("edge_end").to_pylist()
+        ends[len(ends) // 2] += 1
+        t = t.set_column(
+            t.schema.get_field_index("edge_end"), "edge_end",
+            pa.array(ends, t.schema.field("edge_end").type),
+        )
+        shutil.rmtree(r2e)
+        os.makedirs(r2e)
+        pq.write_table(t, os.path.join(r2e, "part-0.parquet"))
+        assert main(["compare", bad, h5, "p", "--indices"]) == 1, tag
 
 
 def test_empty_edge_table_converts(spark, tmp_path):

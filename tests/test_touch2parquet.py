@@ -136,6 +136,37 @@ def test_validation_raises(spark):
         validate_sections(df.withColumn("pre_section", df.pre_segment * 0 + 0x8000))
 
 
+def test_bad_section_counter_matches_validation(spark):
+    """observe_conversion's n_bad_sections counts exactly the rows
+    validate_sections(strict=False) drops — one predicate for both — on
+    a planted violation in each of the four id columns plus a negative
+    id, which neither treats as a violation; strict=True raises."""
+    from parquet_converters_spark.observability import observe_conversion
+    from parquet_converters_spark.operators import validate_sections
+
+    big = 0x8000
+    df = spark.createDataFrame(
+        [
+            (0, 1, 1, 1, 1),
+            (1, big, 1, 1, 1),
+            (2, 1, big, 1, 1),
+            (3, 1, 1, big, 1),
+            (4, 1, 1, 1, big),
+            (5, -1, 1, 1, 1),
+            (6, 2, 2, 2, 2),
+        ],
+        "pre_neuron_id int, pre_section int, pre_segment int, "
+        "post_section int, post_segment int",
+    )
+    obs, observed = observe_conversion(df)
+    assert observed.count() == 7  # the action that fills the observation
+    dropped = 7 - validate_sections(df, strict=False).count()
+    assert dropped == 4
+    assert obs.get["n_bad_sections"] == dropped
+    with pytest.raises(ValueError, match="endianess"):
+        validate_sections(df, strict=True)
+
+
 def test_cli_end_to_end(spark, tmp_path):
     """The module CLI mirrors the reference binaries: touch2parquet then
     parquet2sonata, driven through main() with argv."""
