@@ -6,7 +6,7 @@ docstrings throughout this package) is a pair of MPI-parallel columnar ETL
 binaries (touch2parquet, parquet2hdf5).  This package re-expresses every
 operator the reference implements as idiomatic PySpark DataFrame programs:
 
-- ``sources``   — fixed-width touch binary scan (Python DataSource API),
+- ``sources``   — fixed-width touch binary scan (JVM-planned ``mapInArrow``),
                   ordered multi-file parquet scan with deterministic global
                   row indices.
 - ``operators`` — touch transform (rename/flatten/bit-unpack/synapse_id),

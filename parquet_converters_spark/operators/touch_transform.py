@@ -27,6 +27,7 @@ BRANCH_MASK = 0xF
 BRANCH_SHIFT = 4
 BRANCH_OFFSET = 1
 SECTION_LIMIT = 0x7FFF
+SECTION_ERROR = "Invalid pre_section/segment value > 0x7fff. Please check endianess."
 
 
 def unpack_branch_type(branch_type: Column | str) -> tuple[Column, Column]:
@@ -54,16 +55,17 @@ def invalid_sections() -> Column:
 def validate_sections(df: DataFrame, strict: bool = True) -> DataFrame:
     """Apply :func:`invalid_sections` — the reference hard-errors on
     ``pre_section`` and warns on the rest; we treat all four uniformly as
-    errors when ``strict``, and drop the offending rows otherwise."""
+    errors when ``strict`` — lazily: the job consuming ``df`` fails with a
+    ``SparkRuntimeException`` carrying :data:`SECTION_ERROR` and the four
+    ids of a bad row — and drop the offending rows otherwise."""
     cond = invalid_sections()
     if strict:
-        bad = df.filter(cond).limit(1).collect()
-        if bad:
-            raise ValueError(
-                "Invalid pre_section/segment value > 0x7fff. "
-                f"Please check endianess. First bad row: {bad[0]}"
-            )
-        return df
+        ids = ("pre_section", "pre_segment", "post_section", "post_segment")
+        msg = F.format_string(
+            SECTION_ERROR + " Bad row: " + ", ".join(f"{c}=%d" for c in ids),
+            *ids,
+        )
+        return df.filter(F.when(cond, F.raise_error(msg)).otherwise(F.lit(True)))
     return df.filter(~cond)
 
 

@@ -12,9 +12,11 @@ metadata passthrough -> SONATA bundle + adjacency index
 
 from __future__ import annotations
 
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import DataFrame, SparkSession
 
 from parquet_converters_spark.operators.touch_transform import (
+    SECTION_ERROR,
     to_canonical_edges,
     validate_sections,
 )
@@ -41,7 +43,10 @@ def touch2parquet(
 ) -> DataFrame:
     """Convert touch binary file(s) to the canonical parquet edge table.
 
-    Returns the written DataFrame (lazily re-readable from ``out_path``).
+    One Spark job: scan, ``strict`` section check, projection and write.
+    A failed check raises ``ValueError`` and leaves ``out_path`` as it
+    was.  Returns the written DataFrame (lazily re-readable from
+    ``out_path``).
     """
     first = _expand_paths(touch_path)[0]
     header = read_touch_header(first)
@@ -51,7 +56,12 @@ def touch2parquet(
     kv = {"touch2parquet_version": "parquet_converters_spark"}
     if touchdetector_version or header.version_string:
         kv["touchdetector_version"] = touchdetector_version or header.version_string
-    write_canonical_parquet(edges, out_path, kv_metadata=kv)
+    try:
+        write_canonical_parquet(edges, out_path, kv_metadata=kv)
+    except SparkRuntimeException as e:
+        if SECTION_ERROR not in str(e):
+            raise
+        raise ValueError(str(e)) from None
     return edges
 
 

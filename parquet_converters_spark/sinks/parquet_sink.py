@@ -7,9 +7,12 @@ SNAPPY compression, dictionary encoding disabled, ~20 MB row groups
 (``touchdetector_version`` / ``touch2parquet_version``,
 ``parquet_writer.cpp:115-120``).
 
-Spark-first: ``df.write.parquet`` with writer options — one output file
-per task, the Spark analogue of the reference's one-file-per-MPI-rank
-naming (``touch2parquet.cpp:84``).
+One output file per task, the Spark analogue of the reference's
+one-file-per-MPI-rank naming (``touch2parquet.cpp:84``).  With footer KV
+each task writes its file once with ``pq.ParquetWriter`` inside a single
+``mapInArrow`` job, staged and renamed into place; without it,
+``df.write.parquet`` with writer options (which also carries Bloom
+filters).
 """
 
 from __future__ import annotations
@@ -20,7 +23,9 @@ import os
 from pyspark.sql import DataFrame
 
 ROW_GROUP_BYTES = 20 * 1024 * 1024
+ROW_GROUP_ROWS = 512 * 1024
 PAGE_BYTES = 1024 * 1024
+PYARROW_OPTIONS = dict(compression="snappy", use_dictionary=False, data_page_size=PAGE_BYTES)
 
 
 def write_canonical_parquet(
@@ -34,20 +39,16 @@ def write_canonical_parquet(
 ) -> None:
     """Write ``df`` with the reference's parquet physical options.
 
-    ``kv_metadata`` is stamped into each file footer in a driver-side
-    post-pass (Spark's writer cannot attach custom footer KV).  The
-    rewrite is metadata+recompress of already-written files; version
-    stamps at 100 TB scale should instead ride in the Spark field
-    metadata that the reference itself knows how to read
-    (``sonata_writer.cpp:102-111``) — supported via schema metadata.
+    ``kv_metadata`` (footer KV, which Spark's writer cannot attach) goes
+    through :func:`_write_with_kv`: pyarrow writes no Bloom filters, so
+    ``bloom_filter_columns`` with it is a ``ValueError``, and a ``mode``
+    other than ``"overwrite"`` fails on an existing ``path``.
 
     ``metadata_sidecar`` additionally writes the ``_metadata`` summary
     file (all row-group footers + file paths) that the reference's
     ``parquet2hdf5`` prefers over per-file footers
     (``parquet2hdf5.cpp:205-218``) and that our own ordered reader
-    consults first (``sources/ordering.py``).  Cost is one driver-side
-    footer read per file — O(#files), the same as the row-count pass
-    the ordered reader performs anyway.
+    consults first (``sources/ordering.py``).
     ``bloom_filter_columns`` writes a split-block Bloom filter per row
     group for each named column (``parquet.bloom.filter.enabled#col``,
     the parquet-mr writer property Spark passes through).  At 100 TB
@@ -58,8 +59,17 @@ def write_canonical_parquet(
     canonical layout (reference parity), so Bloom filters are the only
     sub-row-group pruning equality predicates get.
     """
+    if kv_metadata and bloom_filter_columns:
+        raise ValueError(
+            f"bloom_filter_columns={bloom_filter_columns!r} cannot be combined "
+            "with kv_metadata: the footer-KV writer (pyarrow) writes no Bloom "
+            "filters"
+        )
     if partitions:
         df = df.repartition(partitions)
+    if kv_metadata:
+        _write_with_kv(df, path, kv_metadata, mode, metadata_sidecar)
+        return
     writer = (
         df.write.mode(mode)
         .option("compression", "snappy")
@@ -70,127 +80,142 @@ def write_canonical_parquet(
     for col in bloom_filter_columns or []:
         writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
     writer.parquet(path)
-
-    if kv_metadata:
-        _stamp_kv_metadata(path, kv_metadata, spark=df.sparkSession)
     if metadata_sidecar:
         _write_metadata_sidecar(path)
 
 
-def _write_metadata_sidecar(path: str) -> None:
+def _write_with_kv(df: DataFrame, path: str, kv: dict[str, str], mode: str,
+                   metadata_sidecar: bool) -> None:
+    """One ``mapInArrow(...).collect()`` job: task *i* writes
+    ``part-{i:05d}-<job>-c000.snappy.parquet`` once with
+    ``pq.ParquetWriter`` (snappy, no dictionary, 1 MiB pages, 512 Ki-row
+    row groups; Spark's two schema-metadata keys, then ``kv``) into a
+    sibling staging directory and returns its footer, from which the
+    driver builds ``_metadata``.  The driver adds ``_SUCCESS`` and renames
+    the staging directory over ``path``; a failure removes it instead."""
+    import shutil
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    path = os.path.abspath(path)
+    if mode != "overwrite" and os.path.exists(path):
+        raise FileExistsError(f"{path} exists and mode is {mode!r}")
+    schema = to_arrow_schema(df.schema).with_metadata({
+        "org.apache.spark.version": df.sparkSession.version,
+        "org.apache.spark.sql.parquet.row.metadata": df._jdf.schema().json(),
+        **{k: str(v) for k, v in kv.items()},
+    })
+    job = str(uuid.uuid4())
+    staging = os.path.join(
+        os.path.dirname(path), f".{os.path.basename(path)}.staging-{job}"
+    )
+
+    def write(batches):
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        name = f"part-{ctx.partitionId():05d}-{job}-c000.snappy.parquet"
+        tmp = os.path.join(staging, f".{name}.{ctx.attemptNumber()}.tmp")
+        writer, pending, rows = None, [], 0
+
+        def flush(n):
+            # whole row groups from buffered batches: each write_table
+            # call cuts a row group; a contiguous table pages like write_table
+            nonlocal writer, pending, rows
+            writer = writer or pq.ParquetWriter(tmp, schema, **PYARROW_OPTIONS)
+            if n:
+                table = pa.Table.from_batches(pending, schema).combine_chunks()
+                writer.write_table(table.slice(0, n), row_group_size=ROW_GROUP_ROWS)
+                pending, rows = table.slice(n).to_batches(), rows - n
+
+        try:
+            for batch in batches:
+                pending.append(batch)
+                rows += batch.num_rows
+                if rows >= ROW_GROUP_ROWS:
+                    flush(rows - rows % ROW_GROUP_ROWS)
+            if rows or ctx.partitionId() == 0:  # Spark's rule: part 0 always
+                flush(rows)
+        finally:
+            if writer is not None:
+                writer.close()
+        if writer is None:
+            return
+        os.replace(tmp, os.path.join(staging, name))
+        footer = pa.BufferOutputStream()
+        writer.writer.metadata.write_metadata_file(footer)
+        yield pa.RecordBatch.from_pydict(
+            {"file": [name], "footer": [footer.getvalue().to_pybytes()]}
+        )
+
+    os.makedirs(staging)
+    try:
+        footers = {
+            r.file: pq.read_metadata(pa.BufferReader(bytes(r.footer)))
+            for r in df.mapInArrow(write, "file string, footer binary").collect()
+        }
+        if not footers:  # no partition at all: one empty file, as Spark writes
+            name = f"part-00000-{job}-c000.snappy.parquet"
+            pq.ParquetWriter(os.path.join(staging, name), schema, **PYARROW_OPTIONS).close()
+            footers[name] = pq.read_metadata(os.path.join(staging, name))
+        if metadata_sidecar:
+            _write_metadata_sidecar(staging, footers)
+        open(os.path.join(staging, "_SUCCESS"), "wb").close()
+        old = staging + "-old"
+        if os.path.exists(path):
+            os.rename(path, old)
+        try:
+            os.rename(staging, path)
+        except OSError:
+            if os.path.exists(old):
+                os.rename(old, path)
+            raise
+        shutil.rmtree(old, ignore_errors=True)
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+
+
+def _write_metadata_sidecar(path: str, footers: dict | None = None) -> None:
     """Aggregate every file's footer into a ``_metadata`` summary file
     (relative file paths, all row groups) — readable by pyarrow and by
     the reference's sidecar-first schema logic.  Spark and pyarrow both
     skip ``_``-prefixed files during data discovery, so the sidecar
-    never shadows the data."""
+    never shadows the data.  ``footers`` (file name -> ``FileMetaData``)
+    are the footers of files just written; without them each file's
+    footer is read back."""
     import pyarrow.parquet as pq
 
-    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
-    if not files:
-        return
+    if footers is None:
+        footers = {
+            os.path.basename(f): pq.read_metadata(f)
+            for f in glob.glob(os.path.join(path, "*.parquet"))
+        }
     collector = []
     schema = None
     first_file = None
-    for f in files:
-        md = pq.read_metadata(f)
-        md.set_file_path(os.path.basename(f))
+    for name in sorted(footers):
+        md = footers[name]
+        md.set_file_path(name)
         collector.append(md)
-        file_schema = pq.ParquetFile(f).schema_arrow
+        file_schema = md.schema.to_arrow_schema()
         if schema is None:
-            schema, first_file = file_schema, f
+            schema, first_file = file_schema, name
         elif not file_schema.equals(schema):
             # a sidecar recorded from the first file would misdescribe
             # the rest (e.g. append-mode runs with drifted schemas)
             raise ValueError(
-                f"_metadata sidecar: schema of {f} differs from "
+                f"_metadata sidecar: schema of {name} differs from "
                 f"{first_file} — unify schemas (or skip the sidecar) "
                 "before writing a directory-level footer"
             )
+    if schema is None:
+        return
     pq.write_metadata(
         schema, os.path.join(path, "_metadata"), metadata_collector=collector
     )
-
-
-def _rewrite_file_with_kv(f: str, kv: dict[str, str]) -> None:
-    """Rewrite ONE parquet file with merged footer KV metadata.  Runs
-    wherever the file is reachable — driver or executor.
-
-    Write-to-temp + atomic rename, NOT an in-place truncate: under
-    speculative execution / task retry two attempts may process the
-    same file concurrently, and an in-place rewrite would let one
-    attempt read the other's half-written bytes.  With the rename, a
-    concurrent reader sees either the original or a fully-stamped file,
-    and re-stamping an already-stamped file is a no-op merge — the
-    rewrite is idempotent."""
-    import uuid
-
-    import pyarrow.parquet as pq
-
-    table = pq.read_table(f)
-    merged = dict(table.schema.metadata or {})
-    merged.update({k.encode(): str(v).encode() for k, v in kv.items()})
-    tmp = os.path.join(
-        os.path.dirname(f), f".{os.path.basename(f)}.{uuid.uuid4().hex}.tmp"
-    )
-    try:
-        pq.write_table(
-            table.replace_schema_metadata(merged),
-            tmp,
-            compression="snappy",
-            use_dictionary=False,
-            row_group_size=512 * 1024,
-            data_page_size=PAGE_BYTES,
-        )
-        os.replace(tmp, f)
-    finally:
-        if os.path.exists(tmp):
-            os.remove(tmp)
-    # the rewrite invalidates Hadoop's checksum sidecar; a stale .crc
-    # makes every later Spark read fail with ChecksumException, so drop it
-    crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-
-
-def _stamp_kv_metadata(path: str, kv: dict[str, str], spark=None) -> None:
-    """Stamp footer KV into every file of ``path``.  With a session the
-    rewrites fan out one-file-per-task (the driver would otherwise
-    re-read AND re-compress the entire dataset through one process —
-    O(data) on one node, a non-starter at 100 TB; same shared-filesystem
-    requirement as the parallel HDF5 export).  Without a session, or
-    for a single file, the driver does it directly."""
-    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
-    if not files:
-        return
-    if spark is None or len(files) == 1:
-        for f in files:
-            _rewrite_file_with_kv(f, kv)
-        return
-    kv = dict(kv)
-    abs_files = [os.path.abspath(f) for f in files]
-
-    def rewrite(batches):
-        import pandas as pd
-
-        n = 0
-        for pdf in batches:
-            for f in pdf["file"]:
-                _rewrite_file_with_kv(f, kv)
-                n += 1
-        yield pd.DataFrame({"rewritten": [n]})
-
-    total = (
-        spark.createDataFrame([(f,) for f in abs_files], "file string")
-        .repartition(len(abs_files), "file")
-        .mapInPandas(rewrite, "rewritten long")
-        .groupBy()
-        .sum("rewritten")
-        .collect()[0][0]
-    )
-    if total != len(abs_files):
-        raise RuntimeError(
-            f"kv-metadata stamping rewrote {total} of {len(abs_files)} files"
-        )
 
 
 def write_partitioned_dataset(

@@ -1,5 +1,4 @@
 from parquet_converters_spark.sources.touch_binary import (  # noqa: F401
-    TouchBinaryDataSource,
     read_touches,
     read_touch_header,
 )

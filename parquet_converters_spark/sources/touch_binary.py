@@ -15,13 +15,14 @@ sidecar header/index file (``src/touches/touch_reader.cpp:46-145``):
   (file_pos - shifts[pre_gid])`` with a hard error when a gid exceeds
   2^24 touches (``touch_reader.cpp:275-287``).
 
-Spark-first design: a PySpark 4 Python DataSource.  Partition planning is
-driver-side and *byte-range based* — each input partition owns a disjoint
-record range of one file (the same static range split the reference does
-across MPI ranks, ``src/touch2parquet.cpp:110-115``), so a 100 TB touch
-corpus scans with full parallelism and no shuffle.  Record decode is
-vectorized: ``np.frombuffer`` with a structured dtype (endian handled by
-dtype byte order, cf. the reference's flat-uint32 byteswap at
+Spark-first design: a ``mapInArrow`` over ``spark.range``, planned by the
+JVM (no Python DataSource).  Partition planning is driver-side and
+*byte-range based* — each input partition owns a disjoint record range of
+one file (the same static range split the reference does across MPI
+ranks, ``src/touch2parquet.cpp:110-115``), so a 100 TB touch corpus scans
+with full parallelism and no shuffle.  Record decode is vectorized:
+``np.frombuffer`` with a structured dtype (endian handled by dtype byte
+order, cf. the reference's flat-uint32 byteswap at
 ``touch_reader.cpp:261-273``), emitted to Spark as Arrow RecordBatches.
 """
 
@@ -48,6 +49,8 @@ SYNAPSE_INDEX_BITS = 24
 
 #: default records per input partition, sized to ~128 MB of v2 records
 DEFAULT_RECORDS_PER_PARTITION = 1_600_000
+#: records per decoded Arrow batch
+BATCH_ROWS = 512 * 1024
 
 
 @dataclass
@@ -89,7 +92,7 @@ def read_touch_header(data_path: str) -> TouchHeader:
     """Parse the sidecar header/index file for one touch data file.
 
     Driver-side (the sidecar is tiny); the shifts table ships to executors
-    inside each InputPartition.
+    inside each partition's range.
     """
     with open(_index_path(data_path), "rb") as f:
         raw = f.read()
@@ -244,74 +247,37 @@ def _decode_batch(buf: bytes, header_tuple, start: int, n: int):
     return pa.RecordBatch.from_arrays(list(cols.values()), names=list(cols.keys()))
 
 
-try:  # the DataSource API needs pyspark at import time
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    class _TouchPartition(InputPartition):
-        def __init__(self, path, start, n, header_tuple):
-            self.path = path
-            self.start = start
-            self.n = n
-            self.header_tuple = header_tuple
-
-    class _TouchReader(DataSourceReader):
-        def __init__(self, options):
-            self.path_option = options.get("path")
-            self.records_per_partition = int(
-                options.get("recordsperpartition", DEFAULT_RECORDS_PER_PARTITION)
-            )
-            self.batch_rows = int(options.get("batchrows", 512 * 1024))
-
-        def partitions(self):
-            parts = []
-            for path in _expand_paths(self.path_option):
-                h = read_touch_header(path)
-                ht = (h.version, h.endian_swap, h.record_size,
-                      h.shift_ids, h.shift_values)
-                step = self.records_per_partition
-                for s in range(0, h.record_count, step):
-                    n = min(step, h.record_count - s)
-                    parts.append(_TouchPartition(path, s, n, ht))
-            return parts or [None]
-
-        def read(self, partition):
-            if partition is None:
-                return
-            record_size = partition.header_tuple[2]
-            with open(partition.path, "rb") as f:
-                f.seek(partition.start * record_size)
-                done = 0
-                while done < partition.n:
-                    n = min(self.batch_rows, partition.n - done)
-                    buf = f.read(n * record_size)
-                    yield _decode_batch(
-                        buf, partition.header_tuple, partition.start + done, n
-                    )
-                    done += n
-
-    class TouchBinaryDataSource(DataSource):
-        """``spark.read.format("touch_binary").load(path)`` source."""
-
-        @classmethod
-        def name(cls):
-            return "touch_binary"
-
-        def schema(self):
-            first = _expand_paths(self.options.get("path"))[0]
-            return touch_schema(read_touch_header(first).version)
-
-        def reader(self, schema):
-            return _TouchReader(self.options)
-
-except ImportError:  # pragma: no cover
-    TouchBinaryDataSource = None
-
-
 def read_touches(spark, path: str, records_per_partition: int | None = None):
     """Read touch binary file(s) into a DataFrame (raw pre-rename schema +
-    file_pos + synapse_id)."""
-    spark.dataSource.register(TouchBinaryDataSource)
-    reader = spark.read.format("touch_binary").option("path", path)
-    if records_per_partition:
-        reader = reader.option("recordsPerPartition", str(records_per_partition))
-    return reader.load()
+    file_pos + synapse_id).
+
+    The ``(path, start, n, header_tuple)`` range list is planned on the
+    driver (the reference's per-rank static split,
+    ``src/touch2parquet.cpp:110-115``); partition *i* of a ``spark.range``
+    decodes range *i*, so partition order is global row order and the
+    sorted part-file names of a write keep it."""
+    paths = _expand_paths(path)
+    step = records_per_partition or DEFAULT_RECORDS_PER_PARTITION
+    parts = []
+    for p in paths:
+        h = read_touch_header(p)
+        ht = (h.version, h.endian_swap, h.record_size, h.shift_ids, h.shift_values)
+        parts += [
+            (p, s, min(step, h.record_count - s), ht)
+            for s in range(0, h.record_count, step)
+        ]
+
+    def decode_touch_binary(batches):
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                part_path, start, n, ht = parts[i]
+                with open(part_path, "rb") as f:
+                    f.seek(start * ht[2])
+                    for done in range(0, n, BATCH_ROWS):
+                        k = min(BATCH_ROWS, n - done)
+                        yield _decode_batch(f.read(k * ht[2]), ht, start + done, k)
+
+    version = read_touch_header(paths[0]).version
+    return spark.range(len(parts), numPartitions=max(len(parts), 1)).mapInArrow(
+        decode_touch_binary, touch_schema(version)
+    )

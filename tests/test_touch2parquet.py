@@ -49,14 +49,15 @@ def test_v1_synapse_ids_unique_and_packed(v1_out):
     assert all(s >> 24 == g for s, g in zip(sid, gid))
 
 
-def test_physical_layout(v1_out):
+def _assert_physical_layout(out):
     """W1 writer parity: snappy, dictionary off, small-int logical types
-    (parquet_writer.cpp:122-124, :34-41,52-53)."""
+    (parquet_writer.cpp:122-124, :34-41,52-53), KV footer
+    (parquet_writer.cpp:115-120); returns the footer KV."""
     import glob
 
     import pyarrow as pa
 
-    f = pq.ParquetFile(glob.glob(os.path.join(v1_out, "*.parquet"))[0])
+    f = pq.ParquetFile(glob.glob(os.path.join(out, "*.parquet"))[0])
     arrow = f.schema_arrow
     assert arrow.field("efferent_section_id").type == pa.int16()
     assert arrow.field("branch_order").type == pa.int8()
@@ -72,10 +73,14 @@ def test_physical_layout(v1_out):
             assert col.compression == "SNAPPY"
             assert "PLAIN_DICTIONARY" not in col.encodings
             assert "RLE_DICTIONARY" not in col.encodings
-    # KV metadata stamped (parquet_writer.cpp:115-120)
     kv = f.schema_arrow.metadata or {}
     assert b"touch2parquet_version" in kv
     assert b"touchdetector_version" in kv
+    return kv
+
+
+def test_physical_layout(v1_out):
+    _assert_physical_layout(v1_out)
 
 
 def test_v2_branch_type_unpack(spark):
@@ -126,14 +131,19 @@ def test_limit(spark):
 def test_validation_raises(spark):
     """P6: section/segment ids beyond 0x7fff abort the conversion
     (parquet_writer.cpp:207-219)."""
+    from pyspark.errors import SparkRuntimeException
+
     from parquet_converters_spark.operators import validate_sections
 
     df = spark.createDataFrame(
         [(1, 0x8000, 1, 1)],
         "pre_section: int, pre_segment: int, post_section: int, post_segment: int",
     )
-    with pytest.raises(ValueError, match="endianess"):
-        validate_sections(df.withColumn("pre_section", df.pre_segment * 0 + 0x8000))
+    checked = validate_sections(
+        df.withColumn("pre_section", df.pre_segment * 0 + 0x8000)
+    )  # lazy: the check rides the job that consumes the frame
+    with pytest.raises(SparkRuntimeException, match="endianess"):
+        checked.collect()
 
 
 def test_bad_section_counter_matches_validation(spark):
@@ -141,6 +151,8 @@ def test_bad_section_counter_matches_validation(spark):
     validate_sections(strict=False) drops — one predicate for both — on
     a planted violation in each of the four id columns plus a negative
     id, which neither treats as a violation; strict=True raises."""
+    from pyspark.errors import SparkRuntimeException
+
     from parquet_converters_spark.observability import observe_conversion
     from parquet_converters_spark.operators import validate_sections
 
@@ -163,8 +175,8 @@ def test_bad_section_counter_matches_validation(spark):
     dropped = 7 - validate_sections(df, strict=False).count()
     assert dropped == 4
     assert obs.get["n_bad_sections"] == dropped
-    with pytest.raises(ValueError, match="endianess"):
-        validate_sections(df, strict=True)
+    with pytest.raises(SparkRuntimeException, match="endianess"):
+        validate_sections(df, strict=True).collect()
 
 
 def test_cli_end_to_end(spark, tmp_path):
@@ -280,10 +292,9 @@ def test_touch2parquet_writes_metadata_sidecar(spark, tmp_path):
 
 
 def test_kv_stamping_distributed_multi_file(spark, tmp_path):
-    """The executor fan-out path of the KV stamp (session + >1 file):
-    every file gets the merged footer, the sidecar reflects the stamped
-    footers, and Spark reads the directory back cleanly (no stale
-    .crc)."""
+    """The footer-KV writer over several partitions: every file gets the
+    merged footer, the sidecar reflects the written footers, and Spark
+    reads the directory back cleanly."""
     import glob as _glob
 
     import pyarrow.parquet as pq
@@ -306,7 +317,7 @@ def test_kv_stamping_distributed_multi_file(spark, tmp_path):
         assert md[b"k"] == b"v"
     assert os.path.isfile(os.path.join(out, "_metadata"))
     assert spark.read.parquet(out).count() == 1000
-    # no stray tmp files left behind by the atomic-rename rewrite
+    # no stray tmp files left behind by the task-side rename
     assert not _glob.glob(os.path.join(out, "*.tmp"))
 
 
@@ -330,3 +341,178 @@ def test_cli_image_dedup(spark, tmp_path):
     assert rc == 0
     kept = {r.media_id for r in spark.read.parquet(out).collect()}
     assert kept == {1, 3}
+
+
+def _tree_bytes(root):
+    """``{relative path: bytes}`` of every file below ``root``."""
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            p = os.path.join(d, f)
+            out[os.path.relpath(p, root)] = open(p, "rb").read()
+    return out
+
+
+def test_strict_failure_leaves_no_torn_output(spark, tmp_path):
+    """A planted pre_section of 0x8000 fails the one write job: the call
+    raises ValueError, a fresh destination stays absent, a previous good
+    output stays byte-equal, and no staging directory is left behind."""
+    from parquet_converters_spark.pipelines import touch2parquet
+    from tests.test_sonata import _job_count
+    from tests.touch_fixtures import plant_pre_section, write_seeded_corpus
+
+    good, bad = tmp_path / "good", tmp_path / "bad"
+    good.mkdir()
+    bad.mkdir()
+    write_seeded_corpus(str(good), 31, 3, 2, 400)
+    paths = write_seeded_corpus(str(bad), 31, 3, 2, 400)
+    plant_pre_section(paths[1], 3, 123, 0x8000)
+
+    def fails(out):
+        with pytest.raises(ValueError, match="endianess"):
+            touch2parquet(spark, str(bad), out)
+
+    fresh = str(tmp_path / "fresh")
+    assert _job_count(spark, lambda: fails(fresh)) == 1
+    assert not os.path.exists(fresh)
+
+    kept = str(tmp_path / "kept")
+    touch2parquet(spark, str(good), kept)
+    before = _tree_bytes(kept)
+    assert any(name.endswith(".parquet") for name in before)
+    assert _job_count(spark, lambda: fails(kept)) == 1
+    assert _tree_bytes(kept) == before
+    assert not [n for n in os.listdir(tmp_path) if "staging" in n]
+
+
+def test_touch2parquet_job_budget(spark, tmp_path):
+    """touch2parquet is ONE Spark job (scan, check, projection, write),
+    pins nothing, and its _metadata equals the sidecar rebuilt from the
+    written files' footers."""
+    from parquet_converters_spark.pipelines import touch2parquet
+    from parquet_converters_spark.sinks.parquet_sink import (
+        _write_metadata_sidecar,
+    )
+    from tests.reference_decode import decode_file
+    from tests.test_sonata import _job_count
+    from tests.touch_fixtures import write_seeded_corpus
+
+    paths = write_seeded_corpus(str(tmp_path), 41, 3, 2, 500)
+    out = str(tmp_path / "edges")
+    jsc = spark.sparkContext._jsc
+    pinned = set(jsc.getPersistentRDDs().keySet().toArray())
+    assert _job_count(spark, lambda: touch2parquet(spark, str(tmp_path), out)) == 1
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) == pinned
+
+    files = sorted(f for f in os.listdir(out) if f.endswith(".parquet"))
+    assert len(files) == 2
+    got = [
+        s for f in files
+        for s in pq.read_table(os.path.join(out, f)).column("synapse_id").to_pylist()
+    ]
+    assert got == [r["synapse_id"] for p in paths for r in decode_file(p)]
+
+    sidecar = os.path.join(out, "_metadata")
+    written = pq.read_metadata(sidecar)
+    written_bytes = open(sidecar, "rb").read()
+    _write_metadata_sidecar(out)
+    rebuilt = pq.read_metadata(sidecar)
+    assert written.schema.equals(rebuilt.schema)
+    assert written.metadata == rebuilt.metadata
+    assert written.num_row_groups == rebuilt.num_row_groups == 2
+    for i in range(written.num_row_groups):
+        assert written.row_group(i).to_dict() == rebuilt.row_group(i).to_dict()
+    assert written.row_group(1).column(0).file_path == files[1]
+    assert open(sidecar, "rb").read() == written_bytes
+
+
+def test_kv_writer_buffers_row_groups(spark, tmp_path):
+    """The footer-KV writer cuts 512 Ki-row row groups from many small
+    Arrow batches, paged exactly as pq.write_table pages the same table."""
+    import glob as _glob
+
+    from parquet_converters_spark.sinks.parquet_sink import (
+        PAGE_BYTES,
+        write_canonical_parquet,
+    )
+
+    df = spark.range(600_000, numPartitions=1).selectExpr(
+        "id", "cast(id % 977 as int) as v", "cast(id / 3 as float) as f"
+    )
+    out = str(tmp_path / "rg")
+    write_canonical_parquet(df, out, kv_metadata={"k": "v"})
+    (f,) = _glob.glob(os.path.join(out, "part-*.parquet"))
+    md = pq.read_metadata(f)
+    assert [md.row_group(i).num_rows for i in range(md.num_row_groups)] == [
+        524_288, 75_712,
+    ]
+    ref = str(tmp_path / "ref.parquet")
+    pq.write_table(
+        pq.read_table(f).combine_chunks(), ref, compression="snappy",
+        use_dictionary=False, data_page_size=PAGE_BYTES,
+        row_group_size=512 * 1024,
+    )
+    ref_md = pq.read_metadata(ref)
+    assert ref_md.num_row_groups == md.num_row_groups
+    ours, theirs = open(f, "rb").read(), open(ref, "rb").read()
+    for rg in range(md.num_row_groups):
+        for c in range(md.num_columns):
+            a, b = md.row_group(rg).column(c), ref_md.row_group(rg).column(c)
+            assert a.total_compressed_size == b.total_compressed_size
+            assert (
+                ours[a.data_page_offset:a.data_page_offset + a.total_compressed_size]
+                == theirs[b.data_page_offset:b.data_page_offset + b.total_compressed_size]
+            )
+
+
+def test_physical_layout_generated(spark, tmp_path):
+    """test_physical_layout on a generated V1 file."""
+    from parquet_converters_spark.pipelines import touch2parquet
+    from tests.touch_fixtures import write_seeded_corpus
+
+    (path,) = write_seeded_corpus(str(tmp_path), 51, 1, 1, 300)
+    out = str(tmp_path / "v1gen")
+    touch2parquet(spark, path, out)
+    kv = _assert_physical_layout(out)
+    assert kv[b"touch2parquet_version"] == b"parquet_converters_spark"
+    assert kv[b"touchdetector_version"] == b"4.0.0"
+
+
+def test_kv_metadata_with_bloom_filters_raises(spark, tmp_path):
+    """The footer-KV writer cannot write Bloom filters, so asking for both
+    is an error before any job runs, not a silent drop."""
+    from parquet_converters_spark.sinks.parquet_sink import (
+        write_canonical_parquet,
+    )
+    from tests.test_sonata import _job_count
+
+    out = str(tmp_path / "bloom_kv")
+
+    def run():
+        with pytest.raises(ValueError, match="Bloom"):
+            write_canonical_parquet(
+                spark.range(100), out, kv_metadata={"k": "v"},
+                bloom_filter_columns=["id"],
+            )
+
+    assert _job_count(spark, run) == 0
+    assert not os.path.exists(out)
+
+
+def test_kv_writer_zero_partition_frame(spark, tmp_path):
+    """A frame with no partitions still leaves one empty file carrying the
+    schema and footer KV, as Spark's writer does, so it reads back."""
+    import glob as _glob
+
+    from parquet_converters_spark.sinks.parquet_sink import (
+        write_canonical_parquet,
+    )
+
+    df = spark.range(0)
+    assert df.rdd.getNumPartitions() == 0
+    out = str(tmp_path / "empty")
+    write_canonical_parquet(df, out, kv_metadata={"k": "v"})
+    (f,) = _glob.glob(os.path.join(out, "part-*.parquet"))
+    assert pq.read_schema(f).metadata[b"k"] == b"v"
+    assert pq.read_metadata(os.path.join(out, "_metadata")).num_rows == 0
+    assert spark.read.parquet(out).count() == 0

@@ -21,9 +21,7 @@ except Exception:  # pragma: no cover
     pytest.skip("hypothesis not installed", allow_module_level=True)
 
 from tests.reference_decode import decode_file
-
-_VERSION_STRINGS = {1: b"4.0.0", 2: b"4.99.0", 3: b"6.0.0"}
-_RECORD_SIZE = {1: 40, 2: 80, 3: 104}
+from tests.touch_fixtures import write_touch_pair
 
 _I32 = st.integers(-(2**31), 2**31 - 1)
 _SMALL = st.integers(0, 1 << 20)
@@ -61,22 +59,6 @@ def _touch_file(draw):
     return version, runs, b"".join(records)
 
 
-def _write_touch_pair(tmpdir, version, runs, payload):
-    rs = _RECORD_SIZE[version]
-    index = struct.pack("<dq", 1.001, len(runs))
-    index += _VERSION_STRINGS[version].ljust(16, b"\x00")
-    pos = 0
-    for g, count in runs:
-        index += struct.pack("<iIq", g, count, pos * rs)
-        pos += count
-    data_path = os.path.join(tmpdir, "touchesData.0")
-    with open(os.path.join(tmpdir, "touches.0"), "wb") as f:
-        f.write(index)
-    with open(data_path, "wb") as f:
-        f.write(payload)
-    return data_path
-
-
 @settings(max_examples=8, deadline=None)
 @given(_touch_file())
 def test_spark_scan_matches_reference_decoder(spark, tmp_path_factory, tf):
@@ -84,7 +66,7 @@ def test_spark_scan_matches_reference_decoder(spark, tmp_path_factory, tf):
 
     version, runs, payload = tf
     tmpdir = str(tmp_path_factory.mktemp("fuzz_touch"))
-    data_path = _write_touch_pair(tmpdir, version, runs, payload)
+    data_path = write_touch_pair(tmpdir, version, runs, payload)
 
     expected = sorted(decode_file(data_path), key=lambda r: r["synapse_id"])
     got = sorted(
