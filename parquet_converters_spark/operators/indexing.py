@@ -13,24 +13,26 @@ over the edge table's *global row order*:
   ``[0, node_count)``, absent nodes get ``(0, 0)``
   (``index.cpp:282-299``).
 
-The scan path (:func:`build_sonata_indices`, ``method="scan"``) does each
-of the reference's steps once, over partitions that each hold one
-contiguous, sorted slice of the row order (the bundle's table write
-already has them):
+The scan path does each of the reference's steps once, over partitions
+that each hold one contiguous, sorted slice of the row order (the ordered
+scan's slices):
 
-1. **Local RLE** — one ``mapInArrow`` pass run-length encodes every
-   index key at once.  Only a partition's first and last run of each key
-   can continue into a neighbouring partition; those runs, tagged with
-   the partition's run count, are the job's single collect and are
-   chain-merged on the driver (the boundary fix-up).
-2. **Numbering** — one range exchange of the runs on
-   ``(direction, node_id, range_start)``; one collect of per-partition
-   summaries gives the driver prefix sum (the Allgather).
-3. **Tables in build order** — ``range_to_edge_id`` numbers each
-   exchanged partition from its offset, and ``node_id_to_ranges`` emits
-   the dense node ids each partition owns, absent ones as ``(0, 0)``.
-   Both come out already in key order, so they are written without a
-   join or another sort.
+1. **Local RLE** — :func:`_rle_batches` run-length encodes every index
+   key of one partition at once.  The SONATA bundle writer runs it inside
+   its table pass, ``run_length_ranges_scan`` and ``method="scan"`` in a
+   ``mapInArrow`` of their own.  Only a partition's first and last run of
+   each key can continue into a neighbouring partition; those runs,
+   tagged with the partition's run count, are collected and chain-merged
+   on the driver (:func:`_runs_to_ranges`, the boundary fix-up).
+2. **Numbering** — :func:`build_sonata_indices`: one range exchange of
+   the runs on ``(direction, node_id, range_start)``; one collect of
+   per-partition summaries gives the driver prefix sum (the Allgather).
+3. **Tables in build order** — :func:`_index_batches`, one Arrow kernel
+   per numbered partition: ``range_to_edge_id`` numbers the partition's
+   ranges from its offset, and ``node_id_to_ranges`` emits the dense node
+   ids the partition owns, absent ones as ``(0, 0)``.  Both come out
+   already in key order, so the bundle writer writes all four tables in
+   one job without a join or another sort.
 
 ``method="window"`` is the DataFrame-only oracle the tests compare
 against: a gaps-and-islands window partitioned by node, a global rank,
@@ -44,10 +46,11 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-_RUNS = "_dir int, node_id {node_t}, range_start long, range_end long"
-# _edge: bit 1 = the partition's first run of that key, bit 2 = its last;
+# _edge: bit 1 = the partition's first run of that key, bit 2 = its last
+# (the bundle writer's table pass adds 4 for its partition summaries);
 # _n: the partition's run count of that key, on its first run only
-_LOCAL_RUNS = _RUNS + ", _edge int, _n long"
+_LOCAL_RUNS = ("_dir int, node_id {node_t}, range_start long, "
+               "range_end long, _edge int, _n long")
 _SUMMARY = "_pid int, _dir int, n long, first long, last long, lead long"
 _EMIT_CHUNK = 1 << 20
 
@@ -100,70 +103,62 @@ def run_length_ranges(df: DataFrame, key: str, row_col: str) -> DataFrame:
     )
 
 
-def _local_runs(ordered: DataFrame, keys: list[str], row_col: str):
-    """G1 + the boundary half of G4, for every key in one pass.
+def _rle_batches(t, n_keys: int):
+    """G1 for one partition: ``t``'s first column is the row position
+    (sorted), the next ``n_keys`` the index keys.  Yields the maximal
+    runs of each key as ``_LOCAL_RUNS`` batches: ``_dir`` indexes the
+    keys, a run breaks where the key changes or the position jumps."""
+    import numpy as np
+    import pyarrow as pa
 
-    ``ordered`` must hold contiguous, sorted ``row_col`` slices per
-    partition, and the same ones each time it runs (persisted, or a
-    plain scan): the boundary runs collected here and the interior runs
-    the returned frame recomputes must come from one partitioning.
+    if not t.num_rows:
+        return
+    pos = t.column(0).to_numpy()
+    pos_gap = pos[1:] != pos[:-1] + 1
+    for d in range(n_keys):
+        nodes = t.column(d + 1).chunk(0)
+        codes = (
+            nodes.dictionary_encode().indices
+            if pa.types.is_string(nodes.type)
+            or pa.types.is_large_string(nodes.type)
+            else nodes
+        ).to_numpy(zero_copy_only=False)
+        # run starts: node changes or position gaps
+        brk = np.flatnonzero((codes[1:] != codes[:-1]) | pos_gap) + 1
+        starts = np.concatenate(([0], brk))
+        ends = np.concatenate((brk, [len(pos)]))
+        n = len(starts)
+        edge = np.zeros(n, dtype="int32")
+        edge[0] |= 1
+        edge[-1] |= 2
+        count = np.zeros(n, dtype="int64")
+        count[0] = n
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.full(n, d, dtype="int32")),
+                nodes.take(pa.array(starts)),
+                pa.array(pos[starts], type=pa.int64()),
+                pa.array(pos[ends - 1] + 1, type=pa.int64()),
+                pa.array(edge),
+                pa.array(count),
+            ],
+            names=["_dir", "node_id", "range_start", "range_end",
+                   "_edge", "_n"],
+        )
+
+
+def _runs_to_ranges(runs: DataFrame, edge_rows):
+    """The boundary half of G4: chain-merge the collected first/last runs
+    of every partition (``edge_rows``, rows of ``runs`` with ``_edge`` in
+    1..3) on the driver and union them with ``runs``' interior runs.
     Returns ``(ranges, n_ranges)``: the maximal runs ``(_dir, node_id,
-    range_start, range_end)`` — ``_dir`` indexes ``keys`` — and their
-    count.  One Spark job: the collect of the boundary runs."""
-    spark = ordered.sparkSession
-    node_t = dict(ordered.dtypes)[keys[0]]
+    range_start, range_end)`` and their count."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    def rle(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        batches = [b for b in batches if b.num_rows]
-        if not batches:
-            return
-        t = pa.Table.from_batches(batches).combine_chunks()
-        pos = t.column(0).to_numpy()
-        pos_gap = pos[1:] != pos[:-1] + 1
-        for d in range(len(keys)):
-            nodes = t.column(d + 1).chunk(0)
-            codes = (
-                nodes.dictionary_encode().indices
-                if pa.types.is_string(nodes.type)
-                or pa.types.is_large_string(nodes.type)
-                else nodes
-            ).to_numpy(zero_copy_only=False)
-            # run starts: node changes or position gaps
-            brk = np.flatnonzero((codes[1:] != codes[:-1]) | pos_gap) + 1
-            starts = np.concatenate(([0], brk))
-            ends = np.concatenate((brk, [len(pos)]))
-            n = len(starts)
-            edge = np.zeros(n, dtype="int32")
-            edge[0] |= 1
-            edge[-1] |= 2
-            count = np.zeros(n, dtype="int64")
-            count[0] = n
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.full(n, d, dtype="int32")),
-                    nodes.take(pa.array(starts)),
-                    pa.array(pos[starts], type=pa.int64()),
-                    pa.array(pos[ends - 1] + 1, type=pa.int64()),
-                    pa.array(edge),
-                    pa.array(count),
-                ],
-                names=["_dir", "node_id", "range_start", "range_end",
-                       "_edge", "_n"],
-            )
-
-    runs = ordered.select(row_col, *keys).mapInArrow(
-        rle, schema=_LOCAL_RUNS.format(node_t=node_t)
-    )
-    edge_rows = sorted(
-        runs.filter(F.col("_edge") > 0).collect(),
-        key=lambda r: (r["_dir"], r["range_start"]),
-    )
     n_ranges = 0
     merged: list[tuple] = []
-    for r in edge_rows:
+    for r in sorted(edge_rows, key=lambda r: (r["_dir"], r["range_start"])):
         n_ranges += r["_n"]
         prev = merged[-1] if merged else None
         if (
@@ -179,14 +174,40 @@ def _local_runs(ordered: DataFrame, keys: list[str], row_col: str):
                 (r["_dir"], r["node_id"], r["range_start"], r["range_end"])
             )
     cols = ["_dir", "node_id", "range_start", "range_end"]
-    ranges = (
-        runs.filter(F.col("_edge") == 0)
-        .select(*cols)
-        .unionByName(
-            spark.createDataFrame(merged, schema=_RUNS.format(node_t=node_t))
-        )
+    interior = runs.filter(F.col("_edge") == 0).select(*cols)
+    # an Arrow table becomes a local relation: no Python worker reads it
+    boundary = pa.Table.from_pylist(
+        [dict(zip(cols, m)) for m in merged],
+        schema=to_arrow_schema(interior.schema),
     )
-    return ranges, n_ranges
+    return (
+        interior.unionByName(runs.sparkSession.createDataFrame(boundary)),
+        n_ranges,
+    )
+
+
+def _local_runs(ordered: DataFrame, keys: list[str], row_col: str):
+    """G1 + G4 for every key in one pass over ``ordered``, which must
+    hold contiguous, sorted ``row_col`` slices per partition, and the
+    same ones each time it runs (persisted, or a plain scan): the
+    boundary runs collected here and the interior runs the returned
+    frame recomputes must come from one partitioning.  Returns
+    ``(ranges, n_ranges)`` as :func:`_runs_to_ranges`.  One Spark job:
+    the collect of the boundary runs."""
+    import pyarrow as pa
+
+    node_t = dict(ordered.dtypes)[keys[0]]
+
+    def rle(batches):
+        batches = [b for b in batches if b.num_rows]
+        if batches:
+            t = pa.Table.from_batches(batches).combine_chunks()
+            yield from _rle_batches(t, len(keys))
+
+    runs = ordered.select(row_col, *keys).mapInArrow(
+        rle, schema=_LOCAL_RUNS.format(node_t=node_t)
+    )
+    return _runs_to_ranges(runs, runs.filter(F.col("_edge") > 0).collect())
 
 
 def run_length_ranges_scan(
@@ -284,42 +305,50 @@ def _summarize(batches):
     )
 
 
-def _range_table(numbered: DataFrame, d: int, plans) -> DataFrame:
-    """``range_to_edge_id`` of direction ``d``: each partition's ranges
-    numbered from its prefix-sum offset, in the exchange's order.  The
-    row position within the partition is the low 33 bits of
-    ``monotonically_increasing_id`` (evaluated after the filter), so
-    numbering stays in the JVM and keeps the order."""
-    pairs = [
-        F.lit(x)
-        for (dd, pid), plan in sorted(plans.items())
-        if dd == d
-        for x in (pid, plan[0])
-    ]
-    # no pairs: the direction has no ranges, so the frame has no rows
-    offset = F.create_map(*pairs)[F.col("_pid")] if pairs else F.lit(0)
-    row = F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1)
-    return numbered.filter(F.col("_dir") == d).select(
-        (offset + row).alias("range_id"),
-        F.col("range_start").alias("edge_start"),
-        F.col("range_end").alias("edge_end"),
+#: the columns of the two index tables, key first; all non-null longs
+INDEX_COLUMNS = {
+    "node_id_to_ranges": ("node_id", "range_lo", "range_hi"),
+    "range_to_edge_id": ("range_id", "edge_start", "edge_end"),
+}
+
+
+def index_schema(name: str):
+    """The Arrow schema of index table ``name``."""
+    import pyarrow as pa
+
+    return pa.schema(
+        [pa.field(c, pa.int64(), nullable=False) for c in INDEX_COLUMNS[name]]
     )
 
 
-def _node_table(numbered: DataFrame, d: int, plans) -> DataFrame:
-    """``node_id_to_ranges`` of direction ``d``: each partition writes
-    the dense node ids it owns, ``(0, 0)`` for nodes without ranges."""
+def _index_batches(t, plans):
+    """Both index tables of one numbered partition ``t`` (``_pid``,
+    ``_dir``, ``node_id``, ``range_start``, ``range_end``, sorted on
+    ``(_dir, node_id, range_start)``): yields ``(d, table name,
+    RecordBatch)``.  ``range_to_edge_id`` numbers the partition's ranges
+    of direction ``d`` from the prefix-sum offset in ``plans``;
+    ``node_id_to_ranges`` covers the dense node ids the partition owns,
+    ``(0, 0)`` for nodes without ranges."""
+    import numpy as np
+    import pyarrow as pa
 
-    def emit(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        batches = [b for b in batches if b.num_rows]
-        if not batches:
-            return
-        t = pa.Table.from_batches(batches).combine_chunks()
-        off, lo, hi, tail_hi = plans[(d, t.column("_pid")[0].as_py())]
-        nodes = t.column("node_id").to_numpy()
+    if not t.num_rows:
+        return
+    pid = t.column("_pid")[0].as_py()
+    dirs = t.column("_dir").to_numpy()
+    for d in np.unique(dirs):
+        lo_row, hi_row = np.searchsorted(dirs, [d, d + 1])
+        seg = t.slice(lo_row, hi_row - lo_row)
+        off, lo, hi, tail_hi = plans[(int(d), pid)]
+        yield int(d), "range_to_edge_id", pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.arange(off, off + seg.num_rows, dtype="int64")),
+                seg.column("range_start").combine_chunks(),
+                seg.column("range_end").combine_chunks(),
+            ],
+            schema=index_schema("range_to_edge_id"),
+        )
+        nodes = seg.column("node_id").to_numpy()
         # nodes are sorted: first index and run length of each
         uniq, first, count = np.unique(
             nodes, return_index=True, return_counts=True
@@ -331,119 +360,69 @@ def _node_table(numbered: DataFrame, d: int, plans) -> DataFrame:
             ids = np.arange(a, min(a + _EMIT_CHUNK, hi), dtype="int64")
             at = np.minimum(np.searchsorted(uniq, ids), len(uniq) - 1)
             has = uniq[at] == ids
-            yield pa.RecordBatch.from_arrays(
+            yield int(d), "node_id_to_ranges", pa.RecordBatch.from_arrays(
                 [
                     pa.array(ids),
                     pa.array(np.where(has, range_lo[at], 0)),
                     pa.array(np.where(has, range_hi[at], 0)),
                 ],
-                names=["node_id", "range_lo", "range_hi"],
+                schema=index_schema("node_id_to_ranges"),
             )
 
-    return (
-        numbered.filter(F.col("_dir") == d)
-        .select("_pid", "node_id")
-        .mapInArrow(
-            emit,
-            "node_id long not null, range_lo long not null, "
-            "range_hi long not null",
+
+def _index_frame(numbered: DataFrame, plans, d: int, name: str) -> DataFrame:
+    """One index table of direction ``d`` as a frame over the numbered
+    exchange, built by :func:`_index_batches`."""
+    import pyarrow as pa
+
+    def emit(batches):
+        batches = [b for b in batches if b.num_rows]
+        if batches:
+            t = pa.Table.from_batches(batches).combine_chunks()
+            for dd, nn, batch in _index_batches(t, plans):
+                if (dd, nn) == (d, name):
+                    yield batch
+
+    return numbered.mapInArrow(
+        emit, ", ".join(f"{c} long not null" for c in INDEX_COLUMNS[name])
+    )
+
+
+def empty_node_batches(node_count: int):
+    """``node_id_to_ranges`` batches of a direction without edges: every
+    node in ``[0, node_count)`` as ``(0, 0)``."""
+    import numpy as np
+    import pyarrow as pa
+
+    for a in range(0, node_count, _EMIT_CHUNK):
+        ids = np.arange(a, min(a + _EMIT_CHUNK, node_count), dtype="int64")
+        zeros = pa.array(np.zeros(len(ids), dtype="int64"))
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(ids), zeros, zeros],
+            schema=index_schema("node_id_to_ranges"),
         )
-    )
-
-
-def _empty_node_table(spark, node_count: int) -> DataFrame:
-    return spark.range(node_count).select(
-        F.col("id").alias("node_id"),
-        F.lit(0).cast("long").alias("range_lo"),
-        F.lit(0).cast("long").alias("range_hi"),
-    )
-
-
-def _scan_indices(ordered: DataFrame, keys, node_counts, row_col,
-                  num_partitions):
-    """Both tables for every key of ``ordered`` (contiguous sorted
-    ``row_col`` slices per partition, stable as :func:`_local_runs`
-    requires).  Returns ``(tables, numbered)``: ``tables[d] =
-    (node_id_to_ranges, range_to_edge_id)`` and the persisted
-    numbering exchange those frames read.  Three Spark jobs: the
-    boundary collect, and the exchange with its summary collect."""
-    spark = ordered.sparkSession
-    ranges, n_ranges = _local_runs(
-        ordered.select(
-            row_col, *[F.col(k).cast("long").alias(k) for k in keys]
-        ),
-        list(keys),
-        row_col,
-    )
-    sort = ["_dir", "node_id", "range_start"]
-    # persist: the summaries and the tables must see the same exchange
-    # (its bounds come from sampling)
-    numbered = (
-        ranges.repartitionByRange(num_partitions(n_ranges), *sort)
-        .sortWithinPartitions(*sort)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    try:
-        plans = _partition_plans(
-            numbered.mapInArrow(_summarize, _SUMMARY).collect(), node_counts
-        )
-    except BaseException:
-        numbered.unpersist()
-        raise
-    tables = [
-        (
-            _node_table(numbered, d, plans)
-            if any(dd == d for dd, _ in plans)
-            else _empty_node_table(spark, node_counts[d]),
-            _range_table(numbered, d, plans),
-        )
-        for d in range(len(keys))
-    ]
-    return tables, numbered
 
 
 def infer_node_count(df: DataFrame, key: str) -> int:
-    """A2: ``max(node_id) + 1`` when no population size metadata exists
-    (``index.cpp:208-213``)."""
-    return count_rows_and_nodes(df, [key])[1][0]
-
-
-def count_rows_and_nodes(df: DataFrame, keys: list[str]) -> tuple[int, list[int]]:
-    """The row count and, per key, ``max + 1`` (0 when empty): A2's node
-    count inference folded with the table count into one Spark job —
-    per-partition partials, summed on the driver."""
+    """A2: ``max(node_id) + 1`` (0 when empty) when no population size
+    metadata exists (``index.cpp:208-213``) — one Spark job:
+    per-partition maxima, reduced on the driver."""
 
     def partial(batches):
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        n, tops = 0, [None] * len(keys)
+        top = None
         for b in batches:
-            n += b.num_rows
-            for i, k in enumerate(keys):
-                m = pc.max(b.column(k)).as_py()
-                if m is not None:
-                    tops[i] = m if tops[i] is None else max(tops[i], m)
+            m = pc.max(b.column(0)).as_py()
+            if m is not None:
+                top = m if top is None else max(top, m)
         yield pa.RecordBatch.from_pylist(
-            [{"n": n, **{f"m{i}": m for i, m in enumerate(tops)}}],
-            schema=pa.schema(
-                [("n", pa.int64())]
-                + [(f"m{i}", pa.int64()) for i in range(len(keys))]
-            ),
+            [{"m": top}], schema=pa.schema([("m", pa.int64())])
         )
 
-    schema = "n long" + "".join(f", m{i} long" for i in range(len(keys)))
-    cols = keys or [F.lit(0).alias("_")]
-    rows = df.select(*cols).mapInArrow(partial, schema).collect()
-    tops = [
-        max((r[f"m{i}"] for r in rows if r[f"m{i}"] is not None), default=None)
-        for i in range(len(keys))
-    ]
-    return (
-        sum(r["n"] for r in rows),
-        [int(m) + 1 if m is not None else 0 for m in tops],
-    )
+    rows = df.select(key).mapInArrow(partial, "m long").collect()
+    return max((r["m"] + 1 for r in rows if r["m"] is not None), default=0)
 
 
 def build_adjacency_index(
@@ -475,15 +454,27 @@ def build_adjacency_index(
     if method == "scan":
         par = spark.sparkContext.defaultParallelism
         ordered = (
-            df.select(key, row_col)
+            df.select(row_col, F.col(key).cast("long").alias(key))
             .repartitionByRange(par, row_col)
             .sortWithinPartitions(row_col)
             .persist()
         )
-        tables, _ = _scan_indices(
-            ordered, [key], [node_count], row_col, lambda n: par
+        ranges, n_ranges = _local_runs(ordered, [key], row_col)
+        numbered, plans = _number_ranges(ranges, n_ranges, [node_count],
+                                         lambda n: par)
+        if not plans:
+            node_ranges = spark.range(node_count).select(
+                F.col("id").alias("node_id"),
+                F.lit(0).cast("long").alias("range_lo"),
+                F.lit(0).cast("long").alias("range_hi"),
+            )
+        else:
+            node_ranges = _index_frame(
+                numbered, plans, 0, "node_id_to_ranges"
+            )
+        return node_ranges, _index_frame(
+            numbered, plans, 0, "range_to_edge_id"
         )
-        return tables[0]
 
     numbered = _global_rank(
         run_length_ranges(df, key, row_col), ["node_id", "range_start"],
@@ -515,33 +506,54 @@ SONATA_KEYS = {
 }
 
 
+def _number_ranges(ranges: DataFrame, n_ranges: int, node_counts,
+                   num_partitions):
+    """G2-G3 numbering of ``ranges`` (``_dir`` indexing ``node_counts``):
+    one range exchange on ``(_dir, node_id, range_start)`` into
+    ``num_partitions(n_ranges)`` partitions, persisted
+    (its bounds come from sampling, and the summaries and the tables
+    must see the same exchange), and the driver prefix sum over its
+    partition summaries.  Returns ``(numbered, plans)``; the caller
+    unpersists ``numbered``."""
+    sort = ["_dir", "node_id", "range_start"]
+    numbered = (
+        ranges.repartitionByRange(num_partitions(n_ranges), *sort)
+        .sortWithinPartitions(*sort)
+        .withColumn("_pid", F.spark_partition_id())
+        .persist()
+    )
+    try:
+        plans = _partition_plans(
+            numbered.mapInArrow(_summarize, _SUMMARY).collect(), node_counts
+        )
+    except BaseException:
+        numbered.unpersist()
+        raise
+    return numbered, plans
+
+
 @contextmanager
 def build_sonata_indices(
-    ordered: DataFrame,
+    ranges: DataFrame,
+    n_ranges: int,
     node_counts: dict[str, int],
     num_partitions,
-    row_col: str = "row_index",
 ):
-    """G6: both index directions, as written under
+    """G6: the numbering of both index directions, as written under
     ``indices/{source_to_target,target_to_source}``
-    (``index.cpp:24-31,309-324``), by the scan path in one pass over
-    ``ordered`` — partitions holding contiguous, sorted ``row_col``
-    slices, such as the bundle's range-partitioned table.
+    (``index.cpp:24-31,309-324``).  ``ranges`` are the maximal runs of
+    both SONATA keys (``_dir`` 0 and 1, in ``SONATA_KEYS`` order) as
+    :func:`_runs_to_ranges` returns them; ``num_partitions(n_ranges)``
+    sizes the numbering exchange.
 
-    Yields ``{direction: (node_id_to_ranges, range_to_edge_id)}``; each
-    frame is in key order with one contiguous key run per partition,
-    ready to write as is.  ``num_partitions(n_ranges)`` sizes the
-    numbering exchange from the total range count.  The exchange is
-    persisted for the frames and released on exit; ``ordered`` must
-    stay persisted (or otherwise stable) until then."""
-    tables, numbered = _scan_indices(
-        ordered,
-        list(SONATA_KEYS.values()),
-        [node_counts[d] for d in SONATA_KEYS],
-        row_col,
+    Yields ``(numbered, plans)``: the persisted exchange and its
+    partition plans, from which :func:`_index_batches` builds every
+    partition's tables; the exchange is released on exit."""
+    numbered, plans = _number_ranges(
+        ranges, n_ranges, [node_counts[d] for d in SONATA_KEYS],
         num_partitions,
     )
     try:
-        yield dict(zip(SONATA_KEYS, tables))
+        yield numbered, plans
     finally:
         numbered.unpersist()

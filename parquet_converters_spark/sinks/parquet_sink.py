@@ -164,18 +164,27 @@ def _write_with_kv(df: DataFrame, path: str, kv: dict[str, str], mode: str,
         if metadata_sidecar:
             _write_metadata_sidecar(staging, footers)
         open(os.path.join(staging, "_SUCCESS"), "wb").close()
-        old = staging + "-old"
-        if os.path.exists(path):
-            os.rename(path, old)
-        try:
-            os.rename(staging, path)
-        except OSError:
-            if os.path.exists(old):
-                os.rename(old, path)
-            raise
-        shutil.rmtree(old, ignore_errors=True)
+        publish(staging, path)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
+
+
+def publish(staging: str, path: str) -> None:
+    """Rename the finished directory ``staging`` over ``path`` (a sibling
+    on the same filesystem).  A previous ``path`` is moved aside first
+    and deleted after; if the rename fails, it is moved back."""
+    import shutil
+
+    old = staging + "-old"
+    if os.path.exists(path):
+        os.rename(path, old)
+    try:
+        os.rename(staging, path)
+    except OSError:
+        if os.path.exists(old):
+            os.rename(old, path)
+        raise
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def _write_metadata_sidecar(path: str, footers: dict | None = None) -> None:

@@ -31,15 +31,30 @@ Semantics mirrored from the reference:
   counts, expands Spark field metadata ``enumeration_values`` into
   ``@library`` tables, and stamps ``parquet2hdf5_version``
   (``sonata_writer.cpp:89-121`` — W3);
-- the adjacency index is built with
+- the adjacency index is numbered by
   :func:`parquet_converters_spark.operators.indexing.build_sonata_indices`.
+
+:class:`SonataBundleWriter` takes its input as the ordered scan delivers
+it — each partition sorted on ``row_index``, no two partitions' ranges
+overlapping (frames that are not go through
+:func:`~parquet_converters_spark.sources.ordering.order_rows`) — and runs
+no exchange of the edge table.  Like the reference's ranks
+(``index.cpp:114-137``), each task of one table pass writes its
+partition's table file with ``pq.ParquetWriter`` and run-length encodes
+both index keys; the pass's collect of boundary runs and partition
+summaries is its only job.  After the numbering exchange, one job
+writes all four index tables.  Files are snappy, dictionary-encoded
+only where parquet-mr would keep the dictionary.  Everything is staged
+in a sibling ``.<population>.staging-<uuid>`` directory and renamed
+into place after ``attributes.json``.
 
 ``export_hdf5_parallel`` converts a bundle to a real SONATA HDF5 file:
 the driver writes the metadata skeleton, then one Spark job with one
 task per bundle file seek+writes each file's sorted key run at the
 dataset's precomputed offset — the analogue of the reference's
 per-rank MPI-IO independent hyperslab writes
-(``src/circuit/sonata_file.cpp:98-143``).
+(``src/circuit/sonata_file.cpp:98-143``).  Both go to a sibling
+temporary file that replaces the target only when complete.
 With ``compression="gzip"`` it also writes the chunked+shuffle+deflate
 layout (which the reference cannot write in parallel at all): a
 compress pass resolves the data-dependent chunk sizes, the driver lays
@@ -58,9 +73,20 @@ from pyspark.sql import DataFrame, functions as F
 
 from parquet_converters_spark import __version__
 from parquet_converters_spark.operators.indexing import (
+    INDEX_COLUMNS,
     SONATA_KEYS,
+    _LOCAL_RUNS,
+    _index_batches,
+    _rle_batches,
+    _runs_to_ranges,
     build_sonata_indices,
-    count_rows_and_nodes,
+    empty_node_batches,
+    index_schema,
+)
+from parquet_converters_spark.sinks.parquet_sink import publish
+from parquet_converters_spark.sources.ordering import (
+    _TARGET_ROWS_PER_FILE,
+    _range_partitions,
 )
 
 COLUMNS_TO_SKIP = {"synapse_id", "__index_level_0__"}
@@ -96,49 +122,252 @@ def _encode_str_values(values, column: str) -> list:
         out.append(v if isinstance(v, bytes) else v.encode())
     return out
 
-# bundle range-partition sizing: ~4M edge rows is ~100-200 MB of parquet
-# at typical edge-row widths (the healthy HDFS/S3 object size), and no
-# file should drop below ~64Ki rows just to keep every core busy
-_TARGET_ROWS_PER_FILE = 4_000_000
-_MIN_ROWS_PER_FILE = 1 << 16
+_ROW_GROUP_ROWS = 1 << 20
+_SUMMARY_EDGE = 4  # ``_edge`` of the table pass's per-partition summary rows
+_ORDER_ERROR = "bundle table partitions are not ordered on"
 
 
-def _range_partitions(
-    n_rows: int,
-    parallelism: int,
-    rows_per_file: int = _TARGET_ROWS_PER_FILE,
-) -> int:
-    """Partition count for the bundle's range-partitioned writes —
-    derived from the DATA, not the cluster (VERDICT r04 item 3): a bare
-    ``defaultParallelism`` writes single-row files at toy scale and
-    multi-GB partitions at 100 TB on a modest cluster.  Files of
-    ``rows_per_file`` rows by default; when the data is moderate, up to
-    ``parallelism`` files so every core still writes, but never below
-    ``_MIN_ROWS_PER_FILE`` rows per file."""
-    n_rows = max(int(n_rows), 1)
-    by_size = -(-n_rows // max(rows_per_file, 1))
-    # floor division: ceil here would allow files BELOW the 64Ki floor
-    # (65537 rows would become 2 x ~32Ki files)
-    by_cores = min(max(parallelism, 1), max(1, n_rows // _MIN_ROWS_PER_FILE))
-    return max(1, by_size, by_cores)
+def _dictionary_columns(table) -> list[str]:
+    """The columns parquet-mr's writer would keep dictionary-encoded: a
+    column whose dictionary plus bit-packed indices is smaller than its
+    plain values, ``distinct*width + rows*ceil(log2 distinct)/8 <
+    rows*width`` (width = mean bytes per value).  pyarrow's default, a
+    dictionary on every column, grows distinct-valued float columns."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    out = []
+    for name, col in zip(table.column_names, table.columns):
+        rows = len(col) - col.null_count
+        if not rows or pa.types.is_boolean(col.type):
+            continue
+        width = (
+            col.type.bit_width / 8
+            if pa.types.is_integer(col.type) or pa.types.is_floating(col.type)
+            else col.nbytes / rows
+        )
+        distinct = pc.count_distinct(col).as_py()
+        bits = (distinct - 1).bit_length()
+        if distinct * width + rows * bits / 8 < rows * width:
+            out.append(name)
+    return out
 
 
-def _drop_empty_files(path: str) -> None:
-    """Remove the zero-row file Spark writes for partition 0 when that
-    partition holds none of a direction's rows (both directions share
-    one numbering exchange, so the second starts past partition 0).
-    Keeps one file when all are empty, for the schema."""
-    import glob as _glob
+def _part_name(job: str, pid: int) -> str:
+    return f"part-{pid:05d}-{job}-c000.snappy.parquet"
 
-    import pyarrow.parquet as pq
 
-    files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
-    empty = [f for f in files if pq.ParquetFile(f).metadata.num_rows == 0]
-    for f in empty[: len(files) - 1]:
-        os.remove(f)
-        crc = os.path.join(path, f".{os.path.basename(f)}.crc")
-        if os.path.exists(crc):
-            os.remove(crc)
+class _PartWriter:
+    """One bundle part file ``dir/name``, written with ``pq.ParquetWriter``
+    (snappy, dictionary per :func:`_dictionary_columns` of the first
+    table written) under a temporary name and renamed into place on
+    close."""
+
+    def __init__(self, dir: str, name: str, schema):
+        import uuid
+
+        self.path = os.path.join(dir, name)
+        self.tmp = os.path.join(dir, f".{name}.{uuid.uuid4().hex}.tmp")
+        self.schema, self.writer = schema, None
+
+    def write(self, table) -> None:
+        import pyarrow.parquet as pq
+
+        if self.writer is None:
+            self.writer = pq.ParquetWriter(
+                self.tmp, self.schema, compression="snappy",
+                use_dictionary=_dictionary_columns(table), store_schema=False,
+            )
+        self.writer.write_table(table, row_group_size=_ROW_GROUP_ROWS)
+
+    def close(self) -> str:
+        self.writer.close()
+        os.replace(self.tmp, self.path)
+        return os.path.basename(self.path)
+
+
+def _arrow_schema(df: DataFrame):
+    """``df``'s Arrow schema with the two footer keys Spark's writer
+    stores, so a Spark read gets the exact schema back."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(df.schema).with_metadata({
+        "org.apache.spark.version": df.sparkSession.version,
+        "org.apache.spark.sql.parquet.row.metadata": df._jdf.schema().json(),
+    })
+
+
+def _table_pass(table: DataFrame, path: str, keys: list[str], row_col: str,
+                job: str) -> DataFrame:
+    """The bundle's one pass over its input: each task writes its
+    partition to ``path`` as one part file, run-length encodes ``keys``
+    with :func:`_rle_batches` and yields the runs plus, per key (or once
+    without keys), a summary row (``_edge`` 4): ``range_start`` and
+    ``range_end`` the partition's first and last+1 ``row_col``, ``_n``
+    its row count and ``node_id`` the key's max.  A partition that is
+    not strictly increasing on ``row_col`` raises."""
+    import numpy as np
+    import pyarrow as pa
+
+    schema = _arrow_schema(table)
+    key_cols = [row_col, *keys]
+
+    def write(batches):
+        import pyarrow.compute as pc
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        part = _PartWriter(path, _part_name(job, pid), schema)
+        pending, rows, kept = [], 0, []
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            pending.append(batch)
+            rows += batch.num_rows
+            kept.append(pa.RecordBatch.from_arrays(
+                [batch.column(c).cast(pa.int64()) for c in key_cols],
+                names=key_cols,
+            ))
+            if rows >= _ROW_GROUP_ROWS:
+                part.write(pa.Table.from_batches(pending, schema))
+                pending, rows = [], 0
+        if pending or (part.writer is None and pid == 0):
+            # Spark's rule: partition 0 always writes a file, for the schema
+            part.write(pa.Table.from_batches(pending, schema))
+        if part.writer is None:
+            return
+        part.close()
+        if not kept:
+            return
+        t = pa.Table.from_batches(kept).combine_chunks()
+        pos = t.column(0)
+        if pos.null_count or not np.all(np.diff(pos.to_numpy()) > 0):
+            raise ValueError(f"{_ORDER_ERROR} {row_col}")
+        yield from _rle_batches(t, len(keys))
+        first, last = pos[0].as_py(), pos[-1].as_py()
+        yield pa.RecordBatch.from_pylist(
+            [
+                {"_dir": d, "node_id": m, "range_start": first,
+                 "range_end": last + 1, "_edge": _SUMMARY_EDGE,
+                 "_n": t.num_rows}
+                for d, m in (
+                    [(d, pc.max(t.column(d + 1)).as_py())
+                     for d in range(len(keys))]
+                    or [(-1, None)]
+                )
+            ],
+            schema=pa.schema([
+                ("_dir", pa.int32()), ("node_id", pa.int64()),
+                ("range_start", pa.int64()), ("range_end", pa.int64()),
+                ("_edge", pa.int32()), ("_n", pa.int64()),
+            ]),
+        )
+
+    return table.mapInArrow(write, _LOCAL_RUNS.format(node_t="long"))
+
+
+def _run_table_pass(runs: DataFrame, n_keys: int, row_col: str):
+    """Run the table pass: its collect of the boundary runs and the
+    partition summaries is its only job.  Checks the writer's input
+    contract (a task raises on an unsorted partition; here, no two
+    partitions' ``row_col`` ranges may overlap) and returns ``(boundary
+    runs, row count per partition, max + 1 per key)``."""
+    from pyspark.errors import PythonException
+
+    try:
+        rows = runs.filter(F.col("_edge") > 0).collect()
+    except PythonException as e:
+        if _ORDER_ERROR not in str(e):
+            raise
+        raise _order_error(row_col) from None
+    summary = [r for r in rows if r["_edge"] == _SUMMARY_EDGE]
+    # one summary row per partition and key; without keys, _dir is -1
+    parts = [r for r in summary if r["_dir"] <= 0]
+    spans = sorted((r["range_start"], r["range_end"]) for r in parts)
+    for (_, end), (start, _) in zip(spans, spans[1:]):
+        if start < end:
+            raise _order_error(row_col)
+    tops = [
+        max((r["node_id"] for r in summary if r["_dir"] == d), default=-1) + 1
+        for d in range(n_keys)
+    ]
+    return (
+        [r for r in rows if r["_edge"] != _SUMMARY_EDGE],
+        [r["_n"] for r in parts],
+        tops,
+    )
+
+
+def _order_error(row_col: str) -> ValueError:
+    return ValueError(
+        "SonataBundleWriter.write needs each partition sorted on "
+        f"{row_col!r} and no two partitions' {row_col} ranges "
+        "overlapping (the shape read_parquet_ordered returns); reorder "
+        "the frame with sources.ordering.order_rows(df, rows_per_file) "
+        "first"
+    )
+
+
+def _index_rows_per_file(sizes: list[int], parallelism: int) -> int:
+    """The ``rows_per_file`` bound to size the index tables with, read
+    off the table's partition sizes: the default when the table has no
+    more partitions than the default plan gives, else (the caller asked
+    for smaller files) its largest partition."""
+    if len(sizes) <= _range_partitions(sum(sizes), parallelism):
+        return _TARGET_ROWS_PER_FILE
+    return max(sizes)
+
+
+def _write_index_tables(numbered, plans, pop_dir: str, job: str,
+                        node_counts: list[int]) -> None:
+    """All four index tables in one job: each task builds its numbered
+    partition's tables with :func:`_index_batches` and writes one part
+    file per table it holds rows of.  A direction without edges gets its
+    dense ``(0, 0)`` node table and an empty range table from the
+    driver."""
+    import pyarrow as pa
+
+    dirs = list(SONATA_KEYS)
+
+    def path(d, table):
+        return os.path.join(pop_dir, "indices", dirs[d], f"{table}.parquet")
+
+    for d in range(len(dirs)):
+        for table in INDEX_COLUMNS:
+            os.makedirs(path(d, table))
+
+    def write(batches):
+        from pyspark import TaskContext
+
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
+            return
+        t = pa.Table.from_batches(batches).combine_chunks()
+        name = _part_name(job, TaskContext.get().partitionId())
+        parts = {}
+        for d, table, batch in _index_batches(t, plans):
+            if (d, table) not in parts:
+                parts[(d, table)] = _PartWriter(
+                    path(d, table), name, index_schema(table)
+                )
+            parts[(d, table)].write(pa.Table.from_batches([batch]))
+        yield pa.RecordBatch.from_pydict(
+            {"file": [p.close() for p in parts.values()]}
+        )
+
+    numbered.mapInArrow(write, "file string").collect()
+    for d in sorted(set(range(len(dirs))) - {d for d, _ in plans}):
+        for table, batches in (
+            ("node_id_to_ranges", empty_node_batches(node_counts[d])),
+            ("range_to_edge_id", ()),
+        ):
+            w = _PartWriter(path(d, table), _part_name(job, 0),
+                            index_schema(table))
+            for batch in batches:
+                w.write(pa.Table.from_batches([batch]))
+            if w.writer is None:
+                w.write(index_schema(table).empty_table())
+            w.close()
 
 
 def collect_kv_metadata(path: str) -> dict[str, str]:
@@ -194,11 +423,30 @@ class SonataBundleWriter:
         kv_metadata: dict[str, str] | None = None,
         with_index: bool = True,
         row_col: str = "row_index",
-        rows_per_file: int = _TARGET_ROWS_PER_FILE,
     ) -> None:
+        """Write ``df`` as the population's bundle.
+
+        ``df`` must have each partition sorted on ``row_col`` and no two
+        partitions' ``row_col`` ranges overlapping, as
+        :func:`~parquet_converters_spark.sources.ordering.read_parquet_ordered`
+        returns it; otherwise this raises a ``ValueError`` naming
+        :func:`~parquet_converters_spark.sources.ordering.order_rows`.
+        Each partition becomes one table file.
+
+        One table pass writes the table and run-length encodes both
+        index keys; its collect of the boundary runs and partition
+        summaries is its only job.  Then the numbering exchange, and one
+        job writes all four index tables.  Everything goes to a sibling
+        staging directory that is renamed over the population directory
+        after ``attributes.json``; a failure removes it."""
+        import shutil
+        import uuid
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
         spark = df.sparkSession
         kv = dict(kv_metadata or {})
-        os.makedirs(self.pop_dir, exist_ok=True)
 
         table = df.drop(*[c for c in COLUMNS_TO_SKIP if c in df.columns])
         if "edge_type_id" not in table.columns:
@@ -230,73 +478,70 @@ class SonataBundleWriter:
 
         par = max(1, spark.sparkContext.defaultParallelism)
         keys = list(SONATA_KEYS.values()) if with_index else []
-        n_records, max_plus_one = count_rows_and_nodes(table, keys)
-
-        for name, values in enums.items():
-            spark.createDataFrame(
-                [(i, v) for i, v in enumerate(values)], "index: long, value: string"
-            ).coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(self.pop_dir, "library", f"{name}.parquet")
-            )
-
-        # every file holds one contiguous, sorted row_index slice; the
-        # index build RLEs these same partitions, so they are persisted
-        # for it (released in the finally below)
-        ordered = table.repartitionByRange(
-            _range_partitions(n_records, par, rows_per_file), row_col
-        ).sortWithinPartitions(row_col)
-        if with_index:
-            ordered = ordered.persist()
+        job = uuid.uuid4().hex
+        edges_dir = os.path.dirname(self.pop_dir)
+        staging = os.path.join(
+            edges_dir, f".{self.population}.staging-{job}"
+        )
+        os.makedirs(os.path.join(staging, "table.parquet"))
         try:
-            ordered.write.mode("overwrite").parquet(
-                os.path.join(self.pop_dir, "table.parquet")
+            runs = _table_pass(
+                table, os.path.join(staging, "table.parquet"), keys,
+                row_col, job,
             )
-
             if with_index:
-                node_counts = {
-                    "source_to_target": source_size or max_plus_one[0],
-                    "target_to_source": target_size or max_plus_one[1],
-                }
-                with build_sonata_indices(
-                    ordered,
-                    node_counts,
-                    lambda n: _range_partitions(n, par, rows_per_file),
-                    row_col=row_col,
-                ) as indices:
-                    for direction, (node_ranges, range_edges) in (
-                        indices.items()
-                    ):
-                        # already in key order, one contiguous run per
-                        # partition: written as built
-                        d = os.path.join(self.pop_dir, "indices", direction)
-                        for name, frame in (
-                            ("node_id_to_ranges", node_ranges),
-                            ("range_to_edge_id", range_edges),
-                        ):
-                            path = os.path.join(d, f"{name}.parquet")
-                            frame.write.mode("overwrite").parquet(path)
-                            _drop_empty_files(path)
-        finally:
-            ordered.unpersist()
+                runs = runs.persist()
+            try:
+                boundary, sizes, tops = _run_table_pass(
+                    runs, len(keys), row_col
+                )
+                if with_index:
+                    node_counts = [source_size or tops[0],
+                                   target_size or tops[1]]
+                    ranges, n_ranges = _runs_to_ranges(runs, boundary)
+                    bound = _index_rows_per_file(sizes, par)
+                    with build_sonata_indices(
+                        ranges, n_ranges, dict(zip(SONATA_KEYS, node_counts)),
+                        lambda n: _range_partitions(n, par, bound),
+                    ) as (numbered, plans):
+                        _write_index_tables(
+                            numbered, plans, staging, job, node_counts
+                        )
+            finally:
+                runs.unpersist()
 
-        manifest = {
-            "population": self.population,
-            "n_records": n_records,
-            "attributes": attrs,
-            "dataset_attributes": dataset_attrs,
-            "top_level_datasets": [
-                c for c in TOP_LEVEL_DATASETS if c in table.columns
-            ],
-            "property_datasets": [
-                c
-                for c in table.columns
-                if c not in TOP_LEVEL_DATASETS and c != row_col
-            ],
-            "libraries": sorted(enums),
-            "row_index_column": row_col,
-        }
-        with open(os.path.join(self.pop_dir, "attributes.json"), "w") as f:
-            json.dump(manifest, f, indent=2, sort_keys=True)
+            for name, values in enums.items():
+                lib = os.path.join(staging, "library", f"{name}.parquet")
+                os.makedirs(lib)
+                pq.write_table(
+                    pa.table({
+                        "index": pa.array(range(len(values)), pa.int64()),
+                        "value": pa.array(values, pa.string()),
+                    }),
+                    os.path.join(lib, _part_name(job, 0)),
+                )
+
+            manifest = {
+                "population": self.population,
+                "n_records": sum(sizes),
+                "attributes": attrs,
+                "dataset_attributes": dataset_attrs,
+                "top_level_datasets": [
+                    c for c in TOP_LEVEL_DATASETS if c in table.columns
+                ],
+                "property_datasets": [
+                    c
+                    for c in table.columns
+                    if c not in TOP_LEVEL_DATASETS and c != row_col
+                ],
+                "libraries": sorted(enums),
+                "row_index_column": row_col,
+            }
+            with open(os.path.join(staging, "attributes.json"), "w") as f:
+                json.dump(manifest, f, indent=2, sort_keys=True)
+            publish(staging, self.pop_dir)
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
 
 
 def write_sonata_bundle(
@@ -313,8 +558,7 @@ def write_sonata_bundle(
 
 
 _INDEX_COLS = {
-    "node_id_to_ranges": ("node_id", ("range_lo", "range_hi")),
-    "range_to_edge_id": ("range_id", ("edge_start", "edge_end")),
+    name: (cols[0], cols[1:]) for name, cols in INDEX_COLUMNS.items()
 }
 
 
@@ -745,6 +989,10 @@ def export_hdf5_parallel(
     property columns (fixed width in HDF5) get their width from one
     more job over the table files; a NULL or non-string value raises.
 
+    The skeleton and the fill go to a sibling temporary file that
+    ``os.replace`` moves onto ``h5_path`` once every row is written; a
+    failure removes it and leaves ``h5_path`` as it was.
+
     Returns the number of edge rows written.  The result is
     byte-identical to :func:`export_hdf5` with the same ``compression``
     and ``chunk_rows`` (``tests/test_hdf5_export.py``).
@@ -817,6 +1065,13 @@ def export_hdf5_parallel(
     spill = os.path.join(
         spill_dir or (h5_path + ".spill"), f"run-{uuid.uuid4().hex}"
     )
+    # the skeleton and the fill go to a sibling temporary file that
+    # replaces h5_path only once complete: a failed export leaves
+    # h5_path as it was
+    target = os.path.join(
+        os.path.dirname(os.path.abspath(h5_path)),
+        f".{os.path.basename(h5_path)}.tmp-{uuid.uuid4().hex}",
+    )
     try:
         sizes: dict[str, dict[int, int]] = {}
         for i in sorted(chunked):
@@ -864,7 +1119,7 @@ def export_hdf5_parallel(
         for path, a in attrs.items():
             for k, v in a.items():
                 w.set_attr(path, k, v)
-        w.write(h5_path)
+        w.write(target)
 
         # one fill job: a task per bundle file of the contiguous sources
         # and per spill file of the chunked ones
@@ -888,7 +1143,6 @@ def export_hdf5_parallel(
                     for _, ds, _ in sources[i][3]
                 }
             )
-        target = os.path.abspath(h5_path)
         got = [0] * len(sources)
         for i, n in (
             spark.sparkContext.parallelize(tasks, len(tasks))
@@ -909,7 +1163,10 @@ def export_hdf5_parallel(
                     f"parallel HDF5 export wrote {got[i]} {unit} of {path}, "
                     f"expected {want}"
                 )
+        os.replace(target, h5_path)
     except BaseException:
+        if os.path.exists(target):
+            os.remove(target)
         if chunked:
             logging.getLogger(__name__).warning(
                 "parallel HDF5 export failed; partial spill kept at %s",

@@ -1,32 +1,59 @@
 """Ordered multi-file parquet scan (reference operator S5).
 
 The reference concatenates a directory of parquet files in *sorted
-file-name order*, tracking global row-group offsets so every record has a
-deterministic global position (``src/parquet2hdf5.cpp:236``,
-``src/circuit/parquet_reader.cpp:83-160``).  Spark promises no such order,
-so we reconstruct it explicitly — and shuffle-free:
+file-name order*, and gives each rank a static range of row groups whose
+global offsets come from the footers (``src/parquet2hdf5.cpp:97-110,236``,
+``src/circuit/parquet_reader.cpp:83-160``).  :func:`read_parquet_ordered`
+does the same in Spark, with no exchange and no file-scan planning job:
 
-- per-file row position comes from the parquet reader's hidden
-  ``_metadata.row_index`` column (computed during the scan, no window, no
-  exchange);
-- per-file base offsets are a driver-side prefix sum over footer row
-  counts of the sorted file list (footers only — O(files), not O(rows) —
-  the same metadata pass the reference does), joined in via a broadcast
-  map.
+- the driver reads each footer once and plans *slices*: runs of
+  consecutive row groups in file order, each with the global index of its
+  first row;
+- ``spark.range(k, numPartitions=k).mapInArrow`` decodes slice *i* in
+  partition *i* with pyarrow and appends ``row_index = first + position``.
 
-At 100 TB this stays a single narrow scan stage: no shuffle, no
-zipWithIndex job, no window over the whole table.
+So partition *i* holds one contiguous, sorted ``row_index`` slice, which
+is what the SONATA bundle writer requires of its input (frames that are
+not ordered go through :func:`order_rows` first).
 """
 
 from __future__ import annotations
 
 import glob as _glob
+import json
 import logging
 import os
 
 from pyspark.sql import DataFrame, functions as F
 
 _log = logging.getLogger(__name__)
+
+_SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
+
+# bundle file sizing: ~4M edge rows is ~100-200 MB of parquet at typical
+# edge-row widths (the healthy HDFS/S3 object size), and no file should
+# drop below ~64Ki rows just to keep every core busy
+_TARGET_ROWS_PER_FILE = 4_000_000
+_MIN_ROWS_PER_FILE = 1 << 16
+
+
+def _range_partitions(
+    n_rows: int,
+    parallelism: int,
+    rows_per_file: int = _TARGET_ROWS_PER_FILE,
+) -> int:
+    """Partition (and so file) count for ``n_rows`` rows — derived from
+    the DATA, not the cluster: a bare ``defaultParallelism`` writes
+    single-row files at toy scale and multi-GB partitions at 100 TB on a
+    modest cluster.  Files of ``rows_per_file`` rows by default; when the
+    data is moderate, up to ``parallelism`` files so every core still
+    writes, but never below ``_MIN_ROWS_PER_FILE`` rows per file."""
+    n_rows = max(int(n_rows), 1)
+    by_size = -(-n_rows // max(rows_per_file, 1))
+    # floor division: ceil here would allow files BELOW the 64Ki floor
+    # (65537 rows would become 2 x ~32Ki files)
+    by_cores = min(max(parallelism, 1), max(1, n_rows // _MIN_ROWS_PER_FILE))
+    return max(1, by_size, by_cores)
 
 
 def _sorted_files(path: str) -> list[str]:
@@ -78,19 +105,15 @@ def _sidecar_schema(path: str):
     return pq.ParquetFile(sidecar).schema_arrow
 
 
-def check_schema_agreement(files: list[str], expected=None) -> None:
+def check_schema_agreement(schemas: dict, expected=None) -> None:
     """Hard-error when the files of an ordered scan disagree on schema,
     naming the first mismatching file — reference parity with
     ``src/parquet2hdf5.cpp:67-73`` (mismatched schemas are a hard error
-    there too; Spark's ``mergeSchema=False`` default can silently
-    project instead).  ``expected`` (e.g. the ``_metadata`` sidecar
-    schema) overrides the first file as the reference schema.  Footer
-    metadata only — O(files), no data read."""
-    import pyarrow.parquet as pq
-
+    there too).  ``schemas`` maps each file, in scan order, to its
+    footer's Arrow schema; ``expected`` (e.g. the ``_metadata`` sidecar
+    schema) overrides the first file as the reference schema."""
     ref_schema, ref_file = expected, "_metadata sidecar"
-    for f in files:
-        s = pq.ParquetFile(f).schema_arrow
+    for f, s in schemas.items():
         if ref_schema is None:
             ref_schema, ref_file = s, f
         elif not s.equals(ref_schema):
@@ -103,12 +126,70 @@ def check_schema_agreement(files: list[str], expected=None) -> None:
             )
 
 
-# Past this many files the per-file offset lookup switches from an
-# inline literal map (zero-join, but the expression is O(files) and a
-# 10^5-file scan would blow up the plan) to a broadcast-hash join on a
-# tiny offsets DataFrame (plan stays O(1), the lookup table ships once
-# per executor).
-_LITERAL_MAP_MAX_FILES = 1024
+def _spark_schema(arrow_schema):
+    """The Spark schema of one footer: the row metadata Spark's writer
+    stores (it keeps field metadata such as ``enumeration_values``), else
+    the conversion of the Arrow schema, unsigned integers widened the way
+    Spark's parquet reader widens them.  Every field is nullable, as in
+    a Spark file scan."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import StructField, StructType
+
+    md = (arrow_schema.metadata or {}).get(_SPARK_ROW_METADATA.encode())
+    if md is not None:
+        schema = StructType.fromJson(json.loads(md))
+    else:
+        widen = {pa.uint8(): pa.int16(), pa.uint16(): pa.int32(),
+                 pa.uint32(): pa.int64()}
+        schema = from_arrow_schema(pa.schema(
+            [f.with_type(widen.get(f.type, f.type)) for f in arrow_schema]
+        ))
+    return StructType(
+        [StructField(f.name, f.dataType, True, f.metadata) for f in schema]
+    )
+
+
+def _merge_schemas(schemas):
+    """Union of Spark schemas by field name, in first-seen order; a name
+    with two different types is an error."""
+    from pyspark.sql.types import StructType
+
+    fields: dict = {}
+    for schema in schemas:
+        for f in schema:
+            seen = fields.setdefault(f.name, f)
+            if seen.dataType != f.dataType:
+                raise ValueError(
+                    f"mergeSchema: column {f.name!r} is {seen.dataType} in "
+                    f"one file and {f.dataType} in another"
+                )
+    return StructType(list(fields.values()))
+
+
+def _plan_slices(row_groups: list[tuple[str, list[int]]], k: int):
+    """At most ``k`` slices over ``row_groups`` (each file with its row
+    groups' row counts, in scan order): ``[(first_row, [(file, [row
+    group, ...]), ...]), ...]``.  A row group starting at global row
+    ``s`` of ``n`` joins slice ``s * k // n``, so each slice is a run of
+    consecutive row groups that starts at the first row group boundary at
+    or past its even share.  Always at least one (possibly empty)
+    slice."""
+    n = sum(c for _, counts in row_groups for c in counts)
+    slices: list = []
+    pos = 0
+    for f, counts in row_groups:
+        for rg, c in enumerate(counts):
+            sid = min(k - 1, pos * k // n) if n else 0
+            if not slices or slices[-1][0] != sid:
+                slices.append((sid, pos, []))
+            parts = slices[-1][2]
+            if parts and parts[-1][0] == f:
+                parts[-1][1].append(rg)
+            else:
+                parts.append((f, [rg]))
+            pos += c
+    return [(first, parts) for _, first, parts in slices] or [(0, [])]
 
 
 def read_parquet_ordered(
@@ -116,59 +197,102 @@ def read_parquet_ordered(
     path: str,
     row_index_col: str = "row_index",
     mergeSchema: bool = False,
+    rows_per_file: int | None = None,
 ) -> DataFrame:
     """Read a parquet file/dir with a deterministic global ``row_index``
     column (sorted-file-name x in-file order, matching the reference's
-    global order).
+    global order), as contiguous slices: partition *i* holds slice *i*,
+    sorted on ``row_index``, and the slices follow each other.
+
+    ``rows_per_file`` bounds the slice size as in
+    :func:`_range_partitions` (the default plans as many slices as that
+    function gives for the table and ``defaultParallelism``); slices cut
+    only between row groups.
 
     Schema-merge is off by default: like the reference, all files must
     agree on the schema (``parquet2hdf5.cpp:67-73`` — mismatched schemas
     are a hard error there too), checked driver-side against the
     ``_metadata`` sidecar when the directory has one, else against the
     first file's footer.  ``mergeSchema=True`` opts out of the strict
-    check and lets Spark union the schemas.
+    check and unions the footer schemas, with nulls for the columns a
+    file lacks.
     """
-    files = _sorted_files(path)
-    if not mergeSchema:
-        check_schema_agreement(files, expected=_sidecar_schema(path))
-    counts = file_row_counts(files)
-    offsets: dict[str, int] = {}
-    base = 0
-    for f, c in zip(files, counts):
-        # Spark reports file paths as URIs; key by basename + normalized path
-        offsets[os.path.abspath(f)] = base
-        base += c
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import LongType, StructField, StructType
 
-    df = (
-        spark.read.option("mergeSchema", str(mergeSchema).lower())
-        .parquet(*files)
-        .withColumn("_file", F.col("_metadata.file_path"))
-        .withColumn("_row_in_file", F.col("_metadata.row_index"))
-    )
-    # strip URI scheme so the offset keys match Spark's file_path form
-    norm = F.concat(F.lit("file:"), F.regexp_replace(F.col("_file"), "^file:(//)?", ""))
-    if len(files) <= _LITERAL_MAP_MAX_FILES:
-        offset_expr = F.create_map(
-            *[F.lit(x) for kv in offsets.items() for x in (f"file:{kv[0]}", kv[1])]
-        )
-        out = df.withColumn(
-            row_index_col,
-            offset_expr[norm].cast("long") + F.col("_row_in_file"),
-        )
+    files = _sorted_files(path)
+    footers = {f: pq.read_metadata(f) for f in files}
+    arrow = {f: md.schema.to_arrow_schema() for f, md in footers.items()}
+    if mergeSchema:
+        schema = _merge_schemas(_spark_schema(s) for s in arrow.values())
     else:
-        offsets_df = spark.createDataFrame(
-            [(f"file:{k}", v) for k, v in offsets.items()],
-            "_file_key string, _base_offset long",
-        )
-        out = (
-            df.withColumn("_file_key", norm)
-            .join(F.broadcast(offsets_df), "_file_key")
-            .withColumn(
-                row_index_col, F.col("_base_offset") + F.col("_row_in_file")
-            )
-            .drop("_file_key", "_base_offset")
-        )
-    return out.drop("_file", "_row_in_file")
+        check_schema_agreement(arrow, expected=_sidecar_schema(path))
+        schema = _spark_schema(arrow[files[0]])
+    # an input column of that name is replaced, as withColumn would
+    schema = StructType(
+        [f for f in schema if f.name != row_index_col]
+        + [StructField(row_index_col, LongType(), True)]
+    )
+    row_groups = [
+        (f, [md.row_group(i).num_rows for i in range(md.num_row_groups)])
+        for f, md in footers.items()
+    ]
+    n = sum(md.num_rows for md in footers.values())
+    k = _range_partitions(
+        n, spark.sparkContext.defaultParallelism,
+        rows_per_file or _TARGET_ROWS_PER_FILE,
+    )
+    slices = _plan_slices(row_groups, k)
+    target = to_arrow_schema(schema)
+    fields = list(target)[:-1]
+
+    def read_slice(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        for b in batches:
+            for i in b.column(0).to_pylist():
+                pos, parts = slices[i]
+                for f, rgs in parts:
+                    for batch in pq.ParquetFile(f).iter_batches(
+                        batch_size=1 << 16, row_groups=rgs
+                    ):
+                        names = set(batch.schema.names)
+                        cols = [
+                            batch.column(t.name).cast(t.type)
+                            if t.name in names
+                            else pa.nulls(batch.num_rows, t.type)
+                            for t in fields
+                        ]
+                        cols.append(pa.array(
+                            np.arange(pos, pos + batch.num_rows, dtype="int64")
+                        ))
+                        pos += batch.num_rows
+                        yield pa.RecordBatch.from_arrays(cols, schema=target)
+
+    return spark.range(len(slices), numPartitions=len(slices)).mapInArrow(
+        read_slice, schema
+    )
+
+
+def order_rows(
+    df: DataFrame,
+    rows_per_file: int = _TARGET_ROWS_PER_FILE,
+    row_col: str = "row_index",
+) -> DataFrame:
+    """Reorder a frame for the SONATA bundle writer: ``row_col`` range
+    partitions (sized by :func:`_range_partitions` from the row count,
+    one counting job), each sorted on ``row_col``.  Frames that come
+    straight off :func:`read_parquet_ordered` already have this shape."""
+    n = df.count()
+    return df.repartitionByRange(
+        _range_partitions(
+            n, df.sparkSession.sparkContext.defaultParallelism, rows_per_file
+        ),
+        row_col,
+    ).sortWithinPartitions(row_col)
 
 
 def with_global_row_index(df: DataFrame, row_index_col: str = "row_index",

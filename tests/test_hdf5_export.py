@@ -177,16 +177,15 @@ def test_full_reference_pipeline_to_h5(spark, tmp_path):
     -> export real .h5 -> readback equals the converted parquet in
     global row order."""
     from parquet_converters_spark.pipelines import parquet_to_sonata, touch2parquet
-    from tests.conftest import REFERENCE_TESTS
+    from tests.touch_fixtures import write_seeded_corpus
 
     edges_dir = tmp_path / "edges_dir"
     edges_dir.mkdir()
+    touches = tmp_path / "touches"
+    touches.mkdir()
+    (path,) = write_seeded_corpus(str(touches), 71, 1, 1, 82)
     out_parquet = str(tmp_path / "v1.parquet")
-    touch2parquet(
-        spark,
-        os.path.join(REFERENCE_TESTS, "touches_v1", "touchesData.0"),
-        out_parquet,
-    )
+    touch2parquet(spark, path, out_parquet)
     # single sorted-name shard, like the reference's per-rank files
     import glob
     import shutil
@@ -312,19 +311,20 @@ def test_parallel_export_byte_identical(spark, bundle, tmp_path):  # noqa: F811
 
 
 def test_parallel_export_all_fixture_versions(spark, tmp_path):
-    """Byte-identity on all three reference touch fixture versions
-    (v1/v2/v3), end-to-end through touch2parquet -> parquet_to_sonata."""
+    """Byte-identity on all three touch versions (v1/v2/v3, generated
+    like the reference fixtures), end-to-end through touch2parquet ->
+    parquet_to_sonata."""
     from parquet_converters_spark.pipelines import parquet_to_sonata, touch2parquet
     from parquet_converters_spark.sinks.sonata import export_hdf5_parallel
-    from tests.conftest import REFERENCE_TESTS
+    from tests.touch_fixtures import write_seeded_corpus
 
-    for ver in ("touches_v1", "touches_v2", "touches_v3"):
+    for version, records in ((1, 82), (2, 1104), (3, 62)):
+        ver = f"touches_v{version}"
+        touches = tmp_path / ver
+        touches.mkdir()
+        (path,) = write_seeded_corpus(str(touches), 72, version, 1, records)
         out_parquet = str(tmp_path / f"{ver}.parquet")
-        touch2parquet(
-            spark,
-            os.path.join(REFERENCE_TESTS, ver, "touchesData.0"),
-            out_parquet,
-        )
+        touch2parquet(spark, path, out_parquet)
         bundle_dir = str(tmp_path / f"{ver}_bundle")
         parquet_to_sonata(spark, out_parquet, bundle_dir, population="p")
         single = str(tmp_path / f"{ver}_single.h5")
@@ -394,14 +394,13 @@ def test_one_call_parquet_to_h5(spark, tmp_path):
     """pipelines.parquet_to_sonata(h5_path=...) is the one-call
     parquet -> .h5 shape of the reference's parquet2hdf5 binary."""
     from parquet_converters_spark.pipelines import parquet_to_sonata, touch2parquet
-    from tests.conftest import REFERENCE_TESTS
+    from tests.touch_fixtures import write_seeded_corpus
 
+    touches = tmp_path / "touches"
+    touches.mkdir()
+    (path,) = write_seeded_corpus(str(touches), 73, 1, 1, 82)
     out_parquet = str(tmp_path / "v1.parquet")
-    touch2parquet(
-        spark,
-        os.path.join(REFERENCE_TESTS, "touches_v1", "touchesData.0"),
-        out_parquet,
-    )
+    touch2parquet(spark, path, out_parquet)
     bundle_dir = str(tmp_path / "bundle")
     h5 = str(tmp_path / "edges.h5")
     parquet_to_sonata(spark, out_parquet, bundle_dir, population="p", h5_path=h5)

@@ -170,7 +170,10 @@ def test_bundle_file_count_tracks_rows(spark, tmp_path):
     assert _range_partitions(10_000_000_000, 32, rows_per_file=1_000_000) == 10_000
 
     in_dir, table = _make_edges(tmp_path, n_nodes=60, seed=31)
-    from parquet_converters_spark.sources.ordering import with_global_row_index
+    from parquet_converters_spark.sources.ordering import (
+        order_rows,
+        with_global_row_index,
+    )
 
     df = with_global_row_index(spark.read.parquet(in_dir))
 
@@ -179,11 +182,13 @@ def test_bundle_file_count_tracks_rows(spark, tmp_path):
             out, "edges", "p", "table.parquet", "*.parquet")))
 
     out1 = str(tmp_path / "b1")
-    SonataBundleWriter(out1, "p").write(df, with_index=False)
+    SonataBundleWriter(out1, "p").write(order_rows(df), with_index=False)
     assert n_files(out1) == 1  # toy data -> one healthy file
 
     out2 = str(tmp_path / "b2")
-    SonataBundleWriter(out2, "p").write(df, with_index=False, rows_per_file=50)
+    SonataBundleWriter(out2, "p").write(
+        order_rows(df, rows_per_file=50), with_index=False
+    )
     n = table.num_rows
     assert n_files(out2) >= max(2, n // 50 // 2)  # tracks rows/rows_per_file
 
@@ -198,6 +203,7 @@ def test_bundle_range_partitions_balanced(spark, tmp_path):
     import pandas as pd
 
     from parquet_converters_spark.sinks.sonata import SonataBundleWriter
+    from parquet_converters_spark.sources.ordering import order_rows
 
     n = 4_000
     tbl = pd.DataFrame(
@@ -210,7 +216,9 @@ def test_bundle_range_partitions_balanced(spark, tmp_path):
     )
     df = spark.createDataFrame(tbl).coalesce(1)  # one fat input partition
     out = str(tmp_path / "b")
-    SonataBundleWriter(out, "p").write(df, with_index=False, rows_per_file=500)
+    SonataBundleWriter(out, "p").write(
+        order_rows(df, rows_per_file=500), with_index=False
+    )
     counts = [
         pq.read_metadata(f).num_rows
         for f in _glob.glob(
@@ -243,6 +251,7 @@ def test_bundle_range_exchange_bounds_skewed_key_distribution(
         SonataBundleWriter,
         _range_partitions,
     )
+    from parquet_converters_spark.sources.ordering import order_rows
 
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     n = 4_000
@@ -283,7 +292,7 @@ def test_bundle_range_exchange_bounds_skewed_key_distribution(
 
     out = str(tmp_path / "skewb")
     SonataBundleWriter(out, "p").write(
-        df, with_index=False, rows_per_file=500
+        order_rows(df, rows_per_file=500), with_index=False
     )
     counts = [
         pq.read_metadata(f).num_rows
@@ -428,8 +437,8 @@ def _job_count(spark, run):
 
 def test_parquet_to_sonata_job_budget(spark, tmp_path):
     """parquet_to_sonata does each of the reference's steps once: the
-    whole call (ordered scan, counts, table write, both index directions
-    and the .h5) stays within 15 Spark jobs and pins nothing; the .h5
+    whole call (ordered scan, table pass, numbering exchange, index
+    tables and the .h5) stays within 6 Spark jobs and pins nothing; the .h5
     fill alone is ONE job, two when a string column needs its width."""
     import pandas as pd
 
@@ -454,7 +463,7 @@ def test_parquet_to_sonata_job_budget(spark, tmp_path):
             spark, in_dir, out, population="p", with_index=True, h5_path=h5
         ),
     )
-    assert n_jobs <= 15, n_jobs
+    assert n_jobs <= 6, n_jobs
     assert set(jsc.getPersistentRDDs().keySet().toArray()) == pinned
 
     assert _job_count(
@@ -524,12 +533,15 @@ def test_multi_file_bundle_matches_oracles(spark, tmp_path):
     )
     in_dir = tmp_path / "in"
     in_dir.mkdir()
+    # 100-row row groups, so the ordered scan can cut 100-row slices
     for i, (a, b) in enumerate([(0, 333), (333, 1500), (1500, n)]):
-        pq.write_table(t.slice(a, b - a), in_dir / f"e.{i}.parquet")
-    df = read_parquet_ordered(spark, str(in_dir))
+        pq.write_table(
+            t.slice(a, b - a), in_dir / f"e.{i}.parquet", row_group_size=100
+        )
+    df = read_parquet_ordered(spark, str(in_dir), rows_per_file=100)
     out = str(tmp_path / "bundle")
     SonataBundleWriter(out, "p").write(
-        df, kv_metadata=collect_kv_metadata(str(in_dir)), rows_per_file=100
+        df, kv_metadata=collect_kv_metadata(str(in_dir))
     )
     pop = os.path.join(out, "edges", "p")
 
@@ -680,3 +692,167 @@ def test_empty_edge_table_converts(spark, tmp_path):
     export_hdf5(out, "p", single)
     with open(single, "rb") as a, open(par, "rb") as b:
         assert a.read() == b.read()
+
+
+def _tree(root):
+    """Relative path -> bytes of every file under ``root``."""
+    out = {}
+    for d, _, names in os.walk(root):
+        for name in names:
+            p = os.path.join(d, name)
+            with open(p, "rb") as f:
+                out[os.path.relpath(p, root)] = f.read()
+    return out
+
+
+def _ordered_frame(spark, rows, partitions):
+    """``rows`` edges in ``partitions`` partitions, each a sorted
+    ``row_index`` slice (the bundle writer's input contract)."""
+    import pandas as pd
+
+    idx = np.arange(rows, dtype="int64")
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "row_index": idx,
+                "source_node_id": idx // 5,
+                "target_node_id": (idx * 7) % 31,
+                "weight": (idx % 13).astype("float32"),
+            }
+        )
+    ).repartitionByRange(partitions, "row_index").sortWithinPartitions(
+        "row_index"
+    )
+
+
+def test_bundle_writer_rejects_unordered_partitions(spark, tmp_path):
+    """The writer's input contract: a partition that is not sorted on
+    row_index, or two partitions whose row ranges overlap, raise the
+    ValueError that names order_rows, and nothing becomes visible at
+    the destination.  order_rows repairs either frame."""
+    from parquet_converters_spark.sinks.sonata import SonataBundleWriter
+    from parquet_converters_spark.sources.ordering import order_rows
+
+    def frame(idx, partitions):
+        rows = [(int(i), int(i) % 7, int(i) % 5) for i in idx]
+        return spark.createDataFrame(
+            spark.sparkContext.parallelize(rows, partitions),
+            "row_index long, source_node_id long, target_node_id long",
+        )
+
+    unsorted = frame(range(99, -1, -1), 1)
+    # two sorted partitions, [0, 100) and [50, 150)
+    overlapping = frame([*range(100), *range(50, 150)], 2)
+    for df, with_index in ((unsorted, True), (unsorted, False),
+                           (overlapping, True)):
+        out = str(tmp_path / "b")
+        with pytest.raises(ValueError, match="order_rows"):
+            SonataBundleWriter(out, "p").write(df, with_index=with_index)
+        assert not os.path.exists(os.path.join(out, "edges", "p"))
+        assert os.listdir(os.path.join(out, "edges")) == []
+
+    out = str(tmp_path / "fixed")
+    SonataBundleWriter(out, "p").write(order_rows(unsorted))
+    got = pq.read_table(os.path.join(out, "edges", "p", "table.parquet"))
+    assert sorted(got.column("row_index").to_pylist()) == list(range(100))
+
+
+def test_failed_table_pass_leaves_no_torn_bundle(spark, tmp_path):
+    """A table-pass task that raises mid-write leaves the population
+    directory absent, or holding the previous bundle byte for byte, and
+    no staging directory behind."""
+    from pyspark.sql import functions as F
+
+    from parquet_converters_spark.sinks.sonata import SonataBundleWriter
+
+    good = _ordered_frame(spark, 2_000, 4)
+    bad = good.withColumn(
+        "source_node_id",
+        F.when(F.col("row_index") == 1_700, F.raise_error(F.lit("injected")))
+        .otherwise(F.col("source_node_id")),
+    )
+    fresh = str(tmp_path / "fresh")
+    with pytest.raises(Exception, match="injected"):
+        SonataBundleWriter(fresh, "p").write(bad)
+    assert os.listdir(os.path.join(fresh, "edges")) == []
+
+    kept = str(tmp_path / "kept")
+    SonataBundleWriter(kept, "p").write(good)
+    before = _tree(kept)
+    assert "edges/p/attributes.json" in before
+    with pytest.raises(Exception, match="injected"):
+        SonataBundleWriter(kept, "p").write(bad)
+    assert _tree(kept) == before
+    assert os.listdir(os.path.join(kept, "edges")) == ["p"]
+
+
+def test_failed_h5_fill_leaves_no_torn_file(spark, tmp_path):
+    """A fill task that raises (an out-of-range key in a damaged bundle)
+    leaves h5_path absent, or holding the previous file byte for byte,
+    and no temporary file behind."""
+    from parquet_converters_spark.sinks.sonata import (
+        SonataBundleWriter,
+        export_hdf5_parallel,
+    )
+
+    bundle = str(tmp_path / "bundle")
+    SonataBundleWriter(bundle, "p").write(_ordered_frame(spark, 1_000, 2))
+    h5 = str(tmp_path / "out" / "e.h5")
+    os.makedirs(os.path.dirname(h5))
+    export_hdf5_parallel(spark, bundle, "p", h5)
+    before = open(h5, "rb").read()
+
+    table_dir = os.path.join(bundle, "edges", "p", "table.parquet")
+    last = sorted(f for f in os.listdir(table_dir) if f.endswith(".parquet"))[-1]
+    t = pq.read_table(os.path.join(table_dir, last))
+    idx = t.column("row_index").to_numpy().copy()
+    idx[-1] = 10**6  # past the dataset extent
+    pq.write_table(
+        t.set_column(0, "row_index", pa.array(idx)),
+        os.path.join(table_dir, last),
+    )
+    for target in (h5, str(tmp_path / "out" / "fresh.h5")):
+        with pytest.raises(Exception, match="out of range"):
+            export_hdf5_parallel(spark, bundle, "p", target)
+    assert open(h5, "rb").read() == before
+    assert os.listdir(os.path.dirname(h5)) == ["e.h5"]
+
+
+def test_bundle_dictionary_rule_matches_parquet_mr(spark, tmp_path):
+    """Size parity with Spark's writer: a float column of distinct values
+    is written PLAIN, low-cardinality integer columns keep a
+    dictionary."""
+    import glob as _glob
+
+    from pyspark.sql import functions as F
+
+    from parquet_converters_spark.sinks.sonata import (
+        SonataBundleWriter,
+        _dictionary_columns,
+    )
+
+    rng = np.random.default_rng(5)
+    n = 5_000
+    t = pa.table({
+        "distance": pa.array(rng.random(n).astype("float32")),
+        "kind": pa.array(rng.integers(0, 4, n), pa.int64()),
+        "id": pa.array(np.arange(n), pa.int64()),
+    })
+    assert _dictionary_columns(t) == ["kind"]
+
+    df = _ordered_frame(spark, n, 1).withColumn(
+        "distance", F.rand(3).cast("float")
+    )
+    out = str(tmp_path / "b")
+    SonataBundleWriter(out, "p").write(df, with_index=False)
+    (f,) = _glob.glob(os.path.join(out, "edges", "p", "table.parquet", "*.parquet"))
+    md = pq.read_metadata(f)
+    enc = {
+        md.schema.column(i).name: md.row_group(0).column(i)
+        for i in range(md.num_columns)
+    }
+    assert not enc["distance"].has_dictionary_page
+    assert not enc["row_index"].has_dictionary_page
+    assert enc["edge_type_id"].has_dictionary_page
+    assert enc["weight"].has_dictionary_page  # 13 distinct values
+    assert all(c.compression == "SNAPPY" for c in enc.values())

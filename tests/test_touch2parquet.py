@@ -41,8 +41,21 @@ def test_v1_matches_reference_golden(spark, v1_out):
     assert sorted(key(r) for r in ours) == sorted(key(r) for r in golden)
 
 
-def test_v1_synapse_ids_unique_and_packed(v1_out):
-    t = pq.read_table(v1_out)
+@pytest.fixture(scope="module")
+def v1_gen_out(spark, tmp_path_factory):
+    """``v1_out``'s generated twin: an 82-record seeded V1 file."""
+    from parquet_converters_spark.pipelines import touch2parquet
+    from tests.touch_fixtures import write_seeded_corpus
+
+    tmp = tmp_path_factory.mktemp("t2p_gen")
+    (path,) = write_seeded_corpus(str(tmp), 61, 1, 1, 82)
+    out = str(tmp / "v1_edges.parquet")
+    touch2parquet(spark, path, out)
+    return out
+
+
+def test_v1_synapse_ids_unique_and_packed(v1_gen_out):
+    t = pq.read_table(v1_gen_out)
     sid = t.column("synapse_id").to_pylist()
     gid = t.column("source_node_id").to_pylist()
     assert len(set(sid)) == len(sid)
@@ -83,15 +96,15 @@ def test_physical_layout(v1_out):
     _assert_physical_layout(v1_out)
 
 
-def test_v2_branch_type_unpack(spark):
+def test_v2_branch_type_unpack(spark, tmp_path):
     """P3: hi nibble -> efferent, lo nibble -> afferent, +1 MorphIO offset
     (parquet_writer.h:63-69)."""
     from parquet_converters_spark.operators import to_canonical_edges
     from parquet_converters_spark.sources import read_touches
+    from tests.touch_fixtures import write_seeded_corpus
 
-    raw = read_touches(
-        spark, os.path.join(REFERENCE_TESTS, "touches_v2", "touchesData.0")
-    )
+    (path,) = write_seeded_corpus(str(tmp_path), 62, 2, 1, 1104)
+    raw = read_touches(spark, path)
     edges = to_canonical_edges(raw, 2)
     joined = (
         raw.select("synapse_id", "branch_type")
@@ -107,24 +120,24 @@ def test_v2_branch_type_unpack(spark):
 def test_v3_full_columns(spark, tmp_path):
     from parquet_converters_spark.pipelines import touch2parquet
     from parquet_converters_spark.schemas import edge_columns
+    from tests.touch_fixtures import write_seeded_corpus
 
+    (path,) = write_seeded_corpus(str(tmp_path), 63, 3, 1, 62)
     out = str(tmp_path / "v3.parquet")
-    touch2parquet(
-        spark, os.path.join(REFERENCE_TESTS, "touches_v3", "touchesData.0"), out
-    )
+    touch2parquet(spark, path, out)
     t = pq.read_table(out)
     assert t.column_names == edge_columns(3)
     assert t.num_rows == 62
 
 
-def test_limit(spark):
+def test_limit(spark, tmp_path):
     """L1: -n record cap (touch2parquet.cpp:47)."""
     from parquet_converters_spark.operators import to_canonical_edges
     from parquet_converters_spark.sources import read_touches
+    from tests.touch_fixtures import write_seeded_corpus
 
-    raw = read_touches(
-        spark, os.path.join(REFERENCE_TESTS, "touches_v2", "touchesData.0")
-    )
+    (path,) = write_seeded_corpus(str(tmp_path), 64, 2, 1, 1104)
+    raw = read_touches(spark, path)
     assert to_canonical_edges(raw, 2, limit=10).count() == 10
 
 
@@ -181,15 +194,17 @@ def test_bad_section_counter_matches_validation(spark):
 
 def test_cli_end_to_end(spark, tmp_path):
     """The module CLI mirrors the reference binaries: touch2parquet then
-    parquet2sonata, driven through main() with argv."""
+    parquet2sonata, driven through main() with argv.  The V2 input has
+    one source gid, so the source side is one range."""
     from parquet_converters_spark.cli import main
+    from tests.touch_fixtures import seeded_payload, write_touch_pair
 
+    runs = [(28, 1104)]
+    touches = tmp_path / "touches"
+    touches.mkdir()
+    data = write_touch_pair(str(touches), 2, runs, seeded_payload(65, 2, runs))
     out_pq = str(tmp_path / "cli_edges")
-    rc = main([
-        "touch2parquet",
-        "/root/reference/tests/touches_v2/touchesData.0",
-        "-o", out_pq,
-    ])
+    rc = main(["touch2parquet", data, "-o", out_pq])
     assert rc == 0
     assert spark.read.parquet(out_pq).count() == 1104
 
@@ -207,8 +222,7 @@ def test_cli_end_to_end(spark, tmp_path):
 
     # -n limit mirrors the reference's export cap
     out_lim = str(tmp_path / "cli_limited")
-    main(["touch2parquet", "/root/reference/tests/touches_v2/touchesData.0",
-          "-o", out_lim, "-n", "100"])
+    main(["touch2parquet", data, "-o", out_lim, "-n", "100"])
     assert spark.read.parquet(out_lim).count() == 100
 
     # --hdf5 writes the real .h5 via per-file offset writes
@@ -271,14 +285,11 @@ def test_touch2parquet_writes_metadata_sidecar(spark, tmp_path):
 
     from parquet_converters_spark.pipelines import touch2parquet
     from parquet_converters_spark.sources.ordering import _sidecar_schema
-    from tests.conftest import REFERENCE_TESTS
+    from tests.touch_fixtures import write_seeded_corpus
 
+    (path,) = write_seeded_corpus(str(tmp_path), 66, 1, 1, 82)
     out = str(tmp_path / "v1.parquet")
-    touch2parquet(
-        spark,
-        os.path.join(REFERENCE_TESTS, "touches_v1", "touchesData.0"),
-        out,
-    )
+    touch2parquet(spark, path, out)
     sidecar = os.path.join(out, "_metadata")
     assert os.path.isfile(sidecar)
     md = pq.ParquetFile(sidecar).metadata
