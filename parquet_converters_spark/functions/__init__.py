@@ -13,7 +13,6 @@ from parquet_converters_spark.functions.text import (  # noqa: F401
 from parquet_converters_spark.functions.dedup import (  # noqa: F401
     content_hash,
     exact_dedup,
-    minhash_signature,
     minhash_signatures,
     minhash_lsh_pairs,
     near_dedup_pipeline,

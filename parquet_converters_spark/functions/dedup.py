@@ -5,9 +5,12 @@ Four families, all shuffle-disciplined for 100 TB inputs:
 - **exact**: content-hash groupBy — one shuffle on a 64-bit hash key,
   map-side partial aggregation, no full-text comparison.
 - **MinHash + LSH**: shingle -> 32-bit hash -> k permuted mins ->
-  banded bucket join.  Candidate generation is an equi-join on
-  (band_id, band_signature) — Spark shuffles both sides on the bucket
-  key, so cost is proportional to bucket collisions, never O(n^2).
+  bands.  The band keys come from one Arrow pass per partition, each
+  document hashed once; candidates from one ``groupBy(band, bucket)``
+  exchange whose sorted id lists expand to their pairs, so cost is
+  proportional to bucket collisions, never O(n^2).  Documents without
+  shingles have no bands.  Survivors union-find small candidate sets on
+  the driver.
 - **SimHash**: 32-bit majority-vote fingerprint; near-dups share a
   fingerprint (or a nibble-banded variant of it).
 - **n-gram Jaccard**: exact verification on candidate pairs only.
@@ -71,39 +74,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def minhash_signature(
-    text: Column | str, num_hashes: int = 8, shingle_size: int = 3
-) -> Column:
-    """MinHash signature as a single column expression: array of
-    ``num_hashes`` permuted minima over word-shingle hashes.
-    Empty-shingle documents get MERSENNE_PRIME sentinels.
-
-    The shingle-hash array is bound once (``text.bind``) so the md5
-    pipeline runs once per row regardless of ``num_hashes``; batch
-    pipelines can still prefer :func:`minhash_signatures` (explode +
-    groupBy) when the signature feeds an aggregation anyway."""
-    assert num_hashes <= len(_MINHASH_COEFFS)
-    from parquet_converters_spark.functions.text import bind
-
-    def perm(a, b):
-        # factory keeps the lambda unary: PySpark reads higher-order
-        # function arity from the Python signature (defaults included)
-        return lambda h: ((h % MERSENNE_PRIME) * a + b) % MERSENNE_PRIME
-
-    def _mins(hashes: Column) -> Column:
-        return F.array(
-            *[
-                F.coalesce(
-                    F.array_min(F.transform(hashes, perm(a, b))),
-                    F.lit(MERSENNE_PRIME),
-                )
-                for a, b in _MINHASH_COEFFS[:num_hashes]
-            ]
-        )
-
-    return bind(F.transform(shingles(text, shingle_size), h32), _mins)
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -133,6 +103,114 @@ def minhash_signatures(
     )
 
 
+def _band_batches(batches, num_hashes: int, bands: int, shingle_size: int):
+    """``mapInArrow`` kernel: ``(id, text)`` batches -> ``(id, band,
+    bucket)`` rows, the same values the Spark expressions give.
+
+    Per document: lowercase, ``[a-z0-9]+`` tokens, word
+    ``shingle_size``-shingles, each hashed as ``int(md5[:8], 16)``
+    (:func:`h32`), then the frozen ``_MINHASH_COEFFS`` permutations in
+    numpy int64 and one minimum per permutation; a band's bucket is its
+    minima joined with ``-``.  A document without shingles (NULL text or
+    fewer than ``shingle_size`` tokens) emits no rows: its signature
+    would be all sentinels, shared by every such document."""
+    import hashlib
+    import re
+
+    import numpy as np
+    import pyarrow as pa
+
+    from parquet_converters_spark.functions.text import TOKEN_PATTERN
+
+    token = re.compile(TOKEN_PATTERN)
+    coeffs = np.array(_MINHASH_COEFFS[:num_hashes], dtype=np.int64)
+    rows = num_hashes // bands
+    n = shingle_size
+    # documents per numpy pass: bounds the k x shingles work arrays
+    chunk = 1024
+    for batch in batches:
+        ids, texts = batch.column(0), batch.column(1).to_pylist()
+        for lo in range(0, len(texts), chunk):
+            keep, starts, hashes = [], [], []
+            for i in range(lo, min(lo + chunk, len(texts))):
+                t = texts[i]
+                toks = token.findall(t.lower()) if t is not None else ()
+                if len(toks) < n:
+                    continue
+                keep.append(i)
+                starts.append(len(hashes))
+                # the first 4 md5 bytes, big-endian: int(md5[:8], 16)
+                hashes.extend(
+                    int.from_bytes(
+                        hashlib.md5(" ".join(toks[j:j + n]).encode()).digest()[:4],
+                        "big",
+                    )
+                    for j in range(len(toks) - n + 1)
+                )
+            if not keep:
+                continue
+            h = np.array(hashes, dtype=np.int64) % MERSENNE_PRIME
+            mins = np.stack(
+                [
+                    np.minimum.reduceat((h * a + b) % MERSENNE_PRIME, starts)
+                    for a, b in coeffs
+                ],
+                axis=1,
+            ).tolist()
+            yield pa.RecordBatch.from_arrays(
+                [
+                    ids.take(pa.array(np.repeat(keep, bands))),
+                    pa.array(list(range(bands)) * len(keep), pa.int32()),
+                    pa.array(
+                        [
+                            "-".join(map(str, m[b * rows:(b + 1) * rows]))
+                            for m in mins
+                            for b in range(bands)
+                        ],
+                        pa.string(),
+                    ),
+                ],
+                ["_id", "band", "bucket"],
+            )
+
+
+def _lsh_bands(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    num_hashes: int = 8,
+    bands: int = 4,
+    shingle_size: int = 3,
+) -> DataFrame:
+    """Banded MinHash-LSH keys ``(_id, band, bucket)``: ``bands`` rows
+    per document with shingles, from one narrow ``mapInArrow`` pass
+    (:func:`_band_batches`) — each document is hashed once, in whatever
+    partition holds it.  The buckets equal
+    :func:`signature_band_buckets` over :func:`minhash_signatures` for
+    every document whose signature is not all sentinels."""
+    from functools import partial
+
+    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+
+    assert num_hashes <= len(_MINHASH_COEFFS)
+    schema = StructType(
+        [
+            StructField("_id", df.schema[id_col].dataType),
+            StructField("band", IntegerType()),
+            StructField("bucket", StringType()),
+        ]
+    )
+    return df.select(id_col, text_col).mapInArrow(
+        partial(
+            _band_batches,
+            num_hashes=num_hashes,
+            bands=bands,
+            shingle_size=shingle_size,
+        ),
+        schema,
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -146,59 +224,35 @@ def minhash_lsh_pairs(
     """Near-duplicate candidate pairs via banded MinHash-LSH, optionally
     verified with exact shingle-set Jaccard.
 
-    Plan shape (scale-critical): signature computation is a narrow map;
-    banding explodes each doc into ``bands`` rows; candidates come from
-    a self equi-join on (band, band_signature) — hash-shuffle on the
-    bucket key, broadcast-free, skew handled by AQE.  Verification runs
-    only on distinct candidate pairs.
+    Plan shape (scale-critical): the band keys come from one narrow
+    Arrow pass (:func:`_lsh_bands`); candidates from ONE exchange,
+    ``groupBy(band, bucket)`` collecting each bucket's sorted ids, whose
+    lists expand to their ``a < b`` pairs — the same rows as a self
+    equi-join on (band, bucket), with one shuffle instead of two.  Cost
+    is proportional to bucket collisions, never O(n^2) in the corpus.
+    Documents without shingles have no bands and pair with nothing.
+    Verification runs only on distinct candidate pairs.
 
     ``pair_distinct=False`` skips the cross-band pair dedup shuffle: a
     pair matching in several bands is then emitted once per band.  Only
-    for consumers whose result is invariant to duplicate edges (e.g.
-    connected components, whose own symmetric-edge ``distinct``
-    subsumes this one) — the r17 one-shuffle-fewer funnel path.
+    for consumers whose result is invariant to duplicate edges (the
+    union-find of :func:`near_dedup_survivors`).
     """
-    rows_per_band = num_hashes // bands
-    # r17: row-local signature expression instead of explode + groupBy —
-    # same values bit-for-bit (identical permutation arithmetic over the
-    # same shingle hashes; asserted mismatch-free on the corpus), but
-    # ZERO shuffle before banding: the explode+groupBy form exchanges a
-    # partial-agg row per document just to reassemble the signature.
-    sig = df.select(
-        F.col(id_col).alias("_id"),
-        minhash_signature(text_col, num_hashes, shingle_size).alias("_sig"),
-    )
-    banded = sig.select(
-        "_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.array_join(
-                            F.transform(
-                                F.slice("_sig", b * rows_per_band + 1, rows_per_band),
-                                lambda x: x.cast("string"),
-                            ),
-                            "-",
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("_id", "bb.band", "bb.bucket")
-
-    left = banded.alias("l")
-    right = banded.alias("r")
     cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l._id") < F.col("r._id")),
+        _lsh_bands(df, text_col, id_col, num_hashes, bands, shingle_size)
+        .groupBy("band", "bucket")
+        .agg(F.array_sort(F.collect_list("_id")).alias("_ids"))
+        .filter(F.size("_ids") > 1)
+        # streamed: each id is paired with the ids after it, one O(n)
+        # slice per row, so a bucket of n ids never holds its n(n-1)/2
+        # pairs in one row
+        .select(F.posexplode("_ids").alias("_i", "id_a"), "_ids")
+        .select(
+            "id_a",
+            F.explode(F.slice("_ids", F.col("_i") + 2, F.size("_ids"))).alias("id_b"),
         )
-        .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
+        # equal ids (a repeated id) never pair, as in the self-join
+        .filter(F.col("id_a") < F.col("id_b"))
     )
     if pair_distinct or jaccard_threshold is not None:
         # verification must see each pair once (it scores per row)
@@ -208,7 +262,7 @@ def minhash_lsh_pairs(
         return cand.select("id_a", "id_b")
 
     # verification joins the shingle sets back in by id (keeps the text
-    # out of the banded explode + self-join shuffles)
+    # out of the LSH exchange)
     sh = df.select(
         F.col(id_col).alias("_vid"),
         F.array_distinct(shingles(text_col, shingle_size)).alias("_vsh"),
@@ -252,14 +306,18 @@ def near_dedup_pipeline(
     representative pairs (extend to members through ``groups``).
     """
     groups = exact_dedup(df, text_col, id_col)
-    reps = df.join(
-        groups.select(F.col("keep_id").alias(id_col)), id_col, "left_semi"
-    )
     pairs = minhash_lsh_pairs(
-        reps, text_col, id_col, num_hashes, bands, shingle_size,
+        _representatives(df, groups, id_col), text_col, id_col, num_hashes, bands, shingle_size,
         jaccard_threshold, pair_distinct=pair_distinct,
     )
     return groups, pairs
+
+
+def _representatives(df: DataFrame, groups: DataFrame, id_col: str) -> DataFrame:
+    """The rows of ``df`` that represent their exact-dedup group."""
+    return df.join(
+        groups.select(F.col("keep_id").alias(id_col)), id_col, "left_semi"
+    )
 
 
 def simhash(
@@ -427,7 +485,6 @@ def near_dedup_survivors(
     bands: int = 4,
     cc_method: str = "hash_to_min",
     precomputed: tuple[DataFrame, DataFrame] | None = None,
-    materialize: bool = False,
 ) -> DataFrame:
     """The end of the dedup funnel: the rows a training-data pipeline
     actually keeps.
@@ -436,42 +493,72 @@ def near_dedup_survivors(
     exact dedup -> min-id representatives -> MinHash-LSH pairs over
     representatives only -> connected components -> drop every doc that
     is not its cluster's minimum.  Returns the surviving subset of
-    ``df`` (all original columns).
+    ``df`` (all original columns) as an eager ``localCheckpoint`` — the
+    only storage the call leaves pinned.
+
+    Plan: the representatives are persisted and built by the pairs job.
+    :func:`~parquet_converters_spark.operators.graph.connected_components`
+    (``cc_method``) checkpoints the pairs once; below its
+    ``_CC_DRIVER_MAX_EDGES`` they are union-found on the driver and the
+    labels come back as a local relation, above it the distributed
+    rounds run over that checkpoint.  The one checkpoint job anti-joins
+    the non-minimum nodes from the cached representatives.
 
     ``precomputed``: pass an already-materialized ``(groups, pairs)``
     from :func:`near_dedup_pipeline` when the candidate set is shared
-    with other outputs (clusters, pair reports) — at scale the
-    candidate join is the expensive stage and should run once.
-
-    ``materialize=True`` returns an EAGER localCheckpoint of the result
-    and releases the connected-components label checkpoint it subsumes
-    (`session.free_local_checkpoints`) — the no-residue form for
-    long-lived sessions; the default stays lazy (the CC checkpoint then
-    remains pinned while the returned frame is alive, because its
-    recompute lineage needs it).
+    with other outputs (clusters, pair reports).
     """
+    return _near_dedup_survivors(
+        df, text_col, id_col, num_hashes, bands, cc_method, precomputed
+    )[0]
+
+
+def _near_dedup_survivors(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    cc_method: str,
+    precomputed: tuple[DataFrame, DataFrame] | None,
+) -> tuple[DataFrame, int, int]:
+    """:func:`near_dedup_survivors` plus the two counts its checkpoint
+    job observes: ``(survivors, representatives, survivors' rows)``."""
+    from pyspark.sql import Observation
+
     from parquet_converters_spark.operators.graph import connected_components
     from parquet_converters_spark.session import free_local_checkpoints
 
     if precomputed is not None:
         groups, pairs = precomputed
     else:
-        # pairs feed ONLY connected components here, whose symmetric-edge
-        # distinct makes the cross-band pair dedup redundant (r17)
+        # pairs feed only the union-find, which ignores repeated edges,
+        # so the cross-band pair dedup would be a wasted exchange
         groups, pairs = near_dedup_pipeline(
             df, text_col, id_col, num_hashes=num_hashes, bands=bands,
             pair_distinct=False,
         )
-    comps = connected_components(pairs, src="id_a", dst="id_b", method=cc_method)
-    losers = comps.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias(id_col)
-    )
-    reps = df.join(groups.select(F.col("keep_id").alias(id_col)), id_col, "left_semi")
-    out = reps.join(losers, id_col, "left_anti")
-    if materialize:
-        out = out.localCheckpoint(eager=True)
-        free_local_checkpoints(comps)
-    return out
+    # persisted before the pairs run: the plan of ``pairs`` contains this
+    # same semi-join, so the pairs job builds the cache and the
+    # checkpoint below reads it instead of redoing the exact-dedup
+    # exchange
+    reps = _representatives(df, groups, id_col).persist()
+    comps = None
+    try:
+        comps = connected_components(pairs, "id_a", "id_b", method=cc_method)
+        losers = comps.filter(F.col("node") != F.col("component"))
+        n_reps, n_out = Observation(), Observation()
+        out = (
+            reps.observe(n_reps, F.count(F.lit(1)).alias("n"))
+            .join(losers.select(F.col("node").alias(id_col)), id_col, "left_anti")
+            .observe(n_out, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        reps.unpersist(blocking=True)
+        if comps is not None:
+            free_local_checkpoints(comps)
+    return out, n_reps.get["n"] or 0, n_out.get["n"] or 0
 
 
 def contamination_flags(

@@ -338,8 +338,8 @@ def image_neardup_survivors(
 
     ``materialize=True`` returns an EAGER localCheckpoint and releases
     the connected-components checkpoints it subsumes — the no-residue
-    form for long-lived sessions (the ``near_dedup_survivors``
-    contract); the default stays lazy."""
+    form for long-lived sessions (what ``near_dedup_survivors``
+    always returns); the default stays lazy."""
     from parquet_converters_spark.operators.graph import (
         connected_components,
     )

@@ -38,15 +38,15 @@ class ConvergenceWarning(UserWarning):
     ``max_iter`` without reaching its fixed point."""
 
 
-# Edge-count cap for the driver-side union-find fallback of
-# connected_components.  200k symmetric edge rows collect to ~3 MB and
-# union-find them in milliseconds — far below any driver-memory or
-# maxResultSize concern — while a 100 TB near-dup graph (edges >> cap)
-# always takes the distributed rounds.  The labels are a graph
-# property (each node's component MINIMUM), so both algorithms produce
-# byte-identical values; the threshold only picks which machine does
-# the tiny amount of work, exactly like a broadcast-join size
-# threshold (guide §1.2 "algorithm first", §3.1).
+# Pair-count cap for the driver-side union-find of connected_components.
+# 200k pair rows collect to ~3 MB and union-find in well under a second
+# — far below any driver-memory or maxResultSize concern — while a
+# 100 TB near-dup graph (pairs >> cap) always takes the distributed
+# rounds.  The labels are a graph property (each node's component
+# MINIMUM), so both algorithms produce byte-identical values; the
+# threshold only picks which machine does the tiny amount of work,
+# exactly like a broadcast-join size threshold (guide §1.2 "algorithm
+# first", §3.1).
 _CC_DRIVER_MAX_EDGES = 200_000
 
 # Target rows per shuffle partition for the per-round label/edge jobs
@@ -58,10 +58,10 @@ _CC_DRIVER_MAX_EDGES = 200_000
 _STATE_ROWS_PER_PARTITION = 1_000_000
 
 
-def _cc_labels_driver(spark, edges: DataFrame, dtype: str) -> DataFrame:
-    """Union-find the (already materialized, <= _CC_DRIVER_MAX_EDGES
-    row) edge table on the driver and return the (node, component)
-    labels as a LocalRelation.
+def _cc_labels_driver(spark, edges, dtype: str) -> DataFrame:
+    """Union-find the collected ``(u, v)`` rows of an at most
+    ``_CC_DRIVER_MAX_EDGES``-row pair table on the driver and return the
+    (node, component) labels as a LocalRelation.
 
     Values are identical to the distributed rounds by construction:
     both compute each node's component minimum, which does not depend
@@ -69,7 +69,7 @@ def _cc_labels_driver(spark, edges: DataFrame, dtype: str) -> DataFrame:
     driver-serialized job whose fixed scheduling cost (~0.3 s each at
     bench scale) dwarfs the actual label work on a small graph.
     """
-    from parquet_converters_spark.session import values_df
+    import pyarrow as pa
 
     parent: dict = {}
 
@@ -81,8 +81,7 @@ def _cc_labels_driver(spark, edges: DataFrame, dtype: str) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for r in edges.collect():
-        u, v = r[0], r[1]
+    for u, v in edges:
         if u not in parent:
             parent[u] = u
         if v not in parent:
@@ -96,8 +95,16 @@ def _cc_labels_driver(spark, edges: DataFrame, dtype: str) -> DataFrame:
         m = comp_min.get(root)
         if m is None or node < m:
             comp_min[root] = node
-    rows = sorted((n, comp_min[find(n)]) for n in parent)
-    return values_df(spark, rows, f"node {dtype}, component {dtype}")
+    nodes = sorted(parent)
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "node": pa.array(nodes, pa.int64()),
+                "component": pa.array([comp_min[find(n)] for n in nodes], pa.int64()),
+            }
+        ),
+        f"node {dtype}, component {dtype}",
+    )
 
 
 @contextlib.contextmanager
@@ -173,32 +180,47 @@ def connected_components(
     if method != "hash_to_min":
         raise ValueError(f"unknown method {method!r} (hash_to_min | star)")
 
+    spark = pairs.sparkSession
+    raw = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    dtype = dict(
+        raw.unionByName(raw.select(F.col("v").alias("u"), F.col("u").alias("v"))).dtypes
+    )["u"]
+    source, raw_ckpt = raw, None
+    # r18 scale-adaptive algorithm switch (guide §1.2): below the cap,
+    # union-find the pairs on the driver — the labels (component minimum
+    # per node) are byte-identical, and the 4-6 driver-serialized round
+    # jobs collapse into one bounded collect.  Integral node ids only:
+    # Python and Spark agree on integer ordering unconditionally;
+    # anything else keeps the general path.
+    if dtype in ("tinyint", "smallint", "int", "bigint"):
+        # a lazy checkpoint: the stages that produce the pairs (an LSH
+        # exchange) run here, the pairs themselves on their first read,
+        # which is the bounded collect (one job while they fit in one
+        # partition); above the cap the rounds' edge table reads the same
+        # checkpoint, so nothing upstream runs twice
+        raw_ckpt = raw.select(
+            F.col("u").cast(dtype).alias("u"), F.col("v").cast(dtype).alias("v")
+        ).localCheckpoint(eager=False)
+        head = raw_ckpt.limit(_CC_DRIVER_MAX_EDGES + 1).collect()
+        if len(head) <= _CC_DRIVER_MAX_EDGES:
+            labels = _cc_labels_driver(spark, head, dtype)
+            free_local_checkpoints(raw_ckpt)
+            if materialize:
+                return labels.localCheckpoint(eager=True)
+            return labels
+        source = raw_ckpt
     # the edge count rides the checkpoint job via observe() (no extra
     # action); it sizes the per-round shuffle partitions below
     obs_e = Observation()
     edges = (
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        source.unionByName(source.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
         .observe(obs_e, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
     n_edges = obs_e.get["n"]
-    # r18 scale-adaptive algorithm switch (guide §1.2): below the cap,
-    # union-find the materialized edge table on the driver — the labels
-    # (component minimum per node) are byte-identical, and the 4-6
-    # driver-serialized round jobs collapse into one bounded collect.
-    # Integral node ids only: Python and Spark agree on integer
-    # ordering unconditionally; anything else keeps the general path.
-    dtype = dict(edges.dtypes)["u"]
-    if n_edges <= _CC_DRIVER_MAX_EDGES and dtype in (
-        "tinyint", "smallint", "int", "bigint"
-    ):
-        labels = _cc_labels_driver(pairs.sparkSession, edges, dtype)
-        free_local_checkpoints(edges)
-        if materialize:
-            return labels.localCheckpoint(eager=True)
-        return labels
+    if raw_ckpt is not None:
+        free_local_checkpoints(raw_ckpt)
     # r17: label init + round 1 fused into ONE groupBy job.  With the
     # identity initial labeling (component = node), round 1's
     # neighborhood minimum reduces to min(v) per u and the pointer jump
@@ -210,7 +232,7 @@ def connected_components(
     # sized to the EDGE table (1,724 rows at sf0.1 vs a 32-partition
     # session layout) — the labels are integer mins, so the repartition
     # cannot change a value, only the empty-task scheduling cost
-    with _state_shuffle_scope(pairs.sparkSession, n_edges):
+    with _state_shuffle_scope(spark, n_edges):
         obs0 = Observation()
         first = (
             edges.groupBy("u")

@@ -214,6 +214,28 @@ def snapshot_diff(
     return joined.select(*key_cols, change.alias("change_type"))
 
 
+def _input_partitions(df) -> int | None:
+    """``df``'s partition count, found without running a job; None when
+    the plan (or a cached plan under it) holds an exchange, a broadcast
+    or a subquery, whose preparation would run one."""
+    plan = df._jdf.queryExecution().executedPlan()
+    todo = [plan]
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        if (
+            name == "AdaptiveSparkPlanExec"
+            or "Exchange" in name
+            or not node.subqueries().isEmpty()
+        ):
+            return None
+        if name == "InMemoryTableScanExec":
+            todo.append(node.relation().cachedPlan())
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+    return plan.execute().getNumPartitions()
+
+
 def prepare_corpus(
     docs,
     text_col: str = "text",
@@ -241,70 +263,71 @@ def prepare_corpus(
        to a broadcast set, the 100 TB side never shuffles against it).
 
     Returns ``(clean, report)``: the surviving subset of ``docs`` (all
-    original columns) and the funnel report
-    ``(stage_order, stage, n_docs)`` — raw / quality / exact_unique /
-    near_unique (/ decontaminated).
+    original columns, in at most as many partitions as ``docs``) and the
+    funnel report ``(stage_order, stage, n_docs)`` — raw / quality /
+    exact_unique / near_unique (/ decontaminated).
 
-    Scale shape: each stage is the scale-safe form already audited in
-    SCALE.md (expression-only quality gate, one hash-groupBy for exact
-    dedup, banded LSH — never all-pairs — for near-dedup).  The
-    intermediate frames are persisted while the funnel runs because the
-    report counts and the survivor join both consume them; the report
-    (≤5 rows) is materialized eagerly and the intermediates unpersisted
-    before returning, so repeated funnel runs in a long-lived session
-    leave ONLY the returned clean frame pinned (VERDICT r04 item 2).
+    Each document is gated and hashed once, on all cores:
+
+    - the gated frame is persisted and materialized once, before any
+      consumer reads it, counting ``raw`` and ``quality`` through
+      ``observe()`` on the way.  An input
+      with fewer partitions than ``defaultParallelism`` (one file, one
+      row group) is first spread round-robin to that many; a
+      corpus-scale input is never reshuffled;
+    - the survivors path (`functions.dedup.near_dedup_survivors`) builds
+      the LSH pairs in one Arrow pass and one exchange, union-finds them
+      on the driver when small, and checkpoints the survivors in one job
+      that also counts ``exact_unique`` and ``near_unique``.
+
+    The report is a local relation of those observed counts: it runs no
+    job.  Only the returned frame stays pinned; the gated frame is
+    unpersisted, not freed, so frames derived from it stay computable.
     """
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from parquet_converters_spark.functions.dedup import (
-        near_dedup_pipeline,
-        near_dedup_survivors,
+        _near_dedup_survivors,
     )
     from parquet_converters_spark.functions.text import quality_score
-    from parquet_converters_spark.session import free_local_checkpoints
-
-    q = quality_score(text_col)
-    len_ok = (F.length(text_col) >= min_len) & (F.length(text_col) <= max_len)
-    quality = docs.filter(len_ok & (q >= min_quality)).persist()
-    # compute the funnel once and share it between the survivor join and
-    # the report counts (the candidate join is the expensive stage);
-    # groups feeds BOTH the survivors' representative semi-join and the
-    # exact_unique report count, so persist it too
-    # pair_distinct=False: pairs feed ONLY connected components below,
-    # whose symmetric-edge distinct subsumes the cross-band pair dedup —
-    # one shuffle fewer on the funnel's hot path (r17)
-    groups, pairs = near_dedup_pipeline(
-        quality, text_col, id_col, num_hashes=num_hashes, bands=bands,
-        pair_distinct=False,
-    )
-    groups = groups.persist()
-    # materialize=True: the survivors come back as an EAGER
-    # localCheckpoint (same storage as a cache, truncated lineage) with
-    # the CC label checkpoint they subsume already released.  A plain
-    # cache would pin the whole checkpoint chain forever through its
-    # recompute lineage — which is checkpoint-based and thus not
-    # executor-loss-replayable anyway, so no fault tolerance is given up.
-    clean = near_dedup_survivors(
-        quality, text_col, id_col, precomputed=(groups, pairs),
-        materialize=True,
+    from parquet_converters_spark.session import (
+        free_local_checkpoints,
+        values_df,
     )
 
     spark = docs.sparkSession
-
-    from parquet_converters_spark.session import values_df
-
-    def stage(order, name, df):
-        return values_df(
-            spark, [(order, name)], "stage_order int, stage string"
-        ).crossJoin(df.agg(F.count(F.lit(1)).cast("long").alias("n_docs")))
-
-    report = (
-        stage(0, "raw", docs)
-        .unionByName(stage(1, "quality", quality))
-        .unionByName(stage(2, "exact_unique", groups))
-        .unionByName(stage(3, "near_unique", clean))
+    n_in = _input_partitions(docs)
+    spread = spark.sparkContext.defaultParallelism
+    if n_in is not None and n_in < spread:
+        docs = docs.repartition(spread)
+    q = quality_score(text_col)
+    len_ok = (F.length(text_col) >= min_len) & (F.length(text_col) <= max_len)
+    n_raw, n_quality = Observation(), Observation()
+    # the observe() between gate and exchange also keeps Catalyst from
+    # pushing the gate below the repartition, onto the one-task scan
+    quality = (
+        docs.observe(n_raw, F.count(F.lit(1)).alias("n"))
+        .filter(len_ok & (q >= min_quality))
+        .observe(n_quality, F.count(F.lit(1)).alias("n"))
+        .persist()
     )
-    superseded = None
+    try:
+        # materialized up front: adaptive execution starts the exact-dedup
+        # aggregate and the representatives' scan together, and each
+        # would compute an unbuilt cache
+        quality.write.format("noop").mode("overwrite").save()
+        clean, n_unique, n_near = _near_dedup_survivors(
+            quality, text_col, id_col, num_hashes, bands, "hash_to_min", None
+        )
+    finally:
+        quality.unpersist(blocking=True)
+    counts = [
+        ("raw", n_raw.get["n"] or 0),
+        ("quality", n_quality.get["n"] or 0),
+        ("exact_unique", n_unique),
+        ("near_unique", n_near),
+    ]
     if eval_df is not None:
         from parquet_converters_spark.functions.dedup import (
             contamination_flags,
@@ -315,23 +338,24 @@ def prepare_corpus(
             min_hits=decontaminate_min_hits,
         )
         dirty = flags.filter(F.col("contaminated")).select(id_col)
-        superseded = clean
-        clean = clean.join(dirty, id_col, "left_anti").localCheckpoint(
-            eager=True
+        n_kept = Observation()
+        kept = (
+            clean.join(dirty, id_col, "left_anti")
+            .observe(n_kept, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
         )
-        report = report.unionByName(stage(4, "decontaminated", clean))
-    # materialize the report NOW (≤5 rows; clean is already materialized
-    # by its eager checkpoint), then drop every intermediate pin: only
-    # the returned frame's storage survives the call
+        free_local_checkpoints(clean)
+        clean = kept
+        counts.append(("decontaminated", n_kept.get["n"] or 0))
+    if n_in is not None and n_in < spread:
+        # as many output files as input files: a narrow merge of the
+        # checkpoint's partitions
+        clean = clean.coalesce(max(n_in, 1))
     report = values_df(
         spark,
-        [tuple(r) for r in report.collect()],
+        [(i, stage, n) for i, (stage, n) in enumerate(counts)],
         "stage_order int, stage string, n_docs long",
     )
-    quality.unpersist(blocking=True)
-    groups.unpersist(blocking=True)
-    if superseded is not None:
-        free_local_checkpoints(superseded)
     return clean, report
 
 

@@ -1222,6 +1222,14 @@ def _sql_minhash_sig(
     )
 
 
+#: the 4 x 2 banding of an oracle ``sig`` CTE.  Documents without
+#: shingles have the all-sentinel signature and no bands (real minima are
+#: below the prime), as in ``functions.dedup.minhash_lsh_pairs``.
+_SQL_BAND_ROWS = f"""  SELECT doc_id, b,
+         concat_ws('-', signature[b*2+1], signature[b*2+2]) AS bucket
+  FROM sig, unnest([0,1,2,3]) AS t(b)
+  WHERE signature[1] <> {MERSENNE_PRIME}"""
+
 DEDUP_MINHASH_SIG_SQL = (
     "SELECT doc_id, array_to_string(signature, '-') AS signature_str FROM ("
     + _sql_minhash_sig()
@@ -1252,6 +1260,10 @@ def _dedup_cached(spark, sf_dir, kind):
             _DEDUP_CACHE[key] = simhash(docs, bits=32).localCheckpoint(
                 eager=False
             )
+        elif kind == "survivors":  # an eager checkpoint, pinned once
+            _DEDUP_CACHE[key] = near_dedup_survivors(
+                docs, precomputed=_dedup_cached(spark, sf_dir, "pipeline")
+            )
         else:  # pipeline: (groups, pairs) over exact-dedup representatives
             groups, pairs = near_dedup_pipeline(docs, num_hashes=8, bands=4)
             _DEDUP_CACHE[key] = (
@@ -1268,9 +1280,7 @@ def dedup_minhash_lsh(spark, sf_dir):
 DEDUP_MINHASH_LSH_SQL = (
     "WITH sig AS (" + _sql_minhash_sig() + "), "
     """banded AS (
-  SELECT doc_id, b,
-         concat_ws('-', signature[b*2+1], signature[b*2+2]) AS bucket
-  FROM sig, unnest([0,1,2,3]) AS t(b)
+""" + _SQL_BAND_ROWS + """
 )
 SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
 FROM banded l JOIN banded r ON l.b = r.b AND l.bucket = r.bucket AND l.doc_id < r.doc_id
@@ -1299,9 +1309,7 @@ def dedup_components(spark, sf_dir):
 DEDUP_COMPONENTS_SQL = (
     "WITH RECURSIVE sig AS (" + _sql_minhash_sig() + "), "
     """banded AS (
-  SELECT doc_id, b,
-         concat_ws('-', signature[b*2+1], signature[b*2+2]) AS bucket
-  FROM sig, unnest([0,1,2,3]) AS t(b)
+""" + _SQL_BAND_ROWS + """
 ), pairs AS (
   SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
   FROM banded l JOIN banded r ON l.b = r.b AND l.bucket = r.bucket AND l.doc_id < r.doc_id
@@ -1334,9 +1342,7 @@ DEDUP_PIPELINE_SQL = (
     "WHERE doc_id IN (SELECT keep_id FROM reps)), "
     "sig AS (" + _sql_minhash_sig(src="rep_docs") + "), "
     """banded AS (
-  SELECT doc_id, b,
-         concat_ws('-', signature[b*2+1], signature[b*2+2]) AS bucket
-  FROM sig, unnest([0,1,2,3]) AS t(b)
+""" + _SQL_BAND_ROWS + """
 )
 SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
 FROM banded l JOIN banded r ON l.b = r.b AND l.bucket = r.bucket AND l.doc_id < r.doc_id
@@ -3260,9 +3266,7 @@ WITH RECURSIVE d AS (
     "  SELECT doc_id, text FROM ke_t WHERE ke\n"
     "), sig AS (" + _sql_minhash_sig(src="exact_survivors") + """
 ), banded AS (
-  SELECT doc_id, b,
-         concat_ws('-', signature[b*2+1], signature[b*2+2]) AS bucket
-  FROM sig, unnest([0,1,2,3]) AS t(b)
+""" + _SQL_BAND_ROWS + """
 ), pairs AS (
   SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
   FROM banded l JOIN banded r
@@ -4999,11 +5003,13 @@ def dedup_survivors(spark, sf_dir):
     """End of the dedup funnel: the doc ids a training-data pipeline
     actually keeps — exact dedup to min-id representatives, MinHash-LSH
     pairs over representatives, connected components, one survivor per
-    cluster (functions/dedup.py near_dedup_survivors)."""
-    docs = _t(spark, sf_dir, "documents")
-    return near_dedup_survivors(
-        docs, precomputed=_dedup_cached(spark, sf_dir, "pipeline")
-    ).select("doc_id").orderBy("doc_id")
+    cluster (functions/dedup.py near_dedup_survivors, whose checkpoint
+    is shared per session like the candidate sets)."""
+    return (
+        _dedup_cached(spark, sf_dir, "survivors")
+        .select("doc_id")
+        .orderBy("doc_id")
+    )
 
 
 DEDUP_SURVIVORS_SQL = (
@@ -5013,9 +5019,7 @@ DEDUP_SURVIVORS_SQL = (
     "WHERE doc_id IN (SELECT keep_id FROM reps)), "
     "sig AS (" + _sql_minhash_sig(src="rep_docs") + "), "
     """banded AS (
-  SELECT doc_id, b,
-         concat_ws('-', signature[b*2+1], signature[b*2+2]) AS bucket
-  FROM sig, unnest([0,1,2,3]) AS t(b)
+""" + _SQL_BAND_ROWS + """
 ), pairs AS (
   SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
   FROM banded l JOIN banded r ON l.b = r.b AND l.bucket = r.bucket AND l.doc_id < r.doc_id
@@ -5983,9 +5987,7 @@ SELECT doc_id, n_chars, ROUND(sample_score, 6) AS sample_score FROM top
 _SQL_PAIR_EDGES = (
     "sig AS (" + _sql_minhash_sig() + "), "
     """banded AS (
-  SELECT doc_id, b,
-         concat_ws('-', signature[b*2+1], signature[b*2+2]) AS bucket
-  FROM sig, unnest([0,1,2,3]) AS t(b)
+""" + _SQL_BAND_ROWS + """
 ), e AS (
   SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
   FROM banded l
@@ -7635,9 +7637,7 @@ def lsh_pair_eval(spark, sf_dir):
 LSH_PAIR_EVAL_SQL = (
     "WITH sig AS (" + _sql_minhash_sig() + """),
 banded AS (
-  SELECT doc_id, b,
-         concat_ws('-', signature[b*2+1], signature[b*2+2]) AS bucket
-  FROM sig, unnest([0,1,2,3]) AS t(b)),
+""" + _SQL_BAND_ROWS + """),
 pairs AS (
   SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
   FROM banded l JOIN banded r
@@ -9306,9 +9306,7 @@ def dedup_fuzzy_pairs(spark, sf_dir):
 DEDUP_FUZZY_PAIRS_SQL = (
     "WITH sig AS (" + _sql_minhash_sig() + "), "
     f"""banded AS (
-  SELECT doc_id, b,
-         concat_ws('-', signature[b*2+1], signature[b*2+2]) AS bucket
-  FROM sig, unnest([0,1,2,3]) AS t(b)
+{_SQL_BAND_ROWS}
 ), pairs AS (
   SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
   FROM banded l JOIN banded r
@@ -11299,29 +11297,13 @@ def corpus_prep_funnel(spark, sf_dir):
     from parquet_converters_spark.pipelines import prepare_corpus
     from parquet_converters_spark.session import free_local_checkpoints
 
-    docs = _t(spark, sf_dir, "documents")
-    ckpt = None
-    if _scan_needs_spread(
-        sf_dir, "documents", spark.sparkContext.defaultParallelism
-    ):
-        # r18 (guide §2.5 input skew): Catalyst pushes the funnel's
-        # regexp-heavy quality filter through the spread repartition
-        # down to the scan, so on a single-row-group layout the WHOLE
-        # quality pass ran on one core (~3.5 s of the funnel, measured
-        # in the executed plan: Filter below Exchange REPARTITION_BY_NUM).
-        # Materializing the spread scan once (one cheap read job) pins
-        # the filter's evaluation above it, 32-way.  On a production
-        # multi-row-group layout the branch never fires and
-        # filter-at-scan remains the optimal shape.
-        docs = docs.localCheckpoint(eager=True)
-        ckpt = docs
-    _clean, report = prepare_corpus(docs)
-    # this query returns only the (already collected) report — release
-    # the survivors checkpoint and the scan checkpoint instead of
-    # pinning one of each per run
+    # prepare_corpus keeps its quality gate above the spread exchange of
+    # a single-row-group layout itself (its raw-count observe() stops
+    # the filter pushdown), so the scan goes in as it is
+    _clean, report = prepare_corpus(_t(spark, sf_dir, "documents"))
+    # this query returns only the (already computed) report — release
+    # the survivors checkpoint instead of pinning one per run
     free_local_checkpoints(_clean)
-    if ckpt is not None:
-        free_local_checkpoints(ckpt)
     return report.orderBy("stage_order")
 
 
@@ -11346,9 +11328,7 @@ CORPUS_PREP_FUNNEL_SQL = (
     "WHERE doc_id IN (SELECT keep_id FROM reps)), "
     "sig AS (" + _sql_minhash_sig(src="rep_docs") + "), "
     """banded AS (
-  SELECT doc_id, b,
-         concat_ws('-', signature[b*2+1], signature[b*2+2]) AS bucket
-  FROM sig, unnest([0,1,2,3]) AS t(b)
+""" + _SQL_BAND_ROWS + """
 ), pairs AS (
   SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
   FROM banded l JOIN banded r ON l.b = r.b AND l.bucket = r.bucket AND l.doc_id < r.doc_id

@@ -1102,6 +1102,352 @@ def test_prepare_corpus_unpersists_intermediates(spark, sf_dir):
     assert not set(jsc.getPersistentRDDs().keySet().toArray()) - before
 
 
+def _job_count(spark, run):
+    """Spark jobs started by ``run()``, counted through a job group."""
+    import os
+
+    sc = spark.sparkContext
+    group = f"budget-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write_doc_corpus(path, n_docs, seed):
+    """One parquet file (one row group) of ``n_docs`` documents: 5 %
+    too short for the quality gate, 10 % verbatim copies and 10 %
+    one-word variants of other documents."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(seed)
+    letters = np.array(list("abcdefghijklmnopqrstuvwxyz"))
+    vocab = sorted({"".join(rng.choice(letters, rng.integers(3, 9))) for _ in range(3000)})
+    n_junk, n_copy, n_near = n_docs // 20, n_docs // 10, n_docs // 10
+    base = []
+    for _ in range(n_docs - n_junk - n_copy - n_near):
+        words = rng.choice(vocab, int(rng.integers(40, 90))).tolist()
+        words[:3] = ["the", "and", "of"]
+        base.append(words)
+    texts = [" ".join(w) for w in base]
+    texts += [texts[int(rng.integers(len(base)))] for _ in range(n_copy)]
+    for _ in range(n_near):
+        words = list(base[int(rng.integers(len(base)))])
+        words[int(rng.integers(3, len(words)))] = str(rng.choice(vocab))
+        texts.append(" ".join(words))
+    texts += [" ".join(rng.choice(vocab, 3)) for _ in range(n_junk)]
+    texts = [texts[i] for i in rng.permutation(len(texts))]
+    pq.write_table(
+        pa.table({"doc_id": np.arange(len(texts), dtype=np.int64) * 3 + 5, "text": texts}),
+        path,
+    )
+
+
+@pytest.fixture(scope="module")
+def mixed_docs(spark):
+    """Seeded documents over a small mixed-script vocabulary (upper
+    case, the dotted capital I, the Kelvin sign, sharp s, accented
+    letters, CJK), plus documents of exactly 3 and 2 tokens, empty text
+    and NULL text."""
+    import random
+
+    rng = random.Random(17)
+    vocab = [
+        "alpha", "Beta", "GAMMA", "delta", "Straße", "ß", "café", "naïve",
+        "İstanbul", "\u212aelvin", "東京", "データ", "x1", "42", "Ünïcode",
+        "ÉTÉ", "mañana", "KELVIN",
+    ]
+    rows = [
+        (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(1, 25))))
+        for i in range(2100)
+    ]
+    rows += [
+        (3000, "one two three"),
+        (3001, "ONE Two three"),
+        (3002, "just two"),
+        (3003, "東京 データ"),
+        (3004, ""),
+        (3005, None),
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_lsh_bands_match_signature_buckets(spark, mixed_docs):
+    """The Arrow banding pass gives exactly the bucket keys of the Spark
+    expressions (minhash_signatures + signature_band_buckets) for every
+    document with shingles, and no rows for the others."""
+    from parquet_converters_spark.functions.dedup import (
+        MERSENNE_PRIME,
+        _lsh_bands,
+        minhash_signatures,
+        signature_band_buckets,
+    )
+
+    # one partition: a single Arrow batch, cut into several numpy chunks
+    got = {tuple(r) for r in _lsh_bands(mixed_docs.coalesce(1)).collect()}
+    sig = minhash_signatures(mixed_docs)
+    sentinel = {
+        r["doc_id"]
+        for r in sig.filter(F.col("signature")[0] == MERSENNE_PRIME).collect()
+    }
+    want = {
+        tuple(r)
+        for r in signature_band_buckets(
+            sig.filter(F.col("signature")[0] != MERSENNE_PRIME)
+        ).collect()
+    }
+    assert got == want
+    assert {3002, 3003, 3004, 3005} <= sentinel
+    assert not {r[0] for r in got} & sentinel
+    by_doc = {}
+    for i, band, bucket in got:
+        by_doc.setdefault(i, {})[band] = bucket
+    assert by_doc[3000] == by_doc[3001] and len(by_doc[3000]) == 4
+    assert len(by_doc) > 1500
+
+
+def test_lsh_candidate_multiset_matches_brute_force(spark, tmp_path):
+    """minhash_lsh_pairs(pair_distinct=False) emits one (a, b) row per
+    band in which a < b share a bucket — the rows a per-band brute force
+    over the same signatures gives (the candidate_pairs count)."""
+    from collections import Counter
+    from itertools import combinations
+
+    from parquet_converters_spark.functions.dedup import (
+        MERSENNE_PRIME,
+        minhash_lsh_pairs,
+        minhash_signatures,
+    )
+
+    path = str(tmp_path / "docs.parquet")
+    _write_doc_corpus(path, 600, seed=3)
+    docs = spark.read.parquet(path)
+    got = Counter(
+        tuple(r) for r in minhash_lsh_pairs(docs, pair_distinct=False).collect()
+    )
+    buckets = {}
+    for r in minhash_signatures(docs).collect():
+        sig = r["signature"]
+        if sig[0] == MERSENNE_PRIME:
+            continue
+        for b in range(4):
+            buckets.setdefault((b, tuple(sig[2 * b:2 * b + 2])), []).append(r["doc_id"])
+    want = Counter(
+        pair
+        for ids in buckets.values()
+        for pair in combinations(sorted(ids), 2)
+    )
+    assert got == want
+    assert sum(want.values()) > 100
+    assert set(minhash_lsh_pairs(docs).collect()) == {
+        (a, b) for a, b in want
+    }
+
+
+def test_documents_without_shingles_never_pair(spark):
+    """Documents with fewer than 3 tokens or NULL text have no MinHash
+    bands: they pair with nothing and all survive near dedup (exact
+    dedup alone still collapses identical copies)."""
+    from parquet_converters_spark.functions.dedup import (
+        minhash_lsh_pairs,
+        near_dedup_survivors,
+    )
+
+    rows = [
+        (1, "alpha beta"),
+        (2, "gamma delta"),
+        (3, "zeta"),
+        (4, None),
+        (5, "the quick brown fox jumps over the lazy dog near the river bank"),
+        (6, "spark shuffles partitions across executors for every wide stage"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    assert minhash_lsh_pairs(df).collect() == []
+    survivors = near_dedup_survivors(df)
+    assert sorted(r["doc_id"] for r in survivors.collect()) == [1, 2, 3, 4, 5, 6]
+    from parquet_converters_spark.session import free_local_checkpoints
+
+    assert free_local_checkpoints(survivors) == 1
+
+
+def test_lsh_large_bucket_pairs_match_brute_force(spark):
+    """One bucket of 2000 ids (a boilerplate text under 2000 ids) expands
+    to all of its 1,999,000 pairs, each id paired row by row with the
+    ids after it, equal to a brute force over the signatures."""
+    import numpy as np
+    import pyarrow as pa
+
+    from parquet_converters_spark.functions.dedup import (
+        minhash_lsh_pairs,
+        minhash_signatures,
+    )
+
+    rng = np.random.default_rng(11)
+    vocab = [f"w{i}" for i in range(500)]
+    texts = ["shared boilerplate footer on every page of the site"] * 2000
+    texts += [" ".join(rng.choice(vocab, 20)) for _ in range(60)]
+    ids = rng.choice(10**9, len(texts), replace=False).astype(np.int64)
+    df = spark.createDataFrame(pa.table({"doc_id": ids, "text": texts}))
+
+    # bands=1: one bucket per document, so the boilerplate bucket's
+    # pairs are emitted once
+    got = minhash_lsh_pairs(df, bands=1, pair_distinct=False).toArrow()
+    got = np.stack([got.column("id_a").to_numpy(), got.column("id_b").to_numpy()], 1)
+    buckets = {}
+    for r in minhash_signatures(df).collect():
+        buckets.setdefault(tuple(r["signature"]), []).append(r["doc_id"])
+    want = []
+    for members in buckets.values():
+        members = np.sort(members)
+        i, j = np.triu_indices(len(members), 1)
+        want.append(np.stack([members[i], members[j]], 1))
+    want = np.concatenate(want)
+    assert len(want) == 2000 * 1999 // 2
+    order_got = np.lexsort((got[:, 1], got[:, 0]))
+    order_want = np.lexsort((want[:, 1], want[:, 0]))
+    assert np.array_equal(got[order_got], want[order_want])
+
+
+def test_near_dedup_survivors_driver_path_matches_distributed(
+    spark, tmp_path, monkeypatch
+):
+    """The union-find survivors equal those of the distributed
+    connected-components rounds the path takes above the edge cap, and
+    both paths run the banding pass once: the rounds read the pairs'
+    checkpoint instead of recomputing the LSH exchange."""
+    from parquet_converters_spark.functions import dedup as D
+    from parquet_converters_spark.operators import graph as G
+    from parquet_converters_spark.session import free_local_checkpoints
+
+    path = str(tmp_path / "docs.parquet")
+    _write_doc_corpus(path, 400, seed=9)
+    docs = spark.read.parquet(path).repartition(3)
+    passes = spark.sparkContext.accumulator(0)
+    kernel = D._band_batches
+
+    def counted(batches, **kwargs):
+        passes.add(1)
+        yield from kernel(batches, **kwargs)
+
+    monkeypatch.setattr(D, "_band_batches", counted)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+
+    def survivors():
+        start = passes.value
+        out = D.near_dedup_survivors(docs)
+        ids = sorted(r["doc_id"] for r in out.collect())
+        assert len(set(jsc.getPersistentRDDs().keySet().toArray()) - before) == 1
+        assert free_local_checkpoints(out) == 1
+        return ids, passes.value - start
+
+    want, fast_passes = survivors()
+    monkeypatch.setattr(G, "_CC_DRIVER_MAX_EDGES", 0)
+    got, slow_passes = survivors()
+    assert got == want
+    assert len(want) < docs.count()
+    # one kernel task per partition of the representatives, once
+    assert 0 < slow_passes == fast_passes <= 3
+
+
+def test_input_partitions_runs_no_job(spark, tmp_path):
+    """prepare_corpus reads its input's partition count from the plan:
+    a plain scan gives its count, and a plan whose preparation would
+    run a job (a broadcast, even with adaptive execution off) gives
+    None, with no job either way."""
+    from parquet_converters_spark.pipelines import _input_partitions
+
+    path = str(tmp_path / "docs.parquet")
+    _write_doc_corpus(path, 200, seed=2)
+    docs = spark.read.parquet(path)
+    small = spark.createDataFrame([(5, "x")], "doc_id long, tag string")
+    joined = docs.join(F.broadcast(small), "doc_id")
+    got = {}
+    assert _job_count(spark, lambda: got.update(scan=_input_partitions(docs))) == 0
+    assert got["scan"] == 1
+    conf = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        assert _job_count(spark, lambda: got.update(bc=_input_partitions(joined))) == 0
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", conf)
+    assert got["bc"] is None
+    assert _input_partitions(docs.repartition(3)) is None
+
+
+def test_prepare_corpus_job_budget(spark, tmp_path, monkeypatch):
+    """prepare_corpus gates and hashes each document once: the call and
+    its report run at most 10 Spark jobs, the report equals an explicit
+    recount, only the returned frame stays pinned, and the candidate
+    pairs it built stay computable after the call."""
+    from parquet_converters_spark.functions import dedup as D
+    from parquet_converters_spark.functions.text import quality_score
+    from parquet_converters_spark.operators.graph import connected_components
+    from parquet_converters_spark.pipelines import prepare_corpus
+    from parquet_converters_spark.session import free_local_checkpoints
+
+    path = str(tmp_path / "docs.parquet")
+    _write_doc_corpus(path, 1500, seed=5)
+    docs = spark.read.parquet(path)
+    captured = []
+    pipeline = D.near_dedup_pipeline
+
+    def capture(*args, **kwargs):
+        out = pipeline(*args, **kwargs)
+        captured.append((args, kwargs, out))
+        return out
+
+    monkeypatch.setattr(D, "near_dedup_pipeline", capture)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    result = {}
+
+    def call():
+        clean, report = prepare_corpus(docs)
+        result["clean"] = clean
+        result["report"] = {r["stage"]: r["n_docs"] for r in report.collect()}
+
+    assert _job_count(spark, call) <= 10
+    clean, report = result["clean"], result["report"]
+    assert len(set(jsc.getPersistentRDDs().keySet().toArray()) - before) == 1
+    assert clean.rdd.getNumPartitions() == 1
+
+    gate = (
+        (F.length("text") >= 50)
+        & (F.length("text") <= 10000)
+        & (quality_score("text") >= 0.5)
+    )
+    quality = docs.filter(gate)
+    groups = D.exact_dedup(quality)
+    pairs = pipeline(quality)[1]
+    labels = connected_components(pairs, method="star")
+    losers = {r["node"] for r in labels.collect() if r["node"] != r["component"]}
+    free_local_checkpoints(labels)
+    reps = {r["keep_id"] for r in groups.collect()}
+    assert report == {
+        "raw": docs.count(),
+        "quality": quality.count(),
+        "exact_unique": len(reps),
+        "near_unique": len(reps - losers),
+    }
+    assert report["raw"] > report["quality"] > report["exact_unique"] > report["near_unique"]
+    assert {r["doc_id"] for r in clean.collect()} == reps - losers
+
+    # the pairs frame the call captured is recomputable, and so is a
+    # verified rerun of the pipeline that built it
+    ((args, kwargs, (_, captured_pairs)),) = captured
+    assert captured_pairs.count() == pipeline(quality, pair_distinct=False)[1].count()
+    assert pipeline(*args, **{**kwargs, "jaccard_threshold": 0.5})[1].count() > 0
+
+    assert free_local_checkpoints(clean) == 1
+    assert not set(jsc.getPersistentRDDs().keySet().toArray()) - before
+
+
 def test_ivfpq_arrow_expr_identical_and_adc_replica(spark, sf_dir):
     """IVF-PQ invariants: (a) the Arrow-vectorized encoder and the
     pure-expression encoder produce BITWISE-identical results (same
