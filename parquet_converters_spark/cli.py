@@ -243,8 +243,8 @@ def main(argv: list[str] | None = None) -> int:
 
         out = args.output or os.path.basename(args.files[0]) + ".parquet"
         # multi-file: the touch source takes a comma-joined list/glob
-        df = touch2parquet(spark, ",".join(args.files), out, limit=args.limit)
-        print(f"touch2parquet: wrote {df.count()} records to {out}")
+        n = touch2parquet(spark, ",".join(args.files), out, limit=args.limit)
+        print(f"touch2parquet: wrote {n} records to {out}")
     elif args.cmd == "sonata2parquet":
         from parquet_converters_spark.sources.sonata_h5 import read_sonata_edges
 

@@ -1,9 +1,10 @@
 """End-to-end pipelines — the Spark equivalents of the reference's two
 binaries (SURVEY §3).
 
-``touch2parquet``: fixed-width binary scan -> canonical edge projection ->
-parquet sink.  A single narrow (shuffle-free) stage, exactly like the
-reference's per-rank disjoint record ranges (``touch2parquet.cpp:110-132``).
+``touch2parquet``: the reference's per-rank read -> convert -> write
+loop over disjoint record ranges (``touch2parquet.cpp:110-132``) as one
+Spark job: each task decodes its range, checks and projects it with an
+Arrow kernel and writes its part file, in one Python runner.
 
 ``parquet_to_sonata``: ordered multi-file parquet scan -> column drops +
 metadata passthrough -> SONATA bundle + adjacency index
@@ -12,24 +13,27 @@ metadata passthrough -> SONATA bundle + adjacency index
 
 from __future__ import annotations
 
-from pyspark.errors import SparkRuntimeException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import PythonException
+from pyspark.sql import SparkSession
 
 from parquet_converters_spark.operators.touch_transform import (
     SECTION_ERROR,
-    to_canonical_edges,
-    validate_sections,
+    canonical_batch,
+    canonical_schema,
 )
-from parquet_converters_spark.sinks.parquet_sink import write_canonical_parquet
+from parquet_converters_spark.sinks.parquet_sink import (
+    FOOTER_DDL,
+    kv_arrow_schema,
+    write_kv_parts,
+)
 from parquet_converters_spark.sinks.sonata import (
     collect_kv_metadata,
     write_sonata_bundle,
 )
 from parquet_converters_spark.sources.ordering import read_parquet_ordered
 from parquet_converters_spark.sources.touch_binary import (
-    read_touch_header,
-    read_touches,
-    _expand_paths,
+    decode_ranges,
+    plan_touch_ranges,
 )
 
 
@@ -40,29 +44,42 @@ def touch2parquet(
     limit: int | None = None,
     strict: bool = True,
     touchdetector_version: str | None = None,
-) -> DataFrame:
-    """Convert touch binary file(s) to the canonical parquet edge table.
+) -> int:
+    """Convert touch binary file(s) to the canonical parquet edge table
+    and return the number of rows written.
 
-    One Spark job: scan, ``strict`` section check, projection and write.
+    One Spark job with one task per planned record range: the task
+    decodes its range, applies the section check (raise when
+    ``strict``, else drop the row) and the canonical projection, and
+    writes its part file.
+    ``limit`` converts, and checks, only the first ``limit`` records.
     A failed check raises ``ValueError`` and leaves ``out_path`` as it
-    was.  Returns the written DataFrame (lazily re-readable from
-    ``out_path``).
-    """
-    first = _expand_paths(touch_path)[0]
-    header = read_touch_header(first)
-    df = read_touches(spark, touch_path)
-    df = validate_sections(df, strict=strict)
-    edges = to_canonical_edges(df, header.version, limit=limit)
+    was."""
+    header, parts = plan_touch_ranges(touch_path, limit=limit)
+    version = header.version
     kv = {"touch2parquet_version": "parquet_converters_spark"}
     if touchdetector_version or header.version_string:
         kv["touchdetector_version"] = touchdetector_version or header.version_string
+    schema = kv_arrow_schema(canonical_schema(version), spark.version, kv)
+
+    def frame(write):
+        def convert_touch_binary(ids):
+            return write(
+                canonical_batch(b, version, strict)
+                for b in decode_ranges(ids, parts)
+            )
+
+        return spark.range(len(parts), numPartitions=max(len(parts), 1)).mapInArrow(
+            convert_touch_binary, FOOTER_DDL
+        )
+
     try:
-        write_canonical_parquet(edges, out_path, kv_metadata=kv)
-    except SparkRuntimeException as e:
-        if SECTION_ERROR not in str(e):
+        return write_kv_parts(out_path, schema, frame)
+    except PythonException as e:
+        msg = str(e)
+        if SECTION_ERROR not in msg:
             raise
-        raise ValueError(str(e)) from None
-    return edges
+        raise ValueError(msg[msg.index(SECTION_ERROR):].splitlines()[0]) from None
 
 
 def parquet_to_sonata(

@@ -10,7 +10,9 @@ SNAPPY compression, dictionary encoding disabled, ~20 MB row groups
 One output file per task, the Spark analogue of the reference's
 one-file-per-MPI-rank naming (``touch2parquet.cpp:84``).  With footer KV
 each task writes its file once with ``pq.ParquetWriter`` inside a single
-``mapInArrow`` job, staged and renamed into place; without it,
+``mapInArrow`` job, staged and renamed into place (:func:`write_kv_parts`,
+whose writer loop takes any batch iterator: a frame's partitions, or
+``touch2parquet``'s decoded and converted record ranges); without it,
 ``df.write.parquet`` with writer options (which also carries Bloom
 filters).
 """
@@ -40,9 +42,10 @@ def write_canonical_parquet(
     """Write ``df`` with the reference's parquet physical options.
 
     ``kv_metadata`` (footer KV, which Spark's writer cannot attach) goes
-    through :func:`_write_with_kv`: pyarrow writes no Bloom filters, so
-    ``bloom_filter_columns`` with it is a ``ValueError``, and a ``mode``
-    other than ``"overwrite"`` fails on an existing ``path``.
+    through :func:`write_kv_parts`, one part file per partition: pyarrow
+    writes no Bloom filters, so ``bloom_filter_columns`` with it is a
+    ``ValueError``, and a ``mode`` other than ``"overwrite"`` fails on
+    an existing ``path``.
 
     ``metadata_sidecar`` additionally writes the ``_metadata`` summary
     file (all row-group footers + file paths) that the reference's
@@ -68,7 +71,14 @@ def write_canonical_parquet(
     if partitions:
         df = df.repartition(partitions)
     if kv_metadata:
-        _write_with_kv(df, path, kv_metadata, mode, metadata_sidecar)
+        schema = kv_arrow_schema(
+            df.schema, df.sparkSession.version, kv_metadata,
+            df._jdf.schema().json(),
+        )
+        write_kv_parts(
+            path, schema, lambda write: df.mapInArrow(write, FOOTER_DDL),
+            mode, metadata_sidecar,
+        )
         return
     writer = (
         df.write.mode(mode)
@@ -84,30 +94,52 @@ def write_canonical_parquet(
         _write_metadata_sidecar(path)
 
 
-def _write_with_kv(df: DataFrame, path: str, kv: dict[str, str], mode: str,
-                   metadata_sidecar: bool) -> None:
-    """One ``mapInArrow(...).collect()`` job: task *i* writes
-    ``part-{i:05d}-<job>-c000.snappy.parquet`` once with
-    ``pq.ParquetWriter`` (snappy, no dictionary, 1 MiB pages, 512 Ki-row
-    row groups; Spark's two schema-metadata keys, then ``kv``) into a
-    sibling staging directory and returns its footer, from which the
-    driver builds ``_metadata``.  The driver adds ``_SUCCESS`` and renames
-    the staging directory over ``path``; a failure removes it instead."""
+FOOTER_DDL = "file string, footer binary"
+
+
+def kv_arrow_schema(schema, spark_version: str, kv: dict[str, str],
+                    schema_json: str | None = None):
+    """The Arrow schema a footer-KV file is written with: ``schema`` (a
+    Spark ``StructType``) with Spark's two schema-metadata keys, then
+    ``kv``.  ``schema_json`` is Spark's JSON of ``schema``; without it,
+    it is built here with the JVM's key order (``StructType.json()``
+    sorts the keys, so it differs as a string)."""
+    import json
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if schema_json is None:
+        schema_json = json.dumps(schema.jsonValue(), separators=(",", ":"))
+    return to_arrow_schema(schema).with_metadata({
+        "org.apache.spark.version": spark_version,
+        "org.apache.spark.sql.parquet.row.metadata": schema_json,
+        **{k: str(v) for k, v in kv.items()},
+    })
+
+
+def write_kv_parts(path: str, schema, frame, mode: str = "overwrite",
+                   metadata_sidecar: bool = True) -> int:
+    """Write a footer-KV parquet dataset in one Spark job and return its
+    row count.
+
+    ``frame(write)`` builds the job's frame: each of its tasks passes an
+    iterator of Arrow batches of ``schema`` to ``write``, which writes
+    ``part-{i:05d}-<job>-c000.snappy.parquet`` for partition *i* once
+    with ``pq.ParquetWriter`` (snappy, no dictionary, 1 MiB pages,
+    512 Ki-row row groups) into a sibling staging directory and yields
+    its footer as a :data:`FOOTER_DDL` row.  The driver collects the
+    footers, builds ``_metadata`` from them, adds ``_SUCCESS`` and
+    renames the staging directory over ``path``; a failure removes it
+    instead."""
     import shutil
     import uuid
 
     import pyarrow as pa
     import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
 
     path = os.path.abspath(path)
     if mode != "overwrite" and os.path.exists(path):
         raise FileExistsError(f"{path} exists and mode is {mode!r}")
-    schema = to_arrow_schema(df.schema).with_metadata({
-        "org.apache.spark.version": df.sparkSession.version,
-        "org.apache.spark.sql.parquet.row.metadata": df._jdf.schema().json(),
-        **{k: str(v) for k, v in kv.items()},
-    })
     job = str(uuid.uuid4())
     staging = os.path.join(
         os.path.dirname(path), f".{os.path.basename(path)}.staging-{job}"
@@ -155,7 +187,7 @@ def _write_with_kv(df: DataFrame, path: str, kv: dict[str, str], mode: str,
     try:
         footers = {
             r.file: pq.read_metadata(pa.BufferReader(bytes(r.footer)))
-            for r in df.mapInArrow(write, "file string, footer binary").collect()
+            for r in frame(write).collect()
         }
         if not footers:  # no partition at all: one empty file, as Spark writes
             name = f"part-00000-{job}-c000.snappy.parquet"
@@ -167,6 +199,7 @@ def _write_with_kv(df: DataFrame, path: str, kv: dict[str, str], mode: str,
         publish(staging, path)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
+    return sum(md.num_rows for md in footers.values())
 
 
 def publish(staging: str, path: str) -> None:

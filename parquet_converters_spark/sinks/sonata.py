@@ -49,8 +49,9 @@ in a sibling ``.<population>.staging-<uuid>`` directory and renamed
 into place after ``attributes.json``.
 
 ``export_hdf5_parallel`` converts a bundle to a real SONATA HDF5 file:
-the driver writes the metadata skeleton, then one Spark job with one
-task per bundle file seek+writes each file's sorted key run at the
+the driver writes the metadata skeleton, then one Spark job
+(``spark.range(k).mapInArrow``, like every other pass) with one task
+per bundle file seek+writes each file's sorted key run at the
 dataset's precomputed offset — the analogue of the reference's
 per-rank MPI-IO independent hyperslab writes
 (``src/circuit/sonata_file.cpp:98-143``).  Both go to a sibling
@@ -708,14 +709,40 @@ def export_hdf5(
     w.write(h5_path)
 
 
+def _run_tasks(spark, tasks: list, fn, ddl: str) -> list:
+    """``fn(task)`` for every task, task *i* in Spark task *i* of one
+    ``spark.range(k).mapInArrow`` job: the Python worker pool every
+    Arrow pass of the chain uses, so no RDD job starts a second one.
+    ``fn`` returns one row, a tuple of ``ddl``'s columns; the rows come
+    back in task order."""
+    names = [c.split()[0] for c in ddl.split(",")]
+
+    def run_tasks(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            rows = [fn(tasks[i]) for i in batch.column(0).to_pylist()]
+            if rows:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(c) for c in zip(*rows)], names=names
+                )
+
+    return (
+        spark.range(len(tasks), numPartitions=len(tasks))
+        .mapInArrow(run_tasks, ddl)
+        .collect()
+    )
+
+
 def _edge_column_dtypes(spark, table_path: str, schema, manifest) -> list:
     """(name, numpy dtype) for every edge column, in SONATA dataset
     order.  Strings have a data-dependent fixed width in HDF5: ONE Spark
-    job, one task per table file, takes every string column's max UTF-8
-    byte length (matching the single-writer's astype("S") widths), so
-    the columns can then go through the same distributed fill as the
-    numeric ones.  It encodes exactly as the fill does, so a NULL or
-    non-string value fails here, before the skeleton is written."""
+    job (:func:`_run_tasks`, one task per table file) takes every string
+    column's max UTF-8 byte length (matching the single-writer's
+    astype("S") widths), so the columns can then go through the same
+    distributed fill as the numeric ones.  It encodes exactly as the
+    fill does, so a NULL or non-string value fails here, before the
+    skeleton is written."""
     import numpy as np
 
     from parquet_converters_spark.sources.ordering import _sorted_files
@@ -745,11 +772,12 @@ def _edge_column_dtypes(spark, table_path: str, schema, manifest) -> list:
             ]
 
         files = _sorted_files(table_path)
-        per_file = (
-            spark.sparkContext.parallelize(files, len(files))
-            .map(widths)
-            .collect()
-        )
+        per_file = [
+            r.widths
+            for r in _run_tasks(
+                spark, files, lambda p: (widths(p),), "widths array<long>"
+            )
+        ]
         big += [
             (c, np.dtype(f"S{max([w[i] for w in per_file] + [1])}"))
             for i, c in enumerate(str_cols)
@@ -938,7 +966,9 @@ def export_hdf5_parallel(
     skeleton (superblock, group structures, dataset object headers,
     ``@library`` enumerations — the rank-0 metadata of the reference,
     ``src/circuit/sonata_file.cpp:45-97``), then ONE Spark job with one
-    task per bundle file writes every distributed dataset: each task
+    task per bundle file (:func:`_run_tasks`: ``spark.range(k).mapInArrow``
+    on the Python worker pool the chain's Arrow passes use, no RDD job)
+    writes every distributed dataset: each task
     reads its parquet file with pyarrow and seek+writes its rows at
     ``dataset_offset + key * row_width`` — the analogue of the
     reference's per-rank MPI-IO independent hyperslab writes
@@ -987,7 +1017,8 @@ def export_hdf5_parallel(
     driver (local mode, or a cluster on GPFS/Lustre/NFS) — the same
     deployment requirement as the reference's MPI-IO writer.  String
     property columns (fixed width in HDF5) get their width from one
-    more job over the table files; a NULL or non-string value raises.
+    more :func:`_run_tasks` job over the table files; a NULL or
+    non-string value raises.
 
     The skeleton and the fill go to a sibling temporary file that
     ``os.replace`` moves onto ``h5_path`` once every row is written; a
@@ -1144,14 +1175,13 @@ def export_hdf5_parallel(
                 }
             )
         got = [0] * len(sources)
-        for i, n in (
-            spark.sparkContext.parallelize(tasks, len(tasks))
-            .map(
-                lambda task: _fill_chunks(target, task[1], addrs.value)
-                if task[0]
-                else _fill_file(target, task[1])
-            )
-            .collect()
+        for i, n in _run_tasks(
+            spark,
+            tasks,
+            lambda task: _fill_chunks(target, task[1], addrs.value)
+            if task[0]
+            else _fill_file(target, task[1]),
+            "source long, n long",
         ):
             got[i] += n
         for i, (path, _, _, specs) in enumerate(sources):

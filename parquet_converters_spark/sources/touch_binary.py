@@ -23,7 +23,9 @@ ranks, ``src/touch2parquet.cpp:110-115``), so a 100 TB touch corpus scans
 with full parallelism and no shuffle.  Record decode is vectorized:
 ``np.frombuffer`` with a structured dtype (endian handled by dtype byte
 order, cf. the reference's flat-uint32 byteswap at
-``touch_reader.cpp:261-273``), emitted to Spark as Arrow RecordBatches.
+``touch_reader.cpp:261-273``), emitted as Arrow RecordBatches:
+:func:`read_touches` hands them to Spark, and ``touch2parquet`` converts
+and writes them in the same Python task (:func:`decode_ranges`).
 """
 
 from __future__ import annotations
@@ -247,37 +249,58 @@ def _decode_batch(buf: bytes, header_tuple, start: int, n: int):
     return pa.RecordBatch.from_arrays(list(cols.values()), names=list(cols.keys()))
 
 
+def plan_touch_ranges(
+    path: str,
+    records_per_partition: int | None = None,
+    limit: int | None = None,
+) -> tuple[TouchHeader, list]:
+    """The first file's header and the ``(path, start, n, header_tuple)``
+    record ranges of every file, in global order (the reference's
+    per-rank static split, ``src/touch2parquet.cpp:110-115``).
+    ``limit`` keeps only the first ``limit`` records (touch2parquet
+    ``-n``, ``touch2parquet.cpp:47``)."""
+    paths = _expand_paths(path)
+    step = records_per_partition or DEFAULT_RECORDS_PER_PARTITION
+    left = limit if limit is not None else float("inf")
+    first, parts = None, []
+    for p in paths:
+        h = read_touch_header(p)
+        first = first or h
+        ht = (h.version, h.endian_swap, h.record_size, h.shift_ids, h.shift_values)
+        for s in range(0, h.record_count, step):
+            n = int(min(step, h.record_count - s, left))
+            if n <= 0:
+                return first, parts
+            parts.append((p, s, n, ht))
+            left -= n
+    return first, parts
+
+
+def decode_ranges(id_batches, parts):
+    """Decoded Arrow batches of the ranges ``parts[i]`` for every index
+    *i* in ``id_batches`` (a ``spark.range`` partition's batches)."""
+    for batch in id_batches:
+        for i in batch.column(0).to_pylist():
+            part_path, start, n, ht = parts[i]
+            with open(part_path, "rb") as f:
+                f.seek(start * ht[2])
+                for done in range(0, n, BATCH_ROWS):
+                    k = min(BATCH_ROWS, n - done)
+                    yield _decode_batch(f.read(k * ht[2]), ht, start + done, k)
+
+
 def read_touches(spark, path: str, records_per_partition: int | None = None):
     """Read touch binary file(s) into a DataFrame (raw pre-rename schema +
     file_pos + synapse_id).
 
-    The ``(path, start, n, header_tuple)`` range list is planned on the
-    driver (the reference's per-rank static split,
-    ``src/touch2parquet.cpp:110-115``); partition *i* of a ``spark.range``
-    decodes range *i*, so partition order is global row order and the
-    sorted part-file names of a write keep it."""
-    paths = _expand_paths(path)
-    step = records_per_partition or DEFAULT_RECORDS_PER_PARTITION
-    parts = []
-    for p in paths:
-        h = read_touch_header(p)
-        ht = (h.version, h.endian_swap, h.record_size, h.shift_ids, h.shift_values)
-        parts += [
-            (p, s, min(step, h.record_count - s), ht)
-            for s in range(0, h.record_count, step)
-        ]
+    Partition *i* of a ``spark.range`` decodes range *i* of
+    :func:`plan_touch_ranges`, so partition order is global row order
+    and the sorted part-file names of a write keep it."""
+    header, parts = plan_touch_ranges(path, records_per_partition)
 
     def decode_touch_binary(batches):
-        for batch in batches:
-            for i in batch.column(0).to_pylist():
-                part_path, start, n, ht = parts[i]
-                with open(part_path, "rb") as f:
-                    f.seek(start * ht[2])
-                    for done in range(0, n, BATCH_ROWS):
-                        k = min(BATCH_ROWS, n - done)
-                        yield _decode_batch(f.read(k * ht[2]), ht, start + done, k)
+        return decode_ranges(batches, parts)
 
-    version = read_touch_header(paths[0]).version
     return spark.range(len(parts), numPartitions=max(len(parts), 1)).mapInArrow(
-        decode_touch_binary, touch_schema(version)
+        decode_touch_binary, touch_schema(header.version)
     )

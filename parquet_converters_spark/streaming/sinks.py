@@ -176,7 +176,10 @@ def lsh_dedup_gate_sink(
 
     Like every banded-LSH gate this can reject true negatives that
     merely share a band (tune bands/num_hashes); it never admits an
-    exact duplicate.
+    exact duplicate of a document with shingles.  A document without
+    shingles (NULL text, fewer than ``shingle_size`` tokens) gets no
+    buckets, as in the batch funnel: it is always admitted, after the
+    exact dedup within its own batch.
 
     Usage::
 
@@ -185,6 +188,7 @@ def lsh_dedup_gate_sink(
         ).option("checkpointLocation", ckpt).start()
     """
     from parquet_converters_spark.functions.dedup import (
+        MERSENNE_PRIME,
         minhash_signatures,
         signature_band_buckets,
     )
@@ -197,14 +201,16 @@ def lsh_dedup_gate_sink(
             hashed.groupBy("_ch").agg(F.min(id_col).alias("_keep"))
         )
         batch = (
-            hashed.join(w_min, "_ch")
+            hashed.join(w_min, hashed["_ch"].eqNullSafe(w_min["_ch"]))
             .filter(F.col(id_col) == F.col("_keep"))
             .drop("_ch", "_keep")
         )
-        # 2. LSH probe vs persisted state (excluding own batch: replay)
+        # 2. LSH probe vs persisted state (excluding own batch: replay).
+        # A document without shingles has the all-sentinel signature,
+        # which every such document shares: it gets no buckets.
         sig = minhash_signatures(
             batch, text_col, id_col, num_hashes, shingle_size
-        )
+        ).filter(F.col("signature")[0] != MERSENNE_PRIME)
         buckets = signature_band_buckets(
             sig, id_col, num_hashes, bands
         ).persist()
@@ -218,11 +224,7 @@ def lsh_dedup_gate_sink(
             .select(id_col)
             .distinct()
         )
-        intra_ids = (
-            buckets.select(id_col)
-            .distinct()
-            .join(intra_rejected, id_col, "left_anti")
-        )
+        intra_ids = batch.select(id_col).join(intra_rejected, id_col, "left_anti")
         # 2b. probe persisted state.  Only a genuinely-absent state_dir
         # (first batch) may fail open; everything else must fail the
         # batch — a swallowed corrupt-state error would silently admit

@@ -1726,3 +1726,52 @@ def test_non_string_value_rejected_matches_miniwriter(tmp_path):
         _encode_str_values([3.5], "kind")
     with pytest.raises(ValueError, match="NULL"):
         _encode_str_values([None], "kind")
+
+
+def test_export_runs_no_rdd_job(spark, tmp_path, monkeypatch):
+    """The .h5 fill and the string-width job run as Arrow jobs
+    (``spark.range(k).mapInArrow``), so the whole parquet -> .h5 chain
+    runs on one Python worker pool: with ``SparkContext.parallelize``
+    raising, both export modes still write the single writer's bytes."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark import SparkContext
+
+    from parquet_converters_spark.pipelines import parquet_to_sonata
+    from parquet_converters_spark.sinks.sonata import (
+        export_hdf5,
+        export_hdf5_parallel,
+    )
+
+    n = 900
+    rng = np.random.default_rng(21)
+    edges = tmp_path / "edges"
+    edges.mkdir()
+    table = pa.table({
+        "source_node_id": np.sort(rng.integers(0, 30, n)).astype("int32"),
+        "target_node_id": rng.integers(0, 30, n).astype("int32"),
+        "weight": rng.random(n).astype("float32"),
+        "kind": [["exc", "inh", "σ-mod"][i % 3] for i in range(n)],
+    })
+    for i in range(3):
+        pq.write_table(table.slice(300 * i, 300), edges / f"part-{i:05d}.parquet")
+
+    def no_rdd(*args, **kwargs):
+        raise AssertionError("SparkContext.parallelize called")
+
+    bundle = str(tmp_path / "bundle")
+    h5, gz = str(tmp_path / "p.h5"), str(tmp_path / "gz.h5")
+    monkeypatch.setattr(SparkContext, "parallelize", no_rdd)
+    parquet_to_sonata(spark, str(edges), bundle, population="p", h5_path=h5)
+    assert export_hdf5_parallel(
+        spark, bundle, "p", gz, compression="gzip", chunk_rows=256
+    ) == n
+    monkeypatch.undo()
+
+    for mode, path in ((None, h5), ("gzip", gz)):
+        ref = str(tmp_path / f"ref-{mode}.h5")
+        export_hdf5(bundle, "p", ref, compression=mode, chunk_rows=256)
+        with open(ref, "rb") as a, open(path, "rb") as b:
+            assert a.read() == b.read(), mode
+    got = MiniH5Reader(h5).read_dataset("/edges/p/0/kind")
+    assert got.dtype == np.dtype("S6")  # "σ-mod" is 6 UTF-8 bytes

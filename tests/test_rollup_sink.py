@@ -172,6 +172,26 @@ def test_lsh_dedup_gate_replay_is_idempotent(spark, tmp_path):
     assert after == [0, 1]
 
 
+def test_lsh_dedup_gate_admits_documents_without_shingles(spark, tmp_path):
+    """Documents without shingles (fewer than 3 tokens, NULL text) share
+    the all-sentinel signature; they get no buckets, so they neither
+    reject each other nor go missing, while exact duplicates (a short
+    one and an ordinary one) still collapse to the lowest id."""
+    from parquet_converters_spark.streaming.sinks import lsh_dedup_gate_sink
+
+    out, state = str(tmp_path / "corpus"), str(tmp_path / "state")
+    gate = lsh_dedup_gate_sink(out, state)
+    t_a = "the quick brown fox jumps over the lazy dog and runs far away"
+    t_b = "completely different content about spark shuffles and joins here"
+    docs = [
+        (1, "alpha beta"), (2, "gamma delta"), (3, "zeta"), (4, None),
+        (5, t_a), (6, t_b), (7, "zeta"), (8, t_a),
+    ]
+    gate(_docs(spark, docs), 0)
+    got = sorted(r["doc_id"] for r in spark.read.parquet(out).collect())
+    assert got == [1, 2, 3, 4, 5, 6], got
+
+
 def test_lsh_dedup_gate_real_stream(spark, tmp_path):
     """Drive the gate through an actual availableNow file stream —
     duplicates arriving in later files never reach the corpus."""

@@ -235,6 +235,23 @@ def test_cli_end_to_end(spark, tmp_path):
     assert len(MiniH5Reader(h5).read_dataset("/edges/pop/source_node_id")) == 1104
 
 
+def test_cli_touch2parquet_runs_one_job(spark, tmp_path, capsys):
+    """The CLI prints the row count summed from the write job's footers:
+    the whole verb is that one job, with no counting job after it."""
+    from parquet_converters_spark.cli import main
+    from tests.test_sonata import _job_count
+    from tests.touch_fixtures import write_seeded_corpus
+
+    (path,) = write_seeded_corpus(str(tmp_path), 67, 3, 1, 300)
+    out = str(tmp_path / "edges")
+    rc = []
+    assert _job_count(
+        spark, lambda: rc.append(main(["touch2parquet", path, "-o", out]))
+    ) == 1
+    assert rc == [0]
+    assert f"wrote 300 records to {out}" in capsys.readouterr().out
+
+
 def test_cli_dedup(spark, tmp_path, sf_dir):
     """The dedup subcommand runs the near-dedup funnel end-to-end and
     writes exactly the survivor set."""

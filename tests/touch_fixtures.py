@@ -83,8 +83,10 @@ def write_seeded_corpus(tmpdir, seed: int, version: int, files: int, records: in
     return paths
 
 
-def plant_pre_section(data_path: str, version: int, record: int, value: int) -> None:
-    """Overwrite one record's ``pre_section`` (little-endian file)."""
+def plant_pre_section(data_path: str, version: int, record: int, value: int,
+                      offset: int = PRE_SECTION_OFFSET) -> None:
+    """Overwrite one record's ``pre_section``, or the int32 field at byte
+    ``offset`` of the record (little-endian file)."""
     with open(data_path, "r+b") as f:
-        f.seek(record * RECORD_SIZE[version] + PRE_SECTION_OFFSET)
+        f.seek(record * RECORD_SIZE[version] + offset)
         f.write(struct.pack("<i", value))
