@@ -24,9 +24,16 @@ scan's slices):
    each key can continue into a neighbouring partition; those runs,
    tagged with the partition's run count, are collected and chain-merged
    on the driver (:func:`_runs_to_ranges`, the boundary fix-up).
-2. **Numbering** — :func:`build_sonata_indices`: one range exchange of
-   the runs on ``(direction, node_id, range_start)``; one collect of
-   per-partition summaries gives the driver prefix sum (the Allgather).
+2. **Numbering** — :func:`build_sonata_indices`: the runs sorted on
+   ``(direction, node_id, range_start)``.  When they fit one partition
+   (``num_partitions`` gives 1, as at the default size), that partition
+   numbers every direction from 0 and owns all its node ids, so the plan
+   is known from the per-direction range counts the boundary fix-up
+   already has: no summaries, nothing persisted, and the runs are
+   merged into one partition and sorted inside the job that writes the
+   tables.  Otherwise one range exchange of the runs, persisted, and one
+   collect of per-partition summaries gives the driver prefix sum (the
+   Allgather).
 3. **Tables in build order** — :func:`_index_batches`, one Arrow kernel
    per numbered partition: ``range_to_edge_id`` numbers the partition's
    ranges from its offset, and ``node_id_to_ranges`` emits the dense node
@@ -44,14 +51,36 @@ from __future__ import annotations
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import (
+    DataType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 from pyspark.sql.window import Window
 
-# _edge: bit 1 = the partition's first run of that key, bit 2 = its last
-# (the bundle writer's table pass adds 4 for its partition summaries);
-# _n: the partition's run count of that key, on its first run only
-_LOCAL_RUNS = ("_dir int, node_id {node_t}, range_start long, "
-               "range_end long, _edge int, _n long")
-_SUMMARY = "_pid int, _dir int, n long, first long, last long, lead long"
+
+def _local_runs_schema(node_type: DataType) -> StructType:
+    """The schema of local runs, with ``node_id`` of ``node_type``.
+    ``_edge``: bit 1 = the partition's first run of that key, bit 2 = its
+    last (the bundle writer's table pass adds 4 for its partition
+    summaries); ``_n``: the partition's run count of that key, on its
+    first run only."""
+    return StructType([
+        StructField("_dir", IntegerType()),
+        StructField("node_id", node_type),
+        StructField("range_start", LongType()),
+        StructField("range_end", LongType()),
+        StructField("_edge", IntegerType()),
+        StructField("_n", LongType()),
+    ])
+
+
+_SUMMARY = StructType(
+    [StructField(c, IntegerType()) for c in ("_pid", "_dir")]
+    + [StructField(c, LongType()) for c in ("n", "first", "last", "lead")]
+)
 _EMIT_CHUNK = 1 << 20
 
 
@@ -106,8 +135,9 @@ def run_length_ranges(df: DataFrame, key: str, row_col: str) -> DataFrame:
 def _rle_batches(t, n_keys: int):
     """G1 for one partition: ``t``'s first column is the row position
     (sorted), the next ``n_keys`` the index keys.  Yields the maximal
-    runs of each key as ``_LOCAL_RUNS`` batches: ``_dir`` indexes the
-    keys, a run breaks where the key changes or the position jumps."""
+    runs of each key as batches of :func:`_local_runs_schema`: ``_dir``
+    indexes the keys, a run breaks where the key changes or the position
+    jumps."""
     import numpy as np
     import pyarrow as pa
 
@@ -152,23 +182,25 @@ def _runs_to_ranges(runs: DataFrame, edge_rows):
     of every partition (``edge_rows``, rows of ``runs`` with ``_edge`` in
     1..3) on the driver and union them with ``runs``' interior runs.
     Returns ``(ranges, n_ranges)``: the maximal runs ``(_dir, node_id,
-    range_start, range_end)`` and their count."""
+    range_start, range_end)`` and their count per direction,
+    ``{_dir: n}`` (directions without runs absent)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    n_ranges = 0
+    n_ranges: dict[int, int] = {}
     merged: list[tuple] = []
     for r in sorted(edge_rows, key=lambda r: (r["_dir"], r["range_start"])):
-        n_ranges += r["_n"]
+        d = r["_dir"]
+        n_ranges[d] = n_ranges.get(d, 0) + r["_n"]
         prev = merged[-1] if merged else None
         if (
             prev is not None
-            and prev[0] == r["_dir"]
+            and prev[0] == d
             and prev[1] == r["node_id"]
             and prev[3] == r["range_start"]
         ):
             merged[-1] = prev[:3] + (r["range_end"],)
-            n_ranges -= 1
+            n_ranges[d] -= 1
         else:
             merged.append(
                 (r["_dir"], r["node_id"], r["range_start"], r["range_end"])
@@ -196,7 +228,7 @@ def _local_runs(ordered: DataFrame, keys: list[str], row_col: str):
     the collect of the boundary runs."""
     import pyarrow as pa
 
-    node_t = dict(ordered.dtypes)[keys[0]]
+    node_t = ordered.schema[keys[0]].dataType
 
     def rle(batches):
         batches = [b for b in batches if b.num_rows]
@@ -205,7 +237,7 @@ def _local_runs(ordered: DataFrame, keys: list[str], row_col: str):
             yield from _rle_batches(t, len(keys))
 
     runs = ordered.select(row_col, *keys).mapInArrow(
-        rle, schema=_LOCAL_RUNS.format(node_t=node_t)
+        rle, schema=_local_runs_schema(node_t)
     )
     return _runs_to_ranges(runs, runs.filter(F.col("_edge") > 0).collect())
 
@@ -384,7 +416,10 @@ def _index_frame(numbered: DataFrame, plans, d: int, name: str) -> DataFrame:
                     yield batch
 
     return numbered.mapInArrow(
-        emit, ", ".join(f"{c} long not null" for c in INDEX_COLUMNS[name])
+        emit,
+        StructType(
+            [StructField(c, LongType(), False) for c in INDEX_COLUMNS[name]]
+        ),
     )
 
 
@@ -421,7 +456,9 @@ def infer_node_count(df: DataFrame, key: str) -> int:
             [{"m": top}], schema=pa.schema([("m", pa.int64())])
         )
 
-    rows = df.select(key).mapInArrow(partial, "m long").collect()
+    rows = df.select(key).mapInArrow(
+        partial, StructType([StructField("m", LongType())])
+    ).collect()
     return max((r["m"] + 1 for r in rows if r["m"] is not None), default=0)
 
 
@@ -506,18 +543,32 @@ SONATA_KEYS = {
 }
 
 
-def _number_ranges(ranges: DataFrame, n_ranges: int, node_counts,
-                   num_partitions):
-    """G2-G3 numbering of ``ranges`` (``_dir`` indexing ``node_counts``):
-    one range exchange on ``(_dir, node_id, range_start)`` into
-    ``num_partitions(n_ranges)`` partitions, persisted
-    (its bounds come from sampling, and the summaries and the tables
-    must see the same exchange), and the driver prefix sum over its
-    partition summaries.  Returns ``(numbered, plans)``; the caller
+def _number_ranges(ranges: DataFrame, n_ranges: dict[int, int],
+                   node_counts, num_partitions):
+    """G2-G3 numbering of ``ranges`` (``_dir`` indexing ``node_counts``,
+    ``n_ranges`` their count per direction) into
+    ``num_partitions(total)`` partitions sorted on ``(_dir, node_id,
+    range_start)``.  One partition numbers each direction from 0 and
+    emits all its node ids, so its plan needs no summary and nothing
+    runs here: the ranges are merged into one partition and sorted by
+    the job that reads them.  More partitions take one range exchange,
+    persisted (its bounds come from sampling, and the summaries and the
+    tables must see the same exchange), and the driver prefix sum over
+    its partition summaries.  Returns ``(numbered, plans)``; the caller
     unpersists ``numbered``."""
     sort = ["_dir", "node_id", "range_start"]
+    k = num_partitions(sum(n_ranges.values()))
+    if k == 1:
+        numbered = (
+            ranges.coalesce(1)
+            .sortWithinPartitions(*sort)
+            .withColumn("_pid", F.lit(0))
+        )
+        return numbered, {
+            (d, 0): (0, 0, node_counts[d], n) for d, n in n_ranges.items()
+        }
     numbered = (
-        ranges.repartitionByRange(num_partitions(n_ranges), *sort)
+        ranges.repartitionByRange(k, *sort)
         .sortWithinPartitions(*sort)
         .withColumn("_pid", F.spark_partition_id())
         .persist()
@@ -535,20 +586,20 @@ def _number_ranges(ranges: DataFrame, n_ranges: int, node_counts,
 @contextmanager
 def build_sonata_indices(
     ranges: DataFrame,
-    n_ranges: int,
+    n_ranges: dict[int, int],
     node_counts: dict[str, int],
     num_partitions,
 ):
     """G6: the numbering of both index directions, as written under
     ``indices/{source_to_target,target_to_source}``
     (``index.cpp:24-31,309-324``).  ``ranges`` are the maximal runs of
-    both SONATA keys (``_dir`` 0 and 1, in ``SONATA_KEYS`` order) as
-    :func:`_runs_to_ranges` returns them; ``num_partitions(n_ranges)``
-    sizes the numbering exchange.
+    both SONATA keys (``_dir`` 0 and 1, in ``SONATA_KEYS`` order) and
+    ``n_ranges`` their counts per direction, as :func:`_runs_to_ranges`
+    returns them; ``num_partitions(total ranges)`` sizes the numbering.
 
-    Yields ``(numbered, plans)``: the persisted exchange and its
+    Yields ``(numbered, plans)``: the numbered ranges and their
     partition plans, from which :func:`_index_batches` builds every
-    partition's tables; the exchange is released on exit."""
+    partition's tables; a persisted exchange is released on exit."""
     numbered, plans = _number_ranges(
         ranges, n_ranges, [node_counts[d] for d in SONATA_KEYS],
         num_partitions,

@@ -8,7 +8,8 @@ Arrow kernel and writes its part file, in one Python runner.
 
 ``parquet_to_sonata``: ordered multi-file parquet scan -> column drops +
 metadata passthrough -> SONATA bundle + adjacency index
-(``parquet2hdf5.cpp:171-251``).
+(``parquet2hdf5.cpp:171-251``); each table-pass task reads its own slice
+of row groups and writes it, as each rank of the reference does.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ from parquet_converters_spark.operators.touch_transform import (
     canonical_schema,
 )
 from parquet_converters_spark.sinks.parquet_sink import (
-    FOOTER_DDL,
+    FOOTER_SCHEMA,
     kv_arrow_schema,
     write_kv_parts,
 )
@@ -30,7 +31,7 @@ from parquet_converters_spark.sinks.sonata import (
     collect_kv_metadata,
     write_sonata_bundle,
 )
-from parquet_converters_spark.sources.ordering import read_parquet_ordered
+from parquet_converters_spark.sources.ordering import plan_parquet_ordered
 from parquet_converters_spark.sources.touch_binary import (
     decode_ranges,
     plan_touch_ranges,
@@ -70,7 +71,7 @@ def touch2parquet(
             )
 
         return spark.range(len(parts), numPartitions=max(len(parts), 1)).mapInArrow(
-            convert_touch_binary, FOOTER_DDL
+            convert_touch_binary, FOOTER_SCHEMA
         )
 
     try:
@@ -98,11 +99,20 @@ def parquet_to_sonata(
     one-call parquet -> ``.h5`` shape of the reference's ``parquet2hdf5``
     binary (``src/parquet2hdf5.cpp``), written by
     :func:`~parquet_converters_spark.sinks.sonata.export_hdf5_parallel`
-    (per-file offset writes, the MPI-IO analogue)."""
-    df = read_parquet_ordered(spark, parquet_path)
+    (per-file offset writes, the MPI-IO analogue).
+
+    The bundle writer gets the ordered scan's footer plan
+    (:func:`~parquet_converters_spark.sources.ordering.plan_parquet_ordered`),
+    not a frame: each task of its table pass reads its slice of row
+    groups, projects it, writes it and run-length encodes both index
+    keys.  With the index and the ``.h5``, the call runs 3 Spark jobs
+    when the index ranges fit one numbering partition, as at the default
+    size (table pass, index tables, ``.h5`` fill), and 4 more for the
+    sampled numbering exchange and its summaries otherwise."""
+    scan = plan_parquet_ordered(spark, parquet_path)
     kv = collect_kv_metadata(parquet_path)
     write_sonata_bundle(
-        df,
+        scan,
         out_dir,
         population=population,
         kv_metadata=kv,

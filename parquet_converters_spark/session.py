@@ -46,6 +46,10 @@ def get_spark(
         # convert explicitly (queries._events)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # no call-site capture per DataFrame call: it imports IPython on
+        # the first one and retries a failing ``import ipykernel`` on
+        # every later one
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if SparkSession.getActiveSession() is None:
         builder = builder.master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))

@@ -23,6 +23,7 @@ import glob
 import os
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
 ROW_GROUP_BYTES = 20 * 1024 * 1024
 ROW_GROUP_ROWS = 512 * 1024
@@ -76,7 +77,7 @@ def write_canonical_parquet(
             df._jdf.schema().json(),
         )
         write_kv_parts(
-            path, schema, lambda write: df.mapInArrow(write, FOOTER_DDL),
+            path, schema, lambda write: df.mapInArrow(write, FOOTER_SCHEMA),
             mode, metadata_sidecar,
         )
         return
@@ -94,7 +95,9 @@ def write_canonical_parquet(
         _write_metadata_sidecar(path)
 
 
-FOOTER_DDL = "file string, footer binary"
+FOOTER_SCHEMA = StructType(
+    [StructField("file", StringType()), StructField("footer", BinaryType())]
+)
 
 
 def kv_arrow_schema(schema, spark_version: str, kv: dict[str, str],
@@ -127,7 +130,7 @@ def write_kv_parts(path: str, schema, frame, mode: str = "overwrite",
     ``part-{i:05d}-<job>-c000.snappy.parquet`` for partition *i* once
     with ``pq.ParquetWriter`` (snappy, no dictionary, 1 MiB pages,
     512 Ki-row row groups) into a sibling staging directory and yields
-    its footer as a :data:`FOOTER_DDL` row.  The driver collects the
+    its footer as a :data:`FOOTER_SCHEMA` row.  The driver collects the
     footers, builds ``_metadata`` from them, adds ``_SUCCESS`` and
     renames the staging directory over ``path``; a failure removes it
     instead."""

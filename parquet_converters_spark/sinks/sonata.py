@@ -38,21 +38,23 @@ Semantics mirrored from the reference:
 it — each partition sorted on ``row_index``, no two partitions' ranges
 overlapping (frames that are not go through
 :func:`~parquet_converters_spark.sources.ordering.order_rows`) — and runs
-no exchange of the edge table.  Like the reference's ranks
-(``index.cpp:114-137``), each task of one table pass writes its
+no exchange of the edge table; given the ordered scan's plan instead of
+a frame, each table-pass task reads its own slice.  Like the reference's
+ranks (``index.cpp:114-137``), each task of one table pass writes its
 partition's table file with ``pq.ParquetWriter`` and run-length encodes
 both index keys; the pass's collect of boundary runs and partition
-summaries is its only job.  After the numbering exchange, one job
-writes all four index tables.  Files are snappy, dictionary-encoded
+summaries is its only job.  After the numbering (an exchange only when
+the ranges need several partitions), one job writes all four index
+tables.  Files are snappy, dictionary-encoded
 only where parquet-mr would keep the dictionary.  Everything is staged
 in a sibling ``.<population>.staging-<uuid>`` directory and renamed
 into place after ``attributes.json``.
 
 ``export_hdf5_parallel`` converts a bundle to a real SONATA HDF5 file:
 the driver writes the metadata skeleton, then one Spark job
-(``spark.range(k).mapInArrow``, like every other pass) with one task
-per bundle file seek+writes each file's sorted key run at the
-dataset's precomputed offset — the analogue of the reference's
+(``spark.range(k).mapInArrow``, like every other pass, in one wave of
+at most ``defaultParallelism`` tasks) seek+writes each bundle file's
+sorted key run at the dataset's precomputed offset — the analogue of the reference's
 per-rank MPI-IO independent hyperslab writes
 (``src/circuit/sonata_file.cpp:98-143``).  Both go to a sibling
 temporary file that replaces the target only when complete.
@@ -71,22 +73,31 @@ import json
 import os
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from parquet_converters_spark import __version__
 from parquet_converters_spark.operators.indexing import (
     INDEX_COLUMNS,
     SONATA_KEYS,
-    _LOCAL_RUNS,
     _index_batches,
+    _local_runs_schema,
     _rle_batches,
     _runs_to_ranges,
     build_sonata_indices,
     empty_node_batches,
     index_schema,
 )
-from parquet_converters_spark.sinks.parquet_sink import publish
+from parquet_converters_spark.sinks.parquet_sink import kv_arrow_schema, publish
 from parquet_converters_spark.sources.ordering import (
     _TARGET_ROWS_PER_FILE,
+    OrderedScan,
     _range_partitions,
 )
 
@@ -187,31 +198,55 @@ class _PartWriter:
         return os.path.basename(self.path)
 
 
-def _arrow_schema(df: DataFrame):
-    """``df``'s Arrow schema with the two footer keys Spark's writer
-    stores, so a Spark read gets the exact schema back."""
-    from pyspark.sql.pandas.types import to_arrow_schema
+def _table_schema(schema: StructType) -> StructType:
+    """The bundle table's Spark schema from its input's: the
+    ``COLUMNS_TO_SKIP`` dropped, and ``edge_type_id`` appended as a
+    non-null int (as Spark types a literal 0) when the input has none."""
+    fields = [f for f in schema if f.name not in COLUMNS_TO_SKIP]
+    if "edge_type_id" not in schema.names:
+        fields.append(StructField("edge_type_id", IntegerType(), False))
+    return StructType(fields)
 
-    return to_arrow_schema(df.schema).with_metadata({
-        "org.apache.spark.version": df.sparkSession.version,
-        "org.apache.spark.sql.parquet.row.metadata": df._jdf.schema().json(),
-    })
+
+def _arrow_schema(spark, schema: StructType):
+    """``schema``'s Arrow schema with the two footer keys Spark's writer
+    stores, so a Spark read gets the exact schema back; the row metadata
+    is the JVM's JSON of ``schema``, as a frame of that schema gives it."""
+    return kv_arrow_schema(
+        schema, spark.version, {},
+        spark._jsparkSession.parseDataType(schema.json()).json(),
+    )
 
 
-def _table_pass(table: DataFrame, path: str, keys: list[str], row_col: str,
+def _table_pass(source, schema, path: str, keys: list[str], row_col: str,
                 job: str) -> DataFrame:
-    """The bundle's one pass over its input: each task writes its
-    partition to ``path`` as one part file, run-length encodes ``keys``
-    with :func:`_rle_batches` and yields the runs plus, per key (or once
-    without keys), a summary row (``_edge`` 4): ``range_start`` and
-    ``range_end`` the partition's first and last+1 ``row_col``, ``_n``
-    its row count and ``node_id`` the key's max.  A partition that is
-    not strictly increasing on ``row_col`` raises."""
+    """The bundle's one pass over its input ``source`` (a frame, or an
+    :class:`~parquet_converters_spark.sources.ordering.OrderedScan` whose
+    slices each task reads itself): each task projects its batches onto
+    the table's Arrow ``schema`` (skipped columns dropped,
+    ``edge_type_id`` 0 when absent), writes them to ``path`` as one part
+    file of exact ``_ROW_GROUP_ROWS`` row groups (the rest in the last),
+    run-length encodes ``keys`` with :func:`_rle_batches` and yields the
+    runs plus, per key (or once without keys), a summary row (``_edge``
+    4): ``range_start`` and ``range_end`` the partition's first and
+    last+1 ``row_col``, ``_n`` its row count and ``node_id`` the key's
+    max.  A partition that is not strictly increasing on ``row_col``
+    raises."""
     import numpy as np
     import pyarrow as pa
 
-    schema = _arrow_schema(table)
     key_cols = [row_col, *keys]
+
+    def project(batch):
+        have = set(batch.schema.names)
+        return pa.RecordBatch.from_arrays(
+            [
+                batch.column(f.name) if f.name in have
+                else pa.array(np.zeros(batch.num_rows, "int32"))
+                for f in schema
+            ],
+            schema=schema,
+        )
 
     def write(batches):
         import pyarrow.compute as pc
@@ -220,21 +255,30 @@ def _table_pass(table: DataFrame, path: str, keys: list[str], row_col: str,
         pid = TaskContext.get().partitionId()
         part = _PartWriter(path, _part_name(job, pid), schema)
         pending, rows, kept = [], 0, []
+
+        def flush(n):
+            # one row group of the first n rows, whatever the batch
+            # sizes: a contiguous table pages the same for any batching
+            nonlocal pending, rows
+            table = pa.Table.from_batches(pending, schema).combine_chunks()
+            part.write(table.slice(0, n))
+            pending, rows = table.slice(n).to_batches(), rows - n
+
         for batch in batches:
             if not batch.num_rows:
                 continue
+            batch = project(batch)
             pending.append(batch)
             rows += batch.num_rows
             kept.append(pa.RecordBatch.from_arrays(
                 [batch.column(c).cast(pa.int64()) for c in key_cols],
                 names=key_cols,
             ))
-            if rows >= _ROW_GROUP_ROWS:
-                part.write(pa.Table.from_batches(pending, schema))
-                pending, rows = [], 0
-        if pending or (part.writer is None and pid == 0):
+            while rows >= _ROW_GROUP_ROWS:
+                flush(_ROW_GROUP_ROWS)
+        if rows or (part.writer is None and pid == 0):
             # Spark's rule: partition 0 always writes a file, for the schema
-            part.write(pa.Table.from_batches(pending, schema))
+            flush(rows)
         if part.writer is None:
             return
         part.close()
@@ -264,7 +308,7 @@ def _table_pass(table: DataFrame, path: str, keys: list[str], row_col: str,
             ]),
         )
 
-    return table.mapInArrow(write, _LOCAL_RUNS.format(node_t="long"))
+    return source.mapInArrow(write, _local_runs_schema(LongType()))
 
 
 def _run_table_pass(runs: DataFrame, n_keys: int, row_col: str):
@@ -356,7 +400,9 @@ def _write_index_tables(numbered, plans, pop_dir: str, job: str,
             {"file": [p.close() for p in parts.values()]}
         )
 
-    numbered.mapInArrow(write, "file string").collect()
+    numbered.mapInArrow(
+        write, StructType([StructField("file", StringType())])
+    ).collect()
     for d in sorted(set(range(len(dirs))) - {d for d, _ in plans}):
         for table, batches in (
             ("node_id_to_ranges", empty_node_batches(node_counts[d])),
@@ -392,9 +438,9 @@ def collect_kv_metadata(path: str) -> dict[str, str]:
     return out
 
 
-def _enumerations_from_metadata(kv: dict[str, str], df: DataFrame) -> dict[str, list[str]]:
+def _enumerations_from_metadata(kv: dict[str, str], schema: StructType) -> dict[str, list[str]]:
     """``enumeration_values`` from Spark row metadata (KV JSON) and from
-    live Spark field metadata."""
+    the field metadata of the input's Spark ``schema``."""
     enums: dict[str, list[str]] = {}
     spark_md = kv.get("org.apache.spark.sql.parquet.row.metadata")
     if spark_md:
@@ -405,7 +451,7 @@ def _enumerations_from_metadata(kv: dict[str, str], df: DataFrame) -> dict[str, 
                     enums[field["name"]] = list(md["enumeration_values"])
         except (ValueError, KeyError, TypeError):
             pass
-    for field in df.schema.fields:
+    for field in schema.fields:
         md = field.metadata or {}
         if "enumeration_values" in md:
             enums[field.name] = list(md["enumeration_values"])
@@ -420,7 +466,7 @@ class SonataBundleWriter:
 
     def write(
         self,
-        df: DataFrame,
+        df: DataFrame | OrderedScan,
         kv_metadata: dict[str, str] | None = None,
         with_index: bool = True,
         row_col: str = "row_index",
@@ -432,14 +478,24 @@ class SonataBundleWriter:
         :func:`~parquet_converters_spark.sources.ordering.read_parquet_ordered`
         returns it; otherwise this raises a ``ValueError`` naming
         :func:`~parquet_converters_spark.sources.ordering.order_rows`.
-        Each partition becomes one table file.
+        Each partition becomes one table file.  ``df`` may also be the
+        plan of that scan
+        (:func:`~parquet_converters_spark.sources.ordering.plan_parquet_ordered`,
+        as ``parquet_to_sonata`` passes it): then each task of the table
+        pass reads its slice itself, and the rows never pass through
+        the JVM.  Both go through the same table-pass kernel and write
+        the same bytes.
 
-        One table pass writes the table and run-length encodes both
-        index keys; its collect of the boundary runs and partition
-        summaries is its only job.  Then the numbering exchange, and one
-        job writes all four index tables.  Everything goes to a sibling
-        staging directory that is renamed over the population directory
-        after ``attributes.json``; a failure removes it."""
+        One table pass projects the rows (``synapse_id`` dropped,
+        ``edge_type_id`` 0 when absent), writes the table and run-length
+        encodes both index keys; its collect of the boundary runs and
+        partition summaries is its only job.  Then the numbering (no
+        job of its own when the ranges fit one partition, else a sampled
+        exchange and a summary collect), and one job writes all four
+        index tables.
+        Everything goes to a sibling staging directory that is renamed
+        over the population directory after ``attributes.json``; a
+        failure removes it."""
         import shutil
         import uuid
 
@@ -448,10 +504,7 @@ class SonataBundleWriter:
 
         spark = df.sparkSession
         kv = dict(kv_metadata or {})
-
-        table = df.drop(*[c for c in COLUMNS_TO_SKIP if c in df.columns])
-        if "edge_type_id" not in table.columns:
-            table = table.withColumn("edge_type_id", F.lit(0))
+        table = _table_schema(df.schema)
 
         attrs: dict[str, object] = {}
         dataset_attrs: dict[str, dict[str, str]] = {}
@@ -475,7 +528,7 @@ class SonataBundleWriter:
                 attrs[k] = v
         attrs["parquet2hdf5_version"] = __version__
 
-        enums = _enumerations_from_metadata(kv, df)
+        enums = _enumerations_from_metadata(kv, df.schema)
 
         par = max(1, spark.sparkContext.defaultParallelism)
         keys = list(SONATA_KEYS.values()) if with_index else []
@@ -487,8 +540,8 @@ class SonataBundleWriter:
         os.makedirs(os.path.join(staging, "table.parquet"))
         try:
             runs = _table_pass(
-                table, os.path.join(staging, "table.parquet"), keys,
-                row_col, job,
+                df, _arrow_schema(spark, table),
+                os.path.join(staging, "table.parquet"), keys, row_col, job,
             )
             if with_index:
                 runs = runs.persist()
@@ -528,11 +581,11 @@ class SonataBundleWriter:
                 "attributes": attrs,
                 "dataset_attributes": dataset_attrs,
                 "top_level_datasets": [
-                    c for c in TOP_LEVEL_DATASETS if c in table.columns
+                    c for c in TOP_LEVEL_DATASETS if c in table.names
                 ],
                 "property_datasets": [
                     c
-                    for c in table.columns
+                    for c in table.names
                     if c not in TOP_LEVEL_DATASETS and c != row_col
                 ],
                 "libraries": sorted(enums),
@@ -546,7 +599,7 @@ class SonataBundleWriter:
 
 
 def write_sonata_bundle(
-    df: DataFrame,
+    df: DataFrame | OrderedScan,
     out_dir: str,
     population: str = "default",
     kv_metadata: dict[str, str] | None = None,
@@ -709,13 +762,14 @@ def export_hdf5(
     w.write(h5_path)
 
 
-def _run_tasks(spark, tasks: list, fn, ddl: str) -> list:
-    """``fn(task)`` for every task, task *i* in Spark task *i* of one
-    ``spark.range(k).mapInArrow`` job: the Python worker pool every
-    Arrow pass of the chain uses, so no RDD job starts a second one.
-    ``fn`` returns one row, a tuple of ``ddl``'s columns; the rows come
-    back in task order."""
-    names = [c.split()[0] for c in ddl.split(",")]
+def _run_tasks(spark, tasks: list, fn, schema: StructType) -> list:
+    """``fn(task)`` for every task in one ``spark.range(n).mapInArrow``
+    job: the Python worker pool every Arrow pass of the chain uses, so no
+    RDD job starts a second one.  At most ``defaultParallelism`` Spark
+    tasks, each running a contiguous run of the tasks, so the job runs in
+    one wave.  ``fn`` returns one row, a tuple of ``schema``'s columns;
+    the rows come back in task order."""
+    names = schema.names
 
     def run_tasks(batches):
         import pyarrow as pa
@@ -727,9 +781,10 @@ def _run_tasks(spark, tasks: list, fn, ddl: str) -> list:
                     [pa.array(c) for c in zip(*rows)], names=names
                 )
 
+    k = min(len(tasks), spark.sparkContext.defaultParallelism)
     return (
-        spark.range(len(tasks), numPartitions=len(tasks))
-        .mapInArrow(run_tasks, ddl)
+        spark.range(len(tasks), numPartitions=max(k, 1))
+        .mapInArrow(run_tasks, schema)
         .collect()
     )
 
@@ -775,7 +830,8 @@ def _edge_column_dtypes(spark, table_path: str, schema, manifest) -> list:
         per_file = [
             r.widths
             for r in _run_tasks(
-                spark, files, lambda p: (widths(p),), "widths array<long>"
+                spark, files, lambda p: (widths(p),),
+                StructType([StructField("widths", ArrayType(LongType()))]),
             )
         ]
         big += [
@@ -965,11 +1021,12 @@ def export_hdf5_parallel(
     """Parallel SONATA ``.h5`` export: the driver writes ONLY the file
     skeleton (superblock, group structures, dataset object headers,
     ``@library`` enumerations — the rank-0 metadata of the reference,
-    ``src/circuit/sonata_file.cpp:45-97``), then ONE Spark job with one
-    task per bundle file (:func:`_run_tasks`: ``spark.range(k).mapInArrow``
-    on the Python worker pool the chain's Arrow passes use, no RDD job)
-    writes every distributed dataset: each task
-    reads its parquet file with pyarrow and seek+writes its rows at
+    ``src/circuit/sonata_file.cpp:45-97``), then ONE Spark job
+    (:func:`_run_tasks`: ``spark.range(n).mapInArrow`` on the Python
+    worker pool the chain's Arrow passes use, no RDD job, one wave of at
+    most ``defaultParallelism`` tasks, each filling a run of bundle
+    files) writes every distributed dataset: each file's fill
+    reads it with pyarrow and seek+writes its rows at
     ``dataset_offset + key * row_width`` — the analogue of the
     reference's per-rank MPI-IO independent hyperslab writes
     (``src/circuit/sonata_file.cpp:98-101,123-143``), with the bundle's
@@ -1181,7 +1238,8 @@ def export_hdf5_parallel(
             lambda task: _fill_chunks(target, task[1], addrs.value)
             if task[0]
             else _fill_file(target, task[1]),
-            "source long, n long",
+            StructType([StructField("source", LongType()),
+                        StructField("n", LongType())]),
         ):
             got[i] += n
         for i, (path, _, _, specs) in enumerate(sources):

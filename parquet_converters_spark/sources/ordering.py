@@ -15,6 +15,10 @@ does the same in Spark, with no exchange and no file-scan planning job:
 So partition *i* holds one contiguous, sorted ``row_index`` slice, which
 is what the SONATA bundle writer requires of its input (frames that are
 not ordered go through :func:`order_rows` first).
+
+:func:`plan_parquet_ordered` is the driver half alone: the schema, the
+slice count and the slice reader, for a consumer that reads each slice
+inside a task of its own (the SONATA bundle writer's table pass).
 """
 
 from __future__ import annotations
@@ -23,8 +27,10 @@ import glob as _glob
 import json
 import logging
 import os
+from typing import Callable, Iterator, NamedTuple
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 _log = logging.getLogger(__name__)
 
@@ -134,7 +140,7 @@ def _spark_schema(arrow_schema):
     a Spark file scan."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import from_arrow_schema
-    from pyspark.sql.types import StructField, StructType
+    from pyspark.sql.types import StructField
 
     md = (arrow_schema.metadata or {}).get(_SPARK_ROW_METADATA.encode())
     if md is not None:
@@ -153,8 +159,6 @@ def _spark_schema(arrow_schema):
 def _merge_schemas(schemas):
     """Union of Spark schemas by field name, in first-seen order; a name
     with two different types is an error."""
-    from pyspark.sql.types import StructType
-
     fields: dict = {}
     for schema in schemas:
         for f in schema:
@@ -192,34 +196,49 @@ def _plan_slices(row_groups: list[tuple[str, list[int]]], k: int):
     return [(first, parts) for _, first, parts in slices] or [(0, [])]
 
 
-def read_parquet_ordered(
+class OrderedScan(NamedTuple):
+    """The footer plan of an ordered scan: ``schema`` is the Spark
+    schema of its rows (``row_index`` last), ``n_slices`` the slice
+    count, and ``read_slice`` maps an iterator of Arrow batches of slice
+    ids (a ``spark.range`` partition) to the Arrow batches of those
+    slices."""
+
+    sparkSession: SparkSession
+    schema: StructType
+    n_slices: int
+    read_slice: Callable[[Iterator], Iterator]
+
+    def mapInArrow(self, fn, schema) -> DataFrame:
+        """``fn`` over each slice's Arrow batches, slice *i* read and
+        mapped in partition *i* of one ``spark.range(n_slices)`` frame:
+        the shape of ``DataFrame.mapInArrow`` on
+        :func:`read_parquet_ordered`'s frame, without the JVM between the
+        read and ``fn``."""
+        read_slice = self.read_slice
+
+        def read_and_map(ids):
+            return fn(read_slice(ids))
+
+        return self.sparkSession.range(
+            self.n_slices, numPartitions=self.n_slices
+        ).mapInArrow(read_and_map, schema)
+
+
+def plan_parquet_ordered(
     spark,
     path: str,
     row_index_col: str = "row_index",
     mergeSchema: bool = False,
     rows_per_file: int | None = None,
-) -> DataFrame:
-    """Read a parquet file/dir with a deterministic global ``row_index``
-    column (sorted-file-name x in-file order, matching the reference's
-    global order), as contiguous slices: partition *i* holds slice *i*,
-    sorted on ``row_index``, and the slices follow each other.
-
-    ``rows_per_file`` bounds the slice size as in
-    :func:`_range_partitions` (the default plans as many slices as that
-    function gives for the table and ``defaultParallelism``); slices cut
-    only between row groups.
-
-    Schema-merge is off by default: like the reference, all files must
-    agree on the schema (``parquet2hdf5.cpp:67-73`` — mismatched schemas
-    are a hard error there too), checked driver-side against the
-    ``_metadata`` sidecar when the directory has one, else against the
-    first file's footer.  ``mergeSchema=True`` opts out of the strict
-    check and unions the footer schemas, with nulls for the columns a
-    file lacks.
-    """
+) -> OrderedScan:
+    """The driver half of :func:`read_parquet_ordered`: read every
+    footer once, check (or merge) the schemas and plan the slices.  Runs
+    no Spark job.  A consumer maps the slices with
+    :meth:`OrderedScan.mapInArrow`, so slice *i* is read in the task
+    that also does whatever the consumer does with it."""
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import LongType, StructField, StructType
+    from pyspark.sql.types import LongType, StructField
 
     files = _sorted_files(path)
     footers = {f: pq.read_metadata(f) for f in files}
@@ -272,9 +291,41 @@ def read_parquet_ordered(
                         pos += batch.num_rows
                         yield pa.RecordBatch.from_arrays(cols, schema=target)
 
-    return spark.range(len(slices), numPartitions=len(slices)).mapInArrow(
-        read_slice, schema
+    return OrderedScan(spark, schema, len(slices), read_slice)
+
+
+def read_parquet_ordered(
+    spark,
+    path: str,
+    row_index_col: str = "row_index",
+    mergeSchema: bool = False,
+    rows_per_file: int | None = None,
+) -> DataFrame:
+    """Read a parquet file/dir with a deterministic global ``row_index``
+    column (sorted-file-name x in-file order, matching the reference's
+    global order), as contiguous slices: partition *i* holds slice *i*,
+    sorted on ``row_index``, and the slices follow each other.  This is
+    :func:`plan_parquet_ordered`'s plan as a frame of its own;
+    ``parquet_to_sonata`` instead hands the plan to the bundle writer,
+    whose table pass reads each slice in the task that writes it.
+
+    ``rows_per_file`` bounds the slice size as in
+    :func:`_range_partitions` (the default plans as many slices as that
+    function gives for the table and ``defaultParallelism``); slices cut
+    only between row groups.
+
+    Schema-merge is off by default: like the reference, all files must
+    agree on the schema (``parquet2hdf5.cpp:67-73`` — mismatched schemas
+    are a hard error there too), checked driver-side against the
+    ``_metadata`` sidecar when the directory has one, else against the
+    first file's footer.  ``mergeSchema=True`` opts out of the strict
+    check and unions the footer schemas, with nulls for the columns a
+    file lacks.
+    """
+    scan = plan_parquet_ordered(
+        spark, path, row_index_col, mergeSchema, rows_per_file
     )
+    return scan.mapInArrow(lambda batches: batches, scan.schema)
 
 
 def order_rows(

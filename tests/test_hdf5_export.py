@@ -1775,3 +1775,27 @@ def test_export_runs_no_rdd_job(spark, tmp_path, monkeypatch):
             assert a.read() == b.read(), mode
     got = MiniH5Reader(h5).read_dataset("/edges/p/0/kind")
     assert got.dtype == np.dtype("S6")  # "σ-mod" is 6 UTF-8 bytes
+
+
+def test_run_tasks_one_wave_in_task_order(spark):
+    """The fill's task runner starts at most defaultParallelism Spark
+    tasks, each running a contiguous run of the tasks, and returns the
+    rows in task order."""
+    from pyspark import TaskContext
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from parquet_converters_spark.sinks.sonata import _run_tasks
+
+    par = spark.sparkContext.defaultParallelism
+    n = 3 * par + 1
+    rows = _run_tasks(
+        spark,
+        list(range(n)),
+        lambda t: (t, TaskContext.get().partitionId()),
+        StructType([StructField("task", LongType()),
+                    StructField("part", LongType())]),
+    )
+    assert [r.task for r in rows] == list(range(n))
+    parts = [r.part for r in rows]
+    assert parts == sorted(parts)
+    assert len(set(parts)) == par

@@ -189,3 +189,72 @@ def test_global_row_index_ordered_mode_is_hierarchical(spark):
     out = with_global_row_index(df, "idx", order_cols=["k"]).collect()
     got = sorted((r["k"], r["idx"]) for r in out)
     assert got == [(k, i) for i, k in enumerate(sorted(k for k, _ in rows))]
+
+
+def test_one_partition_numbering_matches_exchange(spark, tmp_path):
+    """The numbering of one partition (plan from the per-direction range
+    counts, no summaries, nothing persisted, no job before the table
+    write) writes the same index tables as the sampled range exchange
+    into 3 partitions: a direction without edges, and node ids absent
+    below the first and above the last node with edges."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from parquet_converters_spark.operators.indexing import (
+        INDEX_COLUMNS,
+        SONATA_KEYS,
+        build_sonata_indices,
+    )
+    from parquet_converters_spark.sinks.sonata import _write_index_tables
+
+    rng = np.random.default_rng(17)
+    # source runs over nodes 2..40 in row order; no target runs at all
+    nodes = np.repeat(rng.integers(2, 41, 3_000), rng.integers(1, 4, 3_000))
+    brk = np.flatnonzero(nodes[1:] != nodes[:-1]) + 1
+    starts = np.concatenate(([0], brk))
+    ends = np.concatenate((brk, [len(nodes)]))
+    rows = [
+        (0, int(nodes[s]), int(s), int(e)) for s, e in zip(starts, ends)
+    ]
+    ranges = spark.createDataFrame(
+        rows, "_dir int, node_id long, range_start long, range_end long"
+    ).repartition(4)
+    node_counts = {"source_to_target": 45, "target_to_source": 7}
+    sc = spark.sparkContext
+    tables = {}
+    for k in (1, 3):
+        group = f"numbering-{k}"
+        sc.setJobGroup(group, "numbering")
+        try:
+            with build_sonata_indices(
+                ranges, {0: len(rows)}, node_counts, lambda n: k
+            ) as (numbered, plans):
+                n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+                assert {p for _, p in plans} == set(range(k))
+                pop = str(tmp_path / f"k{k}")
+                _write_index_tables(
+                    numbered, plans, pop, "job", list(node_counts.values())
+                )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        if k == 1:
+            assert n_jobs == 0
+        tables[k] = {
+            (d, name): pq.read_table(
+                f"{pop}/indices/{d}/{name}.parquet"
+            ).sort_by(cols[0]).to_pylist()
+            for d in SONATA_KEYS
+            for name, cols in INDEX_COLUMNS.items()
+        }
+    assert tables[1] == tables[3]
+
+    nr = tables[1][("source_to_target", "node_id_to_ranges")]
+    assert [r["node_id"] for r in nr] == list(range(45))
+    for r in nr[:2] + nr[41:]:
+        assert (r["range_lo"], r["range_hi"]) == (0, 0)
+    re_ = tables[1][("source_to_target", "range_to_edge_id")]
+    assert len(re_) == len(rows)
+    assert tables[1][("target_to_source", "node_id_to_ranges")] == [
+        {"node_id": i, "range_lo": 0, "range_hi": 0} for i in range(7)
+    ]
+    assert tables[1][("target_to_source", "range_to_edge_id")] == []

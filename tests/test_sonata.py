@@ -437,9 +437,10 @@ def _job_count(spark, run):
 
 def test_parquet_to_sonata_job_budget(spark, tmp_path):
     """parquet_to_sonata does each of the reference's steps once: the
-    whole call (ordered scan, table pass, numbering exchange, index
-    tables and the .h5) stays within 6 Spark jobs and pins nothing; the .h5
-    fill alone is ONE job, two when a string column needs its width."""
+    whole call (the table pass reading its own slices, the numbering of
+    one partition without summaries, the index tables and the .h5) runs
+    3 Spark jobs and pins nothing; the .h5 fill alone is ONE job, two
+    when a string column needs its width."""
     import pandas as pd
 
     from parquet_converters_spark.pipelines import parquet_to_sonata
@@ -463,7 +464,7 @@ def test_parquet_to_sonata_job_budget(spark, tmp_path):
             spark, in_dir, out, population="p", with_index=True, h5_path=h5
         ),
     )
-    assert n_jobs <= 6, n_jobs
+    assert n_jobs <= 3, n_jobs
     assert set(jsc.getPersistentRDDs().keySet().toArray()) == pinned
 
     assert _job_count(
@@ -856,3 +857,155 @@ def test_bundle_dictionary_rule_matches_parquet_mr(spark, tmp_path):
     assert enc["edge_type_id"].has_dictionary_page
     assert enc["weight"].has_dictionary_page  # 13 distinct values
     assert all(c.compression == "SNAPPY" for c in enc.values())
+
+
+def _bundle_bytes(out):
+    """File bytes of a bundle keyed by relative path, with the per-call
+    job id taken out of the part-file names."""
+    import re
+
+    return {
+        re.sub(r"-[0-9a-f]{32}-", "-JOB-", rel): data
+        for rel, data in _tree(out).items()
+    }
+
+
+def _parity_input(tmp_path):
+    """Three files, several row groups each: a ``synapse_id`` to drop, no
+    ``edge_type_id``, an input ``row_index`` the scan replaces, unsigned
+    columns the scan widens, and footer KV with population sizes."""
+    rng = np.random.default_rng(31)
+    n = 3_000
+    t = pa.table(
+        {
+            "row_index": pa.array(rng.integers(0, 9, n), pa.int64()),
+            "source_node_id": pa.array(np.sort(rng.integers(3, 90, n)), pa.uint32()),
+            "target_node_id": pa.array(rng.integers(0, 60, n), pa.uint16()),
+            "synapse_id": pa.array(np.arange(n), pa.int64()),
+            "delay": pa.array(rng.random(n).astype("float32")),
+            "syn_type": pa.array(rng.integers(0, 4, n), pa.uint8()),
+        }
+    ).replace_schema_metadata(
+        {
+            b"source_population_size": b"95",
+            b"target_population_size": b"64",
+            b"custom": b"x",
+        }
+    )
+    d = tmp_path / "in"
+    d.mkdir()
+    for i, (a, b) in enumerate([(0, 700), (700, 2_100), (2_100, n)]):
+        pq.write_table(t.slice(a, b - a), d / f"e.{i}.parquet", row_group_size=250)
+    return str(d)
+
+
+@pytest.mark.parametrize("rows_per_file", [None, 500])
+def test_fused_table_pass_matches_frame_path(spark, tmp_path, rows_per_file):
+    """The bundle written from the ordered scan's plan (each table-pass
+    task reads its own slice, as parquet_to_sonata does) is byte for byte
+    the bundle written from read_parquet_ordered's frame, with one slice
+    and with several.  With several, the index numbering samples its
+    partition bounds, so its files may cut elsewhere on each run: there
+    the index tables are compared row for row."""
+    import glob as _glob
+
+    from parquet_converters_spark.pipelines import parquet_to_sonata
+    from parquet_converters_spark.sinks.sonata import (
+        SonataBundleWriter,
+        collect_kv_metadata,
+    )
+    from parquet_converters_spark.sources.ordering import (
+        plan_parquet_ordered,
+        read_parquet_ordered,
+    )
+
+    in_dir = _parity_input(tmp_path)
+    kv = collect_kv_metadata(in_dir)
+    fused, frame = str(tmp_path / "fused"), str(tmp_path / "frame")
+    if rows_per_file is None:
+        parquet_to_sonata(spark, in_dir, fused, population="p")
+    else:
+        SonataBundleWriter(fused, "p").write(
+            plan_parquet_ordered(spark, in_dir, rows_per_file=rows_per_file),
+            kv_metadata=kv,
+        )
+    SonataBundleWriter(frame, "p").write(
+        read_parquet_ordered(spark, in_dir, rows_per_file=rows_per_file),
+        kv_metadata=kv,
+    )
+    got, want = _bundle_bytes(fused), _bundle_bytes(frame)
+    if rows_per_file is not None:
+        for out in (fused, frame):
+            assert len(_glob.glob(os.path.join(
+                out, "edges", "p", "indices", "*", "*.parquet", "*.parquet"
+            ))) > 4
+        for d in ("source_to_target", "target_to_source"):
+            for name in ("node_id_to_ranges", "range_to_edge_id"):
+                rel = os.path.join("edges", "p", "indices", d, f"{name}.parquet")
+                a, b = (
+                    pq.read_table(os.path.join(out, rel)).sort_by(
+                        "node_id" if name == "node_id_to_ranges" else "range_id"
+                    )
+                    for out in (fused, frame)
+                )
+                assert a.equals(b), rel
+        got, want = (
+            {k: v for k, v in t.items() if "/indices/" not in k}
+            for t in (got, want)
+        )
+    assert got == want
+    n_table = sum(1 for rel in got if rel.startswith("edges/p/table.parquet/"))
+    assert n_table == (1 if rows_per_file is None else 6)
+
+    table = pq.read_table(os.path.join(fused, "edges", "p", "table.parquet"))
+    assert "synapse_id" not in table.column_names
+    assert table.schema.field("edge_type_id").type == pa.int32()
+    assert not table.schema.field("edge_type_id").nullable
+    assert table.column("edge_type_id").to_pylist() == [0] * 3_000
+    assert sorted(table.column("row_index").to_pylist()) == list(range(3_000))
+    assert table.schema.field("syn_type").type == pa.int16()
+    assert spark.read.parquet(
+        os.path.join(fused, "edges", "p", "table.parquet")
+    ).count() == 3_000
+
+
+def test_bundle_row_groups_independent_of_batch_size(spark, tmp_path, monkeypatch):
+    """Above _ROW_GROUP_ROWS rows per partition, every row group but the
+    last holds exactly _ROW_GROUP_ROWS rows, whether the batches come
+    from the JVM (10,000 rows) or from the slice reader (one per input
+    row group), and both paths write the same bytes."""
+    from parquet_converters_spark.sinks import sonata
+    from parquet_converters_spark.sources.ordering import (
+        plan_parquet_ordered,
+        read_parquet_ordered,
+    )
+
+    monkeypatch.setattr(sonata, "_ROW_GROUP_ROWS", 3_000)
+    n = 25_000
+    idx = np.arange(n, dtype="int64")
+    d = tmp_path / "in"
+    d.mkdir()
+    pq.write_table(
+        pa.table({
+            "source_node_id": pa.array(idx // 10),
+            "target_node_id": pa.array(idx % 17),
+        }),
+        d / "e.parquet",
+        row_group_size=7_000,
+    )
+    outs = []
+    for name, source in (
+        ("frame", read_parquet_ordered(spark, str(d))),
+        ("scan", plan_parquet_ordered(spark, str(d))),
+    ):
+        out = str(tmp_path / name)
+        sonata.SonataBundleWriter(out, "p").write(source, with_index=False)
+        (f,) = [
+            os.path.join(out, "edges", "p", "table.parquet", x)
+            for x in os.listdir(os.path.join(out, "edges", "p", "table.parquet"))
+        ]
+        md = pq.read_metadata(f)
+        sizes = [md.row_group(i).num_rows for i in range(md.num_row_groups)]
+        assert sizes == [3_000] * 8 + [1_000], (name, sizes)
+        outs.append(_bundle_bytes(out))
+    assert outs[0] == outs[1]
