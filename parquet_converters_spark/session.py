@@ -24,6 +24,11 @@ def get_spark(
     ``shuffle_partitions`` defaults to the local core count; on a real
     cluster set it to 2-3x the total executor cores (AQE coalesces the
     excess at runtime, so erring high is safe).
+
+    The Python workers start from ``parquet_converters_spark.worker_daemon``,
+    so executors must be able to import this package (every Arrow kernel
+    needs that already); ``extra_conf`` can override
+    ``spark.python.daemon.module`` like any other setting.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
@@ -50,6 +55,9 @@ def get_spark(
         # the first one and retries a failing ``import ipykernel`` on
         # every later one
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Python workers fork from the engine's daemon, whose tasks skip
+        # re-reading unchanged zip archives (worker_daemon.py)
+        .config("spark.python.daemon.module", "parquet_converters_spark.worker_daemon")
     )
     if SparkSession.getActiveSession() is None:
         builder = builder.master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))
