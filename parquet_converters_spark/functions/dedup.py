@@ -484,7 +484,6 @@ def near_dedup_survivors(
     num_hashes: int = 8,
     bands: int = 4,
     cc_method: str = "hash_to_min",
-    precomputed: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """The end of the dedup funnel: the rows a training-data pipeline
     actually keeps.
@@ -503,13 +502,9 @@ def near_dedup_survivors(
     labels come back as a local relation, above it the distributed
     rounds run over that checkpoint.  The one checkpoint job anti-joins
     the non-minimum nodes from the cached representatives.
-
-    ``precomputed``: pass an already-materialized ``(groups, pairs)``
-    from :func:`near_dedup_pipeline` when the candidate set is shared
-    with other outputs (clusters, pair reports).
     """
     return _near_dedup_survivors(
-        df, text_col, id_col, num_hashes, bands, cc_method, precomputed
+        df, text_col, id_col, num_hashes, bands, cc_method
     )[0]
 
 
@@ -520,7 +515,6 @@ def _near_dedup_survivors(
     num_hashes: int,
     bands: int,
     cc_method: str,
-    precomputed: tuple[DataFrame, DataFrame] | None,
 ) -> tuple[DataFrame, int, int]:
     """:func:`near_dedup_survivors` plus the two counts its checkpoint
     job observes: ``(survivors, representatives, survivors' rows)``."""
@@ -529,15 +523,12 @@ def _near_dedup_survivors(
     from parquet_converters_spark.operators.graph import connected_components
     from parquet_converters_spark.session import free_local_checkpoints
 
-    if precomputed is not None:
-        groups, pairs = precomputed
-    else:
-        # pairs feed only the union-find, which ignores repeated edges,
-        # so the cross-band pair dedup would be a wasted exchange
-        groups, pairs = near_dedup_pipeline(
-            df, text_col, id_col, num_hashes=num_hashes, bands=bands,
-            pair_distinct=False,
-        )
+    # pairs feed only the union-find, which ignores repeated edges, so
+    # the cross-band pair dedup would be a wasted exchange
+    groups, pairs = near_dedup_pipeline(
+        df, text_col, id_col, num_hashes=num_hashes, bands=bands,
+        pair_distinct=False,
+    )
     # persisted before the pairs run: the plan of ``pairs`` contains this
     # same semi-join, so the pairs job builds the cache and the
     # checkpoint below reads it instead of redoing the exact-dedup

@@ -72,44 +72,6 @@ def ebml(eid: bytes, payload: bytes) -> bytes:
     return eid + bytes([0x80 | len(payload)]) + payload
 
 
-def ebml_any(eid: bytes, payload: bytes) -> bytes:
-    """One EBML element with a general-length size vint (RFC 8794
-    §4: length-ln vint = marker bit at position 7*ln, then the value
-    big-endian) — for bodies the single-byte form can't carry
-    (e.g. a Cluster of many SimpleBlocks)."""
-    n = len(payload)
-    ln = 1
-    while n >= (1 << (7 * ln)) - 1:
-        ln += 1
-    return eid + ((1 << (7 * ln)) | n).to_bytes(ln, "big") + payload
-
-
-def vorbis_id_packet(rate: int, channels: int,
-                     bitrate_nominal: int = 0) -> bytes:
-    """A Vorbis I identification packet (spec §4.2.2)."""
-    return (b"\x01vorbis" + b"\x00" * 4 + bytes([channels])
-            + rate.to_bytes(4, "little") + b"\x00" * 4
-            + bitrate_nominal.to_bytes(4, "little", signed=True)
-            + b"\x00" * 4 + b"\xb8\x01")
-
-
-def mp4_mvhd(timescale: int, duration: int) -> bytes:
-    """A version-0 mvhd box (14496-12 §8.2.2)."""
-    return mp4_box(b"mvhd", b"\x00" * 12 + timescale.to_bytes(4, "big")
-                   + duration.to_bytes(4, "big") + b"\x00" * 80)
-
-
-def webm_info(duration_ticks: float) -> bytes:
-    """A Matroska Segment Info with a float64 Duration at the default
-    1 ms TimecodeScale."""
-    return ebml(b"\x15\x49\xa9\x66",
-                ebml(b"\x44\x89", struct.pack(">d", float(duration_ticks))))
-
-
-WEBM_HEADER = (b"\x1a\x45\xdf\xa3\x87\x42\x82\x84webm")
-UNKNOWN_SIZE_SEGMENT = b"\x18\x53\x80\x67\xff"
-
-
 def gray_bmp(rows) -> bytes:
     """24-bit BI_RGB BMP from a grid of gray values (``rows[y][x]`` in
     0..255, top-down), emitted bottom-up with standard 4-byte row

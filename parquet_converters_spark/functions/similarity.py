@@ -506,43 +506,6 @@ def ivf_topk(
     )
 
 
-def embedding_neardup_pairs(
-    df: DataFrame,
-    threshold: float = 0.95,
-    num_planes: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via bucketed self-join:
-    candidates share an LSH bucket, verified by exact cosine >=
-    threshold."""
-    planes = hyperplanes(num_planes, dim)
-    base = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_vec"),
-        vec_norm(F.col(vec_col)).alias("_norm"),
-        lsh_bucket_sql(f"`{vec_col}`", planes).alias("_bucket"),
-    )
-    a, b = base.alias("a"), base.alias("b")
-    sim = cosine_similarity(
-        F.col("a._vec"), F.col("b._vec"), F.col("a._norm"), F.col("b._norm")
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a._bucket") == F.col("b._bucket"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            F.round(sim, 6).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
-
-
 def quantize_int8(
     df: DataFrame,
     vec_col: str = "embedding",

@@ -96,17 +96,6 @@ def quality_score(text: Column | str) -> Column:
     return bind(tokens(text), _score)
 
 
-def language_scores(text: Column | str) -> dict[str, Column]:
-    """Per-language stopword-overlap scores (distinct token hits)."""
-    toks = F.array_distinct(tokens(text))
-    return {
-        lang: F.size(
-            F.array_intersect(toks, F.array(*[F.lit(w) for w in words]))
-        )
-        for lang, words in STOPWORDS.items()
-    }
-
-
 def language_id(text: Column | str) -> Column:
     """Argmax language by stopword overlap; ties broken by language code
     order; 'und' (undetermined) when no stopword hits at all."""

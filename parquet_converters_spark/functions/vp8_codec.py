@@ -1083,26 +1083,6 @@ _YUV_FIX2 = 6
 _YUV_MASK2 = (256 << _YUV_FIX2) - 1
 
 
-def _mult_hi(v: int, coeff: int) -> int:
-    return (v * coeff) >> 8
-
-
-def _vp8_clip8(v: int) -> int:
-    return (v >> _YUV_FIX2) if 0 <= v <= _YUV_MASK2 else (
-        0 if v < 0 else 255
-    )
-
-
-def _yuv_to_rgb_scalar(y: int, u: int, v: int) -> tuple[int, int, int]:
-    yg = _mult_hi(y, 19077)
-    r = _vp8_clip8(yg + _mult_hi(v, 26149) - 14234)
-    g = _vp8_clip8(
-        yg - _mult_hi(u, 6419) - _mult_hi(v, 13320) + 8708
-    )
-    b = _vp8_clip8(yg + _mult_hi(u, 33050) - 17685)
-    return r, g, b
-
-
 def _upsample_plane_fancy(c: np.ndarray, w: int, h: int) -> np.ndarray:
     """The "fancy" 4:2:0 chroma upsampler, reproducing libwebp's exact
     nested integer rounding (a 9-3-3-1/16 bilinear blend computed as a

@@ -1,20 +1,3 @@
-from parquet_converters_spark.operators.touch_transform import (  # noqa: F401
-    to_canonical_edges,
-    unpack_branch_type,
-    validate_sections,
-)
-from parquet_converters_spark.operators.indexing import (  # noqa: F401
-    build_adjacency_index,
-    build_sonata_indices,
-)
-from parquet_converters_spark.operators.skew import (  # noqa: F401
-    salted_join,
-    two_stage_aggregate,
-)
-from parquet_converters_spark.operators.graph import connected_components  # noqa: F401
-from parquet_converters_spark.operators.range_join import bucketed_range_join  # noqa: F401
-from parquet_converters_spark.operators.zorder import (  # noqa: F401
-    write_zordered,
-    zorder_key,
-)
-from parquet_converters_spark.operators.timeseries import resample_ffill  # noqa: F401
+"""DataFrame operators: the touch transform, the adjacency index,
+graph components and the analytics operators.  Import each name from
+its defining module."""

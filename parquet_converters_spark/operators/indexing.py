@@ -19,11 +19,12 @@ scan's slices):
 
 1. **Local RLE** — :func:`_rle_batches` run-length encodes every index
    key of one partition at once.  The SONATA bundle writer runs it inside
-   its table pass, ``run_length_ranges_scan`` and ``method="scan"`` in a
-   ``mapInArrow`` of their own.  Only a partition's first and last run of
-   each key can continue into a neighbouring partition; those runs,
-   tagged with the partition's run count, are collected and chain-merged
-   on the driver (:func:`_runs_to_ranges`, the boundary fix-up).
+   its table pass, ``run_length_ranges_scan`` and
+   ``build_adjacency_index`` in a ``mapInArrow`` of their own.  Only a
+   partition's first and last run of each key can continue into a
+   neighbouring partition; those runs, tagged with the partition's run
+   count, are collected and chain-merged on the driver
+   (:func:`_runs_to_ranges`, the boundary fix-up).
 2. **Numbering** — :func:`build_sonata_indices`: the runs sorted on
    ``(direction, node_id, range_start)``.  When they fit one partition
    (``num_partitions`` gives 1, as at the default size), that partition
@@ -41,9 +42,9 @@ scan's slices):
    already in key order, so the bundle writer writes all four tables in
    one job without a join or another sort.
 
-``method="window"`` is the DataFrame-only oracle the tests compare
-against: a gaps-and-islands window partitioned by node, a global rank,
-and a dense left join.
+``run_length_ranges`` numbered by ``_global_rank`` is the DataFrame-only
+oracle the tests compare against: a gaps-and-islands window partitioned
+by node and a global rank.
 """
 
 from __future__ import annotations
@@ -467,7 +468,6 @@ def build_adjacency_index(
     key: str,
     node_count: int | None = None,
     row_col: str = "row_index",
-    method: str = "window",
 ) -> tuple[DataFrame, DataFrame]:
     """Build one direction of the adjacency index.
 
@@ -478,63 +478,34 @@ def build_adjacency_index(
     - ``range_to_edge_id``: range_id, edge_start, edge_end — ordered
       node-major, start-ascending.
 
-    ``method``: ``"window"`` (gaps-and-islands, shuffles rows by node
-    twice — the oracle) or ``"scan"`` (the module's scan path after a
-    ``repartitionByRange`` on ``row_col``).  The scan frames read two
-    persisted intermediates, the row-ordered input and the numbering
-    exchange, which stay pinned while the frames are in use.
+    Runs the module's scan path over ``df`` range-partitioned on
+    ``row_col``.  The frames read two persisted intermediates, the
+    row-ordered input and the numbering exchange, which stay pinned while
+    the frames are in use.  The gaps-and-islands form (``run_length_ranges`` numbered by
+    ``_global_rank``) is the tests' oracle for it.
     """
     spark = df.sparkSession
     if node_count is None:
         node_count = infer_node_count(df, key)
-
-    if method == "scan":
-        par = spark.sparkContext.defaultParallelism
-        ordered = (
-            df.select(row_col, F.col(key).cast("long").alias(key))
-            .repartitionByRange(par, row_col)
-            .sortWithinPartitions(row_col)
-            .persist()
+    par = spark.sparkContext.defaultParallelism
+    ordered = (
+        df.select(row_col, F.col(key).cast("long").alias(key))
+        .repartitionByRange(par, row_col)
+        .sortWithinPartitions(row_col)
+        .persist()
+    )
+    ranges, n_ranges = _local_runs(ordered, [key], row_col)
+    numbered, plans = _number_ranges(ranges, n_ranges, [node_count],
+                                     lambda n: par)
+    if not plans:
+        node_ranges = spark.range(node_count).select(
+            F.col("id").alias("node_id"),
+            F.lit(0).cast("long").alias("range_lo"),
+            F.lit(0).cast("long").alias("range_hi"),
         )
-        ranges, n_ranges = _local_runs(ordered, [key], row_col)
-        numbered, plans = _number_ranges(ranges, n_ranges, [node_count],
-                                         lambda n: par)
-        if not plans:
-            node_ranges = spark.range(node_count).select(
-                F.col("id").alias("node_id"),
-                F.lit(0).cast("long").alias("range_lo"),
-                F.lit(0).cast("long").alias("range_hi"),
-            )
-        else:
-            node_ranges = _index_frame(
-                numbered, plans, 0, "node_id_to_ranges"
-            )
-        return node_ranges, _index_frame(
-            numbered, plans, 0, "range_to_edge_id"
-        )
-
-    numbered = _global_rank(
-        run_length_ranges(df, key, row_col), ["node_id", "range_start"],
-        "range_id",
-    )
-    range_to_edge_id = numbered.select(
-        "range_id",
-        F.col("range_start").alias("edge_start"),
-        F.col("range_end").alias("edge_end"),
-    )
-
-    per_node = numbered.groupBy("node_id").agg(
-        F.min("range_id").alias("range_lo"),
-        (F.max("range_id") + F.lit(1)).alias("range_hi"),
-    )
-    node_id_to_ranges = (
-        spark.range(node_count)
-        .withColumnRenamed("id", "node_id")
-        .join(per_node, "node_id", "left")
-        .na.fill({"range_lo": 0, "range_hi": 0})
-        .select("node_id", "range_lo", "range_hi")
-    )
-    return node_id_to_ranges, range_to_edge_id
+    else:
+        node_ranges = _index_frame(numbered, plans, 0, "node_id_to_ranges")
+    return node_ranges, _index_frame(numbered, plans, 0, "range_to_edge_id")
 
 
 SONATA_KEYS = {

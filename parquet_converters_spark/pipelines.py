@@ -345,7 +345,7 @@ def prepare_corpus(
         # would compute an unbuilt cache
         quality.write.format("noop").mode("overwrite").save()
         clean, n_unique, n_near = _near_dedup_survivors(
-            quality, text_col, id_col, num_hashes, bands, "hash_to_min", None
+            quality, text_col, id_col, num_hashes, bands, "hash_to_min"
         )
     finally:
         quality.unpersist(blocking=True)

@@ -1,9 +1,12 @@
-"""The engine's declared query surface (SURVEY §2 inventory + extended
-LLM-data-pipeline operators), exposed through ``__spark_entry__.py``.
+"""The query registry, exposed through ``__spark_entry__.py``.
 
-Every entry is a pair: a Spark DataFrame program and an exactly
-equivalent ANSI-SQL oracle (run by the driver in DuckDB).  Determinism
-conventions that make the value-hash comparison exact:
+``QUERIES`` maps each of the converter and corpus queries (the adjacency
+index, run-length grouping, prefix sums and the dedup family) to a pair:
+a Spark DataFrame program over the tables of an ``sf_dir`` and an exactly
+equivalent ANSI-SQL oracle run in DuckDB (``tests/test_registry.py``).
+The other query functions in this module are not registered; only their
+tests call them.  Determinism conventions that make the value comparison
+exact:
 
 - double aggregates go through ``decimal(20,4)`` (exact in both
   engines) and are cast back to double at the end;
@@ -32,26 +35,13 @@ from parquet_converters_spark.functions.dedup import (
     simhash,
     simhash_neardup_pairs,
 )
-from parquet_converters_spark.functions.multimodal import (
-    documents_as_media,
-    media_metadata,
-)
 from parquet_converters_spark.functions.similarity import (
     cosine_topk,
-    embedding_neardup_pairs,
-    hyperplanes,
-    ivf_centroids,
-    ivf_pq_topk,
-    ivf_topk,
     lsh_bucket_ann,
 )
 from parquet_converters_spark.functions.text import (
-    GOPHER_STOPWORDS,
-    STOPWORDS,
     doc_fingerprint,
-    language_id,
     quality_score,
-    token_count,
     tokens,
 )
 from parquet_converters_spark.operators.indexing import (
@@ -60,12 +50,6 @@ from parquet_converters_spark.operators.indexing import (
     run_length_ranges_scan,
 )
 from parquet_converters_spark.operators.range_join import bucketed_range_join
-from parquet_converters_spark.streaming.events import (
-    dedup_events,
-    running_user_totals,
-    sessionize,
-    windowed_event_counts,
-)
 
 
 def _ensure_session_confs(spark: SparkSession) -> None:
@@ -85,119 +69,6 @@ def _ensure_session_confs(spark: SparkSession) -> None:
         pass  # conf locked down -> proceed with whatever the session has
 
 
-# r17 (guide §2.5 input skew / §6 input splits): the bench tables are
-# single-row-group parquet files, so Spark's scan gives ONE row-carrying
-# task no matter how many byte-range splits it plans — every narrow
-# stage (md5 shingles, vector math, decimal aggregation) runs on one
-# core until the first exchange.  `_t` therefore hash-repartitions the
-# FACT tables to the session's parallelism when (and only when) the
-# physical layout cannot parallelize the scan: row_groups < cores.  On
-# a production multi-row-group/multi-file table the condition is false
-# and the plan is untouched — this is the guide's "repartition
-# immediately after the read" fix for unsplittable inputs, made
-# layout-adaptive rather than a local[32] constant.  Partitioning is by
-# the table's primary key (deterministic, no round-robin pre-sort, and
-# a downstream exchange on the same key at the same partition count is
-# reused).  Dimension tables (region..part) stay untouched: they ride
-# broadcasts, where an extra exchange is pure loss.
-# Measured per table on the full bench (entry-by-entry vs baseline):
-# documents -8.0 s / embeddings (with the sim SQL-text twins) -15.0 s /
-# lineitem -4.3 s net; events +4.9 s and orders +2.0 s NET LOSS — their
-# queries are date/key aggregations whose narrow compute is trivial, so
-# the spread exchange (paid once per scan branch) costs more than the
-# single-task scan it parallelizes.  Spread therefore covers only the
-# compute-heavy tables.
-_SPREAD_KEYS = {
-    "documents": "doc_id",
-    "embeddings": "vec_id",
-    "lineitem": "l_orderkey",
-}
-# (sf_dir, name) -> (layout stamp, decision).  The stamp (per-file
-# mtime+size) invalidates the cached layout decision when a table is
-# rewritten in-session (layout change, regen) instead of silently
-# keeping the stale one (ADVICE r17).
-_SPREAD_CACHE: dict[tuple[str, str], tuple[tuple, bool] | bool] = {}
-# test seam: force a decision per (sf_dir, name) regardless of layout
-# (tests assert the production no-spread plan shape on bench tables)
-_SPREAD_OVERRIDE: dict[tuple[str, str], bool] = {}
-
-
-def _scan_needs_spread(sf_dir: str, name: str, target: int) -> bool:
-    key = (sf_dir, name)
-    if key in _SPREAD_OVERRIDE:
-        return _SPREAD_OVERRIDE[key]
-    try:
-        import glob as _glob
-        import os as _os
-
-        path = f"{sf_dir}/{name}.parquet"
-        files = (
-            sorted(_glob.glob(_os.path.join(path, "*.parquet")))
-            if _os.path.isdir(path)
-            else [path]
-        )
-        stamp = tuple(
-            (f, int(_os.path.getmtime(f)), _os.path.getsize(f))
-            for f in files
-        )
-    except Exception:
-        files, stamp = [], ()
-    cached = _SPREAD_CACHE.get(key)
-    # plain-bool entries (legacy direct mutation) are honored as-is
-    if isinstance(cached, bool):
-        return cached
-    if cached is not None and cached[0] == stamp:
-        return cached[1]
-    try:
-        import pyarrow.parquet as _pq
-
-        row_groups = sum(
-            _pq.ParquetFile(f).metadata.num_row_groups for f in files
-        )
-        decision = 0 < row_groups < target
-    except Exception:
-        # non-local path / unreadable footer: leave the scan alone
-        decision = False
-    _SPREAD_CACHE[key] = (stamp, decision)
-    return decision
-
-
-def _t(
-    spark: SparkSession, sf_dir: str, name: str, spread: bool = True
-) -> DataFrame:
-    _ensure_session_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    key = _SPREAD_KEYS.get(name)
-    if spread and key is not None:
-        target = spark.sparkContext.defaultParallelism
-        if _scan_needs_spread(sf_dir, name, target):
-            df = df.repartition(target, F.col(key))
-    return df
-
-
-def _emb_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The embeddings scan for queries that fan it into MULTIPLE plan
-    branches (exact + approximate retriever, query + corpus + codebook
-    sample), materialized once via a LAZY localCheckpoint — computed
-    inside the first action over it, so nothing is precomputed across
-    runs.
-
-    Gated on the same layout probe as the spread itself (r18, VERDICT
-    r17 item 7): on the bench's single-row-group layout every branch
-    would otherwise re-pay the spread's repartition exchange AND
-    re-scan the file (ann_recall_pq planned 4 spread exchanges on
-    vec_id); on a production multi-row-group layout the branch never
-    fires and each branch keeps its own pruned/pushed-down scan —
-    materializing a 100 TB fact table to executor storage would be
-    strictly worse than re-scanning parquet."""
-    emb = _t(spark, sf_dir, "embeddings")
-    if _scan_needs_spread(
-        sf_dir, "embeddings", spark.sparkContext.defaultParallelism
-    ):
-        emb = emb.localCheckpoint(eager=False)
-    return emb
-
-
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events with ``ts`` normalized to a TIMESTAMP (instant).
 
@@ -208,7 +79,8 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     instant type, and with the session timezone pinned to UTC the
     NTZ->LTZ cast preserves the epoch values DuckDB computes zone-free.
     """
-    ev = _t(spark, sf_dir, "events")
+    _ensure_session_confs(spark)
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     dt = dict(ev.dtypes)["ts"]
     if dt in ("bigint", "long"):
         # integral division: ns values (~1.7e18) exceed double's 53-bit
@@ -252,88 +124,15 @@ def _sql_shingles(col: str, n: int = 3) -> str:
     )
 
 
-# ===========================================================================
-# Relational queries (Spark-native strengths: joins, aggregation, windows)
-# ===========================================================================
-
-def q1_pricing_summary(spark, sf_dir):
-    """TPC-H Q1-style pricing summary over lineitem (A1 aggregation +
-    map-side partial agg; single shuffle on the 2-value grouping key)."""
-    li = _t(spark, sf_dir, "lineitem")
-    disc_price = _dec("l_extendedprice") * (F.lit(1).cast("decimal(25,4)") - _dec("l_discount"))
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("2025-09-01").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(_dec("l_quantity")).cast("double").alias("sum_qty"),
-            F.sum(_dec("l_extendedprice")).cast("double").alias("sum_base_price"),
-            F.sum(disc_price).cast("double").alias("sum_disc_price"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-Q1_SQL = """
-SELECT l_returnflag, l_linestatus,
-       CAST(sum(CAST(l_quantity AS DECIMAL(25,4))) AS DOUBLE) AS sum_qty,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(25,4))) AS DOUBLE) AS sum_base_price,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(25,4)) * (CAST(1 AS DECIMAL(25,4)) - CAST(l_discount AS DECIMAL(25,4)))) AS DOUBLE) AS sum_disc_price,
-       count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '2025-09-01'
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-"""
-
-
-def q3_shipping_priority(spark, sf_dir):
-    """TPC-H Q3-style: broadcast the filtered customer dim, shuffle join
-    orders<->lineitem, top-10 by revenue with deterministic tie-break."""
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    revenue = F.sum(
-        _dec("l_extendedprice") * (F.lit(1).cast("decimal(25,4)") - _dec("l_discount"))
-    ).cast("double")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("o_orderkey", "o_orderdate")
-        .agg(revenue.alias("revenue"))
-        .select(
-            "o_orderkey",
-            F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias("o_orderdate_us"),
-            "revenue",
-        )
-        .orderBy(F.col("revenue").desc(), F.col("o_orderkey").asc())
-        .limit(10)
-    )
-
-
-Q3_SQL = """
-SELECT o_orderkey,
-       epoch_us(o_orderdate) AS o_orderdate_us,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(25,4)) * (CAST(1 AS DECIMAL(25,4)) - CAST(l_discount AS DECIMAL(25,4)))) AS DOUBLE) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-GROUP BY o_orderkey, o_orderdate
-ORDER BY revenue DESC, o_orderkey ASC
-LIMIT 10
-"""
-
-
 def q5_nation_volume(spark, sf_dir):
     """TPC-H Q5-style multi-join star query: dims broadcast, facts
     shuffle once; revenue per nation."""
-    region = _t(spark, sf_dir, "region")
-    nation = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer")
-    sup = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    region = spark.read.parquet(f"{sf_dir}/region.parquet")
+    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    sup = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     revenue = F.sum(
         _dec("l_extendedprice") * (F.lit(1).cast("decimal(25,4)") - _dec("l_discount"))
     ).cast("double")
@@ -349,26 +148,12 @@ def q5_nation_volume(spark, sf_dir):
     )
 
 
-Q5_SQL = """
-SELECT n_name,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(25,4)) * (CAST(1 AS DECIMAL(25,4)) - CAST(l_discount AS DECIMAL(25,4)))) AS DOUBLE) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-GROUP BY n_name
-ORDER BY revenue DESC, n_name
-"""
-
-
 def q6_selective_agg(spark, sf_dir):
     """TPC-H Q6-style forecast-revenue: a highly selective conjunctive
     filter fully pushed to the parquet scan (PushedFilters shows all
     three), then a single global decimal sum — no shuffle at all beyond
     the final 1-row combine."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
@@ -386,475 +171,10 @@ def q6_selective_agg(spark, sf_dir):
     )
 
 
-Q6_SQL = """
-SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(25,4)) * CAST(l_discount AS DECIMAL(25,4))) AS DOUBLE) AS revenue,
-       count(*) AS n_items
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24
-"""
-
-
-def q14_brand_revenue(spark, sf_dir):
-    """TPC-H Q14-flavored: revenue by part brand — fact-side shuffle
-    join with the broadcast part dimension, top-10 brands."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    revenue = F.sum(
-        _dec("l_extendedprice") * (F.lit(1).cast("decimal(25,4)") - _dec("l_discount"))
-    ).cast("double")
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .groupBy("p_brand")
-        .agg(revenue.alias("revenue"), F.count(F.lit(1)).alias("n_items"))
-        .orderBy(F.col("revenue").desc(), F.col("p_brand"))
-        .limit(10)
-    )
-
-
-Q14_SQL = """
-SELECT p_brand,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(25,4)) * (CAST(1 AS DECIMAL(25,4)) - CAST(l_discount AS DECIMAL(25,4)))) AS DOUBLE) AS revenue,
-       count(*) AS n_items
-FROM lineitem JOIN part ON l_partkey = p_partkey
-GROUP BY p_brand
-ORDER BY revenue DESC, p_brand
-LIMIT 10
-"""
-
-
-def semi_join_exists(spark, sf_dir):
-    """TPC-H Q4-style EXISTS: orders having at least one big lineitem,
-    counted by priority.  Spark plans left_semi as a broadcast/shuffled
-    semi join — the probe side never duplicates rows."""
-    orders = _t(spark, sf_dir, "orders")
-    big = _t(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 45)
-    return (
-        orders.join(big, orders.o_orderkey == big.l_orderkey, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-        .orderBy("o_orderpriority")
-    )
-
-
-SEMI_JOIN_SQL = """
-SELECT o_orderpriority, count(*) AS n_orders
-FROM orders
-WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey AND l_quantity > 45)
-GROUP BY o_orderpriority
-ORDER BY o_orderpriority
-"""
-
-
-def anti_join(spark, sf_dir):
-    """Anti join: lapsed customers — no order since 2001 — per nation
-    (left_anti with the filter applied to the build side before the
-    join, so the anti-join probe stays small)."""
-    cust = _t(spark, sf_dir, "customer")
-    recent = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") >= F.lit("2001-01-01").cast("timestamp")
-    )
-    return (
-        cust.join(recent, cust.c_custkey == recent.o_custkey, "left_anti")
-        .groupBy("c_nationkey")
-        .agg(F.count(F.lit(1)).alias("n_lapsed"))
-        .orderBy("c_nationkey")
-    )
-
-
-ANTI_JOIN_SQL = """
-SELECT c_nationkey, count(*) AS n_lapsed
-FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders
-                  WHERE o_custkey = c_custkey
-                    AND o_orderdate >= TIMESTAMP '2001-01-01')
-GROUP BY c_nationkey
-ORDER BY c_nationkey
-"""
-
-
-def set_intersect(spark, sf_dir):
-    """Set operation: users who both clicked and purchased (INTERSECT —
-    Spark rewrites to a distinct + semi-join under the hood)."""
-    ev = _events(spark, sf_dir)
-    clickers = ev.filter(F.col("event_type") == "click").select("user_id")
-    buyers = ev.filter(F.col("event_type") == "purchase").select("user_id")
-    return clickers.intersect(buyers).orderBy("user_id")
-
-
-SET_INTERSECT_SQL = """
-SELECT user_id FROM events WHERE event_type = 'click'
-INTERSECT
-SELECT user_id FROM events WHERE event_type = 'purchase'
-ORDER BY user_id
-"""
-
-
-def rollup_pricing(spark, sf_dir):
-    """Multi-level aggregation: ROLLUP over (returnflag, linestatus)
-    with grouping indicators — subtotals and the grand total in one
-    pass (Spark expands grouping sets before the hash aggregate)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.count(F.lit(1)).alias("n_items"),
-            F.sum(_dec("l_quantity")).cast("double").alias("sum_qty"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
-            "n_items",
-            "sum_qty",
-        )
-        .orderBy("returnflag", "linestatus")
-    )
-
-
-ROLLUP_SQL = """
-SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-       coalesce(l_linestatus, 'ALL') AS linestatus,
-       count(*) AS n_items,
-       CAST(sum(CAST(l_quantity AS DECIMAL(25,4))) AS DOUBLE) AS sum_qty
-FROM lineitem
-GROUP BY ROLLUP (l_returnflag, l_linestatus)
-ORDER BY returnflag, linestatus
-"""
-
-
-def topk_per_group(spark, sf_dir):
-    """Top-k per group: the 3 highest-revenue customers per nation via
-    a ranking window partitioned by nation (shuffle on the partition
-    key only — never a global sort)."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    spend = (
-        orders.groupBy("o_custkey")
-        .agg(F.sum(_dec("o_totalprice")).alias("spend"))
-    )
-    w = Window.partitionBy("c_nationkey").orderBy(
-        F.col("spend").desc(), F.col("c_custkey").asc()
-    )
-    return (
-        cust.join(spend, cust.c_custkey == spend.o_custkey)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select(
-            "c_nationkey", "rank", "c_custkey", F.col("spend").cast("double").alias("spend")
-        )
-        .orderBy("c_nationkey", "rank")
-    )
-
-
-TOPK_PER_GROUP_SQL = """
-WITH spend AS (
-  SELECT o_custkey, sum(CAST(o_totalprice AS DECIMAL(25,4))) AS spend
-  FROM orders GROUP BY o_custkey
-), ranked AS (
-  SELECT c_nationkey, c_custkey, spend,
-         row_number() OVER (PARTITION BY c_nationkey ORDER BY spend DESC, c_custkey ASC) AS rank
-  FROM customer JOIN spend ON c_custkey = o_custkey
-)
-SELECT c_nationkey, rank, c_custkey, CAST(spend AS DOUBLE) AS spend
-FROM ranked WHERE rank <= 3
-ORDER BY c_nationkey, rank
-"""
-
-
-def q18_large_orders(spark, sf_dir):
-    """TPC-H Q18-style HAVING: orders whose total quantity exceeds 120,
-    joined back to customers.  The HAVING filter runs on the aggregate
-    before the (small) result joins the dimension."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum(_dec("l_quantity")).alias("total_qty"))
-        .filter(F.col("total_qty") > 120)
-    )
-    return (
-        big.join(orders, big.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .select(
-            "c_custkey",
-            "o_orderkey",
-            F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias("o_orderdate_us"),
-            F.col("total_qty").cast("double").alias("total_qty"),
-        )
-        .orderBy(F.col("total_qty").desc(), F.col("o_orderkey"))
-        .limit(50)
-    )
-
-
-Q18_SQL = """
-SELECT c_custkey, o_orderkey, epoch_us(o_orderdate) AS o_orderdate_us,
-       CAST(total_qty AS DOUBLE) AS total_qty
-FROM (
-  SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(25,4))) AS total_qty
-  FROM lineitem GROUP BY l_orderkey HAVING sum(CAST(l_quantity AS DECIMAL(25,4))) > 120
-) big
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-ORDER BY total_qty DESC, o_orderkey
-LIMIT 50
-"""
-
-
-def above_nation_avg(spark, sf_dir):
-    """Decorrelated 'greater than group average': customers whose
-    account balance beats their nation's mean — the correlated scalar
-    subquery expressed as a broadcast join against the tiny per-nation
-    aggregate (never a per-row subquery execution)."""
-    cust = _t(spark, sf_dir, "customer")
-    nation_avg = cust.groupBy("c_nationkey").agg(
-        (F.sum(_dec("c_acctbal")) / F.count(F.lit(1)))
-        .cast("decimal(25,6)")
-        .alias("nation_avg")
-    )
-    return (
-        cust.join(F.broadcast(nation_avg), "c_nationkey")
-        .filter(_dec("c_acctbal", 6) > F.col("nation_avg"))
-        .groupBy("c_nationkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_above"),
-            F.max(_dec("c_acctbal")).cast("double").alias("max_bal"),
-        )
-        .orderBy("c_nationkey")
-    )
-
-
-ABOVE_AVG_SQL = """
-WITH nation_avg AS (
-  SELECT c_nationkey,
-         CAST(sum(CAST(c_acctbal AS DECIMAL(25,4))) / count(*) AS DECIMAL(25,6)) AS nation_avg
-  FROM customer GROUP BY c_nationkey
-)
-SELECT c.c_nationkey, count(*) AS n_above,
-       CAST(max(CAST(c_acctbal AS DECIMAL(25,4))) AS DOUBLE) AS max_bal
-FROM customer c JOIN nation_avg a ON c.c_nationkey = a.c_nationkey
-WHERE CAST(c_acctbal AS DECIMAL(25,6)) > nation_avg
-GROUP BY c.c_nationkey
-ORDER BY c.c_nationkey
-"""
-
-
-def json_extract_agg(spark, sf_dir):
-    """Semi-structured extraction: pull an integer field out of the
-    events JSON ``props`` column (JVM-side get_json_object, no UDF) and
-    aggregate it exactly per event type."""
-    ev = _events(spark, sf_dir)
-    k = F.get_json_object(F.col("props"), "$.k").cast("long")
-    return (
-        ev.select("event_type", k.alias("k"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("k").alias("k_sum"),
-            F.min("k").alias("k_min"),
-            F.max("k").alias("k_max"),
-        )
-        .orderBy("event_type")
-    )
-
-
-JSON_EXTRACT_SQL = """
-SELECT event_type, count(*) AS n,
-       CAST(sum(CAST(props ->> 'k' AS BIGINT)) AS BIGINT) AS k_sum,
-       min(CAST(props ->> 'k' AS BIGINT)) AS k_min,
-       max(CAST(props ->> 'k' AS BIGINT)) AS k_max
-FROM events
-GROUP BY event_type
-ORDER BY event_type
-"""
-
-
-_EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
-
-def pivot_event_counts(spark, sf_dir):
-    """Pivot: per-user event-type counts as columns (groupBy().pivot()
-    with an explicit value list — no extra pass to discover keys, and
-    the aggregate stays a single shuffle)."""
-    ev = _events(spark, sf_dir)
-    return (
-        ev.groupBy("user_id")
-        .pivot("event_type", _EVENT_TYPES)
-        .agg(F.count(F.lit(1)))
-        .na.fill(0)
-        .orderBy("user_id")
-    )
-
-
-PIVOT_SQL = """
-SELECT user_id,
-       count(*) FILTER (WHERE event_type = 'click') AS click,
-       count(*) FILTER (WHERE event_type = 'error') AS error,
-       count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
-       count(*) FILTER (WHERE event_type = 'signup') AS signup,
-       count(*) FILTER (WHERE event_type = 'view') AS view
-FROM events GROUP BY user_id ORDER BY user_id
-"""
-
-
-# ===========================================================================
-# Reference operator demonstrations (SURVEY §2) over the driver tables
-# ===========================================================================
-
-def proj_rename(spark, sf_dir):
-    """P1 projection+rename (+derived column), the reference's
-    pre->efferent rename pattern (parquet_writer.cpp:189-243)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.select(
-        F.col("l_orderkey").alias("order_id"),
-        F.col("l_partkey").alias("part_id"),
-        F.col("l_linenumber").alias("line_no"),
-        (_dec("l_extendedprice") * (F.lit(1).cast("decimal(25,4)") - _dec("l_discount")))
-        .cast("double")
-        .alias("net_price"),
-    )
-
-
-PROJ_RENAME_SQL = """
-SELECT l_orderkey AS order_id, l_partkey AS part_id, l_linenumber AS line_no,
-       CAST(CAST(l_extendedprice AS DECIMAL(25,4)) * (CAST(1 AS DECIMAL(25,4)) - CAST(l_discount AS DECIMAL(25,4))) AS DOUBLE) AS net_price
-FROM lineitem
-"""
-
-
-def array_flatten(spark, sf_dir):
-    """P2 array flatten: embedding[0..2] -> x/y/z scalars
-    (parquet_writer.cpp:225-242)."""
-    e = _t(spark, sf_dir, "embeddings")
-    return e.select(
-        "vec_id",
-        F.round(F.col("embedding")[0].cast("double"), 6).alias("x"),
-        F.round(F.col("embedding")[1].cast("double"), 6).alias("y"),
-        F.round(F.col("embedding")[2].cast("double"), 6).alias("z"),
-        F.size("embedding").alias("dim"),
-    )
-
-
-ARRAY_FLATTEN_SQL = """
-SELECT vec_id,
-       round(CAST(embedding[1] AS DOUBLE), 6) AS x,
-       round(CAST(embedding[2] AS DOUBLE), 6) AS y,
-       round(CAST(embedding[3] AS DOUBLE), 6) AS z,
-       len(embedding) AS dim
-FROM embeddings
-"""
-
-
-def bitfield_unpack(spark, sf_dir):
-    """P3 bit-field unpack, the branch_type nibble pattern
-    (parquet_writer.h:63-69) applied to event ids."""
-    ev = _events(spark, sf_dir)
-    return ev.select(
-        "event_id",
-        (F.shiftright(F.col("event_id"), 4).bitwiseAND(0xF) + 1).alias("hi_nibble"),
-        (F.col("event_id").bitwiseAND(0xF) + 1).alias("lo_nibble"),
-    )
-
-
-BITFIELD_UNPACK_SQL = """
-SELECT event_id,
-       ((event_id // 16) & 15) + 1 AS hi_nibble,
-       (event_id & 15) + 1 AS lo_nibble
-FROM events
-"""
-
-
-def derived_key(spark, sf_dir):
-    """P4 derived unique key: (gid << 24) + per-gid running index
-    (touch_reader.cpp:275-287), gid=user_id, order=(ts, event_id)."""
-    ev = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.select(
-        "event_id",
-        "user_id",
-        (
-            F.col("user_id").cast("long") * F.lit(1 << 24).cast("long")
-            + F.row_number().over(w)
-            - 1
-        ).alias("synthetic_key"),
-    )
-
-
-DERIVED_KEY_SQL = """
-SELECT event_id, user_id,
-       user_id * 16777216 + row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS synthetic_key
-FROM events
-"""
-
-
-def validation_filter(spark, sf_dir):
-    """P6 validation predicates as a data-quality report (the engine
-    raises on violations in the conversion path; here: count them)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.select(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.when((F.col("l_discount") < 0) | (F.col("l_discount") > 1), 1).otherwise(0)).alias("bad_discount"),
-        F.sum(F.when(F.col("l_quantity") <= 0, 1).otherwise(0)).alias("bad_quantity"),
-        F.sum(F.when(F.col("l_tax") < 0, 1).otherwise(0)).alias("bad_tax"),
-    )
-
-
-VALIDATION_FILTER_SQL = """
-SELECT count(*) AS n_rows,
-       CAST(sum(CASE WHEN l_discount < 0 OR l_discount > 1 THEN 1 ELSE 0 END) AS BIGINT) AS bad_discount,
-       CAST(sum(CASE WHEN l_quantity <= 0 THEN 1 ELSE 0 END) AS BIGINT) AS bad_quantity,
-       CAST(sum(CASE WHEN l_tax < 0 THEN 1 ELSE 0 END) AS BIGINT) AS bad_tax
-FROM lineitem
-"""
-
-
-def limit_n(spark, sf_dir):
-    """L1 deterministic limit (order fixed before the cut,
-    touch2parquet.cpp:47)."""
-    ev = _events(spark, sf_dir)
-    return (
-        ev.select("event_id", "user_id", "event_type")
-        .orderBy("event_id")
-        .limit(20)
-    )
-
-
-LIMIT_N_SQL = """
-SELECT event_id, user_id, event_type FROM events ORDER BY event_id LIMIT 20
-"""
-
-
-def count_sum(spark, sf_dir):
-    """A1 global count/sum (parquet2hdf5.cpp:89-95)."""
-    ev = _events(spark, sf_dir)
-    return ev.select(
-        F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct("user_id").alias("n_users"),
-        F.sum(_dec("value", 6)).cast("double").alias("value_sum"),
-    )
-
-
-COUNT_SUM_SQL = """
-SELECT count(*) AS n_events,
-       count(DISTINCT user_id) AS n_users,
-       CAST(sum(CAST(value AS DECIMAL(25,6))) AS DOUBLE) AS value_sum
-FROM events
-"""
-
-
-def global_max(spark, sf_dir):
-    """A2 node-count inference: max(id)+1 (index.cpp:208-213)."""
-    ev = _events(spark, sf_dir)
-    return ev.select((F.max("user_id") + 1).alias("node_count"))
-
-
-GLOBAL_MAX_SQL = "SELECT max(user_id) + 1 AS node_count FROM events"
-
-
 def prefix_sum(spark, sf_dir):
     """A3 distributed prefix sum: running revenue by order day
     (parquet2hdf5.cpp:97-110 as a window cumsum)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     daily = (
         orders.groupBy(F.date_trunc("day", F.col("o_orderdate").cast("timestamp")).alias("day"))
         .agg(F.sum(_dec("o_totalprice")).alias("day_total"))
@@ -877,122 +197,6 @@ SELECT epoch_us(CAST(day AS TIMESTAMP)) AS day_us,
        CAST(day_total AS DOUBLE) AS day_total,
        CAST(sum(day_total) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_total
 FROM daily
-"""
-
-
-def inter_event_gaps(spark, sf_dir):
-    """lag() window: per-user inter-event gap statistics (seconds
-    between consecutive events) — the time-series profiling primitive;
-    partitioned window, exact integer math."""
-    ev = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-    return (
-        ev.select("user_id", gap.alias("gap_us"))
-        .filter(F.col("gap_us").isNotNull())
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_gaps"),
-            F.sum("gap_us").alias("gap_sum_us"),
-            F.max("gap_us").alias("gap_max_us"),
-        )
-        .orderBy("user_id")
-    )
-
-
-INTER_EVENT_GAPS_SQL = """
-SELECT user_id, count(*) AS n_gaps,
-       CAST(sum(gap_us) AS BIGINT) AS gap_sum_us, max(gap_us) AS gap_max_us
-FROM (
-  SELECT user_id,
-         epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) AS gap_us
-  FROM events
-)
-WHERE gap_us IS NOT NULL
-GROUP BY user_id ORDER BY user_id
-"""
-
-
-def moving_avg_7d(spark, sf_dir):
-    """Frame-based window: 7-row trailing moving average over daily
-    order revenue (ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)."""
-    orders = _t(spark, sf_dir, "orders")
-    daily = orders.groupBy(
-        F.date_trunc("day", F.col("o_orderdate").cast("timestamp")).alias("day")
-    ).agg(F.sum(_dec("o_totalprice")).alias("day_total"))
-    w = Window.orderBy("day").rowsBetween(-6, Window.currentRow)
-    return daily.select(
-        F.unix_micros("day").alias("day_us"),
-        F.col("day_total").cast("double").alias("day_total"),
-        (F.sum("day_total").over(w) / F.count(F.lit(1)).over(w))
-        .cast("decimal(25,6)")
-        .cast("double")
-        .alias("avg_7d"),
-    )
-
-
-MOVING_AVG_SQL = """
-WITH daily AS (
-  SELECT date_trunc('day', o_orderdate) AS day,
-         sum(CAST(o_totalprice AS DECIMAL(25,4))) AS day_total
-  FROM orders GROUP BY 1
-)
-SELECT epoch_us(CAST(day AS TIMESTAMP)) AS day_us,
-       CAST(day_total AS DOUBLE) AS day_total,
-       CAST(CAST(sum(day_total) OVER w / count(*) OVER w AS DECIMAL(25,6)) AS DOUBLE) AS avg_7d
-FROM daily
-WINDOW w AS (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-"""
-
-
-def decile_counts(spark, sf_dir):
-    """ntile ranking: customers bucketed into account-balance deciles,
-    with per-decile count and balance span (exact decimal bounds).
-
-    Scale path: ``ntile(10) OVER (ORDER BY ...)`` with no PARTITION BY
-    serializes the whole table through ONE task, so instead we compute
-    a distributed global rank (repartitionByRange + per-partition
-    row_number + broadcast partition-count prefix sum — the
-    ``_global_rank`` pattern) and apply SQL ntile's exact tile-size
-    rule (first ``n % k`` tiles get ``n//k + 1`` rows) as a literal
-    expression.  Because (c_acctbal, c_custkey) is a total order, the
-    assignment is deterministic and bit-identical to the ntile window
-    the DuckDB oracle runs."""
-    from parquet_converters_spark.operators.indexing import _global_rank
-
-    cust = _t(spark, sf_dir, "customer").select("c_acctbal", "c_custkey")
-    n = cust.count()
-    k = 10
-    q, rem = n // k, n % k
-    ranked = _global_rank(cust, ["c_acctbal", "c_custkey"], "_r")
-    if q == 0:
-        decile = (F.col("_r") + 1).cast("int")
-    else:
-        decile = (
-            F.when(F.col("_r") < rem * (q + 1), F.col("_r") / (q + 1))
-            .otherwise(rem + (F.col("_r") - rem * (q + 1)) / q)
-            .cast("int")
-            + 1
-        )
-    return (
-        ranked.withColumn("decile", decile)
-        .groupBy("decile")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(_dec("c_acctbal")).cast("double").alias("bal_lo"),
-            F.max(_dec("c_acctbal")).cast("double").alias("bal_hi"),
-        )
-        .orderBy("decile")
-    )
-
-
-DECILE_SQL = """
-SELECT decile, count(*) AS n,
-       CAST(min(CAST(c_acctbal AS DECIMAL(25,4))) AS DOUBLE) AS bal_lo,
-       CAST(max(CAST(c_acctbal AS DECIMAL(25,4))) AS DOUBLE) AS bal_hi
-FROM (SELECT c_acctbal, ntile(10) OVER (ORDER BY c_acctbal ASC, c_custkey ASC) AS decile
-      FROM customer)
-GROUP BY decile ORDER BY decile
 """
 
 
@@ -1028,101 +232,12 @@ def run_length_scan(spark, sf_dir):
     ).orderBy("node_id", "range_start")
 
 
-def interval_merge(spark, sf_dir):
-    """G4 per-key interval merge: overlapping 30-day order windows per
-    customer collapse into maximal covered intervals
-    (index.cpp:142-153 generalized to time)."""
-    orders = _t(spark, sf_dir, "orders")
-    iv = orders.select(
-        "o_custkey",
-        F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias("lo"),
-        (F.unix_micros(F.col("o_orderdate").cast("timestamp")) + F.lit(30 * 86400_000_000)).alias("hi"),
-    )
-    w = Window.partitionBy("o_custkey").orderBy("lo", "hi")
-    running_max = F.max("hi").over(w.rowsBetween(Window.unboundedPreceding, -1))
-    flagged = iv.withColumn(
-        "_new", F.when(running_max.isNull() | (F.col("lo") > running_max), 1).otherwise(0)
-    ).withColumn(
-        "_grp",
-        F.sum("_new").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-    )
-    return (
-        flagged.groupBy("o_custkey", "_grp")
-        .agg(F.min("lo").alias("interval_lo"), F.max("hi").alias("interval_hi"))
-        .drop("_grp")
-        .orderBy("o_custkey", "interval_lo")
-    )
-
-
-INTERVAL_MERGE_SQL = """
-WITH iv AS (
-  SELECT o_custkey, epoch_us(o_orderdate) AS lo,
-         epoch_us(o_orderdate) + 30*86400000000 AS hi
-  FROM orders
-), flagged AS (
-  SELECT o_custkey, lo, hi,
-         CASE WHEN max(hi) OVER (PARTITION BY o_custkey ORDER BY lo, hi
-                                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) IS NULL
-                   OR lo > max(hi) OVER (PARTITION BY o_custkey ORDER BY lo, hi
-                                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-              THEN 1 ELSE 0 END AS _new
-  FROM iv
-), grouped AS (
-  SELECT o_custkey, lo, hi,
-         sum(_new) OVER (PARTITION BY o_custkey ORDER BY lo, hi
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS _grp
-  FROM flagged
-)
-SELECT o_custkey, min(lo) AS interval_lo, max(hi) AS interval_hi
-FROM grouped GROUP BY o_custkey, _grp
-ORDER BY o_custkey, interval_lo
-"""
-
-
-def dense_left_join(spark, sf_dir):
-    """G5 dense left join vs a generated id domain: every nationkey in
-    [0,25) gets a row, missing -> 0 (index.cpp:282-299, the reference's
-    only join)."""
-    cust = _t(spark, sf_dir, "customer")
-    per_nation = cust.groupBy("c_nationkey").agg(F.count(F.lit(1)).alias("n_customers"))
-    return (
-        spark.range(25)
-        .withColumnRenamed("id", "nation_id")
-        .join(per_nation, F.col("nation_id") == F.col("c_nationkey"), "left")
-        .na.fill({"n_customers": 0})
-        .select("nation_id", "n_customers")
-        .orderBy("nation_id")
-    )
-
-
-DENSE_LEFT_JOIN_SQL = """
-SELECT r.range AS nation_id, coalesce(n.n_customers, 0) AS n_customers
-FROM range(25) r
-LEFT JOIN (SELECT c_nationkey, count(*) AS n_customers FROM customer GROUP BY 1) n
-  ON r.range = n.c_nationkey
-ORDER BY nation_id
-"""
-
-
-# The two adjacency flagship queries share one index build: the RLE +
-# global-rank intermediate is persisted inside build_adjacency_index, so
-# caching the output pair per (application, sf_dir) means the second
-# query reuses the materialized ranges instead of recomputing the scan.
-_ADJ_INDEX_CACHE: dict[tuple[str, str], tuple] = {}
-
-
 def _adjacency_index(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ADJ_INDEX_CACHE:
-        ev = _events(spark, sf_dir).select(
-            F.col("user_id").alias("source_node_id"),
-            F.col("event_id").alias("row_index"),
-        )
-        _ADJ_INDEX_CACHE.clear()  # one live entry: don't pin old persists
-        _ADJ_INDEX_CACHE[key] = build_adjacency_index(
-            ev, "source_node_id", row_col="row_index", method="scan"
-        )
-    return _ADJ_INDEX_CACHE[key]
+    ev = _events(spark, sf_dir).select(
+        F.col("user_id").alias("source_node_id"),
+        F.col("event_id").alias("row_index"),
+    )
+    return build_adjacency_index(ev, "source_node_id")
 
 
 def adjacency_node_ranges(spark, sf_dir):
@@ -1156,7 +271,7 @@ ORDER BY d.node_id
 
 def adjacency_range_to_edge(spark, sf_dir):
     """G1-G6 flagship (range side): globally numbered node-major edge
-    ranges (shares the cached index build with adjacency_node_ranges)."""
+    ranges."""
     _, range_edges = _adjacency_index(spark, sf_dir)
     return range_edges.orderBy("range_id")
 
@@ -1181,8 +296,7 @@ ORDER BY range_id
 # ===========================================================================
 
 def dedup_exact(spark, sf_dir):
-    # spread=False: doc-level md5 is cheap; measured +0.24 s with spread
-    docs = _t(spark, sf_dir, "documents", spread=False)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return exact_dedup(docs).orderBy("content_hash")
 
 
@@ -1197,7 +311,7 @@ def dedup_minhash_sig(spark, sf_dir):
     """MinHash signatures, exported with the array column joined to a
     scalar string (the driver's canonicalizer sorts pandas columns and
     cannot hash list cells)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     sig = minhash_signatures(docs, num_hashes=8)
     return sig.select(
         "doc_id",
@@ -1238,43 +352,13 @@ DEDUP_MINHASH_SIG_SQL = (
 
 
 
-# Shared dedup intermediates: five queries (LSH pairs, pipeline pairs,
-# clusters x2, survivors) derive from the same candidate sets — a real
-# pipeline materializes candidates once and fans out.  Cached per
-# (application, sf_dir) like the adjacency index; localCheckpoint
-# materializes on first action and cuts the iterated lineage.
-_DEDUP_CACHE: dict[tuple, object] = {}
-
-
-def _dedup_cached(spark, sf_dir, kind):
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    if key not in _DEDUP_CACHE:
-        if any(k[:2] != key[:2] for k in _DEDUP_CACHE):
-            _DEDUP_CACHE.clear()  # new session/sf: drop pinned checkpoints
-        docs = _t(spark, sf_dir, "documents")
-        if kind == "docs_pairs":
-            _DEDUP_CACHE[key] = minhash_lsh_pairs(
-                docs, num_hashes=8, bands=4
-            ).localCheckpoint(eager=False)
-        elif kind == "simhash":
-            _DEDUP_CACHE[key] = simhash(docs, bits=32).localCheckpoint(
-                eager=False
-            )
-        elif kind == "survivors":  # an eager checkpoint, pinned once
-            _DEDUP_CACHE[key] = near_dedup_survivors(
-                docs, precomputed=_dedup_cached(spark, sf_dir, "pipeline")
-            )
-        else:  # pipeline: (groups, pairs) over exact-dedup representatives
-            groups, pairs = near_dedup_pipeline(docs, num_hashes=8, bands=4)
-            _DEDUP_CACHE[key] = (
-                groups.localCheckpoint(eager=False),
-                pairs.localCheckpoint(eager=False),
-            )
-    return _DEDUP_CACHE[key]
+def _lsh_pairs(spark, sf_dir):
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return minhash_lsh_pairs(docs, num_hashes=8, bands=4)
 
 
 def dedup_minhash_lsh(spark, sf_dir):
-    return _dedup_cached(spark, sf_dir, "docs_pairs").orderBy("id_a", "id_b")
+    return _lsh_pairs(spark, sf_dir).orderBy("id_a", "id_b")
 
 
 DEDUP_MINHASH_LSH_SQL = (
@@ -1298,7 +382,7 @@ def dedup_components(spark, sf_dir):
     closure in DuckDB over the identical pair set."""
     from parquet_converters_spark.operators.graph import connected_components
 
-    pairs = _dedup_cached(spark, sf_dir, "docs_pairs")
+    pairs = _lsh_pairs(spark, sf_dir)
     return (
         connected_components(pairs)
         .select(F.col("node").alias("doc_id"), F.col("component").alias("component_id"))
@@ -1331,7 +415,8 @@ def dedup_pipeline(spark, sf_dir):
     """Scale-safe composition: exact dedup collapses identical texts to
     min-id representatives BEFORE the LSH candidate join (a d-sized
     exact-dup group otherwise emits d(d-1)/2 candidates per band)."""
-    _groups, pairs = _dedup_cached(spark, sf_dir, "pipeline")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    _groups, pairs = near_dedup_pipeline(docs, num_hashes=8, bands=4)
     return pairs.orderBy("id_a", "id_b")
 
 
@@ -1352,7 +437,8 @@ ORDER BY id_a, id_b
 
 
 def dedup_simhash(spark, sf_dir):
-    return _dedup_cached(spark, sf_dir, "simhash").orderBy("doc_id")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return simhash(docs, bits=32).orderBy("doc_id")
 
 
 def _sql_simhash(bits: int = 32) -> str:
@@ -1372,7 +458,7 @@ DEDUP_SIMHASH_SQL = _sql_simhash()
 
 
 def dedup_ngram_jaccard(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return ngram_jaccard_pairs(
         docs, group_col="lang", n=3, threshold=0.2
     ).select(
@@ -1401,809 +487,25 @@ ORDER BY id_a, id_b
 
 def sim_cosine_topk(spark, sf_dir, emb=None):
     if emb is None:
-        emb = _t(spark, sf_dir, "embeddings")
+        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 5)
     return cosine_topk(emb, queries, k=5).orderBy("query_id", "rank")
 
 
-SIM_COSINE_TOPK_SQL = """
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
-scored AS (
-  SELECT q.query_id, e.vec_id AS neighbor_id,
-         round(list_cosine_similarity(CAST(q.qv AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])), 6) AS cosine
-  FROM q JOIN embeddings e ON e.vec_id != q.query_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, rank, neighbor_id, cosine FROM ranked WHERE rank <= 5
-ORDER BY query_id, rank
-"""
-
-
 def sim_lsh_ann(spark, sf_dir, emb=None):
     if emb is None:
-        emb = _t(spark, sf_dir, "embeddings")
+        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 5)
     return lsh_bucket_ann(emb, queries, k=5, num_planes=8, dim=_EMB_DIM).orderBy(
         "query_id", "rank"
     )
 
 
-def sim_lsh_ann_bcast(spark, sf_dir):
-    """LSH ANN with hyperplanes shipped as broadcast data instead of
-    plan literals (real-dimensionality scale path); identical results
-    and oracle as sim_lsh_ann."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    return lsh_bucket_ann(
-        emb, queries, k=5, num_planes=8, dim=_EMB_DIM, plane_mode="broadcast"
-    ).orderBy("query_id", "rank")
-
-
-def _sql_lsh_bucket(vec_expr: str, num_planes: int = 8, dim: int = _EMB_DIM) -> str:
-    planes = hyperplanes(num_planes, dim)
-    terms = []
-    for p, plane in enumerate(planes):
-        arr = "[" + ", ".join(str(x) for x in plane) + "]"
-        terms.append(
-            f"(CASE WHEN list_sum(list_transform(generate_series(1, {dim}), "
-            f"i -> CAST({vec_expr}[i] AS DOUBLE) * ({arr})[i])) >= 0 "
-            f"THEN CAST({1 << p} AS BIGINT) ELSE 0 END)"
-        )
-    return "(" + " + ".join(terms) + ")"
-
-
-SIM_LSH_ANN_SQL = f"""
-WITH b AS (
-  SELECT vec_id, embedding, {_sql_lsh_bucket('embedding')} AS bucket
-  FROM embeddings
-), q AS (SELECT vec_id AS query_id, embedding AS qv, bucket FROM b WHERE vec_id < 5),
-scored AS (
-  SELECT q.query_id, e.vec_id AS neighbor_id,
-         round(list_cosine_similarity(CAST(q.qv AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])), 6) AS cosine
-  FROM q JOIN b e ON e.bucket = q.bucket AND e.vec_id != q.query_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, rank, neighbor_id, cosine FROM ranked WHERE rank <= 5
-ORDER BY query_id, rank
-"""
-
-
-def sim_ivf_ann(spark, sf_dir):
-    """IVF approximate nearest neighbors: corpus partitioned into
-    inverted lists by nearest (deterministic) centroid; queries probe
-    their 2 closest cells only."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    return ivf_topk(emb, queries, k=5, num_cells=8, nprobe=2, dim=_EMB_DIM).orderBy(
-        "query_id", "rank"
-    )
-
-
-def sim_ivf_ann_bcast(spark, sf_dir):
-    """IVF with the centroid matrix shipped as broadcast DATA instead of
-    plan literals — the form whose plan size is O(1) in cells x dim
-    (real-dimensionality scale path).  Bit-identical results to
-    sim_ivf_ann; same oracle."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    return ivf_topk(
-        emb, queries, k=5, num_cells=8, nprobe=2, dim=_EMB_DIM,
-        centroid_mode="broadcast",
-    ).orderBy("query_id", "rank")
-
-
-def _sql_ivf(num_cells: int = 8, nprobe: int = 2, dim: int = _EMB_DIM) -> str:
-    cens = ivf_centroids(num_cells, dim)
-    sims = ", ".join(
-        "list_cosine_similarity(CAST(embedding AS DOUBLE[]), ["
-        + ", ".join(str(x) for x in cen)
-        + "])"
-        for cen in cens
-    )
-    return f"""
-WITH sims AS (
-  SELECT vec_id, embedding, [{sims}] AS s FROM embeddings
-), assigned AS (
-  SELECT vec_id, embedding, list_position(s, list_max(s)) AS cell FROM sims
-), probe1 AS (
-  SELECT vec_id, embedding, s, list_position(s, list_max(s)) AS c1 FROM sims WHERE vec_id < 5
-), probe2 AS (
-  SELECT vec_id, embedding, c1,
-         list_position(s2, list_max(s2)) AS c2
-  FROM (SELECT vec_id, embedding, c1,
-               list_transform(generate_series(1, {num_cells}),
-                              i -> CASE WHEN i = c1 THEN -2.0 ELSE s[i] END) AS s2
-        FROM probe1) _p
-), q AS (
-  SELECT vec_id AS query_id, embedding AS qv, unnest([c1, c2]) AS cell FROM probe2
-), scored AS (
-  SELECT q.query_id, a.vec_id AS neighbor_id,
-         round(list_cosine_similarity(CAST(q.qv AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])), 6) AS cosine
-  FROM q JOIN assigned a ON a.cell = q.cell AND a.vec_id != q.query_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, rank, neighbor_id, cosine FROM ranked WHERE rank <= 5
-ORDER BY query_id, rank
-"""
-
-
-SIM_IVF_ANN_SQL = _sql_ivf()
-
-
-_PQ_SUB, _PQ_CODES, _PQ_NPROBE = 32, 256, 4
-
-
-def sim_ivfpq_ann(spark, sf_dir, emb=None):
-    """IVF-PQ approximate nearest neighbors (functions/similarity.py
-    ivf_pq_topk): corpus encoded once into 32 product-quantization
-    codes against DATA-SAMPLED codebooks (codeword c of subspace s =
-    subvector s of the c-th min-h32 corpus row — the exact-kmeans
-    init sample pattern, trivially replayable in SQL), queries probe
-    their 4 closest IVF cells and score candidates by ADC table
-    lookups — the memory-bound ANN path where codes, not vectors,
-    ride the probe join.  Measured mean recall@5 vs exact L2 at
-    sf0.01: ~0.64 (ann_recall_pq measures it continuously); the
-    md5-uniform codebooks of the first draft measured 0.0 — codebook
-    FIT is what makes PQ work (SCALE.md).  Per-subspace distance
-    arithmetic is a bit-identical left-assoc double chain in both
-    engines, so code assignment has NO rounding step; the final
-    ADC sum crosses engines through the round-6 convention."""
-    # r18: the corpus + query + codebook-sample branches share ONE
-    # materialized scan at bench layout (see _emb_shared) — plan was
-    # 2 spread exchanges on vec_id, now 1 scan feeding all branches.
-    if emb is None:
-        emb = _emb_shared(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < 5)
-    return ivf_pq_topk(
-        emb, queries, k=5, num_cells=8, nprobe=_PQ_NPROBE,
-        n_sub=_PQ_SUB, n_codes=_PQ_CODES, dim=_EMB_DIM,
-    ).orderBy("query_id", "rank")
-
-
-def _sql_ivfpq(
-    num_cells: int = 8,
-    nprobe: int = _PQ_NPROBE,
-    n_sub: int = _PQ_SUB,
-    n_codes: int = _PQ_CODES,
-    dim: int = _EMB_DIM,
-) -> str:
-    """Replay ivf_pq_topk in DuckDB, data-driven end to end: the
-    codebook sample is the same rank-by-(h32, id) slice, per-subspace
-    distances are the same left-assoc squared-diff chains
-    (bit-identical doubles -> identical argmin codes with no
-    rounding), the IVF cell/probe logic matches ivf_assign /
-    ivf_probe_cells (best-first, ties to the lower cell), and the ADC
-    score is the same n_sub-term sum under the round-6 convention.
-    Chained CTEs are AS MATERIALIZED (DuckDB inlines per-reference;
-    the 16M-row distance CTE is referenced twice)."""
-    sub_dim = dim // n_sub
-    h = SQL_H32.format(x="CAST(vec_id AS VARCHAR)")
-    dist = " + ".join(
-        f"(e.v[(g.s - 1) * {sub_dim} + {j + 1}] - "
-        f"s2.v[(g.s - 1) * {sub_dim} + {j + 1}]) * "
-        f"(e.v[(g.s - 1) * {sub_dim} + {j + 1}] - "
-        f"s2.v[(g.s - 1) * {sub_dim} + {j + 1}])"
-        for j in range(sub_dim)
-    )
-    cens = ivf_centroids(num_cells, dim)
-    sims = ", ".join(
-        "list_cosine_similarity(CAST(embedding AS DOUBLE[]), ["
-        + ", ".join(str(x) for x in cen)
-        + "])"
-        for cen in cens
-    )
-    return f"""
-WITH e AS MATERIALIZED (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-), samp AS MATERIALIZED (
-  SELECT c, v FROM (
-    SELECT v, row_number() OVER (ORDER BY h, vec_id) AS c
-    FROM (SELECT vec_id, v, {h} AS h FROM e)
-  ) WHERE c <= {n_codes}
-), cd AS MATERIALIZED (
-  SELECT e.vec_id, g.s, s2.c, {dist} AS d
-  FROM e, generate_series(1, {n_sub}) AS g(s), samp s2
-), codes AS MATERIALIZED (
-  SELECT vec_id, s, c FROM (
-    SELECT vec_id, s, c,
-           row_number() OVER (PARTITION BY vec_id, s
-                              ORDER BY d ASC, c ASC) AS rk
-    FROM cd
-  ) WHERE rk = 1
-), sims AS MATERIALIZED (
-  SELECT vec_id, [{sims}] AS s FROM embeddings
-), assigned AS MATERIALIZED (
-  SELECT vec_id, list_position(s, list_max(s)) AS cell FROM sims
-), qcells AS MATERIALIZED (
-  SELECT vec_id, cell FROM (
-    SELECT vec_id, g.i AS cell,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY s[g.i] DESC, g.i ASC) AS rk
-    FROM sims, generate_series(1, {num_cells}) AS g(i)
-    WHERE vec_id < 5
-  ) WHERE rk <= {nprobe}
-), scored AS (
-  SELECT qc.vec_id AS query_id, a.vec_id AS neighbor_id,
-         round(sum(ql.d), 6) AS adc_d2
-  FROM qcells qc
-  JOIN assigned a ON a.cell = qc.cell AND a.vec_id != qc.vec_id
-  JOIN codes cc ON cc.vec_id = a.vec_id
-  JOIN cd ql ON ql.vec_id = qc.vec_id AND ql.s = cc.s AND ql.c = cc.c
-  GROUP BY 1, 2
-), ranked AS (
-  SELECT query_id, neighbor_id, adc_d2,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY adc_d2 ASC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, rank, neighbor_id, adc_d2 FROM ranked WHERE rank <= 5
-ORDER BY query_id, rank
-"""
-
-
-SIM_IVFPQ_SQL = _sql_ivfpq()
-
-
-def sim_neardup_pairs(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
-    return embedding_neardup_pairs(emb, threshold=0.1, num_planes=8, dim=_EMB_DIM).orderBy(
-        "id_a", "id_b"
-    )
-
-
-SIM_NEARDUP_SQL = f"""
-WITH b AS (
-  SELECT vec_id, embedding, {_sql_lsh_bucket('embedding')} AS bucket
-  FROM embeddings
-)
-SELECT a.vec_id AS id_a, e.vec_id AS id_b,
-       round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])), 6) AS cosine
-FROM b a JOIN b e ON a.bucket = e.bucket AND a.vec_id < e.vec_id
-WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])), 6) >= 0.1
-ORDER BY id_a, id_b
-"""
-
-
-# ===========================================================================
-# Text analysis
-# ===========================================================================
-
-def text_token_count(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        token_count("text").alias("n_tokens"),
-        F.size(F.array_distinct(tokens("text"))).alias("n_distinct_tokens"),
-    ).orderBy("doc_id")
-
-
-TEXT_TOKEN_COUNT_SQL = f"""
-SELECT doc_id,
-       len({SQL_TOKENS.format(col='text')}) AS n_tokens,
-       len(list_distinct({SQL_TOKENS.format(col='text')})) AS n_distinct_tokens
-FROM documents ORDER BY doc_id
-"""
-
-
-def text_language_id(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select("doc_id", language_id("text").alias("lang_id")).orderBy("doc_id")
-
-
-def _sql_language_id() -> str:
-    toks = f"list_distinct({SQL_TOKENS.format(col='text')})"
-    langs = sorted(STOPWORDS)
-    scores = {
-        lang: f"len(list_intersect(toks, {STOPWORDS[lang]!r}))".replace("'", "'")
-        for lang in langs
-    }
-    score_exprs = ", ".join(
-        f"len(list_intersect(toks, ["
-        + ", ".join(f"'{w}'" for w in STOPWORDS[lang])
-        + f"])) AS s_{lang}"
-        for lang in langs
-    )
-    best = "greatest(" + ", ".join(f"s_{lang}" for lang in langs) + ")"
-    case = "CASE WHEN " + f"{best} = 0 THEN 'und' "
-    for lang in langs:
-        case += f"WHEN s_{lang} = {best} THEN '{lang}' "
-    case += "ELSE 'und' END"
-    return (
-        f"SELECT doc_id, {case} AS lang_id "
-        f"FROM (SELECT doc_id, {score_exprs} "
-        f"FROM (SELECT doc_id, {toks} AS toks FROM documents) _t) _s ORDER BY doc_id"
-    ), case, score_exprs, toks
-
-
-(
-    TEXT_LANGUAGE_ID_SQL,
-    _SQL_LANG_CASE,
-    _SQL_LANG_SCORES,
-    _SQL_LANG_TOKS,
-) = _sql_language_id()
-
-LANG_CONFUSION_SQL = f"""
-WITH detected AS (
-  SELECT lang AS declared, {_SQL_LANG_CASE} AS detected
-  FROM (SELECT lang, {_SQL_LANG_SCORES}
-        FROM (SELECT lang, {_SQL_LANG_TOKS} AS toks FROM documents) _t) _s
-)
-SELECT declared, detected, count(*) AS n
-FROM detected GROUP BY declared, detected
-ORDER BY declared, detected
-"""
-
-
 def text_quality(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return docs.select(
         "doc_id", F.round(quality_score("text"), 6).alias("quality")
     ).orderBy("doc_id")
-
-
-_EN_STOP_SQL = "[" + ", ".join(f"'{w}'" for w in STOPWORDS["en"]) + "]"
-
-TEXT_QUALITY_SQL = f"""
-SELECT doc_id,
-  round(
-    (CASE WHEN length(text) BETWEEN 50 AND 10000 THEN 0.25 ELSE 0.0 END)
-    + (CASE WHEN CAST(length(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g')) AS DOUBLE)
-            / greatest(length(text), 1) >= 0.8 THEN 0.25 ELSE 0.0 END)
-    + (CASE WHEN CAST(list_sum(list_transform(toks, t -> length(t))) AS DOUBLE)
-            / greatest(len(toks), 1) BETWEEN 3 AND 10 THEN 0.25 ELSE 0.0 END)
-    + (CASE WHEN len(list_intersect(toks, {_EN_STOP_SQL})) >= 2 THEN 0.25 ELSE 0.0 END)
-  , 6)::DOUBLE AS quality
-FROM (SELECT doc_id, text, {SQL_TOKENS.format(col='text')} AS toks FROM documents) _q
-ORDER BY doc_id
-"""
-
-
-def text_top_tokens(spark, sf_dir):
-    """Corpus-level token frequency top-20 (the canonical wordcount:
-    explode -> two-level hash aggregate with map-side partials; the
-    final top-k never sorts the full token table)."""
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        docs.select(F.explode(tokens("text")).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), F.col("token"))
-        .limit(20)
-    )
-
-
-TEXT_TOP_TOKENS_SQL = f"""
-SELECT token, count(*) AS n
-FROM (SELECT unnest({SQL_TOKENS.format(col='text')}) AS token FROM documents) _t
-GROUP BY token
-ORDER BY n DESC, token
-LIMIT 20
-"""
-
-#: Karp-Rabin style polynomial rolling hash constants (shared with the
-#: oracle): h = (h * B + token_hash) mod M, B and M < 2^31 so the
-#: intermediate product stays under 2^62.
-ROLLING_B = 1_000_003
-ROLLING_M = (1 << 31) - 1
-
-
-def text_rolling_hash(spark, sf_dir):
-    """Document fingerprint as a polynomial rolling hash over token
-    hashes (order-sensitive, unlike the bag-of-words simhash): one
-    fold over the token array, pure JVM arithmetic."""
-    from parquet_converters_spark.functions.dedup import h32
-
-    docs = _t(spark, sf_dir, "documents")
-    rolling = F.aggregate(
-        F.transform(tokens("text"), h32),
-        F.lit(0).cast("long"),
-        lambda acc, h: (acc * ROLLING_B + h) % ROLLING_M,
-    )
-    return docs.select("doc_id", rolling.alias("rolling_hash")).orderBy("doc_id")
-
-
-TEXT_ROLLING_HASH_SQL = f"""
-SELECT doc_id,
-       list_reduce(
-         list_prepend(CAST(0 AS BIGINT),
-                      list_transform({SQL_TOKENS.format(col='text')},
-                                     s -> {SQL_H32.format(x='s')})),
-         (acc, h) -> (acc * {ROLLING_B} + h) % {ROLLING_M}) AS rolling_hash
-FROM documents ORDER BY doc_id
-"""
-
-
-def text_fingerprint(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select("doc_id", doc_fingerprint("text").alias("fingerprint")).orderBy(
-        "doc_id"
-    )
-
-
-TEXT_FINGERPRINT_SQL = f"""
-SELECT doc_id, {SQL_H60.format(x='text')} AS fingerprint FROM documents ORDER BY doc_id
-"""
-
-
-# ===========================================================================
-# Multimodal + streaming
-# ===========================================================================
-
-def multimodal_meta(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    return media_metadata(documents_as_media(docs)).orderBy("media_id")
-
-
-MULTIMODAL_META_SQL = f"""
-SELECT doc_id AS media_id, 'image' AS media_type,
-       CAST(strlen(text) AS BIGINT) AS n_bytes,
-       {SQL_H60.format(x='text')} AS payload_hash
-FROM documents ORDER BY media_id
-"""
-
-
-def media_triage_census(spark, sf_dir):
-    """The triage pass at CORPUS grain (r14): every document derives a
-    deterministic crafted media payload — WAV / MP3 CBR frame / Ogg
-    Vorbis / MP4 / WebM / junk, one spec family per doc_id%6, each
-    with doc_id-dependent duration parameters — and probe_media's
-    header walk must recover exactly the constructed metadata,
-    aggregated per (format, kind) as counts + total duration (integer
-    milliseconds: every construction lands on an exact ms so the sum
-    is order-independent) + summed declared rates.  This is the probe
-    as a 100 TB pipeline runs it: payload build + walk + aggregate in
-    one Arrow-batched narrow stage, scaling with the corpus (the
-    fixed-fixture multimodal_probe row pins per-format field
-    exactness; this row pins the walkers at volume).  Oracle: the
-    construction's analytic values only."""
-    from parquet_converters_spark.functions.media_probe import probe_media
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def build(batches):
-        import struct as _st
-
-        import pandas as pd
-
-        from parquet_converters_spark.functions.media_craft import (
-            UNKNOWN_SIZE_SEGMENT,
-            WEBM_HEADER,
-            mp4_box,
-            mp4_mvhd,
-            ogg_page,
-            vorbis_id_packet,
-            webm_info,
-        )
-
-        def wav(nsamp):
-            body = b"\x00" * (nsamp * 2)
-            fmt = _st.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
-            chunks = (b"fmt " + _st.pack("<I", 16) + fmt
-                      + b"data" + _st.pack("<I", len(body)) + body)
-            return (b"RIFF" + _st.pack("<I", 4 + len(chunks))
-                    + b"WAVE" + chunks)
-
-        def ogg_vorbis(granule):
-            return (ogg_page(0, vorbis_id_packet(44100, 2, 128000))
-                    + ogg_page(granule, b"x", htype=4, seq=1))
-
-        def mp4(dur_ms):
-            return (mp4_box(b"ftyp", b"mp42" + b"\x00" * 8 + b"mp42")
-                    + mp4_box(b"moov", mp4_mvhd(1000, dur_ms)))
-
-        def webm(ticks):
-            return (WEBM_HEADER + UNKNOWN_SIZE_SEGMENT
-                    + webm_info(ticks))
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                v = did % 6
-                if v == 0:
-                    p = wav((did % 40 + 1) * 8)
-                elif v == 1:
-                    p = (b"\xff\xfb\x90\x00"
-                         + b"\x00" * ((did % 20 + 1) * 2000 - 4))
-                elif v == 2:
-                    p = ogg_vorbis((did % 30 + 1) * 44100)
-                elif v == 3:
-                    p = mp4((did % 120 + 1) * 500)
-                elif v == 4:
-                    p = webm((did % 60 + 1) * 250)
-                else:
-                    p = b"JUNKDATA" + did.to_bytes(8, "little")
-                ids.append(did)
-                payloads.append(p)
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    built = docs.mapInPandas(build, "media_id long, payload binary")
-    probed = probe_media(built)
-    return (
-        probed.groupBy("format", "kind")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.round(F.col("duration_s") * 1000).cast("long")),
-                F.lit(0),
-            ).alias("sum_ms"),
-            F.sum(F.coalesce("sample_rate", F.lit(0)))
-            .cast("long").alias("sum_rate"),
-        )
-        .orderBy("format")
-    )
-
-
-MEDIA_TRIAGE_CENSUS_SQL = """
-WITH rows AS (
-  SELECT
-    CASE doc_id % 6 WHEN 0 THEN 'wav' WHEN 1 THEN 'mp3'
-         WHEN 2 THEN 'ogg/vorbis' WHEN 3 THEN 'isobmff/mp42'
-         WHEN 4 THEN 'webm' ELSE 'unknown' END AS format,
-    CASE doc_id % 6 WHEN 3 THEN 'video' WHEN 4 THEN 'video'
-         WHEN 5 THEN 'other' ELSE 'audio' END AS kind,
-    CASE doc_id % 6
-         WHEN 0 THEN doc_id % 40 + 1               -- nsamp/8 kHz in ms
-         WHEN 1 THEN 125 * (doc_id % 20 + 1)       -- bytes*8/128k
-         WHEN 2 THEN 1000 * (doc_id % 30 + 1)      -- granule/44100
-         WHEN 3 THEN 500 * (doc_id % 120 + 1)      -- mvhd dur/ts
-         WHEN 4 THEN 250 * (doc_id % 60 + 1)       -- ticks x 1 ms
-         ELSE NULL END AS ms,
-    CASE doc_id % 6 WHEN 0 THEN 8000 WHEN 1 THEN 44100
-         WHEN 2 THEN 44100 ELSE 0 END AS rate
-  FROM documents
-)
-SELECT format, kind, CAST(count(*) AS BIGINT) AS n,
-       CAST(COALESCE(SUM(ms), 0) AS BIGINT) AS sum_ms,
-       CAST(SUM(rate) AS BIGINT) AS sum_rate
-FROM rows GROUP BY format, kind ORDER BY format
-"""
-
-
-def transcode_census(spark, sf_dir):
-    """The audio sink path at CORPUS grain (r15 — the
-    media_triage_census pattern applied to transcode, r14 VERDICT
-    item 5): every document derives a deterministic PCM16 stream (a
-    closed-form function of doc_id) packed into a rotating source
-    container (WAV/AU/AIFF by doc_id%3), rides
-    ``transcode_audio(target='ogg')`` end-to-end — from-spec source
-    decode, production FLAC encode, FLAC-to-Ogg mapping-1.0 mux — and
-    is decoded BACK through the RFC 3533 demux + the from-spec FLAC
-    decoder with the full CRC-8/CRC-16/MD5 ladder (a failed ladder or
-    a wrong rate/depth raises and reds the row).  Aggregated per
-    source container: file count, total frames, total PCM sum —
-    every value the construction's own closed form, so the DuckDB
-    oracle recomputes them from doc_id alone, no codec anywhere.
-    The per-format fixture row (multimodal_transcode) pins field
-    exactness; this row pins the encode/mux/demux/decode chain at
-    volume, where a systematic drift becomes a count/sum shift.
-    Plan shape: one round-robin exchange of BARE doc_ids (8 B/row —
-    placed before the codec stages so encode cost spreads across all
-    cores even when the source parquet arrives as one split; the
-    payloads themselves never shuffle), then Arrow-batched narrow
-    build -> 1:1 transcode -> narrow verify -> a 3-group aggregate;
-    linear in corpus rows."""
-    from parquet_converters_spark.functions.multimodal import (
-        transcode_audio,
-    )
-
-    docs = (
-        _t(spark, sf_dir, "documents").select("doc_id")
-    )
-
-    def build(batches):
-        import pandas as pd
-
-        from parquet_converters_spark.functions.audio_codecs import (
-            encode_aiff,
-            encode_au,
-        )
-        from parquet_converters_spark.functions.media_codecs import (
-            encode_wav,
-        )
-
-        encoders = [encode_wav, encode_au, encode_aiff]
-        for pdf in batches:
-            ids, payloads = [], []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = (did % 32 + 1) * 16
-                pcm = [((did * 7 + k * 13) % 4001) - 2000
-                       for k in range(n)]
-                ids.append(did)
-                payloads.append(encoders[did % 3](8000, pcm))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    built = docs.mapInPandas(build, "media_id long, payload binary")
-    transcoded = transcode_audio(built, target="ogg")
-
-    def verify(batches):
-        import pandas as pd
-
-        from parquet_converters_spark.functions.audio_codecs import (
-            ogg_flac_to_native,
-        )
-        from parquet_converters_spark.functions.flac_codec import (
-            decode_flac_full,
-        )
-
-        for pdf in batches:
-            ids, ns, sums = [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                native = ogg_flac_to_native(bytes(payload))
-                if native is None:
-                    raise ValueError("transcode_census: not Ogg-FLAC")
-                rate, ch, bits, samples, md5_ok = decode_flac_full(
-                    native)
-                if not md5_ok or (rate, ch, bits) != (8000, 1, 16):
-                    raise ValueError(
-                        f"transcode_census: ladder failed for "
-                        f"media_id={int(mid)} "
-                        f"(rate={rate} ch={ch} bits={bits} "
-                        f"md5_ok={md5_ok})"
-                    )
-                ids.append(int(mid))
-                ns.append(len(samples))
-                sums.append(sum(samples))
-            yield pd.DataFrame(
-                {"media_id": ids, "n": ns, "s": sums})
-
-    checked = transcoded.mapInPandas(
-        verify, "media_id long, n long, s long")
-    container = (
-        F.when(F.col("media_id") % 3 == 0, "wav")
-        .when(F.col("media_id") % 3 == 1, "au")
-        .otherwise("aiff")
-    )
-    return (
-        checked.groupBy(container.alias("container"))
-        .agg(
-            F.count(F.lit(1)).alias("n_files"),
-            F.sum("n").alias("sum_frames"),
-            F.sum("s").alias("sum_pcm"),
-        )
-        .orderBy("container")
-    )
-
-
-def video_track_census(spark, sf_dir):
-    """The r15 video-depth probe columns (codec / fps / n_frames) at
-    CORPUS grain — the census pattern (media_triage_census /
-    transcode_census) applied to the new surface: every document
-    derives a crafted VIDEO container — an MP4 whose avc1 sample
-    table declares doc_id-dependent frame counts at an exactly-24-fps
-    stts (doc_id%2==0), or a WebM V_VP9 track at DefaultDuration
-    40 ms (exactly 25 fps) carrying doc_id-dependent SimpleBlock
-    cadence (doc_id%2==1) — and the header walk must recover exactly
-    the constructed codec, frame count, and rate, aggregated per
-    (format, codec).  fps rides as integer milli-fps so the
-    cross-engine sum is exact.  Oracle: the construction's closed
-    forms only.  Plan: payload build + walk + 2-group aggregate in
-    one Arrow-batched narrow stage; linear in corpus rows."""
-    from parquet_converters_spark.functions.media_probe import probe_media
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def build(batches):
-        import pandas as pd
-
-        from parquet_converters_spark.functions.media_craft import (
-            WEBM_HEADER,
-            ebml,
-            ebml_any,
-            mp4_box,
-        )
-
-        def mp4(nf):
-            avc1 = mp4_box(b"avc1", b"\x00" * 24
-                           + (640).to_bytes(2, "big")
-                           + (360).to_bytes(2, "big") + b"\x00" * 20)
-            stsd = mp4_box(b"stsd", b"\x00" * 4
-                           + (1).to_bytes(4, "big") + avc1)
-            stts = mp4_box(b"stts", b"\x00" * 4
-                           + (1).to_bytes(4, "big")
-                           + nf.to_bytes(4, "big")
-                           + (1000).to_bytes(4, "big"))
-            mdhd = mp4_box(b"mdhd", b"\x00" * 12
-                           + (24000).to_bytes(4, "big")
-                           + (nf * 1000).to_bytes(4, "big")
-                           + b"\x00" * 4)
-            mdia = mp4_box(b"mdia", mdhd
-                           + mp4_box(b"hdlr", b"\x00" * 8 + b"vide"
-                                     + b"\x00" * 12)
-                           + mp4_box(b"minf",
-                                     mp4_box(b"stbl", stsd + stts)))
-            return (mp4_box(b"ftyp", b"mp42\x00\x00\x00\x00mp42")
-                    + mp4_box(b"moov", mp4_box(b"trak", mdia)))
-
-        def webm(nblocks):
-            trk = ebml(b"\x16\x54\xae\x6b", ebml(
-                b"\xae", ebml(b"\xd7", b"\x01")
-                + ebml(b"\x83", b"\x01")
-                + ebml(b"\x86", b"V_VP9")
-                + ebml(b"\x23\xe3\x83",
-                       (40_000_000).to_bytes(4, "big"))
-                + ebml(b"\xe0",
-                       ebml(b"\xb0", (320).to_bytes(2, "big"))
-                       + ebml(b"\xba", (180).to_bytes(2, "big")))))
-            blk = ebml(b"\xa3", b"\x81\x00\x00\x80v")
-            cluster = ebml_any(b"\x1f\x43\xb6\x75",
-                               ebml(b"\xe7", b"\x00") + blk * nblocks)
-            return WEBM_HEADER + ebml_any(b"\x18\x53\x80\x67",
-                                          trk + cluster)
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                if did % 2 == 0:
-                    p = mp4(did % 60 + 1)
-                else:
-                    p = webm(did % 50 + 1)
-                ids.append(did)
-                payloads.append(p)
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    built = docs.mapInPandas(build, "media_id long, payload binary")
-    probed = probe_media(built)
-    return (
-        probed.groupBy("format", "codec")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("n_frames").alias("sum_frames"),
-            F.sum(F.round(F.col("fps") * 1000).cast("long"))
-            .alias("sum_fps_milli"),
-        )
-        .orderBy("format")
-    )
-
-
-VIDEO_TRACK_CENSUS_SQL = """
-WITH rows AS (
-  SELECT
-    CASE doc_id % 2 WHEN 0 THEN 'isobmff/mp42' ELSE 'webm' END
-      AS format,
-    CASE doc_id % 2 WHEN 0 THEN 'avc1' ELSE 'V_VP9' END AS codec,
-    CASE doc_id % 2 WHEN 0 THEN doc_id % 60 + 1
-         ELSE doc_id % 50 + 1 END AS nf,
-    CASE doc_id % 2 WHEN 0 THEN 24000 ELSE 25000 END AS fpsm
-  FROM documents
-)
-SELECT format, codec, CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(nf) AS BIGINT) AS sum_frames,
-       CAST(SUM(fpsm) AS BIGINT) AS sum_fps_milli
-FROM rows GROUP BY format, codec ORDER BY format
-"""
-
-
-TRANSCODE_CENSUS_SQL = """
-WITH per_doc AS (
-  SELECT doc_id,
-         CASE doc_id % 3 WHEN 0 THEN 'wav' WHEN 1 THEN 'au'
-              ELSE 'aiff' END AS container,
-         (doc_id % 32 + 1) * 16 AS n
-  FROM documents
-), sums AS (
-  SELECT d.doc_id, d.container, d.n,
-         SUM(((d.doc_id * 7 + t.k * 13) % 4001) - 2000) AS s
-  FROM per_doc d,
-       UNNEST(generate_series(0, CAST(d.n AS BIGINT) - 1)) AS t(k)
-  GROUP BY d.doc_id, d.container, d.n
-)
-SELECT container, CAST(COUNT(*) AS BIGINT) AS n_files,
-       CAST(SUM(n) AS BIGINT) AS sum_frames,
-       CAST(SUM(s) AS BIGINT) AS sum_pcm
-FROM sums GROUP BY container ORDER BY container
-"""
 
 
 def image_dhash_census(spark, sf_dir):
@@ -2222,7 +524,7 @@ def image_dhash_census(spark, sf_dir):
     )
 
     docs = (
-        _t(spark, sf_dir, "documents").select("doc_id")
+        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
         # round-robin the bare 8-byte ids so the Arrow build+hash
         # stage spreads over every core, not the parquet split count
     )
@@ -2262,56 +564,6 @@ def image_dhash_census(spark, sf_dir):
     )
 
 
-# Analytic replica of decode -> luma -> grid -> hash on the crafted
-# 9x8 grayscale pattern: luma of gray v is exactly v; the 9x8 dHash
-# grid is the pixels themselves; the 8x8 aHash grid folds x=8 into
-# column 7 (floor boundaries i*9//8).  Signed 64-bit fold keeps bit 63
-# via min-BIGINT addition (no HUGEINT shifts needed).
-IMAGE_DHASH_CENSUS_SQL = """
-WITH pos AS (
-  SELECT y.y AS y, x.x AS x FROM range(8) AS y(y), range(9) AS x(x)
-), cell AS (
-  SELECT d.doc_id, p.y, p.x,
-         200 * ((d.doc_id >> ((p.x + p.y) % 9)) & 1)
-         + (p.x * 31 + p.y * 17) % 23 AS v
-  FROM documents d, pos p
-), dbit AS (
-  SELECT a.doc_id, a.y, a.x,
-         CASE WHEN b.v > a.v THEN 1 ELSE 0 END AS bit
-  FROM cell a JOIN cell b
-    ON b.doc_id = a.doc_id AND b.y = a.y AND b.x = a.x + 1
-  WHERE a.x < 8
-), dh AS (
-  SELECT doc_id,
-         CAST(SUM(CASE WHEN y*8 + x < 63
-                  THEN bit * ((1::BIGINT) << (y*8 + x)) ELSE 0 END)
-         + MAX(CASE WHEN y*8 + x = 63 AND bit = 1 THEN 1 ELSE 0 END)
-           * (-9223372036854775807 - 1) AS BIGINT) AS dhash
-  FROM dbit GROUP BY doc_id
-), acell AS (
-  SELECT doc_id, y, LEAST(x, 7) AS j, SUM(v) // COUNT(*) AS av
-  FROM cell GROUP BY doc_id, y, LEAST(x, 7)
-), amean AS (
-  SELECT doc_id, SUM(av) // 64 AS m FROM acell GROUP BY doc_id
-), abit AS (
-  SELECT a.doc_id, a.y, a.j,
-         CASE WHEN a.av > m.m THEN 1 ELSE 0 END AS bit
-  FROM acell a JOIN amean m ON m.doc_id = a.doc_id
-), ah AS (
-  SELECT doc_id,
-         CAST(SUM(CASE WHEN y*8 + j < 63
-                  THEN bit * ((1::BIGINT) << (y*8 + j)) ELSE 0 END)
-         + MAX(CASE WHEN y*8 + j = 63 AND bit = 1 THEN 1 ELSE 0 END)
-           * (-9223372036854775807 - 1) AS BIGINT) AS ahash
-  FROM abit GROUP BY doc_id
-)
-SELECT dh.dhash, ah.ahash, CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(dh.doc_id) AS BIGINT) AS sum_id
-FROM dh JOIN ah ON ah.doc_id = dh.doc_id
-GROUP BY dh.dhash, ah.ahash ORDER BY dh.dhash, ah.ahash
-"""
-
-
 def image_dhash_neardup(spark, sf_dir):
     """Image near-dup pairs through the REAL pixel path (r15): a 1/4
     subset of documents crafts images realizing known dHash targets —
@@ -2330,7 +582,7 @@ def image_dhash_neardup(spark, sf_dir):
     )
 
     docs = (
-        _t(spark, sf_dir, "documents")
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id")
         .filter(F.col("doc_id") % 8 < 2)
     )
@@ -2365,451 +617,6 @@ def image_dhash_neardup(spark, sf_dir):
     ).orderBy("id_a", "id_b")
 
 
-IMAGE_DHASH_NEARDUP_SQL = """
-WITH sub AS (
-  SELECT doc_id, doc_id // 8 AS q, doc_id % 8 AS r
-  FROM documents WHERE doc_id % 8 < 2
-), tgt AS (
-  SELECT doc_id,
-         CAST(q AS HUGEINT) * 2654435761 % 4294967296 * 4294967296
-         + (CAST(q + 1 AS HUGEINT) * 2246822519 % 4294967296) AS u,
-         CASE WHEN r = 1 THEN
-           CASE q % 6 WHEN 0 THEN 0 WHEN 1 THEN 2 WHEN 2 THEN 2050
-                WHEN 3 THEN 2099202 WHEN 4 THEN 2149582850
-                ELSE 2201172838402 END
-         ELSE 0 END AS flips
-  FROM sub
-), sig AS (
-  SELECT doc_id,
-         xor(CAST(CASE WHEN u >= 9223372036854775808
-                       THEN u - 18446744073709551616
-                       ELSE u END AS BIGINT), flips) AS h
-  FROM tgt
-)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       CAST(bit_count(xor(a.h, b.h)) AS INTEGER) AS hamming
-FROM sig a JOIN sig b ON b.doc_id > a.doc_id
-WHERE bit_count(xor(a.h, b.h)) <= 3
-ORDER BY id_a, id_b
-"""
-
-
-def image_phash_census(spark, sf_dir):
-    """DCT pHash at CORPUS grain (r16 verdict item 4 — the
-    robust-to-rescale hash a real crawl dedup keys on, previously the
-    only fingerprint without an oracled row): every document crafts a
-    32x32 grayscale BMP by DCT SYNTHESIS
-    (functions/image_fingerprint.py bmp_realizing_phash — low-band
-    coefficients pinned at +-amp with a zero-pinned median slot, so
-    the hash survives the float DCT with an amp-sized margin), rides
-    the REAL decode -> 32x32 luma -> DCT-II -> median-threshold path,
-    and the census groups by hash.  doc_id % 180 picks among 36
-    closed-form bit patterns (unit-multiplier permutations mod 63,
-    exactly 31 set bits each) x 5 amplitudes — same hash, different
-    BYTES — so ``n`` per group also asserts the dedup collapse.  The
-    oracle recomputes each target hash from the unit arithmetic alone
-    (no DCT in SQL: the synthesis construction IS the closed form).
-    All 180 variants are exhaustively pinned to the real path in
-    tests/test_image_fingerprint.py."""
-    from parquet_converters_spark.functions.image_fingerprint import (
-        image_phashes,
-    )
-
-    docs = (
-        _t(spark, sf_dir, "documents").select("doc_id")
-    )
-
-    def build(batches):
-        import pandas as pd
-
-        from parquet_converters_spark.functions.image_fingerprint import (
-            bmp_realizing_phash,
-            phash_target,
-        )
-
-        cache = {}
-        for pdf in batches:
-            ids = [int(d) for d in pdf["doc_id"]]
-            payloads = []
-            for d in ids:
-                v = d % 180
-                if v not in cache:
-                    t, a = phash_target(v)
-                    cache[v] = bmp_realizing_phash(t, a)
-                payloads.append(cache[v])
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    built = docs.mapInPandas(build, "media_id long, payload binary")
-    return (
-        image_phashes(built)
-        .groupBy("phash")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("media_id").alias("sum_id"),
-        )
-        .orderBy("phash")
-    )
-
-
-def image_phash_neardup(spark, sf_dir):
-    """pHash near-dup pairs through the REAL DCT path (r16, the
-    neardup companion of image_phash_census): the 1/4 document subset
-    crafts synthesis images whose pHash pairs ``(8q, 8q+1)`` sit at
-    exact Hamming distance ``2*(q%4)`` (residue swaps preserve the
-    31-bit popcount the synthesis margin needs; an 8-level base
-    diversifier spaces same-unit bases exactly 8 bits per level —
-    complementary-unit coincidences at distance 2 exist by modular
-    arithmetic and are expected output, graded identically by both
-    sides; see phash_pair_target's docstring), then the
-    pigeonhole band join (4 bands / 64 bits, exact for distance <= 3)
-    finds every qualifying pair with distance in [1, 3].  The oracle
-    recomputes each target from the residue arithmetic alone and
-    brute-forces all subset pairs with bit_count(xor(...)) — banding
-    (the scale path) graded against exhaustive search, no DCT in
-    SQL."""
-    from parquet_converters_spark.functions.image_fingerprint import (
-        hamming_neardup_pairs,
-        image_phashes,
-    )
-
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") % 8 < 2)
-    )
-
-    def build(batches):
-        import pandas as pd
-
-        from parquet_converters_spark.functions.image_fingerprint import (
-            bmp_realizing_phash,
-            phash_pair_target,
-        )
-
-        cache = {}
-        for pdf in batches:
-            ids = [int(d) for d in pdf["doc_id"]]
-            payloads = []
-            for d in ids:
-                key = phash_pair_target(d)
-                if key not in cache:
-                    cache[key] = bmp_realizing_phash(*key)
-                payloads.append(cache[key])
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    built = docs.mapInPandas(build, "media_id long, payload binary")
-    sig = image_phashes(built)
-    return (
-        hamming_neardup_pairs(
-            sig, id_col="media_id", hash_col="phash",
-            bands=4, max_hamming=3,
-        )
-        .filter(F.col("hamming") >= 1)
-        .orderBy("id_a", "id_b")
-    )
-
-
-# Bit at position p: residue t = p*k mod 63; base sets t<=31, the
-# diversifier (c4 = 4*(q//36 % 8)) and the pair swaps (s = q%4 for
-# r=1) each flip disjoint residue ranges — parity of the three terms
-# is the bit.  Bits 0/63 never set -> signed BIGINT sum, no fold.
-IMAGE_PHASH_NEARDUP_SQL = """
-WITH sub AS (
-  SELECT doc_id, doc_id // 8 AS q, doc_id % 8 AS r
-  FROM documents WHERE doc_id % 8 < 2
-), par AS (
-  SELECT doc_id,
-         list_extract(
-           [1,2,4,5,8,10,11,13,16,17,19,20,22,23,25,26,29,31,32,34,
-            37,38,40,41,43,44,46,47,50,52,53,55,58,59,61,62],
-           CAST(q % 36 AS INTEGER) + 1) AS k,
-         4 * ((q // 36) % 8) AS c4,
-         CASE WHEN r = 1 THEN q % 4 ELSE 0 END AS s
-  FROM sub
-), bits AS (
-  SELECT doc_id, p.p AS p, (p.p * k) % 63 AS t, c4, s
-  FROM par, range(1, 63) AS p(p)
-), ph AS (
-  SELECT doc_id,
-         CAST(SUM(CASE WHEN (
-             (CASE WHEN t <= 31 THEN 1 ELSE 0 END)
-           + (CASE WHEN t BETWEEN 32 - c4 AND 31
-                     OR t BETWEEN 63 - c4 AND 62 THEN 1 ELSE 0 END)
-           + (CASE WHEN t BETWEEN 1 AND s
-                     OR t BETWEEN 32 AND 31 + s THEN 1 ELSE 0 END)
-         ) % 2 = 1 THEN ((1::BIGINT) << p) ELSE 0 END) AS BIGINT) AS h
-  FROM bits GROUP BY doc_id
-)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       CAST(bit_count(xor(a.h, b.h)) AS INTEGER) AS hamming
-FROM ph a JOIN ph b ON b.doc_id > a.doc_id
-WHERE bit_count(xor(a.h, b.h)) BETWEEN 1 AND 3
-ORDER BY id_a, id_b
-"""
-
-
-# Closed form of the synthesis targets: unit k = UNITS[doc_id%180 %36]
-# permutes bit positions 1..62 by p -> p*k mod 63; residues 1..31 are
-# the set bits (exactly 31).  Bits 0 and 63 never set -> the sum fits
-# signed BIGINT with no min-BIGINT fold.  The amplitude ladder
-# (doc_id%180 // 36) changes pixels, not the hash — absent here by
-# construction, asserted by the engine side's real decode.
-IMAGE_PHASH_CENSUS_SQL = """
-WITH u AS (
-  SELECT doc_id,
-         list_extract(
-           [1,2,4,5,8,10,11,13,16,17,19,20,22,23,25,26,29,31,32,34,
-            37,38,40,41,43,44,46,47,50,52,53,55,58,59,61,62],
-           CAST((doc_id % 180) % 36 AS INTEGER) + 1) AS k
-  FROM documents
-), ph AS (
-  SELECT doc_id,
-         CAST(SUM(CASE WHEN (p.p * k) % 63 <= 31
-                  THEN ((1::BIGINT) << p.p) ELSE 0 END) AS BIGINT)
-           AS phash
-  FROM u, range(1, 63) AS p(p)
-  GROUP BY doc_id
-)
-SELECT phash, CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(doc_id) AS BIGINT) AS sum_id
-FROM ph GROUP BY phash ORDER BY phash
-"""
-
-
-def warc_text_census(spark, sf_dir):
-    """The crawl-ingest front end at CORPUS grain (r16): every
-    document crafts a real WARC archive (ISO 28500 record framing,
-    rotating through plain / whole-archive gzip / per-record gzip
-    members / chunked transfer-encoding / Content-Encoding: gzip /
-    a 404 text/plain miss), rides the REAL parse path
-    (sources/warc.py: gzip member loop -> WARC record walk -> HTTP
-    split -> chunk/content decoding -> HTML visible-text extraction
-    via the stdlib WHATWG parser), and the census groups by
-    (status, content-type) with doc-id and extracted-text-length
-    checksums — a framing, decoding, entity, or whitespace bug
-    anywhere in the pipeline shifts a group.  One Arrow-batched
-    narrow stage + one aggregate; the oracle recomputes the expected
-    text LENGTHS from the construction's closed form (the extracted
-    string is pure doc_id arithmetic)."""
-    from parquet_converters_spark.sources.warc import warc_text_documents
-
-    docs = (
-        _t(spark, sf_dir, "documents").select("doc_id")
-    )
-
-    def build(batches):
-        import zlib
-
-        import pandas as pd
-
-        def gzm(b):
-            c = zlib.compressobj(9, zlib.DEFLATED, 16 + 15)
-            return c.compress(b) + c.flush()
-
-        def rec(wtype, uri, block):
-            h = (
-                b"WARC/1.0\r\nWARC-Type: " + wtype
-                + b"\r\nWARC-Record-ID: <urn:uuid:doc>\r\n"
-                b"WARC-Date: 2024-01-01T00:00:00Z\r\n"
-                + (b"WARC-Target-URI: " + uri + b"\r\n" if uri else b"")
-                + b"Content-Type: application/http; msgtype=response"
-                b"\r\nContent-Length: "
-                + str(len(block)).encode() + b"\r\n\r\n"
-            )
-            return h + block + b"\r\n\r\n"
-
-        def craft(did):
-            v = did % 6
-            a, b, c = (
-                (did * 31 + 1) % 1000,
-                (did * 31 + 2) % 1000,
-                (did * 31 + 3) % 1000,
-            )
-            if v == 5:
-                body = f"plain {did} body".encode()
-                http = (
-                    b"HTTP/1.1 404 Not Found\r\n"
-                    b"Content-Type: text/plain\r\n\r\n" + body
-                )
-            else:
-                html = (
-                    f"<html><head><title>t{did}</title>"
-                    f"<style>p{{margin:0}}</style>"
-                    f"<script>var s=1;</script></head>"
-                    f"<body><p>w{a} &amp; w{b}</p><!--hidden-->"
-                    f"<p>w{c}</p></body></html>"
-                ).encode()
-                status = b"301 Moved Permanently" if v == 1 else b"200 OK"
-                extra, body = b"", html
-                if v == 3:
-                    extra = b"Transfer-Encoding: chunked\r\n"
-                    body = (
-                        b"a\r\n" + html[:10] + b"\r\n"
-                        + format(len(html) - 10, "x").encode()
-                        + b"\r\n" + html[10:] + b"\r\n0\r\n\r\n"
-                    )
-                elif v == 4:
-                    extra = b"Content-Encoding: gzip\r\n"
-                    body = gzm(html)
-                http = (
-                    b"HTTP/1.1 " + status + b"\r\n"
-                    b"Content-Type: text/html; charset=utf-8\r\n"
-                    + extra + b"\r\n" + body
-                )
-            resp = rec(
-                b"response", f"https://example.com/{did}".encode(), http
-            )
-            if v == 1:
-                return gzm(resp)
-            if v == 2:
-                info = rec(b"warcinfo", b"", b"software: census\r\n")
-                return gzm(info) + gzm(resp)
-            return resp
-
-        for pdf in batches:
-            ids = [int(d) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": [craft(d) for d in ids]}
-            )
-
-    built = docs.mapInPandas(build, "doc_id long, payload binary")
-    return (
-        warc_text_documents(built)
-        .groupBy("http_status", "content_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("doc_id").alias("sum_id"),
-            F.sum(F.length("text")).alias("sum_text_len"),
-        )
-        .orderBy("http_status", "content_type")
-    )
-
-
-# Closed form of the extracted text: 't{did} w{a} & w{b} w{c}' for the
-# html variants (title + visible paragraphs, entity decoded,
-# whitespace collapsed), 'plain {did} body' for the 404 — lengths are
-# pure doc_id arithmetic, no HTML in SQL.
-WARC_TEXT_CENSUS_SQL = """
-WITH d AS (
-  SELECT doc_id, doc_id % 6 AS v,
-         (doc_id*31+1) % 1000 AS a,
-         (doc_id*31+2) % 1000 AS b,
-         (doc_id*31+3) % 1000 AS c
-  FROM documents
-), rec AS (
-  SELECT doc_id,
-         CASE WHEN v = 5 THEN 404 WHEN v = 1 THEN 301
-              ELSE 200 END AS http_status,
-         CASE WHEN v = 5 THEN 'text/plain'
-              ELSE 'text/html' END AS content_type,
-         CASE WHEN v = 5
-              THEN length('plain ' || CAST(doc_id AS VARCHAR) || ' body')
-              ELSE length('t' || CAST(doc_id AS VARCHAR)
-                          || ' w' || CAST(a AS VARCHAR)
-                          || ' & w' || CAST(b AS VARCHAR)
-                          || ' w' || CAST(c AS VARCHAR)) END AS text_len
-  FROM d
-)
-SELECT CAST(http_status AS INTEGER) AS http_status, content_type,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(doc_id) AS BIGINT) AS sum_id,
-       CAST(SUM(text_len) AS BIGINT) AS sum_text_len
-FROM rec GROUP BY 1, 2 ORDER BY http_status, content_type
-"""
-
-
-def robots_gate_census(spark, sf_dir):
-    """Crawl-governance census (r16, the WARC front end's policy
-    companion): every document derives a URL on one of six domains
-    whose robots.txt exercises a distinct RFC 9309 feature — prefix
-    Disallow, ``$``-anchored wildcard, longest-match Allow-over-
-    Disallow, empty (rule-less) Disallow, mid-pattern wildcard, and
-    agent-specific group selection — and the gate
-    (functions/robots.py robots_gate: BROADCAST robots dimension ->
-    one Arrow-batched narrow decision stage) annotates each with the
-    RFC decision.  The census counts allowed per (rule shape, path
-    kind): a group-selection, wildcard, anchor, or precedence bug
-    shifts a cell.  The oracle is the RFC decision matrix in closed
-    form — 5 CASE terms, no pattern matching in SQL."""
-    from parquet_converters_spark.functions.robots import robots_gate
-
-    docs = (
-        _t(spark, sf_dir, "documents").select("doc_id")
-        # round-robin the bare ids so the per-URL decision stage runs
-        # on every core, not the parquet split count
-    )
-    v = (F.col("doc_id") % 6).cast("int")
-    p = (F.col("doc_id") % 5).cast("int")
-    path = (
-        F.when(p == 0, F.concat(F.lit("/public/x"), F.col("doc_id")))
-        .when(p == 1, F.concat(F.lit("/private/x"), F.col("doc_id")))
-        .when(p == 2, F.concat(F.lit("/docs/f"), F.col("doc_id"),
-                               F.lit(".pdf")))
-        .when(p == 3, F.concat(F.lit("/a"), F.col("doc_id") % 10,
-                               F.lit("b/c")))
-        .otherwise(F.lit("/"))
-    )
-    urls = docs.select(
-        "doc_id",
-        v.alias("shape"),
-        p.alias("path_kind"),
-        F.concat(F.lit("d"), v).alias("domain"),
-        F.concat(F.lit("https://d"), v, F.lit(".example.com"), path)
-        .alias("url"),
-    )
-    robots = spark.createDataFrame(
-        [
-            ("d0", "User-agent: *\nDisallow: /private/\n"),
-            ("d1", "User-agent: *\nDisallow: /*.pdf$\n"),
-            ("d2", "User-agent: *\nAllow: /public/\nDisallow: /\n"),
-            ("d3", "User-agent: *\nDisallow:\n"),
-            ("d4", "User-agent: *\nDisallow: /a*b/\n"),
-            ("d5", "User-agent: trainbot\nDisallow: /\n\n"
-                   "User-agent: *\nAllow: /\n"),
-        ],
-        "domain string, robots_txt string",
-    )
-    gated = robots_gate(urls, robots, agent="trainbot")
-    return (
-        gated.groupBy("shape", "path_kind")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("allowed").cast("long")).alias("n_allowed"),
-            F.sum("doc_id").alias("sum_id"),
-        )
-        .orderBy("shape", "path_kind")
-    )
-
-
-# The RFC 9309 decision matrix in closed form: shape 0 denies only the
-# /private/ path kind, shape 1 only the .pdf kind ($ anchor), shape 2
-# allows ONLY /public/ (longest-match allow over Disallow: /), shape 3
-# is rule-less (empty Disallow) and allows all, shape 4's mid-pattern
-# wildcard denies only the /a{n}b/ kind, shape 5's trainbot group
-# denies everything (group selection beats the permissive * group).
-ROBOTS_GATE_CENSUS_SQL = """
-WITH d AS (
-  SELECT doc_id,
-         CAST(doc_id % 6 AS INTEGER) AS shape,
-         CAST(doc_id % 5 AS INTEGER) AS path_kind
-  FROM documents
-), dec AS (
-  SELECT doc_id, shape, path_kind,
-         NOT ((shape = 0 AND path_kind = 1)
-           OR (shape = 1 AND path_kind = 2)
-           OR (shape = 2 AND path_kind <> 0)
-           OR (shape = 4 AND path_kind = 3)
-           OR shape = 5) AS allowed
-  FROM d
-)
-SELECT shape, path_kind, CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CASE WHEN allowed THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_allowed,
-       CAST(SUM(doc_id) AS BIGINT) AS sum_id
-FROM dec GROUP BY shape, path_kind ORDER BY shape, path_kind
-"""
-
-
 def crawl_prep_funnel(spark, sf_dir):
     """The composed crawl-to-corpus funnel (r16 capstone): WARC parse
     -> HTTP status gate -> RFC 9309 robots gate -> minimum-length
@@ -2830,7 +637,7 @@ def crawl_prep_funnel(spark, sf_dir):
     from parquet_converters_spark.sources.warc import warc_text_documents
 
     docs = (
-        _t(spark, sf_dir, "documents").select("doc_id")
+        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     )
 
     def build(batches):
@@ -2946,65 +753,6 @@ def crawl_prep_funnel(spark, sf_dir):
     ).orderBy("stage_order")
 
 
-CRAWL_PREP_FUNNEL_SQL = """
-WITH d AS (
-  SELECT doc_id, CAST(doc_id % 6 AS INTEGER) AS v,
-         CAST(doc_id % 5 AS INTEGER) AS p, doc_id // 2 AS g
-  FROM documents
-), f AS (
-  SELECT doc_id, g,
-         (v NOT IN (1, 5)) AS ok,
-         NOT ((v = 0 AND p = 1) OR (v = 1 AND p = 2)
-           OR (v = 2 AND p <> 0) OR (v = 4 AND p = 3)
-           OR v = 5) AS allowed,
-         length('t' || CAST(g AS VARCHAR)
-                || ' w' || CAST((g*31+1) % 1000 AS VARCHAR)
-                || ' & w' || CAST((g*31+2) % 1000 AS VARCHAR)
-                || ' w' || CAST((g*31+3) % 1000 AS VARCHAR)) >= 17
-           AS long_enough
-  FROM d
-), pass AS (
-  SELECT doc_id, g, ok, ok AND allowed AS oa,
-         ok AND allowed AND long_enough AS oal,
-         -- the engine keys the keeper window on content_hash(text)
-         -- (the 8-byte exact-dedup key); mirror it exactly: for
-         -- surviving rows text is the html extraction, but keying by
-         -- the hash of that SAME closed-form string keeps non-oal
-         -- rows harmless (they never win the min)
-         CAST(concat('0x', substr(md5('t' || CAST(g AS VARCHAR) || ' w' || CAST((g*31+1) % 1000 AS VARCHAR) || ' & w' || CAST((g*31+2) % 1000 AS VARCHAR) || ' w' || CAST((g*31+3) % 1000 AS VARCHAR)), 1, 15))
-              AS BIGINT) AS h
-  FROM f
-), keep AS (
-  SELECT doc_id, ok, oa, oal,
-         oal AND doc_id = MIN(CASE WHEN oal THEN doc_id END)
-                          OVER (PARTITION BY h) AS keeper
-  FROM pass
-)
-SELECT * FROM (
-  SELECT 0 AS stage_order, 'responses' AS stage,
-         CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(doc_id) AS BIGINT) AS sum_id FROM keep
-  UNION ALL
-  SELECT 1, 'http_ok',
-         CAST(SUM(CASE WHEN ok THEN 1 ELSE 0 END) AS BIGINT),
-         CAST(SUM(CASE WHEN ok THEN doc_id END) AS BIGINT) FROM keep
-  UNION ALL
-  SELECT 2, 'robots_allowed',
-         CAST(SUM(CASE WHEN oa THEN 1 ELSE 0 END) AS BIGINT),
-         CAST(SUM(CASE WHEN oa THEN doc_id END) AS BIGINT) FROM keep
-  UNION ALL
-  SELECT 3, 'min_length',
-         CAST(SUM(CASE WHEN oal THEN 1 ELSE 0 END) AS BIGINT),
-         CAST(SUM(CASE WHEN oal THEN doc_id END) AS BIGINT) FROM keep
-  UNION ALL
-  SELECT 4, 'dedup_exact',
-         CAST(SUM(CASE WHEN keeper THEN 1 ELSE 0 END) AS BIGINT),
-         CAST(SUM(CASE WHEN keeper THEN doc_id END) AS BIGINT)
-  FROM keep
-) ORDER BY stage_order
-"""
-
-
 def crawl_prep_funnel_full(spark, sf_dir):
     """The crawl funnel at FULL production shape (r17, verdict item 4):
     WARC parse -> HTTP status gate -> RFC 9309 robots gate -> minimum
@@ -3047,7 +795,7 @@ def crawl_prep_funnel_full(spark, sf_dir):
     from parquet_converters_spark.sources.warc import warc_text_documents
 
     docs = (
-        _t(spark, sf_dir, "documents").select("doc_id")
+        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     )
 
     def build(batches):
@@ -3217,453 +965,6 @@ def crawl_prep_funnel_full(spark, sf_dir):
     ).orderBy("stage_order")
 
 
-CRAWL_PREP_FUNNEL_FULL_SQL = (
-    """
-WITH RECURSIVE d AS (
-  SELECT doc_id,
-         CAST((doc_id // 2) % 6 AS INTEGER) AS v,
-         CAST((doc_id // 2) % 5 AS INTEGER) AS p,
-         doc_id // 2 AS q,
-         doc_id // 8 AS ng,
-         (doc_id // 4) % 2 AS nv
-  FROM documents
-), f AS (
-  SELECT doc_id,
-         (v NOT IN (1, 5)) AS ok,
-         NOT ((v = 0 AND p = 1) OR (v = 1 AND p = 2)
-           OR (v = 2 AND p <> 0) OR (v = 4 AND p = 3)
-           OR v = 5) AS allowed,
-         -- the extracted text's closed form (only oal rows ever
-         -- consult it — v IN (1,5) rows are status-gated first)
-         't' || CAST(ng AS VARCHAR)
-           || ' w' || CAST((ng*31+1) % 1000 AS VARCHAR)
-           || ' & w' || CAST((ng*31+2) % 1000 AS VARCHAR)
-           || ' w' || CAST((ng*31+3) % 1000 AS VARCHAR)
-           || CASE WHEN nv = 1 THEN ' nv1' ELSE '' END AS text,
-         -- the canonical URL every messy variant must collapse to
-         'https://d' || CAST(v AS VARCHAR) || '.example.com' ||
-           CASE p WHEN 0 THEN '/public/x' || CAST(q AS VARCHAR)
-                  WHEN 1 THEN '/private/x' || CAST(q AS VARCHAR)
-                  WHEN 2 THEN '/docs/f' || CAST(q AS VARCHAR) || '.pdf'
-                  WHEN 3 THEN '/a' || CAST(q % 10 AS VARCHAR) || 'b/c'
-                  ELSE '/' END AS curl
-  FROM d
-), g AS (
-  SELECT doc_id, ok, ok AND allowed AS oa,
-         ok AND allowed AND length(text) >= 17 AS oal,
-         text, curl
-  FROM f
-), ku_t AS (
-  SELECT *, oal AND doc_id = MIN(CASE WHEN oal THEN doc_id END)
-                            OVER (PARTITION BY curl) AS ku
-  FROM g
-), ke_t AS (
-  SELECT *, ku AND doc_id = MIN(CASE WHEN ku THEN doc_id END)
-"""
-    f"  OVER (PARTITION BY {SQL_H60.format(x='text')}) AS ke\n"
-    "  FROM ku_t\n"
-    "), exact_survivors AS (\n"
-    "  SELECT doc_id, text FROM ke_t WHERE ke\n"
-    "), sig AS (" + _sql_minhash_sig(src="exact_survivors") + """
-), banded AS (
-""" + _SQL_BAND_ROWS + """
-), pairs AS (
-  SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-  FROM banded l JOIN banded r
-    ON l.b = r.b AND l.bucket = r.bucket AND l.doc_id < r.doc_id
-), edges AS (
-  SELECT id_a AS u, id_b AS v FROM pairs
-  UNION SELECT id_b, id_a FROM pairs
-), reach(u, v) AS (
-  SELECT u, v FROM edges
-  UNION
-  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-), comp AS (
-  SELECT u AS doc_id, least(u, min(v)) AS component_id FROM reach GROUP BY u
-), surv AS (
-  SELECT doc_id FROM exact_survivors
-  WHERE doc_id NOT IN (SELECT doc_id FROM comp WHERE component_id < doc_id)
-)
-SELECT * FROM (
-  SELECT 0 AS stage_order, 'responses' AS stage,
-         CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(COALESCE(SUM(doc_id), 0) AS BIGINT) AS sum_id FROM ke_t
-  UNION ALL
-  SELECT 1, 'http_ok',
-         CAST(SUM(CASE WHEN ok THEN 1 ELSE 0 END) AS BIGINT),
-         CAST(COALESCE(SUM(CASE WHEN ok THEN doc_id END), 0) AS BIGINT)
-  FROM ke_t
-  UNION ALL
-  SELECT 2, 'robots_allowed',
-         CAST(SUM(CASE WHEN oa THEN 1 ELSE 0 END) AS BIGINT),
-         CAST(COALESCE(SUM(CASE WHEN oa THEN doc_id END), 0) AS BIGINT)
-  FROM ke_t
-  UNION ALL
-  SELECT 3, 'min_length',
-         CAST(SUM(CASE WHEN oal THEN 1 ELSE 0 END) AS BIGINT),
-         CAST(COALESCE(SUM(CASE WHEN oal THEN doc_id END), 0) AS BIGINT)
-  FROM ke_t
-  UNION ALL
-  SELECT 4, 'url_canonical',
-         CAST(SUM(CASE WHEN ku THEN 1 ELSE 0 END) AS BIGINT),
-         CAST(COALESCE(SUM(CASE WHEN ku THEN doc_id END), 0) AS BIGINT)
-  FROM ke_t
-  UNION ALL
-  SELECT 5, 'dedup_exact',
-         CAST(SUM(CASE WHEN ke THEN 1 ELSE 0 END) AS BIGINT),
-         CAST(COALESCE(SUM(CASE WHEN ke THEN doc_id END), 0) AS BIGINT)
-  FROM ke_t
-  UNION ALL
-  SELECT 6, 'dedup_near', CAST(COUNT(*) AS BIGINT),
-         CAST(COALESCE(SUM(doc_id), 0) AS BIGINT) FROM surv
-) ORDER BY stage_order
-"""
-)
-
-
-def warc_revisit_census(spark, sf_dir):
-    """Per-host revisit/pairing statistics over crafted crawl archives
-    (r17, verdict item 5): real Common Crawl archives carry
-    ``WARC-Type: revisit`` records (deduplicated fetches referencing a
-    prior capture via ``WARC-Refers-To``, ISO 28500 §6.7.2) and
-    ``request`` records paired to their response via
-    ``WARC-Concurrent-To`` — revisit share per host is a standard
-    crawl statistic.  Each doc crafts one archive with a closed-form
-    record mix: ``1 + doc_id%3`` responses, ``doc_id%2`` requests
-    (pointing at a MISSING response id when doc_id%6==1), ``doc_id%4``
-    revisits (the first pointing at a missing id when doc_id%5==0,
-    profiles alternating identical-payload-digest /
-    server-not-modified).  The engine walks the records
-    (sources/warc.warc_records), resolves links archive-locally inside
-    the same parse stage (resolve_links=True — record ids never cross
-    archives, so resolution is a per-archive set lookup, join-free),
-    and aggregates by host; the oracle is pure residue arithmetic."""
-    from parquet_converters_spark.sources.warc import warc_records
-
-    docs = (
-        _t(spark, sf_dir, "documents").select("doc_id")
-    )
-    _IPD = "http://netpreserve.org/warc/1.0/revisit/identical-payload-digest"
-    _SNM = "http://netpreserve.org/warc/1.0/revisit/server-not-modified"
-
-    def build(batches):
-        import pandas as pd
-
-        def rec(wtype, uri, rid, block, extra=""):
-            head = (
-                f"WARC/1.0\r\nWARC-Type: {wtype}\r\n"
-                f"WARC-Record-ID: {rid}\r\n"
-                f"WARC-Date: 2024-03-03T03:03:03Z\r\n"
-                f"WARC-Target-URI: {uri}\r\n"
-                + extra
-                + "Content-Type: application/http; msgtype="
-                + ("request" if wtype == "request" else "response")
-                + f"\r\nContent-Length: {len(block)}\r\n\r\n"
-            ).encode()
-            return head + block + b"\r\n\r\n"
-
-        def craft(did):
-            host = f"h{did % 7}.ex"
-            n_resp, n_req, n_rev = 1 + did % 3, did % 2, did % 4
-            parts = []
-            for i in range(n_resp):
-                body = f"<p>doc {did} page {i}</p>".encode()
-                http = (
-                    b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
-                    b"\r\n" + body
-                )
-                parts.append(rec(
-                    "response", f"https://{host}/p{i}",
-                    f"<urn:rec:{did}:{i}>", http,
-                ))
-            for _ in range(n_req):
-                target = 9 if did % 6 == 1 else 0
-                parts.append(rec(
-                    "request", f"https://{host}/p0",
-                    f"<urn:req:{did}:0>",
-                    b"GET /p0 HTTP/1.1\r\nHost: " + host.encode()
-                    + b"\r\n\r\n",
-                    extra=f"WARC-Concurrent-To: "
-                          f"<urn:rec:{did}:{target}>\r\n",
-                ))
-            for j in range(n_rev):
-                refers = (
-                    "<urn:missing>" if j == 0 and did % 5 == 0
-                    else f"<urn:rec:{did}:{j % n_resp}>"
-                )
-                profile = _IPD if j % 2 == 0 else _SNM
-                parts.append(rec(
-                    "revisit", f"https://{host}/p{j % n_resp}",
-                    f"<urn:rev:{did}:{j}>",
-                    b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
-                    b"\r\n",
-                    extra=f"WARC-Refers-To: {refers}\r\n"
-                          f"WARC-Profile: {profile}\r\n",
-                ))
-            return b"".join(parts)
-
-        for pdf in batches:
-            ids = [int(d) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": [craft(d) for d in ids]}
-            )
-
-    built = docs.mapInPandas(build, "doc_id long, payload binary")
-    # r18 (guide §2.4/§1.2): link resolution is archive-local, so it
-    # rides the parse stage as a set lookup (warc_records
-    # resolve_links=True) instead of the (doc_id, record_id) self-join
-    # — which re-ran the whole synth+parse Python stage for its
-    # response-id side and shuffled record rows (measured same-window:
-    # census 12.6 -> 6.7 s class; plan loses the join + both
-    # exchanges).  Semantics identical to link_warc_records by
-    # construction (asserted bitwise in tests/test_warc.py).
-    linked = warc_records(built, resolve_links=True)
-    is_resp = F.col("rec_type") == "response"
-    is_req = F.col("rec_type") == "request"
-    is_rev = F.col("rec_type") == "revisit"
-
-    def _cnt(cond):
-        return F.sum(F.when(cond, 1).otherwise(0)).cast("long")
-
-    agg = (
-        linked.withColumn(
-            "host", F.regexp_extract("target_uri", r"https://(h\d)\.", 1)
-        )
-        .groupBy("host")
-        .agg(
-            F.countDistinct("doc_id").alias("n_archives"),
-            _cnt(is_resp).alias("n_responses"),
-            _cnt(is_req).alias("n_requests"),
-            _cnt(is_req & F.col("link_resolved"))
-            .alias("n_paired_requests"),
-            _cnt(is_rev).alias("n_revisits"),
-            _cnt(is_rev & F.col("link_resolved"))
-            .alias("n_resolved_revisits"),
-            _cnt(is_rev & (F.col("profile") == _IPD))
-            .alias("n_identical_digest"),
-        )
-        .withColumn(
-            "revisit_share",
-            F.round(
-                F.col("n_revisits")
-                / (F.col("n_responses") + F.col("n_revisits")),
-                6,
-            ),
-        )
-    )
-    return agg.orderBy("host")
-
-
-WARC_REVISIT_CENSUS_SQL = """
-WITH d AS (
-  SELECT doc_id,
-         'h' || CAST(doc_id % 7 AS VARCHAR) AS host,
-         1 + doc_id % 3 AS n_resp,
-         doc_id % 2 AS n_req,
-         CASE WHEN doc_id % 2 = 1 AND doc_id % 6 <> 1
-              THEN 1 ELSE 0 END AS paired,
-         doc_id % 4 AS n_rev,
-         (doc_id % 4) - CASE WHEN doc_id % 5 = 0 AND doc_id % 4 > 0
-                             THEN 1 ELSE 0 END AS resolved,
-         ((doc_id % 4) + 1) // 2 AS ipd
-  FROM documents
-)
-SELECT host,
-       CAST(COUNT(*) AS BIGINT) AS n_archives,
-       CAST(SUM(n_resp) AS BIGINT) AS n_responses,
-       CAST(SUM(n_req) AS BIGINT) AS n_requests,
-       CAST(SUM(paired) AS BIGINT) AS n_paired_requests,
-       CAST(SUM(n_rev) AS BIGINT) AS n_revisits,
-       CAST(SUM(resolved) AS BIGINT) AS n_resolved_revisits,
-       CAST(SUM(ipd) AS BIGINT) AS n_identical_digest,
-       round(CAST(SUM(n_rev) AS DOUBLE)
-             / (SUM(n_resp) + SUM(n_rev)), 6) AS revisit_share
-FROM d GROUP BY host ORDER BY host
-"""
-
-
-def cdx_index_census(spark, sf_dir):
-    """CDX crawl-index rows at full row grain (r17): the standard
-    index artifact shipped next to WARC segments — every capture as
-    ``(surt, ts, url, mime, http_status, digest, length)`` sorted by
-    the SURT key so one host's captures are contiguous
-    (sources/warc.warc_cdx_records + functions/text.surt_key).  Each
-    doc crafts one archive with two responses: a MESSY html capture
-    (uppercase scheme/host, ``www.``, userinfo-free but ``:443``
-    default port, unsorted query params, fragment) whose SURT key
-    must come out fully normalized, and a plain-text capture with
-    userinfo AND a non-default port (the port is dropped from the
-    key, the userinfo stripped).  Oracle: the ANALYTIC closed form of
-    every column from the construction — the engine's whole
-    lower/reverse/sort expression chain is graded against ground
-    truth, not a SQL reimplementation of itself."""
-    from parquet_converters_spark.sources.warc import warc_cdx_records
-
-    docs = (
-        _t(spark, sf_dir, "documents").select("doc_id")
-    )
-
-    def build(batches):
-        import pandas as pd
-
-        def rec(http, uri, sec):
-            return (
-                b"WARC/1.0\r\nWARC-Type: response\r\n"
-                b"WARC-Record-ID: <urn:uuid:cdx>\r\n"
-                + f"WARC-Date: 2024-03-03T03:03:{sec:02d}Z\r\n".encode()
-                + b"WARC-Target-URI: " + uri + b"\r\n"
-                b"Content-Type: application/http; msgtype=response"
-                b"\r\nContent-Length: "
-                + str(len(http)).encode() + b"\r\n\r\n"
-                + http + b"\r\n\r\n"
-            )
-
-        def craft(did):
-            a, b, c, sec = did % 5, did % 3, did % 4, did % 60
-            html = f"<p>c{did}</p>".encode()
-            uri0 = (
-                f"HTTPS://WWW.S{a}.SITE{b}.COM:443/Dir{c}/P{did}"
-                f"?b=2&a=1#frag"
-            ).encode()
-            h0 = (
-                b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
-                + html
-            )
-            plain = f"plain {did}".encode()
-            status = b"404 Not Found" if did % 9 == 0 else b"200 OK"
-            uri1 = f"http://user@h{did % 7}.ex:8080/t{did}".encode()
-            h1 = (
-                b"HTTP/1.1 " + status
-                + b"\r\nContent-Type: text/plain\r\n\r\n" + plain
-            )
-            return rec(h0, uri0, sec) + rec(h1, uri1, sec)
-
-        for pdf in batches:
-            ids = [int(d) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": [craft(d) for d in ids]}
-            )
-
-    built = docs.mapInPandas(build, "doc_id long, payload binary")
-    return warc_cdx_records(built).orderBy("surt", "ts", "url")
-
-
-CDX_INDEX_CENSUS_SQL = f"""
-WITH rows_ AS (
-  SELECT
-    'com,site' || CAST(doc_id % 3 AS VARCHAR)
-      || ',s' || CAST(doc_id % 5 AS VARCHAR)
-      || ')/dir' || CAST(doc_id % 4 AS VARCHAR)
-      || '/p' || CAST(doc_id AS VARCHAR) || '?a=1&b=2' AS surt,
-    '202403030303' || lpad(CAST(doc_id % 60 AS VARCHAR), 2, '0') AS ts,
-    'HTTPS://WWW.S' || CAST(doc_id % 5 AS VARCHAR)
-      || '.SITE' || CAST(doc_id % 3 AS VARCHAR)
-      || '.COM:443/Dir' || CAST(doc_id % 4 AS VARCHAR)
-      || '/P' || CAST(doc_id AS VARCHAR) || '?b=2&a=1#frag' AS url,
-    'text/html' AS mime,
-    200 AS http_status,
-    {SQL_H60.format(
-        x="'<p>c' || CAST(doc_id AS VARCHAR) || '</p>'")} AS digest,
-    CAST(length('<p>c' || CAST(doc_id AS VARCHAR) || '</p>')
-         AS BIGINT) AS length,
-    doc_id
-  FROM documents
-  UNION ALL
-  SELECT
-    'ex,h' || CAST(doc_id % 7 AS VARCHAR)
-      || ')/t' || CAST(doc_id AS VARCHAR) AS surt,
-    '202403030303' || lpad(CAST(doc_id % 60 AS VARCHAR), 2, '0') AS ts,
-    'http://user@h' || CAST(doc_id % 7 AS VARCHAR)
-      || '.ex:8080/t' || CAST(doc_id AS VARCHAR) AS url,
-    'text/plain' AS mime,
-    CASE WHEN doc_id % 9 = 0 THEN 404 ELSE 200 END AS http_status,
-    {SQL_H60.format(
-        x="'plain ' || CAST(doc_id AS VARCHAR)")} AS digest,
-    CAST(length('plain ' || CAST(doc_id AS VARCHAR)) AS BIGINT)
-      AS length,
-    doc_id
-  FROM documents
-)
-SELECT surt, ts, url, mime,
-       CAST(http_status AS INTEGER) AS http_status,
-       digest, length, doc_id
-FROM rows_ ORDER BY surt, ts, url
-"""
-
-
-def stream_crawl_ingest(spark, sf_dir):
-    """Crawl-ingest exactly-once in batch-symmetric form (r17 — the
-    stream_image_dedup pattern applied to the WARC front end): every
-    3 consecutive doc_ids craft an archive carrying the SAME page
-    text, the admission gate keeps the first per 8-byte content hash
-    (sources/warc.crawl_text_dedup_gate; the streaming leg — a real
-    duplicated file stream through dropDuplicatesWithinWatermark on
-    the hash — is pytest-gated in tests/test_warc.py), and the output
-    aggregates hash-level facts only (count / masked hash sum / text
-    length sum) so it is deterministic no matter which copy
-    survived."""
-    from parquet_converters_spark.sources.warc import (
-        crawl_text_dedup_gate,
-    )
-
-    docs = (
-        _t(spark, sf_dir, "documents").select("doc_id")
-    )
-
-    def build(batches):
-        import pandas as pd
-
-        def craft(did):
-            g = did // 3
-            html = (
-                f"<html><body><p>t{g} w{(g * 7) % 100}</p>"
-                f"</body></html>"
-            ).encode()
-            http = (
-                b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
-                + html
-            )
-            return (
-                b"WARC/1.0\r\nWARC-Type: response\r\n"
-                b"WARC-Record-ID: <urn:uuid:s>\r\n"
-                b"WARC-Date: 2024-01-01T00:00:00Z\r\n"
-                + f"WARC-Target-URI: https://s.ex/p{did}\r\n".encode()
-                + b"Content-Type: application/http; msgtype=response"
-                b"\r\nContent-Length: "
-                + str(len(http)).encode() + b"\r\n\r\n"
-                + http + b"\r\n\r\n"
-            )
-
-        for pdf in batches:
-            ids = [int(d) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": [craft(d) for d in ids]}
-            )
-
-    built = docs.mapInPandas(build, "doc_id long, payload binary")
-    kept = crawl_text_dedup_gate(built)
-    return kept.agg(
-        F.count(F.lit(1)).cast("long").alias("n_unique"),
-        F.sum(F.col("content_hash").bitwiseAND(F.lit(2097151)))
-        .cast("long").alias("sum_hash_low"),
-        F.sum(F.length("text")).cast("long").alias("sum_len"),
-    )
-
-
-STREAM_CRAWL_INGEST_SQL = f"""
-WITH t AS (
-  SELECT DISTINCT 't' || CAST(doc_id // 3 AS VARCHAR) || ' w'
-       || CAST(((doc_id // 3) * 7) % 100 AS VARCHAR) AS text
-  FROM documents
-)
-SELECT CAST(COUNT(*) AS BIGINT) AS n_unique,
-       CAST(SUM({SQL_H60.format(x='text')} & 2097151) AS BIGINT)
-         AS sum_hash_low,
-       CAST(SUM(length(text)) AS BIGINT) AS sum_len
-FROM t
-"""
-
-
 def audio_fingerprint_census(spark, sf_dir):
     """Spectral fingerprinting at CORPUS grain (r15): every document
     crafts a bin-exact PCM16 tone (bin 1 + doc_id%20 of a 256-sample
@@ -3680,7 +981,7 @@ def audio_fingerprint_census(spark, sf_dir):
     )
 
     docs = (
-        _t(spark, sf_dir, "documents").select("doc_id")
+        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     )
 
     def build(batches):
@@ -3724,29 +1025,6 @@ def audio_fingerprint_census(spark, sf_dir):
         )
         .orderBy("peak_bin")
     )
-
-
-AUDIO_FINGERPRINT_CENSUS_SQL = """
-SELECT CAST(1 + doc_id % 20 AS INTEGER) AS peak_bin,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(2 + doc_id % 5) AS BIGINT) AS sum_windows,
-       CAST(COUNT(*) AS BIGINT) AS n_uniform
-FROM documents GROUP BY 1 ORDER BY peak_bin
-"""
-
-
-def bpe_learned_merges(spark, sf_dir):
-    """Full iterative BPE tokenizer training over the corpus (r15) —
-    six learned merges, each a (pair-count aggregate over the
-    distinct-word table) -> (argmax) -> (merge rewrite) round
-    (functions/text.py learn_bpe_merges; bpe_merge_candidates is this
-    loop's step 1 only).  The oracle unrolls the same six rounds as
-    chained CTEs over the identical double-space merge encoding, so
-    the iterative control flow itself is what's being graded."""
-    from parquet_converters_spark.functions.text import learn_bpe_merges
-
-    docs = _t(spark, sf_dir, "documents")
-    return learn_bpe_merges(docs, text_col="text", steps=6).orderBy("step")
 
 
 def _bpe_round_sql(i: int) -> str:
@@ -3797,25 +1075,6 @@ ORDER BY step
 )
 
 
-def bpe_token_census(spark, sf_dir):
-    """The APPLY half of BPE tokenizer training (r15): learn the six
-    merges, encode the corpus with them, and census the top-30
-    resulting tokens by total corpus frequency
-    (functions/text.py bpe_token_counts) — the merge table is only
-    useful if encoding with it is itself distributable, and here the
-    encode IS the learning loop's final vocabulary table, one more
-    explode + hash aggregate.  Oracle: the same six rounds unrolled
-    as CTEs, then the same final census."""
-    from parquet_converters_spark.functions.text import bpe_token_counts
-
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        bpe_token_counts(docs, text_col="text", steps=6)
-        .orderBy(F.desc("n"), "token")
-        .limit(30)
-    )
-
-
 BPE_TOKEN_CENSUS_SQL = (
     BPE_LEARNED_MERGES_SQL.rsplit("SELECT CAST(step", 1)[0]
     + """
@@ -3824,90 +1083,6 @@ FROM (SELECT unnest(string_split(sym, '  ')) AS tok, freq FROM w6)
 GROUP BY 1 ORDER BY n DESC, token LIMIT 30
 """
 )
-
-
-def audio_fp_dedup(spark, sf_dir):
-    """Cross-container audio dedup by spectral fingerprint (r15):
-    documents sharing ``doc_id // 3`` carry the SAME bin-exact tone
-    packed into ROTATING containers (WAV/AU/AIFF by doc_id % 3); the
-    fingerprint chain hash must merge them — and every other doc with
-    the same (bin, window-count) construction — into one group with
-    all three containers present.  This is the near-dup promise of
-    the fingerprint at volume: identical audio, different bytes, one
-    hash-groupBy shuffle on the bounded fp_hash.  Oracle: the chain
-    hash in closed form — the Horner fold of a constant-bin
-    fingerprint collapses to ``(k+1) * sum(P^i) mod M`` (ring
-    homomorphism), so SQL needs only HUGEINT geometric-sum
-    constants."""
-    from parquet_converters_spark.functions.audio_fingerprint import (
-        audio_fingerprints,
-    )
-
-    docs = (
-        _t(spark, sf_dir, "documents").select("doc_id")
-    )
-
-    def build(batches):
-        import math as _m
-
-        import pandas as pd
-
-        from parquet_converters_spark.functions.audio_codecs import (
-            encode_aiff,
-            encode_au,
-        )
-        from parquet_converters_spark.functions.media_codecs import (
-            encode_wav,
-        )
-
-        enc = [encode_wav, encode_au, encode_aiff]
-
-        def payload(did):
-            q, r = did // 3, did % 3
-            k, nwin = 1 + q % 20, 2 + q % 5
-            pcm = [
-                int(round(9000 * _m.sin(2 * _m.pi * k * n / 256)))
-                for n in range(256 * nwin)
-            ]
-            return enc[r](8000, pcm)
-
-        for pdf in batches:
-            ids = [int(d) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {"media_id": ids, "payload": [payload(d) for d in ids]}
-            )
-
-    built = docs.mapInPandas(build, "media_id long, payload binary")
-    fp = audio_fingerprints(built)
-    return (
-        fp.groupBy("fp_hash")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct(F.col("media_id") % 3).alias("n_containers"),
-            F.sum("media_id").alias("sum_id"),
-        )
-        .orderBy("fp_hash")
-    )
-
-
-AUDIO_FP_DEDUP_SQL = """
-WITH f AS (
-  SELECT doc_id,
-         CAST(CAST(2 + (doc_id // 3) % 20 AS HUGEINT)
-              * (CASE 2 + (doc_id // 3) % 5
-                   WHEN 2 THEN CAST(1000004 AS HUGEINT)
-                   WHEN 3 THEN CAST(1000007000013 AS HUGEINT)
-                   WHEN 4 THEN CAST(1000010000034000040 AS HUGEINT)
-                   WHEN 5 THEN 1000013000064000142000121
-                   ELSE 1000016000103000334000547000364 END)
-              % 2305843009213693951 AS BIGINT) AS fp_hash
-  FROM documents
-)
-SELECT fp_hash, CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(COUNT(DISTINCT doc_id % 3) AS BIGINT) AS n_containers,
-       CAST(SUM(doc_id) AS BIGINT) AS sum_id
-FROM f GROUP BY fp_hash ORDER BY fp_hash
-"""
 
 
 def video_dhash_census(spark, sf_dir):
@@ -3926,7 +1101,7 @@ def video_dhash_census(spark, sf_dir):
     )
 
     docs = (
-        _t(spark, sf_dir, "documents").select("doc_id")
+        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     )
 
     def build(batches):
@@ -3972,103 +1147,6 @@ def video_dhash_census(spark, sf_dir):
         )
         .orderBy("frame_index")
     )
-
-
-def stream_image_dedup(spark, sf_dir):
-    """Perceptual exactly-once in batch-symmetric form (the
-    stream_dedup pattern applied to images): every 5 consecutive
-    doc_ids craft the SAME image (a dHash-realizing BMP keyed by
-    doc_id//5), the gate keeps the first per hash
-    (functions/image_fingerprint.image_dedup_gate; the streaming leg —
-    dropDuplicatesWithinWatermark on the hash over a duplicated file
-    stream — is pytest-gated in tests/test_image_fingerprint.py), and
-    the output aggregates hash-level facts only (count/popcount/low
-    bits) so it is deterministic no matter which copy survived."""
-    from parquet_converters_spark.functions.image_fingerprint import (
-        image_dedup_gate,
-    )
-
-    docs = (
-        _t(spark, sf_dir, "documents").select("doc_id")
-    )
-
-    def build(batches):
-        import pandas as pd
-
-        from parquet_converters_spark.functions.image_fingerprint import (
-            bmp_realizing_dhash,
-        )
-
-        def target(did):
-            q = did // 5
-            u = ((q * 2654435761) % (1 << 32)) << 32
-            u |= ((q + 1) * 2246822519) % (1 << 32)
-            return u
-
-        for pdf in batches:
-            ids = [int(d) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "payload": [bmp_realizing_dhash(target(d)) for d in ids],
-                }
-            )
-
-    built = docs.mapInPandas(build, "media_id long, payload binary")
-    kept = image_dedup_gate(built)
-    return kept.agg(
-        F.count(F.lit(1)).alias("n_unique"),
-        F.sum(F.bit_count("dhash")).cast("long").alias("sum_pop"),
-        F.sum(F.col("dhash").bitwiseAND(F.lit(2097151)))
-        .cast("long")
-        .alias("sum_low"),
-    )
-
-
-STREAM_IMAGE_DEDUP_SQL = """
-WITH h AS (
-  SELECT DISTINCT
-         CAST(CASE WHEN u >= 9223372036854775808
-                   THEN u - 18446744073709551616
-                   ELSE u END AS BIGINT) AS dhash
-  FROM (
-    SELECT CAST(doc_id // 5 AS HUGEINT)
-             * 2654435761 % 4294967296 * 4294967296
-           + (CAST(doc_id // 5 + 1 AS HUGEINT)
-             * 2246822519 % 4294967296) AS u
-    FROM documents)
-)
-SELECT CAST(COUNT(*) AS BIGINT) AS n_unique,
-       CAST(SUM(bit_count(dhash)) AS BIGINT) AS sum_pop,
-       CAST(SUM(dhash & 2097151) AS BIGINT) AS sum_low
-FROM h
-"""
-
-
-VIDEO_DHASH_CENSUS_SQL = """
-WITH fr AS (
-  SELECT doc_id, ff.f AS frame_index
-  FROM documents, (SELECT 0 AS f UNION ALL SELECT 1) ff
-), t AS (
-  SELECT doc_id, frame_index,
-         CAST(CASE WHEN u >= 9223372036854775808
-                   THEN u - 18446744073709551616
-                   ELSE u END AS BIGINT) AS h
-  FROM (
-    SELECT doc_id, frame_index,
-           CAST(2*doc_id + frame_index AS HUGEINT)
-             * 2654435761 % 4294967296 * 4294967296
-           + (CAST(2*doc_id + frame_index + 1 AS HUGEINT)
-             * 2246822519 % 4294967296) AS u
-    FROM fr)
-)
-SELECT CAST(frame_index AS INTEGER) AS frame_index,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(bit_count(h)) AS BIGINT) AS sum_pop,
-       CAST(SUM(h & 2097151) AS BIGINT) AS sum_low,
-       CAST(SUM(doc_id) AS BIGINT) AS sum_id
-FROM t GROUP BY 1 ORDER BY frame_index
-"""
 
 
 _PROBE_CORPUS_CACHE = []
@@ -4367,279 +1445,6 @@ def _probe_fixture_corpus():
     return payloads, expected
 
 
-def multimodal_transcode(spark, sf_dir):
-    """The audio sink path end-to-end as a driver row: decode the
-    mixed fixture corpus (WAV/AU/AIFF/FLAC), re-encode through the
-    production FLAC encoder (functions/flac_encoder.py, LPC + Rice
-    partition search), decode THAT back with the from-spec decoder
-    (full CRC-8/CRC-16/MD5 ladder — a failed ladder raises and reds
-    the row), and report the per-file audio identity.  Oracle: the
-    metadata RECORDED when external tools authored each fixture —
-    the roundtrip must be exact, so the far side of two codec hops
-    equals the authoring parameters."""
-    from pyspark.sql.types import (
-        BinaryType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    corpus = _probe_fixture_corpus()
-    if corpus is None:
-        raise RuntimeError(
-            "multimodal_transcode needs the tests/ fixture modules"
-        )
-    payloads, expected = corpus
-    audio_ids = {
-        row["media_id"] for row in expected if row["kind"] == "audio"
-        and row["format"] in ("wav", "au", "aiff", "flac", "ogg/flac")
-    }
-    rows = [(mid, p) for mid, p in payloads if mid in audio_ids]
-    df = spark.createDataFrame(
-        rows,
-        StructType([
-            StructField("media_id", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]),
-    )
-
-    from parquet_converters_spark.functions.multimodal import (
-        transcode_audio,
-    )
-
-    out_schema = StructType([
-        StructField("media_id", LongType(), False),
-        StructField("sample_rate", IntegerType(), False),
-        StructField("channels", IntegerType(), False),
-        StructField("n_frames", LongType(), False),
-        StructField("pcm_hash", LongType(), False),
-    ])
-
-    transcoded = transcode_audio(df, target="flac", block_size=1024)
-
-    def verify2(batches):
-        import pandas as pd
-
-        from parquet_converters_spark.functions.flac_codec import (
-            decode_flac,
-        )
-
-        for pdf in batches:
-            out = {k.name: [] for k in out_schema.fields}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rate, ch, samples = decode_flac(bytes(payload))
-                h = _pcm16_hash(samples)
-                out["media_id"].append(int(mid))
-                out["sample_rate"].append(rate)
-                out["channels"].append(ch)
-                out["n_frames"].append(len(samples) // ch)
-                out["pcm_hash"].append(h)
-            yield pd.DataFrame(out)
-
-    return (
-        transcoded.select("media_id", "payload")
-        .mapInPandas(verify2, out_schema)
-        .orderBy("media_id")
-    )
-
-
-def _pcm16_hash(samples) -> int:
-    """Order-sensitive PCM16 stream hash — computed identically by the
-    multimodal_transcode query (over the engine's decoded samples) and
-    its oracle (over the fixtures' RECORDED expected decodes); a
-    single definition keeps the two sides coupled by construction."""
-    h = 0
-    for s in samples:
-        h = (h * 1000003 + (s & 0xFFFF)) & 0x7FFFFFFF
-    return h
-
-
-def _multimodal_transcode_oracle() -> str | None:
-    """VALUES oracle from fixture-RECORDED metadata plus the expected
-    PCM16 stream hash computed from the fixtures' recorded expected
-    decodes (authored by CPython audioop / the independent test-side
-    FLAC encoder's input samples) — never from the engine's codecs."""
-    corpus = _probe_fixture_corpus()
-    if corpus is None:
-        return None
-    try:
-        import os as _os
-        import sys as _sys
-
-        _root = _os.path.dirname(
-            _os.path.dirname(_os.path.abspath(__file__))
-        )
-        if _root not in _sys.path:
-            _sys.path.insert(0, _root)
-        from tests.audio_fixtures import VECTORS as AUDIO
-    except Exception:
-        return None
-    payloads, expected = corpus
-    # fixture rows were added in sorted(AUDIO) order starting at id 0
-    rows = []
-    for mid, key in enumerate(sorted(AUDIO)):
-        v = AUDIO[key]
-        pcm = v["pcm16"]
-        h = _pcm16_hash(pcm)
-        rows.append((mid, v["rate"], v["channels"],
-                     len(pcm) // v["channels"], h))
-    # the two flac_craft-authored FLAC payloads follow the image
-    # fixtures; their INPUT samples are the recorded expectation
-    flac_rows = [r for r in expected if r["format"] == "flac"]
-    for i, r in enumerate(flac_rows):
-        mid = r["media_id"]
-        nsamp = int(round(r["duration_s"] * r["sample_rate"]))
-        pcm = [((7 * k + i) % 200) - 100 for k in range(nsamp)]
-        h = _pcm16_hash(pcm)
-        rows.append((mid, r["sample_rate"], r["channels"], nsamp, h))
-    # the Ogg-FLAC payload (r14): its recorded input samples are the
-    # corpus construction's own formula
-    for r in expected:
-        if r["format"] == "ogg/flac":
-            nsamp = int(round(r["duration_s"] * r["sample_rate"]))
-            pcm = [((11 * k) % 300) - 150 for k in range(nsamp)]
-            rows.append((r["media_id"], r["sample_rate"],
-                         r["channels"], nsamp, _pcm16_hash(pcm)))
-    rows.sort()
-    values = ", ".join(
-        f"({a}, {b}, {c}, {d}, {e})" for a, b, c, d, e in rows
-    )
-    return (
-        "SELECT CAST(col0 AS BIGINT) AS media_id, "
-        "CAST(col1 AS INTEGER) AS sample_rate, "
-        "CAST(col2 AS INTEGER) AS channels, "
-        "CAST(col3 AS BIGINT) AS n_frames, "
-        "CAST(col4 AS BIGINT) AS pcm_hash "
-        f"FROM (VALUES {values}) AS t(col0, col1, col2, col3, col4) "
-        "ORDER BY media_id"
-    )
-
-
-# Registered as the CALLABLE, resolved at oracle_sql() time (r13
-# ADVICE: building it here ran two flac_craft encodes and mutated
-# sys.path on every `import queries` — importing must stay
-# side-effect free).
-MULTIMODAL_TRANSCODE_SQL = _multimodal_transcode_oracle
-
-
-def audio_resample_check(spark, sf_dir):
-    """The resampler's integer interpolation checked against CLOSED
-    FORMS: constant and ramp WAV payloads (parameters drawn from the
-    documents table) resampled 8 kHz -> 16 kHz through the full
-    decode -> _resample_pcm16 -> encode -> decode path; the oracle
-    recomputes every output sample from the interpolation formula's
-    closed form in SQL (a constant stays itself; a slope-s ramp's
-    output sample i is ``(s*i + 1) // 2`` at a 1:2 upsample) and
-    aggregates the same order-sensitive checksums."""
-    from pyspark.sql.types import (
-        BinaryType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    # ordered limit: a bare .limit() takes arbitrary rows per
-    # partition ordering — the oracle's ORDER BY doc_id LIMIT must
-    # see the same 24
-    docs = (
-        _t(spark, sf_dir, "documents").select("doc_id")
-        .orderBy("doc_id").limit(24)
-    )
-    params = [(int(r["doc_id"]),) for r in docs.collect()]
-
-    from parquet_converters_spark.functions.media_codecs import encode_wav
-
-    n_in = 200
-    rows = []
-    for (doc_id,) in params:
-        if doc_id % 2 == 0:
-            val = (doc_id * 37) % 20000 - 10000
-            pcm = [val] * n_in
-        else:
-            slope = doc_id % 7 + 1
-            pcm = [slope * i for i in range(n_in)]
-        rows.append((doc_id, bytearray(encode_wav(8000, pcm))))
-    df = spark.createDataFrame(
-        rows,
-        StructType([
-            StructField("media_id", LongType(), False),
-            StructField("payload", BinaryType(), False),
-        ]),
-    )
-
-    from parquet_converters_spark.functions.multimodal import (
-        resample_audio,
-    )
-
-    out_schema = StructType([
-        StructField("media_id", LongType(), False),
-        StructField("sample_rate", IntegerType(), False),
-        StructField("n_samples", LongType(), False),
-        StructField("sum_s", LongType(), False),
-        StructField("wsum_s", LongType(), False),
-    ])
-
-    def census(batches):
-        import pandas as pd
-
-        from parquet_converters_spark.functions.media_codecs import (
-            decode_wav,
-        )
-
-        for pdf in batches:
-            out = {k.name: [] for k in out_schema.fields}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rate, _ch, samples = decode_wav(bytes(payload))
-                out["media_id"].append(int(mid))
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(len(samples))
-                out["sum_s"].append(sum(samples))
-                out["wsum_s"].append(
-                    sum((i + 1) * s for i, s in enumerate(samples))
-                )
-            yield pd.DataFrame(out)
-
-    return (
-        resample_audio(df, 16000)
-        .select("media_id", "payload")
-        .mapInPandas(census, out_schema)
-        .orderBy("media_id")
-    )
-
-
-# 1:2 upsample of a slope-s ramp: position of output i is i/2, so
-# even outputs hit input samples (s*(i/2)) and odd outputs are the
-# midpoint (s*(i-1)/2 + s*(i+1)/2)/2 + round-half-up on dst=16000
-# = (s*i + 1) // 2 for ALL i (even: s*i/2 exactly).  Output length =
-# n_in * 2.
-AUDIO_RESAMPLE_CHECK_SQL = """
-WITH params AS (
-  SELECT doc_id FROM documents ORDER BY doc_id LIMIT 24
-), expanded AS (
-  SELECT p.doc_id,
-         i,
-         CASE WHEN p.doc_id % 2 = 0
-              THEN (p.doc_id * 37) % 20000 - 10000
-              -- final output interpolates past the last input sample:
-              -- the resampler clamps to it (k1 = min(k+1, n-1))
-              WHEN i = 399 THEN (p.doc_id % 7 + 1) * 199
-              ELSE ((p.doc_id % 7 + 1) * i + 1) // 2
-         END AS s
-  FROM params p, unnest(range(0, 400)) AS t(i)
-)
-SELECT doc_id AS media_id,
-       16000 AS sample_rate,
-       CAST(count(*) AS BIGINT) AS n_samples,
-       CAST(sum(s) AS BIGINT) AS sum_s,
-       CAST(sum((i + 1) * s) AS BIGINT) AS wsum_s
-FROM expanded
-GROUP BY doc_id
-ORDER BY media_id
-"""
-
-
 def multimodal_probe(spark, sf_dir):
     """Header-only media triage (functions/media_probe.py) over the
     deterministic fixture corpus: the r12 probe surface's driver row.
@@ -4690,267 +1495,6 @@ def multimodal_probe(spark, sf_dir):
     ).orderBy("media_id")
 
 
-def _multimodal_probe_oracle() -> str | None:
-    corpus = _probe_fixture_corpus()
-    if corpus is None:
-        return None  # fixtures unavailable -> rows-only check
-    _, expected = corpus
-
-    def lit(v, sentinel):
-        if v is None:
-            return repr(sentinel)  # mirror the query's -1 coalesce
-        if isinstance(v, str):
-            return "'" + v.replace("'", "''") + "'"
-        return repr(v)
-
-    cols = ["media_id", "format", "kind", "width", "height", "channels",
-            "sample_rate", "bit_depth", "bit_rate", "duration_s",
-            "codec", "fps", "n_frames", "n_bytes"]
-    sentinels = {c: -1.0 if c in ("duration_s", "fps") else
-                 "-" if c == "codec" else -1 for c in cols}
-    values = ", ".join(
-        "(" + ", ".join(lit(row[c], sentinels[c]) for c in cols) + ")"
-        for row in expected
-    )
-    return (
-        "SELECT CAST(col0 AS BIGINT) AS media_id, "
-        "CAST(col1 AS VARCHAR) AS format, "
-        "CAST(col2 AS VARCHAR) AS kind, "
-        "CAST(col3 AS INTEGER) AS width, "
-        "CAST(col4 AS INTEGER) AS height, "
-        "CAST(col5 AS INTEGER) AS channels, "
-        "CAST(col6 AS INTEGER) AS sample_rate, "
-        "CAST(col7 AS INTEGER) AS bit_depth, "
-        "CAST(col8 AS INTEGER) AS bit_rate, "
-        "CAST(col9 AS DOUBLE) AS duration_s, "
-        "CAST(col10 AS VARCHAR) AS codec, "
-        "CAST(col11 AS DOUBLE) AS fps, "
-        "CAST(col12 AS BIGINT) AS n_frames, "
-        "CAST(col13 AS BIGINT) AS n_bytes "
-        f"FROM (VALUES {values}) AS t(col0, col1, col2, col3, col4, "
-        "col5, col6, col7, col8, col9, col10, col11, col12, col13) "
-        "ORDER BY media_id"
-    )
-
-
-# CALLABLE oracle, resolved lazily (see MULTIMODAL_TRANSCODE_SQL).
-MULTIMODAL_PROBE_SQL = _multimodal_probe_oracle
-
-
-def stream_windowed_agg(spark, sf_dir):
-    ev = _events(spark, sf_dir)
-    out = windowed_event_counts(ev, "1 hour")
-    return out.select(
-        F.unix_micros("window_start").alias("window_start_us"),
-        "event_type",
-        "n_events",
-        F.col("value_sum").cast("double").alias("value_sum"),
-    ).orderBy("window_start_us", "event_type")
-
-
-STREAM_WINDOWED_AGG_SQL = """
-SELECT epoch_us(CAST(time_bucket(INTERVAL '1 hour', ts) AS TIMESTAMP)) AS window_start_us,
-       event_type,
-       count(*) AS n_events,
-       round(sum(value), 6) AS value_sum
-FROM events
-GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
-
-def stream_sessionize(spark, sf_dir):
-    ev = _events(spark, sf_dir)
-    out = sessionize(ev, gap_minutes=30)
-    return out.select(
-        "user_id",
-        "session_id",
-        F.unix_micros("session_start").alias("session_start_us"),
-        F.unix_micros("session_end").alias("session_end_us"),
-        "n_events",
-        F.col("value_sum").cast("double").alias("value_sum"),
-    ).orderBy("user_id", "session_id")
-
-
-STREAM_SESSIONIZE_SQL = """
-WITH flagged AS (
-  SELECT user_id, event_id, ts, value,
-         CASE WHEN lag(ts) OVER w IS NULL
-                   OR epoch_us(CAST(ts AS TIMESTAMP))
-                      - epoch_us(CAST(lag(ts) OVER w AS TIMESTAMP))
-                      > 1800 * 1000000
-              THEN 1 ELSE 0 END AS _new
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), sess AS (
-  SELECT user_id, ts, value,
-         CAST(sum(_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS session_id
-  FROM flagged
-)
-SELECT user_id, session_id,
-       epoch_us(CAST(min(ts) AS TIMESTAMP)) AS session_start_us,
-       epoch_us(CAST(max(ts) AS TIMESTAMP)) AS session_end_us,
-       count(*) AS n_events,
-       round(sum(value), 6) AS value_sum
-FROM sess GROUP BY user_id, session_id
-ORDER BY user_id, session_id
-"""
-
-
-def stream_running_totals(spark, sf_dir):
-    """Custom stateful operator (applyInPandasWithState) in its batch
-    form: per-user running totals — the streaming path is exercised
-    across triggers in tests/test_functions.py."""
-    ev = _events(spark, sf_dir)
-    return running_user_totals(ev).orderBy("user_id")
-
-
-STREAM_RUNNING_TOTALS_SQL = """
-SELECT user_id, count(*) AS n_events, round(sum(value), 6) AS value_sum
-FROM events GROUP BY user_id ORDER BY user_id
-"""
-
-
-def stream_join_pairs(spark, sf_dir):
-    """Stream-stream band join in its batch form: purchases matched to
-    same-user views within 30 minutes.  The streaming path (watermarks
-    on both sides bounding the join state) runs across triggers in
-    tests/test_functions.py."""
-    from parquet_converters_spark.streaming.events import view_purchase_join
-
-    ev = _events(spark, sf_dir)
-    return view_purchase_join(
-        ev.filter(F.col("event_type") == "view"),
-        ev.filter(F.col("event_type") == "purchase"),
-        band_minutes=30,
-    ).orderBy("view_id", "purchase_id")
-
-
-STREAM_JOIN_PAIRS_SQL = """
-SELECT v.user_id AS user_id, v.event_id AS view_id, p.event_id AS purchase_id,
-       epoch_us(p.ts) - epoch_us(v.ts) AS gap_us
-FROM (SELECT * FROM events WHERE event_type = 'view') v
-JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-  ON v.user_id = p.user_id
- AND p.ts > v.ts AND epoch_us(p.ts) - epoch_us(v.ts) <= 1800000000
-ORDER BY view_id, purchase_id
-"""
-
-
-# ===========================================================================
-# Non-SQL-expressible entries (driver records rows-only checks)
-# ===========================================================================
-
-def touch_scan_v2(spark, sf_dir):
-    """S1-S3: fixed-width binary scan of the reference v2 fixture.
-    Oracle: a VALUES literal generated by the independent stdlib-struct
-    decoder (tests/reference_decode.py) over the same read-only fixture
-    — DuckDB cannot read the custom binary format, but it can verify
-    every value the scan produces against a second implementation."""
-    from parquet_converters_spark.sources import read_touches
-
-    return read_touches(
-        spark, "/root/reference/tests/touches_v2/touchesData.0"
-    ).select("synapse_id", "pre_neuron_id", "post_neuron_id", "branch_type")
-
-
-def _touch_scan_v2_oracle() -> str | None:
-    try:
-        import os as _os
-        import sys as _sys
-
-        _sys.path.insert(
-            0, _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-        )
-        from tests.reference_decode import decode_file
-    except Exception:
-        return None  # decoder or fixture unavailable -> rows-only check
-    rows = sorted(
-        (
-            r["synapse_id"],
-            r["pre_neuron_id"],
-            r["post_neuron_id"],
-            r["branch_type"],
-        )
-        for r in decode_file("/root/reference/tests/touches_v2/touchesData.0")
-    )
-    values = ", ".join(f"({a}, {b}, {c}, {d})" for a, b, c, d in rows)
-    return (
-        "SELECT CAST(col0 AS BIGINT) AS synapse_id, "
-        "CAST(col1 AS INT) AS pre_neuron_id, "
-        "CAST(col2 AS INT) AS post_neuron_id, "
-        "CAST(col3 AS SMALLINT) AS branch_type "
-        f"FROM (VALUES {values}) AS t(col0, col1, col2, col3) "
-        "ORDER BY synapse_id"
-    )
-
-
-try:
-    TOUCH_SCAN_V2_SQL = _touch_scan_v2_oracle()
-except FileNotFoundError:
-    TOUCH_SCAN_V2_SQL = None  # v2 fixture absent -> rows-only check
-
-
-def multimodal_decode(spark, sf_dir):
-    """Multimodal decode plumbing with the deterministic fake decoder
-    (mapInPandas, Arrow-batched).  Features are re-cast float->double so
-    the oracle can replicate the float32 truncation with FLOAT4 casts."""
-    docs = _t(spark, sf_dir, "documents")
-    from parquet_converters_spark.functions.multimodal import decode_media
-
-    out = decode_media(documents_as_media(docs), n_features=8, fake=True)
-    return out.select(
-        "media_id",
-        "media_type",
-        "width",
-        "height",
-        "channels",
-        F.posexplode(F.col("features").cast("array<double>")).alias(
-            "feat_idx", "feature"
-        ),
-    ).orderBy("media_id", "feat_idx")
-
-
-def _sql_md5_byte(i: int, x: str = "text") -> str:
-    """DuckDB expression for byte ``i`` of md5(x) as an integer."""
-    return f"CAST(concat('0x', substr(md5({x}), {2 * i + 1}, 2)) AS INT)"
-
-
-MULTIMODAL_DECODE_SQL = f"""
-SELECT doc_id AS media_id, 'image' AS media_type,
-       1 + {_sql_md5_byte(0)} % 64 AS width,
-       1 + {_sql_md5_byte(1)} % 64 AS height,
-       1 + {_sql_md5_byte(2)} % 4 AS channels,
-       CAST(idx.i AS INT) AS feat_idx,
-       CASE idx.i {" ".join(
-           f"WHEN {i} THEN CAST(CAST(({_sql_md5_byte((3 + i) % 16)} / 255.0) * 2 - 1 AS FLOAT4) AS DOUBLE)"
-           for i in range(8)
-       )} END AS feature
-FROM documents CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS i) idx
-ORDER BY media_id, feat_idx
-"""
-
-
-def multimodal_frames(spark, sf_dir):
-    """Video frame-sampling plumbing (batch-side 1:N explode in
-    mapInPandas) with the deterministic fake sampler."""
-    docs = _t(spark, sf_dir, "documents")
-    from parquet_converters_spark.functions.multimodal import sample_frames
-
-    return sample_frames(
-        documents_as_media(docs), every_ms=1000, max_frames=4, fake=True
-    ).drop("payload").orderBy("media_id", "frame_index")
-
-
-MULTIMODAL_FRAMES_SQL = f"""
-SELECT doc_id AS media_id,
-       CAST(unnest(generate_series(0, {_sql_md5_byte(0)} % 4)) AS INT) AS frame_index,
-       CAST(unnest(generate_series(0, {_sql_md5_byte(0)} % 4)) * 1000 AS BIGINT) AS frame_ts_ms
-FROM documents ORDER BY media_id, frame_index
-"""
-
-
 # ===========================================================================
 # Round-2 additions: dedup funnel end-to-end, banded simhash pairs,
 # bucketed range join, corpus analytics, cohort/funnel, streaming dedup
@@ -4961,13 +1505,13 @@ def dedup_simhash_pairs(spark, sf_dir):
     32 bits, 4 bands of 8).  The oracle is a brute-force all-pairs
     hamming scan — feasible at oracle scale, and equality PROVES the
     pigeonhole banding loses no qualifying pair."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return simhash_neardup_pairs(
         docs,
         bits=32,
         bands=4,
         max_hamming=3,
-        sig=_dedup_cached(spark, sf_dir, "simhash"),
+        sig=simhash(docs, bits=32),
     ).orderBy("id_a", "id_b")
 
 
@@ -4989,7 +1533,7 @@ def dedup_components_star(spark, sf_dir):
     (operators/graph.py)."""
     from parquet_converters_spark.operators.graph import connected_components
 
-    pairs = _dedup_cached(spark, sf_dir, "docs_pairs")
+    pairs = _lsh_pairs(spark, sf_dir)
     return (
         connected_components(pairs, method="star", max_iter=15)
         .select(
@@ -5003,10 +1547,10 @@ def dedup_survivors(spark, sf_dir):
     """End of the dedup funnel: the doc ids a training-data pipeline
     actually keeps — exact dedup to min-id representatives, MinHash-LSH
     pairs over representatives, connected components, one survivor per
-    cluster (functions/dedup.py near_dedup_survivors, whose checkpoint
-    is shared per session like the candidate sets)."""
+    cluster (functions/dedup.py near_dedup_survivors)."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return (
-        _dedup_cached(spark, sf_dir, "survivors")
+        near_dedup_survivors(docs)
         .select("doc_id")
         .orderBy("doc_id")
     )
@@ -5077,600 +1621,6 @@ def range_join_error_views(spark, sf_dir):
     )
 
 
-RANGE_JOIN_ERROR_VIEWS_SQL = """
-SELECT err.event_id AS error_id, count(*) AS n_views,
-       min(v.event_id) AS first_view_id
-FROM (SELECT user_id, event_id, epoch_us(ts) AS p
-      FROM events WHERE event_type = 'view') v
-JOIN (SELECT user_id, event_id, epoch_us(ts) AS lo
-      FROM events WHERE event_type = 'error') err
-  ON v.user_id = err.user_id AND v.p >= err.lo AND v.p < err.lo + 3600000000
-GROUP BY err.event_id ORDER BY error_id
-"""
-
-
-def text_top_bigrams(spark, sf_dir):
-    """Corpus bigram frequency top-20 (word 2-shingles; explode into a
-    two-level hash aggregate with map-side partials)."""
-    from parquet_converters_spark.functions.text import shingles
-
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        docs.select(F.explode(shingles("text", 2)).alias("bigram"))
-        .groupBy("bigram")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), "bigram")
-        .limit(20)
-    )
-
-
-TEXT_TOP_BIGRAMS_SQL = f"""
-SELECT bigram, count(*) AS n
-FROM (SELECT unnest({_sql_shingles('text', 2)}) AS bigram FROM documents) _b
-GROUP BY bigram ORDER BY n DESC, bigram LIMIT 20
-"""
-
-
-def text_quality_funnel(spark, sf_dir):
-    """The filter funnel a training-data pipeline runs before dedup:
-    docs surviving each gate (length band, quality score) and all gates
-    combined — one conditional-aggregation pass, no per-gate scans."""
-    docs = _t(spark, sf_dir, "documents")
-    q = quality_score("text")
-    len_ok = (F.length("text") >= 50) & (F.length("text") <= 10000)
-    return docs.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.when(len_ok, 1).otherwise(0)).cast("long").alias("n_len_ok"),
-        F.sum(F.when(q >= 0.5, 1).otherwise(0)).cast("long").alias("n_quality_ok"),
-        F.sum(F.when(len_ok & (q >= 0.5), 1).otherwise(0))
-        .cast("long")
-        .alias("n_kept"),
-    )
-
-
-TEXT_QUALITY_FUNNEL_SQL = f"""
-SELECT count(*) AS n_docs,
-       CAST(sum(CASE WHEN length(text) BETWEEN 50 AND 10000 THEN 1 ELSE 0 END) AS BIGINT) AS n_len_ok,
-       CAST(sum(CASE WHEN q >= 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS n_quality_ok,
-       CAST(sum(CASE WHEN length(text) BETWEEN 50 AND 10000 AND q >= 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-FROM (
-  SELECT text,
-    (CASE WHEN length(text) BETWEEN 50 AND 10000 THEN 0.25 ELSE 0.0 END)
-    + (CASE WHEN CAST(length(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g')) AS DOUBLE)
-            / greatest(length(text), 1) >= 0.8 THEN 0.25 ELSE 0.0 END)
-    + (CASE WHEN CAST(list_sum(list_transform(toks, t -> length(t))) AS DOUBLE)
-            / greatest(len(toks), 1) BETWEEN 3 AND 10 THEN 0.25 ELSE 0.0 END)
-    + (CASE WHEN len(list_intersect(toks, {_EN_STOP_SQL})) >= 2 THEN 0.25 ELSE 0.0 END)
-    AS q
-  FROM (SELECT text, {SQL_TOKENS.format(col='text')} AS toks FROM documents) _t
-) _q
-"""
-
-
-def cohort_retention(spark, sf_dir):
-    """Cohort analysis: customers bucketed by first-order month, order
-    volume per (cohort_month, order_month).  One partition window for
-    the cohort label + one aggregation — both shuffle on o_custkey,
-    reused by AQE."""
-    orders = _t(spark, sf_dir, "orders")
-    month = (F.year("o_orderdate") * 100 + F.month("o_orderdate")).cast("int")
-    w = Window.partitionBy("o_custkey")
-    df = orders.withColumn("order_month", month).withColumn(
-        "cohort_month", F.min("order_month").over(w)
-    )
-    return (
-        df.groupBy("cohort_month", "order_month")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.countDistinct("o_custkey").alias("n_customers"),
-        )
-        .orderBy("cohort_month", "order_month")
-    )
-
-
-COHORT_RETENTION_SQL = """
-WITH m AS (
-  SELECT o_custkey,
-         CAST(year(o_orderdate) * 100 + month(o_orderdate) AS INT) AS order_month
-  FROM orders
-), c AS (
-  SELECT o_custkey, order_month,
-         min(order_month) OVER (PARTITION BY o_custkey) AS cohort_month
-  FROM m
-)
-SELECT cohort_month, order_month, count(*) AS n_orders,
-       count(DISTINCT o_custkey) AS n_customers
-FROM c GROUP BY cohort_month, order_month
-ORDER BY cohort_month, order_month
-"""
-
-
-def event_funnel(spark, sf_dir):
-    """Ordered conversion funnel over the event stream: users who
-    viewed, clicked after the view, purchased after the click
-    (min-timestamp per stage; one groupBy + one global agg)."""
-    ev = _events(spark, sf_dir)
-
-    def first(t):
-        return F.min(F.when(F.col("event_type") == t, F.col("ts")))
-
-    per_user = ev.groupBy("user_id").agg(
-        first("view").alias("t_view"),
-        first("click").alias("t_click"),
-        first("purchase").alias("t_purchase"),
-    )
-    return per_user.agg(
-        F.count(F.lit(1)).alias("n_users"),
-        F.sum(F.when(F.col("t_view").isNotNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("n_viewed"),
-        F.sum(F.when(F.col("t_click") > F.col("t_view"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_clicked_after_view"),
-        F.sum(
-            F.when(
-                (F.col("t_click") > F.col("t_view"))
-                & (F.col("t_purchase") > F.col("t_click")),
-                1,
-            ).otherwise(0)
-        )
-        .cast("long")
-        .alias("n_purchased_after_click"),
-    )
-
-
-EVENT_FUNNEL_SQL = """
-WITH per_user AS (
-  SELECT user_id,
-         min(CASE WHEN event_type = 'view' THEN ts END) AS t_view,
-         min(CASE WHEN event_type = 'click' THEN ts END) AS t_click,
-         min(CASE WHEN event_type = 'purchase' THEN ts END) AS t_purchase
-  FROM events GROUP BY user_id
-)
-SELECT count(*) AS n_users,
-       CAST(sum(CASE WHEN t_view IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_viewed,
-       CAST(sum(CASE WHEN t_click > t_view THEN 1 ELSE 0 END) AS BIGINT) AS n_clicked_after_view,
-       CAST(sum(CASE WHEN t_click > t_view AND t_purchase > t_click THEN 1 ELSE 0 END) AS BIGINT) AS n_purchased_after_click
-FROM per_user
-"""
-
-
-def stream_session_window(spark, sf_dir):
-    """Spark's NATIVE streaming sessionization (``session_window``,
-    the operator a readStream pipeline would use) in its
-    batch-symmetric form: merge events whose 30-minute gap windows
-    overlap.  Differs from the gaps-and-islands ``sessionize`` only in
-    boundary convention (a gap of exactly the window starts a new
-    session; session end = last event + gap) — the oracle mirrors
-    that convention exactly."""
-    ev = _events(spark, sf_dir)
-    return (
-        ev.groupBy("user_id", F.session_window("ts", "30 minutes"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 6).cast("double").alias("value_sum"),
-        )
-        .select(
-            "user_id",
-            F.unix_micros("session_window.start").alias("session_start_us"),
-            F.unix_micros("session_window.end").alias("session_end_us"),
-            "n_events",
-            "value_sum",
-        )
-        .orderBy("user_id", "session_start_us")
-    )
-
-
-STREAM_SESSION_WINDOW_SQL = """
-WITH flagged AS (
-  SELECT user_id, event_id, ts, value,
-         CASE WHEN lag(ts) OVER w IS NULL
-                   OR epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 1800000000
-              THEN 1 ELSE 0 END AS _new
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), sess AS (
-  SELECT user_id, ts, value,
-         sum(_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-  FROM flagged
-)
-SELECT user_id,
-       epoch_us(CAST(min(ts) AS TIMESTAMP)) AS session_start_us,
-       epoch_us(CAST(max(ts) AS TIMESTAMP)) + 1800000000 AS session_end_us,
-       count(*) AS n_events,
-       round(sum(value), 6) AS value_sum
-FROM sess GROUP BY user_id, sid
-ORDER BY user_id, session_start_us
-"""
-
-
-def multimodal_resize(spark, sf_dir):
-    """Image-resize plumbing (Arrow-batched ``mapInPandas`` 1:1 map,
-    functions/multimodal.py) with the deterministic fake decoder;
-    payload exported as hex so the oracle can rebuild the stub's
-    repeated-digest bitmap."""
-    from parquet_converters_spark.functions.multimodal import resize_media
-
-    docs = _t(spark, sf_dir, "documents")
-    out = resize_media(documents_as_media(docs), width=8, height=8, fake=True)
-    return out.select(
-        "media_id",
-        "width",
-        "height",
-        F.lower(F.hex("payload")).alias("payload_hex"),
-    ).orderBy("media_id")
-
-
-MULTIMODAL_RESIZE_SQL = """
-SELECT doc_id AS media_id, 8 AS width, 8 AS height,
-       substr(repeat(md5(text), 5), 1, 128) AS payload_hex
-FROM documents ORDER BY media_id
-"""
-
-
-def sample_split_counts(spark, sf_dir):
-    """Deterministic train/val/test assignment by content-hash bucket
-    (functions/sampling.py hash_split): a given doc_id never migrates
-    between splits as the corpus grows — the property randomSplit
-    cannot give a growing 100 TB corpus.  Narrow map + one count agg."""
-    from parquet_converters_spark.functions.sampling import hash_split
-
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        hash_split(docs, "doc_id", {"train": 80, "val": 10, "test": 10})
-        .groupBy("split")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("chars_sum"),
-        )
-        .orderBy("split")
-    )
-
-
-SAMPLE_SPLIT_SQL = f"""
-SELECT split, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS chars_sum
-FROM (
-  SELECT n_chars,
-         CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split
-  FROM (SELECT n_chars,
-               {SQL_H32.format(x='CAST(doc_id AS VARCHAR)')} % 100 AS b
-        FROM documents) _b
-) _s
-GROUP BY split ORDER BY split
-"""
-
-_CHUNK, _CHUNK_STEP = 64, 56  # 64-token windows, 8-token overlap
-
-
-def text_chunking(spark, sf_dir):
-    """Context-window preparation: overlapping token-window chunks
-    (functions/sampling.py chunk_documents — tokenize once, slide,
-    posexplode; all JVM expression-tree)."""
-    from parquet_converters_spark.functions.sampling import chunk_documents
-
-    docs = _t(spark, sf_dir, "documents")
-    return chunk_documents(
-        docs, chunk_tokens=_CHUNK, overlap=_CHUNK - _CHUNK_STEP
-    ).orderBy("doc_id", "chunk_idx")
-
-
-TEXT_CHUNKING_SQL = f"""
-WITH t AS (SELECT doc_id, {SQL_TOKENS.format(col='text')} AS toks FROM documents),
-s AS (
-  SELECT doc_id, toks,
-         unnest(generate_series(1,
-           greatest(1, CAST(ceil((len(toks) - {_CHUNK}) / CAST({_CHUNK_STEP} AS DOUBLE)) AS INT) * {_CHUNK_STEP} + 1),
-           {_CHUNK_STEP})) AS start
-  FROM t
-)
-SELECT doc_id, CAST((start - 1) // {_CHUNK_STEP} AS INT) AS chunk_idx,
-       array_to_string(toks[start : start + {_CHUNK - 1}], ' ') AS chunk_text,
-       CAST(greatest(least(len(toks) - start + 1, {_CHUNK}), 0) AS INT) AS n_tokens
-FROM s ORDER BY doc_id, chunk_idx
-"""
-
-
-def sequence_packing(spark, sf_dir):
-    """Sequence packing: docs accumulate into fixed 512-token training
-    bins by deterministic id order (functions/sampling.py
-    pack_sequences — one cumulative-sum window; shard-partitioned at
-    real scale)."""
-    from parquet_converters_spark.functions.sampling import pack_sequences
-
-    docs = _t(spark, sf_dir, "documents")
-    with_counts = docs.select(
-        "doc_id", token_count("text").alias("n_tokens")
-    )
-    return pack_sequences(with_counts, "n_tokens", budget=512).orderBy("doc_id")
-
-
-SEQUENCE_PACKING_SQL = f"""
-WITH t AS (
-  SELECT doc_id, len({SQL_TOKENS.format(col='text')}) AS n_tokens FROM documents
-), c AS (
-  SELECT doc_id, n_tokens,
-         sum(n_tokens) OVER (ORDER BY doc_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS _cum
-  FROM t
-), b AS (
-  SELECT doc_id, n_tokens, _cum,
-         CAST(floor((_cum - 1) / CAST(512 AS DOUBLE)) AS BIGINT) AS bin_id
-  FROM c
-)
-SELECT doc_id, CAST(n_tokens AS INT) AS n_tokens, bin_id,
-       CAST(sum(n_tokens) OVER (PARTITION BY bin_id ORDER BY doc_id
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            - n_tokens AS BIGINT) AS bin_offset
-FROM b ORDER BY doc_id
-"""
-
-
-def stream_sessionize_stateful(spark, sf_dir):
-    """Batch-symmetric face of the stateful-timer sessionizer
-    (streaming/events.py sessionize_stateful: applyInPandasWithState +
-    EventTimeTimeout, sessions emitted once on close; cross-trigger and
-    checkpoint-restart parity pytest-gated in tests/test_functions.py).
-    The batch path is microsecond-precision gaps-and-islands."""
-    from parquet_converters_spark.streaming.events import sessionize_stateful
-
-    ev = _events(spark, sf_dir)
-    return (
-        sessionize_stateful(ev, gap_minutes=30)
-        .select(
-            "user_id",
-            F.unix_micros("session_start").alias("session_start_us"),
-            F.unix_micros("session_end").alias("session_end_us"),
-            "n_events",
-            F.col("value_sum").cast("double").alias("value_sum"),
-        )
-        .orderBy("user_id", "session_start_us")
-    )
-
-
-STREAM_SESSIONIZE_STATEFUL_SQL = """
-WITH flagged AS (
-  SELECT user_id, event_id, ts, value,
-         CASE WHEN lag(ts) OVER w IS NULL
-                   OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-              THEN 1 ELSE 0 END AS _new
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), sess AS (
-  SELECT user_id, ts, value,
-         sum(_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-  FROM flagged
-)
-SELECT user_id,
-       epoch_us(CAST(min(ts) AS TIMESTAMP)) AS session_start_us,
-       epoch_us(CAST(max(ts) AS TIMESTAMP)) AS session_end_us,
-       count(*) AS n_events,
-       round(sum(value), 6) AS value_sum
-FROM sess GROUP BY user_id, sid
-ORDER BY user_id, session_start_us
-"""
-
-
-def interval_overlap_sessions(spark, sf_dir):
-    """Interval-overlap join (operators/range_join.py
-    bucketed_interval_join): per user, every (view-session,
-    click-session) pair whose time ranges overlap — both session sets
-    derived by 30-min-gap sessionization, intervals bucketized to 1
-    hour, exact overlap as the residual predicate.  No |L|x|R| plan."""
-    from parquet_converters_spark.operators.range_join import (
-        bucketed_interval_join,
-    )
-    from parquet_converters_spark.streaming.events import sessionize
-
-    ev = _events(spark, sf_dir)
-
-    def sessions(kind, prefix):
-        s = sessionize(ev.filter(F.col("event_type") == kind), gap_minutes=720)
-        return s.select(
-            "user_id",
-            F.unix_micros("session_start").alias(f"{prefix}_start_us"),
-            (F.unix_micros("session_end") + 1).alias(f"{prefix}_end_x"),
-        )
-
-    v, c = sessions("view", "view"), sessions("click", "click")
-    out = bucketed_interval_join(
-        v, c, "view_start_us", "view_end_x", "click_start_us", "click_end_x",
-        bucket_width=43_200_000_000, equi_keys=["user_id"],
-    )
-    return out.select(
-        "user_id", "view_start_us", F.col("click_start_us")
-    ).orderBy("user_id", "view_start_us", "click_start_us")
-
-
-INTERVAL_OVERLAP_SQL = """
-WITH flagged AS (
-  SELECT user_id, event_type, ts,
-         CASE WHEN lag(ts) OVER w IS NULL
-                   OR epoch(ts) - epoch(lag(ts) OVER w) > 43200
-              THEN 1 ELSE 0 END AS _new
-  FROM events WHERE event_type IN ('view', 'click')
-  WINDOW w AS (PARTITION BY user_id, event_type ORDER BY ts)
-), sess AS (
-  SELECT user_id, event_type, ts,
-         sum(_new) OVER (PARTITION BY user_id, event_type ORDER BY ts
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-  FROM flagged
-), spans AS (
-  SELECT user_id, event_type,
-         epoch_us(CAST(min(ts) AS TIMESTAMP)) AS start_us,
-         epoch_us(CAST(max(ts) AS TIMESTAMP)) AS end_us
-  FROM sess GROUP BY user_id, event_type, sid
-)
-SELECT v.user_id, v.start_us AS view_start_us, c.start_us AS click_start_us
-FROM (SELECT * FROM spans WHERE event_type = 'view') v
-JOIN (SELECT * FROM spans WHERE event_type = 'click') c
-  ON v.user_id = c.user_id
- AND v.start_us <= c.end_us AND c.start_us <= v.end_us
-ORDER BY v.user_id, view_start_us, click_start_us
-"""
-
-
-def text_repetition(spark, sf_dir):
-    """Gopher-style within-document repetition signals: duplicate
-    word fraction and duplicate 3-gram fraction (1 - distinct/total).
-    Pure array expressions over the bound token pipeline — one narrow
-    pass, no shuffle before the final sort."""
-    from parquet_converters_spark.functions.text import bind, shingles
-
-    docs = _t(spark, sf_dir, "documents")
-
-    def ratios(toks):
-        return F.round(
-            1
-            - F.size(F.array_distinct(toks))
-            / F.greatest(F.size(toks), F.lit(1)).cast("double"),
-            6,
-        )
-
-    return docs.select(
-        "doc_id",
-        bind(tokens("text"), ratios).alias("dup_word_frac"),
-        bind(shingles("text", 3), ratios).alias("dup_3gram_frac"),
-    ).orderBy("doc_id")
-
-
-TEXT_REPETITION_SQL = f"""
-SELECT doc_id,
-       round(1 - len(list_distinct(toks)) / CAST(greatest(len(toks), 1) AS DOUBLE), 6) AS dup_word_frac,
-       round(1 - len(list_distinct(sh)) / CAST(greatest(len(sh), 1) AS DOUBLE), 6) AS dup_3gram_frac
-FROM (SELECT doc_id, {SQL_TOKENS.format(col='text')} AS toks,
-             {_sql_shingles('text')} AS sh
-      FROM documents) _r
-ORDER BY doc_id
-"""
-
-
-def text_pii_scan(spark, sf_dir):
-    """Data-cleaning pattern scan: per-document counts of email-like,
-    URL-like, and long-digit-run substrings (the redaction pre-pass of
-    a training pipeline).  ``regexp_count`` is JVM codegen both here
-    and in the oracle."""
-    docs = _t(spark, sf_dir, "documents")
-    email = r"[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}"
-    url = r"https?://[^\s]+"
-    digits = r"[0-9]{6,}"
-    return docs.select(
-        "doc_id",
-        F.regexp_count(F.lower("text"), F.lit(email)).alias("n_emails"),
-        F.regexp_count(F.lower("text"), F.lit(url)).alias("n_urls"),
-        F.regexp_count(F.col("text"), F.lit(digits)).alias("n_digit_runs"),
-    ).orderBy("doc_id")
-
-
-TEXT_PII_SCAN_SQL = r"""
-SELECT doc_id,
-       CAST(len(regexp_extract_all(lower(text), '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}')) AS INT) AS n_emails,
-       CAST(len(regexp_extract_all(lower(text), 'https?://[^\s]+')) AS INT) AS n_urls,
-       CAST(len(regexp_extract_all(text, '[0-9]{6,}')) AS INT) AS n_digit_runs
-FROM documents ORDER BY doc_id
-"""
-
-
-def decontaminate_train(spark, sf_dir):
-    """Benchmark decontamination (functions/dedup.py
-    contamination_flags): docs with id % 20 == 0 act as the held-out
-    eval set; every remaining (training) doc is flagged when it shares
-    >= 2 word 3-gram shingles with any eval doc.  Eval shingles
-    broadcast; the training side is one explode + broadcast join +
-    per-doc count — the 100 TB table shuffles once."""
-    from parquet_converters_spark.functions.dedup import contamination_flags
-
-    docs = _t(spark, sf_dir, "documents")
-    ev = docs.filter(F.col("doc_id") % 20 == 0)
-    train = docs.filter(F.col("doc_id") % 20 != 0)
-    return contamination_flags(train, ev, n=3, min_hits=2).orderBy("doc_id")
-
-
-DECONTAMINATE_SQL = f"""
-WITH ev AS (
-  SELECT DISTINCT unnest(list_distinct({_sql_shingles('text')})) AS sh
-  FROM documents WHERE doc_id % 20 = 0
-), tr AS (
-  SELECT doc_id, unnest(list_distinct({_sql_shingles('text')})) AS sh
-  FROM documents WHERE doc_id % 20 <> 0
-), hits AS (
-  SELECT doc_id, count(*) AS n_hits FROM tr JOIN ev USING (sh) GROUP BY doc_id
-)
-SELECT d.doc_id,
-       CAST(coalesce(h.n_hits, 0) AS BIGINT) AS eval_shingle_hits,
-       coalesce(h.n_hits, 0) >= 2 AS contaminated
-FROM (SELECT doc_id FROM documents WHERE doc_id % 20 <> 0) d
-LEFT JOIN hits h USING (doc_id)
-ORDER BY d.doc_id
-"""
-
-
-def table_profile(spark, sf_dir):
-    """One-pass column profiling over orders (functions/profile.py):
-    null/distinct/min/max for every profiled column from a single scan
-    with 4k accumulators — never k passes.  Restricted to
-    integer/string columns whose string rendering is engine-identical."""
-    from parquet_converters_spark.functions.profile import profile_table
-
-    orders = _t(spark, sf_dir, "orders")
-    return profile_table(
-        orders, ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"]
-    ).orderBy("col_name")
-
-
-TABLE_PROFILE_SQL = """
-SELECT * FROM (
-  SELECT 'o_orderkey' AS col_name,
-         CAST(sum(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-         count(DISTINCT o_orderkey) AS n_distinct,
-         min(CAST(o_orderkey AS VARCHAR)) AS min_str,
-         max(CAST(o_orderkey AS VARCHAR)) AS max_str
-  FROM orders
-  UNION ALL
-  SELECT 'o_custkey',
-         CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-         count(DISTINCT o_custkey),
-         min(CAST(o_custkey AS VARCHAR)), max(CAST(o_custkey AS VARCHAR))
-  FROM orders
-  UNION ALL
-  SELECT 'o_orderstatus',
-         CAST(sum(CASE WHEN o_orderstatus IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-         count(DISTINCT o_orderstatus),
-         min(o_orderstatus), max(o_orderstatus)
-  FROM orders
-  UNION ALL
-  SELECT 'o_orderpriority',
-         CAST(sum(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-         count(DISTINCT o_orderpriority),
-         min(o_orderpriority), max(o_orderpriority)
-  FROM orders
-) _p ORDER BY col_name
-"""
-
-
-def stream_dedup(spark, sf_dir):
-    """Streaming exactly-once semantics in batch-symmetric form: 10% of
-    events re-delivered, collapsed by event_id (streaming path uses
-    dropDuplicatesWithinWatermark with bounded state — cross-trigger
-    pytest in tests/test_functions.py).  Output: post-dedup per-user
-    counts."""
-    ev = _events(spark, sf_dir)
-    redelivered = ev.unionByName(ev.filter(F.col("event_id") % 10 == 0))
-    return (
-        dedup_events(redelivered)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .orderBy("user_id")
-    )
-
-
-STREAM_DEDUP_SQL = """
-SELECT user_id, count(DISTINCT event_id) AS n_events
-FROM events GROUP BY user_id ORDER BY user_id
-"""
-
-
 # ---------------------------------------------------------------------------
 # Text retrieval: inverted index, TF-IDF, BM25 (functions/retrieval.py)
 # ---------------------------------------------------------------------------
@@ -5683,23 +1633,8 @@ def inverted_index_stats(spark, sf_dir):
     posting lists themselves never leave the distributed table."""
     from parquet_converters_spark.functions.retrieval import inverted_index
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return inverted_index(docs).orderBy(F.col("df").desc(), "token").limit(30)
-
-
-_SQL_TF = f"""
-  SELECT doc_id, token, count(*) AS tf
-  FROM (SELECT doc_id, unnest({SQL_TOKENS.format(col='text')}) AS token
-        FROM {{src}}) _tok
-  GROUP BY doc_id, token
-"""
-
-INVERTED_INDEX_SQL = f"""
-WITH tf AS ({_SQL_TF.format(src='documents')})
-SELECT token, count(*) AS df, CAST(sum(tf) AS BIGINT) AS total_tf,
-       min(doc_id) AS first_doc, max(doc_id) AS last_doc
-FROM tf GROUP BY token ORDER BY df DESC, token LIMIT 30
-"""
 
 
 def tfidf_top_terms(spark, sf_dir):
@@ -5708,7 +1643,7 @@ def tfidf_top_terms(spark, sf_dir):
     per-doc ranking window.  Deterministic tie-break on token."""
     from parquet_converters_spark.functions.retrieval import tfidf_terms
 
-    docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 50)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(F.col("doc_id") < 50)
     w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), "token")
     return (
         tfidf_terms(docs)
@@ -5720,26 +1655,6 @@ def tfidf_top_terms(spark, sf_dir):
         )
         .orderBy("doc_id", "rk")
     )
-
-
-TFIDF_TOP_TERMS_SQL = f"""
-WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id < 50),
-tf AS ({_SQL_TF.format(src='d')}),
-dfq AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
-n AS (SELECT count(*) AS n_docs FROM d)
-SELECT doc_id, token, tf, ROUND(tfidf_raw, 6) AS tfidf, rk
-FROM (
-  SELECT tf.doc_id, tf.token, tf.tf,
-         tf.tf * (ln((n.n_docs + 1.0) / (dfq.df + 1.0)) + 1.0) AS tfidf_raw,
-         row_number() OVER (
-           PARTITION BY tf.doc_id
-           ORDER BY tf.tf * (ln((n.n_docs + 1.0) / (dfq.df + 1.0)) + 1.0)
-                    DESC, tf.token
-         ) AS rk
-  FROM tf JOIN dfq USING (token) CROSS JOIN n
-) _r
-WHERE rk <= 3 ORDER BY doc_id, rk
-"""
 
 #: BM25 query terms (fixed bag-of-words probe into the synthetic vocab).
 BM25_TERMS = ["spark", "join", "window"]
@@ -5753,7 +1668,7 @@ def bm25_search(spark, sf_dir):
     any join; idf and corpus stats broadcast."""
     from parquet_converters_spark.functions.retrieval import bm25_rank
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return (
         bm25_rank(docs, BM25_TERMS, k1=BM25_K1, b=BM25_B)
         .select(
@@ -5762,32 +1677,6 @@ def bm25_search(spark, sf_dir):
         .orderBy(F.col("score").desc(), "doc_id")
         .limit(25)
     )
-
-
-BM25_SEARCH_SQL = f"""
-WITH tf_all AS ({_SQL_TF.format(src='documents')}),
-tf AS (SELECT * FROM tf_all WHERE token IN ('spark', 'join', 'window')),
-dl AS (SELECT doc_id, CAST(len({SQL_TOKENS.format(col='text')}) AS BIGINT) AS dl
-       FROM documents),
-stats AS (SELECT count(*) AS n_docs,
-                 avg(len({SQL_TOKENS.format(col='text')})) AS avgdl
-          FROM documents),
-dfq AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
-idf AS (SELECT token,
-               ln(1.0 + (stats.n_docs - dfq.df + 0.5) / (dfq.df + 0.5)) AS idf,
-               stats.avgdl AS avgdl
-        FROM dfq CROSS JOIN stats)
-SELECT doc_id, n_terms, ROUND(score, 6) AS score
-FROM (
-  SELECT tf.doc_id, count(*) AS n_terms,
-         sum(idf.idf * (tf.tf * ({BM25_K1} + 1.0))
-             / (tf.tf + {BM25_K1} * (1.0 - {BM25_B}
-                + {BM25_B} * dl.dl / idf.avgdl))) AS score
-  FROM tf JOIN idf USING (token) JOIN dl USING (doc_id)
-  GROUP BY tf.doc_id
-) _s
-ORDER BY score DESC, doc_id LIMIT 25
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -5804,10 +1693,10 @@ def bloom_pruned_revenue(spark, sf_dir):
     shuffle proportional to the *selected* orders, not the table."""
     from parquet_converters_spark.operators.bloom import bloom_pruned_join
 
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
         F.col("o_orderpriority") == "1-URGENT"
     ).select("o_orderkey", "o_orderdate")
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
     joined = bloom_pruned_join(li, orders, "l_orderkey", "o_orderkey")
@@ -5822,18 +1711,6 @@ def bloom_pruned_revenue(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n_items"), revenue.alias("revenue"))
         .orderBy("o_year")
     )
-
-
-BLOOM_PRUNED_REVENUE_SQL = """
-SELECT CAST(year(o_orderdate) AS INT) AS o_year,
-       count(*) AS n_items,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(25,4))
-                * (1 - CAST(l_discount AS DECIMAL(25,4)))) AS DOUBLE) AS revenue
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-WHERE o_orderpriority = '1-URGENT'
-GROUP BY year(o_orderdate)
-ORDER BY o_year
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -5862,48 +1739,6 @@ def scd2_event_history(spark, sf_dir):
         .orderBy("user_id", "version")
     )
 
-
-SCD2_EVENT_HISTORY_SQL = """
-SELECT user_id, event_type,
-       epoch_us(ts) AS effective_from_us,
-       epoch_us(lead(ts) OVER w) AS effective_to_us,
-       row_number() OVER w AS version,
-       lead(ts) OVER w IS NULL AS is_current
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-ORDER BY user_id, version
-"""
-
-
-def upsert_latest_state(spark, sf_dir):
-    """Latest-wins upsert compaction: the newest event per user via a
-    descending row_number — the snapshot read of a merge-on-read
-    table, one shuffle, no join."""
-    from parquet_converters_spark.operators.scd import latest_snapshot
-
-    ev = _events(spark, sf_dir)
-    return (
-        latest_snapshot(ev, ["user_id"], "ts", "event_id")
-        .select(
-            "user_id",
-            "event_type",
-            F.unix_micros("ts").alias("ts_us"),
-            F.round("value", 6).alias("value"),
-        )
-        .orderBy("user_id")
-    )
-
-
-UPSERT_LATEST_SQL = """
-SELECT user_id, event_type, epoch_us(ts) AS ts_us, ROUND(value, 6) AS value
-FROM (
-  SELECT *, row_number() OVER (
-      PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS _rn
-  FROM events
-) _e
-WHERE _rn = 1 ORDER BY user_id
-"""
-
 ZSCORE_THRESHOLD = 2.5
 
 
@@ -5926,30 +1761,6 @@ def zscore_outlier_events(spark, sf_dir):
     )
 
 
-ZSCORE_OUTLIERS_SQL = f"""
-WITH s AS (
-  SELECT event_type, count(*) AS n,
-         sum(CAST(value AS DECIMAL(38,10))) AS sv,
-         sum(CAST(value * value AS DECIMAL(38,10))) AS ssv
-  FROM events GROUP BY event_type
-),
-st AS (
-  SELECT event_type, n,
-         CAST(sv AS DOUBLE) / n AS mean,
-         sqrt(greatest(
-           (CAST(ssv AS DOUBLE) - n * (CAST(sv AS DOUBLE) / n)
-                                    * (CAST(sv AS DOUBLE) / n)) / (n - 1),
-           0.0)) AS std
-  FROM s
-)
-SELECT event_id, e.event_type, ROUND(value, 6) AS value,
-       ROUND((value - mean) / std, 6) AS z
-FROM events e JOIN st USING (event_type)
-WHERE std > 0 AND abs((value - mean) / std) > {ZSCORE_THRESHOLD}
-ORDER BY event_id
-"""
-
-
 def weighted_sample_docs(spark, sf_dir):
     """Deterministic A-Res weighted sample: 50 documents drawn with
     probability proportional to length, reproducibly (md5-derived
@@ -5957,337 +1768,12 @@ def weighted_sample_docs(spark, sf_dir):
     heaps, never a global sort."""
     from parquet_converters_spark.functions.sampling import weighted_sample
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return weighted_sample(docs, "doc_id", "n_chars", 50).select(
         "doc_id",
         "n_chars",
         F.round("sample_score", 6).alias("sample_score"),
     )
-
-
-WEIGHTED_SAMPLE_SQL = """
-WITH w AS (
-  SELECT doc_id, n_chars,
-         pow((CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                   AS BIGINT) + 0.5) / 4294967296.0,
-             1.0 / n_chars) AS sample_score
-  FROM documents WHERE n_chars > 0
-),
-top AS (SELECT * FROM w ORDER BY sample_score DESC, doc_id LIMIT 50)
-SELECT doc_id, n_chars, ROUND(sample_score, 6) AS sample_score FROM top
-"""
-
-
-# ---------------------------------------------------------------------------
-# Graph analytics over the near-dup pair graph + containment dedup
-# (operators/graph.py, functions/dedup.py)
-# ---------------------------------------------------------------------------
-
-#: shared CTE prefix: the canonical (id_a < id_b) LSH candidate edges
-_SQL_PAIR_EDGES = (
-    "sig AS (" + _sql_minhash_sig() + "), "
-    """banded AS (
-""" + _SQL_BAND_ROWS + """
-), e AS (
-  SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-  FROM banded l
-  JOIN banded r ON l.b = r.b AND l.bucket = r.bucket AND l.doc_id < r.doc_id
-)"""
-)
-
-
-def graph_degree_distribution(spark, sf_dir):
-    """Degree histogram of the near-dup pair graph — the shape check a
-    dedup run does before clustering (a heavy-tailed histogram means a
-    hub document, e.g. boilerplate, about to glue clusters together)."""
-    from parquet_converters_spark.operators.graph import degree_distribution
-
-    pairs = _dedup_cached(spark, sf_dir, "docs_pairs")
-    return degree_distribution(pairs, "id_a", "id_b").orderBy("degree")
-
-
-GRAPH_DEGREE_DIST_SQL = (
-    "WITH " + _SQL_PAIR_EDGES + """
-SELECT degree, count(*) AS n_nodes
-FROM (
-  SELECT node, count(*) AS degree
-  FROM (SELECT id_a AS node FROM e UNION ALL SELECT id_b FROM e) _n
-  GROUP BY node
-) _d
-GROUP BY degree ORDER BY degree
-"""
-)
-
-
-def graph_triangle_stats(spark, sf_dir):
-    """Edges / wedges / triangles / clustering coefficient of the pair
-    graph, with degree-ordered-orientation triangle counting (skew-safe
-    at scale; the oracle uses the naive 3-way join, equal by
-    construction)."""
-    from parquet_converters_spark.operators.graph import triangle_stats
-
-    pairs = _dedup_cached(spark, sf_dir, "docs_pairs")
-    return triangle_stats(pairs, "id_a", "id_b")
-
-
-GRAPH_TRIANGLE_SQL = (
-    "WITH " + _SQL_PAIR_EDGES + """
-, deg AS (
-  SELECT node, count(*) AS d
-  FROM (SELECT id_a AS node FROM e UNION ALL SELECT id_b FROM e) _n
-  GROUP BY node
-)
-SELECT (SELECT count(*) FROM e) AS n_edges,
-       (SELECT CAST(sum(d * (d - 1) / 2) AS BIGINT) FROM deg) AS n_wedges,
-       (SELECT count(*)
-        FROM e e1 JOIN e e2 ON e2.id_a = e1.id_b
-                  JOIN e e3 ON e3.id_a = e1.id_a AND e3.id_b = e2.id_b
-       ) AS n_triangles,
-       ROUND(CASE WHEN (SELECT sum(d * (d - 1) / 2) FROM deg) > 0
-             THEN 3.0 * (SELECT count(*)
-                         FROM e e1 JOIN e e2 ON e2.id_a = e1.id_b
-                                   JOIN e e3 ON e3.id_a = e1.id_a
-                                            AND e3.id_b = e2.id_b)
-                  / (SELECT sum(d * (d - 1) / 2) FROM deg)
-             ELSE 0.0 END, 6) AS global_clustering
-"""
-)
-
-
-def containment_pairs(spark, sf_dir):
-    """Asymmetric shingle containment over the LSH candidate pairs —
-    catches the quote-inside-longer-doc duplication Jaccard misses."""
-    from parquet_converters_spark.functions.dedup import shingle_containment
-
-    docs = _t(spark, sf_dir, "documents")
-    pairs = _dedup_cached(spark, sf_dir, "docs_pairs")
-    return (
-        shingle_containment(docs, pairs)
-        .select(
-            "id_a",
-            "id_b",
-            "n_common",
-            F.round("containment_a", 6).alias("containment_a"),
-            F.round("containment_b", 6).alias("containment_b"),
-        )
-        .orderBy("id_a", "id_b")
-    )
-
-
-CONTAINMENT_PAIRS_SQL = (
-    "WITH " + _SQL_PAIR_EDGES + f"""
-, sh AS (
-  SELECT doc_id, unnest(list_distinct({_sql_shingles('text')})) AS s
-  FROM documents
-  WHERE doc_id IN (SELECT id_a FROM e UNION SELECT id_b FROM e)
-), sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-co AS (
-  SELECT e.id_a, e.id_b, count(*) AS n_common
-  FROM e JOIN sh sa ON sa.doc_id = e.id_a
-         JOIN sh sb ON sb.doc_id = e.id_b AND sb.s = sa.s
-  GROUP BY e.id_a, e.id_b
-)
-SELECT e.id_a, e.id_b,
-       coalesce(co.n_common, 0) AS n_common,
-       ROUND(coalesce(co.n_common, 0) / za.n_sh, 6) AS containment_a,
-       ROUND(coalesce(co.n_common, 0) / zb.n_sh, 6) AS containment_b
-FROM e LEFT JOIN co ON co.id_a = e.id_a AND co.id_b = e.id_b
-       JOIN sizes za ON za.doc_id = e.id_a
-       JOIN sizes zb ON zb.doc_id = e.id_b
-ORDER BY e.id_a, e.id_b
-"""
-)
-
-
-def dup_shingle_fraction(spark, sf_dir):
-    """Per-document duplicated-shingle fraction (RefinedWeb/C4-style
-    corpus diagnostic): the share of each document's distinct 3-gram
-    shingles that also occur in at least one other document."""
-    from parquet_converters_spark.functions.dedup import duplicated_shingle_fraction
-
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        duplicated_shingle_fraction(docs)
-        .select(
-            "doc_id",
-            "n_shingles",
-            "n_duplicated",
-            F.round("dup_frac", 6).alias("dup_frac"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-DUP_SHINGLE_FRACTION_SQL = f"""
-WITH sh AS (
-  SELECT doc_id, unnest(list_distinct({_sql_shingles('text')})) AS s
-  FROM documents
-), df AS (
-  SELECT s, count(*) AS d FROM sh GROUP BY s
-)
-SELECT sh.doc_id,
-       CAST(count(*) AS BIGINT) AS n_shingles,
-       CAST(sum(CASE WHEN df.d > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_duplicated,
-       ROUND(sum(CASE WHEN df.d > 1 THEN 1 ELSE 0 END)
-             / CAST(count(*) AS DOUBLE), 6) AS dup_frac
-FROM sh JOIN df USING (s)
-GROUP BY sh.doc_id
-ORDER BY sh.doc_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# Corpus statistics: unigram logprob scoring, PMI (functions/corpus_stats.py)
-# ---------------------------------------------------------------------------
-
-
-def doc_logprob_quality(spark, sf_dir):
-    """Mean unigram log-probability per document — the cheap perplexity
-    -filter stand-in; the vocab table broadcasts, the scoring pass
-    shuffles on doc_id only."""
-    from parquet_converters_spark.functions.corpus_stats import unigram_logprob
-
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        unigram_logprob(docs)
-        .select(
-            "doc_id", "n_tokens", F.round("avg_logprob", 6).alias("avg_logprob")
-        )
-        .orderBy("doc_id")
-    )
-
-
-DOC_LOGPROB_SQL = f"""
-WITH tok AS (
-  SELECT doc_id, unnest({SQL_TOKENS.format(col='text')}) AS token
-  FROM documents
-),
-tot AS (SELECT token, count(*) AS tf_corpus FROM tok GROUP BY token),
-n AS (SELECT count(*) AS n_corpus FROM tok)
-SELECT doc_id, count(*) AS n_tokens,
-       ROUND(avg(ln(tf_corpus / CAST(n_corpus AS DOUBLE))), 6) AS avg_logprob
-FROM tok JOIN tot USING (token) CROSS JOIN n
-GROUP BY doc_id ORDER BY doc_id
-"""
-
-PMI_MIN_PAIR_DOCS = 5
-
-
-def pmi_top_pairs(spark, sf_dir):
-    """Top-20 token pairs by document-co-occurrence PMI (pairs in ≥5
-    docs).  Pair generation is a per-document distinct-token self-join
-    — bounded by vocabulary size (prune hook documented in
-    functions/corpus_stats.py for real corpora)."""
-    from parquet_converters_spark.functions.corpus_stats import pmi_pairs
-
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        pmi_pairs(docs, min_pair_docs=PMI_MIN_PAIR_DOCS)
-        .select(
-            "tok_a", "tok_b", "n_ab", F.round("pmi", 6).alias("pmi")
-        )
-        .orderBy(F.col("pmi").desc(), "tok_a", "tok_b")
-        .limit(20)
-    )
-
-
-PMI_TOP_PAIRS_SQL = f"""
-WITH dt AS (
-  SELECT DISTINCT doc_id, unnest({SQL_TOKENS.format(col='text')}) AS token
-  FROM documents
-),
-n AS (SELECT count(*) AS n_docs FROM documents),
-dfq AS (SELECT token, count(*) AS df FROM dt GROUP BY token),
-pair_docs AS (
-  SELECT a.token AS tok_a, b.token AS tok_b, count(*) AS n_ab
-  FROM dt a JOIN dt b ON a.doc_id = b.doc_id AND a.token < b.token
-  GROUP BY a.token, b.token
-  HAVING count(*) >= {PMI_MIN_PAIR_DOCS}
-),
-scored AS (
-  SELECT tok_a, tok_b, n_ab,
-         ln((n_ab * n.n_docs) / CAST(da.df * db.df AS DOUBLE)) AS pmi_raw
-  FROM pair_docs
-  JOIN dfq da ON da.token = tok_a
-  JOIN dfq db ON db.token = tok_b
-  CROSS JOIN n
-),
-top AS (SELECT * FROM scored ORDER BY pmi_raw DESC, tok_a, tok_b LIMIT 20)
-SELECT tok_a, tok_b, n_ab, ROUND(pmi_raw, 6) AS pmi FROM top
-"""
-
-
-# ---------------------------------------------------------------------------
-# Equi-width histogram + stream-static enrichment
-# ---------------------------------------------------------------------------
-
-HIST_BINS = 20
-
-
-def value_histogram(spark, sf_dir):
-    """Per-event-type equi-width histogram of ``value`` over 20 global
-    bins.  Two passes: a 1-row min/max aggregate (broadcast back), then
-    one binning aggregate — the shape every profiler uses because a
-    single-pass exact histogram can't know the bin edges."""
-    ev = _events(spark, sf_dir)
-    mm = ev.agg(F.min("value").alias("vmin"), F.max("value").alias("vmax"))
-    binw = (F.col("vmax") - F.col("vmin")) / HIST_BINS
-    return (
-        ev.crossJoin(F.broadcast(mm))
-        .select(
-            "event_type",
-            F.least(
-                F.floor((F.col("value") - F.col("vmin")) / binw).cast("int"),
-                F.lit(HIST_BINS - 1),
-            ).alias("bin"),
-        )
-        .groupBy("event_type", "bin")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("event_type", "bin")
-    )
-
-
-VALUE_HISTOGRAM_SQL = f"""
-WITH mm AS (SELECT min(value) AS vmin, max(value) AS vmax FROM events)
-SELECT event_type,
-       least(CAST(floor((value - vmin) / ((vmax - vmin) / {HIST_BINS})) AS INT),
-             {HIST_BINS - 1}) AS bin,
-       count(*) AS n
-FROM events CROSS JOIN mm
-GROUP BY event_type, bin
-ORDER BY event_type, bin
-"""
-
-ENRICH_BUCKETS = 25
-
-
-def stream_enrich(spark, sf_dir):
-    """Stream-static enrichment: events joined to the static nation
-    dimension (broadcast, stateless in streaming), aggregated per
-    nation.  Streaming parity covered by the cross-trigger pytest."""
-    from parquet_converters_spark.streaming.events import enrich_with_dim
-
-    ev = _events(spark, sf_dir)
-    nation = _t(spark, sf_dir, "nation")
-    return (
-        enrich_with_dim(ev, nation, "n_nationkey", ENRICH_BUCKETS)
-        .groupBy("n_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(25,6)"))
-            .cast("double")
-            .alias("value_sum"),
-        )
-        .orderBy("n_name")
-    )
-
-
-STREAM_ENRICH_SQL = f"""
-SELECT n_name, count(*) AS n_events,
-       CAST(sum(CAST(value AS DECIMAL(25,6))) AS DOUBLE) AS value_sum
-FROM events JOIN nation ON n_nationkey = user_id % {ENRICH_BUCKETS}
-GROUP BY n_name ORDER BY n_name
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -6308,7 +1794,7 @@ def embedding_quantize_error(spark, sf_dir):
         quantize_int8,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = quantize_int8(emb)
     deq = F.transform(
         F.col("q_vec"), lambda v: v.cast("double") * F.col("q_scale")
@@ -6343,29 +1829,6 @@ def embedding_quantize_error(spark, sf_dir):
     )
 
 
-EMBED_QUANT_SQL = """
-WITH qz AS (
-  SELECT label, CAST(embedding AS DOUBLE[]) AS v,
-         greatest(list_max(list_transform(embedding,
-                  x -> abs(CAST(x AS DOUBLE)))), 1e-12) / 127.0 AS s
-  FROM embeddings
-), per AS (
-  SELECT label, s,
-         list_transform(v, x -> abs(x - floor(x/s + 0.5)*s)) AS errs,
-         list_cosine_similarity(v,
-             list_transform(v, x -> floor(x/s + 0.5)*s)) AS cos
-  FROM qz
-)
-SELECT label,
-       CAST(count(*) AS BIGINT) AS n_vecs,
-       round(avg(s), 6) AS avg_scale,
-       round(max(list_max(errs)), 6) AS max_abs_err,
-       round(avg(list_sum(errs)/len(errs)), 6) AS mean_abs_err,
-       round(min(cos), 6) AS min_cosine
-FROM per GROUP BY label ORDER BY label
-"""
-
-
 def contamination_matrix(spark, sf_dir):
     """Source x source shared-shingle counts (cross-corpus leakage /
     benchmark-contamination matrix, functions/dedup.py
@@ -6374,20 +1837,8 @@ def contamination_matrix(spark, sf_dir):
     self-join — output stays |sources|^2-bounded at any corpus size."""
     from parquet_converters_spark.functions.dedup import cross_source_shingles
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return cross_source_shingles(docs).orderBy("src_a", "src_b")
-
-
-CONTAMINATION_SQL = f"""
-WITH sh AS (
-  SELECT DISTINCT source AS g,
-         unnest(list_distinct({_sql_shingles('text')})) AS s
-  FROM documents
-)
-SELECT a.g AS src_a, b.g AS src_b, CAST(count(*) AS BIGINT) AS n_shared
-FROM sh a JOIN sh b ON a.s = b.s AND a.g < b.g
-GROUP BY src_a, src_b ORDER BY src_a, src_b
-"""
 
 
 def dedup_incremental_bloom(spark, sf_dir):
@@ -6409,14 +1860,7 @@ def dedup_incremental_bloom(spark, sf_dir):
     from parquet_converters_spark.functions.text import doc_fingerprint
     from parquet_converters_spark.operators.bloom import bloom_build, bloom_prune
 
-    # spread=False (r18, VERDICT r17 item 1): this query fans `documents`
-    # into corpus x2 (bloom build + exact semi-join) and batch x2 (prune
-    # + final join) — four scan branches, each of which re-pays the
-    # spread exchange (plan 10 -> 16 Exchange, driver-measured 2.0x
-    # slower).  The per-branch narrow work is a substring(80) md5 —
-    # the same "trivial narrow compute" class the r17 A/B opted out
-    # for events/orders.
-    docs = _t(spark, sf_dir, "documents", spread=False)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     fp = doc_fingerprint(F.substring("text", 1, 80))
     is_batch = h32(F.col("doc_id").cast("string")) % 10 < 3
     corpus = docs.filter(~is_batch).select(fp.alias("fp")).distinct()
@@ -6467,10 +1911,7 @@ def ann_recall_at5(spark, sf_dir):
     how many true neighbors the bucketed search returned.  Both sides
     are the already-registered queries, so this is evaluation plumbing,
     not new search code."""
-    # r18: both retrievers share one materialized scan at bench layout
-    # (was 4 spread exchanges on vec_id — _emb_shared); each component
-    # query's own registered entry keeps its own scan.
-    emb = _emb_shared(spark, sf_dir)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     e = sim_cosine_topk(spark, sf_dir, emb=emb).select(
         "query_id", "neighbor_id"
     )
@@ -6493,109 +1934,6 @@ def ann_recall_at5(spark, sf_dir):
         )
         .orderBy("query_id")
     )
-
-
-ANN_RECALL_SQL = f"""
-SELECT e.query_id,
-       CAST(count(*) AS BIGINT) AS n_exact,
-       CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_hits,
-       round(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-             / CAST(count(*) AS DOUBLE), 6) AS recall
-FROM ({SIM_COSINE_TOPK_SQL}) e
-LEFT JOIN ({SIM_LSH_ANN_SQL}) a
-  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-GROUP BY e.query_id ORDER BY e.query_id
-"""
-
-
-def ann_recall_pq(spark, sf_dir):
-    """Measured recall@5 of the IVF-PQ ADC search against the exact
-    squared-L2 top-k (ADC approximates L2, so L2 — not cosine — is its
-    ground truth): per query, how many true neighbors survived both
-    the cell probe AND the quantization.  The exact side is a
-    broadcast brute-force scan (5 query rows against the corpus); the
-    approximate side is the registered sim_ivfpq_ann.  "Measure,
-    don't guess" for the memory-bound ANN path."""
-    # r18: exact side, PQ corpus/query sides and the codebook sample
-    # all branch from ONE materialized scan at bench layout (was 4
-    # spread exchanges on vec_id — _emb_shared); the approximate side
-    # is the registered sim_ivfpq_ann, fed the shared frame.
-    emb = _emb_shared(spark, sf_dir)
-    qs = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("_qv"),
-    )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("_qv"),
-            F.col("embedding").cast("array<double>"),
-            lambda a, b: (a - b) * (a - b),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_d2").asc(), F.col("neighbor_id").asc()
-    )
-    e = (
-        emb.join(F.broadcast(qs), emb["vec_id"] != qs["query_id"])
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(F.sqrt(d2), 6).alias("_d2"),
-        )
-        .withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= 5)
-        .select("query_id", "neighbor_id")
-    )
-    a = (
-        sim_ivfpq_ann(spark, sf_dir, emb=emb)
-        .select("query_id", "neighbor_id")
-        .withColumn("_hit", F.lit(1))
-    )
-    return (
-        e.join(a, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.sum(F.coalesce(F.col("_hit"), F.lit(0)))
-            .cast("long")
-            .alias("n_hits"),
-        )
-        .withColumn(
-            "recall", F.round(F.col("n_hits") / F.col("n_exact"), 6)
-        )
-        .orderBy("query_id")
-    )
-
-
-ANN_RECALL_PQ_SQL = f"""
-WITH qx AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-            FROM embeddings WHERE vec_id < 5),
-ex_scored AS (
-  SELECT qx.query_id, e.vec_id AS neighbor_id,
-         round(list_distance(qx.qv, CAST(e.embedding AS DOUBLE[])), 6) AS d2
-  FROM qx JOIN embeddings e ON e.vec_id != qx.query_id
-), ex AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY d2 ASC, neighbor_id ASC) AS rk
-    FROM ex_scored
-  ) WHERE rk <= 5
-)
-SELECT ex.query_id,
-       CAST(count(*) AS BIGINT) AS n_exact,
-       CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_hits,
-       round(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-             / CAST(count(*) AS DOUBLE), 6) AS recall
-FROM ex
-LEFT JOIN ({SIM_IVFPQ_SQL}) a
-  ON ex.query_id = a.query_id AND ex.neighbor_id = a.neighbor_id
-GROUP BY ex.query_id ORDER BY ex.query_id
-"""
 
 
 #: Reciprocal-rank-fusion constant (the standard k=60 from the RRF
@@ -6624,18 +1962,12 @@ def hybrid_rrf_search(spark, sf_dir, n_queries=5):
     from parquet_converters_spark.functions.similarity import cosine_topk
     from parquet_converters_spark.functions.text import shingles
 
-    # spread=False (r18, VERDICT r17 item 1): the r17 blanket spread made
-    # every branch of the dense + lexical retrievers re-pay the spread
-    # exchange (plan 16 -> 24 Exchange, driver -14%).  A corpus-only
-    # spread split was A/B'd and lost too (+0.25 s: the second _t branch
-    # and duplicated shingle tree cost more driver build time than the
-    # spread saves) — the r16 unspread shape is the measured winner.
-    emb = _t(spark, sf_dir, "embeddings", spread=False)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     dense = cosine_topk(
         emb, emb.filter(F.col("vec_id") < n_queries), k=_RRF_TOPK_EACH
     ).select("query_id", F.col("rank").alias("dense_rank"), "neighbor_id")
 
-    docs = _t(spark, sf_dir, "documents", spread=False).select(
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", F.array_distinct(shingles("text")).alias("sh")
     )
     qdocs = docs.filter(F.col("doc_id") < n_queries).select(
@@ -6754,7 +2086,7 @@ def hard_negative_mining(spark, sf_dir, n_anchors=10):
         vec_norm,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     a = emb.filter(F.col("vec_id") < n_anchors).select(
         F.col("vec_id").alias("anchor_id"),
         F.col("label").alias("anchor_label"),
@@ -6842,12 +2174,7 @@ def mmr_diverse_topk(spark, sf_dir, n_queries=3):
         vec_norm,
     )
 
-    # r18: query + corpus branches share one materialized scan at bench
-    # layout (_emb_shared), and the ≤ n_queries×pool candidate pool is
-    # materialized once (lazy localCheckpoint) — the a/b pairwise
-    # branches otherwise re-ran the corpus-sized broadcast join and
-    # top-pool window per branch, at ANY layout.
-    emb = _emb_shared(spark, sf_dir)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("_qv"),
@@ -7093,7 +2420,7 @@ def ks_drift_test(spark, sf_dir, exact=None):
     argmax: ONE aggregate over ``struct(d_num, -value)`` (max struct
     = highest D, then lowest value) — no global-order window
     anywhere."""
-    ev = _t(spark, sf_dir, "events")
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     s = ev.filter(F.col("event_type").isin("click", "view")).select(
         "value",
         F.when(F.col("event_type") == "click", 1).otherwise(0).alias("is1"),
@@ -7250,10 +2577,7 @@ def _zorder_files(spark, sf_dir, exact=None):
     """Internal: the per-file zone-map aggregate, with ``_z_min`` /
     ``_z_max`` audit columns retained so tests can assert the gated
     range-partitioned layout yields disjoint z-ranges."""
-    # spread=False: the inexact branch derives file_id from the range
-    # partitioner's sampled boundaries, which are input-layout dependent
-    # — keep the scan layout exactly as on disk (r17)
-    li = _t(spark, sf_dir, "lineitem", spread=False).select(
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
         "l_orderkey", "l_linenumber", "l_partkey"
     )
     ext = li.agg(
@@ -7342,9 +2666,7 @@ def vocab_growth_by_source(spark, sf_dir):
     division, so the result is hash-exact.  At 100 TB this is the
     same plan: the (source, token) aggregate is the wordcount shuffle
     and nothing else grows."""
-    # spread=False: measured +0.28 s with spread (the wordcount shuffle
-    # immediately follows; map-side partials already parallelize it)
-    docs = _t(spark, sf_dir, "documents", spread=False)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     per_tok = (
         docs.select("source", F.explode(tokens("text")).alias("token"))
         .groupBy("source", "token")
@@ -7412,7 +2734,7 @@ def cms_heavy_hitters(spark, sf_dir):
     in-plan so the driver hash-checks the estimate error itself."""
     from parquet_converters_spark.functions.dedup import h32
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     tok = docs.select(F.explode(tokens("text")).alias("token"))
 
     def bucket(j):
@@ -7514,7 +2836,7 @@ def hll_distinct_registers(spark, sf_dir):
     because every graded cardinality sits far above 2.5*m."""
     from parquet_converters_spark.functions.text import shingles
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     h = F.conv(
         F.substring(F.md5(F.col("token")), 1, 15), 16, 10
     ).cast("long")
@@ -7589,17 +2911,16 @@ def lsh_pair_eval(spark, sf_dir):
     2*TP/(cands+truth) — pairwise F1 and Dice coincide, and it keeps
     the metric to ONE integer-operand division.  Truth-pair counts
     come from the group-size formula n*(n-1)/2 (no materialized truth
-    self-join); the TP check joins the already-cached LSH pairs to
+    self-join); the TP check joins the LSH pairs to
     two content-hash lookups.  Same evaluation shape as
     ann_recall_at5/ann_recall_pq — the quality gate a dedup pipeline
     runs per-shard before trusting its candidate generator."""
     from parquet_converters_spark.functions.dedup import content_hash
 
-    # spread=False: doc-level md5 only; measured +0.16 s with spread
-    docs = _t(spark, sf_dir, "documents", spread=False).select(
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", content_hash("text").alias("ch")
     )
-    pairs = _dedup_cached(spark, sf_dir, "docs_pairs")
+    pairs = _lsh_pairs(spark, sf_dir)
     truth = docs.groupBy("ch").agg(F.count(F.lit(1)).alias("n")).agg(
         F.sum(
             (F.col("n") * (F.col("n") - 1) / 2).cast("long")
@@ -7667,122 +2988,9 @@ FROM counts, truth
 )
 
 
-def multimodal_audio(spark, sf_dir):
-    """Audio feature-extraction plumbing (per-frame energy +
-    zero-crossing rate via Arrow-batched ``mapInPandas`` 1:N explode,
-    functions/multimodal.py extract_audio_features) with the
-    deterministic fake decoder — completes the image/video/audio
-    multimodal triple.  Features are exact integer-over-constant
-    divisions so the oracle reproduces bit-identical doubles."""
-    from parquet_converters_spark.functions.multimodal import (
-        extract_audio_features,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    media = documents_as_media(docs)
-    return extract_audio_features(media, n_frames=6, fake=True).orderBy(
-        "media_id", "frame_idx"
-    )
-
-
-def _sql_audio_rate(x: str = "text") -> str:
-    return f"8000 + ({_sql_md5_byte(0, x)} % 8) * 1000"
-
-
-MULTIMODAL_AUDIO_SQL = f"""
-SELECT doc_id AS media_id,
-       CAST(g.i AS INT) AS frame_idx,
-       CAST({_sql_audio_rate()} AS INT) AS sample_rate,
-       octet_length(encode(text)) / ({_sql_audio_rate()}) AS duration_s,
-       (CASE g.i {" ".join(
-           f"WHEN {i} THEN {_sql_md5_byte((2 * i) % 16)} * 256 + {_sql_md5_byte((2 * i + 1) % 16)}"
-           for i in range(6)
-       )} END) / 65535.0 AS energy,
-       (CASE g.i {" ".join(
-           f"WHEN {i} THEN {_sql_md5_byte((i + 5) % 16)}"
-           for i in range(6)
-       )} END) / 255.0 AS zcr
-FROM documents, generate_series(0, 5) AS g(i)
-ORDER BY media_id, frame_idx
-"""
-
-
-def bpe_merge_candidates(spark, sf_dir):
-    """Top-20 adjacent character-pair frequencies inside tokens — the
-    first merge step of BPE tokenizer training, as one explode +
-    two-level hash aggregation (map-side partials; the shuffle carries
-    distinct pairs, bounded by charset^2, not corpus size)."""
-    from parquet_converters_spark.functions.text import tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(F.explode(tokens("text")).alias("tok")).filter(
-        F.length("tok") >= 2
-    )
-    pairs = toks.select(
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.length("tok") - 1),
-                lambda i: F.col("tok").substr(i, F.lit(2)),
-            )
-        ).alias("pair")
-    )
-    return (
-        pairs.groupBy("pair")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), F.col("pair"))
-        .limit(20)
-    )
-
-
-BPE_MERGE_SQL = f"""
-WITH toks AS (
-  SELECT unnest({SQL_TOKENS.format(col='text')}) AS tok FROM documents
-), pairs AS (
-  SELECT unnest(list_transform(generate_series(1, len(tok) - 1),
-                i -> substr(tok, i, 2))) AS pair
-  FROM toks WHERE len(tok) >= 2
-)
-SELECT pair, CAST(count(*) AS BIGINT) AS n
-FROM pairs GROUP BY pair ORDER BY n DESC, pair LIMIT 20
-"""
-
-
 _PC1_ITERS = 8
 _PC1_SCALE = 10**6
 _PC1_DIM = _EMB_DIM
-
-
-def embedding_pc1(spark, sf_dir):
-    """Top principal component of the embedding corpus via the
-    cross-engine-EXACT fixed-iteration power method
-    (operators/linalg.py power_iteration_pc1_exact): vectors quantized
-    to 1e-6, every aggregate an exact integer sum, max-normalized
-    iterates — bitwise-reproducible, so the iterative fit is fully
-    value-oracled by unrolling the 8 iterations into chained CTEs
-    (the graph_pagerank technique).  The float production fit
-    (power_iteration_pc1) stays pytest-gated against numpy.
-    O(iterations) scans, O(dim) driver state, Gram matrix never
-    formed."""
-    from parquet_converters_spark.operators.linalg import (
-        power_iteration_pc1_exact,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    loadings, eig = power_iteration_pc1_exact(
-        emb, "embedding", iterations=_PC1_ITERS, scale=_PC1_SCALE
-    )
-    from parquet_converters_spark.session import values_df
-
-    rows = list(enumerate(loadings))
-    return (
-        values_df(spark, rows, "component_idx: int, loading: double")
-        .select(
-            "component_idx",
-            F.round("loading", 6).alias("loading"),
-            F.round(F.lit(eig), 3).alias("eigenvalue"),
-        )
-        .orderBy("component_idx")
-    )
 
 
 def _pc1_oracle_sql() -> str:
@@ -7882,7 +3090,7 @@ def embedding_standardize_stats(spark, sf_dir):
     # localCheckpoint); the scan keeps its per-branch spread (A/B: an
     # emb-level checkpoint's lazy-RDD plan-time cost at build exceeded
     # its exec saving here).
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     el = emb.select(
         F.posexplode(F.col("embedding").cast("array<double>")).alias(
             "dim_idx", "x"
@@ -7944,7 +3152,7 @@ def text_pii_redact(spark, sf_dir):
     non-vacuous).  Output carries the redacted text's fingerprint plus
     before/after lengths so the oracle value-checks the full transform
     without hauling the text through the comparator."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     email = r"[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}"
     url = r"https?://[^\s]+"
     digits = r"[0-9]{6,}"
@@ -7971,309 +3179,6 @@ def text_pii_redact(spark, sf_dir):
         .alias("redacted_fp"),
     ).orderBy("doc_id")
 
-
-_PII_RED_SQL_EXPR = r"""regexp_replace(regexp_replace(regexp_replace(regexp_replace(lower(text),
-              '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}', '<EMAIL>', 'g'),
-              'https?://[^\s]+', '<URL>', 'g'),
-              '[0-9]{6,}', '<NUM>', 'g'),
-              '\b(spark|shuffle)\b', '<TERM>', 'g')"""
-
-TEXT_PII_REDACT_SQL = f"""
-SELECT doc_id,
-       length(text) AS n_chars,
-       length({_PII_RED_SQL_EXPR}) AS n_chars_redacted,
-       CAST(concat('0x', substr(md5({_PII_RED_SQL_EXPR}), 1, 15)) AS BIGINT)
-           AS redacted_fp
-FROM documents ORDER BY doc_id
-"""
-
-
-def skew_key_profile(spark, sf_dir):
-    """Join-key skew diagnostic for the lineitem->orders key: per-key
-    cardinality distribution (exact percentiles over the key-count
-    table, which has one row per key — small even at 100 TB) plus the
-    max/avg skew factor that decides between a plain shuffle join,
-    AQE skew-split, and explicit salting (operators/skew.py).  This is
-    the measurement step the brief's "measure, don't guess" rule asks
-    for before choosing a join strategy."""
-    li = _t(spark, sf_dir, "lineitem")
-    counts = li.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("c"))
-    return counts.agg(
-        F.count(F.lit(1)).alias("n_keys"),
-        F.sum("c").cast("long").alias("n_rows"),
-        F.max("c").alias("max_cnt"),
-        F.expr("CAST(percentile(c, 0.5) AS DOUBLE)").alias("p50_cnt"),
-        F.expr("CAST(percentile(c, 0.99) AS DOUBLE)").alias("p99_cnt"),
-        F.round(
-            F.max("c") / (F.sum("c") / F.count(F.lit(1))), 6
-        ).alias("skew_factor"),
-    )
-
-
-SKEW_KEY_PROFILE_SQL = """
-WITH counts AS (
-  SELECT l_orderkey, count(*) AS c FROM lineitem GROUP BY l_orderkey
-)
-SELECT CAST(count(*) AS BIGINT) AS n_keys,
-       CAST(sum(c) AS BIGINT) AS n_rows,
-       CAST(max(c) AS BIGINT) AS max_cnt,
-       CAST(quantile_cont(c, 0.5) AS DOUBLE) AS p50_cnt,
-       CAST(quantile_cont(c, 0.99) AS DOUBLE) AS p99_cnt,
-       round(max(c) / (CAST(sum(c) AS DOUBLE) / count(*)), 6) AS skew_factor
-FROM counts
-"""
-
-
-def order_backlog_concurrency(spark, sf_dir):
-    """Max concurrently-open orders per month (interval-concurrency
-    sweep): each order opens at o_orderdate and closes after a
-    deterministic 30+(key%60)-day horizon; +1/-1 events, half-open
-    [start, end) semantics (closes sort before opens at equal
-    timestamps).
-
-    Scale shape — hierarchical prefix sum, NOT a global window: the
-    running sum is computed within month partitions (parallel), and
-    the cross-month carry-in comes from a cumulative window over the
-    per-month delta totals (one tiny row per month), broadcast-joined
-    back.  The same two-level pattern as the adjacency index's global
-    rank; a single global orderBy over the event rows would serialize
-    the corpus at 100 TB."""
-    orders = _t(spark, sf_dir, "orders")
-    start = F.col("o_orderdate").cast("timestamp")
-    end = F.timestamp_micros(
-        F.unix_micros(start)
-        + (F.lit(30) + F.col("o_orderkey") % 60) * 86400_000_000
-    )
-    opens = orders.select(
-        F.unix_micros(start).alias("ts_us"), F.lit(1).alias("delta")
-    )
-    closes = orders.select(
-        F.unix_micros(end).alias("ts_us"), F.lit(-1).alias("delta")
-    )
-    ev = opens.union(closes).withColumn(
-        "month", F.date_trunc("month", F.timestamp_micros("ts_us"))
-    )
-    w_in = (
-        Window.partitionBy("month")
-        .orderBy("ts_us", "delta")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    month_tot = ev.groupBy("month").agg(F.sum("delta").alias("mtot"))
-    w_m = Window.orderBy("month").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    carry = month_tot.select(
-        "month",
-        (F.sum("mtot").over(w_m) - F.col("mtot")).alias("carry"),
-    )
-    return (
-        ev.join(F.broadcast(carry), "month")
-        .withColumn("open_now", F.col("carry") + F.sum("delta").over(w_in))
-        .groupBy("month")
-        .agg(
-            F.max("open_now").cast("long").alias("max_open"),
-            F.sum(F.when(F.col("delta") == 1, 1).otherwise(0))
-            .cast("long")
-            .alias("n_opens"),
-        )
-        .select(
-            F.unix_micros("month").alias("month_us"), "max_open", "n_opens"
-        )
-        .orderBy("month_us")
-    )
-
-
-ORDER_BACKLOG_SQL = """
-WITH ev AS (
-  SELECT epoch_us(CAST(o_orderdate AS TIMESTAMP)) AS ts_us, 1 AS delta
-  FROM orders
-  UNION ALL
-  SELECT epoch_us(CAST(o_orderdate AS TIMESTAMP))
-         + (30 + o_orderkey % 60) * 86400000000 AS ts_us, -1 AS delta
-  FROM orders
-), run AS (
-  SELECT date_trunc('month', make_timestamp(ts_us)) AS month, delta,
-         sum(delta) OVER (ORDER BY ts_us, delta
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             AS open_now
-  FROM ev
-)
-SELECT epoch_us(CAST(month AS TIMESTAMP)) AS month_us,
-       CAST(max(open_now) AS BIGINT) AS max_open,
-       CAST(sum(CASE WHEN delta = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_opens
-FROM run GROUP BY month ORDER BY month_us
-"""
-
-
-# ===========================================================================
-# Registry
-# ===========================================================================
-
-# TPC-H completion + temporal joins (imported late: queries_tpch pulls
-# helpers from this module at call time).
-from parquet_converters_spark.queries_tpch import TPCH_QUERIES  # noqa: E402
-
-# The driver's correctness gate checks the FIRST 50 registry entries, so
-# ordering is a grading rotation: lead with every query that has no
-# driver-green CORRECTNESS row yet (all of TPC-H/temporal, streaming,
-# touch scan, multimodal decode/frames — unchecked in r01), then the
-# entries fixed this round, then new queries, then last round's greens.
-QUERIES: dict[str, tuple] = {}
-
-# --- new in r03: text retrieval ------------------------------------------
-QUERIES.update({
-    "inverted_index_stats": (inverted_index_stats, INVERTED_INDEX_SQL),
-    "tfidf_top_terms": (tfidf_top_terms, TFIDF_TOP_TERMS_SQL),
-    "bm25_search": (bm25_search, BM25_SEARCH_SQL),
-    "bloom_pruned_revenue": (bloom_pruned_revenue, BLOOM_PRUNED_REVENUE_SQL),
-    "scd2_event_history": (scd2_event_history, SCD2_EVENT_HISTORY_SQL),
-    "upsert_latest_state": (upsert_latest_state, UPSERT_LATEST_SQL),
-    "zscore_outlier_events": (zscore_outlier_events, ZSCORE_OUTLIERS_SQL),
-    "weighted_sample_docs": (weighted_sample_docs, WEIGHTED_SAMPLE_SQL),
-    "graph_degree_distribution": (graph_degree_distribution, GRAPH_DEGREE_DIST_SQL),
-    "graph_triangle_stats": (graph_triangle_stats, GRAPH_TRIANGLE_SQL),
-    "containment_pairs": (containment_pairs, CONTAINMENT_PAIRS_SQL),
-    "doc_logprob_quality": (doc_logprob_quality, DOC_LOGPROB_SQL),
-    "pmi_top_pairs": (pmi_top_pairs, PMI_TOP_PAIRS_SQL),
-    "value_histogram": (value_histogram, VALUE_HISTOGRAM_SQL),
-    "stream_enrich": (stream_enrich, STREAM_ENRICH_SQL),
-})
-
-# --- r01-unchecked: TPC-H + temporal/multi-dim (24) -----------------------
-QUERIES.update(TPCH_QUERIES)
-
-# --- r01-unchecked: streaming, touch binary, multimodal (7) ---------------
-QUERIES.update({
-    "stream_windowed_agg": (stream_windowed_agg, STREAM_WINDOWED_AGG_SQL),
-    "stream_sessionize": (stream_sessionize, STREAM_SESSIONIZE_SQL),
-    "stream_running_totals": (stream_running_totals, STREAM_RUNNING_TOTALS_SQL),
-    "stream_join_pairs": (stream_join_pairs, STREAM_JOIN_PAIRS_SQL),
-    "touch_scan_v2": (touch_scan_v2, TOUCH_SCAN_V2_SQL),
-    "multimodal_decode": (multimodal_decode, MULTIMODAL_DECODE_SQL),
-    "multimodal_frames": (multimodal_frames, MULTIMODAL_FRAMES_SQL),
-})
-
-# --- fixed this round: oracle-encoding / vacuity repairs (5) --------------
-QUERIES.update({
-    "json_extract_agg": (json_extract_agg, JSON_EXTRACT_SQL),
-    "validation_filter": (validation_filter, VALIDATION_FILTER_SQL),
-    "inter_event_gaps": (inter_event_gaps, INTER_EVENT_GAPS_SQL),
-    "dedup_minhash_sig": (dedup_minhash_sig, DEDUP_MINHASH_SIG_SQL),
-    "sim_neardup_pairs": (sim_neardup_pairs, SIM_NEARDUP_SQL),
-})
-
-# --- new this round (kept inside the 50-entry window) ---------------------
-NEW_QUERIES: dict[str, tuple] = {
-    "dedup_simhash_pairs": (dedup_simhash_pairs, DEDUP_SIMHASH_PAIRS_SQL),
-    "dedup_components_star": (dedup_components_star, DEDUP_COMPONENTS_SQL),
-    "dedup_survivors": (dedup_survivors, DEDUP_SURVIVORS_SQL),
-    "range_join_error_views": (range_join_error_views, RANGE_JOIN_ERROR_VIEWS_SQL),
-    "text_top_bigrams": (text_top_bigrams, TEXT_TOP_BIGRAMS_SQL),
-    "text_quality_funnel": (text_quality_funnel, TEXT_QUALITY_FUNNEL_SQL),
-    "cohort_retention": (cohort_retention, COHORT_RETENTION_SQL),
-    "event_funnel": (event_funnel, EVENT_FUNNEL_SQL),
-    "stream_dedup": (stream_dedup, STREAM_DEDUP_SQL),
-    "stream_session_window": (stream_session_window, STREAM_SESSION_WINDOW_SQL),
-    "multimodal_resize": (multimodal_resize, MULTIMODAL_RESIZE_SQL),
-    "sample_split_counts": (sample_split_counts, SAMPLE_SPLIT_SQL),
-    "text_chunking": (text_chunking, TEXT_CHUNKING_SQL),
-    "sequence_packing": (sequence_packing, SEQUENCE_PACKING_SQL),
-    # position 51+: identical output to sim_ivf_ann (r01-green) and
-    # pytest-asserted equal to it — safe to sit past the driver window
-    # until the round-3 rotation
-    "sim_ivf_ann_bcast": (sim_ivf_ann_bcast, SIM_IVF_ANN_SQL),
-    "sim_ivfpq_ann": (sim_ivfpq_ann, SIM_IVFPQ_SQL),
-    "ann_recall_pq": (ann_recall_pq, ANN_RECALL_PQ_SQL),
-    "sim_lsh_ann_bcast": (sim_lsh_ann_bcast, SIM_LSH_ANN_SQL),
-    "table_profile": (table_profile, TABLE_PROFILE_SQL),
-    "stream_sessionize_stateful": (
-        stream_sessionize_stateful,
-        STREAM_SESSIONIZE_STATEFUL_SQL,
-    ),
-    "decontaminate_train": (decontaminate_train, DECONTAMINATE_SQL),
-    "text_repetition": (text_repetition, TEXT_REPETITION_SQL),
-    "text_pii_scan": (text_pii_scan, TEXT_PII_SCAN_SQL),
-    "interval_overlap_sessions": (interval_overlap_sessions, INTERVAL_OVERLAP_SQL),
-}
-QUERIES.update(NEW_QUERIES)
-
-# --- driver-green in r01 (rotate back into the window in later rounds) ----
-QUERIES.update({
-    "q1_pricing_summary": (q1_pricing_summary, Q1_SQL),
-    "q3_shipping_priority": (q3_shipping_priority, Q3_SQL),
-    "q5_nation_volume": (q5_nation_volume, Q5_SQL),
-    "q6_selective_agg": (q6_selective_agg, Q6_SQL),
-    "q14_brand_revenue": (q14_brand_revenue, Q14_SQL),
-    "semi_join_exists": (semi_join_exists, SEMI_JOIN_SQL),
-    "anti_join": (anti_join, ANTI_JOIN_SQL),
-    "set_intersect": (set_intersect, SET_INTERSECT_SQL),
-    "rollup_pricing": (rollup_pricing, ROLLUP_SQL),
-    "topk_per_group": (topk_per_group, TOPK_PER_GROUP_SQL),
-    "pivot_event_counts": (pivot_event_counts, PIVOT_SQL),
-    "q18_large_orders": (q18_large_orders, Q18_SQL),
-    "above_nation_avg": (above_nation_avg, ABOVE_AVG_SQL),
-    "proj_rename": (proj_rename, PROJ_RENAME_SQL),
-    "array_flatten": (array_flatten, ARRAY_FLATTEN_SQL),
-    "bitfield_unpack": (bitfield_unpack, BITFIELD_UNPACK_SQL),
-    "derived_key": (derived_key, DERIVED_KEY_SQL),
-    "limit_n": (limit_n, LIMIT_N_SQL),
-    "count_sum": (count_sum, COUNT_SUM_SQL),
-    "global_max": (global_max, GLOBAL_MAX_SQL),
-    "prefix_sum": (prefix_sum, PREFIX_SUM_SQL),
-    "run_length": (run_length, RUN_LENGTH_SQL),
-    "run_length_scan": (run_length_scan, RUN_LENGTH_SQL),
-    "interval_merge": (interval_merge, INTERVAL_MERGE_SQL),
-    "dense_left_join": (dense_left_join, DENSE_LEFT_JOIN_SQL),
-    "adjacency_node_ranges": (adjacency_node_ranges, ADJ_NODE_RANGES_SQL),
-    "adjacency_range_to_edge": (adjacency_range_to_edge, ADJ_RANGE_EDGE_SQL),
-    "dedup_exact": (dedup_exact, DEDUP_EXACT_SQL),
-    "dedup_minhash_lsh": (dedup_minhash_lsh, DEDUP_MINHASH_LSH_SQL),
-    "dedup_pipeline": (dedup_pipeline, DEDUP_PIPELINE_SQL),
-    "dedup_components": (dedup_components, DEDUP_COMPONENTS_SQL),
-    "dedup_simhash": (dedup_simhash, DEDUP_SIMHASH_SQL),
-    "dedup_ngram_jaccard": (dedup_ngram_jaccard, DEDUP_NGRAM_JACCARD_SQL),
-    "sim_cosine_topk": (sim_cosine_topk, SIM_COSINE_TOPK_SQL),
-    "sim_lsh_ann": (sim_lsh_ann, SIM_LSH_ANN_SQL),
-    "sim_ivf_ann": (sim_ivf_ann, SIM_IVF_ANN_SQL),
-    "text_token_count": (text_token_count, TEXT_TOKEN_COUNT_SQL),
-    "text_language_id": (text_language_id, TEXT_LANGUAGE_ID_SQL),
-    "text_quality": (text_quality, TEXT_QUALITY_SQL),
-    "text_fingerprint": (text_fingerprint, TEXT_FINGERPRINT_SQL),
-    "text_top_tokens": (text_top_tokens, TEXT_TOP_TOKENS_SQL),
-    "text_rolling_hash": (text_rolling_hash, TEXT_ROLLING_HASH_SQL),
-    "moving_avg_7d": (moving_avg_7d, MOVING_AVG_SQL),
-    "decile_counts": (decile_counts, DECILE_SQL),
-    "multimodal_meta": (multimodal_meta, MULTIMODAL_META_SQL),
-    "multimodal_probe": (multimodal_probe, MULTIMODAL_PROBE_SQL),
-    "multimodal_transcode": (multimodal_transcode, MULTIMODAL_TRANSCODE_SQL),
-    "media_triage_census": (media_triage_census, MEDIA_TRIAGE_CENSUS_SQL),
-    "transcode_census": (transcode_census, TRANSCODE_CENSUS_SQL),
-    "video_track_census": (video_track_census, VIDEO_TRACK_CENSUS_SQL),
-    "image_dhash_census": (image_dhash_census, IMAGE_DHASH_CENSUS_SQL),
-    "image_dhash_neardup": (image_dhash_neardup, IMAGE_DHASH_NEARDUP_SQL),
-    "image_phash_census": (image_phash_census, IMAGE_PHASH_CENSUS_SQL),
-    "image_phash_neardup": (image_phash_neardup, IMAGE_PHASH_NEARDUP_SQL),
-    "warc_text_census": (warc_text_census, WARC_TEXT_CENSUS_SQL),
-    "robots_gate_census": (robots_gate_census, ROBOTS_GATE_CENSUS_SQL),
-    "crawl_prep_funnel": (crawl_prep_funnel, CRAWL_PREP_FUNNEL_SQL),
-    "crawl_prep_funnel_full": (
-        crawl_prep_funnel_full,
-        CRAWL_PREP_FUNNEL_FULL_SQL,
-    ),
-    "warc_revisit_census": (warc_revisit_census, WARC_REVISIT_CENSUS_SQL),
-    "cdx_index_census": (cdx_index_census, CDX_INDEX_CENSUS_SQL),
-    "stream_crawl_ingest": (stream_crawl_ingest, STREAM_CRAWL_INGEST_SQL),
-    "audio_fingerprint_census": (
-        audio_fingerprint_census,
-        AUDIO_FINGERPRINT_CENSUS_SQL,
-    ),
-    "bpe_learned_merges": (bpe_learned_merges, BPE_LEARNED_MERGES_SQL),
-    "bpe_token_census": (bpe_token_census, BPE_TOKEN_CENSUS_SQL),
-    "audio_fp_dedup": (audio_fp_dedup, AUDIO_FP_DEDUP_SQL),
-    "video_dhash_census": (video_dhash_census, VIDEO_DHASH_CENSUS_SQL),
-    "stream_image_dedup": (stream_image_dedup, STREAM_IMAGE_DEDUP_SQL),
-})
-
 # ===========================================================================
 # Data-quality gates: Gopher rules, char entropy, stratified sampling,
 # declarative expectations (functions/text.py, sampling.py, expectations.py)
@@ -8289,7 +3194,7 @@ def gopher_quality_report(spark, sf_dir):
     from parquet_converters_spark.functions.expectations import check_expectations
     from parquet_converters_spark.functions.text import gopher_flags
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     flags = gopher_flags("text")
     all_pass = None
     for f_ in flags.values():
@@ -8297,129 +3202,6 @@ def gopher_quality_report(spark, sf_dir):
     rules = dict(flags)
     rules["all_rules"] = all_pass
     return check_expectations(docs, rules).orderBy("rule")
-
-
-_GOPHER_STOP_SQL = "[" + ", ".join(f"'{w}'" for w in GOPHER_STOPWORDS) + "]"
-
-GOPHER_QUALITY_SQL = rf"""
-WITH s AS (
-  SELECT doc_id,
-    list_filter(string_split_regex(text, '\s+'), w -> w <> '') AS words,
-    string_split(text, chr(10)) AS lines,
-    length(text) - length(replace(text, '#', ''))
-      + len(string_split(text, '...')) - 1 AS n_sym,
-    {SQL_TOKENS.format(col='text')} AS toks
-  FROM documents
-), t AS (
-  SELECT
-    len(words) AS word_count,
-    coalesce(CAST(list_sum(list_transform(words, w -> length(w))) AS DOUBLE), 0)
-      / greatest(len(words), 1) AS mean_word_len,
-    CAST(n_sym AS DOUBLE) / greatest(len(words), 1) AS symbol_word_ratio,
-    CAST(len(list_filter(lines, l -> regexp_matches(trim(l), '^[-*•]'))) AS DOUBLE)
-      / greatest(len(lines), 1) AS bullet_line_frac,
-    CAST(len(list_filter(lines, l -> regexp_matches(trim(l), '\.\.\.$'))) AS DOUBLE)
-      / greatest(len(lines), 1) AS ellipsis_line_frac,
-    CAST(len(list_filter(words, w -> regexp_matches(w, '[a-zA-Z]'))) AS DOUBLE)
-      / greatest(len(words), 1) AS alpha_word_frac,
-    len(list_intersect(list_distinct(toks), {_GOPHER_STOP_SQL})) AS stopword_hits
-  FROM s
-), f AS (
-  SELECT
-    word_count >= 10 AS p_too_few_words,
-    word_count <= 100000 AS p_too_many_words,
-    mean_word_len >= 2.0 AS p_mean_word_len_low,
-    mean_word_len <= 12.0 AS p_mean_word_len_high,
-    symbol_word_ratio <= 0.1 AS p_symbol_ratio,
-    bullet_line_frac <= 0.9 AS p_bullet_lines,
-    ellipsis_line_frac <= 0.3 AS p_ellipsis_lines,
-    alpha_word_frac >= 0.8 AS p_alpha_words,
-    stopword_hits >= 2 AS p_stopwords
-  FROM t
-)
-SELECT rule, violations, total FROM (
-  SELECT 'too_few_words' AS rule, CAST(sum(CASE WHEN NOT p_too_few_words THEN 1 ELSE 0 END) AS BIGINT) AS violations, CAST(count(*) AS BIGINT) AS total FROM f
-  UNION ALL SELECT 'too_many_words', CAST(sum(CASE WHEN NOT p_too_many_words THEN 1 ELSE 0 END) AS BIGINT), CAST(count(*) AS BIGINT) FROM f
-  UNION ALL SELECT 'mean_word_len_low', CAST(sum(CASE WHEN NOT p_mean_word_len_low THEN 1 ELSE 0 END) AS BIGINT), CAST(count(*) AS BIGINT) FROM f
-  UNION ALL SELECT 'mean_word_len_high', CAST(sum(CASE WHEN NOT p_mean_word_len_high THEN 1 ELSE 0 END) AS BIGINT), CAST(count(*) AS BIGINT) FROM f
-  UNION ALL SELECT 'symbol_ratio', CAST(sum(CASE WHEN NOT p_symbol_ratio THEN 1 ELSE 0 END) AS BIGINT), CAST(count(*) AS BIGINT) FROM f
-  UNION ALL SELECT 'bullet_lines', CAST(sum(CASE WHEN NOT p_bullet_lines THEN 1 ELSE 0 END) AS BIGINT), CAST(count(*) AS BIGINT) FROM f
-  UNION ALL SELECT 'ellipsis_lines', CAST(sum(CASE WHEN NOT p_ellipsis_lines THEN 1 ELSE 0 END) AS BIGINT), CAST(count(*) AS BIGINT) FROM f
-  UNION ALL SELECT 'alpha_words', CAST(sum(CASE WHEN NOT p_alpha_words THEN 1 ELSE 0 END) AS BIGINT), CAST(count(*) AS BIGINT) FROM f
-  UNION ALL SELECT 'stopwords', CAST(sum(CASE WHEN NOT p_stopwords THEN 1 ELSE 0 END) AS BIGINT), CAST(count(*) AS BIGINT) FROM f
-  UNION ALL SELECT 'all_rules', CAST(sum(CASE WHEN NOT (p_too_few_words AND p_too_many_words AND p_mean_word_len_low AND p_mean_word_len_high AND p_symbol_ratio AND p_bullet_lines AND p_ellipsis_lines AND p_alpha_words AND p_stopwords) THEN 1 ELSE 0 END) AS BIGINT), CAST(count(*) AS BIGINT) FROM f
-) ORDER BY rule
-"""
-
-
-def char_entropy_buckets(spark, sf_dir):
-    """Histogram of per-document character-entropy (quarter-bit
-    buckets) — the gibberish/boilerplate screen.  Entropy comes from
-    the Arrow-batched ``mapInPandas`` path: char-level histograms are
-    the measured exception to the JVM-first rule (interpreted
-    higher-order-function lambdas pay ~distinct_chars x len
-    invocations per doc; the Arrow pass is 2.6x faster at sf0.1 and
-    rounds to identical values — asserted in tests).  Still no
-    shuffle before the tiny bucket aggregation."""
-    from parquet_converters_spark.functions.text import with_char_entropy_arrow
-
-    docs = _t(spark, sf_dir, "documents")
-    ent = with_char_entropy_arrow(docs.select("text"))
-    bucket = F.floor(F.col("entropy") * 4) / F.lit(4.0)
-    return (
-        ent.select(bucket.alias("entropy_bucket"))
-        .groupBy("entropy_bucket")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy("entropy_bucket")
-    )
-
-
-CHAR_ENTROPY_SQL = """
-WITH ch AS (
-  SELECT doc_id, unnest(string_split(text, '')) AS c FROM documents
-), cnt AS (
-  SELECT doc_id, c, count(*) AS n FROM ch GROUP BY doc_id, c
-), tot AS (
-  SELECT doc_id, sum(n) AS t FROM cnt GROUP BY doc_id
-), ent AS (
-  SELECT doc_id,
-         round(sum(-(CAST(n AS DOUBLE)/t) * log2(CAST(n AS DOUBLE)/t)), 3) AS e
-  FROM cnt JOIN tot USING (doc_id) GROUP BY doc_id
-)
-SELECT floor(e*4)/4 AS entropy_bucket, CAST(count(*) AS BIGINT) AS n_docs
-FROM ent GROUP BY 1 ORDER BY 1
-"""
-
-
-def stratified_sample_counts(spark, sf_dir):
-    """Per-language kept-vs-total audit of a deterministic stratified
-    downsample (50% en, 25% de, 10% everything else) — the
-    class-rebalance step of a training pipeline, hash-thresholded so
-    the identical sample is drawn on every engine and every re-run."""
-    from parquet_converters_spark.functions.sampling import stratified_sample
-
-    docs = _t(spark, sf_dir, "documents")
-    audited = stratified_sample(
-        docs, "lang", "doc_id", {"en": 0.5, "de": 0.25},
-        default_fraction=0.1, keep_col="kept",
-    )
-    return (
-        audited.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("total"),
-            F.sum(F.col("kept").cast("int")).alias("sampled"),
-        )
-        .orderBy("lang")
-    )
-
-
-STRATIFIED_SAMPLE_SQL = f"""
-SELECT lang, CAST(count(*) AS BIGINT) AS total,
-       CAST(sum(CASE WHEN {SQL_H32.format(x='CAST(doc_id AS VARCHAR)')} % 1000
-                < (CASE lang WHEN 'en' THEN 500 WHEN 'de' THEN 250 ELSE 100 END)
-                THEN 1 ELSE 0 END) AS BIGINT) AS sampled
-FROM documents GROUP BY lang ORDER BY lang
-"""
 
 
 def expectations_report(spark, sf_dir):
@@ -8432,8 +3214,8 @@ def expectations_report(spark, sf_dir):
         check_referential,
     )
 
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     rules = {
         "quantity_range": F.col("l_quantity").between(1, 50),
         "price_positive": F.col("l_extendedprice") > 0,
@@ -8445,31 +3227,6 @@ def expectations_report(spark, sf_dir):
     fk = check_referential(li, orders, "l_orderkey", "o_orderkey",
                            "referential_orderkey")
     return row_checks.unionByName(fk).orderBy("rule")
-
-
-EXPECTATIONS_SQL = """
-SELECT rule, violations, total FROM (
-  SELECT 'quantity_range' AS rule,
-         CAST(sum(CASE WHEN l_quantity BETWEEN 1 AND 50 THEN 0 ELSE 1 END) AS BIGINT) AS violations,
-         CAST(count(*) AS BIGINT) AS total FROM lineitem
-  UNION ALL SELECT 'price_positive',
-         CAST(sum(CASE WHEN l_extendedprice > 0 THEN 0 ELSE 1 END) AS BIGINT),
-         CAST(count(*) AS BIGINT) FROM lineitem
-  UNION ALL SELECT 'discount_band',
-         CAST(sum(CASE WHEN l_discount <= 0.08 THEN 0 ELSE 1 END) AS BIGINT),
-         CAST(count(*) AS BIGINT) FROM lineitem
-  UNION ALL SELECT 'tax_band',
-         CAST(sum(CASE WHEN l_tax <= 0.06 THEN 0 ELSE 1 END) AS BIGINT),
-         CAST(count(*) AS BIGINT) FROM lineitem
-  UNION ALL SELECT 'shipdate_present',
-         CAST(sum(CASE WHEN l_shipdate IS NOT NULL THEN 0 ELSE 1 END) AS BIGINT),
-         CAST(count(*) AS BIGINT) FROM lineitem
-  UNION ALL SELECT 'referential_orderkey',
-         CAST((SELECT count(*) FROM lineitem l LEFT JOIN (SELECT DISTINCT o_orderkey FROM orders) o
-               ON l.l_orderkey = o.o_orderkey WHERE o.o_orderkey IS NULL) AS BIGINT),
-         CAST(count(*) AS BIGINT) FROM lineitem
-) ORDER BY rule
-"""
 
 
 _KM_K = 8
@@ -8489,56 +3246,6 @@ _KM_ITERS = 4
 _KM_SCALE = 10**6
 _KM_SAMPLE = 1024
 _KM_DIM = _EMB_DIM
-
-
-def kmeans_doc_clusters(spark, sf_dir):
-    """Distributed Lloyd's k-means over the embeddings table via the
-    cross-engine-EXACT quantized-integer variant
-    (operators/clustering.py kmeans_fit_exact): deterministic sampled
-    farthest-point init (one bounded-sample pass instead of k-1 corpus
-    scans — the cost shape that holds at 100 TB), 4 fixed E-step
-    passes with the per-cluster size/inertia census FOLDED into the
-    last pass's aggregate (zero extra jobs — the d2 sum rides the
-    update aggregate as one decimal column).  All distances/sums are
-    exact integers, so the iterative fit is fully value-oracled by
-    unrolling init + iterations into chained CTEs (the graph_pagerank
-    technique).  The census ints come back O(k) on the driver; the
-    final rounding runs through the SAME Spark expression as before
-    (decimal -> double -> round) so the IEEE ops match the oracle
-    bit-for-bit.  The float production fit (kmeans_fit) stays
-    pytest-gated against an exact numpy replica
-    (tests/test_clustering.py)."""
-    from parquet_converters_spark.operators.clustering import kmeans_fit_exact
-
-    emb = _t(spark, sf_dir, "embeddings")
-    _assigned, _cen, census = kmeans_fit_exact(
-        emb,
-        "embedding",
-        "vec_id",
-        k=_KM_K,
-        iterations=_KM_ITERS,
-        scale=_KM_SCALE,
-        sample_size=_KM_SAMPLE,
-        fold_census=True,
-    )
-    # d2 sums exceed 2^63 at scale — ship them as strings, cast to
-    # decimal(38,0) in-plan so the rounding expression is unchanged
-    from parquet_converters_spark.session import values_df
-
-    rows = [(c, n, str(d2)) for c, n, d2 in census]
-    return (
-        values_df(spark, rows, "cluster: int, n_vecs: long, _d2: string")
-        .select(
-            "cluster",
-            "n_vecs",
-            F.round(
-                F.col("_d2").cast("decimal(38,0)").cast("double")
-                / float(_KM_SCALE) ** 2,
-                3,
-            ).alias("inertia"),
-        )
-        .orderBy("cluster")
-    )
 
 
 def _kmeans_oracle_sql() -> str:
@@ -8671,140 +3378,6 @@ def winsorized_value_stats(spark, sf_dir):
     )
 
 
-WINSORIZE_SQL = """
-WITH b AS (
-  SELECT event_type,
-         quantile_cont(value, 0.05) AS lo,
-         quantile_cont(value, 0.95) AS hi
-  FROM events GROUP BY event_type
-)
-SELECT e.event_type,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(CASE WHEN value < lo THEN 1 ELSE 0 END) AS BIGINT) AS n_clipped_lo,
-       CAST(sum(CASE WHEN value > hi THEN 1 ELSE 0 END) AS BIGINT) AS n_clipped_hi,
-       round(avg(greatest(lo, least(hi, value))), 6) AS avg_clipped,
-       round(min(greatest(lo, least(hi, value))), 6) AS min_clipped,
-       round(max(greatest(lo, least(hi, value))), 6) AS max_clipped
-FROM events e JOIN b USING (event_type)
-GROUP BY e.event_type ORDER BY e.event_type
-"""
-
-
-def per_source_doc_cap(spark, sf_dir):
-    """Cap each source at 40 documents (functions/sampling.py
-    per_group_cap): deterministic hash-rank keep, audited by kept count
-    and the character mass of the kept set (discriminates WHICH docs
-    were kept, not just how many)."""
-    from parquet_converters_spark.functions.sampling import per_group_cap
-
-    docs = _t(spark, sf_dir, "documents")
-    capped = per_group_cap(docs, "source", "doc_id", 40)
-    return (
-        capped.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_kept"),
-            F.sum("n_chars").alias("kept_chars"),
-        )
-        .orderBy("source")
-    )
-
-
-PER_SOURCE_CAP_SQL = f"""
-SELECT source, CAST(count(*) AS BIGINT) AS n_kept,
-       CAST(sum(n_chars) AS BIGINT) AS kept_chars
-FROM (
-  SELECT source, n_chars,
-         row_number() OVER (
-           PARTITION BY source
-           ORDER BY {SQL_H32.format(x='CAST(doc_id AS VARCHAR)')}, doc_id
-         ) AS rk
-  FROM documents
-) WHERE rk <= 40
-GROUP BY source ORDER BY source
-"""
-
-
-QUERIES.update({
-    "per_source_doc_cap": (per_source_doc_cap, PER_SOURCE_CAP_SQL),
-    "winsorized_value_stats": (winsorized_value_stats, WINSORIZE_SQL),
-    "kmeans_doc_clusters": (kmeans_doc_clusters, KMEANS_DOC_SQL),
-    "gopher_quality_report": (gopher_quality_report, GOPHER_QUALITY_SQL),
-    "char_entropy_buckets": (char_entropy_buckets, CHAR_ENTROPY_SQL),
-    "stratified_sample_counts": (stratified_sample_counts, STRATIFIED_SAMPLE_SQL),
-    "expectations_report": (expectations_report, EXPECTATIONS_SQL),
-    "dup_shingle_fraction": (dup_shingle_fraction, DUP_SHINGLE_FRACTION_SQL),
-})
-
-
-# --- new in r02 (rotate into the window in later rounds) ------------------
-QUERIES.update({
-    "embedding_quantize_error": (embedding_quantize_error, EMBED_QUANT_SQL),
-    "contamination_matrix": (contamination_matrix, CONTAMINATION_SQL),
-    "dedup_incremental_bloom": (dedup_incremental_bloom, DEDUP_INCR_BLOOM_SQL),
-    "ann_recall_at5": (ann_recall_at5, ANN_RECALL_SQL),
-    "multimodal_audio": (multimodal_audio, MULTIMODAL_AUDIO_SQL),
-    "bpe_merge_candidates": (bpe_merge_candidates, BPE_MERGE_SQL),
-    "embedding_pc1": (embedding_pc1, EMBED_PC1_SQL),
-    "embedding_standardize_stats": (
-        embedding_standardize_stats,
-        EMBED_STANDARDIZE_SQL,
-    ),
-    "text_pii_redact": (text_pii_redact, TEXT_PII_REDACT_SQL),
-    "skew_key_profile": (skew_key_profile, SKEW_KEY_PROFILE_SQL),
-    "order_backlog_concurrency": (
-        order_backlog_concurrency,
-        ORDER_BACKLOG_SQL,
-    ),
-})
-
-# ===========================================================================
-# Round-2 late additions: time-series gap fill, equi-depth histogram,
-# mixture (temperature) resampling plan, small-file compaction plan
-# ===========================================================================
-
-
-def gap_fill_daily(spark, sf_dir):
-    """Calendar resampling with forward fill
-    (operators/timeseries.resample_ffill): per user, a daily grid from
-    first to last event day, each day carrying the last observed value,
-    gaps forward-filled.  Grid explode is bounded by each user's own
-    span; the fill window is partitioned by user — no global calendar,
-    no global window."""
-    from parquet_converters_spark.operators.timeseries import resample_ffill
-
-    ev = _events(spark, sf_dir)
-    out = resample_ffill(ev, "user_id", "ts", "value", "event_id", unit="day")
-    return out.select(
-        "user_id",
-        F.unix_micros("cell").alias("day_us"),
-        "value_filled",
-        "is_gap",
-    ).orderBy("user_id", "day_us")
-
-
-GAP_FILL_DAILY_SQL = """
-WITH obs AS (
-  SELECT user_id, date_trunc('day', ts) AS cell, value
-  FROM (SELECT user_id, ts, value,
-               row_number() OVER (PARTITION BY user_id, date_trunc('day', ts)
-                                  ORDER BY ts DESC, event_id DESC) AS rn
-        FROM events)
-  WHERE rn = 1
-), grid AS (
-  SELECT user_id,
-         unnest(generate_series(min(cell), max(cell), INTERVAL 1 DAY)) AS cell
-  FROM obs GROUP BY user_id
-)
-SELECT g.user_id, epoch_us(CAST(g.cell AS TIMESTAMP)) AS day_us,
-       last_value(o.value IGNORE NULLS)
-         OVER (PARTITION BY g.user_id ORDER BY g.cell
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_filled,
-       o.value IS NULL AS is_gap
-FROM grid g LEFT JOIN obs o ON g.user_id = o.user_id AND g.cell = o.cell
-ORDER BY g.user_id, day_us
-"""
-
-
 _EQD_BUCKETS = 10
 
 
@@ -8840,7 +3413,7 @@ def equi_depth_histogram(spark, sf_dir, exact=None):
     bench run when tried).  Boundaries are rounded to 6 decimals on
     both engines before comparing so the bucket rule is engine-stable.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     if exact is None:
         exact = _footer_rows(sf_dir, "lineitem") <= _EQD_EXACT_MAX_ROWS
     fr = [i / _EQD_BUCKETS for i in range(1, _EQD_BUCKETS)]
@@ -8968,82 +3541,6 @@ def equi_depth_histogram(spark, sf_dir, exact=None):
         .orderBy("bucket")
     )
 
-
-_EQD_BOUNDS_SQL = ", ".join(
-    f"round(quantile_cont(l_extendedprice, {i}/{_EQD_BUCKETS}.0), 6) AS b{i}"
-    for i in range(1, _EQD_BUCKETS)
-)
-_EQD_BUCKET_SQL = " + ".join(
-    f"CAST(l_extendedprice > b{i} AS INT)" for i in range(1, _EQD_BUCKETS)
-)
-
-EQUI_DEPTH_HISTOGRAM_SQL = f"""
-WITH bounds AS (SELECT {_EQD_BOUNDS_SQL} FROM lineitem)
-SELECT ({_EQD_BUCKET_SQL}) AS bucket, count(*) AS n,
-       min(l_extendedprice) AS price_lo, max(l_extendedprice) AS price_hi
-FROM lineitem CROSS JOIN bounds
-GROUP BY bucket ORDER BY bucket
-"""
-
-_MIX_ALPHA, _MIX_BUDGET_FRAC = 0.5, 0.5
-
-
-def mixture_plan(spark, sf_dir):
-    """Temperature-scaled data-mixture plan (multilingual-sampling
-    style, share_i ∝ n_tokens_i^α with α=0.5): per-source token counts
-    → target share → per-source sampling rate against a token budget of
-    half the corpus.  One hash aggregate over the corpus plus
-    driver-free scalar algebra on the 1-row totals (broadcast) — the
-    plan any 100 TB mixture rebalancer runs before sampling.  Shares
-    and rates rounded to 6 decimals for engine-stable hashing."""
-    docs = _t(spark, sf_dir, "documents")
-    per = docs.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(token_count("text").cast("long")).alias("n_tokens"),
-    )
-    tot = per.agg(
-        F.sum(F.pow(F.col("n_tokens"), _MIX_ALPHA)).alias("_zsum"),
-        F.sum("n_tokens").alias("_ttot"),
-    )
-    share = F.pow(F.col("n_tokens"), _MIX_ALPHA) / F.col("_zsum")
-    rate = F.least(
-        F.lit(1.0),
-        share * F.lit(_MIX_BUDGET_FRAC) * F.col("_ttot") / F.col("n_tokens"),
-    )
-    return (
-        per.crossJoin(F.broadcast(tot))
-        .select(
-            "source",
-            "n_docs",
-            "n_tokens",
-            F.round(share, 6).alias("target_share"),
-            F.round(rate, 6).alias("sample_rate"),
-            F.round(rate * F.col("n_tokens"), 4).alias("expected_tokens"),
-        )
-        .orderBy("source")
-    )
-
-
-MIXTURE_PLAN_SQL = f"""
-WITH per AS (
-  SELECT source, count(*) AS n_docs,
-         CAST(sum(len({SQL_TOKENS.format(col='text')})) AS BIGINT) AS n_tokens
-  FROM documents GROUP BY source
-), tot AS (
-  SELECT sum(pow(n_tokens, {_MIX_ALPHA})) AS _zsum, sum(n_tokens) AS _ttot
-  FROM per
-)
-SELECT source, n_docs, n_tokens,
-       round(pow(n_tokens, {_MIX_ALPHA}) / _zsum, 6) AS target_share,
-       round(least(1.0, pow(n_tokens, {_MIX_ALPHA}) / _zsum
-                        * {_MIX_BUDGET_FRAC} * _ttot / n_tokens), 6) AS sample_rate,
-       round(least(1.0, pow(n_tokens, {_MIX_ALPHA}) / _zsum
-                        * {_MIX_BUDGET_FRAC} * _ttot / n_tokens) * n_tokens,
-             4) AS expected_tokens
-FROM per CROSS JOIN tot
-ORDER BY source
-"""
-
 _COMPACT_TARGET = 65536  # bytes per output file
 
 
@@ -9055,7 +3552,7 @@ def compaction_plan(spark, sf_dir):
     count and byte size — the plan a table maintenance job executes."""
     from parquet_converters_spark.functions.sampling import pack_sequences
 
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "source", "doc_id", F.col("n_chars").alias("bytes")
     )
     packed = pack_sequences(
@@ -9073,116 +3570,6 @@ def compaction_plan(spark, sf_dir):
         )
         .orderBy("source", "bin_id")
     )
-
-
-COMPACTION_PLAN_SQL = f"""
-WITH c AS (
-  SELECT source, doc_id, n_chars,
-         sum(n_chars) OVER (PARTITION BY source ORDER BY doc_id
-                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS _cum
-  FROM documents
-)
-SELECT source,
-       CAST(floor((_cum - 1) / CAST({_COMPACT_TARGET} AS DOUBLE)) AS BIGINT)
-         AS bin_id,
-       count(*) AS n_files, CAST(sum(n_chars) AS BIGINT) AS bytes
-FROM c
-GROUP BY source, bin_id ORDER BY source, bin_id
-"""
-
-
-def full_outer_reconcile(spark, sf_dir):
-    """Full-outer reconciliation — the join form the semi/anti/inner
-    set doesn't cover: per-nation BUILDING-segment customer counts vs
-    negative-balance supplier counts, nations present on either side,
-    with a match-status column.  Both inputs pre-aggregate to ≤|nation|
-    rows before the join, so the full-outer is a tiny sort-merge no
-    matter the fact-table size."""
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    c = (
-        cust.filter(F.col("c_mktsegment") == "BUILDING")
-        .groupBy("c_nationkey")
-        .agg(F.count(F.lit(1)).alias("n_cust"))
-    )
-    s = (
-        supp.filter(F.col("s_acctbal") < 0)
-        .groupBy("s_nationkey")
-        .agg(F.count(F.lit(1)).alias("n_supp"))
-    )
-    j = c.join(s, c["c_nationkey"] == s["s_nationkey"], "full_outer")
-    return (
-        j.select(
-            F.coalesce("c_nationkey", "s_nationkey").alias("nationkey"),
-            F.coalesce("n_cust", F.lit(0)).alias("n_cust"),
-            F.coalesce("n_supp", F.lit(0)).alias("n_supp"),
-            F.when(
-                F.col("c_nationkey").isNotNull()
-                & F.col("s_nationkey").isNotNull(),
-                "both",
-            )
-            .when(F.col("c_nationkey").isNotNull(), "customer_only")
-            .otherwise("supplier_only")
-            .alias("status"),
-        )
-        .orderBy("nationkey")
-    )
-
-
-FULL_OUTER_RECONCILE_SQL = """
-WITH c AS (
-  SELECT c_nationkey, count(*) AS n_cust FROM customer
-  WHERE c_mktsegment = 'BUILDING' GROUP BY c_nationkey
-), s AS (
-  SELECT s_nationkey, count(*) AS n_supp FROM supplier
-  WHERE s_acctbal < 0 GROUP BY s_nationkey
-)
-SELECT coalesce(c_nationkey, s_nationkey) AS nationkey,
-       coalesce(n_cust, 0) AS n_cust,
-       coalesce(n_supp, 0) AS n_supp,
-       CASE WHEN c_nationkey IS NOT NULL AND s_nationkey IS NOT NULL THEN 'both'
-            WHEN c_nationkey IS NOT NULL THEN 'customer_only'
-            ELSE 'supplier_only' END AS status
-FROM c FULL OUTER JOIN s ON c_nationkey = s_nationkey
-ORDER BY nationkey
-"""
-
-
-def unpivot_metrics(spark, sf_dir):
-    """UNPIVOT/melt — the inverse of ``pivot_event_counts``: per-flag
-    lineitem aggregates reshaped from wide (qty, price, disc columns)
-    to long (metric, value) rows via ``DataFrame.unpivot`` (Expand
-    under the hood — one pass, no join)."""
-    li = _t(spark, sf_dir, "lineitem")
-    wide = li.groupBy("l_returnflag").agg(
-        F.round(F.sum(_dec("l_quantity")).cast("double"), 4).alias("qty"),
-        F.round(F.sum(_dec("l_extendedprice")).cast("double"), 4).alias(
-            "price"
-        ),
-        F.round(F.sum(_dec("l_discount")).cast("double"), 4).alias("disc"),
-    )
-    return (
-        wide.unpivot("l_returnflag", ["qty", "price", "disc"], "metric", "value")
-        .orderBy("l_returnflag", "metric")
-    )
-
-
-UNPIVOT_METRICS_SQL = """
-WITH wide AS (
-  SELECT l_returnflag,
-         round(CAST(sum(CAST(l_quantity AS DECIMAL(25,4))) AS DOUBLE), 4) AS qty,
-         round(CAST(sum(CAST(l_extendedprice AS DECIMAL(25,4))) AS DOUBLE), 4) AS price,
-         round(CAST(sum(CAST(l_discount AS DECIMAL(25,4))) AS DOUBLE), 4) AS disc
-  FROM lineitem GROUP BY l_returnflag
-)
-SELECT l_returnflag, metric, value FROM (
-  SELECT l_returnflag, 'qty' AS metric, qty AS value FROM wide
-  UNION ALL SELECT l_returnflag, 'price', price FROM wide
-  UNION ALL SELECT l_returnflag, 'disc', disc FROM wide
-)
-ORDER BY l_returnflag, metric
-"""
 
 
 def time_rollup_hierarchy(spark, sf_dir):
@@ -9211,14 +3598,6 @@ def time_rollup_hierarchy(spark, sf_dir):
         "n_events",
         F.round(F.col("vsum").cast("double"), 4).alias("value_sum"),
     ).orderBy("day_us")
-
-
-TIME_ROLLUP_SQL = """
-SELECT epoch_us(CAST(date_trunc('day', ts) AS TIMESTAMP)) AS day_us,
-       count(*) AS n_events,
-       round(CAST(sum(CAST(value AS DECIMAL(25,6))) AS DOUBLE), 4) AS value_sum
-FROM events GROUP BY 1 ORDER BY day_us
-"""
 
 
 def rolling_7d_distinct_users(spark, sf_dir):
@@ -9261,30 +3640,18 @@ def rolling_7d_distinct_users(spark, sf_dir):
     )
 
 
-ROLLING_7D_DISTINCT_SQL = """
-WITH du AS (
-  SELECT DISTINCT date_trunc('day', ts) AS day, user_id FROM events
-), days AS (SELECT DISTINCT day FROM du)
-SELECT epoch_us(CAST(d.day AS TIMESTAMP)) AS day_us,
-       count(DISTINCT u.user_id) AS n_users_7d
-FROM days d JOIN du u
-  ON u.day BETWEEN d.day - INTERVAL 6 DAY AND d.day
-GROUP BY d.day ORDER BY day_us
-"""
-
-
 _FUZZY_MAX_DIST, _FUZZY_PREFIX = 8, 64
 
 
 def dedup_fuzzy_pairs(spark, sf_dir):
     """Fuzzy (edit-distance) duplicate verification — the approximate
     string join done the scale-correct way: candidates come from the
-    banded MinHash-LSH join (shared cached pipeline, never an
+    banded MinHash-LSH join (never an
     all-pairs or blocked self-join), and ``levenshtein`` runs only on
     the candidate pairs' 64-char prefixes as the residual verifier.
     At 100 TB the edit-distance cost is |candidates|, not |corpus|²."""
-    pairs = _dedup_cached(spark, sf_dir, "docs_pairs")
-    docs = _t(spark, sf_dir, "documents").select(
+    pairs = _lsh_pairs(spark, sf_dir)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", F.substring("text", 1, _FUZZY_PREFIX).alias("_prefix")
     )
     a = docs.select(
@@ -9324,47 +3691,6 @@ ORDER BY id_a, id_b
 )
 
 
-def revenue_share_by_nation(spark, sf_dir):
-    """Ratio-to-report without a window: per-nation revenue as a share
-    of the total via a 1-row broadcast of the grand total — a global
-    ``Window`` over ungrouped rows would serialize; two aggregates and
-    a broadcast never do.  The grand total re-aggregates the per-nation
-    rows (decimal partials), so the corpus is scanned once."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    per = (
-        orders.join(cust, orders["o_custkey"] == cust["c_custkey"])
-        .groupBy("c_nationkey")
-        .agg(F.sum(_dec("o_totalprice")).alias("revenue"))
-    )
-    tot = per.agg(F.sum("revenue").alias("_total"))
-    return (
-        per.crossJoin(F.broadcast(tot))
-        .select(
-            "c_nationkey",
-            F.round(F.col("revenue").cast("double"), 4).alias("revenue"),
-            F.round(
-                (F.col("revenue") / F.col("_total")).cast("double"), 6
-            ).alias("share"),
-        )
-        .orderBy("c_nationkey")
-    )
-
-
-REVENUE_SHARE_SQL = """
-WITH per AS (
-  SELECT c_nationkey, sum(CAST(o_totalprice AS DECIMAL(25,4))) AS revenue
-  FROM orders JOIN customer ON o_custkey = c_custkey
-  GROUP BY c_nationkey
-), tot AS (SELECT sum(revenue) AS _total FROM per)
-SELECT c_nationkey,
-       round(CAST(revenue AS DOUBLE), 4) AS revenue,
-       round(CAST(revenue / _total AS DOUBLE), 6) AS share
-FROM per CROSS JOIN tot
-ORDER BY c_nationkey
-"""
-
-
 _SPARSE_TOPM, _SPARSE_MAXDF, _SPARSE_TOPK = 10, 100, 50
 
 
@@ -9378,9 +3704,7 @@ def sparse_cosine_topk(spark, sf_dir):
     tie-break."""
     from parquet_converters_spark.functions.retrieval import tfidf_terms
 
-    # spread=False: the doc_id<200 pushdown leaves ~4% of the table;
-    # measured +0.51 s with spread (extra exchange per join branch)
-    docs = _t(spark, sf_dir, "documents", spread=False).where(
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(
         F.col("doc_id") < 200
     )
     w_doc = Window.partitionBy("doc_id").orderBy(
@@ -9436,84 +3760,6 @@ def sparse_cosine_topk(spark, sf_dir):
         .orderBy(F.col("cosine").desc(), "doc_a", "doc_b")
         .limit(_SPARSE_TOPK)
     )
-
-
-SPARSE_COSINE_SQL = f"""
-WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id < 200),
-tf AS ({_SQL_TF.format(src='d')}),
-dfq AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
-n AS (SELECT count(*) AS n_docs FROM d),
-vec0 AS (
-  SELECT doc_id, token,
-         tf * (ln((n.n_docs + 1.0) / (dfq.df + 1.0)) + 1.0) AS tfidf,
-         row_number() OVER (
-           PARTITION BY doc_id
-           ORDER BY tf * (ln((n.n_docs + 1.0) / (dfq.df + 1.0)) + 1.0) DESC,
-                    token
-         ) AS _rk
-  FROM tf JOIN dfq USING (token) CROSS JOIN n
-),
-vec1 AS (SELECT doc_id, token, tfidf FROM vec0 WHERE _rk <= {_SPARSE_TOPM}),
-df2 AS (SELECT token, count(*) AS _df FROM vec1 GROUP BY token),
-vec AS (
-  SELECT doc_id, token, tfidf FROM vec1 JOIN df2 USING (token)
-  WHERE _df <= {_SPARSE_MAXDF}
-),
-norms AS (SELECT doc_id, sqrt(sum(tfidf * tfidf)) AS _norm FROM vec GROUP BY doc_id),
-dots AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, sum(a.tfidf * b.tfidf) AS _dot
-  FROM vec a JOIN vec b ON a.token = b.token AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b, round(_dot / (na._norm * nb._norm), 6) AS cosine
-FROM dots JOIN norms na ON na.doc_id = doc_a
-          JOIN norms nb ON nb.doc_id = doc_b
-ORDER BY cosine DESC, doc_a, doc_b
-LIMIT {_SPARSE_TOPK}
-"""
-
-
-def event_transition_matrix(spark, sf_dir):
-    """First-order event-type transition matrix: per user the event
-    sequence (ts, event_id order) yields (from, to) adjacent pairs via
-    ``lead`` (one keyed window shuffle), then one tiny aggregate;
-    transition probabilities normalize within each from-type over the
-    ≤|types|² result — the Markov-chain summary every clickstream
-    pipeline computes."""
-    ev = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = (
-        ev.select(
-            F.col("event_type").alias("from_type"),
-            F.lead("event_type").over(w).alias("to_type"),
-        )
-        .where(F.col("to_type").isNotNull())
-        .groupBy("from_type", "to_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    w_from = Window.partitionBy("from_type")
-    return (
-        pairs.withColumn(
-            "prob", F.round(F.col("n") / F.sum("n").over(w_from), 6)
-        )
-        .orderBy("from_type", "to_type")
-    )
-
-
-EVENT_TRANSITION_SQL = """
-WITH seq AS (
-  SELECT event_type AS from_type,
-         lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           AS to_type
-  FROM events
-), pairs AS (
-  SELECT from_type, to_type, count(*) AS n
-  FROM seq WHERE to_type IS NOT NULL GROUP BY 1, 2
-)
-SELECT from_type, to_type, n,
-       round(n / sum(n) OVER (PARTITION BY from_type), 6) AS prob
-FROM pairs ORDER BY from_type, to_type
-"""
 
 _MAD_K, _MAD_CUT = 0.6745, 3.5
 _MAD_EXACT_MAX_ROWS = 10_000_000
@@ -9573,28 +3819,6 @@ def mad_outlier_events(spark, sf_dir, exact=None):
     )
 
 
-MAD_OUTLIER_SQL = f"""
-WITH med AS (
-  SELECT event_type, quantile_cont(value, 0.5) AS _med
-  FROM events GROUP BY event_type
-), mad AS (
-  SELECT e.event_type, quantile_cont(abs(e.value - m._med), 0.5) AS _mad,
-         any_value(m._med) AS _med
-  FROM events e JOIN med m USING (event_type)
-  GROUP BY e.event_type
-)
-SELECT e.event_type, count(*) AS n,
-       CAST(sum(CASE WHEN a._mad > 0
-                      AND abs({_MAD_K} * (e.value - a._med) / a._mad)
-                          > {_MAD_CUT} THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_outliers,
-       round(any_value(a._med), 6) AS median,
-       round(any_value(a._mad), 6) AS mad
-FROM events e JOIN mad a USING (event_type)
-GROUP BY e.event_type ORDER BY e.event_type
-"""
-
-
 _BASKET_MIN_N = 2
 
 
@@ -9606,8 +3830,8 @@ def market_basket_lift(spark, sf_dir):
     pair / single / total counts (singles and the 1-row total broadcast
     back).  The pair explosion never leaves the order key — no
     cross-order join exists in the plan."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    part = spark.read.parquet(f"{sf_dir}/part.parquet")
     # r18 (guide §1.2/§2.4): the previous shape derived pair/single/
     # total counts as four independent branches of the distinct
     # (order, brand) frame — each branch re-scanned lineitem, re-paid
@@ -9674,596 +3898,6 @@ def market_basket_lift(spark, sf_dir):
     )
 
 
-MARKET_BASKET_SQL = f"""
-WITH basket AS (
-  SELECT DISTINCT l_orderkey, p_brand
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-), pair_n AS (
-  SELECT a.p_brand AS brand_a, b.p_brand AS brand_b, count(*) AS n_ab
-  FROM basket a JOIN basket b
-    ON a.l_orderkey = b.l_orderkey AND a.p_brand < b.p_brand
-  GROUP BY 1, 2
-  HAVING count(*) >= {_BASKET_MIN_N}
-), singles AS (
-  SELECT p_brand, count(*) AS n_1 FROM basket GROUP BY p_brand
-), total AS (SELECT count(DISTINCT l_orderkey) AS _n_orders FROM basket)
-SELECT brand_a, brand_b, n_ab,
-       round(n_ab / _n_orders, 6) AS support,
-       round(n_ab * _n_orders / (sa.n_1 * sb.n_1), 6) AS lift
-FROM pair_n
-JOIN singles sa ON sa.p_brand = brand_a
-JOIN singles sb ON sb.p_brand = brand_b
-CROSS JOIN total
-ORDER BY brand_a, brand_b
-"""
-
-
-def cluster_quality_by_label(spark, sf_dir):
-    """Cluster-quality report over the labeled embeddings: per label
-    the centroid (dim-wise mean), mean distance of members to their own
-    centroid (cohesion), and distance to the nearest other centroid
-    (separation) — the Davies-Bouldin ingredients.  Everything runs at
-    (label, dim) grain: posexplode → one hash agg for centroids (k×dim
-    rows), broadcast join back for cohesion, and a k²×dim centroid
-    self-join that never touches member rows — at 100 TB the only
-    corpus-sized pass is the cohesion join."""
-    # r18: the cohesion and separation branches each re-derived the
-    # centroid table — re-aggregating the full (row × dim) explode per
-    # branch at any layout.  The k×dim centroid table is materialized
-    # once (lazy localCheckpoint — label-count-bounded at every
-    # scale); the scan keeps its per-branch spread (A/B: adding an
-    # emb-level checkpoint paid more lazy-RDD plan-time at build than
-    # its exec saving on this 1-second query).
-    emb = _t(spark, sf_dir, "embeddings")
-    dims = emb.select(
-        "vec_id", "label", F.posexplode("embedding").alias("dim", "x")
-    ).withColumn("x", F.col("x").cast("double"))
-    cent = dims.groupBy("label", "dim").agg(F.avg("x").alias("c")) \
-        .localCheckpoint(eager=False)
-    cohesion = (
-        dims.join(F.broadcast(cent), ["label", "dim"])
-        .groupBy("vec_id", "label")
-        .agg(F.sqrt(F.sum(F.pow(F.col("x") - F.col("c"), 2))).alias("_d"))
-        .groupBy("label")
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.round(F.avg("_d"), 6).alias("mean_intra"),
-        )
-    )
-    ca = cent.select(
-        F.col("label").alias("label"), "dim", F.col("c").alias("_ca")
-    )
-    cb = cent.select(
-        F.col("label").alias("label_b"), "dim", F.col("c").alias("_cb")
-    )
-    sep = (
-        ca.join(cb, "dim")
-        .where(F.col("label") != F.col("label_b"))
-        .groupBy("label", "label_b")
-        .agg(F.sqrt(F.sum(F.pow(F.col("_ca") - F.col("_cb"), 2))).alias("_d"))
-        .groupBy("label")
-        .agg(F.round(F.min("_d"), 6).alias("nearest_other"))
-    )
-    return (
-        cohesion.join(sep, "label")
-        .select("label", "n_vecs", "mean_intra", "nearest_other")
-        .orderBy("label")
-    )
-
-
-CLUSTER_QUALITY_SQL = """
-WITH dims AS (
-  SELECT vec_id, label, i - 1 AS dim, CAST(embedding[i] AS DOUBLE) AS x
-  FROM embeddings,
-       unnest(generate_series(1, len(embedding))) AS t(i)
-), cent AS (
-  SELECT label, dim, avg(x) AS c FROM dims GROUP BY label, dim
-), cohesion AS (
-  SELECT label, count(*) AS n_vecs, round(avg(_d), 6) AS mean_intra
-  FROM (
-    SELECT d.vec_id, d.label, sqrt(sum(pow(d.x - c.c, 2))) AS _d
-    FROM dims d JOIN cent c ON d.label = c.label AND d.dim = c.dim
-    GROUP BY d.vec_id, d.label
-  ) GROUP BY label
-), sep AS (
-  SELECT label, round(min(_d), 6) AS nearest_other
-  FROM (
-    SELECT a.label, b.label AS label_b,
-           sqrt(sum(pow(a.c - b.c, 2))) AS _d
-    FROM cent a JOIN cent b ON a.dim = b.dim AND a.label <> b.label
-    GROUP BY a.label, b.label
-  ) GROUP BY label
-)
-SELECT label, n_vecs, mean_intra, nearest_other
-FROM cohesion JOIN sep USING (label)
-ORDER BY label
-"""
-
-
-def multiset_customer_activity(spark, sf_dir):
-    """Multiset set-ops (INTERSECT ALL / EXCEPT ALL) — the
-    bag-semantics completion of the distinct-set trio: customer keys of
-    1-URGENT orders vs 2-HIGH orders, keeping multiplicity (a customer
-    with three urgent and one high order appears twice in the
-    difference).  Spark ``intersectAll``/``exceptAll`` compile to
-    count-based joins, not row-pair matching — one shuffle each."""
-    orders = _t(spark, sf_dir, "orders")
-    urgent = orders.where(F.col("o_orderpriority") == "1-URGENT").select(
-        "o_custkey"
-    )
-    high = orders.where(F.col("o_orderpriority") == "2-HIGH").select(
-        "o_custkey"
-    )
-    both = urgent.intersectAll(high).groupBy("o_custkey").agg(
-        F.count(F.lit(1)).alias("n_common")
-    )
-    diff = urgent.exceptAll(high).groupBy("o_custkey").agg(
-        F.count(F.lit(1)).alias("n_extra")
-    )
-    return (
-        both.join(diff, "o_custkey", "full_outer")
-        .select(
-            "o_custkey",
-            F.coalesce("n_common", F.lit(0)).alias("n_common"),
-            F.coalesce("n_extra", F.lit(0)).alias("n_extra"),
-        )
-        .orderBy("o_custkey")
-    )
-
-
-MULTISET_SQL = """
-WITH u AS (SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'),
-h AS (SELECT o_custkey FROM orders WHERE o_orderpriority = '2-HIGH'),
-both_ms AS (
-  SELECT o_custkey, count(*) AS n_common
-  FROM (SELECT * FROM u INTERSECT ALL SELECT * FROM h) GROUP BY o_custkey
-), diff_ms AS (
-  SELECT o_custkey, count(*) AS n_extra
-  FROM (SELECT * FROM u EXCEPT ALL SELECT * FROM h) GROUP BY o_custkey
-)
-SELECT coalesce(b.o_custkey, d.o_custkey) AS o_custkey,
-       coalesce(n_common, 0) AS n_common,
-       coalesce(n_extra, 0) AS n_extra
-FROM both_ms b FULL OUTER JOIN diff_ms d ON b.o_custkey = d.o_custkey
-ORDER BY o_custkey
-"""
-
-_PATH_LEN_TOPK = 15
-
-
-def event_path_topk(spark, sf_dir):
-    """Sequence mining: the most common 3-step event-type paths across
-    user streams — two ``lead``s in one keyed window pass build the
-    trigram, one hash agg counts, top-15 by (count desc, path).  The
-    n-gram-over-sequences shape: state per user is the window buffer,
-    the aggregate is ≤|types|³ rows."""
-    ev = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tri = (
-        ev.select(
-            F.col("event_type").alias("e1"),
-            F.lead("event_type", 1).over(w).alias("e2"),
-            F.lead("event_type", 2).over(w).alias("e3"),
-        )
-        .where(F.col("e3").isNotNull())
-        .select(
-            F.concat_ws(">", "e1", "e2", "e3").alias("path")
-        )
-    )
-    return (
-        tri.groupBy("path")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), "path")
-        .limit(_PATH_LEN_TOPK)
-    )
-
-
-EVENT_PATH_SQL = f"""
-WITH seq AS (
-  SELECT event_type AS e1,
-         lead(event_type, 1) OVER w AS e2,
-         lead(event_type, 2) OVER w AS e3
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-)
-SELECT concat_ws('>', e1, e2, e3) AS path, count(*) AS n
-FROM seq WHERE e3 IS NOT NULL
-GROUP BY 1 ORDER BY n DESC, path LIMIT {_PATH_LEN_TOPK}
-"""
-
-
-def nation_supplier_roster(spark, sf_dir):
-    """Ordered string aggregation (LISTAGG / string_agg): per nation
-    the roster of its first five suppliers alphabetically (rank-capped
-    so the string stays bounded at any corpus size).
-    Deterministic ordering inside the aggregate via
-    ``sort_array(collect_list(...))`` — collect_list alone is
-    partition-order-dependent and would never hash-match across
-    engines (or across two Spark runs)."""
-    supp = _t(spark, sf_dir, "supplier")
-    w = Window.partitionBy("s_nationkey").orderBy("s_name")
-    top5 = supp.withColumn("_rn", F.row_number().over(w)).where(
-        F.col("_rn") <= 5
-    )
-    return (
-        top5.groupBy("s_nationkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_suppliers"),
-            F.array_join(
-                F.sort_array(F.collect_list("s_name")), ","
-            ).alias("roster"),
-        )
-        .orderBy("s_nationkey")
-    )
-
-
-NATION_ROSTER_SQL = """
-WITH top5 AS (
-  SELECT s_nationkey, s_name,
-         row_number() OVER (PARTITION BY s_nationkey ORDER BY s_name) AS _rn
-  FROM supplier
-)
-SELECT s_nationkey, count(*) AS n_suppliers,
-       string_agg(s_name, ',' ORDER BY s_name) AS roster
-FROM top5 WHERE _rn <= 5
-GROUP BY s_nationkey ORDER BY s_nationkey
-"""
-
-
-def scd2_temporal_enrich(spark, sf_dir):
-    """Temporal-dimension enrichment — the consumer side of SCD2: each
-    purchase event joins the signup-stream version that was valid at
-    its timestamp (equi-join on user_id with the half-open validity
-    interval as residual; the open current version matches via
-    coalesce-to-infinity).  The dim side is the per-user version table
-    (bounded rows per user), so the join shuffles on user_id like any
-    dimension join — never on time.  Output aggregates to per-version
-    purchase stats."""
-    from parquet_converters_spark.operators.scd import scd2_history
-
-    ev = _events(spark, sf_dir)
-    dim = scd2_history(
-        ev.where(F.col("event_type") == "signup"), ["user_id"], "ts", "event_id"
-    ).select(
-        F.col("user_id").alias("d_user"),
-        F.unix_micros("effective_from").alias("_from_us"),
-        F.coalesce(
-            F.unix_micros("effective_to"), F.lit(2**62)
-        ).alias("_to_us"),
-        "version",
-    )
-    facts = ev.where(F.col("event_type") == "purchase").select(
-        "user_id", F.unix_micros("ts").alias("_ts_us"), "value"
-    )
-    joined = facts.join(
-        dim,
-        (facts["user_id"] == dim["d_user"])
-        & (facts["_ts_us"] >= dim["_from_us"])
-        & (facts["_ts_us"] < dim["_to_us"]),
-    )
-    return (
-        joined.groupBy("version")
-        .agg(
-            F.count(F.lit(1)).alias("n_purchases"),
-            F.count_distinct("user_id").alias("n_users"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(25,6)")).cast("double"), 4
-            ).alias("value_sum"),
-        )
-        .orderBy("version")
-    )
-
-
-SCD2_TEMPORAL_ENRICH_SQL = """
-WITH dim AS (
-  SELECT user_id AS d_user, epoch_us(ts) AS _from_us,
-         coalesce(epoch_us(lead(ts) OVER w), 4611686018427387904) AS _to_us,
-         row_number() OVER w AS version
-  FROM events WHERE event_type = 'signup'
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), facts AS (
-  SELECT user_id, epoch_us(ts) AS _ts_us, value
-  FROM events WHERE event_type = 'purchase'
-)
-SELECT version, count(*) AS n_purchases,
-       count(DISTINCT user_id) AS n_users,
-       round(CAST(sum(CAST(value AS DECIMAL(25,6))) AS DOUBLE), 4)
-         AS value_sum
-FROM facts JOIN dim
-  ON user_id = d_user AND _ts_us >= _from_us AND _ts_us < _to_us
-GROUP BY version ORDER BY version
-"""
-
-
-def acctbal_rank_profile(spark, sf_dir):
-    """Relative-rank window completeness (percent_rank + cume_dist +
-    ntile in one partitioned pass): per market segment, the rank
-    profile of the top-5 customers by balance.  All windows partition
-    by segment — segment cardinality bounds the partition, never the
-    corpus."""
-    cust = _t(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_mktsegment").orderBy(
-        F.col("c_acctbal").asc(), F.col("c_custkey").asc()
-    )
-    ranked = cust.select(
-        "c_mktsegment",
-        "c_custkey",
-        F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
-        F.round(F.cume_dist().over(w), 6).alias("cume"),
-        F.ntile(4).over(w).alias("quartile"),
-        F.row_number()
-        .over(
-            Window.partitionBy("c_mktsegment").orderBy(
-                F.col("c_acctbal").desc(), F.col("c_custkey").asc()
-            )
-        )
-        .alias("_top"),
-    )
-    return (
-        ranked.where(F.col("_top") <= 5)
-        .select("c_mktsegment", "c_custkey", "pct_rank", "cume", "quartile")
-        .orderBy("c_mktsegment", F.col("pct_rank").desc(), "c_custkey")
-    )
-
-
-ACCTBAL_RANK_SQL = """
-SELECT c_mktsegment, c_custkey, pct_rank, cume, quartile
-FROM (
-  SELECT c_mktsegment, c_custkey,
-         round(percent_rank() OVER w, 6) AS pct_rank,
-         round(cume_dist() OVER w, 6) AS cume,
-         ntile(4) OVER w AS quartile,
-         row_number() OVER (PARTITION BY c_mktsegment
-                            ORDER BY c_acctbal DESC, c_custkey ASC) AS _top
-  FROM customer
-  WINDOW w AS (PARTITION BY c_mktsegment
-               ORDER BY c_acctbal ASC, c_custkey ASC)
-)
-WHERE _top <= 5
-ORDER BY c_mktsegment, pct_rank DESC, c_custkey
-"""
-
-
-def url_canonical_dedup(spark, sf_dir):
-    """URL canonicalization + host-level dedup census — the key a
-    crawl corpus needs BEFORE content hashing (the same page arrives
-    as http://WWW.X.COM, ...?utm_source=feed, ...:80/#top).  The
-    corpus carries no URLs, so each doc derives a deterministic MESSY
-    variant (scheme/host case, default port, // in the path, trailing
-    slash, utm_* params, fragment — one class per doc_id%6) of its
-    page's URL; canonicalize_url (functions/text.py, pure codegen'd
-    regexp chain) must collapse every variant class onto one key.
-    Oracle: the ANALYTIC canonical form from the construction itself —
-    the engine's regex pipeline is checked against ground truth, not
-    against a reimplementation of the same regexes."""
-    from parquet_converters_spark.functions.text import (
-        canonicalize_url,
-        url_host,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    page = (F.col("doc_id") % 50).cast("string")
-    host = F.concat(F.col("source"), F.lit(".example.com"))
-    path = F.concat(F.lit("/Page/"), page)
-    v = F.col("doc_id") % 6
-    messy = (
-        F.when(v == 0, F.concat(F.lit("http://www."), host, path))
-        .when(v == 1, F.concat(F.lit("HTTP://WWW."), F.upper(host),
-                               F.lit(":80"), path))
-        .when(v == 2, F.concat(F.lit("http://www."), host,
-                               F.lit("/Page//"), page, F.lit("/")))
-        .when(v == 3, F.concat(F.lit("http://www."), host, path,
-                               F.lit("?utm_source=rss&utm_campaign=x")))
-        .when(v == 4, F.concat(F.lit("http://www."), host, path,
-                               F.lit("?id=7&utm_medium=email#frag")))
-        .otherwise(F.concat(F.lit("http://www."), host, path,
-                            F.lit("#section-2")))
-    )
-    canon = docs.select(
-        F.col("doc_id"),
-        canonicalize_url(messy).alias("url"),
-    )
-    return (
-        canon.select("doc_id", "url", url_host("url").alias("host"))
-        .groupBy("url", "host")
-        .agg(
-            F.count("*").alias("n_variants"),
-            F.min("doc_id").alias("representative"),
-            F.countDistinct((F.col("doc_id") % 6)).alias("n_classes"),
-        )
-        .orderBy("url")
-    )
-
-
-URL_CANONICAL_DEDUP_SQL = """
-WITH pages AS (
-  SELECT doc_id,
-         -- the ANALYTIC canonical: variant class 4 keeps its real
-         -- id=7 query parameter, every other class collapses to the
-         -- bare page URL
-         'http://www.' || source || '.example.com/Page/'
-           || CAST(doc_id % 50 AS VARCHAR)
-           || CASE WHEN doc_id % 6 = 4 THEN '?id=7' ELSE '' END AS url,
-         source || '.example.com' AS host,
-         doc_id % 6 AS variant
-  FROM documents
-)
-SELECT url, host,
-       CAST(count(*) AS BIGINT) AS n_variants,
-       min(doc_id) AS representative,
-       CAST(count(DISTINCT variant) AS BIGINT) AS n_classes
-FROM pages
-GROUP BY url, host
-ORDER BY url
-"""
-
-
-def text_normalize_report(spark, sf_dir):
-    """Text-normalization audit (functions/text.normalize_text): the
-    corpus ships clean, so each doc_id%4 class gets a deterministic
-    perturbation (leading spaces + CRLF tail / tab-doubled spaces /
-    control char + blank-line run / untouched) and the report proves
-    normalization strips exactly the injected mess — class 3 must come
-    back 100% restored (idempotence on clean input), classes 0-1 must
-    restore the original bytes, class 2 keeps its legitimate appended
-    content.  One narrow projection + one aggregate."""
-    from parquet_converters_spark.functions.text import normalize_text
-
-    docs = _t(spark, sf_dir, "documents")
-    m = (F.col("doc_id") % 4).alias("mod")
-    pert = (
-        F.when(
-            F.col("doc_id") % 4 == 0,
-            F.concat(F.lit("  "), F.col("text"), F.lit(" \r\n\r\n")),
-        )
-        .when(
-            F.col("doc_id") % 4 == 1,
-            F.regexp_replace(F.col("text"), " ", "\t "),
-        )
-        .when(
-            F.col("doc_id") % 4 == 2,
-            F.concat(F.col("text"), F.lit("\u0007\n\n\n\nend")),
-        )
-        .otherwise(F.col("text"))
-    )
-    base = docs.select(
-        m,
-        F.col("text"),
-        pert.alias("_pert"),
-    ).withColumn("_norm", normalize_text(F.col("_pert")))
-    return (
-        base.groupBy("mod")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum((F.col("_norm") == F.col("text")).cast("long")).alias(
-                "n_restored"
-            ),
-            F.sum(F.length("_pert") - F.length("_norm"))
-            .cast("long")
-            .alias("chars_removed"),
-        )
-        .orderBy("mod")
-    )
-
-
-_NORM_SQL_CHAIN = (
-    "regexp_replace(regexp_replace(regexp_replace(regexp_replace("
-    "regexp_replace(regexp_replace({c}, "
-    r"'\r\n?', chr(10), 'g'), "
-    r"'[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]', '', 'g'), "
-    r"'[ \t]+', ' ', 'g'), "
-    r"' ?\n ?', chr(10), 'g'), "
-    r"'\n{{3,}}', chr(10)||chr(10), 'g'), "
-    r"'^\s+|\s+$', '', 'g')"
-)
-
-TEXT_NORMALIZE_SQL = f"""
-WITH p AS (
-  SELECT doc_id % 4 AS mod, text,
-         CASE doc_id % 4
-           WHEN 0 THEN '  ' || text || ' ' || chr(13)||chr(10)||chr(13)||chr(10)
-           WHEN 1 THEN regexp_replace(text, ' ', chr(9) || ' ', 'g')
-           WHEN 2 THEN text || chr(7) || repeat(chr(10), 4) || 'end'
-           ELSE text
-         END AS _pert
-  FROM documents
-), n AS (
-  SELECT mod, text, _pert, {_NORM_SQL_CHAIN.format(c='_pert')} AS _norm
-  FROM p
-)
-SELECT mod, count(*) AS n_docs,
-       CAST(sum(CASE WHEN _norm = text THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_restored,
-       CAST(sum(length(_pert) - length(_norm)) AS BIGINT) AS chars_removed
-FROM n GROUP BY mod ORDER BY mod
-"""
-
-
-def monthly_revenue_mom(spark, sf_dir):
-    """Month-over-month revenue deltas: one decimal aggregate to
-    month grain, then ``lag`` over the tiny month table (≤ a few
-    hundred rows at any corpus size — the window is over the AGGREGATE,
-    never the fact rows)."""
-    orders = _t(spark, sf_dir, "orders")
-    monthly = orders.groupBy(
-        F.date_trunc("month", F.col("o_orderdate").cast("timestamp")).alias(
-            "month"
-        )
-    ).agg(F.sum(_dec("o_totalprice")).alias("_rev"))
-    w = Window.orderBy("month")
-    # first month has no predecessor: emit 0 deltas, not NULLs (NULL-free
-    # output hashes identically everywhere)
-    prev = F.lag("_rev").over(w)
-    return monthly.select(
-        F.unix_micros("month").alias("month_us"),
-        F.round(F.col("_rev").cast("double"), 4).alias("revenue"),
-        F.coalesce(
-            F.round((F.col("_rev") - prev).cast("double"), 4), F.lit(0.0)
-        ).alias("mom_delta"),
-        F.coalesce(
-            F.round(((F.col("_rev") - prev) / prev).cast("double"), 6),
-            F.lit(0.0),
-        ).alias("mom_pct"),
-    ).orderBy("month_us")
-
-
-MONTHLY_MOM_SQL = """
-WITH m AS (
-  SELECT date_trunc('month', o_orderdate) AS month,
-         sum(CAST(o_totalprice AS DECIMAL(25,4))) AS _rev
-  FROM orders GROUP BY 1
-)
-SELECT epoch_us(CAST(month AS TIMESTAMP)) AS month_us,
-       round(CAST(_rev AS DOUBLE), 4) AS revenue,
-       coalesce(round(CAST(_rev - lag(_rev) OVER (ORDER BY month) AS DOUBLE),
-                      4), 0.0) AS mom_delta,
-       coalesce(round(CAST((_rev - lag(_rev) OVER (ORDER BY month))
-                           / lag(_rev) OVER (ORDER BY month) AS DOUBLE), 6),
-                0.0) AS mom_pct
-FROM m ORDER BY month_us
-"""
-
-
-QUERIES.update({
-    "gap_fill_daily": (gap_fill_daily, GAP_FILL_DAILY_SQL),
-    "url_canonical_dedup": (url_canonical_dedup, URL_CANONICAL_DEDUP_SQL),
-    "audio_resample_check": (audio_resample_check, AUDIO_RESAMPLE_CHECK_SQL),
-    "equi_depth_histogram": (equi_depth_histogram, EQUI_DEPTH_HISTOGRAM_SQL),
-    "mixture_plan": (mixture_plan, MIXTURE_PLAN_SQL),
-    "compaction_plan": (compaction_plan, COMPACTION_PLAN_SQL),
-    "full_outer_reconcile": (full_outer_reconcile, FULL_OUTER_RECONCILE_SQL),
-    "unpivot_metrics": (unpivot_metrics, UNPIVOT_METRICS_SQL),
-    "time_rollup_hierarchy": (time_rollup_hierarchy, TIME_ROLLUP_SQL),
-    "rolling_7d_distinct_users": (
-        rolling_7d_distinct_users,
-        ROLLING_7D_DISTINCT_SQL,
-    ),
-    "dedup_fuzzy_pairs": (dedup_fuzzy_pairs, DEDUP_FUZZY_PAIRS_SQL),
-    "revenue_share_by_nation": (
-        revenue_share_by_nation,
-        REVENUE_SHARE_SQL,
-    ),
-    "sparse_cosine_topk": (sparse_cosine_topk, SPARSE_COSINE_SQL),
-    "market_basket_lift": (market_basket_lift, MARKET_BASKET_SQL),
-    "cluster_quality_by_label": (
-        cluster_quality_by_label,
-        CLUSTER_QUALITY_SQL,
-    ),
-    "event_transition_matrix": (
-        event_transition_matrix,
-        EVENT_TRANSITION_SQL,
-    ),
-    "mad_outlier_events": (mad_outlier_events, MAD_OUTLIER_SQL),
-    "monthly_revenue_mom": (monthly_revenue_mom, MONTHLY_MOM_SQL),
-    "text_normalize_report": (text_normalize_report, TEXT_NORMALIZE_SQL),
-    "acctbal_rank_profile": (acctbal_rank_profile, ACCTBAL_RANK_SQL),
-    "multiset_customer_activity": (multiset_customer_activity, MULTISET_SQL),
-    "event_path_topk": (event_path_topk, EVENT_PATH_SQL),
-    "nation_supplier_roster": (nation_supplier_roster, NATION_ROSTER_SQL),
-    "scd2_temporal_enrich": (scd2_temporal_enrich, SCD2_TEMPORAL_ENRICH_SQL),
-})
-
-
 _SPAN_K, _SPAN_MAX_DF = 4, 1
 
 
@@ -10277,7 +3911,7 @@ def dedup_spans(spark, sf_dir):
     hashing megabyte strings through the driver compare."""
     from parquet_converters_spark.functions.dedup import span_dedup
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = span_dedup(
         docs, span_words=_SPAN_K, max_df=_SPAN_MAX_DF
     )
@@ -10337,7 +3971,7 @@ def dedup_spans_intra(spark, sf_dir):
     book-length inputs.  (A pure-array ``array_position`` filter is
     shuffle-free but O(spans²) per row: fine for web pages, a cliff
     for long documents — same lesson as ``top_ngram_coverage``.)"""
-    docs = _t(spark, sf_dir, "documents")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     k = _SPAN_INTRA_K
     words = F.split(F.col("text"), " ")
     n_spans = F.ceil(F.size(words) / F.lit(float(k))).cast("int")
@@ -10400,169 +4034,6 @@ SELECT doc_id,
        CAST(length(array_to_string(kept, ' ')) AS INT) AS new_len,
        md5(array_to_string(kept, ' ')) AS new_md5
 FROM k ORDER BY doc_id
-"""
-
-
-def source_terms_ctfidf(spark, sf_dir):
-    """Per-source distinctive terms via smoothed c-TF-IDF
-    (BERTopic-style): which tokens characterize each source — the
-    mixture-design diagnostic.  One explode + one hash agg to
-    (source, token); the df window and top-k window run on the
-    vocab×sources table only."""
-    from parquet_converters_spark.functions.corpus_stats import (
-        source_distinctive_terms,
-    )
-
-    # spread=False: wordcount-shuffle shape; measured +0.27 s with spread
-    docs = _t(spark, sf_dir, "documents", spread=False)
-    return (
-        source_distinctive_terms(docs, top_k=5)
-        .withColumnRenamed("grp", "source")
-        .orderBy("source", "rank")
-    )
-
-
-SOURCE_TERMS_CTFIDF_SQL = f"""
-WITH gt AS (
-  SELECT source, unnest({SQL_TOKENS.format(col='text')}) AS token
-  FROM documents
-), g AS (
-  SELECT source, token, count(*) AS tf FROM gt GROUP BY source, token
-), n AS (SELECT count(DISTINCT source) AS n_groups FROM g),
-scored AS (
-  SELECT source, token, tf,
-         round(tf * ln(1 + (SELECT n_groups FROM n)
-                           / CAST(count(*) OVER (PARTITION BY token) AS DOUBLE)),
-               6) AS score
-  FROM g
-)
-SELECT source, token, tf, score,
-       CAST(row_number() OVER (PARTITION BY source
-                               ORDER BY score DESC, token ASC) AS INT) AS rank
-FROM scored
-QUALIFY rank <= 5
-ORDER BY source, rank
-"""
-
-def snapshot_diff_orders(spark, sf_dir):
-    """Snapshot reconciliation audit: orders vs a deterministically
-    perturbed next-day snapshot (keys %97 removed, %5 status-updated,
-    %101 re-keyed as additions), classified added/removed/updated/
-    unchanged by a full-outer key join comparing one md5 per side
-    (`pipelines.snapshot_diff`).  Output is the change-type census —
-    the go/no-go gate before swapping readers to a backfill."""
-    from parquet_converters_spark.pipelines import snapshot_diff
-
-    orders = _t(spark, sf_dir, "orders")
-    base = orders.select("o_orderkey", "o_orderstatus", "o_totalprice")
-    snap_b = (
-        base.filter(F.col("o_orderkey") % 97 != 0)
-        .withColumn(
-            "o_orderstatus",
-            F.when(F.col("o_orderkey") % 5 == 0, F.lit("X")).otherwise(
-                F.col("o_orderstatus")
-            ),
-        )
-        .unionByName(
-            base.filter(F.col("o_orderkey") % 101 == 0).withColumn(
-                "o_orderkey", F.col("o_orderkey") + 10_000_000
-            )
-        )
-    )
-    return (
-        snapshot_diff(base, snap_b, ["o_orderkey"])
-        .groupBy("change_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("change_type")
-    )
-
-
-SNAPSHOT_DIFF_SQL = """
-WITH a AS (SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders),
-b AS (
-  SELECT o_orderkey,
-         CASE WHEN o_orderkey % 5 = 0 THEN 'X' ELSE o_orderstatus END
-           AS o_orderstatus,
-         o_totalprice
-  FROM orders WHERE o_orderkey % 97 <> 0
-  UNION ALL
-  SELECT o_orderkey + 10000000, o_orderstatus, o_totalprice
-  FROM orders WHERE o_orderkey % 101 = 0
-), d AS (
-  SELECT CASE WHEN a.o_orderkey IS NULL THEN 'added'
-              WHEN b.o_orderkey IS NULL THEN 'removed'
-              WHEN a.o_orderstatus = b.o_orderstatus
-                   AND a.o_totalprice = b.o_totalprice THEN 'unchanged'
-              ELSE 'updated' END AS change_type
-  FROM a FULL OUTER JOIN b USING (o_orderkey)
-)
-SELECT change_type, count(*) AS n FROM d
-GROUP BY change_type ORDER BY change_type
-"""
-
-
-def embedding_diversity(spark, sf_dir):
-    """Exact mean pairwise squared distance of the embedding corpus in
-    ONE pass — the O(n²) pairwise definition rewritten algebraically:
-    E||x−y||² over distinct pairs = 2·n/(n−1)·(mean||x||² − ||x̄||²).
-    Two tiny aggregates (per-dim means at the dim grain, scalar norm
-    mean), a broadcast combine, zero joins over pairs — the diversity
-    probe a sampling strategy is scored by, at any corpus size."""
-    emb = _t(spark, sf_dir, "embeddings")
-    sq = F.aggregate(
-        "embedding",
-        F.lit(0.0),
-        lambda acc, x: acc + x.cast("double") * x.cast("double"),
-    )
-    scalars = emb.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg(sq).alias("_m2"),
-    )
-    dim_means = (
-        emb.select(F.posexplode("embedding").alias("_pos", "_v"))
-        .groupBy("_pos")
-        .agg(F.avg(F.col("_v").cast("double")).alias("_mu"))
-        .agg(F.sum(F.col("_mu") * F.col("_mu")).alias("_mu_sq"))
-    )
-    return (
-        scalars.crossJoin(F.broadcast(dim_means))
-        .select(
-            "n",
-            F.round("_m2", 6).alias("mean_sq_norm"),
-            F.round("_mu_sq", 6).alias("sq_norm_of_mean"),
-            F.round(
-                2.0
-                * F.col("n")
-                / (F.col("n") - 1)
-                * (F.col("_m2") - F.col("_mu_sq")),
-                6,
-            ).alias("mean_pairwise_sq_dist"),
-        )
-    )
-
-
-EMBEDDING_DIVERSITY_SQL = """
-WITH sq AS (
-  SELECT vec_id,
-         list_sum(list_transform(embedding,
-                                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))
-           AS sqn
-  FROM embeddings
-), scalars AS (
-  SELECT count(*) AS n, avg(sqn) AS m2 FROM sq
-), dims AS (
-  SELECT generate_subscripts(embedding, 1) AS pos,
-         unnest(embedding) AS v
-  FROM embeddings
-), mu AS (
-  SELECT sum(mu * mu) AS mu_sq
-  FROM (SELECT pos, avg(CAST(v AS DOUBLE)) AS mu FROM dims GROUP BY pos)
-)
-SELECT n,
-       round(m2, 6) AS mean_sq_norm,
-       round(mu_sq, 6) AS sq_norm_of_mean,
-       round(2.0 * n / (n - 1) * (m2 - mu_sq), 6) AS mean_pairwise_sq_dist
-FROM scalars CROSS JOIN mu
 """
 
 
@@ -10650,948 +4121,28 @@ def psi_value_drift(spark, sf_dir, exact=None):
     )
 
 
-_PSI_BOUNDS_SQL = ", ".join(
-    f"round(quantile_cont(value, {i}/{_PSI_BINS}.0), 6) AS b{i}"
-    for i in range(1, _PSI_BINS)
-)
-_PSI_BUCKET_SQL = " + ".join(
-    f"CAST(value > b{i} AS INT)" for i in range(1, _PSI_BINS)
-)
+# ===========================================================================
+# Registry: the converter and corpus queries, each with its DuckDB oracle
+# ===========================================================================
 
-PSI_VALUE_DRIFT_SQL = f"""
-WITH span AS (
-  SELECT min(epoch_us(ts)) AS lo, max(epoch_us(ts)) AS hi FROM events
-), tagged AS (
-  SELECT value,
-         CASE WHEN epoch_us(ts) * 2 >= lo + hi THEN 1 ELSE 0 END AS cur
-  FROM events CROSS JOIN span
-), bounds AS (
-  SELECT {_PSI_BOUNDS_SQL} FROM tagged WHERE cur = 0
-), counts AS (
-  SELECT ({_PSI_BUCKET_SQL}) AS bucket,
-         sum(CASE WHEN cur = 0 THEN 1 ELSE 0 END) AS nr,
-         sum(CASE WHEN cur = 1 THEN 1 ELSE 0 END) AS nc
-  FROM tagged CROSS JOIN bounds GROUP BY bucket
-), tot AS (SELECT sum(nr) AS tr, sum(nc) AS tc FROM counts)
-SELECT bucket,
-       round((nr + 0.5) / (tr + 0.5 * {_PSI_BINS}), 6) AS ref_share,
-       round((nc + 0.5) / (tc + 0.5 * {_PSI_BINS}), 6) AS cur_share,
-       round(((nc + 0.5) / (tc + 0.5 * {_PSI_BINS})
-              - (nr + 0.5) / (tr + 0.5 * {_PSI_BINS}))
-             * ln(((nc + 0.5) / (tc + 0.5 * {_PSI_BINS}))
-                  / ((nr + 0.5) / (tr + 0.5 * {_PSI_BINS}))), 6)
-         AS psi_contrib
-FROM counts CROSS JOIN tot ORDER BY bucket
-"""
-
-
-def top_ngram_coverage(spark, sf_dir):
-    """Gopher repetition signal (Rae et al. 2021 A1.1, 'fraction of
-    characters in the most frequent n-gram'): per document, the share
-    of characters covered by its modal 2-gram and 3-gram.  Pure array
-    expressions per row — zero shuffle before the final sort.
-
-    The mode comes from the inverted-index shape: explode → hash
-    aggregate at (doc, shingle) grain (map-side partials absorb the
-    repeats) → ``max(struct(count, len, shingle))`` per doc.  Measured
-    at sf0.1: 2.0 s, fully whole-stage-codegen — vs 8.4 s for a
-    sorted-array fold (interpreted HOF) and 131 s for the naive
-    filter-count-per-distinct-shingle array form (O(len²) per row).
-    Ties break by the same (count, length, text) maximum the DuckDB
-    oracle's struct max uses; documents too short for an n-gram
-    coalesce to 0.0 on both engines."""
-    from parquet_converters_spark.functions.text import shingles
-
-    docs = _t(spark, sf_dir, "documents")
-
-    def cov(n):
-        ex = docs.select(
-            "doc_id",
-            F.length("text").alias("_tc"),
-            F.explode(shingles("text", n)).alias("_s"),
-        )
-        best = (
-            ex.groupBy("doc_id", "_tc", "_s")
-            .agg(F.count(F.lit(1)).alias("_c"))
-            .groupBy("doc_id", "_tc")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("_c").alias("cnt"),
-                        F.length("_s").alias("len"),
-                        F.col("_s").alias("s"),
-                    )
-                ).alias("_b")
-            )
-        )
-        return best.select(
-            "doc_id",
-            F.round(
-                F.col("_b.cnt") * F.col("_b.len")
-                / F.greatest("_tc", F.lit(1)),
-                6,
-            ).alias(f"top{n}_coverage"),
-        )
-
-    return (
-        docs.select("doc_id")
-        .join(cov(2), "doc_id", "left")
-        .join(cov(3), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("top2_coverage", F.lit(0.0)).alias("top2_coverage"),
-            F.coalesce("top3_coverage", F.lit(0.0)).alias("top3_coverage"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-def _sql_top_cov(col: str) -> str:
-    best = (
-        f"list_aggregate(list_transform(list_distinct({col}), "
-        f"s -> {{'cnt': len(list_filter({col}, x -> x = s)), "
-        f"'len': length(s), 's': s}}), 'max')"
-    )
-    return (
-        f"CASE WHEN len({col}) = 0 THEN 0.0 ELSE round("
-        f"struct_extract({best}, 'cnt') * struct_extract({best}, 'len')"
-        f" / greatest(length(text), 1), 6) END"
-    )
-
-
-TOP_NGRAM_COVERAGE_SQL = f"""
-WITH s AS (
-  SELECT doc_id, text,
-         {_sql_shingles('text', 2)} AS sh2,
-         {_sql_shingles('text', 3)} AS sh3
-  FROM documents
-)
-SELECT doc_id,
-       {_sql_top_cov('sh2')} AS top2_coverage,
-       {_sql_top_cov('sh3')} AS top3_coverage
-FROM s ORDER BY doc_id
-"""
-
-
-_PR_DAMPING, _PR_ITERS, _PR_SUPP_OFFSET = 0.85, 5, 10_000_000
-
-
-def graph_pagerank(spark, sf_dir):
-    """PageRank centrality of the symmetrized customer↔supplier
-    purchase graph (edges = who bought from whom, via orders⋈lineitem;
-    supplier ids offset into their own node space), 5 fixed iterations
-    at d=0.85.  Iterative — yet fully value-oracled: the fixed
-    iteration count unrolls into 5 chained CTEs in the DuckDB oracle,
-    so unlike most iterative operators this one is hash-checked, not
-    rows-only.  One join + one aggregate per iteration; persisted
-    edge/degree and node tables; O(1) driver state."""
-    from parquet_converters_spark.operators.graph import pagerank
-
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    fwd = (
-        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("l_suppkey") + _PR_SUPP_OFFSET).alias("dst"),
-        )
-        .distinct()
-    )
-    edges = fwd.unionByName(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    out = pagerank(
-        edges, damping=_PR_DAMPING, iterations=_PR_ITERS
-    )
-    return out.select(
-        "node", F.round("rank", 9).alias("rank")
-    ).orderBy("node")
-
-
-def _pagerank_oracle_sql() -> str:
-    """Unroll the fixed-iteration PageRank into chained CTEs."""
-    d, iters, off = _PR_DAMPING, _PR_ITERS, _PR_SUPP_OFFSET
-    parts = [
-        f"""WITH fwd AS (
-  SELECT DISTINCT o_custkey AS src, l_suppkey + {off} AS dst
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-), e AS (
-  SELECT src, dst FROM fwd UNION SELECT dst, src FROM fwd
-), deg AS (
-  SELECT src, count(*) AS outdeg FROM e GROUP BY src
-), nodes AS (
-  SELECT src AS node FROM e UNION SELECT dst FROM e
-), nn AS (SELECT count(*) AS n FROM nodes),
-r0 AS (
-  SELECT node, 1.0 / (SELECT n FROM nn) AS rank FROM nodes
-)"""
-    ]
-    for i in range(1, iters + 1):
-        parts.append(
-            f""", r{i} AS (
-  SELECT nodes.node,
-         (1 - {d}) / (SELECT n FROM nn)
-         + {d} * coalesce(c.con, 0) AS rank
-  FROM nodes LEFT JOIN (
-    SELECT e.dst AS node, sum(r{i-1}.rank / deg.outdeg) AS con
-    FROM e JOIN r{i-1} ON e.src = r{i-1}.node
-           JOIN deg ON e.src = deg.src
-    GROUP BY e.dst
-  ) c ON nodes.node = c.node
-)"""
-        )
-    parts.append(
-        f"\nSELECT node, round(rank, 9) AS rank FROM r{iters} ORDER BY node"
-    )
-    return "".join(parts)
-
-
-GRAPH_PAGERANK_SQL = _pagerank_oracle_sql()
-
-
-def semantic_dedup_census(spark, sf_dir):
-    """SemDeDup-shaped end-to-end: embedding near-duplicate pairs
-    (LSH-bucketed cosine, never all-pairs) → connected components
-    (hash-to-min label propagation) → per-cluster census with the
-    keep-one representative (minimum vec_id).  The full semantic-dedup
-    decision table in one plan: ``n_members - 1`` rows drop per
-    cluster.  Oracle: the identical bucketed pair set + recursive-CTE
-    transitive closure."""
-    from parquet_converters_spark.functions.similarity import (
-        embedding_neardup_pairs,
-    )
-    from parquet_converters_spark.operators.graph import connected_components
-
-    emb = _t(spark, sf_dir, "embeddings")
-    pairs = embedding_neardup_pairs(
-        emb, threshold=0.1, num_planes=8, dim=_EMB_DIM
-    )
-    return (
-        connected_components(pairs, "id_a", "id_b")
-        .groupBy("component")
-        .agg(
-            F.count(F.lit(1)).alias("n_members"),
-            F.min("node").alias("keep_id"),
-        )
-        .select(
-            F.col("component").alias("component_id"), "n_members", "keep_id"
-        )
-        .orderBy("component_id")
-    )
-
-
-SEMANTIC_DEDUP_SQL = f"""
-WITH RECURSIVE b AS (
-  SELECT vec_id, embedding, {_sql_lsh_bucket('embedding')} AS bucket
-  FROM embeddings
-), pairs AS (
-  SELECT a.vec_id AS id_a, e.vec_id AS id_b
-  FROM b a JOIN b e ON a.bucket = e.bucket AND a.vec_id < e.vec_id
-  WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                     CAST(e.embedding AS DOUBLE[])), 6) >= 0.1
-), edges AS (
-  SELECT id_a AS u, id_b AS v FROM pairs
-  UNION SELECT id_b, id_a FROM pairs
-), reach(u, v) AS (
-  SELECT u, v FROM edges
-  UNION
-  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-), comp AS (
-  SELECT u AS node, least(u, min(v)) AS component FROM reach GROUP BY u
-)
-SELECT component AS component_id, count(*) AS n_members,
-       min(node) AS keep_id
-FROM comp GROUP BY component ORDER BY component_id
-"""
-
-
-def value_trend_by_type(spark, sf_dir):
-    """Per-group OLS trend: slope/intercept of event value against
-    time (days since epoch), one closed-form aggregate per event type —
-    the drift-direction probe that runs where a model fit would be
-    overkill.  Built-in ``regr_*`` aggregates: JVM codegen, map-side
-    decomposable sums, one shuffle at the (event_type) grain."""
-    ev = _events(spark, sf_dir)
-    day = F.unix_micros("ts") / F.lit(86_400_000_000.0)
-    return (
-        ev.groupBy("event_type")
-        .agg(
-            F.regr_count(F.col("value"), day).alias("n"),
-            F.round(F.regr_slope(F.col("value"), day), 6).alias("slope_per_day"),
-            F.round(F.regr_intercept(F.col("value"), day), 6).alias("intercept"),
-            F.round(F.corr(F.col("value"), day), 6).alias("corr_t"),
-        )
-        .orderBy("event_type")
-    )
-
-
-VALUE_TREND_SQL = """
-SELECT event_type,
-       regr_count(value, epoch_us(ts) / 86400000000.0) AS n,
-       round(regr_slope(value, epoch_us(ts) / 86400000000.0), 6) AS slope_per_day,
-       round(regr_intercept(value, epoch_us(ts) / 86400000000.0), 6) AS intercept,
-       round(corr(value, epoch_us(ts) / 86400000000.0), 6) AS corr_t
-FROM events GROUP BY event_type ORDER BY event_type
-"""
-
-
-_CORR_COLS = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
-
-
-def numeric_profile_corr(spark, sf_dir):
-    """Pairwise Pearson correlation matrix of lineitem's numeric
-    columns in ONE aggregation pass (all C(4,2) ``corr`` aggregates in
-    a single groupBy-less agg — decomposable sums, never a per-pair
-    scan).  The feature-redundancy screen of any profiling pass."""
-    li = _t(spark, sf_dir, "lineitem")
-    aggs = []
-    for i, a in enumerate(_CORR_COLS):
-        for b in _CORR_COLS[i + 1:]:
-            aggs.append(
-                F.round(
-                    F.corr(F.col(a).cast("double"), F.col(b).cast("double")),
-                    6,
-                ).alias(f"corr_{a}_{b}")
-            )
-    return li.agg(*aggs)
-
-
-NUMERIC_CORR_SQL = "SELECT " + ", ".join(
-    f"round(corr(CAST({a} AS DOUBLE), CAST({b} AS DOUBLE)), 6) "
-    f"AS corr_{a}_{b}"
-    for i, a in enumerate(_CORR_COLS)
-    for b in _CORR_COLS[i + 1:]
-) + " FROM lineitem"
-
-
-def quality_vs_dup_calibration(spark, sf_dir):
-    """Cross-signal calibration: does the heuristic quality score
-    actually separate duplicated content?  Per quality level (the
-    rubric is 0/0.25/…/1.0): document count, exact-duplicate rate
-    (content-hash frequency > 1 via ONE window over the hash — no
-    second join), and mean length.  The sanity check run before
-    trusting any quality gate as a dedup proxy at corpus scale."""
-    from parquet_converters_spark.functions.text import quality_score
-
-    docs = _t(spark, sf_dir, "documents")
-    w = Window.partitionBy(F.md5("text"))
-    return (
-        docs.select(
-            quality_score("text").alias("quality"),
-            (F.count(F.lit(1)).over(w) > 1).cast("int").alias("_dup"),
-            "n_chars",
-        )
-        .groupBy("quality")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.round(F.avg("_dup"), 6).alias("dup_rate"),
-            F.round(F.avg("n_chars"), 3).alias("avg_chars"),
-        )
-        .orderBy("quality")
-    )
-
-
-QUALITY_DUP_CALIBRATION_SQL = f"""
-WITH q AS (
-  SELECT doc_id, text, n_chars,
-         round(
-           (CASE WHEN length(text) BETWEEN 50 AND 10000 THEN 0.25 ELSE 0.0 END)
-           + (CASE WHEN CAST(length(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g')) AS DOUBLE)
-                   / greatest(length(text), 1) >= 0.8 THEN 0.25 ELSE 0.0 END)
-           + (CASE WHEN CAST(list_sum(list_transform(toks, t -> length(t))) AS DOUBLE)
-                   / greatest(len(toks), 1) BETWEEN 3 AND 10 THEN 0.25 ELSE 0.0 END)
-           + (CASE WHEN len(list_intersect(toks, {_EN_STOP_SQL})) >= 2 THEN 0.25 ELSE 0.0 END)
-         , 6)::DOUBLE AS quality
-  FROM (SELECT doc_id, text, n_chars, {SQL_TOKENS.format(col='text')} AS toks
-        FROM documents) _t
-), flagged AS (
-  SELECT quality, n_chars,
-         CASE WHEN count(*) OVER (PARTITION BY md5(text)) > 1
-              THEN 1 ELSE 0 END AS _dup
-  FROM q
-)
-SELECT quality, count(*) AS n_docs,
-       round(avg(_dup), 6) AS dup_rate,
-       round(avg(n_chars), 3) AS avg_chars
-FROM flagged GROUP BY quality ORDER BY quality
-"""
-
-
-def event_lateness_profile(spark, sf_dir):
-    """Watermark-choice diagnostic: how out-of-order is the stream?
-    Per event, lateness = running max event-time (in arrival order =
-    event_id) minus the event's own time; report per-event-type
-    lateness count/max plus the share an X-minute watermark would
-    drop.  One keyed window in arrival order — the measurement that
-    turns 'pick a watermark' from folklore into data."""
-    ev = _events(spark, sf_dir)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    late_us = F.greatest(
-        F.lit(0),
-        F.max(F.unix_micros("ts")).over(w) - F.unix_micros("ts"),
-    )
-    return (
-        ev.withColumn("_late_us", late_us)
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum((F.col("_late_us") > 0).cast("long")).alias("n_late"),
-            F.max("_late_us").alias("max_late_us"),
-            F.round(
-                F.avg(
-                    (F.col("_late_us") > F.lit(600 * 1_000_000)).cast("double")
-                ),
-                6,
-            ).alias("dropped_at_10min_wm"),
-        )
-        .orderBy("event_type")
-    )
-
-
-EVENT_LATENESS_SQL = """
-WITH l AS (
-  SELECT event_type,
-         greatest(0, max(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                     - epoch_us(ts)) AS late_us
-  FROM events
-)
-SELECT event_type, count(*) AS n,
-       CAST(sum(CASE WHEN late_us > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_late,
-       max(late_us) AS max_late_us,
-       round(avg(CASE WHEN late_us > 600 * 1000000 THEN 1.0 ELSE 0.0 END), 6)
-         AS dropped_at_10min_wm
-FROM l GROUP BY event_type ORDER BY event_type
-"""
-
-
-def revenue_share_in_region(spark, sf_dir):
-    """Ratio-to-parent: each nation's share of ITS REGION's revenue
-    (vs ``revenue_share_by_nation``'s share of grand total).  Both
-    grains are pre-aggregated before any ratio math — the region
-    re-aggregate is |nations| rows joined back broadcast, never an
-    ungrouped window over fact rows."""
-    # spread kept (r18 A/B, VERDICT r17 item 1 follow-up): the r17 plan
-    # grew 26 -> 30 Exchange (the spread paid once per `rev` branch),
-    # but removing it serializes the decimal revenue multiply onto the
-    # single scan task for BOTH rev branches — measured min-of-3
-    # fresh-JVM at sf0.1/local[32]: 1.10 s with spread vs 1.88 s
-    # without.  No driver timing contradicts (the query fell out of
-    # the bench top-25 window in r17); plan size is the price of
-    # 32-way parallel narrow work here.
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
-    rev = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .join(cust, orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(nation), cust["c_nationkey"] == nation["n_nationkey"])
-        .join(F.broadcast(region), nation["n_regionkey"] == region["r_regionkey"])
-        .groupBy("r_name", "n_name")
-        .agg(
-            F.sum(
-                _dec("l_extendedprice") * (1 - _dec("l_discount"))
-            ).alias("_rev")
-        )
-    )
-    per_region = rev.groupBy("r_name").agg(F.sum("_rev").alias("_rtot"))
-    return (
-        rev.join(F.broadcast(per_region), "r_name")
-        .select(
-            "r_name",
-            "n_name",
-            F.col("_rev").cast("double").alias("revenue"),
-            F.round((F.col("_rev") / F.col("_rtot")).cast("double"), 6).alias(
-                "share_of_region"
-            ),
-        )
-        .orderBy("r_name", "n_name")
-    )
-
-
-REVENUE_SHARE_REGION_SQL = """
-WITH rev AS (
-  SELECT r_name, n_name,
-         sum(CAST(l_extendedprice AS DECIMAL(25,4))
-             * (1 - CAST(l_discount AS DECIMAL(25,4)))) AS _rev
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation ON c_nationkey = n_nationkey
-  JOIN region ON n_regionkey = r_regionkey
-  GROUP BY r_name, n_name
-), tot AS (
-  SELECT r_name, sum(_rev) AS _rtot FROM rev GROUP BY r_name
-)
-SELECT rev.r_name, n_name, CAST(_rev AS DOUBLE) AS revenue,
-       round(CAST(_rev / _rtot AS DOUBLE), 6) AS share_of_region
-FROM rev JOIN tot ON rev.r_name = tot.r_name
-ORDER BY rev.r_name, n_name
-"""
-
-
-def session_bounce_stats(spark, sf_dir):
-    """Session-table analytics over the gaps-and-islands sessionizer:
-    per user-cohort-free corpus summary — sessions, bounce rate
-    (single-event sessions), mean events/session, mean duration.
-    Aggregates the session table (already tiny next to raw events) to
-    ONE row; the events scan happens once inside ``sessionize``."""
-    ev = _events(spark, sf_dir)
-    s = sessionize(ev, gap_minutes=30)
-    dur_s = (
-        F.unix_micros("session_end") - F.unix_micros("session_start")
-    ) / 1_000_000.0
-    return s.agg(
-        F.count(F.lit(1)).alias("n_sessions"),
-        F.round(F.avg((F.col("n_events") == 1).cast("double")), 6).alias(
-            "bounce_rate"
-        ),
-        F.round(F.avg("n_events"), 6).alias("avg_events_per_session"),
-        F.round(F.avg(dur_s), 6).alias("avg_duration_s"),
-    )
-
-
-SESSION_BOUNCE_SQL = """
-WITH flagged AS (
-  SELECT user_id, event_id, ts,
-         CASE WHEN lag(ts) OVER w IS NULL
-                   OR epoch_us(CAST(ts AS TIMESTAMP))
-                      - epoch_us(CAST(lag(ts) OVER w AS TIMESTAMP))
-                      > 1800 * 1000000
-              THEN 1 ELSE 0 END AS _new
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), sess AS (
-  SELECT user_id, ts,
-         CAST(sum(_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS sid
-  FROM flagged
-), stab AS (
-  SELECT user_id, sid, count(*) AS n_events,
-         epoch_us(CAST(max(ts) AS TIMESTAMP))
-           - epoch_us(CAST(min(ts) AS TIMESTAMP)) AS dur_us
-  FROM sess GROUP BY user_id, sid
-)
-SELECT count(*) AS n_sessions,
-       round(avg(CASE WHEN n_events = 1 THEN 1.0 ELSE 0.0 END), 6) AS bounce_rate,
-       round(avg(n_events), 6) AS avg_events_per_session,
-       round(avg(dur_us / 1000000.0), 6) AS avg_duration_s
-FROM stab
-"""
-
-
-def chi2_type_by_weekday(spark, sf_dir):
-    """Chi-square independence test: is event type independent of day
-    of week?  Contingency counts at the (type, dow) grain — one hash
-    aggregate over the corpus — then margins, expected counts and the
-    statistic all on that ≤ types×7-row table (broadcast joins, zero
-    further fact scans).  The screening test for 'does this categorical
-    feature carry temporal signal'.  Output: chi2, degrees of freedom,
-    observed cells."""
-    ev = _events(spark, sf_dir)
-    obs = ev.groupBy(
-        "event_type", F.dayofweek("ts").alias("dow")
-    ).agg(F.count(F.lit(1)).alias("o"))
-    row_m = obs.groupBy("event_type").agg(F.sum("o").alias("_rm"))
-    col_m = obs.groupBy("dow").agg(F.sum("o").alias("_cm"))
-    tot = obs.agg(F.sum("o").alias("_n"))
-    cells = (
-        obs.join(F.broadcast(row_m), "event_type")
-        .join(F.broadcast(col_m), "dow")
-        .crossJoin(F.broadcast(tot))
-        .withColumn("_e", F.col("_rm") * F.col("_cm") / F.col("_n"))
-        .withColumn(
-            "_chi", F.pow(F.col("o") - F.col("_e"), 2) / F.col("_e")
-        )
-    )
-    n_types = F.countDistinct("event_type")
-    n_dows = F.countDistinct("dow")
-    return cells.agg(
-        F.round(F.sum("_chi"), 6).alias("chi2"),
-        ((n_types - 1) * (n_dows - 1)).cast("long").alias("dof"),
-        F.count(F.lit(1)).alias("n_cells"),
-    )
-
-
-CHI2_TYPE_WEEKDAY_SQL = """
-WITH obs AS (
-  SELECT event_type, dayofweek(ts) + 1 AS dow, count(*) AS o
-  FROM events GROUP BY event_type, dayofweek(ts)
-), rm AS (SELECT event_type, sum(o) AS _rm FROM obs GROUP BY event_type),
-cm AS (SELECT dow, sum(o) AS _cm FROM obs GROUP BY dow),
-tot AS (SELECT sum(o) AS _n FROM obs),
-cells AS (
-  SELECT o, _rm * _cm / _n AS _e
-  FROM obs JOIN rm USING (event_type) JOIN cm USING (dow) CROSS JOIN tot
-)
-SELECT round(sum(pow(o - _e, 2) / _e), 6) AS chi2,
-       CAST(((SELECT count(DISTINCT event_type) FROM obs) - 1)
-            * ((SELECT count(DISTINCT dow) FROM obs) - 1) AS BIGINT) AS dof,
-       count(*) AS n_cells
-FROM cells
-"""
-
-
-def lang_confusion_matrix(spark, sf_dir):
-    """Language-metadata QA: confusion matrix of the declared ``lang``
-    column against the stopword-profile detector — the acceptance test
-    run before trusting either signal for per-language mixture
-    weighting.  One narrow detector pass + one (declared, detected)
-    hash aggregate; the matrix is |langs|²-bounded."""
-    from parquet_converters_spark.functions.text import language_id
-
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        docs.select(
-            F.col("lang").alias("declared"),
-            language_id("text").alias("detected"),
-        )
-        .groupBy("declared", "detected")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("declared", "detected")
-    )
-
-
-QUERIES.update({
-    "quality_vs_dup_calibration": (
-        quality_vs_dup_calibration,
-        QUALITY_DUP_CALIBRATION_SQL,
-    ),
-    "event_lateness_profile": (event_lateness_profile, EVENT_LATENESS_SQL),
-    "revenue_share_in_region": (
-        revenue_share_in_region,
-        REVENUE_SHARE_REGION_SQL,
-    ),
-    "session_bounce_stats": (session_bounce_stats, SESSION_BOUNCE_SQL),
-    "chi2_type_by_weekday": (chi2_type_by_weekday, CHI2_TYPE_WEEKDAY_SQL),
-    "lang_confusion_matrix": (lang_confusion_matrix, LANG_CONFUSION_SQL),
+QUERIES: dict[str, tuple] = {
+    "adjacency_node_ranges": (adjacency_node_ranges, ADJ_NODE_RANGES_SQL),
+    "adjacency_range_to_edge": (adjacency_range_to_edge, ADJ_RANGE_EDGE_SQL),
+    "run_length": (run_length, RUN_LENGTH_SQL),
+    "run_length_scan": (run_length_scan, RUN_LENGTH_SQL),
+    "prefix_sum": (prefix_sum, PREFIX_SUM_SQL),
+    "dedup_exact": (dedup_exact, DEDUP_EXACT_SQL),
+    "dedup_minhash_sig": (dedup_minhash_sig, DEDUP_MINHASH_SIG_SQL),
+    "dedup_minhash_lsh": (dedup_minhash_lsh, DEDUP_MINHASH_LSH_SQL),
+    "dedup_components": (dedup_components, DEDUP_COMPONENTS_SQL),
+    "dedup_pipeline": (dedup_pipeline, DEDUP_PIPELINE_SQL),
+    "dedup_simhash": (dedup_simhash, DEDUP_SIMHASH_SQL),
+    "dedup_ngram_jaccard": (dedup_ngram_jaccard, DEDUP_NGRAM_JACCARD_SQL),
+    "dedup_simhash_pairs": (dedup_simhash_pairs, DEDUP_SIMHASH_PAIRS_SQL),
+    "dedup_components_star": (dedup_components_star, DEDUP_COMPONENTS_SQL),
+    "dedup_survivors": (dedup_survivors, DEDUP_SURVIVORS_SQL),
+    "dedup_incremental_bloom": (dedup_incremental_bloom, DEDUP_INCR_BLOOM_SQL),
+    "dedup_fuzzy_pairs": (dedup_fuzzy_pairs, DEDUP_FUZZY_PAIRS_SQL),
     "dedup_spans": (dedup_spans, DEDUP_SPANS_SQL),
     "dedup_spans_intra": (dedup_spans_intra, DEDUP_SPANS_INTRA_SQL),
-    "source_terms_ctfidf": (source_terms_ctfidf, SOURCE_TERMS_CTFIDF_SQL),
-    "snapshot_diff_orders": (snapshot_diff_orders, SNAPSHOT_DIFF_SQL),
-    "embedding_diversity": (embedding_diversity, EMBEDDING_DIVERSITY_SQL),
-    "psi_value_drift": (psi_value_drift, PSI_VALUE_DRIFT_SQL),
-    "graph_pagerank": (graph_pagerank, GRAPH_PAGERANK_SQL),
-    "top_ngram_coverage": (top_ngram_coverage, TOP_NGRAM_COVERAGE_SQL),
-    "semantic_dedup_census": (semantic_dedup_census, SEMANTIC_DEDUP_SQL),
-    "value_trend_by_type": (value_trend_by_type, VALUE_TREND_SQL),
-    "numeric_profile_corr": (numeric_profile_corr, NUMERIC_CORR_SQL),
-})
-
-
-def corpus_prep_funnel(spark, sf_dir):
-    """The composed end-to-end training-corpus preparation funnel
-    (pipelines.prepare_corpus): quality gate -> exact dedup -> LSH
-    near-dedup survivors, reported as documents remaining per stage.
-    Every stage is an individually-oracled primitive
-    (text_quality_funnel, dedup_exact, dedup_survivors); this query
-    pins the COMPOSITION — filters applied in the scale-correct order,
-    each stage consuming the previous stage's survivors."""
-    from parquet_converters_spark.pipelines import prepare_corpus
-    from parquet_converters_spark.session import free_local_checkpoints
-
-    # prepare_corpus keeps its quality gate above the spread exchange of
-    # a single-row-group layout itself (its raw-count observe() stops
-    # the filter pushdown), so the scan goes in as it is
-    _clean, report = prepare_corpus(_t(spark, sf_dir, "documents"))
-    # this query returns only the (already computed) report — release
-    # the survivors checkpoint instead of pinning one per run
-    free_local_checkpoints(_clean)
-    return report.orderBy("stage_order")
-
-
-_CPF_QDOCS_SQL = f"""
-  SELECT doc_id, text FROM (
-    SELECT doc_id, text,
-      (CASE WHEN length(text) BETWEEN 50 AND 10000 THEN 0.25 ELSE 0.0 END)
-      + (CASE WHEN CAST(length(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g')) AS DOUBLE)
-              / greatest(length(text), 1) >= 0.8 THEN 0.25 ELSE 0.0 END)
-      + (CASE WHEN CAST(list_sum(list_transform(toks, t -> length(t))) AS DOUBLE)
-              / greatest(len(toks), 1) BETWEEN 3 AND 10 THEN 0.25 ELSE 0.0 END)
-      + (CASE WHEN len(list_intersect(toks, {_EN_STOP_SQL})) >= 2 THEN 0.25 ELSE 0.0 END)
-      AS q
-    FROM (SELECT doc_id, text, {SQL_TOKENS.format(col='text')} AS toks FROM documents) _t
-  ) _q WHERE length(text) BETWEEN 50 AND 10000 AND q >= 0.5
-"""
-
-CORPUS_PREP_FUNNEL_SQL = (
-    "WITH RECURSIVE qdocs AS (" + _CPF_QDOCS_SQL + "), "
-    f"reps AS (SELECT min(doc_id) AS keep_id FROM qdocs GROUP BY {SQL_H60.format(x='text')}), "
-    "rep_docs AS (SELECT doc_id, text FROM qdocs "
-    "WHERE doc_id IN (SELECT keep_id FROM reps)), "
-    "sig AS (" + _sql_minhash_sig(src="rep_docs") + "), "
-    """banded AS (
-""" + _SQL_BAND_ROWS + """
-), pairs AS (
-  SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-  FROM banded l JOIN banded r ON l.b = r.b AND l.bucket = r.bucket AND l.doc_id < r.doc_id
-), edges AS (
-  SELECT id_a AS u, id_b AS v FROM pairs
-  UNION SELECT id_b, id_a FROM pairs
-), reach(u, v) AS (
-  SELECT u, v FROM edges
-  UNION
-  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-), comp AS (
-  SELECT u AS doc_id, least(u, min(v)) AS component_id FROM reach GROUP BY u
-), surv AS (
-  SELECT doc_id FROM rep_docs
-  WHERE doc_id NOT IN (SELECT doc_id FROM comp WHERE component_id < doc_id)
-)
-SELECT stage_order, stage, n_docs FROM (
-  SELECT CAST(0 AS INT) AS stage_order, 'raw' AS stage,
-         (SELECT count(*) FROM documents) AS n_docs
-  UNION ALL SELECT 1, 'quality', (SELECT count(*) FROM qdocs)
-  UNION ALL SELECT 2, 'exact_unique', (SELECT count(*) FROM rep_docs)
-  UNION ALL SELECT 3, 'near_unique', (SELECT count(*) FROM surv)
-) _r ORDER BY stage_order
-"""
-)
-
-QUERIES.update({
-    "corpus_prep_funnel": (corpus_prep_funnel, CORPUS_PREP_FUNNEL_SQL),
-})
-
-# --- new in r07: hybrid retrieval + contrastive mining --------------------
-QUERIES.update({
-    "hybrid_rrf_search": (hybrid_rrf_search, HYBRID_RRF_SQL),
-    "hard_negative_mining": (hard_negative_mining, HARD_NEGATIVE_SQL),
-})
-
-# --- new in late r07: curation + layout + drift -----------------------------
-QUERIES.update({
-    "mmr_diverse_topk": (mmr_diverse_topk, MMR_DIVERSE_SQL),
-    "ks_drift_test": (ks_drift_test, KS_DRIFT_SQL),
-    "zorder_layout_plan": (zorder_layout_plan, ZORDER_LAYOUT_SQL),
-    "vocab_growth_by_source": (vocab_growth_by_source, VOCAB_GROWTH_SQL),
-    "cms_heavy_hitters": (cms_heavy_hitters, CMS_HEAVY_SQL),
-    "hll_distinct_registers": (hll_distinct_registers, HLL_DISTINCT_SQL),
-    "lsh_pair_eval": (lsh_pair_eval, LSH_PAIR_EVAL_SQL),
-})
-
-
-# Registry order (``list(QUERIES)``), the order __spark_entry__ hands the
-# queries and their oracles out in; a query missing here comes last.
-_ORDER = [
-    "crawl_prep_funnel_full",
-    "warc_revisit_census",
-    "cdx_index_census",
-    "stream_crawl_ingest",
-    "text_language_id",
-    "text_quality",
-    "text_rolling_hash",
-    "text_token_count",
-    "text_top_tokens",
-    "topk_per_group",
-    "touch_scan_v2",
-    "validation_filter",
-    "vocab_growth_by_source",
-    "above_nation_avg",
-    "anti_join",
-    "array_flatten",
-    "asof_join_last_view",
-    "audio_resample_check",
-    "band_join_conversions",
-    "bitfield_unpack",
-    "bm25_search",
-    "distinct_nation_stats",
-    "dup_shingle_fraction",
-    "embedding_pc1",
-    "embedding_quantize_error",
-    "embedding_standardize_stats",
-    "equi_depth_histogram",
-    "gopher_quality_report",
-    "graph_triangle_stats",
-    "grouping_sets_pricing",
-    "inverted_index_stats",
-    "kmeans_doc_clusters",
-    "multimodal_decode",
-    "multimodal_frames",
-    "multimodal_resize",
-    "multimodal_transcode",
-    "per_source_doc_cap",
-    "percentile_acctbal",
-    "range_join_error_views",
-    "range_window_1h",
-    "salted_join_brand_revenue",
-    "scd2_event_history",
-    "sequence_packing",
-    "sim_ivf_ann_bcast",
-    "sim_lsh_ann_bcast",
-    "sim_neardup_pairs",
-    "skew_key_profile",
-    "sparse_cosine_topk",
-    "stream_dedup",
-    "stream_enrich",
-    "image_phash_census",
-    "image_phash_neardup",
-    "warc_text_census",
-    "robots_gate_census",
-    "crawl_prep_funnel",
-    "unpivot_metrics",
-    "value_histogram",
-    "value_trend_by_type",
-    "zorder_layout_plan",
-    "acctbal_rank_profile",
-    "adjacency_node_ranges",
-    "adjacency_range_to_edge",
-    "ann_recall_pq",
-    "bloom_pruned_revenue",
-    "bpe_merge_candidates",
-    "char_entropy_buckets",
-    "chi2_type_by_weekday",
-    "dedup_minhash_sig",
-    "dedup_simhash_pairs",
-    "ks_drift_test",
-    "limit_n",
-    "lsh_pair_eval",
-    "multimodal_meta",
-    "multimodal_probe",
-    "pivot_event_counts",
-    "proj_rename",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q12_priority_shipping",
-    "q13_order_distribution",
-    "q14_brand_revenue",
-    "q15_top_supplier",
-    "q16_supplier_part_count",
-    "q17_small_qty_revenue",
-    "q18_large_orders",
-    "q19_disjunctive_pred",
-    "q20_qualified_suppliers",
-    "q21_dominant_supplier",
-    "q22_idle_customers",
-    "q2_min_cost_supplier",
-    "q3_shipping_priority",
-    "q5_nation_volume",
-    "q6_selective_agg",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "rollup_pricing",
-    "semi_join_exists",
-    "set_intersect",
-    "text_fingerprint",
-    "transcode_census",
-    "video_track_census",
-    "image_dhash_census",
-    "image_dhash_neardup",
-    "audio_fingerprint_census",
-    "audio_fp_dedup",
-    "video_dhash_census",
-    "bpe_learned_merges",
-    "bpe_token_census",
-    "stream_image_dedup",
-    "cube_pricing",
-    "decontaminate_train",
-    "dedup_components_star",
-    "dedup_fuzzy_pairs",
-    "dedup_incremental_bloom",
-    "dedup_ngram_jaccard",
-    "expectations_report",
-    "global_max",
-    "graph_pagerank",
-    "hll_distinct_registers",
-    "inter_event_gaps",
-    "interval_merge",
-    "json_extract_agg",
-    "lang_confusion_matrix",
-    "mmr_diverse_topk",
-    "moving_avg_7d",
-    "numeric_profile_corr",
-    "pmi_top_pairs",
-    "prefix_sum",
-    "psi_value_drift",
-    "q1_pricing_summary",
-    "quality_vs_dup_calibration",
-    "revenue_share_in_region",
-    "run_length",
-    "run_length_scan",
-    "sample_split_counts",
-    "semantic_dedup_census",
-    "session_bounce_stats",
-    "sim_cosine_topk",
-    "sim_ivf_ann",
-    "sim_lsh_ann",
-    "snapshot_diff_orders",
-    "source_terms_ctfidf",
-    "text_chunking",
-    "text_pii_redact",
-    "text_pii_scan",
-    "text_quality_funnel",
-    "text_repetition",
-    "text_top_bigrams",
-    "top_ngram_coverage",
-    "media_triage_census",
-    "cluster_quality_by_label",
-    "cms_heavy_hitters",
-    "cohort_retention",
-    "compaction_plan",
-    "decile_counts",
-    "dedup_components",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_pipeline",
-    "dedup_simhash",
-    "dedup_spans",
-    "dedup_spans_intra",
-    "dedup_survivors",
-    "dense_left_join",
-    "derived_key",
-    "doc_logprob_quality",
-    "embedding_diversity",
-    "event_funnel",
-    "event_lateness_profile",
-    "event_path_topk",
-    "event_transition_matrix",
-    "full_outer_reconcile",
-    "gap_fill_daily",
-    "graph_degree_distribution",
-    "hard_negative_mining",
-    "hybrid_rrf_search",
-    "interval_overlap_sessions",
-    "mad_outlier_events",
-    "market_basket_lift",
-    "mixture_plan",
-    "monthly_revenue_mom",
-    "multimodal_audio",
-    "multiset_customer_activity",
-    "nation_supplier_roster",
-    "order_backlog_concurrency",
-    "revenue_share_by_nation",
-    "rolling_7d_distinct_users",
-    "scd2_temporal_enrich",
-    "sim_ivfpq_ann",
-    "stratified_sample_counts",
-    "text_normalize_report",
-    "time_rollup_hierarchy",
-    "zscore_outlier_events",
-    "ann_recall_at5",
-    "asof_join_next_purchase",
-    "containment_pairs",
-    "contamination_matrix",
-    "corpus_prep_funnel",
-    "count_sum",
-    "url_canonical_dedup",
-    "stream_join_pairs",
-    "stream_running_totals",
-    "stream_session_window",
-    "stream_sessionize",
-    "stream_sessionize_stateful",
-    "stream_windowed_agg",
-    "table_profile",
-    "tfidf_top_terms",
-    "upsert_latest_state",
-    "vector_norm_stats",
-    "weighted_sample_docs",
-    "winsorized_value_stats",
-]
-QUERIES = {**{name: QUERIES[name] for name in _ORDER}, **QUERIES}
+}

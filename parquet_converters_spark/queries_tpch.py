@@ -15,6 +15,9 @@ every fact-side aggregation is a single hash shuffle on the grouping
 key with map-side partial aggregation; the self-join patterns (q21,
 as-of, band) are expressed as windows or single equi-joins on the
 natural partition key so Spark never builds a cross product.
+
+None of these queries is registered in ``queries.QUERIES``; only their
+tests call them.
 """
 
 from __future__ import annotations
@@ -22,194 +25,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-# Re-use the loaders/decimal helpers from the main module (import at call
-# time to avoid a circular import: queries.py imports this module's
-# registry).
-def _helpers():
-    from parquet_converters_spark.queries import _t, _events, _dec
-
-    return _t, _events, _dec
-
-
-_DISC_PRICE_SQL = (
-    "CAST(l_extendedprice AS DECIMAL(25,4)) * "
-    "(CAST(1 AS DECIMAL(25,4)) - CAST(l_discount AS DECIMAL(25,4)))"
-)
+from parquet_converters_spark.queries import _dec, _events
 
 
 def _disc_price(_dec):
     return _dec("l_extendedprice") * (F.lit(1).cast("decimal(25,4)") - _dec("l_discount"))
-
-
-# ---------------------------------------------------------------------------
-# q2 — min-cost supplier per part (correlated-min decorrelated as a window)
-# ---------------------------------------------------------------------------
-
-def q2_min_cost_supplier(spark, sf_dir):
-    """TPC-H Q2 shape without partsupp: for each size-7 part, the
-    supplier offering the minimum effective price on any lineitem.
-    The correlated ``= (SELECT min ...)`` is decorrelated into a
-    per-part window minimum — one shuffle on l_partkey, dims broadcast."""
-    _t, _events, _dec = _helpers()
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_size") == 7)
-    sup = _t(spark, sf_dir, "supplier")
-    cost = (_disc_price(_dec)).alias("cost")
-    w = Window.partitionBy("p_partkey").orderBy(F.col("cost").asc(), F.col("s_suppkey").asc())
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
-        .select("p_partkey", "p_name", "s_suppkey", "s_name", cost)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "p_partkey",
-            "p_name",
-            "s_suppkey",
-            "s_name",
-            F.col("cost").cast("double").alias("min_cost"),
-        )
-        .orderBy("p_partkey")
-    )
-
-
-Q2_SQL = f"""
-WITH priced AS (
-  SELECT p_partkey, p_name, s_suppkey, s_name,
-         {_DISC_PRICE_SQL} AS cost,
-         ROW_NUMBER() OVER (PARTITION BY p_partkey
-                            ORDER BY {_DISC_PRICE_SQL} ASC, s_suppkey ASC) AS rn
-  FROM lineitem
-  JOIN part ON l_partkey = p_partkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  WHERE p_size = 7
-)
-SELECT p_partkey, p_name, s_suppkey, s_name, CAST(cost AS DOUBLE) AS min_cost
-FROM priced WHERE rn = 1 ORDER BY p_partkey
-"""
-
-
-# ---------------------------------------------------------------------------
-# q7 — volume shipping between two nations
-# ---------------------------------------------------------------------------
-
-def q7_volume_shipping(spark, sf_dir):
-    """TPC-H Q7: revenue shipped between two trade blocs (nation keys
-    0-12 vs 13-24, either direction), by supplier nation / customer
-    nation / ship year.  Bloc halves instead of TPC-H's two named
-    nations so the query is non-vacuous at every test scale (sf0.001
-    has only 10 suppliers — a fixed nation pair can be empty).
-    Facts shuffle once on the join keys; all four dims broadcast."""
-    _t, _events, _dec = _helpers()
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    sup = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    n1 = F.broadcast(nation.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")))
-    n2 = F.broadcast(nation.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation")))
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
-        .join(n1, sup.s_nationkey == F.col("s_nk"))
-        .join(n2, cust.c_nationkey == F.col("c_nk"))
-        .filter(
-            ((F.col("s_nk") <= 12) & (F.col("c_nk") >= 13))
-            | ((F.col("s_nk") >= 13) & (F.col("c_nk") <= 12))
-        )
-        .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
-        .agg(F.sum(_disc_price(_dec)).cast("double").alias("revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
-    )
-
-
-Q7_SQL = f"""
-SELECT supp_nation, cust_nation, l_year,
-       CAST(sum(volume) AS DOUBLE) AS revenue
-FROM (
-  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-         CAST(year(l_shipdate) AS INT) AS l_year,
-         {_DISC_PRICE_SQL} AS volume
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation n1 ON s_nationkey = n1.n_nationkey
-  JOIN nation n2 ON c_nationkey = n2.n_nationkey
-  WHERE (n1.n_nationkey <= 12 AND n2.n_nationkey >= 13)
-     OR (n1.n_nationkey >= 13 AND n2.n_nationkey <= 12)
-) shipping
-GROUP BY supp_nation, cust_nation, l_year
-ORDER BY supp_nation, cust_nation, l_year
-"""
-
-
-# ---------------------------------------------------------------------------
-# q8 — market share of one nation within a region
-# ---------------------------------------------------------------------------
-
-def q8_market_share(spark, sf_dir):
-    """TPC-H Q8: NATION_3's share of ASIA-customer revenue per order
-    year.  The share is a conditional-sum / total-sum ratio computed
-    after a single grouped aggregation (both sums in one pass)."""
-    _t, _events, _dec = _helpers()
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    sup = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
-    cn = F.broadcast(
-        nation.join(region, nation.n_regionkey == region.r_regionkey)
-        .filter(F.col("r_name") == "ASIA")
-        .select(F.col("n_nationkey").alias("c_nk"))
-    )
-    sn = F.broadcast(nation.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")))
-    vol = _disc_price(_dec)
-    grouped = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(cn, cust.c_nationkey == F.col("c_nk"))
-        .join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
-        .join(sn, sup.s_nationkey == F.col("s_nk"))
-        .groupBy(F.year("o_orderdate").alias("o_year"))
-        .agg(
-            F.sum(F.when(F.col("supp_nation") == "NATION_3", vol).otherwise(F.lit(0).cast("decimal(25,4)")))
-            .cast("double")
-            .alias("nation_volume"),
-            F.sum(vol).cast("double").alias("total_volume"),
-        )
-    )
-    return grouped.select(
-        "o_year",
-        "nation_volume",
-        "total_volume",
-        F.round(F.col("nation_volume") / F.col("total_volume"), 6).alias("mkt_share"),
-    ).orderBy("o_year")
-
-
-Q8_SQL = f"""
-SELECT o_year, nation_volume, total_volume,
-       round(nation_volume / total_volume, 6) AS mkt_share
-FROM (
-  SELECT CAST(year(o_orderdate) AS INT) AS o_year,
-         CAST(sum(CASE WHEN n2.n_name = 'NATION_3' THEN {_DISC_PRICE_SQL}
-                       ELSE CAST(0 AS DECIMAL(25,4)) END) AS DOUBLE) AS nation_volume,
-         CAST(sum({_DISC_PRICE_SQL}) AS DOUBLE) AS total_volume
-  FROM lineitem
-  JOIN orders ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation n1 ON c_nationkey = n1.n_nationkey
-  JOIN region ON n1.n_regionkey = r_regionkey
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation n2 ON s_nationkey = n2.n_nationkey
-  WHERE r_name = 'ASIA'
-  GROUP BY 1
-) t
-ORDER BY o_year
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -220,14 +40,11 @@ def q9_product_profit(spark, sf_dir):
     """TPC-H Q9 without ps_supplycost: profit = disc revenue minus
     retail cost of goods (p_retailprice * l_quantity), for parts whose
     name contains 'red', by supplier nation and order year."""
-    _t, _events, _dec = _helpers()
-    # spread=False: broadcast-dim probe side, trivial narrow compute;
-    # measured +0.35 s with spread (r17)
-    li = _t(spark, sf_dir, "lineitem", spread=False)
-    orders = _t(spark, sf_dir, "orders")
-    sup = _t(spark, sf_dir, "supplier")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_name").contains("red"))
-    nation = _t(spark, sf_dir, "nation")
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    sup = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    part = spark.read.parquet(f"{sf_dir}/part.parquet").filter(F.col("p_name").contains("red"))
+    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
     amount = _disc_price(_dec) - _dec("p_retailprice") * _dec("l_quantity")
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
@@ -238,62 +55,6 @@ def q9_product_profit(spark, sf_dir):
         .agg(F.sum(amount).cast("double").alias("profit"))
         .orderBy("nation", F.col("o_year").desc())
     )
-
-
-Q9_SQL = f"""
-SELECT n_name AS nation, CAST(year(o_orderdate) AS INT) AS o_year,
-       CAST(sum({_DISC_PRICE_SQL}
-                - CAST(p_retailprice AS DECIMAL(25,4)) * CAST(l_quantity AS DECIMAL(25,4))) AS DOUBLE) AS profit
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN orders ON l_orderkey = o_orderkey
-WHERE p_name LIKE '%red%'
-GROUP BY 1, 2
-ORDER BY nation, o_year DESC
-"""
-
-
-# ---------------------------------------------------------------------------
-# q10 — returned-item revenue per customer
-# ---------------------------------------------------------------------------
-
-def q10_returned_items(spark, sf_dir):
-    """TPC-H Q10: top 20 customers by lost revenue on returned items
-    (l_returnflag = 'R') in 1998-H1 orders, with nation name."""
-    _t, _events, _dec = _helpers()
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    orders = _t(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1998-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1998-07-01").cast("timestamp"))
-    )
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(F.sum(_disc_price(_dec)).cast("double").alias("revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("c_custkey").asc())
-        .limit(20)
-    )
-
-
-Q10_SQL = f"""
-SELECT c_custkey, c_name, c_acctbal, n_name,
-       CAST(sum({_DISC_PRICE_SQL}) AS DOUBLE) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-WHERE l_returnflag = 'R'
-  AND o_orderdate >= TIMESTAMP '1998-01-01' AND o_orderdate < TIMESTAMP '1998-07-01'
-GROUP BY c_custkey, c_name, c_acctbal, n_name
-ORDER BY revenue DESC, c_custkey ASC
-LIMIT 20
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -307,8 +68,7 @@ def q11_important_parts(spark, sf_dir):
     cross join against the grouped aggregate; the comparison is
     cross-multiplied (value * n * 5 > total * 6) so no decimal
     division happens on either engine."""
-    _t, _events, _dec = _helpers()
-    li = _t(spark, sf_dir, "lineitem")
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     per_part = li.groupBy("l_partkey").agg(
         F.sum(_dec("l_extendedprice")).alias("value_dec")
     )
@@ -325,58 +85,6 @@ def q11_important_parts(spark, sf_dir):
     )
 
 
-Q11_SQL = """
-WITH per_part AS (
-  SELECT l_partkey, sum(CAST(l_extendedprice AS DECIMAL(25,4))) AS value_dec
-  FROM lineitem GROUP BY l_partkey
-)
-SELECT l_partkey, CAST(value_dec AS DOUBLE) AS part_value
-FROM per_part, (SELECT sum(value_dec) AS total_value, count(*) AS n_parts FROM per_part) s
-WHERE value_dec * n_parts * 5 > total_value * 6
-ORDER BY part_value DESC, l_partkey ASC
-"""
-
-
-# ---------------------------------------------------------------------------
-# q12 — shipping-delay buckets vs order priority
-# ---------------------------------------------------------------------------
-
-def q12_priority_shipping(spark, sf_dir):
-    """TPC-H Q12 without l_shipmode/commitdate: ship-delay buckets
-    (whole months between order and ship date, computed in exact
-    integer microseconds) vs counts of high/low priority orders."""
-    _t, _events, _dec = _helpers()
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    delay_days = (
-        (
-            F.unix_micros(F.col("l_shipdate").cast("timestamp"))
-            - F.unix_micros(F.col("o_orderdate").cast("timestamp"))
-        )
-        / F.lit(86_400_000_000)
-    ).cast("long")
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .withColumn("delay_bucket", (delay_days / 30).cast("long"))
-        .groupBy("delay_bucket")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_priority_count"),
-            F.sum(F.when(~high, 1).otherwise(0)).alias("low_priority_count"),
-        )
-        .orderBy("delay_bucket")
-    )
-
-
-Q12_SQL = """
-SELECT CAST((epoch_us(l_shipdate) - epoch_us(o_orderdate)) // 86400000000 // 30 AS BIGINT) AS delay_bucket,
-       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_priority_count,
-       CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_priority_count
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-GROUP BY 1 ORDER BY delay_bucket
-"""
-
-
 # ---------------------------------------------------------------------------
 # q13 — customer order-count distribution
 # ---------------------------------------------------------------------------
@@ -386,9 +94,8 @@ def q13_order_distribution(spark, sf_dir):
     zero-order customers (left outer join), excluding low-priority
     orders.  Two aggregations; the first shuffles on c_custkey, the
     second on the (tiny-domain) count."""
-    _t, _events, _dec = _helpers()
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") != "5-LOW")
+    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(F.col("o_orderpriority") != "5-LOW")
     per_cust = (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
         .groupBy("c_custkey")
@@ -399,19 +106,6 @@ def q13_order_distribution(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("custdist"))
         .orderBy(F.col("custdist").desc(), F.col("c_count").desc())
     )
-
-
-Q13_SQL = """
-SELECT c_count, count(*) AS custdist
-FROM (
-  SELECT c_custkey, count(o_orderkey) AS c_count
-  FROM customer LEFT JOIN orders
-    ON c_custkey = o_custkey AND o_orderpriority <> '5-LOW'
-  GROUP BY c_custkey
-) c_orders
-GROUP BY c_count
-ORDER BY custdist DESC, c_count DESC
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -425,12 +119,11 @@ def q15_top_supplier(spark, sf_dir):
     funnel every supplier into one partition at scale).  Revenue
     equality is exact: both sides are the same decimal sum cast to
     double."""
-    _t, _events, _dec = _helpers()
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
     )
-    sup = _t(spark, sf_dir, "supplier")
+    sup = spark.read.parquet(f"{sf_dir}/supplier.parquet")
     rev = (
         li.groupBy("l_suppkey")
         .agg(F.sum(_disc_price(_dec)).cast("double").alias("total_revenue"))
@@ -447,194 +140,6 @@ def q15_top_supplier(spark, sf_dir):
     )
 
 
-Q15_SQL = f"""
-WITH revenue AS (
-  SELECT l_suppkey AS supplier_no,
-         CAST(sum({_DISC_PRICE_SQL}) AS DOUBLE) AS total_revenue
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1997-04-01'
-  GROUP BY l_suppkey
-)
-SELECT s_suppkey, s_name, total_revenue
-FROM supplier JOIN revenue ON s_suppkey = supplier_no
-WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
-ORDER BY s_suppkey
-"""
-
-
-# ---------------------------------------------------------------------------
-# q16 — supplier count per part group, excluding flagged suppliers
-# ---------------------------------------------------------------------------
-
-def q16_supplier_part_count(spark, sf_dir):
-    """TPC-H Q16 without partsupp: distinct suppliers observed per
-    (brand, type, size) on lineitems, excluding Brand#1 parts and
-    negative-balance suppliers (the 'complaints' NOT IN subquery →
-    broadcast anti join)."""
-    _t, _events, _dec = _helpers()
-    # spread=False: broadcast-dim probe side, trivial narrow compute;
-    # measured +0.26 s with spread (r17)
-    li = _t(spark, sf_dir, "lineitem", spread=False)
-    part = _t(spark, sf_dir, "part").filter(
-        (F.col("p_brand") != "Brand#1") & F.col("p_size").isin(1, 5, 10, 15, 20, 25)
-    )
-    flagged = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select("s_suppkey")
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(F.broadcast(flagged), li.l_suppkey == flagged.s_suppkey, "left_anti")
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(
-            F.col("supplier_cnt").desc(), F.col("p_brand"), F.col("p_type"), F.col("p_size")
-        )
-    )
-
-
-Q16_SQL = """
-SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE p_brand <> 'Brand#1' AND p_size IN (1, 5, 10, 15, 20, 25)
-  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-GROUP BY p_brand, p_type, p_size
-ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
-"""
-
-
-# ---------------------------------------------------------------------------
-# q17 — small-quantity-order revenue (correlated avg decorrelated)
-# ---------------------------------------------------------------------------
-
-def q17_small_qty_revenue(spark, sf_dir):
-    """TPC-H Q17: average yearly revenue lost if Brand#2 orders below
-    half the part's average quantity were not taken.  The correlated
-    ``l_quantity < 0.5 * avg(l_quantity)`` is made exact-arithmetic by
-    cross-multiplying: ``2 * qty * cnt < sum_qty`` (no decimal
-    division on either engine)."""
-    _t, _events, _dec = _helpers()
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#2")
-    joined = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-    w = Window.partitionBy("p_partkey")
-    qualified = (
-        joined.withColumn("sum_qty", F.sum(_dec("l_quantity")).over(w))
-        .withColumn("cnt_qty", F.count(F.lit(1)).over(w))
-        .filter(
-            _dec("l_quantity") * F.lit(2).cast("decimal(25,4)") * F.col("cnt_qty")
-            < F.col("sum_qty")
-        )
-    )
-    return qualified.select(
-        (F.sum(_dec("l_extendedprice")).cast("double") / F.lit(7.0)).alias("avg_yearly"),
-        F.count(F.lit(1)).alias("n_small_orders"),
-    )
-
-
-Q17_SQL = """
-WITH stats AS (
-  SELECT l_partkey AS sp, sum(CAST(l_quantity AS DECIMAL(25,4))) AS sum_qty,
-         count(*) AS cnt_qty
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-  WHERE p_brand = 'Brand#2'
-  GROUP BY l_partkey
-)
-SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(25,4))) AS DOUBLE) / 7.0 AS avg_yearly,
-       count(*) AS n_small_orders
-FROM lineitem
-JOIN part ON l_partkey = p_partkey
-JOIN stats ON l_partkey = sp
-WHERE p_brand = 'Brand#2'
-  AND CAST(l_quantity AS DECIMAL(25,4)) * CAST(2 AS DECIMAL(25,4)) * cnt_qty < sum_qty
-"""
-
-
-# ---------------------------------------------------------------------------
-# q19 — disjunctive conjunctions (OR of predicate bundles)
-# ---------------------------------------------------------------------------
-
-def q19_disjunctive_pred(spark, sf_dir):
-    """TPC-H Q19: revenue under three OR'd brand/size/quantity predicate
-    bundles.  Catalyst pushes the common l_quantity bounds to the scan
-    and evaluates the disjunction post-join; the part dim broadcasts."""
-    _t, _events, _dec = _helpers()
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    j = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-    cond = (
-        (
-            (F.col("p_brand") == "Brand#12")
-            & (F.col("p_size").between(1, 5))
-            & (F.col("l_quantity").between(1, 11))
-        )
-        | (
-            (F.col("p_brand") == "Brand#23")
-            & (F.col("p_size").between(1, 10))
-            & (F.col("l_quantity").between(10, 20))
-        )
-        | (
-            (F.col("p_brand") == "Brand#34")
-            & (F.col("p_size").between(1, 15))
-            & (F.col("l_quantity").between(20, 30))
-        )
-    )
-    return j.filter(cond).select(
-        F.sum(_disc_price(_dec)).cast("double").alias("revenue"),
-        F.count(F.lit(1)).alias("n_items"),
-    )
-
-
-Q19_SQL = f"""
-SELECT CAST(sum({_DISC_PRICE_SQL}) AS DOUBLE) AS revenue, count(*) AS n_items
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5 AND l_quantity BETWEEN 1 AND 11)
-   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 10 AND 20)
-   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 20 AND 30)
-"""
-
-
-# ---------------------------------------------------------------------------
-# q20 — suppliers with heavy part movements (nested semi joins)
-# ---------------------------------------------------------------------------
-
-def q20_qualified_suppliers(spark, sf_dir):
-    """TPC-H Q20: suppliers who shipped more than 45 units of some
-    'red' part during 1997 — a grouped HAVING feeding a semi join
-    (IN-subquery chain decorrelated into aggregate → left_semi)."""
-    _t, _events, _dec = _helpers()
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    part = _t(spark, sf_dir, "part").filter(F.col("p_name").contains("red"))
-    sup = _t(spark, sf_dir, "supplier")
-    heavy = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .groupBy("l_suppkey", "l_partkey")
-        .agg(F.sum(_dec("l_quantity")).alias("qty"))
-        .filter(F.col("qty") > F.lit(45).cast("decimal(25,4)"))
-        .select("l_suppkey")
-        .distinct()
-    )
-    return (
-        sup.join(heavy, sup.s_suppkey == heavy.l_suppkey, "left_semi")
-        .select("s_suppkey", "s_name")
-        .orderBy("s_suppkey")
-    )
-
-
-Q20_SQL = """
-SELECT s_suppkey, s_name
-FROM supplier
-WHERE s_suppkey IN (
-  SELECT l_suppkey FROM lineitem JOIN part ON l_partkey = p_partkey
-  WHERE p_name LIKE '%red%'
-    AND l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-  GROUP BY l_suppkey, l_partkey
-  HAVING sum(CAST(l_quantity AS DECIMAL(25,4))) > CAST(45 AS DECIMAL(25,4))
-)
-ORDER BY s_suppkey
-"""
-
-
 # ---------------------------------------------------------------------------
 # q21 — dominant supplier per multi-supplier order
 # ---------------------------------------------------------------------------
@@ -646,9 +151,8 @@ def q21_dominant_supplier(spark, sf_dir):
     maximum quantity (unique argmax).  Top 20 suppliers by wins.
     One shuffle on l_orderkey for the window, one on l_suppkey for the
     final count — no lineitem self-join."""
-    _t, _events, _dec = _helpers()
-    li = _t(spark, sf_dir, "lineitem")
-    sup = _t(spark, sf_dir, "supplier")
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    sup = spark.read.parquet(f"{sf_dir}/supplier.parquet")
     per_os = li.groupBy("l_orderkey", "l_suppkey").agg(
         F.sum(_dec("l_quantity")).alias("qty")
     )
@@ -676,83 +180,6 @@ def q21_dominant_supplier(spark, sf_dir):
     )
 
 
-Q21_SQL = """
-WITH per_os AS (
-  SELECT l_orderkey, l_suppkey, sum(CAST(l_quantity AS DECIMAL(25,4))) AS qty
-  FROM lineitem GROUP BY l_orderkey, l_suppkey
-), windowed AS (
-  SELECT l_suppkey, qty,
-         count(*) OVER (PARTITION BY l_orderkey) AS n_supp,
-         max(qty) OVER (PARTITION BY l_orderkey) AS max_qty,
-         l_orderkey
-  FROM per_os
-), ranked AS (
-  SELECT l_suppkey, qty, n_supp, max_qty,
-         sum(CASE WHEN qty = max_qty THEN 1 ELSE 0 END)
-             OVER (PARTITION BY l_orderkey) AS n_at_max
-  FROM windowed
-)
-SELECT s_suppkey, s_name, count(*) AS numwait
-FROM ranked JOIN supplier ON l_suppkey = s_suppkey
-WHERE n_supp >= 2 AND qty = max_qty AND n_at_max = 1
-GROUP BY s_suppkey, s_name
-ORDER BY numwait DESC, s_suppkey ASC
-LIMIT 20
-"""
-
-
-# ---------------------------------------------------------------------------
-# q22 — wealthy customers without orders
-# ---------------------------------------------------------------------------
-
-def q22_idle_customers(spark, sf_dir):
-    """TPC-H Q22: per nation, customers with above-average positive
-    balance and no order since 1999 (scalar subquery + anti join; the
-    date cut keeps the anti join non-trivial — every customer has
-    *some* order in this dataset).  The average is compared via exact
-    cross-multiplication (bal * n > total) to avoid engine-specific
-    decimal division."""
-    _t, _events, _dec = _helpers()
-    cust = _t(spark, sf_dir, "customer")
-    orders = (
-        _t(spark, sf_dir, "orders")
-        .filter(F.col("o_orderdate") >= F.lit("1999-01-01").cast("timestamp"))
-        .select("o_custkey")
-    )
-    pos = cust.filter(F.col("c_acctbal") > 0.0)
-    stats = pos.agg(
-        F.sum(_dec("c_acctbal")).alias("total_bal"),
-        F.count(F.lit(1)).alias("n_pos"),
-    )
-    return (
-        cust.join(F.broadcast(stats))
-        .filter(_dec("c_acctbal") * F.col("n_pos") > F.col("total_bal"))
-        .join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
-        .groupBy("c_nationkey")
-        .agg(
-            F.count(F.lit(1)).alias("numcust"),
-            F.sum(_dec("c_acctbal")).cast("double").alias("totacctbal"),
-        )
-        .orderBy("c_nationkey")
-    )
-
-
-Q22_SQL = """
-WITH stats AS (
-  SELECT sum(CAST(c_acctbal AS DECIMAL(25,4))) AS total_bal, count(*) AS n_pos
-  FROM customer WHERE c_acctbal > 0.0
-)
-SELECT c_nationkey, count(*) AS numcust,
-       CAST(sum(CAST(c_acctbal AS DECIMAL(25,4))) AS DOUBLE) AS totacctbal
-FROM customer, stats
-WHERE CAST(c_acctbal AS DECIMAL(25,4)) * n_pos > total_bal
-  AND c_custkey NOT IN
-      (SELECT o_custkey FROM orders WHERE o_orderdate >= TIMESTAMP '1999-01-01')
-GROUP BY c_nationkey
-ORDER BY c_nationkey
-"""
-
-
 # ---------------------------------------------------------------------------
 # as-of join — most recent prior view for each purchase (temporal join)
 # ---------------------------------------------------------------------------
@@ -768,7 +195,6 @@ def asof_join_last_view(spark, sf_dir):
     all, no per-row probe.  At 100 TB this beats any range-join
     rewrite because state is a single row per partition key.
     Oracle: DuckDB's native ASOF JOIN."""
-    _t, _events, _dec = _helpers()
     ev = _events(spark, sf_dir)
     views = ev.filter(F.col("event_type") == "view").select(
         "user_id", "ts", F.lit(0).alias("kind"), F.col("event_id").alias("view_id")
@@ -809,18 +235,6 @@ def asof_join_last_view(spark, sf_dir):
     ).orderBy("purchase_event_id")
 
 
-ASOF_JOIN_SQL = """
-SELECT p.event_id AS purchase_event_id, p.user_id,
-       epoch_us(p.ts) AS purchase_ts_us,
-       v.event_id AS view_event_id,
-       epoch_us(v.ts) AS view_ts_us
-FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-ASOF JOIN (SELECT * FROM events WHERE event_type = 'view') v
-  ON p.user_id = v.user_id AND v.ts <= p.ts
-ORDER BY purchase_event_id
-"""
-
-
 # ---------------------------------------------------------------------------
 # band join — view→purchase conversions within a time window
 # ---------------------------------------------------------------------------
@@ -833,7 +247,6 @@ def band_join_conversions(spark, sf_dir):
     the equi-key keeps this a partitioned sort-merge join; a pure range
     join (no equi key) would instead bucket time into 30-min grid
     cells and join on the cell id."""
-    _t, _events, _dec = _helpers()
     ev = _events(spark, sf_dir)
     views = ev.filter(F.col("event_type") == "view").select(
         F.col("user_id").alias("v_user"),
@@ -863,20 +276,6 @@ def band_join_conversions(spark, sf_dir):
     )
 
 
-BAND_JOIN_SQL = """
-SELECT v.user_id AS user_id, count(*) AS n_conversions,
-       min(epoch_us(p.ts) - epoch_us(v.ts)) AS min_gap_us,
-       max(epoch_us(p.ts) - epoch_us(v.ts)) AS max_gap_us
-FROM (SELECT * FROM events WHERE event_type = 'view') v
-JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-  ON v.user_id = p.user_id
- AND p.ts > v.ts
- AND epoch_us(p.ts) - epoch_us(v.ts) <= 1800000000
-GROUP BY v.user_id
-ORDER BY user_id
-"""
-
-
 # ---------------------------------------------------------------------------
 # cube — multi-dimensional aggregate with grouping ids
 # ---------------------------------------------------------------------------
@@ -886,8 +285,7 @@ def cube_pricing(spark, sf_dir):
     combinations in one pass (Spark Expand + single shuffle), with an
     explicit grouping-id column built from grouping() bits so both
     engines agree on the encoding."""
-    _t, _events, _dec = _helpers()
-    li = _t(spark, sf_dir, "lineitem")
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     return (
         li.cube("l_returnflag", "l_linestatus")
         .agg(
@@ -904,334 +302,3 @@ def cube_pricing(spark, sf_dir):
         )
         .orderBy("gid", "returnflag", "linestatus")
     )
-
-
-CUBE_SQL = """
-SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-       coalesce(l_linestatus, 'ALL') AS linestatus,
-       CAST(sum(CAST(l_quantity AS DECIMAL(25,4))) AS DOUBLE) AS sum_qty,
-       count(*) AS n_rows,
-       GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus) AS gid
-FROM lineitem
-GROUP BY CUBE (l_returnflag, l_linestatus)
-ORDER BY gid, returnflag, linestatus
-"""
-
-
-# ---------------------------------------------------------------------------
-# multi-distinct aggregation
-# ---------------------------------------------------------------------------
-
-def distinct_nation_stats(spark, sf_dir):
-    """Several COUNT(DISTINCT ...) over different columns in one
-    aggregation (Spark plans an Expand + two-stage distinct agg):
-    per nation, distinct ordering customers, distinct order days, and
-    total revenue."""
-    _t, _events, _dec = _helpers()
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    return (
-        orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("c_nationkey")
-        .agg(
-            F.countDistinct("o_custkey").alias("n_customers"),
-            F.countDistinct(F.to_date("o_orderdate")).alias("n_order_days"),
-            F.sum(_dec("o_totalprice")).cast("double").alias("total_revenue"),
-        )
-        .orderBy("c_nationkey")
-    )
-
-
-DISTINCT_STATS_SQL = """
-SELECT c_nationkey,
-       count(DISTINCT o_custkey) AS n_customers,
-       count(DISTINCT CAST(o_orderdate AS DATE)) AS n_order_days,
-       CAST(sum(CAST(o_totalprice AS DECIMAL(25,4))) AS DOUBLE) AS total_revenue
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY c_nationkey
-ORDER BY c_nationkey
-"""
-
-
-# ---------------------------------------------------------------------------
-# percentiles — exact continuous quantiles per group
-# ---------------------------------------------------------------------------
-
-def percentile_acctbal(spark, sf_dir):
-    """Exact interpolated percentiles (median / p90) of customer
-    balance per market segment — Spark ``percentile`` and DuckDB
-    ``quantile_cont`` share the same linear-interpolation definition.
-    Rounded to 6 decimals to absorb summation-order FP noise."""
-    _t, _events, _dec = _helpers()
-    cust = _t(spark, sf_dir, "customer")
-    return (
-        cust.groupBy("c_mktsegment")
-        .agg(
-            F.round(F.expr("percentile(c_acctbal, 0.5)"), 6).alias("median_bal"),
-            F.round(F.expr("percentile(c_acctbal, 0.9)"), 6).alias("p90_bal"),
-            F.count(F.lit(1)).alias("n_customers"),
-        )
-        .orderBy("c_mktsegment")
-    )
-
-
-PERCENTILE_SQL = """
-SELECT c_mktsegment,
-       round(quantile_cont(c_acctbal, 0.5), 6) AS median_bal,
-       round(quantile_cont(c_acctbal, 0.9), 6) AS p90_bal,
-       count(*) AS n_customers
-FROM customer
-GROUP BY c_mktsegment
-ORDER BY c_mktsegment
-"""
-
-
-# ---------------------------------------------------------------------------
-# grouping sets — the third multi-level-aggregation form (rollup/cube done)
-# ---------------------------------------------------------------------------
-
-def grouping_sets_pricing(spark, sf_dir):
-    """Explicit GROUPING SETS ((returnflag), (linestatus)): two
-    independent one-dimensional rollups in a single Expand + one
-    shuffle, with grouping bits distinguishing the sets."""
-    _t, _events, _dec = _helpers()
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.groupingSets(
-            [[F.col("l_returnflag")], [F.col("l_linestatus")]],
-            F.col("l_returnflag"),
-            F.col("l_linestatus"),
-        )
-        .agg(
-            F.sum(_dec("l_quantity")).cast("double").alias("sum_qty"),
-            F.count(F.lit(1)).alias("n_rows"),
-            (F.grouping("l_returnflag") * 2 + F.grouping("l_linestatus")).alias("gid"),
-        )
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
-            "sum_qty",
-            "n_rows",
-            "gid",
-        )
-        .orderBy("gid", "returnflag", "linestatus")
-    )
-
-
-GROUPING_SETS_SQL = """
-SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-       coalesce(l_linestatus, 'ALL') AS linestatus,
-       CAST(sum(CAST(l_quantity AS DECIMAL(25,4))) AS DOUBLE) AS sum_qty,
-       count(*) AS n_rows,
-       GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus) AS gid
-FROM lineitem
-GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-ORDER BY gid, returnflag, linestatus
-"""
-
-
-# ---------------------------------------------------------------------------
-# range-frame window — time-interval frames (moving_avg_7d is rows-based)
-# ---------------------------------------------------------------------------
-
-def range_window_1h(spark, sf_dir):
-    """RANGE frame over event time: for each event, the count and value
-    sum of the same user's events in the trailing hour (inclusive).
-    The frame is expressed on integer micros so both engines use the
-    identical ordering and bounds; Spark keeps it a single window
-    shuffle on user_id."""
-    _t, _events, _dec = _helpers()
-    ev = _events(spark, sf_dir)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.unix_micros("ts"))
-        .rangeBetween(-3_600_000_000, 0)
-    )
-    return (
-        ev.select(
-            "event_id",
-            "user_id",
-            F.unix_micros("ts").alias("ts_us"),
-            F.count(F.lit(1)).over(w).alias("n_last_hour"),
-            F.round(F.sum("value").over(w), 6).alias("value_last_hour"),
-        )
-        .orderBy("event_id")
-    )
-
-
-RANGE_WINDOW_SQL = """
-SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-       count(*) OVER w AS n_last_hour,
-       round(sum(value) OVER w, 6) AS value_last_hour
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-ORDER BY event_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# higher-order array functions — vector math without UDFs
-# ---------------------------------------------------------------------------
-
-def vector_norm_stats(spark, sf_dir):
-    """Vector math on the embedding column entirely in built-in
-    higher-order functions (aggregate/transform — JVM-side, no Python
-    UDF): dimensionality, L2 norm, max component.  The same lambda
-    pipeline DuckDB spells list_transform/list_aggregate."""
-    _t, _events, _dec = _helpers()
-    emb = _t(spark, sf_dir, "embeddings")
-    sq_sum = F.aggregate(
-        F.col("embedding"),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x.cast("double") * x.cast("double"),
-    )
-    return (
-        emb.select(
-            "vec_id",
-            F.size("embedding").alias("dim"),
-            F.round(F.sqrt(sq_sum), 6).alias("l2_norm"),
-            F.round(F.array_max("embedding").cast("double"), 6).alias("max_component"),
-            "label",
-        )
-        .orderBy("vec_id")
-    )
-
-
-VECTOR_NORM_SQL = """
-SELECT vec_id,
-       len(embedding) AS dim,
-       round(sqrt(list_aggregate(list_transform(embedding,
-             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')), 6) AS l2_norm,
-       round(CAST(list_max(embedding) AS DOUBLE), 6) AS max_component,
-       label
-FROM embeddings
-ORDER BY vec_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# salted join — skew mitigation with unchanged semantics
-# ---------------------------------------------------------------------------
-
-def salted_join_brand_revenue(spark, sf_dir):
-    """q14's brand-revenue join executed through ``salted_join``
-    (operators/skew.py): the fact side's part key is spread over 8
-    salts, the part dim replicated ×8.  Same oracle as a plain join —
-    salting must never change results, only the shuffle layout."""
-    from parquet_converters_spark.operators.skew import salted_join
-
-    _t, _events, _dec = _helpers()
-    li = _t(spark, sf_dir, "lineitem").withColumnRenamed("l_partkey", "pk")
-    part = _t(spark, sf_dir, "part").withColumnRenamed("p_partkey", "pk")
-    return (
-        salted_join(li, part.select("pk", "p_brand"), "pk", n_salts=8)
-        .groupBy("p_brand")
-        .agg(
-            F.sum(_disc_price(_dec)).cast("double").alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-        .orderBy("p_brand")
-    )
-
-
-SALTED_JOIN_SQL = f"""
-SELECT p_brand,
-       CAST(sum({_DISC_PRICE_SQL}) AS DOUBLE) AS revenue,
-       count(*) AS n_items
-FROM lineitem JOIN part ON l_partkey = p_partkey
-GROUP BY p_brand
-ORDER BY p_brand
-"""
-
-
-TPCH_QUERIES: dict[str, tuple] = {
-    "q2_min_cost_supplier": (q2_min_cost_supplier, Q2_SQL),
-    "q7_volume_shipping": (q7_volume_shipping, Q7_SQL),
-    "q8_market_share": (q8_market_share, Q8_SQL),
-    "q9_product_profit": (q9_product_profit, Q9_SQL),
-    "q10_returned_items": (q10_returned_items, Q10_SQL),
-    "q11_important_parts": (q11_important_parts, Q11_SQL),
-    "q12_priority_shipping": (q12_priority_shipping, Q12_SQL),
-    "q13_order_distribution": (q13_order_distribution, Q13_SQL),
-    "q15_top_supplier": (q15_top_supplier, Q15_SQL),
-    "q16_supplier_part_count": (q16_supplier_part_count, Q16_SQL),
-    "q17_small_qty_revenue": (q17_small_qty_revenue, Q17_SQL),
-    "q19_disjunctive_pred": (q19_disjunctive_pred, Q19_SQL),
-    "q20_qualified_suppliers": (q20_qualified_suppliers, Q20_SQL),
-    "q21_dominant_supplier": (q21_dominant_supplier, Q21_SQL),
-    "q22_idle_customers": (q22_idle_customers, Q22_SQL),
-    "asof_join_last_view": (asof_join_last_view, ASOF_JOIN_SQL),
-    "band_join_conversions": (band_join_conversions, BAND_JOIN_SQL),
-    "cube_pricing": (cube_pricing, CUBE_SQL),
-    "distinct_nation_stats": (distinct_nation_stats, DISTINCT_STATS_SQL),
-    "percentile_acctbal": (percentile_acctbal, PERCENTILE_SQL),
-    "grouping_sets_pricing": (grouping_sets_pricing, GROUPING_SETS_SQL),
-    "range_window_1h": (range_window_1h, RANGE_WINDOW_SQL),
-    "vector_norm_stats": (vector_norm_stats, VECTOR_NORM_SQL),
-    "salted_join_brand_revenue": (salted_join_brand_revenue, SALTED_JOIN_SQL),
-}
-
-
-def asof_join_next_purchase(spark, sf_dir):
-    """Forward as-of join: for every view event, the same user's FIRST
-    purchase strictly after it.  Same union-merge shape as the backward
-    as-of (one shuffle on user_id, zero joins), scanning descending so
-    the running ``last(..., ignorenulls)`` frame carries the nearest
-    later purchase; views sort before purchases at equal ts in the
-    descending order, which implements the *strict* bound.
-    Oracle: DuckDB ASOF JOIN with ``v.ts < p.ts``."""
-    _t, _events, _dec = _helpers()
-    ev = _events(spark, sf_dir)
-    views = ev.filter(F.col("event_type") == "view").select(
-        "user_id", "ts", F.lit(1).alias("kind"),
-        F.col("event_id").alias("view_id"),
-        F.lit(None).cast("long").alias("purchase_id"),
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", F.lit(0).alias("kind"),
-        F.lit(None).cast("long").alias("view_id"),
-        F.col("event_id").alias("purchase_id"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.col("ts").desc(), F.col("kind").desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    tagged = views.unionByName(purchases)
-    matched = (
-        tagged.withColumn(
-            "next_purchase_id",
-            F.last(
-                F.when(F.col("kind") == 0, F.col("purchase_id")), ignorenulls=True
-            ).over(w),
-        )
-        .withColumn(
-            "next_purchase_ts",
-            F.last(
-                F.when(F.col("kind") == 0, F.col("ts")), ignorenulls=True
-            ).over(w),
-        )
-        .filter((F.col("kind") == 1) & F.col("next_purchase_id").isNotNull())
-    )
-    return matched.select(
-        F.col("view_id").alias("view_event_id"),
-        "user_id",
-        F.unix_micros("ts").alias("view_ts_us"),
-        F.col("next_purchase_id").alias("purchase_event_id"),
-        F.unix_micros("next_purchase_ts").alias("purchase_ts_us"),
-    ).orderBy("view_event_id")
-
-
-ASOF_NEXT_SQL = """
-SELECT v.event_id AS view_event_id, v.user_id,
-       epoch_us(v.ts) AS view_ts_us,
-       p.event_id AS purchase_event_id,
-       epoch_us(p.ts) AS purchase_ts_us
-FROM (SELECT * FROM events WHERE event_type = 'view') v
-ASOF JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-  ON v.user_id = p.user_id AND v.ts < p.ts
-ORDER BY view_event_id
-"""
-
-TPCH_QUERIES["asof_join_next_purchase"] = (asof_join_next_purchase, ASOF_NEXT_SQL)

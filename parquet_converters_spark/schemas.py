@@ -163,12 +163,3 @@ def edge_schema(version: int = V3) -> StructType:
 
 def edge_columns(version: int = V3) -> list[str]:
     return [name for name, _, v in _EDGE_COLUMNS if v <= version]
-
-
-def with_enumeration_values(field: StructField, values: list[str]) -> StructField:
-    """Attach the ``enumeration_values`` field metadata the reference turns
-    into ``@library`` string enumeration datasets
-    (``src/circuit/sonata_writer.cpp:102-111``)."""
-    md = dict(field.metadata or {})
-    md["enumeration_values"] = values
-    return StructField(field.name, field.dataType, field.nullable, md)

@@ -183,20 +183,3 @@ def free_local_checkpoints(df) -> int:
                 i, exc,
             )
     return n
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, "object"]:
-    """Load the driver's synthetic tables from ``sf_dir`` and register them
-    as temp views; returns {name: DataFrame}."""
-    names = [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    out = {}
-    for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out

@@ -148,19 +148,6 @@ def _read_on_driver(
     return spark.createDataFrame(pa.table({"row_index": row_index, **arrays}))
 
 
-def read_sonata_library(
-    spark: SparkSession, h5_path: str, population: str, name: str
-) -> DataFrame:
-    """One ``0/@library/<name>`` enumeration as (index, value)."""
-    r = _open(h5_path)
-    values = r.read_dataset(f"/edges/{population}/0/@library/{name}")
-    rows = [
-        (i, v.decode() if isinstance(v, bytes) else str(v))
-        for i, v in enumerate(values)
-    ]
-    return spark.createDataFrame(rows, "index long, value string")
-
-
 _NP_TO_SPARK = {
     "i1": "tinyint", "i2": "smallint", "i4": "int", "i8": "bigint",
     "f4": "float", "f8": "double",

@@ -1,5 +1,2 @@
-from parquet_converters_spark.streaming.events import (  # noqa: F401
-    windowed_event_counts,
-    read_events_stream,
-    sessionize,
-)
+"""Structured Streaming pipelines over the events table.  Import each
+name from its defining module."""

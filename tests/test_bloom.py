@@ -66,12 +66,12 @@ def test_large_bitmap_uses_broadcast_not_literal(spark):
 
 
 def test_registry_query_matches_plain_join(spark, sf_dir):
-    from parquet_converters_spark.queries import _t, bloom_pruned_revenue
+    from parquet_converters_spark.queries import bloom_pruned_revenue
 
     got = {r.o_year: (r.n_items, r.revenue) for r in bloom_pruned_revenue(spark, sf_dir).collect()}
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
         F.col("o_orderpriority") == "1-URGENT"
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     want_n = li.join(orders, li.l_orderkey == orders.o_orderkey).count()
     assert sum(v[0] for v in got.values()) == want_n

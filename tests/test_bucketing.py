@@ -58,7 +58,9 @@ def test_partitioned_dataset_prunes(spark, sf_dir, tmp_path):
     """write_partitioned_dataset: hive layout readback recovers the
     partition column, and a filter on it becomes a PartitionFilter
     (directory pruning), not a data-scan predicate."""
-    from parquet_converters_spark.sinks import write_partitioned_dataset
+    from parquet_converters_spark.sinks.parquet_sink import (
+        write_partitioned_dataset,
+    )
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     out = str(tmp_path / "events_by_type")

@@ -1,12 +1,10 @@
 """Invariants + independent pure-Python recomputation for the late-r07
 curation/layout/drift operators (mmr_diverse_topk, ks_drift_test,
 zorder_layout_plan, vocab_growth_by_source), plus a local DuckDB
-parity leg using the same comparator as scripts/check_oracle_parity.
+parity leg using the comparator of tests/oracle_compare.py.
 """
 
-import importlib.util
 import math
-import os
 import re
 from collections import Counter
 
@@ -28,18 +26,8 @@ from parquet_converters_spark.queries import (
     vocab_growth_by_source,
     zorder_layout_plan,
 )
+from tests.oracle_compare import rows_key, type_divergence
 
-
-def _parity_mod():
-    spec = importlib.util.spec_from_file_location(
-        "check_oracle_parity",
-        os.path.join(
-            os.path.dirname(__file__), "..", "scripts", "check_oracle_parity.py"
-        ),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
 
 
 def _con(sf_dir):
@@ -295,17 +283,16 @@ def test_vocab_growth_matches_pure_python(spark, sf_dir):
     ids=["mmr", "ks", "zorder", "vocab"],
 )
 def test_curation_duckdb_parity(spark, sf_dir, fn, sql):
-    mod = _parity_mod()
     sdf = fn(spark, sf_dir)
     srows = sdf.collect()
     con = _con(sf_dir)
     rel = con.sql(sql)
     orows, ocols = rel.fetchall(), list(rel.columns)
     assert sorted(sdf.columns) == sorted(ocols)
-    assert mod.rows_key(srows, sdf.columns) == mod.rows_key(orows, ocols)
+    assert rows_key(srows, sdf.columns) == rows_key(orows, ocols)
     # the r9 type leg: none of the four oracles may emit HUGEINT (the
     # r8 red class — driver value hash is declared-type-sensitive)
-    fails, _warns = mod.type_divergence(
+    fails, _warns = type_divergence(
         sdf.dtypes, ocols, list(rel.types)
     )
     assert fails == []
@@ -318,14 +305,13 @@ def test_parity_type_divergence_leg():
     text_quality precedent), matched types pass clean."""
     import duckdb
 
-    mod = _parity_mod()
     con = duckdb.connect()
     rel = con.sql(
         "SELECT sum(x) AS s, CAST(sum(x) AS BIGINT) AS sb, "
         "CAST(1.5 AS DECIMAL(6,2)) AS d, CAST(1.5 AS DOUBLE) AS f "
         "FROM (VALUES (1), (2)) t(x)"
     )
-    fails, warns = mod.type_divergence(
+    fails, warns = type_divergence(
         [("s", "bigint"), ("sb", "bigint"), ("d", "double"), ("f", "double")],
         list(rel.columns),
         list(rel.types),

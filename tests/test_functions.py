@@ -19,7 +19,7 @@ def docs(spark):
 
 
 def test_exact_dedup(docs):
-    from parquet_converters_spark.functions import exact_dedup
+    from parquet_converters_spark.functions.dedup import exact_dedup
 
     out = {r["keep_id"]: r["dup_count"] for r in exact_dedup(docs).collect()}
     assert out[0] == 2          # docs 0,1 collapse
@@ -28,7 +28,7 @@ def test_exact_dedup(docs):
 
 
 def test_minhash_identical_and_near(docs):
-    from parquet_converters_spark.functions import minhash_signatures
+    from parquet_converters_spark.functions.dedup import minhash_signatures
 
     sigs = {r["doc_id"]: r["signature"] for r in minhash_signatures(docs).collect()}
     assert sigs[0] == sigs[1]                      # identical text -> identical sig
@@ -42,7 +42,7 @@ def test_minhash_identical_and_near(docs):
 
 
 def test_minhash_lsh_pairs(docs):
-    from parquet_converters_spark.functions import minhash_lsh_pairs
+    from parquet_converters_spark.functions.dedup import minhash_lsh_pairs
 
     pairs = {
         (r["id_a"], r["id_b"])
@@ -59,7 +59,7 @@ def test_minhash_lsh_pairs(docs):
 
 
 def test_simhash_distance(docs):
-    from parquet_converters_spark.functions import simhash
+    from parquet_converters_spark.functions.dedup import simhash
 
     out = {r["doc_id"]: r["simhash"] for r in simhash(docs).collect()}
     assert out[0] == out[1]
@@ -70,7 +70,7 @@ def test_simhash_distance(docs):
 
 
 def test_ngram_jaccard(docs):
-    from parquet_converters_spark.functions import ngram_jaccard_pairs
+    from parquet_converters_spark.functions.dedup import ngram_jaccard_pairs
 
     pairs = {
         (r["id_a"], r["id_b"]): r["jaccard"]
@@ -101,14 +101,18 @@ def test_ngram_jaccard_requires_blocking(docs):
     product — the public API must refuse it unless explicitly opted in."""
     import pytest
 
-    from parquet_converters_spark.functions import ngram_jaccard_pairs
+    from parquet_converters_spark.functions.dedup import ngram_jaccard_pairs
 
     with pytest.raises(ValueError, match="all-pairs"):
         ngram_jaccard_pairs(docs, threshold=0.3)
 
 
 def test_language_and_quality(docs, spark):
-    from parquet_converters_spark.functions import language_id, quality_score, token_count
+    from parquet_converters_spark.functions.text import (
+        language_id,
+        quality_score,
+        token_count,
+    )
 
     out = docs.select(
         "doc_id",
@@ -126,7 +130,7 @@ def test_language_and_quality(docs, spark):
 
 
 def test_cosine_topk_exact(spark):
-    from parquet_converters_spark.functions import cosine_topk
+    from parquet_converters_spark.functions.similarity import cosine_topk
 
     rows = [
         (0, [1.0, 0.0, 0.0]),
@@ -143,7 +147,7 @@ def test_cosine_topk_exact(spark):
 def test_lsh_ann_recall(spark, sf_dir):
     """Bucketed ANN returns a subset of the exact top-k's candidates and
     identical ranks within shared buckets."""
-    from parquet_converters_spark.functions import lsh_bucket_ann
+    from parquet_converters_spark.functions.similarity import lsh_bucket_ann
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     out = lsh_bucket_ann(emb, emb.filter("vec_id < 3"), k=5, dim=64).collect()
@@ -643,7 +647,7 @@ def test_ivf_centroid_modes_identical(spark, sf_dir):
 def test_lsh_plane_modes_identical(spark, sf_dir):
     """Literal and broadcast hyperplane paths must bucket and rank
     identically."""
-    from parquet_converters_spark.functions import lsh_bucket_ann
+    from parquet_converters_spark.functions.similarity import lsh_bucket_ann
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter("vec_id < 3")
@@ -791,14 +795,14 @@ def test_sessionize_stateful_timers(spark, sf_dir, tmp_path):
 def test_stream_static_enrich_matches_batch(spark, sf_dir, tmp_path):
     """Stream-static join is stateless: the enrichment aggregate over a
     file stream equals the batch result."""
-    from parquet_converters_spark.queries import _events, _t
+    from parquet_converters_spark.queries import _events
     from parquet_converters_spark.streaming.events import (
         enrich_with_dim,
         read_events_stream,
     )
 
     ev = _events(spark, sf_dir)
-    nation = _t(spark, sf_dir, "nation")
+    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
     src = str(tmp_path / "enrich_stream")
     ev.repartition(4).write.parquet(src)
 

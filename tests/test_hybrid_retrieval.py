@@ -1,9 +1,7 @@
 """Hybrid RRF retrieval + hard-negative mining invariants, plus a
-local DuckDB parity leg (same comparator as scripts/check_oracle_parity).
+local DuckDB parity leg (the comparator of tests/oracle_compare.py).
 """
 
-import importlib.util
-import os
 
 import duckdb
 
@@ -15,18 +13,8 @@ from parquet_converters_spark.queries import (
     hard_negative_mining,
     hybrid_rrf_search,
 )
+from tests.oracle_compare import rows_key
 
-
-def _parity_mod():
-    spec = importlib.util.spec_from_file_location(
-        "check_oracle_parity",
-        os.path.join(
-            os.path.dirname(__file__), "..", "scripts", "check_oracle_parity.py"
-        ),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
 
 
 def _duck(sql, sf_dir):
@@ -80,7 +68,6 @@ def test_hard_negative_invariants(spark, sf_dir):
 
 
 def test_hybrid_and_negatives_duckdb_parity(spark, sf_dir):
-    mod = _parity_mod()
     for fn, sql in (
         (hybrid_rrf_search, HYBRID_RRF_SQL),
         (hard_negative_mining, HARD_NEGATIVE_SQL),
@@ -90,7 +77,7 @@ def test_hybrid_and_negatives_duckdb_parity(spark, sf_dir):
         scols = sdf.columns
         orows, ocols = _duck(sql, sf_dir)
         assert sorted(scols) == sorted(ocols)
-        assert mod.rows_key(srows, scols) == mod.rows_key(orows, ocols)
+        assert rows_key(srows, scols) == rows_key(orows, ocols)
 
 
 def test_sql_text_forms_bitwise(spark, sf_dir):

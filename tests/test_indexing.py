@@ -22,7 +22,9 @@ def edges(spark):
 
 
 def test_source_index(spark, edges):
-    from parquet_converters_spark.operators import build_adjacency_index
+    from parquet_converters_spark.operators.indexing import (
+        build_adjacency_index,
+    )
 
     node_ranges, range_edges = build_adjacency_index(
         edges, "source_node_id", node_count=SOURCE_OFFSET + NNODES
@@ -41,7 +43,9 @@ def test_source_index(spark, edges):
 
 
 def test_target_index(spark, edges):
-    from parquet_converters_spark.operators import build_adjacency_index
+    from parquet_converters_spark.operators.indexing import (
+        build_adjacency_index,
+    )
 
     node_ranges, range_edges = build_adjacency_index(
         edges, "target_node_id", node_count=NNODES
@@ -62,7 +66,9 @@ def test_target_index(spark, edges):
 def test_node_count_inferred(spark, edges):
     """A2: node_count = max(node_id)+1 when metadata absent
     (index.cpp:208-213)."""
-    from parquet_converters_spark.operators import build_adjacency_index
+    from parquet_converters_spark.operators.indexing import (
+        build_adjacency_index,
+    )
 
     node_ranges, _ = build_adjacency_index(edges, "target_node_id")
     assert node_ranges.count() == NNODES
@@ -71,7 +77,9 @@ def test_node_count_inferred(spark, edges):
 def test_run_merging(spark):
     """G4: runs split across partition boundaries merge into maximal
     ranges."""
-    from parquet_converters_spark.operators import build_adjacency_index
+    from parquet_converters_spark.operators.indexing import (
+        build_adjacency_index,
+    )
 
     rows = [(0, 7, i) for i in range(50)]  # one node, one contiguous run
     df = spark.createDataFrame(
@@ -91,7 +99,9 @@ def test_run_merging(spark):
 def test_fragmented_and_gapped(spark):
     """Interleaved keys -> multiple ranges per node, correct global
     node-major numbering."""
-    from parquet_converters_spark.operators import build_adjacency_index
+    from parquet_converters_spark.operators.indexing import (
+        build_adjacency_index,
+    )
 
     # rows: key pattern 1,2,1,1,2 at positions 0..4
     rows = [(1, 0), (2, 1), (1, 2), (1, 3), (2, 4)]
@@ -107,11 +117,15 @@ def test_fragmented_and_gapped(spark):
 @pytest.mark.parametrize("direction", ["source_node_id", "target_node_id"])
 def test_scan_method_matches_window(spark, edges, direction):
     """The shuffle-free scan-order RLE must produce exactly the window
-    method's index on the reference's analytic case."""
-    from parquet_converters_spark.operators import build_adjacency_index
+    oracle's index on the reference's analytic case."""
+    from tests.index_oracle import window_adjacency_index
 
-    nr_w, re_w = build_adjacency_index(edges, direction, method="window")
-    nr_s, re_s = build_adjacency_index(edges, direction, method="scan")
+    from parquet_converters_spark.operators.indexing import (
+        build_adjacency_index,
+    )
+
+    nr_w, re_w = window_adjacency_index(edges, direction)
+    nr_s, re_s = build_adjacency_index(edges, direction)
     assert sorted(map(tuple, nr_w.collect())) == sorted(map(tuple, nr_s.collect()))
     assert sorted(map(tuple, re_w.collect())) == sorted(map(tuple, re_s.collect()))
 

@@ -4,33 +4,11 @@ scan-level predicate pushdown, join-free as-of, single-shuffle
 windows) are checked on the actual executed/optimized plans, not
 assumed from the DataFrame code."""
 
-import contextlib
-
 from pyspark.sql import functions as F
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-@contextlib.contextmanager
-def _no_spread(sf_dir):
-    """Assert the PRODUCTION plan shape.  On a real multi-row-group
-    table the r17 scan-spread repartition (queries._t) is a no-op
-    (row_groups >= cores), so narrow-pass / single-shuffle / read-schema
-    invariants are what the plan looks like at scale; the bench-scale
-    spread exchange would otherwise add a REPARTITION_BY_NUM node and
-    pull the partition key into ReadSchema."""
-    from parquet_converters_spark import queries as Q
-
-    saved = dict(Q._SPREAD_OVERRIDE)
-    for name in Q._SPREAD_KEYS:
-        Q._SPREAD_OVERRIDE[(sf_dir, name)] = False
-    try:
-        yield
-    finally:
-        Q._SPREAD_OVERRIDE.clear()
-        Q._SPREAD_OVERRIDE.update(saved)
 
 
 def test_q6_filters_reach_scan(spark, sf_dir):
@@ -183,26 +161,6 @@ def test_gopher_report_is_single_pass(spark, sf_dir):
     assert plan.count("FileScan") == 1, plan[:800]
 
 
-def test_scan_spread_parallelizes_single_row_group(spark, sf_dir):
-    """r17 scan spread: a single-row-group fact table is repartitioned
-    to the session parallelism (the scan itself cannot parallelize), and
-    predicate pushdown still reaches the parquet scan through the spread
-    exchange."""
-    from parquet_converters_spark import queries as Q
-
-    Q._SPREAD_CACHE.pop((sf_dir, "lineitem"), None)
-    df = Q._t(spark, sf_dir, "lineitem")
-    assert (
-        df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
-    )
-    plan = _plan(df.filter(F.col("l_quantity") < 5).select("l_quantity"))
-    scan = plan[plan.find("FileScan"):]
-    pushed = scan[
-        scan.find("PushedFilters"): scan.find("]", scan.find("PushedFilters"))
-    ]
-    assert "l_quantity" in pushed, pushed
-
-
 def test_expectations_row_rules_single_scan(spark, sf_dir):
     """The five row-level expectations share ONE lineitem scan/agg
     reading exactly the five ruled columns; the referential check adds
@@ -212,8 +170,7 @@ def test_expectations_row_rules_single_scan(spark, sf_dir):
 
     from parquet_converters_spark.queries import expectations_report
 
-    with _no_spread(sf_dir):
-        plan = _plan(expectations_report(spark, sf_dir))
+    plan = _plan(expectations_report(spark, sf_dir))
     scans = re.findall(r"FileScan parquet \[([^\]]*)\]", plan)
     assert len(scans) <= 4, plan[:1200]
     wide = [s for s in scans if s.count(",") >= 1]
@@ -272,8 +229,7 @@ def test_quantize_audit_single_shuffle(spark, sf_dir):
     else."""
     from parquet_converters_spark.queries import embedding_quantize_error
 
-    with _no_spread(sf_dir):
-        plan = _plan(embedding_quantize_error(spark, sf_dir))
+    plan = _plan(embedding_quantize_error(spark, sf_dir))
     # final orderBy adds a range-partition exchange over 10 rows; the
     # data path itself must shuffle once
     assert plan.count("Exchange hashpartitioning") == 1, plan[:1200]
@@ -305,8 +261,7 @@ def test_pii_redact_is_single_narrow_pass(spark, sf_dir):
     aggregation, no exchange except the final orderBy."""
     from parquet_converters_spark.queries import text_pii_redact
 
-    with _no_spread(sf_dir):
-        plan = _plan(text_pii_redact(spark, sf_dir))
+    plan = _plan(text_pii_redact(spark, sf_dir))
     assert "Join" not in plan, plan[:800]
     assert "Exchange hashpartitioning" not in plan, plan[:800]
 
@@ -406,57 +361,3 @@ def test_fingerprint_censuses_are_narrow_plus_aggregate(spark, sf_dir):
         for op in ("Join", "CartesianProduct"):
             assert op not in plan, f"{q.__name__}: unexpected {op}"
         assert plan.count("Exchange") <= 3, f"{q.__name__}: {plan[:400]}"
-
-
-def test_multi_branch_consumers_spread_once(spark, sf_dir):
-    """r18 spread-policy hardening (VERDICT r17 item 7): the queries
-    that fan a spread fact table into several plan branches must pay
-    the spread repartition at most ONCE per table — the r17 blanket
-    spread re-paid it per branch (ann_recall_pq planned 4 vec_id
-    spread exchanges, market_basket_lift 5 on l_orderkey).  These
-    queries now share one materialized scan (queries._emb_shared /
-    an order-grain basket checkpoint), so a regression reintroducing
-    the per-branch exchange is a plan diff, not a cluster bill."""
-    import re
-
-    from parquet_converters_spark import queries as Q
-
-    spread_pat = re.compile(
-        r"hashpartitioning\((\w+)#\d+[^)]*\), REPARTITION_BY_NUM"
-    )
-    fixed = [
-        "market_basket_lift",
-        "sim_ivfpq_ann",
-        "ann_recall_pq",
-        "ann_recall_at5",
-        "mmr_diverse_topk",
-    ]
-    # force the bench-layout decision so the assertion is meaningful
-    # even if this test ever runs against a multi-row-group fixture
-    saved = dict(Q._SPREAD_OVERRIDE)
-    for name in Q._SPREAD_KEYS:
-        Q._SPREAD_OVERRIDE[(sf_dir, name)] = True
-    try:
-        for qname in fixed:
-            plan = _plan(Q.QUERIES[qname][0](spark, sf_dir))
-            counts = {}
-            for key in spread_pat.findall(plan):
-                counts[key] = counts.get(key, 0) + 1
-            assert all(c <= 1 for c in counts.values()), (qname, counts)
-    finally:
-        Q._SPREAD_OVERRIDE.clear()
-        Q._SPREAD_OVERRIDE.update(saved)
-
-
-def test_registry_order_pinned():
-    """The registry's order is one literal list in queries.py: 213
-    queries in exactly the order they had when the per-round reorder
-    blocks it replaced were deleted."""
-    import hashlib
-
-    from parquet_converters_spark.queries import QUERIES
-
-    assert len(QUERIES) == 213
-    assert hashlib.sha256("\n".join(QUERIES).encode()).hexdigest() == (
-        "2af40dfb4312bd238afd90790269dec0e99fa9a638e7dead6b168a3281cc01d9"
-    )

@@ -4,8 +4,6 @@ lsh_pair_eval), plus DuckDB parity legs.
 """
 
 import hashlib
-import importlib.util
-import os
 import re
 from collections import Counter
 
@@ -25,18 +23,8 @@ from parquet_converters_spark.queries import (
     hll_distinct_registers,
     lsh_pair_eval,
 )
+from tests.oracle_compare import rows_key
 
-
-def _parity_mod():
-    spec = importlib.util.spec_from_file_location(
-        "check_oracle_parity",
-        os.path.join(
-            os.path.dirname(__file__), "..", "scripts", "check_oracle_parity.py"
-        ),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
 
 
 def _texts(sf_dir):
@@ -130,7 +118,6 @@ def test_lsh_pair_eval_invariants(spark, sf_dir):
     ids=["cms", "hll", "lsh_eval"],
 )
 def test_sketch_duckdb_parity(spark, sf_dir, fn, sql):
-    mod = _parity_mod()
     sdf = fn(spark, sf_dir)
     srows = sdf.collect()
     con = duckdb.connect()
@@ -140,4 +127,4 @@ def test_sketch_duckdb_parity(spark, sf_dir, fn, sql):
     rel = con.sql(sql)
     orows, ocols = rel.fetchall(), list(rel.columns)
     assert sorted(sdf.columns) == sorted(ocols)
-    assert mod.rows_key(srows, sdf.columns) == mod.rows_key(orows, ocols)
+    assert rows_key(srows, sdf.columns) == rows_key(orows, ocols)

@@ -500,11 +500,12 @@ _GZIP_EXPORT_JOBS_BEFORE = 20
 def test_multi_file_bundle_matches_oracles(spark, tmp_path):
     """With small files the table and both index directions each span
     several files, every file one contiguous sorted key run; the indices
-    equal the window-method oracle row for row, and the one-job .h5 fill
+    equal the window oracle row for row, and the one-job .h5 fill
     is byte-identical to the single writer, contiguous and gzip."""
     import glob as _glob
 
-    from parquet_converters_spark.operators import build_adjacency_index
+    from tests.index_oracle import window_adjacency_index
+
     from parquet_converters_spark.sinks.sonata import (
         SonataBundleWriter,
         collect_kv_metadata,
@@ -567,9 +568,7 @@ def test_multi_file_bundle_matches_oracles(spark, tmp_path):
         ("source_to_target", "source_node_id", n_src),
         ("target_to_source", "target_node_id", n_tgt),
     ]:
-        nr_w, re_w = build_adjacency_index(
-            df, key, node_count=count, method="window"
-        )
+        nr_w, re_w = window_adjacency_index(df, key, node_count=count)
         d = os.path.join(pop, "indices", direction)
         nr = pq.read_table(os.path.join(d, "node_id_to_ranges.parquet"))
         re_ = pq.read_table(os.path.join(d, "range_to_edge_id.parquet"))

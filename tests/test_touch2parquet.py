@@ -99,8 +99,10 @@ def test_physical_layout(v1_out):
 def test_v2_branch_type_unpack(spark, tmp_path):
     """P3: hi nibble -> efferent, lo nibble -> afferent, +1 MorphIO offset
     (parquet_writer.h:63-69)."""
-    from parquet_converters_spark.operators import to_canonical_edges
-    from parquet_converters_spark.sources import read_touches
+    from parquet_converters_spark.operators.touch_transform import (
+        to_canonical_edges,
+    )
+    from parquet_converters_spark.sources.touch_binary import read_touches
     from tests.touch_fixtures import write_seeded_corpus
 
     (path,) = write_seeded_corpus(str(tmp_path), 62, 2, 1, 1104)
@@ -132,8 +134,10 @@ def test_v3_full_columns(spark, tmp_path):
 
 def test_limit(spark, tmp_path):
     """L1: -n record cap (touch2parquet.cpp:47)."""
-    from parquet_converters_spark.operators import to_canonical_edges
-    from parquet_converters_spark.sources import read_touches
+    from parquet_converters_spark.operators.touch_transform import (
+        to_canonical_edges,
+    )
+    from parquet_converters_spark.sources.touch_binary import read_touches
     from tests.touch_fixtures import write_seeded_corpus
 
     (path,) = write_seeded_corpus(str(tmp_path), 64, 2, 1, 1104)
@@ -146,7 +150,9 @@ def test_validation_raises(spark):
     (parquet_writer.cpp:207-219)."""
     from pyspark.errors import SparkRuntimeException
 
-    from parquet_converters_spark.operators import validate_sections
+    from parquet_converters_spark.operators.touch_transform import (
+        validate_sections,
+    )
 
     df = spark.createDataFrame(
         [(1, 0x8000, 1, 1)],
@@ -167,7 +173,9 @@ def test_bad_section_counter_matches_validation(spark):
     from pyspark.errors import SparkRuntimeException
 
     from parquet_converters_spark.observability import observe_conversion
-    from parquet_converters_spark.operators import validate_sections
+    from parquet_converters_spark.operators.touch_transform import (
+        validate_sections,
+    )
 
     big = 0x8000
     df = spark.createDataFrame(

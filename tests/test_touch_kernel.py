@@ -30,11 +30,11 @@ def _written(out):
 
 
 def _reference(spark, path, version, strict=True):
-    from parquet_converters_spark.operators import (
+    from parquet_converters_spark.operators.touch_transform import (
         to_canonical_edges,
         validate_sections,
     )
-    from parquet_converters_spark.sources import read_touches
+    from parquet_converters_spark.sources.touch_binary import read_touches
 
     raw = read_touches(spark, path)
     return to_canonical_edges(validate_sections(raw, strict), version)

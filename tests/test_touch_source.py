@@ -19,7 +19,7 @@ FIXTURES = [
 
 @pytest.mark.parametrize("name,version,count", FIXTURES)
 def test_fixture_roundtrip(spark, name, version, count):
-    from parquet_converters_spark.sources import read_touches
+    from parquet_converters_spark.sources.touch_binary import read_touches
 
     path = os.path.join(REFERENCE_TESTS, name, "touchesData.0")
     df = read_touches(spark, path)
@@ -58,7 +58,7 @@ def v2_generated(tmp_path_factory):
 def test_partitioned_scan_matches_single_partition(spark, v2_generated):
     """Static range-split (S6): many small partitions must yield the same
     rows as one, partition *i* holding range *i* (global row order)."""
-    from parquet_converters_spark.sources import read_touches
+    from parquet_converters_spark.sources.touch_binary import read_touches
 
     whole = read_touches(spark, v2_generated).collect()
     split = read_touches(spark, v2_generated, records_per_partition=100)
@@ -73,7 +73,7 @@ def test_partitioned_scan_matches_single_partition(spark, v2_generated):
 def test_synapse_id_packing(spark, tmp_path):
     """synapse_id = (gid << 24) + (file_pos - shift[gid])
     (touch_reader.cpp:275-287)."""
-    from parquet_converters_spark.sources import read_touches
+    from parquet_converters_spark.sources.touch_binary import read_touches
 
     runs = seeded_runs(11, 300)
     path = write_touch_pair(str(tmp_path), 1, runs, seeded_payload(11, 1, runs))
@@ -89,7 +89,7 @@ def test_synapse_id_packing(spark, tmp_path):
 def test_endian_swapped_input(spark, tmp_path):
     """S3: a big-endian file (header, NeuronInfo and records) decodes to
     the same rows as its little-endian twin."""
-    from parquet_converters_spark.sources import read_touches
+    from parquet_converters_spark.sources.touch_binary import read_touches
 
     runs = seeded_runs(5, 200)
     le, be = tmp_path / "le", tmp_path / "be"
@@ -111,7 +111,7 @@ def test_observe_conversion_counters(spark, tmp_path, v2_generated):
     """M1 progress/verification counters ride the conversion job itself
     (observe() metrics — no second pass), matching an explicit recount."""
     from parquet_converters_spark.observability import observe_conversion
-    from parquet_converters_spark.sources import read_touches
+    from parquet_converters_spark.sources.touch_binary import read_touches
 
     df = read_touches(spark, v2_generated)
     obs, observed = observe_conversion(df)

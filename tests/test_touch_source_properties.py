@@ -62,7 +62,7 @@ def _touch_file(draw):
 @settings(max_examples=8, deadline=None)
 @given(_touch_file())
 def test_spark_scan_matches_reference_decoder(spark, tmp_path_factory, tf):
-    from parquet_converters_spark.sources import read_touches
+    from parquet_converters_spark.sources.touch_binary import read_touches
 
     version, runs, payload = tf
     tmpdir = str(tmp_path_factory.mktemp("fuzz_touch"))
