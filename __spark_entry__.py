@@ -1,12 +1,15 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Query-registry adapter.
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash -> CORRECTNESS_r{N}.json).
+``entry(spark)`` runs the flagship query over ``/root/testdata/sf0.001``
+as a smoke check.  ``queries()[name]`` is a registered query (a function
+of the session and a table directory) and ``oracle_sql()[name]`` its
+DuckDB oracle: ``tests/test_registry.py`` runs each query over the test
+tables (sf0.001 unless ``SPARK_GRAFT_SF_DIR`` names another directory)
+and compares columns, row count and order-insensitive values with the
+oracle's.
 
 The real surface lives in ``parquet_converters_spark.queries``; this
-module only adapts it to the driver's shape.
+module only adapts it to that shape.
 """
 
 from __future__ import annotations

@@ -7,10 +7,13 @@ Four families, all shuffle-disciplined for 100 TB inputs:
 - **MinHash + LSH**: shingle -> 32-bit hash -> k permuted mins ->
   bands.  The band keys come from one Arrow pass per partition, each
   document hashed once; candidates from one ``groupBy(band, bucket)``
-  exchange whose sorted id lists expand to their pairs, so cost is
-  proportional to bucket collisions, never O(n^2).  Documents without
-  shingles have no bands.  Survivors union-find small candidate sets on
-  the driver.
+  exchange.  Verified or reported pairs expand each bucket to its
+  clique of ``a < b`` pairs; the survivors path takes star edges
+  instead, each bucket's minimum id to its other ids, so a bucket of n
+  ids costs n - 1 rows and exact dedup rides the same exchange as one
+  more band keyed by the content hash.  Documents without shingles
+  have no LSH bands.  Survivors union-find small edge sets on the
+  driver.
 - **SimHash**: 32-bit majority-vote fingerprint; near-dups share a
   fingerprint (or a nibble-banded variant of it).
 - **n-gram Jaccard**: exact verification on candidate pairs only.
@@ -103,7 +106,7 @@ def minhash_signatures(
     )
 
 
-def _band_batches(batches, num_hashes: int, bands: int, shingle_size: int):
+def _band_batches(batches, num_hashes: int, bands: int, shingle_size: int, exact: bool):
     """``mapInArrow`` kernel: ``(id, text)`` batches -> ``(id, band,
     bucket)`` rows, the same values the Spark expressions give.
 
@@ -112,8 +115,13 @@ def _band_batches(batches, num_hashes: int, bands: int, shingle_size: int):
     (:func:`h32`), then the frozen ``_MINHASH_COEFFS`` permutations in
     numpy int64 and one minimum per permutation; a band's bucket is its
     minima joined with ``-``.  A document without shingles (NULL text or
-    fewer than ``shingle_size`` tokens) emits no rows: its signature
-    would be all sentinels, shared by every such document."""
+    fewer than ``shingle_size`` tokens) emits no LSH rows: its signature
+    would be all sentinels, shared by every such document.
+
+    ``exact``: every document also emits one row in band ``bands`` whose
+    bucket is its :func:`content_hash` key as a decimal string (NULL for
+    NULL text, so NULL texts share a bucket as they share a group in
+    :func:`exact_dedup`)."""
     import hashlib
     import re
 
@@ -122,7 +130,10 @@ def _band_batches(batches, num_hashes: int, bands: int, shingle_size: int):
 
     from parquet_converters_spark.functions.text import TOKEN_PATTERN
 
-    token = re.compile(TOKEN_PATTERN)
+    # the pattern is ASCII, so it splits the UTF-8 bytes of the lowercased
+    # text where it splits the text: each shingle is md5-ed as it is
+    token = re.compile(TOKEN_PATTERN.encode())
+    md5 = hashlib.md5
     coeffs = np.array(_MINHASH_COEFFS[:num_hashes], dtype=np.int64)
     rows = num_hashes // bands
     n = shingle_size
@@ -131,47 +142,60 @@ def _band_batches(batches, num_hashes: int, bands: int, shingle_size: int):
     for batch in batches:
         ids, texts = batch.column(0), batch.column(1).to_pylist()
         for lo in range(0, len(texts), chunk):
-            keep, starts, hashes = [], [], []
-            for i in range(lo, min(lo + chunk, len(texts))):
+            hi = min(lo + chunk, len(texts))
+            keep, starts, digests = [], [], []
+            n_shingles = 0
+            for i in range(lo, hi):
                 t = texts[i]
-                toks = token.findall(t.lower()) if t is not None else ()
+                toks = token.findall(t.lower().encode()) if t is not None else ()
                 if len(toks) < n:
                     continue
                 keep.append(i)
-                starts.append(len(hashes))
-                # the first 4 md5 bytes, big-endian: int(md5[:8], 16)
-                hashes.extend(
-                    int.from_bytes(
-                        hashlib.md5(" ".join(toks[j:j + n]).encode()).digest()[:4],
-                        "big",
-                    )
-                    for j in range(len(toks) - n + 1)
+                starts.append(n_shingles)
+                n_shingles += len(toks) - n + 1
+                # the first 4 md5 bytes of each shingle: int(md5[:8], 16)
+                digests += [
+                    md5(b" ".join(s)).digest()[:4]
+                    for s in zip(*(toks[j:] for j in range(n)))
+                ]
+            take, band, bucket = [], [], []
+            if keep:
+                h = (
+                    np.frombuffer(b"".join(digests), dtype=">u4").astype(np.int64)
+                    % MERSENNE_PRIME
                 )
-            if not keep:
-                continue
-            h = np.array(hashes, dtype=np.int64) % MERSENNE_PRIME
-            mins = np.stack(
-                [
-                    np.minimum.reduceat((h * a + b) % MERSENNE_PRIME, starts)
-                    for a, b in coeffs
-                ],
-                axis=1,
-            ).tolist()
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids.take(pa.array(np.repeat(keep, bands))),
-                    pa.array(list(range(bands)) * len(keep), pa.int32()),
-                    pa.array(
-                        [
-                            "-".join(map(str, m[b * rows:(b + 1) * rows]))
-                            for m in mins
-                            for b in range(bands)
-                        ],
-                        pa.string(),
-                    ),
-                ],
-                ["_id", "band", "bucket"],
-            )
+                mins = np.stack(
+                    [
+                        np.minimum.reduceat((h * a + b) % MERSENNE_PRIME, starts)
+                        for a, b in coeffs
+                    ],
+                    axis=1,
+                ).tolist()
+                take = np.repeat(keep, bands).tolist()
+                band = list(range(bands)) * len(keep)
+                bucket = [
+                    "-".join(map(str, m[b * rows:(b + 1) * rows]))
+                    for m in mins
+                    for b in range(bands)
+                ]
+            if exact:
+                take += range(lo, hi)
+                band += [bands] * (hi - lo)
+                # the first 15 md5 hex digits as an integer: content_hash
+                bucket += [
+                    None if t is None
+                    else str(int(hashlib.md5(t.encode()).hexdigest()[:15], 16))
+                    for t in texts[lo:hi]
+                ]
+            if take:
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        ids.take(pa.array(take, pa.int64())),
+                        pa.array(band, pa.int32()),
+                        pa.array(bucket, pa.string()),
+                    ],
+                    ["_id", "band", "bucket"],
+                )
 
 
 def _lsh_bands(
@@ -181,13 +205,16 @@ def _lsh_bands(
     num_hashes: int = 8,
     bands: int = 4,
     shingle_size: int = 3,
+    exact: bool = False,
 ) -> DataFrame:
     """Banded MinHash-LSH keys ``(_id, band, bucket)``: ``bands`` rows
     per document with shingles, from one narrow ``mapInArrow`` pass
     (:func:`_band_batches`) — each document is hashed once, in whatever
     partition holds it.  The buckets equal
     :func:`signature_band_buckets` over :func:`minhash_signatures` for
-    every document whose signature is not all sentinels."""
+    every document whose signature is not all sentinels.  ``exact`` adds
+    the exact band ``bands``: one row per document, bucket
+    :func:`content_hash`."""
     from functools import partial
 
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType
@@ -206,8 +233,27 @@ def _lsh_bands(
             num_hashes=num_hashes,
             bands=bands,
             shingle_size=shingle_size,
+            exact=exact,
         ),
         schema,
+    )
+
+
+def _star_edges(keys: DataFrame) -> DataFrame:
+    """``(_id, band, bucket)`` keys -> star edges ``(id_a, id_b, band)``:
+    one ``groupBy(band, bucket)`` exchange, and each bucket of n ids
+    emits the n - 1 edges from its minimum id to the others.  A bucket's
+    star connects exactly the ids its clique of pairs connects, in O(n)
+    rows instead of n(n-1)/2; ids equal to the minimum never pair, as in
+    the clique's ``a < b``."""
+    return (
+        keys.groupBy("band", "bucket")
+        .agg(F.min("_id").alias("id_a"), F.collect_list("_id").alias("_ids"))
+        .select(
+            "id_a",
+            F.explode(F.array_remove("_ids", F.col("id_a"))).alias("id_b"),
+            "band",
+        )
     )
 
 
@@ -228,19 +274,26 @@ def minhash_lsh_pairs(
     Arrow pass (:func:`_lsh_bands`); candidates from ONE exchange,
     ``groupBy(band, bucket)`` collecting each bucket's sorted ids, whose
     lists expand to their ``a < b`` pairs — the same rows as a self
-    equi-join on (band, bucket), with one shuffle instead of two.  Cost
-    is proportional to bucket collisions, never O(n^2) in the corpus.
+    equi-join on (band, bucket), with one shuffle instead of two.
     Documents without shingles have no bands and pair with nothing.
-    Verification runs only on distinct candidate pairs.
+    Verification runs only on distinct candidate pairs.  A bucket of n
+    ids still expands to its n(n-1)/2 pairs here: that is the price of
+    pairs that are verified or reported one by one.
 
-    ``pair_distinct=False`` skips the cross-band pair dedup shuffle: a
-    pair matching in several bands is then emitted once per band.  Only
-    for consumers whose result is invariant to duplicate edges (the
-    union-find of :func:`near_dedup_survivors`).
+    ``pair_distinct=False`` (without ``jaccard_threshold``) returns star
+    edges ``(id_a, id_b, band)`` instead (:func:`_star_edges`): per band
+    and bucket, the n - 1 edges from the bucket's minimum id to its
+    other ids, so a boilerplate bucket costs O(n) rows.  They connect
+    the same components as the pairs, so they serve consumers whose
+    result depends only on connectivity (the union-find of
+    :func:`near_dedup_survivors`); an edge in several bands appears
+    once per band.
     """
+    keys = _lsh_bands(df, text_col, id_col, num_hashes, bands, shingle_size)
+    if not pair_distinct and jaccard_threshold is None:
+        return _star_edges(keys)
     cand = (
-        _lsh_bands(df, text_col, id_col, num_hashes, bands, shingle_size)
-        .groupBy("band", "bucket")
+        keys.groupBy("band", "bucket")
         .agg(F.array_sort(F.collect_list("_id")).alias("_ids"))
         .filter(F.size("_ids") > 1)
         # streamed: each id is paired with the ids after it, one O(n)
@@ -253,10 +306,9 @@ def minhash_lsh_pairs(
         )
         # equal ids (a repeated id) never pair, as in the self-join
         .filter(F.col("id_a") < F.col("id_b"))
+        # each pair once, however many bands it matches in
+        .dropDuplicates(["id_a", "id_b"])
     )
-    if pair_distinct or jaccard_threshold is not None:
-        # verification must see each pair once (it scores per row)
-        cand = cand.dropDuplicates(["id_a", "id_b"])
 
     if jaccard_threshold is None:
         return cand.select("id_a", "id_b")
@@ -291,24 +343,38 @@ def near_dedup_pipeline(
     jaccard_threshold: float | None = None,
     pair_distinct: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
-    """Scale-safe near-dedup composition: exact dedup FIRST, MinHash-LSH
-    over the unique-text representatives only.
+    """Scale-safe near-dedup composition.  Returns ``(groups, pairs)``:
+    ``groups`` is the exact-dedup table (content_hash, keep_id,
+    dup_count).
 
-    Why the order matters at 100 TB: a group of d exact duplicates
-    lands in the same LSH bucket in every band and emits d(d-1)/2
-    candidate pairs — quadratic in the duplication factor (measured:
-    20x duplication of a 5k corpus -> 1.3M candidates instead of ~1k).
-    Collapsing exact groups to their min-id representative first makes
-    the LSH candidate count a function of *distinct* content only.
+    Verified or distinct pairs (``jaccard_threshold`` given, or
+    ``pair_distinct=True``, the default): exact dedup FIRST, then
+    MinHash-LSH clique pairs over the unique-text representatives only
+    (extend them to members through ``groups``).  A group of d exact
+    duplicates shares a bucket in every band, so over the raw documents
+    it would emit d(d-1)/2 pairs per band (measured: 20x duplication of
+    a 5k corpus -> 1.3M candidates instead of ~1k); over the
+    representatives the pair count depends on distinct content only.
 
-    Returns ``(groups, pairs)``: ``groups`` is the exact-dedup table
-    (content_hash, keep_id, dup_count); ``pairs`` holds near-duplicate
-    representative pairs (extend to members through ``groups``).
+    Star edges (``pair_distinct=False`` without a threshold): ONE Arrow
+    pass gives every document its LSH bands plus the exact band
+    ``bands`` (bucket :func:`content_hash`), and ONE ``groupBy(band,
+    bucket)`` exchange turns each bucket into its star edges
+    ``(id_a, id_b, band)`` (:func:`_star_edges`).  Exact copies share
+    every band and link to their group's minimum id, so a duplicated
+    text costs O(d) edges, not d(d-1)/2, and no exact-dedup exchange
+    runs first.  The components the edges form are those of the clique
+    pairs over the representatives plus each exact group, with the same
+    minimum ids; the edges of band ``bands`` are one per document that
+    is not its exact group's minimum.
     """
     groups = exact_dedup(df, text_col, id_col)
+    if not pair_distinct and jaccard_threshold is None:
+        keys = _lsh_bands(df, text_col, id_col, num_hashes, bands, shingle_size, exact=True)
+        return groups, _star_edges(keys)
     pairs = minhash_lsh_pairs(
         _representatives(df, groups, id_col), text_col, id_col, num_hashes, bands, shingle_size,
-        jaccard_threshold, pair_distinct=pair_distinct,
+        jaccard_threshold,
     )
     return groups, pairs
 
@@ -488,20 +554,26 @@ def near_dedup_survivors(
     """The end of the dedup funnel: the rows a training-data pipeline
     actually keeps.
 
-    Composition (each stage scale-safe on its own):
-    exact dedup -> min-id representatives -> MinHash-LSH pairs over
-    representatives only -> connected components -> drop every doc that
-    is not its cluster's minimum.  Returns the surviving subset of
-    ``df`` (all original columns) as an eager ``localCheckpoint`` — the
-    only storage the call leaves pinned.
+    Keeps one row per connected component of the star edges of
+    :func:`near_dedup_pipeline` (``pair_distinct=False``): its minimum
+    id.  These are the rows exact dedup to min-id representatives, then
+    MinHash-LSH pairs over the representatives, then connected
+    components keep.  Returns the surviving subset of ``df`` (all
+    original columns, its partitions) as an eager ``localCheckpoint`` —
+    the only storage the call leaves pinned.
 
-    Plan: the representatives are persisted and built by the pairs job.
+    Plan, with adaptive execution off so that each query is one job:
+    the Arrow pass and the exchange build the star edges in one eager
+    checkpoint job, which also counts the exact band's edges.
     :func:`~parquet_converters_spark.operators.graph.connected_components`
-    (``cc_method``) checkpoints the pairs once; below its
-    ``_CC_DRIVER_MAX_EDGES`` they are union-found on the driver and the
-    labels come back as a local relation, above it the distributed
-    rounds run over that checkpoint.  The one checkpoint job anti-joins
-    the non-minimum nodes from the cached representatives.
+    (``cc_method``) reads that checkpoint; below its
+    ``_CC_DRIVER_MAX_EDGES`` the edges are union-found on the driver (one
+    collect job) and the labels come back as a local relation, whose
+    non-minimum ids the survivors job filters out inside the task;
+    above it the distributed rounds run and the survivors job anti-joins
+    their labels.  The survivors job reads ``df`` again: persist a
+    ``df`` that is costly to compute (``prepare_corpus`` caches its gated
+    rows).
     """
     return _near_dedup_survivors(
         df, text_col, id_col, num_hashes, bands, cc_method
@@ -515,41 +587,62 @@ def _near_dedup_survivors(
     num_hashes: int,
     bands: int,
     cc_method: str,
-) -> tuple[DataFrame, int, int]:
-    """:func:`near_dedup_survivors` plus the two counts its checkpoint
-    job observes: ``(survivors, representatives, survivors' rows)``."""
+) -> tuple[DataFrame, int, int, int]:
+    """:func:`near_dedup_survivors` plus the counts it observes:
+    ``(survivors, rows of df, exact-unique rows, survivors' rows)``."""
     from pyspark.sql import Observation
 
-    from parquet_converters_spark.operators.graph import connected_components
-    from parquet_converters_spark.session import free_local_checkpoints
-
-    # pairs feed only the union-find, which ignores repeated edges, so
-    # the cross-band pair dedup would be a wasted exchange
-    groups, pairs = near_dedup_pipeline(
-        df, text_col, id_col, num_hashes=num_hashes, bands=bands,
-        pair_distinct=False,
+    from parquet_converters_spark.operators.graph import (
+        _STATE_ROWS_PER_PARTITION,
+        connected_components,
     )
-    # persisted before the pairs run: the plan of ``pairs`` contains this
-    # same semi-join, so the pairs job builds the cache and the
-    # checkpoint below reads it instead of redoing the exact-dedup
-    # exchange
-    reps = _representatives(df, groups, id_col).persist()
-    comps = None
-    try:
-        comps = connected_components(pairs, "id_a", "id_b", method=cc_method)
-        losers = comps.filter(F.col("node") != F.col("component"))
-        n_reps, n_out = Observation(), Observation()
-        out = (
-            reps.observe(n_reps, F.count(F.lit(1)).alias("n"))
-            .join(losers.select(F.col("node").alias(id_col)), id_col, "left_anti")
-            .observe(n_out, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        reps.unpersist(blocking=True)
-        if comps is not None:
-            free_local_checkpoints(comps)
-    return out, n_reps.get["n"] or 0, n_out.get["n"] or 0
+    from parquet_converters_spark.session import (
+        free_local_checkpoints,
+        without_adaptive,
+    )
+
+    _, pairs = near_dedup_pipeline(
+        df, text_col, id_col, num_hashes=num_hashes, bands=bands, pair_distinct=False
+    )
+    n_edges, n_in, n_out = Observation(), Observation(), Observation()
+    edges = comps = None
+    # non-adaptive: the edges and the survivors are one job each, whatever
+    # exchanges their plans hold
+    with without_adaptive(df.sparkSession):
+        try:
+            # the exact band has one edge per row that is not its exact
+            # group's minimum: counted by the job that builds the edges
+            edges = pairs.observe(
+                n_edges,
+                F.count(F.lit(1)).alias("n"),
+                F.sum((F.col("band") == bands).cast("long")).alias("copies"),
+            ).localCheckpoint(eager=True)
+            # one partition per _STATE_ROWS_PER_PARTITION edges: while the
+            # edges fit in one, the bounded collect is one job
+            edges = edges.coalesce(-(-n_edges.get["n"] // _STATE_ROWS_PER_PARTITION) or 1)
+            comps = connected_components(edges, "id_a", "id_b", method=cc_method)
+            rows = df.observe(n_in, F.count(F.lit(1)).alias("n"))
+            if comps.isLocal():
+                # labels union-found on the driver: the ids to drop reach
+                # the survivors' tasks inside the filter function, not
+                # through a broadcast job
+                drop = frozenset(node for node, comp in comps.collect() if node != comp)
+                keep = F.udf(lambda i: i not in drop, "boolean", useArrow=True)
+                kept = rows.filter(keep(id_col))
+            else:
+                losers = comps.filter(F.col("node") != F.col("component"))
+                kept = rows.join(
+                    losers.select(F.col("node").alias(id_col)), id_col, "left_anti"
+                )
+            out = kept.observe(n_out, F.count(F.lit(1)).alias("n")).localCheckpoint(
+                eager=True
+            )
+        finally:
+            for frame in (edges, comps):
+                if frame is not None:
+                    free_local_checkpoints(frame)
+    n_rows = n_in.get["n"] or 0
+    return out, n_rows, n_rows - (n_edges.get["copies"] or 0), n_out.get["n"] or 0
 
 
 def contamination_flags(

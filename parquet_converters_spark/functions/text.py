@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 TOKEN_PATTERN = "[a-z0-9]+"
+#: the characters quality_score's alpha ratio counts (``[a-z0-9 ]``)
+_ALPHA_CHARS = "abcdefghijklmnopqrstuvwxyz0123456789 "
 
 #: tiny per-language stopword lists for the n-gram/stopword language-ID
 #: heuristic.  Deliberately small and fixed: the operator contract is a
@@ -71,18 +73,22 @@ def shingles(text: Column | str, n: int = 3) -> Column:
 def quality_score(text: Column | str) -> Column:
     """Heuristic document quality in [0,1]: length band, alpha ratio,
     mean token length band, stopword presence.  Pure arithmetic — same
-    formula is mirrored in the oracle SQL."""
+    formula is mirrored in the oracle SQL.
+
+    The alpha count (``[a-z0-9 ]`` characters of the lowercased text) is
+    the lowercased length minus what ``translate`` leaves after deleting
+    them, and the tokens' total length is the length of their
+    concatenation: the oracle's ``regexp_replace`` count and per-token
+    sum, without a regex pass or an interpreted per-token lambda."""
     c = _col(text)
     n_chars = F.length(c)
-    alpha = F.length(F.regexp_replace(F.lower(c), "[^a-z0-9 ]", ""))
+    low = F.lower(c)
+    alpha = F.length(low) - F.length(F.translate(low, _ALPHA_CHARS, ""))
     alpha_ratio = alpha / F.greatest(n_chars, F.lit(1))
 
     def _score(toks: Column) -> Column:
         n_tokens = F.size(toks)
-        mean_tok = (
-            F.aggregate(toks, F.lit(0), lambda acc, x: acc + F.length(x))
-            / F.greatest(n_tokens, F.lit(1))
-        )
+        mean_tok = F.length(F.array_join(toks, "")) / F.greatest(n_tokens, F.lit(1))
         stop_hits = F.size(
             F.array_intersect(toks, F.array(*[F.lit(w) for w in STOPWORDS["en"]]))
         )

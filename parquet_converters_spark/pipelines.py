@@ -280,10 +280,10 @@ def prepare_corpus(
     individually-oracled stages —
 
     1. quality gate (length band + `functions.text.quality_score`);
-    2. exact dedup to min-id representatives;
-    3. MinHash-LSH near-dedup, connected components, one survivor per
-       cluster (`functions.dedup.near_dedup_survivors`);
-    4. (optional, when ``eval_df`` is given) benchmark decontamination:
+    2. exact dedup and MinHash-LSH near dedup as the bands of one
+       exchange, connected components, one survivor per cluster
+       (`functions.dedup.near_dedup_survivors`);
+    3. (optional, when ``eval_df`` is given) benchmark decontamination:
        drop survivors sharing >= ``decontaminate_min_hits`` word
        shingles with any eval document
        (`functions.dedup.contamination_flags` — eval shingles collapse
@@ -294,22 +294,28 @@ def prepare_corpus(
     funnel report ``(stage_order, stage, n_docs)`` — raw / quality /
     exact_unique / near_unique (/ decontaminated).
 
-    Each document is gated and hashed once, on all cores:
+    The call runs 3 Spark jobs while the star edges stay under
+    ``operators.graph._CC_DRIVER_MAX_EDGES`` (SCALE.md, Dedup):
 
-    - the gated frame is persisted and materialized once, before any
-      consumer reads it, counting ``raw`` and ``quality`` through
-      ``observe()`` on the way.  An input
-      with fewer partitions than ``defaultParallelism`` (one file, one
-      row group) is first spread round-robin to that many; a
+    - an input with fewer partitions than ``defaultParallelism`` (one
+      file, one row group) is first spread round-robin to that many; a
       corpus-scale input is never reshuffled;
-    - the survivors path (`functions.dedup.near_dedup_survivors`) builds
-      the LSH pairs in one Arrow pass and one exchange, union-finds them
-      on the driver when small, and checkpoints the survivors in one job
-      that also counts ``exact_unique`` and ``near_unique``.
+    - one job gates the documents on all cores and caches the gated
+      rows, gives each its MinHash bands and its exact band
+      (``functions.dedup.near_dedup_pipeline``, ``pair_distinct=False``),
+      and checkpoints the star edges of one ``groupBy(band, bucket)``
+      exchange, counting ``raw`` and the exact copies through
+      ``observe()`` on the way;
+    - ``operators.graph.connected_components`` union-finds the edges on
+      the driver from one bounded collect;
+    - one job reads the cached rows and checkpoints those that are their
+      component's minimum, counting ``quality`` and ``near_unique``;
+      ``exact_unique`` is ``quality`` minus the exact copies.
 
-    The report is a local relation of those observed counts: it runs no
-    job.  Only the returned frame stays pinned; the gated frame is
-    unpersisted, not freed, so frames derived from it stay computable.
+    The report is a local relation of those counts: it runs no job.
+    Only the returned frame stays pinned; the gated rows are
+    unpersisted, not freed, so frames derived from them (the edges'
+    plan) stay computable.
     """
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
@@ -321,6 +327,7 @@ def prepare_corpus(
     from parquet_converters_spark.session import (
         free_local_checkpoints,
         values_df,
+        without_adaptive,
     )
 
     spark = docs.sparkSession
@@ -330,28 +337,27 @@ def prepare_corpus(
         docs = docs.repartition(spread)
     q = quality_score(text_col)
     len_ok = (F.length(text_col) >= min_len) & (F.length(text_col) <= max_len)
-    n_raw, n_quality = Observation(), Observation()
-    # the observe() between gate and exchange also keeps Catalyst from
-    # pushing the gate below the repartition, onto the one-task scan
-    quality = (
-        docs.observe(n_raw, F.count(F.lit(1)).alias("n"))
-        .filter(len_ok & (q >= min_quality))
-        .observe(n_quality, F.count(F.lit(1)).alias("n"))
-        .persist()
-    )
+    n_raw = Observation()
+    # cached with adaptive execution off: the edges job builds the cache
+    # as it gates (no job of its own), and the survivors job reads it
+    # instead of scanning and gating again
+    with without_adaptive(spark):
+        # the observe() between exchange and gate also keeps Catalyst from
+        # pushing the gate below the repartition, onto the one-task scan
+        quality = (
+            docs.observe(n_raw, F.count(F.lit(1)).alias("n"))
+            .filter(len_ok & (q >= min_quality))
+            .persist()
+        )
     try:
-        # materialized up front: adaptive execution starts the exact-dedup
-        # aggregate and the representatives' scan together, and each
-        # would compute an unbuilt cache
-        quality.write.format("noop").mode("overwrite").save()
-        clean, n_unique, n_near = _near_dedup_survivors(
+        clean, n_quality, n_unique, n_near = _near_dedup_survivors(
             quality, text_col, id_col, num_hashes, bands, "hash_to_min"
         )
     finally:
-        quality.unpersist(blocking=True)
+        quality.unpersist()
     counts = [
         ("raw", n_raw.get["n"] or 0),
-        ("quality", n_quality.get["n"] or 0),
+        ("quality", n_quality),
         ("exact_unique", n_unique),
         ("near_unique", n_near),
     ]

@@ -1547,12 +1547,21 @@ def dedup_survivors(spark, sf_dir):
     """End of the dedup funnel: the doc ids a training-data pipeline
     actually keeps — exact dedup to min-id representatives, MinHash-LSH
     pairs over representatives, connected components, one survivor per
-    cluster (functions/dedup.py near_dedup_survivors)."""
+    cluster (functions/dedup.py near_dedup_survivors).  The ids come
+    back as a local relation and the survivors' checkpoint is released
+    here, so repeated calls pin no storage."""
+    import pyarrow as pa
+
+    from parquet_converters_spark.session import free_local_checkpoints
+
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (
-        near_dedup_survivors(docs)
-        .select("doc_id")
-        .orderBy("doc_id")
+    survivors = near_dedup_survivors(docs)
+    try:
+        ids = [r[0] for r in survivors.select("doc_id").collect()]
+    finally:
+        free_local_checkpoints(survivors)
+    return spark.createDataFrame(
+        pa.table({"doc_id": pa.array(sorted(ids), pa.int64())})
     )
 
 

@@ -9,6 +9,7 @@ Pandas-UDF paths, and parquet scan sizing that yields ~128 MB splits.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -64,6 +65,30 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextlib.contextmanager
+def without_adaptive(spark: SparkSession):
+    """Plan and run the queries of the block with adaptive execution off,
+    then restore the session's setting.
+
+    With it on, every shuffle stage of a query runs as a Spark job of its
+    own, each paying the fixed cost of a job and of a re-planning round
+    trip; with it off, a query runs as ONE job of several stages.  For a
+    small fixed plan, whose partition counts adaptive execution could
+    only coalesce, that fixed cost is most of the wall.  A frame persisted
+    inside the block keeps the non-adaptive plan it was cached with.  The
+    setting is session-wide: queries that other threads plan meanwhile
+    run non-adaptive too.
+    """
+    conf = spark.conf
+    key = "spark.sql.adaptive.enabled"
+    before = conf.get(key)
+    conf.set(key, "false")
+    try:
+        yield
+    finally:
+        conf.set(key, before)
 
 
 def values_df(spark: SparkSession, rows, schema: str):

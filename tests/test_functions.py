@@ -1188,6 +1188,7 @@ def test_lsh_bands_match_signature_buckets(spark, mixed_docs):
     from parquet_converters_spark.functions.dedup import (
         MERSENNE_PRIME,
         _lsh_bands,
+        content_hash,
         minhash_signatures,
         signature_band_buckets,
     )
@@ -1214,11 +1215,23 @@ def test_lsh_bands_match_signature_buckets(spark, mixed_docs):
     assert by_doc[3000] == by_doc[3001] and len(by_doc[3000]) == 4
     assert len(by_doc) > 1500
 
+    # the exact band: every document, shingles or not, once, keyed by
+    # its content_hash (NULL for NULL text)
+    exact = {tuple(r) for r in _lsh_bands(mixed_docs.coalesce(1), exact=True).collect()} - got
+    assert exact == {
+        (r["doc_id"], 4, r["h"])
+        for r in mixed_docs.select(
+            "doc_id", content_hash("text").cast("string").alias("h")
+        ).collect()
+    }
+
 
 def test_lsh_candidate_multiset_matches_brute_force(spark, tmp_path):
-    """minhash_lsh_pairs(pair_distinct=False) emits one (a, b) row per
-    band in which a < b share a bucket — the rows a per-band brute force
-    over the same signatures gives (the candidate_pairs count)."""
+    """minhash_lsh_pairs(pair_distinct=False) emits the star of every
+    (band, bucket): one (min id, id, band) row per other id of the
+    bucket, the rows a per-band brute force over the same signatures
+    gives (the candidate_pairs count).  pair_distinct=True emits each
+    a < b pair sharing a bucket in any band once."""
     from collections import Counter
     from itertools import combinations
 
@@ -1242,14 +1255,17 @@ def test_lsh_candidate_multiset_matches_brute_force(spark, tmp_path):
         for b in range(4):
             buckets.setdefault((b, tuple(sig[2 * b:2 * b + 2])), []).append(r["doc_id"])
     want = Counter(
-        pair
-        for ids in buckets.values()
-        for pair in combinations(sorted(ids), 2)
+        (min(ids), i, b)
+        for (b, _), ids in buckets.items()
+        for i in ids
+        if i != min(ids)
     )
     assert got == want
     assert sum(want.values()) > 100
     assert set(minhash_lsh_pairs(docs).collect()) == {
-        (a, b) for a, b in want
+        pair
+        for ids in buckets.values()
+        for pair in combinations(sorted(ids), 2)
     }
 
 
@@ -1280,9 +1296,9 @@ def test_documents_without_shingles_never_pair(spark):
 
 
 def test_lsh_large_bucket_pairs_match_brute_force(spark):
-    """One bucket of 2000 ids (a boilerplate text under 2000 ids) expands
-    to all of its 1,999,000 pairs, each id paired row by row with the
-    ids after it, equal to a brute force over the signatures."""
+    """One bucket of 2000 ids (a boilerplate text under 2000 ids) emits
+    its star: exactly 1999 rows, the bucket's minimum id paired with
+    each other id, equal to a brute force over the signatures."""
     import numpy as np
     import pyarrow as pa
 
@@ -1299,22 +1315,56 @@ def test_lsh_large_bucket_pairs_match_brute_force(spark):
     df = spark.createDataFrame(pa.table({"doc_id": ids, "text": texts}))
 
     # bands=1: one bucket per document, so the boilerplate bucket's
-    # pairs are emitted once
+    # star is emitted once
     got = minhash_lsh_pairs(df, bands=1, pair_distinct=False).toArrow()
     got = np.stack([got.column("id_a").to_numpy(), got.column("id_b").to_numpy()], 1)
     buckets = {}
     for r in minhash_signatures(df).collect():
         buckets.setdefault(tuple(r["signature"]), []).append(r["doc_id"])
-    want = []
-    for members in buckets.values():
-        members = np.sort(members)
-        i, j = np.triu_indices(len(members), 1)
-        want.append(np.stack([members[i], members[j]], 1))
-    want = np.concatenate(want)
-    assert len(want) == 2000 * 1999 // 2
+    want = np.array(
+        [
+            (min(members), i)
+            for members in buckets.values()
+            for i in members
+            if i != min(members)
+        ],
+        dtype=np.int64,
+    )
+    assert len(want) == len(got) == 1999
     order_got = np.lexsort((got[:, 1], got[:, 0]))
     order_want = np.lexsort((want[:, 1], want[:, 0]))
     assert np.array_equal(got[order_got], want[order_want])
+
+
+def test_star_edges_linear_in_bucket_size(spark):
+    """A boilerplate text under 10,000 ids costs O(n) edge rows: every
+    band, the exact one included, emits n - 1 star edges instead of the
+    n(n-1)/2 pairs of its clique, and the union-find keeps one id."""
+    import numpy as np
+    import pyarrow as pa
+
+    from parquet_converters_spark.functions.dedup import (
+        minhash_lsh_pairs,
+        near_dedup_pipeline,
+        near_dedup_survivors,
+    )
+    from parquet_converters_spark.session import free_local_checkpoints
+
+    n = 10_000
+    rng = np.random.default_rng(5)
+    ids = rng.choice(10**9, n, replace=False).astype(np.int64)
+    df = spark.createDataFrame(
+        pa.table({"doc_id": ids, "text": ["the same cookie banner on every page"] * n})
+    )
+    lsh = minhash_lsh_pairs(df, pair_distinct=False)
+    assert lsh.count() == 4 * (n - 1)
+    _, star = near_dedup_pipeline(df, pair_distinct=False)
+    by_band = {r["band"]: r["count"] for r in star.groupBy("band").count().collect()}
+    assert by_band == {b: n - 1 for b in range(5)}
+    assert {r[0] for r in star.select("id_a").distinct().collect()} == {int(ids.min())}
+    survivors = near_dedup_survivors(df)
+    assert [r["doc_id"] for r in survivors.collect()] == [int(ids.min())]
+    assert free_local_checkpoints(survivors) == 1
 
 
 def test_near_dedup_survivors_driver_path_matches_distributed(
@@ -1384,14 +1434,42 @@ def test_input_partitions_runs_no_job(spark, tmp_path):
     assert _input_partitions(docs.repartition(3)) is None
 
 
-def test_prepare_corpus_job_budget(spark, tmp_path, monkeypatch):
-    """prepare_corpus gates and hashes each document once: the call and
-    its report run at most 10 Spark jobs, the report equals an explicit
-    recount, only the returned frame stays pinned, and the candidate
-    pairs it built stay computable after the call."""
+def _clique_oracle(docs):
+    """prepare_corpus's report and survivor ids the clique way: the
+    quality gate, exact_dedup, LSH clique pairs over the representatives
+    and the distributed star connected components."""
     from parquet_converters_spark.functions import dedup as D
     from parquet_converters_spark.functions.text import quality_score
     from parquet_converters_spark.operators.graph import connected_components
+    from parquet_converters_spark.session import free_local_checkpoints
+
+    gate = (
+        (F.length("text") >= 50)
+        & (F.length("text") <= 10000)
+        & (quality_score("text") >= 0.5)
+    )
+    quality = docs.filter(gate)
+    groups = D.exact_dedup(quality)
+    reps = {r["keep_id"] for r in groups.collect()}
+    pairs = D.minhash_lsh_pairs(D._representatives(quality, groups, "doc_id"))
+    labels = connected_components(pairs, method="star")
+    losers = {r["node"] for r in labels.collect() if r["node"] != r["component"]}
+    free_local_checkpoints(labels)
+    report = {
+        "raw": docs.count(),
+        "quality": quality.count(),
+        "exact_unique": len(reps),
+        "near_unique": len(reps - losers),
+    }
+    return report, reps - losers
+
+
+def test_prepare_corpus_job_budget(spark, tmp_path, monkeypatch):
+    """prepare_corpus gates and hashes each document once: the call and
+    its report run at most 5 Spark jobs, the report equals an explicit
+    recount, only the returned frame stays pinned, and the candidate
+    pairs it built stay computable after the call."""
+    from parquet_converters_spark.functions import dedup as D
     from parquet_converters_spark.pipelines import prepare_corpus
     from parquet_converters_spark.session import free_local_checkpoints
 
@@ -1416,40 +1494,64 @@ def test_prepare_corpus_job_budget(spark, tmp_path, monkeypatch):
         result["clean"] = clean
         result["report"] = {r["stage"]: r["n_docs"] for r in report.collect()}
 
-    assert _job_count(spark, call) <= 10
+    assert _job_count(spark, call) <= 5
     clean, report = result["clean"], result["report"]
     assert len(set(jsc.getPersistentRDDs().keySet().toArray()) - before) == 1
     assert clean.rdd.getNumPartitions() == 1
 
-    gate = (
-        (F.length("text") >= 50)
-        & (F.length("text") <= 10000)
-        & (quality_score("text") >= 0.5)
-    )
-    quality = docs.filter(gate)
-    groups = D.exact_dedup(quality)
-    pairs = pipeline(quality)[1]
-    labels = connected_components(pairs, method="star")
-    losers = {r["node"] for r in labels.collect() if r["node"] != r["component"]}
-    free_local_checkpoints(labels)
-    reps = {r["keep_id"] for r in groups.collect()}
-    assert report == {
-        "raw": docs.count(),
-        "quality": quality.count(),
-        "exact_unique": len(reps),
-        "near_unique": len(reps - losers),
-    }
+    want, survivors = _clique_oracle(docs)
+    assert report == want
     assert report["raw"] > report["quality"] > report["exact_unique"] > report["near_unique"]
-    assert {r["doc_id"] for r in clean.collect()} == reps - losers
+    assert {r["doc_id"] for r in clean.collect()} == survivors
 
     # the pairs frame the call captured is recomputable, and so is a
     # verified rerun of the pipeline that built it
     ((args, kwargs, (_, captured_pairs)),) = captured
+    quality = args[0]
     assert captured_pairs.count() == pipeline(quality, pair_distinct=False)[1].count()
     assert pipeline(*args, **{**kwargs, "jaccard_threshold": 0.5})[1].count() > 0
 
     assert free_local_checkpoints(clean) == 1
     assert not set(jsc.getPersistentRDDs().keySet().toArray()) - before
+
+
+def test_prepare_corpus_matches_clique_oracle_on_duplicate_families(spark, tmp_path):
+    """Exact-duplicate groups that also have near duplicates, and near
+    duplicates with exact copies of their own: the star edges (exact band
+    included) keep the survivors and the report of exact dedup, clique
+    pairs over the representatives and connected components."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_converters_spark.pipelines import prepare_corpus
+    from parquet_converters_spark.session import free_local_checkpoints
+
+    rng = np.random.default_rng(21)
+    vocab = [f"w{i}x" for i in range(2000)]
+    texts = []
+    for _ in range(120):
+        words = rng.choice(vocab, int(rng.integers(50, 80))).tolist()
+        words[:3] = ["the", "and", "of"]
+        family = [" ".join(words)] * int(rng.integers(1, 4))
+        for _ in range(int(rng.integers(0, 3))):
+            variant = list(words)
+            variant[int(rng.integers(3, len(words)))] = str(rng.choice(vocab))
+            family += [" ".join(variant)] * int(rng.integers(1, 3))
+        texts += family
+    texts += ["too short"] * 5
+    texts = [texts[i] for i in rng.permutation(len(texts))]
+    ids = rng.choice(10**6, len(texts), replace=False).astype(np.int64)
+    path = str(tmp_path / "families.parquet")
+    pq.write_table(pa.table({"doc_id": ids, "text": texts}), path)
+    docs = spark.read.parquet(path)
+
+    clean, report = prepare_corpus(docs)
+    want, survivors = _clique_oracle(docs)
+    assert {r["stage"]: r["n_docs"] for r in report.collect()} == want
+    assert {r["doc_id"] for r in clean.collect()} == survivors
+    assert want["quality"] > want["exact_unique"] > want["near_unique"]
+    free_local_checkpoints(clean)
 
 
 def test_ivfpq_arrow_expr_identical_and_adc_replica(spark, sf_dir):

@@ -48,3 +48,16 @@ def test_query_matches_oracle(spark, sf_dir, duck, name):
     assert type_divergence(sdf.dtypes, dcols, list(rel.types))[0] == []
     assert len(srows) == len(drows)
     assert rows_key(srows, sdf.columns) == rows_key(drows, dcols)
+
+
+def test_dedup_survivors_pins_no_storage(spark, sf_dir):
+    """The survivors query releases its checkpoint: three calls leave the
+    session's persisted RDDs as they were."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    query = E.queries()["dedup_survivors"]
+    counts = []
+    for _ in range(3):
+        counts.append(query(spark, sf_dir).count())
+        assert set(jsc.getPersistentRDDs().keySet().toArray()) == before
+    assert counts[0] > 0 and len(set(counts)) == 1
