@@ -125,19 +125,6 @@ def main(argv: list[str] | None = None) -> int:
     dd.add_argument("--num-hashes", type=int, default=8)
     dd.add_argument("--bands", type=int, default=4)
 
-    idd = sub.add_parser(
-        "image-dedup",
-        help="Near-dedup an image parquet by perceptual hash (dHash -> "
-        "Hamming band join -> connected components) and write the "
-        "surviving rows",
-    )
-    idd.add_argument("input", help="Input parquet with a binary payload column")
-    idd.add_argument("output", help="Output parquet directory (survivors)")
-    idd.add_argument("--id-col", default="media_id")
-    idd.add_argument("--payload-col", default="payload")
-    idd.add_argument("--bands", type=int, default=4)
-    idd.add_argument("--max-hamming", type=int, default=3)
-
     w2p = sub.add_parser(
         "warc2parquet",
         help="Extract text documents from WARC crawl archives "
@@ -250,15 +237,10 @@ def main(argv: list[str] | None = None) -> int:
 
         df = read_sonata_edges(spark, args.h5_file, args.population)
         df.write.mode("overwrite").parquet(args.output)
-        # count from the written footers (O(files) metadata) — a
-        # df.count() here would re-run the whole row-slice decode
-        from parquet_converters_spark.sources.ordering import (
-            file_row_counts,
-            sorted_parquet_files,
+        print(
+            f"sonata2parquet: wrote {_written_rows(args.output)} edges "
+            f"-> {args.output}"
         )
-
-        n = sum(file_row_counts(sorted_parquet_files(args.output)))
-        print(f"sonata2parquet: wrote {n} edges -> {args.output}")
     elif args.cmd == "dedup":
         from parquet_converters_spark.functions.dedup import near_dedup_survivors
 
@@ -271,28 +253,9 @@ def main(argv: list[str] | None = None) -> int:
             bands=args.bands,
         )
         survivors.write.mode("overwrite").parquet(args.output)
-        kept = spark.read.parquet(args.output).count()
         print(
-            f"dedup: kept {kept} of {docs.count()} rows -> {args.output}"
-        )
-    elif args.cmd == "image-dedup":
-        from parquet_converters_spark.functions.image_fingerprint import (
-            image_neardup_survivors,
-        )
-
-        media = spark.read.parquet(args.input)
-        survivors = image_neardup_survivors(
-            media,
-            payload_col=args.payload_col,
-            id_col=args.id_col,
-            bands=args.bands,
-            max_hamming=args.max_hamming,
-        )
-        survivors.write.mode("overwrite").parquet(args.output)
-        kept = spark.read.parquet(args.output).count()
-        print(
-            f"image-dedup: kept {kept} of {media.count()} rows -> "
-            f"{args.output}"
+            f"dedup: kept {_written_rows(args.output)} of {docs.count()} "
+            f"rows -> {args.output}"
         )
     elif args.cmd == "prepare-corpus":
         from parquet_converters_spark.pipelines import prepare_corpus

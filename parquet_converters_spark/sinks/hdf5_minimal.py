@@ -3,7 +3,7 @@
 This container ships no HDF5 library (no h5py/libhdf5), but the
 reference's second binary produces a real ``.h5`` SONATA file
 (``src/circuit/sonata_file.cpp:45-143``).  Rather than leaving
-``export_hdf5`` permanently gated on an absent dependency, this module
+the ``.h5`` export permanently gated on an absent dependency, this module
 implements the small slice of the PUBLIC HDF5 File Format
 Specification (classic/v0 layout, the format libhdf5 has written since
 HDF5 1.0) that a SONATA edge file needs:

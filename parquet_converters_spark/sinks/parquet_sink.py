@@ -261,42 +261,3 @@ def _write_metadata_sidecar(path: str, footers: dict | None = None) -> None:
     pq.write_metadata(
         schema, os.path.join(path, "_metadata"), metadata_collector=collector
     )
-
-
-def write_partitioned_dataset(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    sort_within: list[str] | None = None,
-    mode: str = "overwrite",
-    max_records_per_file: int | None = None,
-) -> None:
-    """Hive-partitioned parquet layout (``key=value`` directories) —
-    the 100 TB organization that turns a predicate on the partition
-    column into directory pruning instead of a data scan.
-
-    - ``partition_cols`` become directory levels; keep their
-      cardinality moderate (date/day, category — never a high-card id:
-      10^6 directories kill the file listing long before the scan).
-    - ``sort_within`` clusters rows inside each file so min/max
-      row-group statistics prune within partitions too (the poor
-      man's z-order for a single sort axis).
-    - ``max_records_per_file`` caps file size without an extra
-      repartition job.
-
-    Readback needs nothing special: ``spark.read.parquet(path)``
-    recovers the partition columns from the directory names, and
-    Catalyst turns partition-column filters into PartitionFilters
-    (asserted in tests/test_bucketing.py).
-    """
-    out = df
-    if sort_within:
-        out = out.sortWithinPartitions(*sort_within)
-    writer = (
-        out.write.mode(mode)
-        .option("compression", "snappy")
-        .partitionBy(*partition_cols)
-    )
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-    writer.parquet(path)

@@ -62,9 +62,8 @@ With ``compression="gzip"`` it also writes the chunked+shuffle+deflate
 layout (which the reference cannot write in parallel at all): a
 compress pass resolves the data-dependent chunk sizes, the driver lays
 out the B-trees from sizes alone, and the fill job pwrites each blob at
-its published address.  ``export_hdf5`` is the driver-side single
-writer both modes are byte-identical to; it is kept as the tests'
-reference.
+its published address.  Both modes are byte-identical to the
+driver-side single writer of ``tests/hdf5_oracle.py``.
 """
 
 from __future__ import annotations
@@ -617,13 +616,11 @@ _INDEX_COLS = {
 
 
 def _gather_small_datasets(
-    pop_dir: str, base: str, manifest: dict, include_indices: bool = True
+    pop_dir: str, base: str, manifest: dict
 ) -> tuple[dict, dict]:
-    """The driver-side (metadata-scale) parts of a SONATA ``.h5``:
-    ``@library`` enumerations (and, for the single-writer, the
-    adjacency indices), plus all group/dataset attributes.  Shared by
-    the single-writer and the parallel export — in the reference these
-    are likewise written by rank 0
+    """The driver-side (metadata-scale) parts of a SONATA ``.h5``: the
+    ``@library`` enumerations and all group/dataset attributes — in the
+    reference these are likewise written by rank 0
     (``src/circuit/sonata_file.cpp:45-97``)."""
     import numpy as np
     import pyarrow.parquet as pq
@@ -638,32 +635,6 @@ def _gather_small_datasets(
         )
         values = t.sort_by("index").column("value").to_pylist()
         datasets[f"{base}/0/@library/{name}"] = np.asarray(values, dtype="S")
-    if not include_indices:
-        return datasets, attrs
-    for direction in ("source_to_target", "target_to_source"):
-        d = os.path.join(pop_dir, "indices", direction)
-        if not os.path.isdir(d):
-            continue
-        nr = pq.read_table(
-            os.path.join(d, "node_id_to_ranges.parquet")
-        ).sort_by("node_id")
-        datasets[f"{base}/indices/{direction}/node_id_to_ranges"] = np.stack(
-            [
-                nr.column("range_lo").to_numpy(),
-                nr.column("range_hi").to_numpy(),
-            ],
-            axis=1,
-        )
-        re_ = pq.read_table(
-            os.path.join(d, "range_to_edge_id.parquet")
-        ).sort_by("range_id")
-        datasets[f"{base}/indices/{direction}/range_to_edge_id"] = np.stack(
-            [
-                re_.column("edge_start").to_numpy(),
-                re_.column("edge_end").to_numpy(),
-            ],
-            axis=1,
-        )
     return datasets, attrs
 
 
@@ -693,73 +664,6 @@ def _dataset_path(base: str, name: str, manifest: dict) -> str:
     if name in manifest["top_level_datasets"]:
         return f"{base}/{name}"
     return f"{base}/0/{name}"
-
-
-def export_hdf5(
-    bundle_dir: str,
-    population: str,
-    h5_path: str,
-    compression: str | None = None,
-    chunk_rows: int | None = None,
-) -> None:
-    """Convert a SONATA bundle to a real SONATA HDF5 file — the
-    correctness path of SURVEY §7 step 5, mirroring the reference's
-    layout (``src/circuit/sonata_file.cpp:45-143``): top-level
-    ``source_node_id``/``target_node_id``/``edge_type_id`` datasets,
-    per-edge properties under ``0/``, enumerations under
-    ``0/@library/``, adjacency under ``indices/``.
-
-    Single-writer (driver-side) export, always encoded with the
-    built-in classic-format writer
-    (:mod:`parquet_converters_spark.sinks.hdf5_minimal`).  The engine's
-    production writer is :func:`export_hdf5_parallel`; this one holds
-    the whole table in driver memory and stays as the reference its
-    byte-identity tests compare against.
-
-    ``compression="gzip"`` writes every dataset longer than
-    ``chunk_rows`` rows chunked with shuffle+deflate — the layout
-    libhdf5 pipelines produce.  The default stays contiguous because
-    that is what makes the parallel export's offset-computed writes
-    possible.
-    """
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    from parquet_converters_spark.sinks.hdf5_minimal import MiniH5Writer
-
-    pop_dir = os.path.join(bundle_dir, "edges", population)
-    with open(os.path.join(pop_dir, "attributes.json")) as f:
-        manifest = json.load(f)
-    base = f"/edges/{population}"
-
-    table = pq.read_table(os.path.join(pop_dir, "table.parquet"))
-    if chunk_rows is None:
-        chunk_rows = _auto_chunk_rows(table.num_rows)
-    perm = np.argsort(
-        table.column(manifest["row_index_column"]).to_numpy()
-    )
-    datasets, attrs = _gather_small_datasets(pop_dir, base, manifest)
-    for name in manifest["top_level_datasets"]:
-        datasets[f"{base}/{name}"] = table.column(name).to_numpy()[perm]
-    for name in manifest["property_datasets"]:
-        if name in manifest["top_level_datasets"]:
-            continue
-        datasets[f"{base}/0/{name}"] = table.column(name).to_numpy()[perm]
-
-    w = MiniH5Writer()
-    w.create_group(base)
-    for path, arr in datasets.items():
-        if compression is None or arr.size == 0 or len(arr) <= chunk_rows:
-            w.create_dataset(path, arr)
-        else:
-            w.create_dataset(
-                path, arr, chunks=(chunk_rows,) + arr.shape[1:],
-                compression=compression, shuffle=True,
-            )
-    for path, a in attrs.items():
-        for k, v in a.items():
-            w.set_attr(path, k, v)
-    w.write(h5_path)
 
 
 def _run_tasks(spark, tasks: list, fn, schema: StructType) -> list:
@@ -1083,8 +987,9 @@ def export_hdf5_parallel(
     failure removes it and leaves ``h5_path`` as it was.
 
     Returns the number of edge rows written.  The result is
-    byte-identical to :func:`export_hdf5` with the same ``compression``
-    and ``chunk_rows`` (``tests/test_hdf5_export.py``).
+    byte-identical to the driver-side single writer of
+    ``tests/hdf5_oracle.py`` with the same ``compression`` and
+    ``chunk_rows`` (``tests/test_hdf5_export.py``).
     """
     import logging
     import shutil
@@ -1172,9 +1077,7 @@ def export_hdf5_parallel(
             for ds, ci, size in zip(*t.to_pydict().values()):
                 sizes.setdefault(ds, {})[ci] = size
 
-        datasets, attrs = _gather_small_datasets(
-            pop_dir, base, manifest, include_indices=False
-        )
+        datasets, attrs = _gather_small_datasets(pop_dir, base, manifest)
         w = MiniH5Writer()
         w.create_group(base)
         for path, arr in datasets.items():

@@ -322,7 +322,7 @@ def read_sonata_edges(
     """Load ``/edges/<population>`` — top-level node ids + ``0/``
     properties (``@library`` codes stay integer codes) — as
     ``row_index`` (the global position, so the ordered round-trip
-    ``export_hdf5 -> read_sonata_edges`` is loss-free) followed by the
+    ``export_hdf5_parallel -> read_sonata_edges`` is loss-free) followed by the
     edge columns, one Spark task per ``rows_per_partition`` row slice
     (default :func:`_auto_rows_per_partition`).
 

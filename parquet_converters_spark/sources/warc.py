@@ -549,45 +549,6 @@ def link_warc_records(records: DataFrame) -> DataFrame:
     )
 
 
-def crawl_text_dedup_gate(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-    errors: str = "strict",
-) -> DataFrame:
-    """Exactly-once text admission for a CONTINUOUS crawl — the
-    streaming face of the crawl funnel's exact-dedup stage (the
-    ``image_dedup_gate`` pattern applied to WARC text): archives
-    stream in, responses are parsed/extracted by the SAME narrow
-    stage as the batch path (``warc_text_documents``, the ingest
-    timestamp riding through ``carry_cols`` — join-free), 200-status
-    text documents are hashed with the repo's 8-byte exact-dedup key,
-    and ONE document per ``content_hash`` passes.
-
-    Streaming input uses ``dropDuplicatesWithinWatermark`` on the
-    hash (first arrival within the watermark wins; state expires as
-    the watermark passes — bounded memory at 100 TB/day ingest);
-    batch input uses plain ``dropDuplicates``, which keeps an
-    ARBITRARY representative — aggregate hash-level facts downstream
-    when the output must be deterministic.  Both legs emit the same
-    schema."""
-    carry = (ts_col,) if ts_col in df.columns else ()
-    texts = warc_text_documents(
-        df, payload_col, id_col, errors=errors, carry_cols=carry
-    )
-    from parquet_converters_spark.functions.dedup import content_hash
-
-    docs = texts.filter(
-        (F.col("http_status") == 200) & F.col("text").isNotNull()
-    ).withColumn("content_hash", content_hash("text"))
-    if df.isStreaming:
-        return docs.withWatermark(ts_col, watermark)\
-            .dropDuplicatesWithinWatermark(["content_hash"])
-    return docs.dropDuplicates(["content_hash"])
-
-
 def warc_cdx_records(
     df: DataFrame,
     payload_col: str = "payload",

@@ -48,10 +48,8 @@ def xval_bundle(spark, tmp_path_factory):
 
 
 def _export_all_paths(spark, bundle, population, tmp_path, tag):
-    from parquet_converters_spark.sinks.sonata import (
-        export_hdf5,
-        export_hdf5_parallel,
-    )
+    from parquet_converters_spark.sinks.sonata import export_hdf5_parallel
+    from tests.hdf5_oracle import export_hdf5
 
     paths = {}
     p = str(tmp_path / f"{tag}_contig.h5")

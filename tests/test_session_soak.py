@@ -11,10 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from parquet_converters_spark.operators.graph import (
-    connected_components,
-    pagerank,
-)
+from parquet_converters_spark.operators.graph import connected_components
 from parquet_converters_spark.pipelines import prepare_corpus
 from parquet_converters_spark.session import free_local_checkpoints
 
@@ -39,9 +36,12 @@ def test_three_cycle_soak_leaves_no_residue(
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (4, 5), (6, 7), (7, 8)], "id_a long, id_b long"
     )
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 1), (2, 3), (3, 2), (3, 1), (1, 3)],
-        "src long, dst long",
+    # string ids skip the driver union-find, so these labels come from
+    # the distributed rounds, each pinning a checkpoint it must release
+    chain = spark.createDataFrame(
+        [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(12)]
+        + [("m00", "m01"), ("m01", "m02")],
+        "id_a string, id_b string",
     )
     jsc = spark.sparkContext._jsc
     baseline = set(jsc.getPersistentRDDs().keySet().toArray())
@@ -59,11 +59,12 @@ def test_three_cycle_soak_leaves_no_residue(
         ))
         assert free_local_checkpoints(labels) == 1
 
-        ranks = pagerank(
-            edges, iterations=12, checkpoint_every=4, materialize=True
-        )
-        total_rank = round(sum(r["rank"] for r in ranks.collect()), 9)
-        assert free_local_checkpoints(ranks) == 1
+        rounds = connected_components(chain, materialize=True)
+        chain_comp = tuple(sorted(
+            (r["node"], r["component"]) for r in rounds.collect()
+        ))
+        assert {c for _, c in chain_comp} == {"n00", "m00"}
+        assert free_local_checkpoints(rounds) == 1
 
         from parquet_converters_spark.pipelines import parquet_to_sonata
 
@@ -78,7 +79,7 @@ def test_three_cycle_soak_leaves_no_residue(
         # no-residue: the persisted set is EXACTLY the baseline again
         residue = set(jsc.getPersistentRDDs().keySet().toArray()) - baseline
         assert not residue, f"cycle {cycle}: leaked RDD ids {residue}"
-        results.append((n_clean, stages, comp, total_rank, size))
+        results.append((n_clean, stages, comp, chain_comp, size))
 
     # stability: every cycle computed identical results (a leak that
     # aliased freed storage would show up here as cross-cycle drift)

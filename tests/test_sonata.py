@@ -312,7 +312,7 @@ def test_compare_parquet_h5(spark, bundle, tmp_path):
     single flipped byte in the .h5 is caught with its column named."""
     from parquet_converters_spark.pipelines import compare_parquet_h5
     from parquet_converters_spark.sinks.hdf5_minimal import MiniH5Writer
-    from parquet_converters_spark.sinks.sonata import export_hdf5
+    from tests.hdf5_oracle import export_hdf5
 
     out, table = bundle
     h5 = str(tmp_path / "cmp.h5")
@@ -354,7 +354,7 @@ def test_compare_indices_h5(spark, bundle, tmp_path):
         compare_parquet_h5,
     )
     from parquet_converters_spark.sinks.hdf5_minimal import MiniH5Reader
-    from parquet_converters_spark.sinks.sonata import export_hdf5
+    from tests.hdf5_oracle import export_hdf5
 
     out, table = bundle
     h5 = str(tmp_path / "idxcmp.h5")
@@ -401,7 +401,7 @@ def test_cli_compare_indices_exit_codes(spark, bundle, tmp_path, monkeypatch):
     and 1 when an index dataset is corrupted."""
     from parquet_converters_spark import cli
     from parquet_converters_spark.sinks.hdf5_minimal import MiniH5Reader
-    from parquet_converters_spark.sinks.sonata import export_hdf5
+    from tests.hdf5_oracle import export_hdf5
 
     out, _ = bundle
     h5 = str(tmp_path / "clicmp.h5")
@@ -509,10 +509,10 @@ def test_multi_file_bundle_matches_oracles(spark, tmp_path):
     from parquet_converters_spark.sinks.sonata import (
         SonataBundleWriter,
         collect_kv_metadata,
-        export_hdf5,
         export_hdf5_parallel,
     )
     from parquet_converters_spark.sources.ordering import read_parquet_ordered
+    from tests.hdf5_oracle import export_hdf5
 
     rng = np.random.default_rng(23)
     n, n_src, n_tgt = 2000, 200, 300
@@ -612,7 +612,7 @@ def test_cli_parquet2sonata_hdf5_matches_single_writer(spark, tmp_path):
     import shutil
 
     from parquet_converters_spark.cli import main
-    from parquet_converters_spark.sinks.sonata import export_hdf5
+    from tests.hdf5_oracle import export_hdf5
 
     in_dir, table = _make_edges(
         tmp_path, n_files=3, n_nodes=1200, avg_connections=140, seed=11
@@ -665,7 +665,7 @@ def test_empty_edge_table_converts(spark, tmp_path):
     population sizes with (0, 0) rows, both range tables are empty, and
     the parallel .h5 equals the single writer's."""
     from parquet_converters_spark.pipelines import parquet_to_sonata
-    from parquet_converters_spark.sinks.sonata import export_hdf5
+    from tests.hdf5_oracle import export_hdf5
 
     t = pa.table(
         {

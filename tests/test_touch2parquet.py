@@ -260,9 +260,9 @@ def test_cli_touch2parquet_runs_one_job(spark, tmp_path, capsys):
     assert f"wrote 300 records to {out}" in capsys.readouterr().out
 
 
-def test_cli_dedup(spark, tmp_path, sf_dir):
-    """The dedup subcommand runs the near-dedup funnel end-to-end and
-    writes exactly the survivor set."""
+def test_cli_dedup(spark, tmp_path, sf_dir, capsys):
+    """The dedup subcommand runs the near-dedup funnel end-to-end, writes
+    exactly the survivor set and reports its size from the footers."""
     from parquet_converters_spark.cli import main
     from parquet_converters_spark.functions.dedup import near_dedup_survivors
 
@@ -273,6 +273,7 @@ def test_cli_dedup(spark, tmp_path, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     want = {r.doc_id for r in near_dedup_survivors(docs).select("doc_id").collect()}
     assert got == want and 0 < len(got) < docs.count()
+    assert f"dedup: kept {len(got)} of {docs.count()} rows" in capsys.readouterr().out
 
 
 def test_cli_prepare_corpus(spark, tmp_path, sf_dir):
@@ -355,28 +356,6 @@ def test_kv_stamping_distributed_multi_file(spark, tmp_path):
     assert spark.read.parquet(out).count() == 1000
     # no stray tmp files left behind by the task-side rename
     assert not _glob.glob(os.path.join(out, "*.tmp"))
-
-
-def test_cli_image_dedup(spark, tmp_path):
-    from parquet_converters_spark.cli import main
-    from parquet_converters_spark.functions.image_fingerprint import (
-        bmp_realizing_dhash,
-    )
-
-    src = str(tmp_path / "images")
-    a, b = 0x1111_2222_3333_4444, 0x7777_0000_5555_2222
-    rows = [
-        (1, bmp_realizing_dhash(a)),
-        (2, bmp_realizing_dhash(a ^ 1)),      # 1 bit from a -> dup of 1
-        (3, bmp_realizing_dhash(b)),
-        (4, bmp_realizing_dhash(b)),          # exact dup of 3
-    ]
-    spark.createDataFrame(rows, "media_id long, payload binary").write.parquet(src)
-    out = str(tmp_path / "kept")
-    rc = main(["image-dedup", src, out])
-    assert rc == 0
-    kept = {r.media_id for r in spark.read.parquet(out).collect()}
-    assert kept == {1, 3}
 
 
 def _tree_bytes(root):

@@ -580,63 +580,6 @@ def test_cli_warc2parquet_end_to_end(spark, tmp_path):
     assert {r["text"] for r in rows2} == {HTML_TEXT}
 
 
-def test_crawl_text_dedup_gate_streaming_exactly_once(spark, tmp_path):
-    """Two file streams over the same crawl archives union to a
-    duplicated stream; the gate's dropDuplicatesWithinWatermark on
-    content_hash restores exactly-once by TEXT identity (doc_ids and
-    URLs all distinct — the keys would never collapse; the extracted
-    text does)."""
-    import datetime
-
-    from parquet_converters_spark.sources.warc import (
-        crawl_text_dedup_gate,
-    )
-
-    base = datetime.datetime(2026, 1, 1)
-    rows = []
-    for i in range(30):
-        # 10 distinct pages, each re-crawled 3x under fresh ids/URLs
-        body = f"<p>page {i % 10} body</p>".encode()
-        arch = _rec(
-            b"response", _http(b"200 OK", b"text/html", body),
-            uri=f"https://ex.org/copy{i}".encode(),
-        )
-        rows.append(
-            (i, base + datetime.timedelta(minutes=i), bytearray(arch))
-        )
-    src = str(tmp_path / "crawl_stream")
-    spark.createDataFrame(
-        rows, "doc_id long, ts timestamp, payload binary"
-    ).repartition(2).write.parquet(src)
-
-    schema = spark.read.parquet(src).schema
-    stream = lambda: (  # noqa: E731
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    duplicated = stream().unionByName(stream())
-    q = (
-        crawl_text_dedup_gate(duplicated, watermark="1 day")
-        .writeStream.format("memory")
-        .queryName("crawl_dedup_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(180), "streaming query did not terminate"
-    got = spark.sql(
-        "select count(*) n, count(distinct content_hash) d "
-        "from crawl_dedup_stream"
-    ).collect()[0]
-    assert got["d"] == 10
-    assert got["n"] == 10  # no duplicate emissions
-
-    # batch symmetry: same gate, same answer
-    batch = spark.read.parquet(src)
-    assert crawl_text_dedup_gate(batch).count() == 10
-
-
 def test_warc_text_documents_carry_cols(spark):
     """carry_cols rides input columns onto every output record —
     including quarantine placeholder rows — without a join."""
