@@ -17,30 +17,34 @@ The scan path does each of the reference's steps once, over partitions
 that each hold one contiguous, sorted slice of the row order (the ordered
 scan's slices):
 
-1. **Local RLE** — :func:`_rle_batches` run-length encodes every index
-   key of one partition at once.  The SONATA bundle writer runs it inside
-   its table pass, ``run_length_ranges_scan`` and
-   ``build_adjacency_index`` in a ``mapInArrow`` of their own.  Only a
+1. **Local RLE** — :func:`_partition_runs` run-length encodes every index
+   key of one partition at once.  Its *interior* runs are final; only a
    partition's first and last run of each key can continue into a
-   neighbouring partition; those runs, tagged with the partition's run
-   count, are collected and chain-merged on the driver
-   (:func:`_runs_to_ranges`, the boundary fix-up).
-2. **Numbering** — :func:`build_sonata_indices`: the runs sorted on
-   ``(direction, node_id, range_start)``.  When they fit one partition
-   (``num_partitions`` gives 1, as at the default size), that partition
-   numbers every direction from 0 and owns all its node ids, so the plan
-   is known from the per-direction range counts the boundary fix-up
-   already has: no summaries, nothing persisted, and the runs are
-   merged into one partition and sorted inside the job that writes the
-   tables.  Otherwise one range exchange of the runs, persisted, and one
-   collect of per-partition summaries gives the driver prefix sum (the
-   Allgather).
+   neighbouring partition.  Those boundary runs and, per key, a summary
+   row with an exact histogram of the interior runs over node-id buckets
+   are the partition's *edge rows*, the only rows collected.  The SONATA
+   bundle writer runs it inside its table pass and writes each task's
+   interior runs to one Arrow file; ``build_adjacency_index`` and
+   ``run_length_ranges_scan`` run it in a ``mapInArrow`` of their own,
+   once for the collect and once more to emit the interior runs.
+2. **Numbering** — :func:`_slice_plan`: the driver chain-merges the
+   boundary runs (:func:`_merge_boundary`, the boundary fix-up), adds
+   them to the summed histograms and cuts the ``(direction, node_id)``
+   key space at bucket boundaries into k slices of about equal range
+   counts.  A node never straddles two slices, so each slice's plan is
+   its key interval and, per direction, the global id of its first range:
+   like the reference's static node partition and its counts sent ahead
+   of the payload (``index.cpp:99-109,229-234,272-280``), every offset is
+   known before any range moves, and the plan depends only on the data
+   and k.  No sample, no summary job, nothing persisted.
 3. **Tables in build order** — :func:`_index_batches`, one Arrow kernel
-   per numbered partition: ``range_to_edge_id`` numbers the partition's
-   ranges from its offset, and ``node_id_to_ranges`` emits the dense node
-   ids the partition owns, absent ones as ``(0, 0)``.  Both come out
-   already in key order, so the bundle writer writes all four tables in
-   one job without a join or another sort.
+   per slice, over the slice's ranges sorted on ``(_dir, node_id,
+   range_start)``: ``range_to_edge_id`` numbers them from the slice's
+   offset, and ``node_id_to_ranges`` emits the dense node ids the slice
+   owns, absent ones as ``(0, 0)``.  The bundle writer's one index job
+   (``spark.range(k).mapInArrow``) reads each slice's row span of every
+   runs file (:func:`_slice_runs`); the frame path moves the runs by a
+   hash exchange on the slice id.
 
 ``run_length_ranges`` numbered by ``_global_rank`` is the DataFrame-only
 oracle the tests compare against: a gaps-and-islands window partitioned
@@ -49,10 +53,12 @@ by node and a global rank.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+from bisect import bisect_right
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
+    BinaryType,
     DataType,
     IntegerType,
     LongType,
@@ -61,13 +67,20 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
+#: ``_edge`` of a summary row; boundary runs carry bit 1 (a partition's
+#: first run of its key) and bit 2 (its last)
+_SUMMARY_EDGE = 4
+_EMIT_CHUNK = 1 << 20
+#: at most ``2**_BUCKET_BITS`` node-id buckets per direction
+_BUCKET_BITS = 12
+#: the open ends of a node-id interval
+_LO, _HI = -(1 << 63), (1 << 63) - 1
+_RUN_COLUMNS = ("_dir", "node_id", "range_start", "range_end")
 
-def _local_runs_schema(node_type: DataType) -> StructType:
-    """The schema of local runs, with ``node_id`` of ``node_type``.
-    ``_edge``: bit 1 = the partition's first run of that key, bit 2 = its
-    last (the bundle writer's table pass adds 4 for its partition
-    summaries); ``_n``: the partition's run count of that key, on its
-    first run only."""
+
+def _edge_schema(node_type: DataType) -> StructType:
+    """The edge rows of :func:`_partition_runs`, ``node_id`` of
+    ``node_type``."""
     return StructType([
         StructField("_dir", IntegerType()),
         StructField("node_id", node_type),
@@ -75,14 +88,20 @@ def _local_runs_schema(node_type: DataType) -> StructType:
         StructField("range_end", LongType()),
         StructField("_edge", IntegerType()),
         StructField("_n", LongType()),
+        StructField("_pid", IntegerType()),
+        StructField("_hist", BinaryType()),
     ])
 
 
-_SUMMARY = StructType(
-    [StructField(c, IntegerType()) for c in ("_pid", "_dir")]
-    + [StructField(c, LongType()) for c in ("n", "first", "last", "lead")]
-)
-_EMIT_CHUNK = 1 << 20
+def runs_schema():
+    """The Arrow schema of interior runs, as the bundle writer's runs
+    files hold them."""
+    import pyarrow as pa
+
+    return pa.schema([
+        ("_dir", pa.int32()), ("node_id", pa.int64()),
+        ("range_start", pa.int64()), ("range_end", pa.int64()),
+    ])
 
 
 def _global_rank(df: DataFrame, sort_cols: list[str], out_col: str,
@@ -133,209 +152,250 @@ def run_length_ranges(df: DataFrame, key: str, row_col: str) -> DataFrame:
     )
 
 
-def _rle_batches(t, n_keys: int):
-    """G1 for one partition: ``t``'s first column is the row position
-    (sorted), the next ``n_keys`` the index keys.  Yields the maximal
-    runs of each key as batches of :func:`_local_runs_schema`: ``_dir``
-    indexes the keys, a run breaks where the key changes or the position
-    jumps."""
+def _shift(top: int) -> int:
+    """log2 of the bucket width for node ids up to ``top``: the narrowest
+    power of two that needs at most ``2**_BUCKET_BITS`` buckets over
+    ``[0, top]``.  Monotone in ``top``, so the widest any partition uses
+    is the one of the global maximum."""
+    return max(0, max(int(top), 0).bit_length() - _BUCKET_BITS)
+
+
+def _partition_runs(t, n_keys: int, pid: int):
+    """G1 for one partition: ``t`` (one chunk, at least one row) holds the
+    row position first, sorted, then the ``n_keys`` index keys.  A run
+    breaks where the key changes or the position jumps.
+
+    Returns ``(interior, edges)``.  ``interior`` is the table of the runs
+    that are neither the first nor the last of their key in the
+    partition (``_dir`` indexes the keys), in row order per key: they
+    are final.  ``edges`` is a batch of :func:`_edge_schema`: the first
+    and last run of each key (``_edge`` bit 1 and 2), which may continue
+    into a neighbouring partition, and per key a summary row (``_edge``
+    ``_SUMMARY_EDGE``): ``range_start`` and ``range_end`` the partition's
+    first and last+1 position, ``_n`` its row count, ``_pid`` the
+    partition, and for integer keys ``node_id`` the key's maximum and
+    ``_hist`` the interior runs' counts over node-id buckets of width
+    ``2**_shift(node_id)`` (bucket ``max(node, 0) >> shift``, int64
+    little-endian).  Without keys, one summary row with ``_dir`` -1."""
     import numpy as np
     import pyarrow as pa
 
-    if not t.num_rows:
-        return
     pos = t.column(0).to_numpy()
     pos_gap = pos[1:] != pos[:-1] + 1
+    interior, edges = [], []
+
+    def edge_rows(d, node, start, end, edge, n=None, hist=None):
+        k = len(start)
+        return {
+            "_dir": [d] * k, "node_id": node, "range_start": start,
+            "range_end": end, "_edge": edge, "_n": [n] * k,
+            "_pid": [pid] * k, "_hist": [hist] * k,
+        }
+
+    span = [int(pos[0])], [int(pos[-1]) + 1]
     for d in range(n_keys):
         nodes = t.column(d + 1).chunk(0)
+        integer = pa.types.is_integer(nodes.type)
         codes = (
-            nodes.dictionary_encode().indices
-            if pa.types.is_string(nodes.type)
-            or pa.types.is_large_string(nodes.type)
-            else nodes
+            nodes if integer else nodes.dictionary_encode().indices
         ).to_numpy(zero_copy_only=False)
         # run starts: node changes or position gaps
         brk = np.flatnonzero((codes[1:] != codes[:-1]) | pos_gap) + 1
         starts = np.concatenate(([0], brk))
         ends = np.concatenate((brk, [len(pos)]))
         n = len(starts)
-        edge = np.zeros(n, dtype="int32")
-        edge[0] |= 1
-        edge[-1] |= 2
-        count = np.zeros(n, dtype="int64")
-        count[0] = n
-        yield pa.RecordBatch.from_arrays(
+        outer = [0] if n == 1 else [0, n - 1]
+        edges.append(edge_rows(
+            d, nodes.take(pa.array(starts[outer])).to_pylist(),
+            pos[starts[outer]].tolist(), (pos[ends[outer] - 1] + 1).tolist(),
+            [3] if n == 1 else [1, 2],
+        ))
+        inner = starts[1:-1]
+        inner_nodes = nodes.take(pa.array(inner))
+        interior.append(pa.table(
             [
-                pa.array(np.full(n, d, dtype="int32")),
-                nodes.take(pa.array(starts)),
-                pa.array(pos[starts], type=pa.int64()),
-                pa.array(pos[ends - 1] + 1, type=pa.int64()),
-                pa.array(edge),
-                pa.array(count),
+                pa.array(np.full(len(inner), d, dtype="int32")),
+                inner_nodes,
+                pa.array(pos[inner], type=pa.int64()),
+                pa.array(pos[ends[1:-1] - 1] + 1, type=pa.int64()),
             ],
-            names=["_dir", "node_id", "range_start", "range_end",
-                   "_edge", "_n"],
-        )
+            names=list(_RUN_COLUMNS),
+        ))
+        top = hist = None
+        if integer:
+            top = int(codes.max())
+            s = _shift(top)
+            hist = np.bincount(
+                np.maximum(inner_nodes.to_numpy(), 0) >> s,
+                minlength=(max(top, 0) >> s) + 1,
+            ).astype("<i8").tobytes()
+        edges.append(edge_rows(d, [top], *span, [_SUMMARY_EDGE], len(pos),
+                               hist))
+    if not n_keys:
+        edges.append(edge_rows(-1, [None], *span, [_SUMMARY_EDGE], len(pos)))
+    schema = pa.schema([
+        ("_dir", pa.int32()),
+        ("node_id", t.schema.field(1).type if n_keys else pa.int64()),
+        ("range_start", pa.int64()), ("range_end", pa.int64()),
+        ("_edge", pa.int32()), ("_n", pa.int64()), ("_pid", pa.int32()),
+        ("_hist", pa.binary()),
+    ])
+    return (
+        pa.concat_tables(interior) if interior else None,
+        pa.RecordBatch.from_pydict(
+            {c: [v for e in edges for v in e[c]] for c in schema.names},
+            schema=schema,
+        ),
+    )
 
 
-def _runs_to_ranges(runs: DataFrame, edge_rows):
-    """The boundary half of G4: chain-merge the collected first/last runs
-    of every partition (``edge_rows``, rows of ``runs`` with ``_edge`` in
-    1..3) on the driver and union them with ``runs``' interior runs.
-    Returns ``(ranges, n_ranges)``: the maximal runs ``(_dir, node_id,
-    range_start, range_end)`` and their count per direction,
-    ``{_dir: n}`` (directions without runs absent)."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    n_ranges: dict[int, int] = {}
+def _merge_boundary(edge_rows) -> list[tuple]:
+    """The boundary half of G4: chain-merge the partitions' first and
+    last runs (the edge rows with ``_edge`` 1..3) on the driver.  Returns
+    the maximal runs ``(_dir, node_id, range_start, range_end, _pid)``
+    sorted on ``(_dir, range_start)``, ``_pid`` the partition of their
+    first piece."""
     merged: list[tuple] = []
-    for r in sorted(edge_rows, key=lambda r: (r["_dir"], r["range_start"])):
-        d = r["_dir"]
-        n_ranges[d] = n_ranges.get(d, 0) + r["_n"]
+    runs = (r for r in edge_rows if r["_edge"] != _SUMMARY_EDGE)
+    for r in sorted(runs, key=lambda r: (r["_dir"], r["range_start"])):
         prev = merged[-1] if merged else None
         if (
             prev is not None
-            and prev[0] == d
-            and prev[1] == r["node_id"]
+            and prev[:2] == (r["_dir"], r["node_id"])
             and prev[3] == r["range_start"]
         ):
-            merged[-1] = prev[:3] + (r["range_end"],)
-            n_ranges[d] -= 1
+            merged[-1] = prev[:3] + (r["range_end"], prev[4])
         else:
-            merged.append(
-                (r["_dir"], r["node_id"], r["range_start"], r["range_end"])
-            )
-    cols = ["_dir", "node_id", "range_start", "range_end"]
-    interior = runs.filter(F.col("_edge") == 0).select(*cols)
-    # an Arrow table becomes a local relation: no Python worker reads it
-    boundary = pa.Table.from_pylist(
-        [dict(zip(cols, m)) for m in merged],
-        schema=to_arrow_schema(interior.schema),
-    )
-    return (
-        interior.unionByName(runs.sparkSession.createDataFrame(boundary)),
-        n_ranges,
-    )
+            merged.append((r["_dir"], r["node_id"], r["range_start"],
+                           r["range_end"], r["_pid"]))
+    return merged
 
 
-def _local_runs(ordered: DataFrame, keys: list[str], row_col: str):
-    """G1 + G4 for every key in one pass over ``ordered``, which must
-    hold contiguous, sorted ``row_col`` slices per partition, and the
-    same ones each time it runs (persisted, or a plain scan): the
-    boundary runs collected here and the interior runs the returned
-    frame recomputes must come from one partitioning.  Returns
-    ``(ranges, n_ranges)`` as :func:`_runs_to_ranges`.  One Spark job:
-    the collect of the boundary runs."""
-    import pyarrow as pa
+class SlicePlan(NamedTuple):
+    """The numbering of the ranges of ``len(node_counts)`` directions in
+    ``len(parts)`` slices of the ``(_dir, node_id)`` key space.
 
-    node_t = ordered.schema[keys[0]].dataType
+    - ``points``: the k + 1 cut points; slice *s* holds the keys in
+      ``[points[s], points[s + 1])``.
+    - ``parts``: per slice, ``(d, lo, hi, offset)`` for each direction it
+      covers: its node ids ``[lo, hi)`` and the global id of its first
+      range of direction ``d``.
+    - ``boundary``: per slice, its merged boundary runs ``(_dir,
+      node_id, range_start, range_end)``.
+    - ``node_counts``: the dense node-table size per direction.
+    """
 
-    def rle(batches):
-        batches = [b for b in batches if b.num_rows]
-        if batches:
-            t = pa.Table.from_batches(batches).combine_chunks()
-            yield from _rle_batches(t, len(keys))
-
-    runs = ordered.select(row_col, *keys).mapInArrow(
-        rle, schema=_local_runs_schema(node_t)
-    )
-    return _runs_to_ranges(runs, runs.filter(F.col("_edge") > 0).collect())
+    points: list
+    parts: list
+    boundary: list
+    node_counts: list
 
 
-def run_length_ranges_scan(
-    df: DataFrame,
-    key: str,
-    row_col: str,
-    assume_scan_order: bool = False,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """G1+G4 the reference's way: *local* run-length encoding per
-    partition followed by a boundary fix-up — no full-data shuffle.
-
-    The window form (:func:`run_length_ranges`) shuffles every row by
-    ``key``; the reference instead RLE-compresses each rank's contiguous
-    slice locally and exchanges only the ranges (``index.cpp:114-137``
-    local pass, ``:142-153`` post-shuffle re-merge).  Partitions must
-    hold contiguous ``row_col`` slices: free when the input comes
-    straight off an ordered scan (``assume_scan_order=True``), else one
-    ``repartitionByRange``, whose output is persisted (its bounds come
-    from sampling) and backs the returned frame."""
-    src = df.select(F.col(row_col), F.col(key))
-    if not assume_scan_order:
-        parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-        src = src.repartitionByRange(parts, row_col)
-    src = src.sortWithinPartitions(row_col)
-    if not assume_scan_order:
-        src = src.persist()
-    ranges, _ = _local_runs(src, [key], row_col)
-    return ranges.drop("_dir")
-
-
-def _partition_plans(summaries, node_counts):
-    """Driver prefix sum over the numbering exchange's partitions.
-
-    For each direction ``d`` and partition ``pid`` holding its ranges:
-    ``(offset, emit_lo, emit_hi, tail_hi)`` — the global id of the
-    partition's first range, the node ids ``[emit_lo, emit_hi)`` whose
-    ``node_id_to_ranges`` rows the partition writes (a node whose ranges
-    straddle partitions belongs to the first), and the ``range_hi`` of
-    its last node, which later partitions may continue."""
-    plans: dict[tuple[int, int], tuple[int, int, int, int]] = {}
-    for d, node_count in enumerate(node_counts):
-        parts = sorted(
-            (s for s in summaries if s["_dir"] == d), key=lambda s: s["_pid"]
-        )
-        offsets, off = [], 0
-        for s in parts:
-            offsets.append(off)
-            off += s["n"]
-        # hi of partition i's last node: the id of the first range of a
-        # later node, found in the first later partition not made only of
-        # that node (scanned backwards, so each step is O(1))
-        tail_hi = [off] * len(parts)
-        for i in range(len(parts) - 2, -1, -1):
-            last, nxt = parts[i]["last"], parts[i + 1]
-            if nxt["last"] == last:
-                tail_hi[i] = tail_hi[i + 1]
-            else:
-                tail_hi[i] = offsets[i + 1] + (
-                    nxt["lead"] if nxt["first"] == last else 0
-                )
-        for i, s in enumerate(parts):
-            lo = 0 if i == 0 else parts[i - 1]["last"] + 1
-            hi = node_count if i == len(parts) - 1 else s["last"] + 1
-            plans[(d, s["_pid"])] = (
-                offsets[i], max(lo, 0), min(hi, node_count), tail_hi[i]
-            )
-    return plans
-
-
-def _summarize(batches):
-    """Per exchanged partition and direction: range count, first and
-    last node, and how many leading ranges belong to the first node."""
+def _slice_plan(edge_rows, node_counts, num_partitions) -> SlicePlan:
+    """G2-G3 on the driver, from the collected edge rows of
+    :func:`_partition_runs` (integer keys): the exact range count of
+    every node-id bucket (the summed histograms, coarsened to the widest
+    bucket, plus the merged boundary runs), then
+    ``k = num_partitions(total ranges)`` slices cut at the first bucket
+    boundaries where the running count reaches ``total * s / k``.
+    Driver memory is O(buckets + partitions)."""
     import numpy as np
+
+    n_dirs = len(node_counts)
+    merged = _merge_boundary(edge_rows)
+    summaries = [r for r in edge_rows
+                 if r["_edge"] == _SUMMARY_EDGE and r["_dir"] >= 0]
+    shifts, hists = [], []
+    for d in range(n_dirs):
+        mine = [r for r in summaries if r["_dir"] == d]
+        top = max((r["node_id"] for r in mine), default=0)
+        s = _shift(top)
+        hist = np.zeros((max(top, 0) >> s) + 1 if mine else 0, "int64")
+        for r in mine:
+            part = np.frombuffer(r["_hist"], "<i8")
+            np.add.at(hist, np.arange(len(part)) >> (s - _shift(r["node_id"])),
+                      part)
+        shifts.append(s)
+        hists.append(hist)
+    for d, node, *_ in merged:
+        hists[d][max(node, 0) >> shifts[d]] += 1
+
+    counts = np.concatenate(hists)
+    running = np.cumsum(counts)
+    total = int(running[-1]) if len(running) else 0
+    k = max(1, num_partitions(total))
+    first = np.cumsum([0] + [len(h) for h in hists])
+
+    def point(c):
+        """Bucket ``c`` of the concatenated directions as a key."""
+        if c >= len(counts):
+            return (n_dirs, _LO)
+        d = int(np.searchsorted(first, c, "right")) - 1
+        b = int(c - first[d])
+        return (d, _LO if b == 0 else b << shifts[d])
+
+    points = [(0, _LO)] + [
+        point(int(np.searchsorted(running, -(-total * s // k))) + 1)
+        for s in range(1, k)
+    ] + [(n_dirs, _LO)]
+    before = [np.concatenate(([0], np.cumsum(h))) for h in hists]
+    parts = []
+    for (da, na), (db, nb) in zip(points, points[1:]):
+        mine = []
+        for d in range(da, min(db, n_dirs - 1) + 1):
+            lo = na if d == da else _LO
+            hi = nb if d == db else _HI
+            if lo < hi:
+                b = 0 if lo == _LO else lo >> shifts[d]
+                mine.append((d, lo, hi, int(before[d][b])))
+        parts.append(mine)
+    boundary = [[] for _ in range(k)]
+    for d, node, start, end, _ in merged:
+        boundary[bisect_right(points, (d, node)) - 1].append(
+            (d, node, start, end)
+        )
+    return SlicePlan(points, parts, boundary, list(node_counts))
+
+
+def _key_pos(dirs, nodes, key) -> int:
+    """The first row of runs sorted on ``(_dir, node_id)`` (``dirs`` and
+    ``nodes``) at or past ``key``."""
+    import numpy as np
+
+    d, node = key
+    i, j = np.searchsorted(dirs, [d, d + 1])
+    return int(i + np.searchsorted(nodes[i:j], node))
+
+
+def _sorted_runs(pieces):
+    """``pieces`` (tables of :func:`runs_schema`) as one table sorted on
+    ``(_dir, node_id, range_start)``, in one chunk."""
     import pyarrow as pa
 
-    batches = [b for b in batches if b.num_rows]
-    if not batches:
-        return
-    t = pa.Table.from_batches(batches).combine_chunks()
-    pid = t.column("_pid")[0].as_py()
-    dirs = t.column("_dir").to_numpy()
-    nodes = t.column("node_id").to_numpy()
-    rows = []
-    for d in np.unique(dirs):
-        nd = nodes[dirs == d]
-        rows.append((pid, int(d), len(nd), int(nd[0]), int(nd[-1]),
-                     int(np.count_nonzero(nd == nd[0]))))
-    yield pa.RecordBatch.from_pylist(
-        [dict(zip(("_pid", "_dir", "n", "first", "last", "lead"), r))
-         for r in rows],
-        schema=pa.schema([("_pid", pa.int32()), ("_dir", pa.int32()),
-                          ("n", pa.int64()), ("first", pa.int64()),
-                          ("last", pa.int64()), ("lead", pa.int64())]),
-    )
+    return pa.concat_tables(pieces).sort_by(
+        [(c, "ascending") for c in _RUN_COLUMNS[:3]]
+    ).combine_chunks()
+
+
+def _slice_runs(files: list[str], plan: SlicePlan, s: int):
+    """The ranges of slice ``s``, sorted on ``(_dir, node_id,
+    range_start)``: its merged boundary runs and its row span of every
+    runs file (one record batch sorted on ``(_dir, node_id,
+    range_start)``), found by binary search on the memory-mapped key
+    columns, so a task reads only its own rows."""
+    import pyarrow as pa
+
+    pieces = [pa.Table.from_pylist(
+        [dict(zip(_RUN_COLUMNS, r)) for r in plan.boundary[s]],
+        schema=runs_schema(),
+    )]
+    for f in files:
+        t = pa.ipc.open_file(pa.memory_map(f)).read_all()
+        dirs = t.column("_dir").to_numpy()
+        nodes = t.column("node_id").to_numpy()
+        a, b = (_key_pos(dirs, nodes, plan.points[i]) for i in (s, s + 1))
+        pieces.append(t.slice(a, b - a))
+    return _sorted_runs(pieces)
 
 
 #: the columns of the two index tables, key first; all non-null longs
@@ -354,89 +414,51 @@ def index_schema(name: str):
     )
 
 
-def _index_batches(t, plans):
-    """Both index tables of one numbered partition ``t`` (``_pid``,
-    ``_dir``, ``node_id``, ``range_start``, ``range_end``, sorted on
-    ``(_dir, node_id, range_start)``): yields ``(d, table name,
-    RecordBatch)``.  ``range_to_edge_id`` numbers the partition's ranges
-    of direction ``d`` from the prefix-sum offset in ``plans``;
-    ``node_id_to_ranges`` covers the dense node ids the partition owns,
-    ``(0, 0)`` for nodes without ranges."""
+def _index_batches(t, parts, node_counts):
+    """Both index tables of one slice: ``t`` holds its ranges
+    (``_dir``, ``node_id``, ``range_start``, ``range_end``, one chunk)
+    sorted on ``(_dir, node_id, range_start)``, ``parts`` its plan
+    (``SlicePlan.parts``).  Yields ``(d, table name, RecordBatch)``:
+    ``range_to_edge_id`` numbers the slice's ranges of direction ``d``
+    from its offset; ``node_id_to_ranges`` covers the slice's node ids
+    in ``[0, node_counts[d])``, ``(0, 0)`` for nodes without ranges."""
     import numpy as np
     import pyarrow as pa
 
-    if not t.num_rows:
-        return
-    pid = t.column("_pid")[0].as_py()
     dirs = t.column("_dir").to_numpy()
-    for d in np.unique(dirs):
+    for d, lo, hi, off in parts:
         lo_row, hi_row = np.searchsorted(dirs, [d, d + 1])
         seg = t.slice(lo_row, hi_row - lo_row)
-        off, lo, hi, tail_hi = plans[(int(d), pid)]
-        yield int(d), "range_to_edge_id", pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.arange(off, off + seg.num_rows, dtype="int64")),
-                seg.column("range_start").combine_chunks(),
-                seg.column("range_end").combine_chunks(),
-            ],
-            schema=index_schema("range_to_edge_id"),
-        )
-        nodes = seg.column("node_id").to_numpy()
+        if seg.num_rows:
+            yield d, "range_to_edge_id", pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.arange(off, off + seg.num_rows, dtype="int64")),
+                    seg.column("range_start").combine_chunks(),
+                    seg.column("range_end").combine_chunks(),
+                ],
+                schema=index_schema("range_to_edge_id"),
+            )
         # nodes are sorted: first index and run length of each
         uniq, first, count = np.unique(
-            nodes, return_index=True, return_counts=True
+            seg.column("node_id").to_numpy(), return_index=True,
+            return_counts=True,
         )
         range_lo = off + first
         range_hi = range_lo + count
-        range_hi[-1] = tail_hi
-        for a in range(lo, hi, _EMIT_CHUNK):
-            ids = np.arange(a, min(a + _EMIT_CHUNK, hi), dtype="int64")
-            at = np.minimum(np.searchsorted(uniq, ids), len(uniq) - 1)
-            has = uniq[at] == ids
-            yield int(d), "node_id_to_ranges", pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids),
-                    pa.array(np.where(has, range_lo[at], 0)),
-                    pa.array(np.where(has, range_hi[at], 0)),
-                ],
+        top = min(hi, node_counts[d])
+        for a in range(max(lo, 0), top, _EMIT_CHUNK):
+            ids = np.arange(a, min(a + _EMIT_CHUNK, top), dtype="int64")
+            if len(uniq):
+                at = np.minimum(np.searchsorted(uniq, ids), len(uniq) - 1)
+                has = uniq[at] == ids
+                lo_col = np.where(has, range_lo[at], 0)
+                hi_col = np.where(has, range_hi[at], 0)
+            else:
+                lo_col = hi_col = np.zeros(len(ids), dtype="int64")
+            yield d, "node_id_to_ranges", pa.RecordBatch.from_arrays(
+                [pa.array(ids), pa.array(lo_col), pa.array(hi_col)],
                 schema=index_schema("node_id_to_ranges"),
             )
-
-
-def _index_frame(numbered: DataFrame, plans, d: int, name: str) -> DataFrame:
-    """One index table of direction ``d`` as a frame over the numbered
-    exchange, built by :func:`_index_batches`."""
-    import pyarrow as pa
-
-    def emit(batches):
-        batches = [b for b in batches if b.num_rows]
-        if batches:
-            t = pa.Table.from_batches(batches).combine_chunks()
-            for dd, nn, batch in _index_batches(t, plans):
-                if (dd, nn) == (d, name):
-                    yield batch
-
-    return numbered.mapInArrow(
-        emit,
-        StructType(
-            [StructField(c, LongType(), False) for c in INDEX_COLUMNS[name]]
-        ),
-    )
-
-
-def empty_node_batches(node_count: int):
-    """``node_id_to_ranges`` batches of a direction without edges: every
-    node in ``[0, node_count)`` as ``(0, 0)``."""
-    import numpy as np
-    import pyarrow as pa
-
-    for a in range(0, node_count, _EMIT_CHUNK):
-        ids = np.arange(a, min(a + _EMIT_CHUNK, node_count), dtype="int64")
-        zeros = pa.array(np.zeros(len(ids), dtype="int64"))
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(ids), zeros, zeros],
-            schema=index_schema("node_id_to_ranges"),
-        )
 
 
 def infer_node_count(df: DataFrame, key: str) -> int:
@@ -463,6 +485,94 @@ def infer_node_count(df: DataFrame, key: str) -> int:
     return max((r["m"] + 1 for r in rows if r["m"] is not None), default=0)
 
 
+def _scan_runs(ordered: DataFrame, key: str, row_col: str, extra):
+    """G1 + G4 for ``key`` over ``ordered``, which must hold contiguous,
+    sorted ``row_col`` slices per partition, and the same ones each time
+    it runs (persisted, or a plain scan).  One Spark job collects the
+    edge rows; ``extra(edge_rows)`` returns ``(schema, tag, rows)``, and
+    the returned frame, a second run of the kernel, holds every
+    partition's interior runs mapped by ``tag(pid, interior)`` (an Arrow
+    table of ``schema``) and, from partition 0, ``rows`` (a table of
+    ``schema``).  Returns ``(edge rows, frame)``."""
+    import pyarrow as pa
+
+    def runs(batches):
+        from pyspark import TaskContext
+
+        batches = [b for b in batches if b.num_rows]
+        if batches:
+            t = pa.Table.from_batches(batches).combine_chunks()
+            yield t, TaskContext.get().partitionId()
+
+    def edges(batches):
+        for t, pid in runs(batches):
+            yield _partition_runs(t, 1, pid)[1]
+
+    src = ordered.select(row_col, key)
+    rows = src.mapInArrow(
+        edges, _edge_schema(ordered.schema[key].dataType)
+    ).collect()
+    schema, tag, injected = extra(rows)
+
+    def emit(batches):
+        from pyspark import TaskContext
+
+        if TaskContext.get().partitionId() == 0 and injected.num_rows:
+            yield from injected.to_batches()
+        for t, pid in runs(batches):
+            yield from tag(pid, _partition_runs(t, 1, pid)[0]).to_batches()
+
+    return rows, src.mapInArrow(emit, schema)
+
+
+def run_length_ranges_scan(
+    df: DataFrame,
+    key: str,
+    row_col: str,
+    assume_scan_order: bool = False,
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """G1+G4 the reference's way: *local* run-length encoding per
+    partition followed by a boundary fix-up — no full-data shuffle.
+
+    The window form (:func:`run_length_ranges`) shuffles every row by
+    ``key``; the reference instead RLE-compresses each rank's contiguous
+    slice locally and exchanges only the ranges (``index.cpp:114-137``
+    local pass, ``:142-153`` post-shuffle re-merge).  Partitions must
+    hold contiguous ``row_col`` slices: free when the input comes
+    straight off an ordered scan (``assume_scan_order=True``), else one
+    ``repartitionByRange``, whose output is persisted (its bounds come
+    from sampling) and backs the returned frame.  One job collects the
+    boundary runs; the frame emits every partition's interior runs and,
+    from partition 0, the merged boundary runs."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    src = df.select(F.col(row_col), F.col(key))
+    if not assume_scan_order:
+        parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+        src = src.repartitionByRange(parts, row_col)
+    src = src.sortWithinPartitions(row_col)
+    if not assume_scan_order:
+        src = src.persist()
+    node_t = src.schema[key].dataType
+    schema = StructType([
+        StructField("node_id", node_t),
+        StructField("range_start", LongType()),
+        StructField("range_end", LongType()),
+    ])
+    arrow = pa.schema([("node_id", to_arrow_type(node_t)),
+                       ("range_start", pa.int64()), ("range_end", pa.int64())])
+
+    def extra(rows):
+        merged = _merge_boundary(rows)
+        return schema, lambda pid, t: t.drop_columns(["_dir"]), pa.table(
+            [[m[i] for m in merged] for i in (1, 2, 3)], schema=arrow
+        )
+
+    return _scan_runs(src, key, row_col, extra)[1]
+
+
 def build_adjacency_index(
     df: DataFrame,
     key: str,
@@ -479,11 +589,21 @@ def build_adjacency_index(
       node-major, start-ascending.
 
     Runs the module's scan path over ``df`` range-partitioned on
-    ``row_col``.  The frames read two persisted intermediates, the
-    row-ordered input and the numbering exchange, which stay pinned while
-    the frames are in use.  The gaps-and-islands form (``run_length_ranges`` numbered by
-    ``_global_rank``) is the tests' oracle for it.
+    ``row_col``: one job collects the edge rows, from which the driver
+    plans ``defaultParallelism`` slices (:func:`_slice_plan`).  Each
+    frame runs the kernel again, tags every interior run with its slice
+    (partition 0 adds the merged boundary runs and one marker row per
+    slice, so a slice without ranges still emits its node ids), moves the
+    runs by a hash exchange on the slice id, several slices per
+    partition, and builds each slice's tables with
+    :func:`_index_batches`.  The row-ordered input is persisted and stays
+    pinned while the frames are in use.  The gaps-and-islands form
+    (``run_length_ranges`` numbered by ``_global_rank``) is the tests'
+    oracle for it.
     """
+    import numpy as np
+    import pyarrow as pa
+
     spark = df.sparkSession
     if node_count is None:
         node_count = infer_node_count(df, key)
@@ -494,18 +614,63 @@ def build_adjacency_index(
         .sortWithinPartitions(row_col)
         .persist()
     )
-    ranges, n_ranges = _local_runs(ordered, [key], row_col)
-    numbered, plans = _number_ranges(ranges, n_ranges, [node_count],
-                                     lambda n: par)
-    if not plans:
-        node_ranges = spark.range(node_count).select(
-            F.col("id").alias("node_id"),
-            F.lit(0).cast("long").alias("range_lo"),
-            F.lit(0).cast("long").alias("range_hi"),
+    tagged = StructType(
+        [StructField("_slice", IntegerType())]
+        + [StructField(c, IntegerType() if c == "_dir" else LongType())
+           for c in _RUN_COLUMNS]
+    )
+    plan = None
+
+    def extra(rows):
+        nonlocal plan
+        plan = _slice_plan(rows, [node_count], lambda n: par)
+        k = len(plan.parts)
+        cuts = np.array([p[1] for p in plan.points[1:-1] if p[0] == 0],
+                        dtype="int64")
+
+        def tag(pid, t):
+            slices = np.searchsorted(cuts, t.column("node_id").to_numpy(),
+                                     "right").astype("int32")
+            return t.add_column(0, "_slice", pa.array(slices))
+
+        # marker rows (_dir -1) make every slice reach the index kernel
+        markers = [(s, -1, 0, 0, 0) for s in range(k)]
+        runs = [(s, *r) for s in range(k) for r in plan.boundary[s]]
+        return tagged, tag, pa.Table.from_pylist(
+            [dict(zip(tagged.names, r)) for r in markers + runs],
+            schema=pa.schema([("_slice", pa.int32()), *runs_schema()]),
         )
-    else:
-        node_ranges = _index_frame(numbered, plans, 0, "node_id_to_ranges")
-    return node_ranges, _index_frame(numbered, plans, 0, "range_to_edge_id")
+
+    _, frame = _scan_runs(ordered, key, row_col, extra)
+    exchanged = frame.repartition(len(plan.parts), "_slice")
+
+    def table(name):
+        def emit(batches):
+            batches = [b for b in batches if b.num_rows]
+            if not batches:
+                return
+            t = pa.Table.from_batches(batches).sort_by(
+                [(c, "ascending") for c in ("_slice", *_RUN_COLUMNS[:3])]
+            ).combine_chunks()
+            slices = t.column("_slice").to_numpy()
+            for s in np.unique(slices):
+                a, b = np.searchsorted(slices, [s, s + 1])
+                # the slice's marker row sorts first
+                seg = t.slice(a + 1, b - a - 1).drop_columns(["_slice"])
+                for _, nn, batch in _index_batches(
+                    seg, plan.parts[s], plan.node_counts
+                ):
+                    if nn == name:
+                        yield batch
+
+        return exchanged.mapInArrow(
+            emit,
+            StructType(
+                [StructField(c, LongType(), False) for c in INDEX_COLUMNS[name]]
+            ),
+        )
+
+    return table("node_id_to_ranges"), table("range_to_edge_id")
 
 
 SONATA_KEYS = {
@@ -514,68 +679,16 @@ SONATA_KEYS = {
 }
 
 
-def _number_ranges(ranges: DataFrame, n_ranges: dict[int, int],
-                   node_counts, num_partitions):
-    """G2-G3 numbering of ``ranges`` (``_dir`` indexing ``node_counts``,
-    ``n_ranges`` their count per direction) into
-    ``num_partitions(total)`` partitions sorted on ``(_dir, node_id,
-    range_start)``.  One partition numbers each direction from 0 and
-    emits all its node ids, so its plan needs no summary and nothing
-    runs here: the ranges are merged into one partition and sorted by
-    the job that reads them.  More partitions take one range exchange,
-    persisted (its bounds come from sampling, and the summaries and the
-    tables must see the same exchange), and the driver prefix sum over
-    its partition summaries.  Returns ``(numbered, plans)``; the caller
-    unpersists ``numbered``."""
-    sort = ["_dir", "node_id", "range_start"]
-    k = num_partitions(sum(n_ranges.values()))
-    if k == 1:
-        numbered = (
-            ranges.coalesce(1)
-            .sortWithinPartitions(*sort)
-            .withColumn("_pid", F.lit(0))
-        )
-        return numbered, {
-            (d, 0): (0, 0, node_counts[d], n) for d, n in n_ranges.items()
-        }
-    numbered = (
-        ranges.repartitionByRange(k, *sort)
-        .sortWithinPartitions(*sort)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    try:
-        plans = _partition_plans(
-            numbered.mapInArrow(_summarize, _SUMMARY).collect(), node_counts
-        )
-    except BaseException:
-        numbered.unpersist()
-        raise
-    return numbered, plans
-
-
-@contextmanager
-def build_sonata_indices(
-    ranges: DataFrame,
-    n_ranges: dict[int, int],
-    node_counts: dict[str, int],
-    num_partitions,
-):
+def build_sonata_indices(edge_rows, node_counts: dict[str, int],
+                         num_partitions) -> SlicePlan:
     """G6: the numbering of both index directions, as written under
     ``indices/{source_to_target,target_to_source}``
-    (``index.cpp:24-31,309-324``).  ``ranges`` are the maximal runs of
-    both SONATA keys (``_dir`` 0 and 1, in ``SONATA_KEYS`` order) and
-    ``n_ranges`` their counts per direction, as :func:`_runs_to_ranges`
-    returns them; ``num_partitions(total ranges)`` sizes the numbering.
-
-    Yields ``(numbered, plans)``: the numbered ranges and their
-    partition plans, from which :func:`_index_batches` builds every
-    partition's tables; a persisted exchange is released on exit."""
-    numbered, plans = _number_ranges(
-        ranges, n_ranges, [node_counts[d] for d in SONATA_KEYS],
-        num_partitions,
+    (``index.cpp:24-31,309-324``).  ``edge_rows`` are the collected edge
+    rows of :func:`_partition_runs` over both SONATA keys (``_dir`` 0 and
+    1, in ``SONATA_KEYS`` order), ``node_counts`` the node-table size per
+    direction and ``num_partitions(total ranges)`` the slice count.
+    Returns the :class:`SlicePlan`, from which :func:`_slice_runs` and
+    :func:`_index_batches` build every slice's tables."""
+    return _slice_plan(
+        edge_rows, [node_counts[d] for d in SONATA_KEYS], num_partitions
     )
-    try:
-        yield numbered, plans
-    finally:
-        numbered.unpersist()

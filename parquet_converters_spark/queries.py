@@ -35,10 +35,6 @@ from parquet_converters_spark.functions.dedup import (
     simhash,
     simhash_neardup_pairs,
 )
-from parquet_converters_spark.functions.similarity import (
-    cosine_topk,
-    lsh_bucket_ann,
-)
 from parquet_converters_spark.functions.text import (
     doc_fingerprint,
     quality_score,
@@ -49,7 +45,6 @@ from parquet_converters_spark.operators.indexing import (
     run_length_ranges,
     run_length_ranges_scan,
 )
-from parquet_converters_spark.operators.range_join import bucketed_range_join
 
 
 def _ensure_session_confs(spark: SparkSession) -> None:
@@ -486,6 +481,8 @@ ORDER BY id_a, id_b
 # ===========================================================================
 
 def sim_cosine_topk(spark, sf_dir, emb=None):
+    from parquet_converters_spark.functions.similarity import cosine_topk
+
     if emb is None:
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 5)
@@ -493,6 +490,8 @@ def sim_cosine_topk(spark, sf_dir, emb=None):
 
 
 def sim_lsh_ann(spark, sf_dir, emb=None):
+    from parquet_converters_spark.functions.similarity import lsh_bucket_ann
+
     if emb is None:
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 5)
@@ -1599,6 +1598,10 @@ def range_join_error_views(spark, sf_dir):
     inside it (operators/range_join.py bucketed_range_join — intervals
     exploded onto covering buckets, shuffled equi-join, residual
     containment filter)."""
+    from parquet_converters_spark.operators.range_join import (
+        bucketed_range_join,
+    )
+
     ev = _events(spark, sf_dir)
     views = ev.filter(F.col("event_type") == "view").select(
         "user_id",

@@ -41,12 +41,15 @@ overlapping (frames that are not go through
 no exchange of the edge table; given the ordered scan's plan instead of
 a frame, each table-pass task reads its own slice.  Like the reference's
 ranks (``index.cpp:114-137``), each task of one table pass writes its
-partition's table file with ``pq.ParquetWriter`` and run-length encodes
-both index keys; the pass's collect of boundary runs and partition
-summaries is its only job.  After the numbering (an exchange only when
-the ranges need several partitions), one job writes all four index
-tables.  Files are snappy, dictionary-encoded
-only where parquet-mr would keep the dictionary.  Everything is staged
+partition's table file with ``pq.ParquetWriter``, run-length encodes
+both index keys and writes its interior runs to a runs file in the
+staging directory; the pass's collect of boundary runs, partition
+summaries and run histograms is its only job.  The driver plans the
+node-id slices and their range offsets from them, and one job
+(``spark.range(k).mapInArrow``, a task per slice reading its rows of
+every runs file) writes all four index tables: no exchange, nothing
+persisted, and the same files at every run.  Files are snappy,
+dictionary-encoded only where parquet-mr would keep the dictionary.  Everything is staged
 in a sibling ``.<population>.staging-<uuid>`` directory and renamed
 into place after ``attributes.json``.
 
@@ -83,15 +86,17 @@ from pyspark.sql.types import (
 
 from parquet_converters_spark import __version__
 from parquet_converters_spark.operators.indexing import (
+    _SUMMARY_EDGE,
     INDEX_COLUMNS,
     SONATA_KEYS,
+    _edge_schema,
     _index_batches,
-    _local_runs_schema,
-    _rle_batches,
-    _runs_to_ranges,
+    _partition_runs,
+    _slice_runs,
+    _sorted_runs,
     build_sonata_indices,
-    empty_node_batches,
     index_schema,
+    runs_schema,
 )
 from parquet_converters_spark.sinks.parquet_sink import kv_arrow_schema, publish
 from parquet_converters_spark.sources.ordering import (
@@ -134,7 +139,6 @@ def _encode_str_values(values, column: str) -> list:
     return out
 
 _ROW_GROUP_ROWS = 1 << 20
-_SUMMARY_EDGE = 4  # ``_edge`` of the table pass's per-partition summary rows
 _ORDER_ERROR = "bundle table partitions are not ordered on"
 
 
@@ -152,16 +156,29 @@ def _dictionary_columns(table) -> list[str]:
         rows = len(col) - col.null_count
         if not rows or pa.types.is_boolean(col.type):
             continue
-        width = (
-            col.type.bit_width / 8
-            if pa.types.is_integer(col.type) or pa.types.is_floating(col.type)
-            else col.nbytes / rows
-        )
-        distinct = pc.count_distinct(col).as_py()
+        if pa.types.is_integer(col.type) or pa.types.is_floating(col.type):
+            width = col.type.bit_width / 8
+            distinct = _distinct_bits(col)
+        else:
+            width = col.nbytes / rows
+            distinct = pc.count_distinct(col).as_py()
         bits = (distinct - 1).bit_length()
         if distinct * width + rows * bits / 8 < rows * width:
             out.append(name)
     return out
+
+
+def _distinct_bits(col) -> int:
+    """The number of distinct bit patterns among the non-null values of
+    the numeric (chunked) array ``col``: what ``pc.count_distinct``
+    counts (``0.0`` and ``-0.0`` are two values, and so are NaNs with
+    different payloads), from one ``np.unique`` over the values viewed
+    as unsigned integers of their width."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    values = pc.drop_null(col).to_numpy()
+    return len(np.unique(values.view(f"u{values.dtype.itemsize}")))
 
 
 def _part_name(job: str, pid: int) -> str:
@@ -217,20 +234,42 @@ def _arrow_schema(spark, schema: StructType):
     )
 
 
+def _runs_file(runs_dir: str, pid: int) -> str:
+    return os.path.join(runs_dir, f"part-{pid:05d}.arrow")
+
+
+def _write_runs(path: str, interior) -> None:
+    """Write the interior runs ``interior`` to the runs file ``path``:
+    one Arrow IPC record batch sorted on ``(_dir, node_id,
+    range_start)``, under a temporary name renamed into place when
+    complete."""
+    import uuid
+
+    import pyarrow as pa
+
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    with pa.ipc.new_file(tmp, runs_schema()) as w:
+        w.write_table(_sorted_runs([interior]))
+    os.replace(tmp, path)
+
+
 def _table_pass(source, schema, path: str, keys: list[str], row_col: str,
-                job: str) -> DataFrame:
+                job: str, runs_dir: str) -> DataFrame:
     """The bundle's one pass over its input ``source`` (a frame, or an
     :class:`~parquet_converters_spark.sources.ordering.OrderedScan` whose
     slices each task reads itself): each task projects its batches onto
     the table's Arrow ``schema`` (skipped columns dropped,
     ``edge_type_id`` 0 when absent), writes them to ``path`` as one part
-    file of exact ``_ROW_GROUP_ROWS`` row groups (the rest in the last),
-    run-length encodes ``keys`` with :func:`_rle_batches` and yields the
-    runs plus, per key (or once without keys), a summary row (``_edge``
-    4): ``range_start`` and ``range_end`` the partition's first and
-    last+1 ``row_col``, ``_n`` its row count and ``node_id`` the key's
-    max.  A partition that is not strictly increasing on ``row_col``
-    raises."""
+    file of exact ``_ROW_GROUP_ROWS`` row groups (the rest in the last)
+    and run-length encodes ``keys`` with
+    :func:`~parquet_converters_spark.operators.indexing._partition_runs`.
+    It writes the interior runs, sorted on ``(_dir, node_id,
+    range_start)``, to its runs file in ``runs_dir`` (one Arrow IPC
+    record batch, renamed into place when complete) and yields only the
+    edge rows: the boundary runs and, per key (or once without keys), a
+    summary row with the partition's row span, row count, key maximum
+    and run histogram.  A partition that is not strictly increasing on
+    ``row_col`` raises."""
     import numpy as np
     import pyarrow as pa
 
@@ -248,7 +287,6 @@ def _table_pass(source, schema, path: str, keys: list[str], row_col: str,
         )
 
     def write(batches):
-        import pyarrow.compute as pc
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
@@ -287,39 +325,24 @@ def _table_pass(source, schema, path: str, keys: list[str], row_col: str,
         pos = t.column(0)
         if pos.null_count or not np.all(np.diff(pos.to_numpy()) > 0):
             raise ValueError(f"{_ORDER_ERROR} {row_col}")
-        yield from _rle_batches(t, len(keys))
-        first, last = pos[0].as_py(), pos[-1].as_py()
-        yield pa.RecordBatch.from_pylist(
-            [
-                {"_dir": d, "node_id": m, "range_start": first,
-                 "range_end": last + 1, "_edge": _SUMMARY_EDGE,
-                 "_n": t.num_rows}
-                for d, m in (
-                    [(d, pc.max(t.column(d + 1)).as_py())
-                     for d in range(len(keys))]
-                    or [(-1, None)]
-                )
-            ],
-            schema=pa.schema([
-                ("_dir", pa.int32()), ("node_id", pa.int64()),
-                ("range_start", pa.int64()), ("range_end", pa.int64()),
-                ("_edge", pa.int32()), ("_n", pa.int64()),
-            ]),
-        )
+        interior, edges = _partition_runs(t, len(keys), pid)
+        if keys:
+            _write_runs(_runs_file(runs_dir, pid), interior)
+        yield edges
 
-    return source.mapInArrow(write, _local_runs_schema(LongType()))
+    return source.mapInArrow(write, _edge_schema(LongType()))
 
 
 def _run_table_pass(runs: DataFrame, n_keys: int, row_col: str):
-    """Run the table pass: its collect of the boundary runs and the
-    partition summaries is its only job.  Checks the writer's input
-    contract (a task raises on an unsorted partition; here, no two
-    partitions' ``row_col`` ranges may overlap) and returns ``(boundary
-    runs, row count per partition, max + 1 per key)``."""
+    """Run the table pass: its collect of the edge rows is its only job.
+    Checks the writer's input contract (a task raises on an unsorted
+    partition; here, no two partitions' ``row_col`` ranges may overlap)
+    and returns ``(edge rows, row count per partition, max + 1 per
+    key)``."""
     from pyspark.errors import PythonException
 
     try:
-        rows = runs.filter(F.col("_edge") > 0).collect()
+        rows = runs.collect()
     except PythonException as e:
         if _ORDER_ERROR not in str(e):
             raise
@@ -335,11 +358,7 @@ def _run_table_pass(runs: DataFrame, n_keys: int, row_col: str):
         max((r["node_id"] for r in summary if r["_dir"] == d), default=-1) + 1
         for d in range(n_keys)
     ]
-    return (
-        [r for r in rows if r["_edge"] != _SUMMARY_EDGE],
-        [r["_n"] for r in parts],
-        tops,
-    )
+    return rows, [r["_n"] for r in parts], tops
 
 
 def _order_error(row_col: str) -> ValueError:
@@ -362,12 +381,15 @@ def _index_rows_per_file(sizes: list[int], parallelism: int) -> int:
     return max(sizes)
 
 
-def _write_index_tables(numbered, plans, pop_dir: str, job: str,
-                        node_counts: list[int]) -> None:
-    """All four index tables in one job: each task builds its numbered
-    partition's tables with :func:`_index_batches` and writes one part
-    file per table it holds rows of.  A direction without edges gets its
-    dense ``(0, 0)`` node table and an empty range table from the
+def _write_index_tables(spark, plan, files: list[str], pop_dir: str,
+                        job: str) -> None:
+    """All four index tables in one job, ``spark.range(k).mapInArrow``
+    with task *s* for slice *s* of ``plan``: it reads the slice's ranges
+    from the runs ``files`` and its boundary runs
+    (:func:`~parquet_converters_spark.operators.indexing._slice_runs`),
+    builds its tables with :func:`_index_batches` and writes one part
+    file per table it holds rows of.  A table no slice wrote (a direction
+    without edges has no range table) gets one empty file from the
     driver."""
     import pyarrow as pa
 
@@ -380,40 +402,36 @@ def _write_index_tables(numbered, plans, pop_dir: str, job: str,
         for table in INDEX_COLUMNS:
             os.makedirs(path(d, table))
 
-    def write(batches):
-        from pyspark import TaskContext
-
-        batches = [b for b in batches if b.num_rows]
-        if not batches:
-            return
-        t = pa.Table.from_batches(batches).combine_chunks()
-        name = _part_name(job, TaskContext.get().partitionId())
-        parts = {}
-        for d, table, batch in _index_batches(t, plans):
-            if (d, table) not in parts:
-                parts[(d, table)] = _PartWriter(
-                    path(d, table), name, index_schema(table)
+    def write(ids):
+        for b in ids:
+            for s in b.column(0).to_pylist():
+                parts = {}
+                for d, table, batch in _index_batches(
+                    _slice_runs(files, plan, s), plan.parts[s],
+                    plan.node_counts,
+                ):
+                    if (d, table) not in parts:
+                        parts[(d, table)] = _PartWriter(
+                            path(d, table), _part_name(job, s),
+                            index_schema(table),
+                        )
+                    parts[(d, table)].write(pa.Table.from_batches([batch]))
+                yield pa.RecordBatch.from_pydict(
+                    {"file": [p.close() for p in parts.values()]},
+                    schema=pa.schema([("file", pa.string())]),
                 )
-            parts[(d, table)].write(pa.Table.from_batches([batch]))
-        yield pa.RecordBatch.from_pydict(
-            {"file": [p.close() for p in parts.values()]}
-        )
 
-    numbered.mapInArrow(
+    k = len(plan.parts)
+    spark.range(k, numPartitions=k).mapInArrow(
         write, StructType([StructField("file", StringType())])
     ).collect()
-    for d in sorted(set(range(len(dirs))) - {d for d, _ in plans}):
-        for table, batches in (
-            ("node_id_to_ranges", empty_node_batches(node_counts[d])),
-            ("range_to_edge_id", ()),
-        ):
-            w = _PartWriter(path(d, table), _part_name(job, 0),
-                            index_schema(table))
-            for batch in batches:
-                w.write(pa.Table.from_batches([batch]))
-            if w.writer is None:
+    for d in range(len(dirs)):
+        for table in INDEX_COLUMNS:
+            if not os.listdir(path(d, table)):
+                w = _PartWriter(path(d, table), _part_name(job, 0),
+                                index_schema(table))
                 w.write(index_schema(table).empty_table())
-            w.close()
+                w.close()
 
 
 def collect_kv_metadata(path: str) -> dict[str, str]:
@@ -486,15 +504,20 @@ class SonataBundleWriter:
         the same bytes.
 
         One table pass projects the rows (``synapse_id`` dropped,
-        ``edge_type_id`` 0 when absent), writes the table and run-length
-        encodes both index keys; its collect of the boundary runs and
-        partition summaries is its only job.  Then the numbering (no
-        job of its own when the ranges fit one partition, else a sampled
-        exchange and a summary collect), and one job writes all four
-        index tables.
+        ``edge_type_id`` 0 when absent), writes the table, run-length
+        encodes both index keys and writes each task's interior runs to
+        a runs file under the staging directory; its collect of the
+        boundary runs, partition summaries and run histograms is its
+        only job.  From them the driver plans the node-id slices and
+        their range offsets
+        (:func:`~parquet_converters_spark.operators.indexing.build_sonata_indices`),
+        and one job, a task per slice, writes all four index tables.
+        So the call runs 2 jobs at every size, the runs never pass
+        through the JVM, nothing is persisted, and the bundle's bytes
+        depend only on the input and the slice count.
         Everything goes to a sibling staging directory that is renamed
-        over the population directory after ``attributes.json``; a
-        failure removes it."""
+        over the population directory after ``attributes.json``, once
+        the runs files are deleted; a failure removes it."""
         import shutil
         import uuid
 
@@ -536,32 +559,33 @@ class SonataBundleWriter:
         staging = os.path.join(
             edges_dir, f".{self.population}.staging-{job}"
         )
+        runs_dir = os.path.join(staging, "_runs")
         os.makedirs(os.path.join(staging, "table.parquet"))
+        os.makedirs(runs_dir)
         try:
-            runs = _table_pass(
-                df, _arrow_schema(spark, table),
-                os.path.join(staging, "table.parquet"), keys, row_col, job,
+            rows, sizes, tops = _run_table_pass(
+                _table_pass(
+                    df, _arrow_schema(spark, table),
+                    os.path.join(staging, "table.parquet"), keys, row_col,
+                    job, runs_dir,
+                ),
+                len(keys), row_col,
             )
             if with_index:
-                runs = runs.persist()
-            try:
-                boundary, sizes, tops = _run_table_pass(
-                    runs, len(keys), row_col
+                bound = _index_rows_per_file(sizes, par)
+                plan = build_sonata_indices(
+                    rows,
+                    dict(zip(SONATA_KEYS, [source_size or tops[0],
+                                           target_size or tops[1]])),
+                    lambda n: _range_partitions(n, par, bound),
                 )
-                if with_index:
-                    node_counts = [source_size or tops[0],
-                                   target_size or tops[1]]
-                    ranges, n_ranges = _runs_to_ranges(runs, boundary)
-                    bound = _index_rows_per_file(sizes, par)
-                    with build_sonata_indices(
-                        ranges, n_ranges, dict(zip(SONATA_KEYS, node_counts)),
-                        lambda n: _range_partitions(n, par, bound),
-                    ) as (numbered, plans):
-                        _write_index_tables(
-                            numbered, plans, staging, job, node_counts
-                        )
-            finally:
-                runs.unpersist()
+                files = [
+                    _runs_file(runs_dir, pid)
+                    for pid in sorted({r["_pid"] for r in rows
+                                       if r["_edge"] == _SUMMARY_EDGE})
+                ]
+                _write_index_tables(spark, plan, files, staging, job)
+            shutil.rmtree(runs_dir)
 
             for name, values in enums.items():
                 lib = os.path.join(staging, "library", f"{name}.parquet")

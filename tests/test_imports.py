@@ -10,10 +10,12 @@ import subprocess
 import sys
 
 
-def test_dedup_import_loads_no_pandas_or_codecs():
+def _fresh_import(module: str) -> list[str]:
+    """The pandas and codec modules a fresh interpreter loads when it
+    imports ``module``."""
     code = (
         "import sys\n"
-        "import parquet_converters_spark.functions.dedup\n"
+        f"import {module}\n"
         "print(sorted(m for m in sys.modules\n"
         "             if m.split('.')[0] == 'pandas' or m.endswith('_codec')))\n"
     )
@@ -21,7 +23,18 @@ def test_dedup_import_loads_no_pandas_or_codecs():
     out = subprocess.run(
         [sys.executable, "-c", code], cwd=root, capture_output=True, text=True, check=True
     )
-    assert out.stdout.strip() == "[]"
+    return ast.literal_eval(out.stdout.strip())
+
+
+def test_dedup_import_loads_no_pandas_or_codecs():
+    assert _fresh_import("parquet_converters_spark.functions.dedup") == []
+
+
+def test_registry_import_loads_no_pandas_or_codecs():
+    """The query registry imports the modules of its unregistered query
+    functions inside those functions, so importing it (as every driver
+    process that looks up a query does) loads no pandas."""
+    assert _fresh_import("parquet_converters_spark.queries") == []
 
 
 PKG = "parquet_converters_spark"

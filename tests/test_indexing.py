@@ -2,6 +2,8 @@
 index builder, ported from the reference's tests/test_indexing.cpp
 (10x10 dense bipartite graph, source ids offset by 90)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -205,54 +207,61 @@ def test_global_row_index_ordered_mode_is_hierarchical(spark):
     assert got == [(k, i) for i, k in enumerate(sorted(k for k, _ in rows))]
 
 
-def test_one_partition_numbering_matches_exchange(spark, tmp_path):
-    """The numbering of one partition (plan from the per-direction range
-    counts, no summaries, nothing persisted, no job before the table
-    write) writes the same index tables as the sampled range exchange
-    into 3 partitions: a direction without edges, and node ids absent
-    below the first and above the last node with edges."""
+def test_one_slice_and_three_slices_write_equal_index_tables(spark, tmp_path):
+    """The numbering in one slice and in three writes the same index
+    tables: a direction without edges, node ids absent below the first
+    and above the last node with edges, and a node whose runs straddle
+    the table-pass partitions (one run cut three ways, and its later
+    runs in other partitions)."""
     import numpy as np
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     from parquet_converters_spark.operators.indexing import (
         INDEX_COLUMNS,
         SONATA_KEYS,
+        _partition_runs,
         build_sonata_indices,
     )
-    from parquet_converters_spark.sinks.sonata import _write_index_tables
+    from parquet_converters_spark.sinks.sonata import (
+        _write_index_tables,
+        _write_runs,
+    )
 
     rng = np.random.default_rng(17)
-    # source runs over nodes 2..40 in row order; no target runs at all
+    # source ids over nodes 2..40 in row order, node 20 also one long run
+    # across the first two partition cuts; no target edges at all
     nodes = np.repeat(rng.integers(2, 41, 3_000), rng.integers(1, 4, 3_000))
+    nodes[900:2_300] = 20
+    cuts = [0, 1_000, 2_000, 4_500, len(nodes)]
+    rows, files = [], []
+    for pid, (a, b) in enumerate(zip(cuts, cuts[1:])):
+        t = pa.table({"row_index": np.arange(a, b),
+                      "source_node_id": nodes[a:b]})
+        interior, edges = _partition_runs(t, 1, pid)
+        files.append(str(tmp_path / f"runs-{pid}.arrow"))
+        _write_runs(files[-1], interior)
+        rows += edges.to_pylist()
     brk = np.flatnonzero(nodes[1:] != nodes[:-1]) + 1
-    starts = np.concatenate(([0], brk))
-    ends = np.concatenate((brk, [len(nodes)]))
-    rows = [
-        (0, int(nodes[s]), int(s), int(e)) for s, e in zip(starts, ends)
-    ]
-    ranges = spark.createDataFrame(
-        rows, "_dir int, node_id long, range_start long, range_end long"
-    ).repartition(4)
+    n_ranges = len(brk) + 1
+
     node_counts = {"source_to_target": 45, "target_to_source": 7}
     sc = spark.sparkContext
     tables = {}
     for k in (1, 3):
+        plan = build_sonata_indices(rows, node_counts, lambda n: k)
+        assert len(plan.parts) == k
+        # node 20 lies in one slice only
+        assert sum(lo <= 20 < hi for part in plan.parts
+                   for d, lo, hi, _ in part if d == 0) == 1
+        pop = str(tmp_path / f"k{k}")
         group = f"numbering-{k}"
         sc.setJobGroup(group, "numbering")
         try:
-            with build_sonata_indices(
-                ranges, {0: len(rows)}, node_counts, lambda n: k
-            ) as (numbered, plans):
-                n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-                assert {p for _, p in plans} == set(range(k))
-                pop = str(tmp_path / f"k{k}")
-                _write_index_tables(
-                    numbered, plans, pop, "job", list(node_counts.values())
-                )
+            _write_index_tables(spark, plan, files, pop, "job")
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
-        if k == 1:
-            assert n_jobs == 0
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
         tables[k] = {
             (d, name): pq.read_table(
                 f"{pop}/indices/{d}/{name}.parquet"
@@ -260,6 +269,10 @@ def test_one_partition_numbering_matches_exchange(spark, tmp_path):
             for d in SONATA_KEYS
             for name, cols in INDEX_COLUMNS.items()
         }
+        files_per_table = len(os.listdir(
+            f"{pop}/indices/source_to_target/range_to_edge_id.parquet"
+        ))
+        assert files_per_table == k
     assert tables[1] == tables[3]
 
     nr = tables[1][("source_to_target", "node_id_to_ranges")]
@@ -267,7 +280,16 @@ def test_one_partition_numbering_matches_exchange(spark, tmp_path):
     for r in nr[:2] + nr[41:]:
         assert (r["range_lo"], r["range_hi"]) == (0, 0)
     re_ = tables[1][("source_to_target", "range_to_edge_id")]
-    assert len(re_) == len(rows)
+    assert len(re_) == n_ranges
+    assert sorted((r["edge_start"], r["edge_end"]) for r in re_) == list(
+        zip(np.concatenate(([0], brk)).tolist(),
+            np.concatenate((brk, [len(nodes)])).tolist())
+    )
+    lo, hi = nr[20]["range_lo"], nr[20]["range_hi"]
+    runs20 = [(r["edge_start"], r["edge_end"]) for r in re_[lo:hi]]
+    assert runs20 == sorted(runs20)
+    assert any(a <= 900 and 2_300 <= b for a, b in runs20)
+    assert all(nodes[a] == 20 for a, _ in runs20)
     assert tables[1][("target_to_source", "node_id_to_ranges")] == [
         {"node_id": i, "range_lo": 0, "range_hi": 0} for i in range(7)
     ]

@@ -903,9 +903,8 @@ def test_fused_table_pass_matches_frame_path(spark, tmp_path, rows_per_file):
     """The bundle written from the ordered scan's plan (each table-pass
     task reads its own slice, as parquet_to_sonata does) is byte for byte
     the bundle written from read_parquet_ordered's frame, with one slice
-    and with several.  With several, the index numbering samples its
-    partition bounds, so its files may cut elsewhere on each run: there
-    the index tables are compared row for row."""
+    and with several, index files included: the numbering's slices
+    depend only on the data and the slice count."""
     import glob as _glob
 
     from parquet_converters_spark.pipelines import parquet_to_sonata
@@ -938,20 +937,6 @@ def test_fused_table_pass_matches_frame_path(spark, tmp_path, rows_per_file):
             assert len(_glob.glob(os.path.join(
                 out, "edges", "p", "indices", "*", "*.parquet", "*.parquet"
             ))) > 4
-        for d in ("source_to_target", "target_to_source"):
-            for name in ("node_id_to_ranges", "range_to_edge_id"):
-                rel = os.path.join("edges", "p", "indices", d, f"{name}.parquet")
-                a, b = (
-                    pq.read_table(os.path.join(out, rel)).sort_by(
-                        "node_id" if name == "node_id_to_ranges" else "range_id"
-                    )
-                    for out in (fused, frame)
-                )
-                assert a.equals(b), rel
-        got, want = (
-            {k: v for k, v in t.items() if "/indices/" not in k}
-            for t in (got, want)
-        )
     assert got == want
     n_table = sum(1 for rel in got if rel.startswith("edges/p/table.parquet/"))
     assert n_table == (1 if rows_per_file is None else 6)
@@ -1008,3 +993,175 @@ def test_bundle_row_groups_independent_of_batch_size(spark, tmp_path, monkeypatc
         assert sizes == [3_000] * 8 + [1_000], (name, sizes)
         outs.append(_bundle_bytes(out))
     assert outs[0] == outs[1]
+
+
+def _leftovers(root):
+    """Runs files and staging directories left anywhere under ``root``."""
+    return [
+        os.path.join(d, n)
+        for d, dirs, _ in os.walk(root)
+        for n in dirs
+        if n == "_runs" or ".staging-" in n
+    ]
+
+
+def test_several_slices_write_reproducible_bundles(spark, tmp_path):
+    """Two conversions of one input into several index slices (small
+    rows_per_file) write the same bytes, index files included, and leave
+    no persisted storage, runs file or staging directory behind."""
+    from parquet_converters_spark.sinks.sonata import (
+        SonataBundleWriter,
+        collect_kv_metadata,
+    )
+    from parquet_converters_spark.sources.ordering import plan_parquet_ordered
+
+    in_dir = _parity_input(tmp_path)
+    kv = collect_kv_metadata(in_dir)
+    jsc = spark.sparkContext._jsc
+    pinned = set(jsc.getPersistentRDDs().keySet().toArray())
+    outs = []
+    for run in range(2):
+        out = str(tmp_path / f"b{run}")
+        SonataBundleWriter(out, "p").write(
+            plan_parquet_ordered(spark, in_dir, rows_per_file=300),
+            kv_metadata=kv,
+        )
+        assert set(jsc.getPersistentRDDs().keySet().toArray()) == pinned
+        assert _leftovers(out) == []
+        outs.append(_bundle_bytes(out))
+    assert outs[0] == outs[1]
+    t2s = [
+        rel for rel in outs[0]
+        if rel.startswith("edges/p/indices/target_to_source/range_to_edge_id")
+    ]
+    assert len(t2s) > 2, t2s
+
+
+def test_parquet_to_sonata_several_slices_job_budget(spark, tmp_path):
+    """At a size whose ranges need several index slices, parquet_to_sonata
+    with the .h5 still runs 3 Spark jobs (table pass, index tables, .h5
+    fill) with no exchange, pins nothing and leaves no runs file; the
+    index tables and the .h5 equal the window oracle's and the single
+    writer's."""
+    from parquet_converters_spark.pipelines import parquet_to_sonata
+    from tests.hdf5_oracle import export_hdf5
+    from tests.index_oracle import window_adjacency_index
+
+    rng = np.random.default_rng(41)
+    n = 140_000  # > 2 * 64Ki target ranges: at least two slices
+    src = np.sort(rng.integers(0, 3_000, n))
+    tgt = rng.integers(0, 50_000, n)
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    for i, (a, b) in enumerate([(0, 60_000), (60_000, n)]):
+        pq.write_table(
+            pa.table({"source_node_id": pa.array(src[a:b]),
+                      "target_node_id": pa.array(tgt[a:b])}),
+            in_dir / f"e.{i}.parquet",
+        )
+    out, h5 = str(tmp_path / "b"), str(tmp_path / "e.h5")
+    jsc = spark.sparkContext._jsc
+    pinned = set(jsc.getPersistentRDDs().keySet().toArray())
+    n_jobs = _job_count(
+        spark,
+        lambda: parquet_to_sonata(
+            spark, str(in_dir), out, population="p", h5_path=h5
+        ),
+    )
+    assert n_jobs <= 3, n_jobs
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) == pinned
+    assert _leftovers(out) == []
+    indices = os.path.join(out, "edges", "p", "indices")
+    assert len(os.listdir(os.path.join(
+        indices, "target_to_source", "range_to_edge_id.parquet"
+    ))) >= min(2, spark.sparkContext.defaultParallelism)
+
+    table = spark.read.parquet(os.path.join(out, "edges", "p", "table.parquet"))
+    for d, key in (("source_to_target", "source_node_id"),
+                   ("target_to_source", "target_node_id")):
+        want = window_adjacency_index(table, key)
+        for name, frame in zip(("node_id_to_ranges", "range_to_edge_id"), want):
+            got = pq.read_table(os.path.join(indices, d, f"{name}.parquet"))
+            assert sorted(map(tuple, frame.collect())) == sorted(
+                zip(*got.to_pydict().values())
+            ), (d, name)
+    single = str(tmp_path / "s.h5")
+    export_hdf5(out, "p", single)
+    with open(single, "rb") as a, open(h5, "rb") as b:
+        assert a.read() == b.read()
+
+
+def test_failed_index_job_leaves_no_runs(spark, tmp_path, monkeypatch):
+    """An index-table job that fails leaves the population directory
+    absent, no staging directory and so no runs file behind."""
+    from parquet_converters_spark.sinks import sonata
+    from parquet_converters_spark.sources.ordering import plan_parquet_ordered
+
+    real = sonata.build_sonata_indices
+
+    def broken(*args, **kwargs):
+        # a node count no task can compare with a node id
+        plan = real(*args, **kwargs)
+        return plan._replace(node_counts=["x"] * len(plan.node_counts))
+
+    monkeypatch.setattr(sonata, "build_sonata_indices", broken)
+    in_dir = _parity_input(tmp_path)
+    out = str(tmp_path / "b")
+    with pytest.raises(Exception, match="TypeError"):
+        sonata.SonataBundleWriter(out, "p").write(
+            plan_parquet_ordered(spark, in_dir, rows_per_file=500)
+        )
+    assert os.listdir(os.path.join(out, "edges")) == []
+    assert _leftovers(out) == []
+
+
+def test_distinct_bits_matches_count_distinct():
+    """The dictionary rule's distinct count of a numeric column, over the
+    values' bit patterns, is Arrow's ``count_distinct``: nulls skipped,
+    ``0.0`` and ``-0.0`` two values, NaNs with different payloads two
+    values, for chunked arrays of every integer and float width."""
+    import pyarrow.compute as pc
+    from hypothesis import given, settings, strategies as st
+
+    from parquet_converters_spark.sinks.sonata import _distinct_bits
+
+    types = [pa.int8(), pa.int16(), pa.int32(), pa.int64(), pa.uint8(),
+             pa.uint16(), pa.uint32(), pa.uint64(), pa.float32(),
+             pa.float64()]
+
+    def specials(width):
+        """+0, -0, infinities and NaNs with three payloads, as bits."""
+        exp = {4: 8, 8: 11}[width]
+        mant = width * 8 - 1 - exp
+        inf = ((1 << exp) - 1) << mant
+        sign = 1 << (width * 8 - 1)
+        return [0, sign, inf, inf | sign, inf | 1, inf | (1 << (mant - 1)),
+                inf | (1 << (mant - 1)) | sign]
+
+    @settings(max_examples=200, deadline=None)
+    @given(
+        t=st.sampled_from(types),
+        picks=st.lists(st.integers(0, 15), min_size=1, max_size=40),
+        nulls=st.lists(st.booleans(), min_size=40, max_size=40),
+        cuts=st.lists(st.integers(0, 40), max_size=3),
+        seed=st.integers(0, 2**32 - 1),
+    )
+    def check(t, picks, nulls, cuts, seed):
+        width = t.bit_width // 8
+        pool = np.random.default_rng(seed).integers(
+            0, 1 << min(width * 8, 63), 16, dtype="uint64"
+        ).tolist()
+        if pa.types.is_floating(t):
+            pool[:7] = specials(width)
+        bits = np.array([pool[i] for i in picks], dtype=f"u{width}")
+        values = bits.view(t.to_pandas_dtype())
+        arr = pa.array(values, type=t, mask=np.array(nulls[: len(values)]))
+        bounds = sorted({0, len(arr), *(min(c, len(arr)) for c in cuts)})
+        col = pa.chunked_array(
+            [arr.slice(a, b - a) for a, b in zip(bounds, bounds[1:])], t
+        )
+        if col.null_count == len(col):
+            return
+        assert _distinct_bits(col) == pc.count_distinct(col).as_py()
+
+    check()
